@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{MapType, StringType}
 import graft.catalog.Catalog
 import graft.exporters.Exporters
 import graft.infer.TypeInference
-import graft.model.{Sensor, SensorType}
+import graft.model.{IngestBatch, SensorType}
 import graft.operators.{LabelMatcher, Matchers, SensorOps}
 import graft.prometheus.{PrometheusRemote, RemoteRead}
 import graft.promql.SimplePromQL
@@ -729,58 +729,42 @@ final class Gateway(
     val ds = spark.createDataset(text.linesIterator.toSeq.filter(_.nonEmpty))
     val raw = spark.read.option("header", "true").option("inferSchema", "false")
       .csv(ds)
-    val batch = CsvImporter.importFrames(spark, raw)
-    store.publishSensors(batch.sensors)
-    batch.samples.foreach { case (t, samples) =>
-      store.publishSamples(t, samples.select("sensor_id", "timestamp_us", "value"))
-    }
+    store.publish(CsvImporter.importFrames(spark, raw))
   }
 
   private def publishSenml(bytes: Array[Byte]): Unit = {
     import spark.implicits._
     val docs = spark.createDataset(
       Seq(new String(bytes, StandardCharsets.UTF_8)))
-    SenML.importJson(docs).foreach { case (t, df) =>
-      val named = df.cache()
-      if (named.limit(1).count() > 0) {
-        // min_by over document order, not first(): first() is
-        // partition-merge-order nondeterministic; the reference keeps
-        // the unit of the series' first record
-        val sensors = named
-          .groupBy(col("sensor_id").as("name"))
-          .agg(min_by(col("unit"), when(col("unit").isNotNull,
-            struct(col("doc_id"), col("pos")))).as("unit_name"))
-          .select(
-            call_function("sensor_uuid", col("name"), lit(t.displayName), col("unit_name"),
-              lit(null).cast(MapType(StringType, StringType))).as("uuid"),
-            col("name"), lit(t.displayName).as("type"),
-            when(col("unit_name").isNotNull,
-              struct(col("unit_name").as("name"),
-                lit(null).cast(StringType).as("description"))).as("unit"),
-            lit(null).cast(MapType(StringType, StringType)).as("labels"))
-        store.publishSensors(sensors)
-        store.publishSamples(t, named
-          .join(broadcast(sensors.select(col("name").as("sensor_id"), col("uuid"))),
-            Seq("sensor_id"))
-          .select(col("uuid").as("sensor_id"), col("timestamp_us"), col("value")))
-      }
-      named.unpersist()
-    }
+    val rows = SenML.typed(docs).withColumnRenamed("unit", "unit_name")
+    // a series keeps the unit of its first record in document order
+    val series = rows.groupBy(col("name"), col("type"))
+      .agg(IngestBatch.firstUnit(struct(col("doc_id"), col("pos")))
+        .as("unit_name"))
+      .withColumn("labels", lit(null))
+    store.publish(IngestBatch.fromSeries(series)(uuids =>
+      SenML.importJson(docs).map { case (t, df) =>
+        t -> IngestBatch.withIds(df, uuids) }))
   }
 
   private def publishArrow(bytes: Array[Byte]): Unit = {
+    import spark.implicits._
     val fields = graft.sources.ArrowIO.ipcFieldNames(bytes)
     if (Set("type", "labels").subsetOf(fields)) {
       // long-format IPC (the reference's multi-series schema); values all
       // strings, the type column names the sensor type
       val rows = graft.sources.ArrowIO.decodeLongFormat(bytes)
-      import spark.implicits._
-      val df = rows.map(r =>
-          (r.timestampUs, r.sensorName, r.value, r.valueType, r.labelsJson))
-        .toDF("timestamp_us", "sensor_name", "value", "type", "labels_json")
+      val typeOf = rows.map(_.valueType).distinct.map(tn =>
+        tn -> SensorType.fromString(tn).getOrElse(
+          throw new IllegalArgumentException(s"bad type: $tn"))).toMap
+      val df = rows.map(r => (r.timestampUs, r.sensorName, r.value,
+          typeOf(r.valueType).displayName, r.labelsJson))
+        .toDF("timestamp_us", "name", "value", "type", "labels_json")
         .withColumn("labels", from_json(col("labels_json"),
           MapType(StringType, StringType)))
-      publishLong(df)
+        .withColumn("unit_name", lit(null))
+      store.publish(IngestBatch.fromRows(df, typeOf.values.toSeq.distinct)(
+        _ => col("value")))
     } else {
       // typed single-series IPC: the value field's Arrow type names the
       // sensor type, sensor_id is the uuid, name falls back to it. A
@@ -792,43 +776,13 @@ final class Gateway(
       val uuid = ser0.sensorId.getOrElse(
         java.util.UUID.randomUUID().toString)
       val ser = ser0.copy(sensorId = Some(uuid))
-      val name = ser.sensorName.getOrElse(uuid)
-      import spark.implicits._
-      val sensors = Seq((uuid, name, ser.sensorType.displayName))
-        .toDF("uuid", "name", "type")
-        .withColumn("unit",
-          lit(null).cast(graft.model.Schemas.sensors("unit").dataType))
-        .withColumn("labels", lit(null).cast(MapType(StringType, StringType)))
-      store.publishSensors(sensors)
-      store.publishSamples(ser.sensorType,
-        graft.sources.ArrowIO.typedSeriesToFrame(spark, ser))
+      val sensors = Seq((uuid, ser.sensorName.getOrElse(uuid),
+          ser.sensorType.displayName, null: String, null: Map[String, String]))
+        .toDF("uuid", "name", "type", "unit_name", "labels")
+      store.publish(IngestBatch(IngestBatch.catalog(sensors),
+        Map(ser.sensorType ->
+          graft.sources.ArrowIO.typedSeriesToFrame(spark, ser))))
     }
-  }
-
-  /** Publish the normalized long layout (sensor_name, labels, timestamp_us,
-    * type, value-as-string): derive uuids distributed, split per type.
-    */
-  private def publishLong(df: DataFrame): Unit = {
-    val withUuid = df
-      .withColumn("uuid", call_function("sensor_uuid", col("sensor_name"), col("type"),
-        lit(null).cast(StringType), col("labels")))
-      .cache()
-    val present = withUuid.select("type").distinct().collect()
-      .map(_.getString(0)).toSeq
-    val sensors = withUuid
-      .select(col("uuid"), col("sensor_name").as("name"), col("type"),
-        lit(null).cast(graft.model.Schemas.sensors("unit").dataType).as("unit"),
-        col("labels"))
-      .dropDuplicates("uuid")
-    store.publishSensors(sensors)
-    present.foreach { tn =>
-      val t = SensorType.fromString(tn).getOrElse(
-        throw new IllegalArgumentException(s"bad type: $tn"))
-      store.publishSamples(t, withUuid.filter(col("type") === tn)
-        .select(col("uuid").as("sensor_id"), col("timestamp_us"),
-          col("value").cast(t.sparkType).as("value")))
-    }
-    withUuid.unpersist()
   }
 
   // -------------------------------------------------------------- influx
@@ -844,45 +798,13 @@ final class Gateway(
     // ?numeric=true lands i64/f64 fields as exact Numeric samples
     val withNumeric = p.get("numeric").exists(v =>
       v.isEmpty || v.equalsIgnoreCase("true"))
-    val parsed = InfluxLineProtocol.parse(
+    val rows = InfluxLineProtocol.parse(
       spark.createDataset(text.linesIterator.toSeq), bucket, org, precision,
       withNumeric)
-      .cache()
-    // typed long layout → one publish per present type
-    val present = parsed.select("type").distinct().collect()
-      .map(_.getString(0)).toSeq
-    val sensors = parsed
-      .select(col("sensor_name"), col("type"), col("labels"))
-      .select(
-        call_function("sensor_uuid", col("sensor_name"), col("type"),
-          lit(null).cast(StringType), col("labels")).as("uuid"),
-        col("sensor_name").as("name"), col("type"),
-        lit(null).cast(graft.model.Schemas.sensors("unit").dataType).as("unit"),
-        col("labels"))
-      // dedup on the DERIVED uuid, which hashes the labels too: the same
-      // measurement+field under different tag sets is DIFFERENT series,
-      // and a (name, type) dedup would register only one of them,
-      // orphaning the others' samples from every catalog/matcher path
-      // (MapType can't join/dedup directly, the uuid can)
-      .dropDuplicates("uuid")
-    store.publishSensors(sensors)
-    present.foreach { tn =>
-      val t = SensorType.fromString(tn).get
-      val valueCol = t match {
-        case SensorType.Integer => col("long_value")
-        case SensorType.Float => col("double_value")
-        case SensorType.Str => col("string_value")
-        case SensorType.Boolean => col("bool_value")
-        case SensorType.Numeric => col("numeric_value")
-        case _ => col("double_value")
-      }
-      store.publishSamples(t, parsed.filter(col("type") === tn)
-        .withColumn("uuid", call_function("sensor_uuid", col("sensor_name"), col("type"),
-          lit(null).cast(StringType), col("labels")))
-        .select(col("uuid").as("sensor_id"), col("timestamp_us"),
-          valueCol.as("value")))
-    }
-    parsed.unpersist()
+      .withColumnRenamed("sensor_name", "name")
+      .withColumn("unit_name", lit(null))
+    store.publish(IngestBatch.fromRows(rows, InfluxLineProtocol.Types,
+      cache = true)(InfluxLineProtocol.value))
     respondBytes(x, 204, "text/plain", Array.emptyByteArray)
   }
 
@@ -898,9 +820,9 @@ final class Gateway(
       import spark.implicits._
       // shared with the streaming ingest path — one definition of
       // remote-write sensor identity (PrometheusRemote.writeRequestRows)
-      val rows = PrometheusRemote.writeRequestRows(wr)
-      val df = rows.toDF("sensor_name", "labels", "unit_name", "timestamp_us", "value")
-      graft.streaming.StreamingIngest.publishRemoteWriteRows(store, df)
+      store.publish(graft.streaming.StreamingIngest.remoteWriteBatch(
+        PrometheusRemote.writeRequestRows(wr).toDF(
+          graft.streaming.StreamingIngest.RemoteWriteColumns: _*)))
       respondBytes(x, 204, "text/plain", Array.emptyByteArray)
     }
   }

@@ -196,9 +196,9 @@ object XorChunk {
       } else {
         var dod = 0L
         if (!r.readBit()) dod = 0
-        else if (!r.readBit()) dod = signExtend(r.readBits(14), 14)
-        else if (!r.readBit()) dod = signExtend(r.readBits(17), 17)
-        else if (!r.readBit()) dod = signExtend(r.readBits(20), 20)
+        else if (!r.readBit()) dod = bucketValue(r.readBits(14), 14)
+        else if (!r.readBit()) dod = bucketValue(r.readBits(17), 17)
+        else if (!r.readBit()) dod = bucketValue(r.readBits(20), 20)
         else dod = r.readBits(64)
         tDelta += dod
         t += tDelta
@@ -211,10 +211,14 @@ object XorChunk {
     out.toSeq
   }
 
-  private def signExtend(v: Long, nbits: Int): Long = {
-    val shift = 64 - nbits
-    (v << shift) >> shift
-  }
+  /** The delta-of-delta an `nbits` bucket holds. The buckets are
+    * asymmetric — [[bitRange]] admits -(2^(n-1) - 1) .. +2^(n-1) — so the
+    * raw pattern of +2^(n-1) decodes as itself, not as its two's
+    * complement -2^(n-1) (prometheus tsdb chunkenc/xor.go:
+    * `if bits > 1<<(sz-1) { bits -= 1<<sz }`).
+    */
+  private def bucketValue(bits: Long, nbits: Int): Long =
+    if (bits > (1L << (nbits - 1))) bits - (1L << nbits) else bits
 
   /** returns (value, leading, trailing) */
   private def readXor(

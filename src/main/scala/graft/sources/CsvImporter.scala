@@ -1,20 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.infer.TypeInference
 import graft.infer.TypeInference.ColumnType
-import graft.model.{Sensor, SensorType}
-
-/** A normalized ingestion batch: sensors catalog + per-type sample tables
-  * in the canonical `(sensor_id, timestamp_us, value)` layout.
-  */
-final case class IngestBatch(
-    sensors: DataFrame,
-    samples: Map[SensorType, DataFrame]) {
-  def sampleCount(): Long = samples.values.map(_.count()).sum
-}
+import graft.model.{IngestBatch, SensorType}
 
 /** CSV importer (S1): header read, column type inference on a bounded
   * sample (128 rows, reference cap), datetime-column detection, long/wide
@@ -82,9 +73,9 @@ object CsvImporter {
 
     (nameIdx, valueIdx) match {
       case (Some(ni), Some(vi)) =>
-        longFormat(spark, base, names, colTypes, tsCol, ni, vi, unitIdx)
+        longFormat(base, names, colTypes, tsCol, ni, vi, unitIdx)
       case _ if dtIdx.isDefined =>
-        wideFormat(spark, base, names, colTypes, tsCol, dtIdx.get)
+        wideFormat(base, names, colTypes, tsCol, dtIdx.get)
       case _ =>
         throw new IllegalArgumentException(
           "Unable to parse CSV: no clear datetime column and no " +
@@ -132,25 +123,7 @@ object CsvImporter {
     case _ => c
   }
 
-  private def catalog(
-      spark: SparkSession,
-      perSensor: Seq[(String, SensorType, Option[String])]): DataFrame = {
-    import spark.implicits._
-    perSensor.map { case (name, t, unit) =>
-      (Sensor.deriveUuid(name, t,
-        unit.map(u => graft.model.SensorUnit(u)), Nil),
-        name, t.displayName, unit.orNull)
-    }.toDF("uuid", "name", "type", "unit_name")
-      .select(col("uuid"), col("name"), col("type"),
-        when(col("unit_name").isNotNull,
-          struct(col("unit_name").as("name"),
-            lit(null).cast(StringType).as("description")))
-          .as("unit"),
-        lit(null).cast(MapType(StringType, StringType)).as("labels"))
-  }
-
   private def longFormat(
-      spark: SparkSession,
       base: DataFrame,
       names: Seq[String],
       colTypes: Seq[ColumnType],
@@ -161,39 +134,26 @@ object CsvImporter {
     val vType = colTypes(valueIdx)
     val sType = valueSensorType(vType)
     val unitCol = unitIdx.map(i => col(names(i))).getOrElse(lit(null).cast(StringType))
-    val normalized = base.select(
-      col(names(nameIdx)).as("sensor_name"),
+    val rows = base.select(
+      col(names(nameIdx)).as("sensor_id"),
       tsCol.as("timestamp_us"),
       castValue(col(names(valueIdx)), vType).as("value"),
       unitCol.as("unit_name"))
-
-    // sensor identities: first unit per sensor name (reference keeps the
-    // unit seen at first occurrence); tiny catalog — collect is bounded by
-    // the number of distinct sensors, not rows. min_by over a scan-order
-    // id, not first(): first() in a groupBy is whichever PARTITION merges
-    // first, which is nondeterministic on a multi-partition read, while
-    // monotonically_increasing_id orders by (partition, row) = file order;
-    // the null ordering key makes min_by skip unit-less rows.
-    val sensorRows = normalized
+    // first unit per name over a scan-order id: monotonically_increasing_id
+    // orders by (partition, row) = file order, while first() in a groupBy
+    // is whichever partition merges first; an empty unit names none
+    val series = rows
       .withColumn("__ord", monotonically_increasing_id())
-      .groupBy(col("sensor_name"))
-      .agg(min_by(col("unit_name"),
-        when(col("unit_name").isNotNull, col("__ord"))).as("unit_name"))
-      .collect()
-      .map(r => (r.getString(0), sType,
-        Option(r.getString(1)).filter(_.nonEmpty)))
-      .toSeq
-    val sensors = catalog(spark, sensorRows)
-
-    val withIds = normalized
-      .join(broadcast(sensors.select(col("name").as("sensor_name"), col("uuid"))),
-        Seq("sensor_name"))
-      .select(col("uuid").as("sensor_id"), col("timestamp_us"), col("value"))
-    IngestBatch(sensors, Map(sType -> withIds))
+      .groupBy(col("sensor_id").as("name"))
+      .agg(nullif(IngestBatch.firstUnit(col("__ord")), lit(""))
+        .as("unit_name"))
+      .withColumn("type", lit(sType.displayName))
+      .withColumn("labels", lit(null))
+    IngestBatch.fromSeries(series)(uuids =>
+      Map(sType -> IngestBatch.withIds(rows, uuids)))
   }
 
   private def wideFormat(
-      spark: SparkSession,
       base: DataFrame,
       names: Seq[String],
       colTypes: Seq[ColumnType],
@@ -201,29 +161,23 @@ object CsvImporter {
       dtIdx: Int): IngestBatch = {
     val sensorCols = names.indices.filter(_ != dtIdx)
     require(sensorCols.nonEmpty, "No sensor columns found - CSV format unclear")
-    val perSensor = sensorCols.map { i =>
-      (names(i), valueSensorType(colTypes(i)), Option.empty[String])
-    }
-    val sensors = catalog(spark, perSensor)
-    val uuidByName = perSensor.map { case (n, t, u) =>
-      n -> Sensor.deriveUuid(n, t, None, Nil)
-    }.toMap
     // one stack() generator per sensor TYPE, not one union branch per
     // sensor COLUMN: CSV scans parse whole lines, so k union branches
     // would parse the file k times — the generator unpivots every column
     // of the type group in a single scan
-    val byType = sensorCols.groupBy(i => valueSensorType(colTypes(i))).map {
-      case (st, idxs) =>
-        val pairs = idxs.flatMap { i =>
-          Seq(lit(uuidByName(names(i))),
-            castValue(col(names(i)), colTypes(i)))
-        }
-        st -> base
-          .select(tsCol.as("timestamp_us"),
-            stack((lit(idxs.size) +: pairs): _*)
-              .as(Seq("sensor_id", "value")))
-          .select(col("sensor_id"), col("timestamp_us"), col("value"))
-    }
-    IngestBatch(sensors, byType)
+    val byType = sensorCols.groupBy(i => valueSensorType(colTypes(i)))
+    val series = base.sparkSession.createDataFrame(byType.toSeq.flatMap {
+      case (st, idxs) => idxs.map(i => (names(i), st.displayName))
+    }).toDF("name", "type")
+      .withColumn("unit_name", lit(null))
+      .withColumn("labels", lit(null))
+    IngestBatch.fromSeries(series)(uuids => byType.map { case (st, idxs) =>
+      val pairs = idxs.flatMap { i =>
+        Seq(lit(uuids(names(i))), castValue(col(names(i)), colTypes(i)))
+      }
+      st -> base.select(
+        stack((lit(idxs.size) +: pairs): _*).as(Seq("sensor_id", "value")),
+        tsCol.as("timestamp_us"))
+    })
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.model.SensorType
 
 /** InfluxDB line-protocol ingest (S4):
   * `measurement[,tag=v...] field=value[,field=value...] [timestamp]`.
@@ -270,6 +271,19 @@ object InfluxLineProtocol {
       withNumeric: Boolean = false): DataFrame = {
     val base = parseTyped(lines, bucket, org, precision)
     if (withNumeric) toNumeric(base) else base
+  }
+
+  /** The value types [[parse]] can report. */
+  val Types: Seq[SensorType] = Seq(SensorType.Integer, SensorType.Float,
+    SensorType.Str, SensorType.Boolean, SensorType.Numeric)
+
+  /** The value column of a type-`t` row of [[parse]]'s output. */
+  def value(t: SensorType): Column = t match {
+    case SensorType.Integer => col("long_value")
+    case SensorType.Str => col("string_value")
+    case SensorType.Boolean => col("bool_value")
+    case SensorType.Numeric => col("numeric_value")
+    case _ => col("double_value")
   }
 
   private def parseTyped(

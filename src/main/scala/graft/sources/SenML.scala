@@ -57,39 +57,40 @@ object SenML {
         col("v"), col("vs"), col("vb"), col("vd"), col("doc_id"), col("pos"))
   }
 
-  /** Series-level type resolution + per-type sample frames. Each frame
-    * carries `(doc_id, pos)` so callers can make document-order picks
-    * (e.g. "unit of the first record") deterministically. No cache: the
-    * branches a caller materializes re-run the parse, which is bounded
-    * by the request body — a cache here would register one CacheManager
-    * entry per publish on a long-lived gateway with no unpersist point.
+  /** Series-level type resolution: [[parse]]'s rows plus `type`, the
+    * display name of the series' type — that of its first record. Rows
+    * keep `(doc_id, pos)` so callers can make document-order picks (e.g.
+    * "unit of the first record") deterministically.
+    */
+  def typed(docs: Dataset[String]): DataFrame =
+    parse(docs).withColumn("type",
+      first(
+        when(col("v").isNotNull, SensorType.Float.displayName)
+          .when(col("vs").isNotNull, SensorType.Str.displayName)
+          .when(col("vb").isNotNull, SensorType.Boolean.displayName)
+          .when(col("vd").isNotNull, SensorType.Blob.displayName)
+          .otherwise(SensorType.Float.displayName))
+        .over(Window.partitionBy(col("name")).orderBy(col("doc_id"), col("pos"))
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+
+  /** Per-type sample frames `(sensor_id = series name, timestamp_us,
+    * value, unit, doc_id, pos)` of [[typed]]'s rows, one per SenML value
+    * type; an absent field reads as the type's zero. No cache: the
+    * branches a caller materializes re-run the parse, which is bounded by
+    * the request body.
     */
   def importJson(docs: Dataset[String]): Map[SensorType, DataFrame] = {
-    val resolved = parse(docs)
-    val w = Window.partitionBy(col("name")).orderBy(col("doc_id"), col("pos"))
-    val withType = resolved
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("first_type",
-        first(
-          when(col("v").isNotNull, SensorType.Float.displayName)
-            .when(col("vs").isNotNull, SensorType.Str.displayName)
-            .when(col("vb").isNotNull, SensorType.Boolean.displayName)
-            .when(col("vd").isNotNull, SensorType.Blob.displayName)
-            .otherwise(SensorType.Float.displayName))
-          .over(Window.partitionBy(col("name")).orderBy(col("doc_id"), col("pos"))
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-    def branch(t: SensorType, value: org.apache.spark.sql.Column): DataFrame =
-      withType
-        .filter(col("first_type") === t.displayName)
+    val rows = typed(docs)
+    Map(
+      SensorType.Float -> coalesce(col("v"), lit(0.0)),
+      SensorType.Str -> coalesce(col("vs"), lit("")),
+      SensorType.Boolean -> coalesce(col("vb"), lit(false)),
+      SensorType.Blob -> unbase64(coalesce(col("vd"), lit("")))
+    ).map { case (t, value) =>
+      t -> rows.filter(col("type") === t.displayName)
         .select(col("name").as("sensor_id"), col("timestamp_us"),
           value.as("value"), col("unit"), col("doc_id"), col("pos"))
-    Map(
-      SensorType.Float -> branch(SensorType.Float, coalesce(col("v"), lit(0.0))),
-      SensorType.Str -> branch(SensorType.Str, coalesce(col("vs"), lit(""))),
-      SensorType.Boolean ->
-        branch(SensorType.Boolean, coalesce(col("vb"), lit(false))),
-      SensorType.Blob ->
-        branch(SensorType.Blob, unbase64(coalesce(col("vd"), lit("")))))
+    }
   }
 
   /** Multi-series SenML export as ONE plan (reference

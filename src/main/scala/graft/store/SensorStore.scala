@@ -2,7 +2,8 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.{Schemas, SensorType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import graft.model.{IngestBatch, Schemas, SensorType}
 
 /** Columnar sensor store (S6/S14), parquet by default with ORC as a
   * drop-in alternative backend: the Spark-native analog of the
@@ -20,6 +21,16 @@ import graft.model.{Schemas, SensorType}
   *    the (sensor_id, timestamp_us) index for pushed-down filters;
   *  - the sensors catalog is a small parquet table deduped on uuid at
   *    publish time (latest metadata wins), always broadcastable.
+  *
+  * Ingest has one commit, [[publish]]: every import edge normalizes its
+  * payload into a [[graft.model.IngestBatch]] and publishes it, catalog
+  * first and samples after, so no sample is ever readable before its
+  * series' catalog row (reference: src/storage/mod.rs:22).
+  *
+  * Reads declare their schema ([[Schemas.sensors]], [[Schemas.samples]]
+  * plus the `month` partition column) instead of inferring it from a file
+  * footer: building a read starts no Spark job, and a racing compaction
+  * cannot delete the file a read was inferring from.
   */
 final class SensorStore(
     spark: SparkSession, root: String,
@@ -47,8 +58,12 @@ final class SensorStore(
     "with UTC calendar math")
   private val suffix = s".$format"
 
-  private def readDir(paths: String*): DataFrame =
-    spark.read.format(format).load(paths: _*)
+  private def readDir(schema: StructType, paths: String*): DataFrame =
+    spark.read.schema(schema).format(format).load(paths: _*)
+
+  /** A value table read: the sample layout plus its `month` partition. */
+  private def valueSchema(t: SensorType): StructType =
+    Schemas.samples(t).add("month", IntegerType)
 
   /** Catalog reads tolerate vanished files: a compaction running in
     * another thread deletes replaced publish files AFTER adding the
@@ -61,15 +76,28 @@ final class SensorStore(
     */
   private def readCatalog(paths: String*): DataFrame =
     spark.read.option("ignoreMissingFiles", "true")
-      .format(format).load(paths: _*)
+      .schema(Schemas.sensors).format(format).load(paths: _*)
 
   private def valueDir(t: SensorType) = s"$root/values_${t.displayName.toLowerCase}"
   private val catalogDir = s"$root/sensors"
 
+  /** The ingest commit: merge the batch's catalog rows, then append its
+    * samples of every type ([[publishSamplesMulti]]). The order is the
+    * contract — a reader never sees a sample whose series has no catalog
+    * row. `commitKey` makes the sample append idempotent (see
+    * [[publishSamples]]); the catalog needs none, its anti-join absorbs
+    * replays. An empty batch commits nothing. Releases the batch's cache.
+    */
+  def publish(batch: IngestBatch, commitKey: Option[String] = None): Unit =
+    try if (batch.samples.nonEmpty) {
+      publishSensors(batch.sensors)
+      publishSamplesMulti(batch.samples, commitKey)
+    } finally batch.release()
+
   /** Append samples of one type. `samples`: (sensor_id, timestamp_us,
-    * value) in the canonical layout. Concurrent-appender safe: the write
-    * lands in a private staging dir and the committed files rename in
-    * (see [[stagedAppend]]).
+    * value), written in the canonical layout of [[Schemas.samples]].
+    * Concurrent-appender safe: the write lands in a private staging dir
+    * and the committed files rename in (see [[stagedAppend]]).
     */
   def publishSamples(t: SensorType, samples: DataFrame): Unit =
     publishSamples(t, samples, commitKey = None)
@@ -100,11 +128,13 @@ final class SensorStore(
       // edges (Arrow export, remote read, PromQL math) extract primitive
       // doubles that have no null representation. Other types keep their
       // nulls untouched, as the reference does.
+      val canonical = samples.select(col("sensor_id"),
+        col("timestamp_us").cast(LongType), col("value").cast(t.sparkType))
       val finite =
         if (t == SensorType.Float)
-          samples.filter(!isnan(col("value")) &&
+          canonical.filter(!isnan(col("value")) &&
             abs(col("value")) =!= lit(Double.PositiveInfinity))
-        else samples
+        else canonical
       finite
         .withColumn("month",
           date_format(timestamp_micros(col("timestamp_us")), "yyyyMM"))
@@ -220,18 +250,31 @@ final class SensorStore(
     * schedules them onto the shared executors in parallel (wall time ≈
     * the largest batch, not the sum). This is the multi-type ingest
     * shape: a mixed batch (reference: one `publish` transaction across
-    * per-type tables) lands in one call.
+    * per-type tables) lands in one call. `commitKey` keys every type's
+    * append (see [[publishSamples]]); the tables are distinct, so one key
+    * serves them all. A single batch runs on the calling thread; the
+    * others carry the caller's scheduler pool.
     */
-  def publishSamplesMulti(batches: Map[SensorType, DataFrame]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(
-      Future.sequence(batches.toSeq.map { case (t, df) =>
-        Future(publishSamples(t, df))
-      }), Duration.Inf)
-    ()
-  }
+  def publishSamplesMulti(
+      batches: Map[SensorType, DataFrame],
+      commitKey: Option[String] = None): Unit =
+    batches.toSeq match {
+      case Seq((t, df)) => publishSamples(t, df, commitKey)
+      case all =>
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        val sc = spark.sparkContext
+        val pool = sc.getLocalProperty("spark.scheduler.pool")
+        Await.result(
+          Future.sequence(all.map { case (t, df) =>
+            Future {
+              sc.setLocalProperty("spark.scheduler.pool", pool)
+              publishSamples(t, df, commitKey)
+            }
+          }), Duration.Inf)
+        ()
+    }
 
   /** Merge sensors into the catalog: dedup on uuid, existing row wins
     * (metadata is immutable given content-addressed uuids). Steady state
@@ -405,7 +448,7 @@ final class SensorStore(
     */
   def samples(t: SensorType): DataFrame =
     if (exists(valueDir(t)))
-      readDir(valueDir(t)).drop("month")
+      readDir(valueSchema(t), valueDir(t)).drop("month")
     else {
       val schema = Schemas.samples(t)
       spark.createDataFrame(
@@ -425,7 +468,7 @@ final class SensorStore(
       endUs: Option[Long]): DataFrame =
     if (!exists(valueDir(t))) samples(t)
     else {
-      var df = readDir(valueDir(t))
+      var df = readDir(valueSchema(t), valueDir(t))
       startUs.foreach(s => df = df
         .filter(col("month") >= monthOf(s) && col("timestamp_us") >= s))
       endUs.foreach(e => df = df
@@ -512,7 +555,7 @@ final class SensorStore(
         val files = fs.listStatus(m.getPath)
           .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
         if (files.length > maxFilesPerPartition)
-          compactPartition(fs, m.getPath, targetPartitions)
+          compactPartition(fs, t, m.getPath, targetPartitions)
       }
       refreshViews()
     } finally vacuumLock.unlock()
@@ -577,6 +620,7 @@ final class SensorStore(
     */
   private def compactPartition(
       fs: org.apache.hadoop.fs.FileSystem,
+      t: SensorType,
       partDir: org.apache.hadoop.fs.Path,
       targetPartitions: Int): Unit = {
     val stamp = s"${System.currentTimeMillis()}-" +
@@ -593,7 +637,7 @@ final class SensorStore(
     // its own file — absent from `old` — survives the delete, leaving
     // every one of its rows permanently doubled in a table with no
     // dedup-on-read.
-    readDir(old.map(_.toString): _*)
+    readDir(Schemas.samples(t), old.map(_.toString): _*)
       .repartition(targetPartitions)
       .sortWithinPartitions("sensor_id", "timestamp_us")
       .write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)

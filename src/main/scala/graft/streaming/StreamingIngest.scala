@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.model.SensorType
+import graft.model.{IngestBatch, SensorType}
 import graft.store.SensorStore
 
 /** Structured Streaming ingest (T1–T4) and the windowed resampler the
@@ -210,47 +210,30 @@ object StreamingIngest {
           Seq.empty
         }
       }
-      .toDF("sensor_name", "labels", "unit_name", "timestamp_us", "value")
+      .toDF(RemoteWriteColumns: _*)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        publishRemoteWriteRows(store, batch,
+        store.publish(remoteWriteBatch(batch),
           commitKey = Some(commitKey(checkpointDir, batchId)))
       }
       .start()
   }
 
-  /** Publish normalized remote-write rows (sensor_name, labels, unit_name,
-    * timestamp_us, value) as Float series. `commitKey`: idempotency key
-    * for at-least-once streaming sinks (see
-    * [[graft.store.SensorStore.publishSamples]]); the catalog side needs
-    * none — publishSensors' anti-join absorbs replays.
+  /** Column names of [[graft.prometheus.PrometheusRemote.writeRequestRows]]'
+    * tuples, shared by the HTTP endpoint and [[remoteWriteStream]].
     */
-  def publishRemoteWriteRows(
-      store: SensorStore, df: DataFrame,
-      commitKey: Option[String] = None): Unit = {
-    import org.apache.spark.sql.types.StringType
-    val withUuid = df.withColumn("uuid",
-      call_function("sensor_uuid", col("sensor_name"), lit("Float"),
-        col("unit_name"), col("labels"))).cache()
-    try {
-      if (withUuid.limit(1).count() == 0) return
-      store.publishSensors(withUuid
-        .select(col("uuid"), col("sensor_name").as("name"),
-          lit("Float").as("type"),
-          when(col("unit_name").isNotNull,
-            struct(col("unit_name").as("name"),
-              lit(null).cast(StringType).as("description"))).as("unit"),
-          col("labels"))
-        .dropDuplicates("uuid"))
-      store.publishSamples(SensorType.Float, withUuid
-        .select(col("uuid").as("sensor_id"), col("timestamp_us"),
-          col("value")),
-        commitKey)
-    } finally withUuid.unpersist()
-  }
+  val RemoteWriteColumns: Seq[String] =
+    Seq("name", "labels", "unit_name", "timestamp_us", "value")
+
+  /** Remote-write rows ([[RemoteWriteColumns]]) as a batch of Float
+    * series.
+    */
+  def remoteWriteBatch(rows: DataFrame): IngestBatch =
+    IngestBatch.fromRows(rows.withColumn("type", lit("Float")),
+      Seq(SensorType.Float), cache = true)(_ => col("value"))
 
   /** Event-time windowed resampling with a watermark: per sensor, tumbling
     * windows of `windowDur`, emitting count/avg/min/max — the composite-
@@ -346,44 +329,32 @@ object StreamingIngest {
     */
   def publishResampledRows(
       store: SensorStore, batch: DataFrame, windowDur: String): Unit = {
-    import org.apache.spark.sql.types.StringType
-    if (batch.limit(1).count() == 0) return
     val catalog = store.sensors.select(
       col("uuid"), col("name").as("src_name"),
       col("unit.name").as("unit_name"), col("labels").as("src_labels"))
     val emptyLabels = expr("cast(map() as map<string,string>)")
     val rows = batch
-      .select(col("window_start_us"), col("sensor_id"),
+      .select(col("window_start_us").as("timestamp_us"), col("sensor_id"),
         expr("""stack(4,
           'count', cast(n as double),
           'avg', avg_value,
           'min', min_value,
           'max', max_value) as (stat, value)"""))
       .join(broadcast(catalog), col("sensor_id") === col("uuid"), "left")
-      .withColumn("derived_name", coalesce(col("src_name"), col("sensor_id")))
-      .withColumn("derived_labels", map_concat(
+      .drop("uuid")
+      .withColumn("name", coalesce(col("src_name"), col("sensor_id")))
+      .withColumn("labels", map_concat(
         map_filter(coalesce(col("src_labels"), emptyLabels),
           (k, _) => !k.isin("__resample__", "__aggregate__")),
         map(lit("__resample__"), lit(windowDur),
           lit("__aggregate__"), col("stat"))))
-      .withColumn("derived_uuid",
-        call_function("sensor_uuid", col("derived_name"), lit("Float"),
-          col("unit_name"), col("derived_labels")))
-      .cache()
-    try {
-      store.publishSensors(rows
-        .select(col("derived_uuid").as("uuid"),
-          col("derived_name").as("name"), lit("Float").as("type"),
-          when(col("unit_name").isNotNull,
-            struct(col("unit_name").as("name"),
-              lit(null).cast(StringType).as("description"))).as("unit"),
-          col("derived_labels").as("labels"))
-        .dropDuplicates("uuid"))
-      val derived = rows
-        .select(col("derived_uuid").as("sensor_id"),
-          col("window_start_us").as("timestamp_us"), col("value"))
-      store.publishSamples(SensorType.Float, antiJoinExisting(store, derived))
-    } finally rows.unpersist()
+      .withColumn("type", lit("Float"))
+    val derived = IngestBatch.fromRows(rows, Seq(SensorType.Float),
+      cache = true)(_ => col("value"))
+    try store.publish(derived.copy(samples = derived.samples.map {
+      case (t, s) => t -> antiJoinExisting(store, s)
+    }))
+    finally derived.release()
   }
 
   /** Drop derived rows whose (sensor_id, timestamp_us) key already exists

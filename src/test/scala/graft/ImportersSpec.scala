@@ -92,7 +92,7 @@ class ImportersSpec extends SparkSpec {
       val long = ("datetime,sensor_name,value" +:
         (for (r <- 0 until nRows; c <- 0 until nCols)
           yield s"${ts(r)},${names(c)},${cells(r)(c)}")).mkString("\n")
-      def dump(batch: graft.sources.IngestBatch) = batch
+      def dump(batch: graft.model.IngestBatch) = batch
         .samples(SensorType.Float)
         .select(col("sensor_id"), col("timestamp_us"),
           col("value").cast("string"))

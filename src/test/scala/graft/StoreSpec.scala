@@ -830,6 +830,38 @@ class StoreSpec extends SparkSpec {
     }
   }
 
+  test("store reads declare their schema: building a read starts no job") {
+    val store = new SensorStore(spark, tempDir())
+    store.publishSamples(SensorType.Float, sampleData)
+    store.publishSensors(Seq(("s1", "temp", "Float")).toDF("uuid", "name", "type")
+      .withColumn("unit", lit(null).cast("struct<name:string,description:string>"))
+      .withColumn("labels", lit(null).cast("map<string,string>")))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBarrier.drain(sc)
+    sc.addSparkListener(listener)
+    val (sensors, samples, ranged) =
+      try {
+        val built = (store.sensors, store.samples(SensorType.Float),
+          store.samplesInRange(SensorType.Float,
+            Some(1704067200000000L), Some(1705000000000000L)))
+        org.apache.spark.graft.ListenerBarrier.drain(sc)
+        built
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0L, s"${jobs.get()} jobs started building reads")
+    def shape(st: org.apache.spark.sql.types.StructType) =
+      st.fields.map(f => f.name -> f.dataType).toSeq
+    assert(shape(sensors.schema) == shape(graft.model.Schemas.sensors))
+    assert(shape(samples.schema) ==
+      shape(graft.model.Schemas.samples(SensorType.Float)))
+    assert(sensors.count() == 1 && samples.count() == 3 && ranged.count() == 2)
+  }
+
   test("windowed resample (batch mode) aggregates per tumbling window") {
     val df = Seq(
       ("s1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 1.0),

@@ -65,6 +65,23 @@ class XorChunkSpec extends AnyFunSuite {
     assert(XorChunk.decode(XorChunk.encode(in)) == in)
   }
 
+  test("roundtrip: delta-of-delta at every bucket bound") {
+    // each n-bit bucket holds -(2^(n-1) - 1) .. +2^(n-1); the upper bound
+    // must decode as itself, not as its two's complement -2^(n-1). The
+    // values one past each bound land in the next bucket.
+    val dods = Seq(14, 17, 20).flatMap { n =>
+      val half = 1L << (n - 1)
+      Seq(half, -(half - 1), half + 1, -half)
+    }
+    val deltas = dods.scanLeft(1000000L)(_ + _)
+    val in = deltas.scanLeft(1700000000000L)(_ + _).zipWithIndex
+      .map { case (t, i) => Sample(t, i.toDouble) }
+    assert(in.map(_.timestampMs).sliding(3).map {
+      case Seq(a, b, c) => (c - b) - (b - a)
+    }.toSeq == dods)
+    assert(XorChunk.decode(XorChunk.encode(in)) == in)
+  }
+
   test("roundtrip: negative values, NaN bits, extreme dod buckets") {
     val in = Seq(
       Sample(0, -1.5), Sample(1, Double.MaxValue),
