@@ -16,8 +16,67 @@ import org.apache.spark.sql.SparkSession
   * medians, cold run, and raw warm samples ride EARLIER lines
   * (`warm_medians`, `cold_queries`, `warm_samples`) and the complete
   * breakdown lands in bench_full.json / bench_full_r{N}.json.
+  *
+  * A run that throws is a failure, never a sample: it stays out of the
+  * medians and totals, and the query's entry in bench_full.json carries
+  * `"failed":true` with the first error.
   */
 object Bench {
+  /** One timed run of a query: wall seconds, or the error it threw. */
+  private[graft] def timed(
+      spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Either[String, Double] = {
+    val t0 = System.nanoTime()
+    // free any result checkpoint the op pinned (Dedup/Similarity
+    // materialize their answer as an eager localCheckpoint) — without
+    // this every invocation leaks blocks for the JVM's lifetime, and
+    // the 4-runs-per-query loop below would hoard 4x the storage
+    try {
+      val df = fn(spark, sfDir)
+      df.count()
+      graft.pipeline.PipelineCache.free(df)
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(String.valueOf(e)) }
+  }
+
+  /** A query's cold run and warm runs. */
+  private[graft] final case class Runs(
+      cold: Either[String, Double], warm: Seq[Either[String, Double]]) {
+    def samples: Seq[Double] = warm.collect { case Right(s) => s }
+    /** Over the successful warm runs only; none when every one threw. */
+    def median: Option[Double] =
+      if (samples.isEmpty) None else Some(Bench.median(samples))
+    def error: Option[String] = (cold +: warm).collectFirst { case Left(e) => e }
+    def failed: Boolean = error.isDefined
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.length
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
+
+  private def r3(d: Double): String = f"$d%.3f"
+
+  private def jsonStr(s: String): String =
+    "\"" + s.take(300).flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  /** One query's bench_full.json entry; a missing time is `null`. */
+  private[graft] def queryJson(name: String, r: Runs): String = {
+    def num(d: Option[Double]) = d.map(r3).getOrElse("null")
+    "\"" + name + "\":{\"median\":" + num(r.median) +
+      ",\"cold\":" + num(r.cold.toOption) +
+      ",\"warm\":[" + r.warm.map(w => num(w.toOption)).mkString(",") + "]" +
+      ",\"failed\":" + r.failed +
+      r.error.map(e => ",\"error\":" + jsonStr(e)).getOrElse("") + "}"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -30,18 +89,10 @@ object Bench {
     // untimed warmup: JVM/parquet-footer startup shouldn't be attributed
     // to whichever query happens to run first
     try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // free any result checkpoint the op pinned (Dedup/Similarity
-      // materialize their answer as an eager localCheckpoint) — without
-      // this every invocation leaks blocks for the JVM's lifetime, and
-      // the 4-runs-per-query loop below would hoard 4x the storage
-      try {
-        val df = fn(spark, sfDir)
-        df.count()
-        graft.pipeline.PipelineCache.free(df)
-      } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+    def run(n: String): Either[String, Double] = {
+      val r = timed(spark, sfDir, SparkEntry.queries(n))
+      r.left.foreach(e => System.err.println(s"[bench] $n failed: $e"))
+      r
     }
     // Host load at start/end of the run: past rounds needed manual
     // adjudication of apparent regressions against concurrent build
@@ -62,22 +113,16 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
-    val cold = names.map(n => n -> timed(SparkEntry.queries(n))).toMap
+    val cold = names.map(n => n -> run(n)).toMap
     // warm samples round-robin (all queries once, then again) rather than
     // back-to-back, so a transient host-load spike degrades one sample of
     // many queries instead of all samples of one query
-    val warm: Map[String, Seq[Double]] = {
+    val runs: Map[String, Runs] = {
       val rounds = (1 to warmRounds).map { _ =>
-        names.map(n => n -> timed(SparkEntry.queries(n))).toMap
+        names.map(n => n -> run(n)).toMap
       }
-      names.map(n => n -> rounds.map(_(n))).toMap
+      names.map(n => n -> Runs(cold(n), rounds.map(_(n)))).toMap
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
-    val med = names.map(n => n -> median(warm(n))).toMap
     // The driver captures only the ~1900-char tail of this process's
     // output, and the FINAL line must parse as JSON. At 77 full-name
     // queries the summary crossed 2000 chars, so the summary keys are
@@ -89,18 +134,18 @@ object Bench {
     def shortId(n: String): String = n.takeWhile(_ != '_')
     require(names.map(shortId).distinct.length == names.length,
       "short query ids must stay unique")
-    def r3(d: Double): String = f"$d%.3f"
-    def r2(d: Double): String = f"$d%.2f"
-    def json(m: Map[String, Double]): String =
+    def r2(d: Option[Double]): String = d.map(x => f"$x%.2f").getOrElse("null")
+    def json(m: String => Option[Double]): String =
       names.map(n => "\"" + shortId(n) + "\":" + r2(m(n)))
         .mkString("{", ",", "}")
-    val warmTotal = names.map(med).sum
-    val coldTotal = names.map(cold).sum
+    val warmTotal = names.flatMap(runs(_).median).sum
+    val coldTotal = names.flatMap(cold(_).toOption).sum
     val namesLine = names.map(n => "\"" + shortId(n) + "\":\"" + n + "\"")
       .mkString("""{"query_names":{""", ",", "}}")
-    val coldLine = s"""{"cold_queries":${json(cold)}}"""
+    val coldLine = s"""{"cold_queries":${json(cold(_).toOption)}}"""
     val samplesLine = names.map { n =>
-      "\"" + shortId(n) + "\":[" + warm(n).map(r2).mkString(",") + "]"
+      "\"" + shortId(n) + "\":[" +
+        runs(n).warm.map(w => r2(w.toOption)).mkString(",") + "]"
     }.mkString("""{"warm_samples":{""", ",", "}}")
     val loadEnd = loadavg()
     // A SPARK_GRAFT_BENCH_ONLY subset must be UNMISTAKABLE in the
@@ -116,7 +161,7 @@ object Bench {
     // `parsed: null` when the per-query map pushed it past the window).
     // The medians map rides an earlier line; the complete breakdown is
     // in bench_full.json / bench_full_r{N}.json.
-    val medLine = s"""{"warm_medians":${json(med)}}"""
+    val medLine = s"""{"warm_medians":${json(runs(_).median)}}"""
     val summary = s"""{"metric":"total","value":${r3(warmTotal)},"unit":"sec",""" +
       s""""n_queries":${names.length},""" +
       s""""sec_per_query":${r3(warmTotal / math.max(1, names.length))},""" +
@@ -139,11 +184,9 @@ object Bench {
       s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd""" +
       s"""$subsetJson,""" +
       s""""warm_total":${r3(warmTotal)},"cold_total":${r3(coldTotal)},""" +
-      "\"queries\":" + names.map { n =>
-        "\"" + n + "\":{\"median\":" + r3(med(n)) +
-          ",\"cold\":" + r3(cold(n)) +
-          ",\"warm\":[" + warm(n).map(r3).mkString(",") + "]}"
-      }.mkString("{", ",", "}") + "}"
+      s""""n_failed":${names.count(runs(_).failed)},""" +
+      "\"queries\":" + names.map(n => queryJson(n, runs(n)))
+        .mkString("{", ",", "}") + "}"
     val defaultOut =
       if (only.isDefined) "bench_full.partial.json" else "bench_full.json"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", defaultOut)

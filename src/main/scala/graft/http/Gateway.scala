@@ -15,7 +15,7 @@ import graft.operators.{LabelMatcher, Matchers, SensorOps}
 import graft.prometheus.{PrometheusRemote, RemoteRead}
 import graft.promql.SimplePromQL
 import graft.sources.{BodyCodec, CsvImporter, InfluxLineProtocol, SenML}
-import graft.store.SensorStore
+import graft.store.{CommitGate, SensorStore}
 
 /** HTTP gateway over the query/store layer, reproducing the reference's
   * route surface (reference: src/ingestors/http/server.rs:82-114):
@@ -201,15 +201,17 @@ final class Gateway(
       })
     server.setExecutor(pool)
     // watchdog: one scheduled 408 probe per in-flight request — the
-    // reference's TimeoutLayer semantics (server.rs:74-77). The handler
-    // keeps running (a Spark job can't be safely aborted mid-stage from
-    // here) but the CLIENT gets its timeout answer; the late response
-    // attempt is suppressed by the responded-guard in respondBytes.
+    // reference's TimeoutLayer semantics (server.rs:74-77). A fired
+    // watchdog abandons the request's work (see route): its Spark jobs
+    // are cancelled and its store commits withdrawn; the handler's late
+    // response attempt is suppressed by the responded-guard in
+    // respondBytes.
     watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
       (r: Runnable) => { val t = new Thread(r, "gateway-watchdog"); t.setDaemon(true); t })
     watchdogIo = java.util.concurrent.Executors.newCachedThreadPool(
       (r: Runnable) => { val t = new Thread(r, "gateway-watchdog-io"); t.setDaemon(true); t })
     ingestSlots = new java.util.concurrent.Semaphore(graft.Config.ingestQueueLimit)
+    spark.sparkContext.addSparkListener(lateJobCanceller)
     server.start()
     server.getAddress.getPort
   }
@@ -219,6 +221,19 @@ final class Gateway(
     if (pool != null) pool.shutdown()
     if (watchdog != null) watchdog.shutdownNow()
     if (watchdogIo != null) watchdogIo.shutdownNow()
+    spark.sparkContext.removeSparkListener(lateJobCanceller)
+  }
+
+  /** Cancels a job started under an abandoned request's tag: the
+    * watchdog's tag cancel reaches only the jobs running when it fires,
+    * and a handler may start more before it notices.
+    */
+  private val lateJobCanceller = new org.apache.spark.scheduler.SparkListener {
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (org.apache.spark.graft.JobTags.of(e.properties)
+          .exists(CommitGate.abandoned))
+        spark.sparkContext.cancelJob(e.jobId, "request timed out")
   }
 
   // ------------------------------------------------------------- plumbing
@@ -259,6 +274,11 @@ final class Gateway(
     server.createContext(path, new HttpHandler {
       override def handle(x: HttpExchange): Unit = {
         val t0 = System.nanoTime()
+        // the request's Spark job tag, echoed to the client: every job
+        // the handler starts carries it, so a timeout can cancel them
+        val tag = s"graft-request-${java.util.UUID.randomUUID()}"
+        x.getResponseHeaders.set("x-request-id", tag)
+        CommitGate.open(tag)
         // create the exchange's lock EAGERLY: the watchdog task only
         // `get`s (a null there must mean finalized-and-removed, never
         // not-yet-created — a lazily created lock would let a 408 fire
@@ -278,11 +298,18 @@ final class Gateway(
               // contended means a response is in flight — completing
               // handler or streaming export — and the timeout answer
               // is moot; a null lock means the exchange was already
-              // finalized and removed
+              // finalized and removed. The 408 abandons the request's
+              // work first: its running jobs are cancelled (a cancelled
+              // write fails before any rename, so nothing lands) and
+              // the commit gate refuses its later commits. A request
+              // whose samples already started to commit is not
+              // abandoned: it finishes and answers itself.
               val l = exchangeLocks.get(x)
               if (l != null && l.tryLock()) {
-                try respondError(x, 408, "request timed out")
-                finally l.unlock()
+                try if (x.getResponseCode == -1 && CommitGate.abandon(tag)) {
+                  spark.sparkContext.cancelJobsWithTag(tag, "request timed out")
+                  respondError(x, 408, "request timed out")
+                } finally l.unlock()
               }
             }
           })
@@ -296,6 +323,7 @@ final class Gateway(
           // thread-local, so handler threads don't clobber each other.
           spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", Thread.currentThread().getName)
+          spark.sparkContext.addJobTag(tag)
           // vanished-file retry (store contract, see ReadFaults): a GET
           // scan racing a vacuum can fault on a listed-then-deleted
           // file (or its .crc sidecar); the read is idempotent and
@@ -334,6 +362,8 @@ final class Gateway(
           // response and logRequest could record status -1.
           val cancelled = deadline.cancel(false)
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+          spark.sparkContext.removeJobTag(tag)
+          CommitGate.close(tag)
           val l = lockOf(x)
           l.lock()
           try {
@@ -560,12 +590,13 @@ final class Gateway(
   private def handleSeries(x: HttpExchange, p: Map[String, String]): Unit = {
     val path = x.getRequestURI.getPath
     if (path == "/series" || path == "/series/") {
+      // ordered by uuid either way; sensorsByLabels sorts already
       val sensors = p.get("selector") match {
         case Some(sel) =>
           Matchers.sensorsByLabels(store.sensors, Catalog.parseSelector(sel))
-        case None => store.sensors
+        case None => store.sensors.orderBy("uuid")
       }
-      val datasets = Catalog.seriesDatasets(sensors.orderBy("uuid"))
+      val datasets = Catalog.seriesDatasets(sensors)
         .select("dataset").collect().map(_.getString(0)).toSeq
       respond(x, 200, "application/json", Catalog.catalogDocument(
         datasets, "/series", s"$name Series Catalog",
@@ -579,10 +610,8 @@ final class Gateway(
       x: HttpExchange, p: Map[String, String], uuid: String): Unit = {
     if (!uuid.matches("[0-9a-fA-F-]{36}"))
       throw new IllegalArgumentException(s"Invalid UUID format: '$uuid'")
-    val meta = store.sensors.filter(col("uuid") === uuid).collect()
-    if (meta.isEmpty)
-      throw new NoSuchElementException(s"Series with UUID '$uuid' not found")
-    val row = meta.head
+    val row = store.sensor(uuid).getOrElse(
+      throw new NoSuchElementException(s"Series with UUID '$uuid' not found"))
     val sType = SensorType.fromString(row.getString(2)).get
     val unit = Option(row.getStruct(3)).map(_.getString(0))
     val labels = Option(row.getMap[String, String](4))
@@ -695,13 +724,15 @@ final class Gateway(
     * Retry-After instead of piling unbounded Spark jobs — the
     * explicit overload signal the reference's publisher queue gives.
     *
-    * Slot lifetime: a slot is held for the FULL duration of the Spark
-    * job, including after a 408 has already answered the client — the
-    * job itself cannot be safely aborted mid-stage, and admitting a new
-    * publish while the old job still consumes executors would make the
-    * admission bound a fiction. Under timeout storms this intentionally
-    * pushes further publishes into the 503 shed path: the cluster IS
-    * overloaded, and shedding is the honest signal.
+    * Slot lifetime: a slot is held until the handler returns, including
+    * after a 408 has already answered the client — admitting a new
+    * publish while the old one still consumes executors would make the
+    * admission bound a fiction. A 408 cancels the publish's Spark jobs
+    * (see route), so the slot frees once the cancelled jobs unwind;
+    * a cancelled write fails before any rename, and the staged append
+    * withdraws it. Under timeout storms this still pushes further
+    * publishes into the 503 shed path: the cluster IS overloaded, and
+    * shedding is the honest signal.
     */
   private def withIngestSlot(x: HttpExchange)(work: => Unit): Unit = {
     if (!ingestSlots.tryAcquire()) {

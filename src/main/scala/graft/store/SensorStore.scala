@@ -1,6 +1,10 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.immutable.TreeMap
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.model.{IngestBatch, Schemas, SensorType}
@@ -19,8 +23,28 @@ import graft.model.{IngestBatch, Schemas, SensorType}
   *  - rows sorted within files by (sensor_id, timestamp_us) via
   *    sortWithinPartitions — parquet min/max row-group stats then act as
   *    the (sensor_id, timestamp_us) index for pushed-down filters;
-  *  - the sensors catalog is a small parquet table deduped on uuid at
-  *    publish time (latest metadata wins), always broadcastable.
+  *  - the sensors catalog is a small, append-only parquet table: publish
+  *    adds only novel uuids (the existing row wins) and reads dedup on
+  *    uuid. It is always broadcastable by design, and this store serves
+  *    it from a driver-resident snapshot (below).
+  *
+  * Catalog snapshot: the deduped catalog rows, sorted by uuid, keyed by
+  * the names of the catalog directory's data files. Names are unique
+  * stamps and files are never rewritten in place, so an unchanged
+  * listing means unchanged rows. Every catalog read lists the directory
+  * once (no Spark job) and:
+  *  - serves the snapshot when the listing matches its key;
+  *  - rebuilds it with one read-and-collect job when the listing changed
+  *    under it — another process's (or another store's) publish or
+  *    compaction;
+  *  - never rebuilds after this store's own writes: a publish merges its
+  *    novel rows in, a compaction re-keys the snapshot to its new files —
+  *    each only when the listing is exactly the snapshot's files plus
+  *    (minus) the files that write added (removed), else the next read
+  *    rebuilds.
+  * The catalog only grows (compaction replaces files by a superset), so
+  * a rebuild that reads a newer directory state than its listing holds a
+  * superset of the listing's rows — still only committed rows.
   *
   * Ingest has one commit, [[publish]]: every import edge normalizes its
   * payload into a [[graft.model.IngestBatch]] and publishes it, catalog
@@ -85,8 +109,9 @@ final class SensorStore(
     * samples of every type ([[publishSamplesMulti]]). The order is the
     * contract — a reader never sees a sample whose series has no catalog
     * row. `commitKey` makes the sample append idempotent (see
-    * [[publishSamples]]); the catalog needs none, its anti-join absorbs
-    * replays. An empty batch commits nothing. Releases the batch's cache.
+    * [[publishSamples]]); the catalog needs none, its novel-uuid filter
+    * absorbs replays. An empty batch commits nothing. Releases the
+    * batch's cache.
     */
   def publish(batch: IngestBatch, commitKey: Option[String] = None): Unit =
     try if (batch.samples.nonEmpty) {
@@ -116,8 +141,8 @@ final class SensorStore(
     */
   def publishSamples(
       t: SensorType, samples: DataFrame,
-      commitKey: Option[String]): Unit =
-    stagedAppend(valueDir(t), commitKey) { staging =>
+      commitKey: Option[String]): Unit = {
+    val moved = stagedAppend(valueDir(t), commitKey) { staging =>
       // non-finite f64 samples are silently skipped at the publish edge
       // (reference: src/storage/sqlite/sqlite_publishers.rs:60-67) —
       // inference already rejects them at the CSV edge, but remote-write
@@ -146,6 +171,8 @@ final class SensorStore(
         .format(format)
         .save(staging)
     }
+    if (moved.nonEmpty) refreshViews()
+  }
 
   /** Append a frame's committed data files into `dir` via a PRIVATE
     * staging directory + per-file renames. A plain `mode(Append)` write
@@ -160,10 +187,14 @@ final class SensorStore(
     * state, and a failed rename withdraws cleanly. A crashed publish
     * can leave a `.tmp` sibling behind; it is invisible to readers and
     * safe to delete.
+    *
+    * The renames pass the [[CommitGate]] first: work abandoned by its
+    * caller (a timed-out request) withdraws here instead of landing.
+    * Returns the names of the data files moved in.
     */
   private def stagedAppend(
       dir: String, dedupKey: Option[String] = None)(
-      writeTo: String => Unit): Unit = {
+      writeTo: String => Unit): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     // dedupKey (streaming replays) fixes the COMMITTED names; the
@@ -178,7 +209,6 @@ final class SensorStore(
     val tmp = new org.apache.hadoop.fs.Path(
       if (dedupKey.isDefined) s"$dir.publish.$stamp.$attempt.tmp"
       else s"$dir.publish.$stamp.tmp")
-    writeTo(tmp.toString)
     val base = new org.apache.hadoop.fs.Path(dir)
     // the table dir is created ONLY when a data file actually moves in
     // (walk's per-file mkdirs): an all-filtered batch (e.g. nothing but
@@ -220,6 +250,13 @@ final class SensorStore(
         } else true
       }
     try {
+      // a failed (or cancelled) write leaves only staging: the finally
+      // removes it, nothing was renamed
+      writeTo(tmp.toString)
+      // value tables mark the commit (an abandon after this point is
+      // refused); catalog rows are idempotent and only check the gate
+      CommitGate.enter(spark.sparkContext.getJobTags(),
+        samples = dir != catalogDir)
       // a THROWN rename (not just a false return) must also withdraw
       // the partial move-in — otherwise a publisher retry after a
       // transient FS exception would double the already-moved rows.
@@ -241,7 +278,7 @@ final class SensorStore(
         throw new java.io.IOException(
           s"staged append could not move committed files into $dir")
       }
-      if (moved.nonEmpty) refreshViews()
+      moved.map(_.getName).toSeq
     } finally fs.delete(tmp, true)
   }
 
@@ -253,7 +290,7 @@ final class SensorStore(
     * per-type tables) lands in one call. `commitKey` keys every type's
     * append (see [[publishSamples]]); the tables are distinct, so one key
     * serves them all. A single batch runs on the calling thread; the
-    * others carry the caller's scheduler pool.
+    * others carry the caller's scheduler pool and job tags.
     */
   def publishSamplesMulti(
       batches: Map[SensorType, DataFrame],
@@ -266,11 +303,16 @@ final class SensorStore(
         implicit val ec: ExecutionContext = ExecutionContext.global
         val sc = spark.sparkContext
         val pool = sc.getLocalProperty("spark.scheduler.pool")
+        // the job tags too: a caller cancelling its tag (a timed-out
+        // request) must reach these jobs and their commit gate
+        val tags = sc.getJobTags()
         Await.result(
           Future.sequence(all.map { case (t, df) =>
             Future {
               sc.setLocalProperty("spark.scheduler.pool", pool)
-              publishSamples(t, df, commitKey)
+              sc.addJobTags(tags)
+              try publishSamples(t, df, commitKey)
+              finally sc.removeJobTags(tags)
             }
           }), Duration.Inf)
         ()
@@ -279,43 +321,37 @@ final class SensorStore(
   /** Merge sensors into the catalog: dedup on uuid, existing row wins
     * (metadata is immutable given content-addressed uuids). Steady state
     * is the fast path: content-addressed uuids mean almost every publish
-    * re-announces known sensors, so when the anti-join finds nothing new
-    * the catalog is left untouched — no write per micro-batch.
+    * re-announces known sensors, so when no incoming uuid is novel to the
+    * snapshot the catalog is left untouched — no write per micro-batch.
     *
-    * Novel rows APPEND as new parquet files — publish cost is O(new
-    * sensors), never an O(catalog) rewrite, and since committed files
-    * land by atomic rename and the existing files are never touched, a
-    * reader racing a publish sees either the complete old catalog or
-    * old + new — never an empty or partial one. The concurrent-writer
-    * race (two publishes appending the same novel uuid) is absorbed by
-    * [[sensors]]' dedup-on-read; duplicate rows are bit-identical
-    * because the uuids are content-addressed.
+    * One job collects the incoming rows (a batch's series: catalog-
+    * sized, like the snapshot they are checked against). Novel rows
+    * APPEND as one new file — publish cost is O(new sensors), never an
+    * O(catalog) rewrite, and since committed files land by atomic rename
+    * and the existing files are never touched, a reader racing a publish
+    * sees either the complete old catalog or old + new — never an empty
+    * or partial one. The novel rows then merge into the snapshot (see
+    * the class doc). The concurrent-writer race (two publishes appending
+    * the same novel uuid) is absorbed by dedup-on-read; duplicate rows
+    * are bit-identical because the uuids are content-addressed.
     */
   def publishSensors(sensors: DataFrame): Unit = {
-    val incoming = sensors.dropDuplicates("uuid")
-    if (!exists(catalogDir)) {
-      stagedAppend(catalogDir)(p =>
-        incoming.write.mode(SaveMode.Overwrite).format(format).save(p))
-      return
-    }
-    val existing = readCatalog(catalogDir)
-    // one catalog-read job per publish: the anti-join materializes ONCE
-    // as an eager local checkpoint; the emptiness probe and the write
-    // both run off its blocks (previously each ran the catalog scan)
-    val novel = incoming
-      .join(existing.select("uuid"), Seq("uuid"), "left_anti")
-      .localCheckpoint(true)
-    try {
-      if (novel.isEmpty) return
-      stagedAppend(catalogDir)(p =>
-        novel.write.mode(SaveMode.Overwrite).format(format).save(p))
-      // bound the publish-file accumulation: each novel-sensor publish
-      // appends a file forever unless compacted — fold them back into
-      // one once the count crosses the threshold (read-safe at every
-      // step under dedup-on-read, see compactCatalog)
-      if (dataFiles(catalogDir).length > catalogCompactThreshold)
-        compactCatalog()
-    } finally graft.pipeline.PipelineCache.free(novel)
+    val known = catalog()
+    val incoming = sensors.select(Schemas.sensors.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*)
+    val novel = SensorStore.byUuid(incoming.collect().toSeq
+      .filterNot(r => known.rows.contains(r.getString(0)))).values.toSeq
+    if (novel.isEmpty) return
+    val added = stagedAppend(catalogDir)(p =>
+      frameOf(LocalRelation.fromExternalRows(SensorStore.catalogOutput, novel))
+        .write.mode(SaveMode.Overwrite).format(format).save(p))
+    advance(Set.empty, added.toSet, novel)
+    refreshViews()
+    // bound the publish-file accumulation: each novel-sensor publish
+    // appends a file forever unless compacted — fold them back into
+    // one once the count crosses the threshold (read-safe at every
+    // step under dedup-on-read, see compactCatalog)
+    if (catalogFiles().size > catalogCompactThreshold) compactCatalog()
   }
 
   /** Delete a committed data file, removing its checksum sidecar FIRST
@@ -343,27 +379,79 @@ final class SensorStore(
     ()
   }
 
-  private def dataFiles(
-      dir: String): Array[org.apache.hadoop.fs.Path] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) Array.empty
-    else fs.listStatus(p)
+  /** The catalog's data-file names: one listing, no Spark job. */
+  private def catalogFiles(): Set[String] =
+    try org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      .listStatus(new org.apache.hadoop.fs.Path(catalogDir)).iterator
       .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-      .map(_.getPath)
+      .map(_.getPath.getName).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
+  /** The catalog as of one listing: its deduped rows by uuid and the
+    * data files they were read from.
+    */
+  private final class Snapshot(
+      val files: Set[String], val rows: TreeMap[String, Row]) {
+    /** Built once per snapshot; every read takes a fresh instance. */
+    lazy val relation: LocalRelation = LocalRelation.fromExternalRows(
+      SensorStore.catalogOutput, rows.values.toSeq)
   }
 
-  /** The catalog, deduped on uuid at read time — the invariant that makes
-    * every publish/compaction intermediate state (old files, old + new,
-    * new only) read correctly. Always broadcastable by design, so the
-    * dedup aggregation is a footnote in any plan that joins it.
+  @volatile private var snapshot = new Snapshot(Set.empty, TreeMap.empty)
+  private val snapshotLock = new Object
+
+  /** The current snapshot: served as is when the listing matches its
+    * key, else rebuilt by one read-and-collect job.
     */
-  def sensors: DataFrame =
-    if (exists(catalogDir))
-      readCatalog(catalogDir).dropDuplicates("uuid")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.sensors)
+  private def catalog(): Snapshot = {
+    val s = snapshot
+    if (s.files == catalogFiles()) s
+    else snapshotLock.synchronized {
+      val files = catalogFiles()
+      if (snapshot.files != files) {
+        val rows = if (files.isEmpty) Seq.empty
+          else readCatalog(catalogDir).collect().toSeq
+        snapshot = new Snapshot(files, SensorStore.byUuid(rows))
+      }
+      snapshot
+    }
+  }
+
+  /** Move the snapshot past this store's own write, which removed the
+    * files `removed` and added the files `added` holding exactly `novel`:
+    * merged (existing row kept per uuid) only when the listing is the
+    * snapshot's files with that change applied — any other change is
+    * foreign, and the next read rebuilds.
+    */
+  private def advance(
+      removed: Set[String], added: Set[String], novel: Seq[Row]): Unit =
+    snapshotLock.synchronized {
+      val cur = snapshot
+      if (removed.subsetOf(cur.files) &&
+          catalogFiles() == cur.files -- removed ++ added)
+        snapshot = new Snapshot(cur.files -- removed ++ added,
+          SensorStore.byUuid(novel, cur.rows))
+    }
+
+  /** A local relation as a frame in one partition: plans over it (the
+    * matcher sort, the metrics aggregation, a label distinct) need no
+    * exchange and run as one job of one task.
+    */
+  private def frameOf(rel: LocalRelation): DataFrame =
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark, rel).coalesce(1)
+
+  /** The catalog, deduped on uuid — the invariant that makes every
+    * publish/compaction intermediate state (old files, old + new, new
+    * only) read correctly — served from the snapshot (see the class
+    * doc): exact as of this call's listing of the catalog directory.
+    * Building it lists the directory and starts no job unless the
+    * listing changed under the snapshot by a foreign write.
+    */
+  def sensors: DataFrame = frameOf(catalog().relation.newInstance())
+
+  /** One catalog row by uuid, from the snapshot ([[sensors]]' layout). */
+  def sensor(uuid: String): Option[Row] = catalog().rows.get(uuid)
 
   /** Compact the catalog's accumulated publish files into one. Ordered so
     * a concurrent reader is correct at every step under dedup-on-read:
@@ -392,12 +480,12 @@ final class SensorStore(
     * file is a superset under dedup-on-read).
     */
   def compactCatalog(): Unit = {
-    if (!exists(catalogDir)) return
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val dir = new org.apache.hadoop.fs.Path(catalogDir)
-    val old = dataFiles(catalogDir)
-    if (old.length <= 1) return
+    val oldNames = catalogFiles()
+    if (oldNames.size <= 1) return
+    val old = oldNames.toSeq.map(new org.apache.hadoop.fs.Path(dir, _))
     val stamp = s"${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(s"$catalogDir.compact.$stamp.tmp")
@@ -407,7 +495,7 @@ final class SensorStore(
       // EXPLICIT-path loads are not covered by ignoreMissingFiles (the
       // option tolerates files vanishing between listing and scan, not
       // missing paths at load time), so a racing compactor's delete
-      // between our dataFiles() and this read throws — and any thrown
+      // between our catalogFiles() and this read throws — and any thrown
       // rename must withdraw the partial move-in. Both cases land in
       // the catch: compaction is OPPORTUNISTIC maintenance, the
       // triggering append already succeeded, old files are intact, and
@@ -432,6 +520,8 @@ final class SensorStore(
         return
       }
       old.foreach(deleteDataFile(fs, _))
+      // same rows, new files: re-key the snapshot
+      advance(oldNames, moved.map(_.getName).toSet, Seq.empty)
       refreshViews()
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -705,4 +795,18 @@ object SensorStore {
     * beyond any realistic publish/compaction duration.
     */
   val DefaultStagingHorizonMs: Long = 24L * 3600 * 1000
+
+  /** The catalog snapshot's columns: [[Schemas.sensors]], nullable like
+    * every file-source read of it.
+    */
+  private val catalogOutput = DataTypeUtils.toAttributes(StructType(
+    Schemas.sensors.fields.map(_.copy(nullable = true))))
+
+  /** `rows` added by uuid to `into`, the first row kept per uuid. */
+  private def byUuid(
+      rows: Seq[Row],
+      into: TreeMap[String, Row] = TreeMap.empty): TreeMap[String, Row] =
+    rows.foldLeft(into) { (m, r) =>
+      if (m.contains(r.getString(0))) m else m.updated(r.getString(0), r)
+    }
 }

@@ -999,6 +999,102 @@ class GatewaySpec extends SparkSpec {
     assert(get("/metrics").statusCode() == 200) // back to normal
   }
 
+  /** Spark jobs by the job tags they started under (a request's tag is
+    * its `x-request-id`), and which of them have ended.
+    */
+  private final class TagJobs extends org.apache.spark.scheduler.SparkListener {
+    private val tags = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
+    private val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      tags.put(e.jobId, org.apache.spark.graft.JobTags.of(e.properties))
+    override def onJobEnd(
+        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      ended.add(e.jobId)
+    private def jobs(tag: String): Seq[Int] = {
+      org.apache.spark.graft.ListenerBarrier.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      tags.asScala.collect { case (id, ts) if ts.contains(tag) => id }.toSeq
+    }
+    def started(tag: String): Int = jobs(tag).size
+    def running(tag: String): Int = jobs(tag).count(id => !ended.contains(id))
+  }
+
+  private def withTagJobs[A](f: TagJobs => A): A = {
+    val l = new TagJobs
+    spark.sparkContext.addSparkListener(l)
+    try f(l) finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def requestId(r: HttpResponse[_]): String =
+    r.headers().firstValue("x-request-id").orElseThrow()
+
+  test("catalog routes run one Spark job per request") {
+    def enc(s: String) =
+      java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    val lines =
+      "snap_cpu,host=a,dc=eu usage=1 1704067200000000000\n" +
+        "snap_cpu,host=b,dc=us usage=2 1704067200000000000\n"
+    assert(post("/api/v2/write?bucket=db&org=do",
+      lines.getBytes(StandardCharsets.UTF_8), Map.empty).statusCode() == 204)
+    val routes = Seq(
+      "/series?selector=" + enc("""{dc="eu"}"""),
+      "/metrics",
+      "/api/v1/labels",
+      "/api/v1/series?match%5B%5D=" + enc("""{__name__=~"snap_.*"}"""))
+    withTagJobs { jobs =>
+      routes.foreach { route =>
+        val r = get(route)
+        assert(r.statusCode() == 200, route)
+        val n = jobs.started(requestId(r))
+        assert(n == 1, s"$route started $n Spark jobs")
+      }
+    }
+  }
+
+  test("a timed-out publish stops its Spark work and stores nothing") {
+    // every core busy: the publish's first job queues behind the
+    // blocker, so the 1 s watchdog fires while that job is active
+    val sc = spark.sparkContext
+    val blocker = new Thread(() => {
+      sc.setJobGroup("timeout-blocker", "cores held for a timeout test",
+        interruptOnCancel = true)
+      try sc.parallelize(1 to sc.defaultParallelism, sc.defaultParallelism)
+        .foreach(_ => Thread.sleep(8000))
+      catch { case _: Throwable => () }
+    })
+    val before = store.samples(SensorType.Float).count()
+    withTagJobs { jobs =>
+      blocker.start()
+      Thread.sleep(500)
+      val r = withProp("SENSAPP_HTTP_SERVER_TIMEOUT_SECONDS", "1") {
+        post("/api/v2/write?bucket=db&org=do",
+          "timeout_cpu usage=1 1704067200000000000\n"
+            .getBytes(StandardCharsets.UTF_8), Map.empty)
+      }
+      assert(r.statusCode() == 408)
+      val tag = requestId(r)
+      // the handler unwinds once its cancelled job fails — well before
+      // the blocker frees a core for it
+      val deadline = System.nanoTime() + 6000L * 1000 * 1000
+      while (gateway.liveExchangeLocks > 0 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(gateway.liveExchangeLocks == 0, "handler still running")
+      assert(blocker.isAlive, "the blocker ended first: nothing was cancelled")
+      assert(jobs.started(tag) >= 1)
+      assert(jobs.running(tag) == 0, s"jobs of $tag still running")
+      sc.cancelJobGroup("timeout-blocker")
+      blocker.join()
+    }
+    assert(store.samples(SensorType.Float).count() == before)
+    assert(!store.sensors.collect().exists(_.getString(1) == "timeout_cpu usage"))
+    // the gateway serves normally afterwards
+    assert(post("/api/v2/write?bucket=db&org=do",
+      "timeout_cpu usage=2 1704067200000000000\n"
+        .getBytes(StandardCharsets.UTF_8), Map.empty).statusCode() == 204)
+    assert(store.samples(SensorType.Float).count() == before + 1)
+  }
+
   test("saturated ingest queue sheds publishes with 503 + retry-after (T4)") {
     withProp("GRAFT_INGEST_QUEUE_LIMIT", "0") {
       // a dedicated gateway picks up the zero-permit queue at start()

@@ -862,6 +862,92 @@ class StoreSpec extends SparkSpec {
     assert(sensors.count() == 1 && samples.count() == 3 && ranged.count() == 2)
   }
 
+  private def catalogRow(u: String) =
+    Seq((u, s"name_$u", "Float")).toDF("uuid", "name", "type")
+      .withColumn("unit", lit(null).cast("struct<name:string,description:string>"))
+      .withColumn("labels", lit(null).cast("map<string,string>"))
+
+  /** `f`'s result and the Spark jobs started while it ran. */
+  private def jobsDuring[A](f: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBarrier.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      org.apache.spark.graft.ListenerBarrier.drain(sc)
+      (a, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("catalog snapshot: another store's publish on the same root is " +
+      "read by this store") {
+    val root = tempDir()
+    val first = new SensorStore(spark, root)
+    first.publishSensors(catalogRow("u1"))
+    assert(first.sensors.collect().map(_.getString(0)).toSeq == Seq("u1"))
+    // a second store stands in for another process writing the catalog
+    new SensorStore(spark, root).publishSensors(catalogRow("u2"))
+    val (got, jobs) = jobsDuring(first.sensors.collect().map(_.getString(0)))
+    assert(got.toSeq == Seq("u1", "u2"))
+    assert(jobs == 2, s"$jobs jobs: one rebuild, then the read")
+    assert(first.sensor("u2").map(_.getString(1)).contains("name_u2"))
+    // rebuilt once: the next read serves the snapshot
+    assert(jobsDuring(first.sensors.collect())._2 == 1)
+  }
+
+  test("catalog snapshot: compaction re-keys it — reads start no " +
+      "rebuild and return the same rows") {
+    val root = tempDir()
+    val store = new SensorStore(spark, root)
+    (1 to 4).foreach(i => store.publishSensors(catalogRow(s"u$i")))
+    val before = store.sensors.collect().map(_.toString).toSeq
+    store.compactCatalog()
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/sensors"))
+      .count(_.getPath.getName.endsWith(".parquet")) == 1)
+    val (sensors, building) = jobsDuring(store.sensors)
+    assert(building == 0L, s"$building jobs building the catalog read")
+    assert(jobsDuring(store.sensor("u3"))._2 == 0L)
+    assert(sensors.collect().map(_.toString).toSeq == before)
+  }
+
+  test("catalog snapshot: concurrent publishes of the same novel uuid " +
+      "read as one row per uuid") {
+    val store = new SensorStore(spark, tempDir())
+    store.publishSensors(catalogRow("u0"))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 to 1).map { _ =>
+      new Thread(() => {
+        try { start.await(); store.publishSensors(catalogRow("dup")) }
+        catch { case t: Throwable => errs.add(t) }
+      })
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    assert(errs.isEmpty, s"publish failed: ${errs.peek()}")
+    val uuids = store.sensors.collect().map(_.getString(0)).toSeq
+    assert(uuids == Seq("dup", "u0"), uuids)
+  }
+
+  test("sensor(uuid) agrees with sensors.filter") {
+    val store = new SensorStore(spark, tempDir())
+    assert(store.sensor("u1").isEmpty)
+    Seq("u2", "u1", "u3").foreach(u => store.publishSensors(catalogRow(u)))
+    Seq("u1", "u2", "u3", "absent").foreach { u =>
+      val filtered = store.sensors.filter(col("uuid") === u).collect().toSeq
+      assert(store.sensor(u).toSeq == filtered, u)
+    }
+  }
+
   test("windowed resample (batch mode) aggregates per tumbling window") {
     val df = Seq(
       ("s1", java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 1.0),
