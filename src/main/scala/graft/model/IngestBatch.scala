@@ -2,9 +2,10 @@ package graft.model
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.types.{MapType, StringType, StructType}
 
 /** The one ingestion unit (reference: src/datamodel/batch.rs:6-15): the
   * catalog rows of the series a request touches plus one sample frame per
@@ -21,6 +22,64 @@ final case class IngestBatch(
 }
 
 object IngestBatch {
+
+  /** A sample in driver memory: its series identity (name, type, unit
+    * name or null, labels or null), its timestamp in µs (null when the
+    * wire gave none) and its value as `sensorType`'s external Spark value.
+    */
+  final case class LocalSample(
+      name: String,
+      sensorType: SensorType,
+      unit: String,
+      labels: Map[String, String],
+      timestampUs: java.lang.Long,
+      value: Any)
+
+  /** Normalize samples already whole in driver memory (a request body):
+    * grouped by series identity, each series gets one uuid
+    * ([[Sensor.deriveUuid]], the derivation `sensor_uuid` runs), the
+    * catalog is deduplicated here, and each present type becomes one
+    * local frame — building the batch starts no Spark job. `samples` is
+    * consumed once and only each sample's id, timestamp and value kept.
+    */
+  def fromLocal(
+      spark: SparkSession, samples: IterableOnce[LocalSample]): IngestBatch = {
+    val uuids = scala.collection.mutable.HashMap.empty[
+      (String, SensorType, String, Map[String, String]), String]
+    val sensors = scala.collection.mutable.LinkedHashMap.empty[String, Row]
+    val byType = scala.collection.mutable.LinkedHashMap.empty[
+      SensorType, scala.collection.mutable.ArrayBuffer[Row]]
+    samples.iterator.foreach { s =>
+      val uuid = uuids.getOrElseUpdate(
+        (s.name, s.sensorType, s.unit, s.labels), {
+          val u = Sensor.deriveUuid(s.name, s.sensorType,
+            Option(s.unit).map(SensorUnit(_)),
+            Option(s.labels).map(_.toSeq).getOrElse(Nil))
+          sensors.getOrElseUpdate(u, Row(u, s.name, s.sensorType.displayName,
+            Option(s.unit).map(Row(_, null)).orNull, s.labels))
+          u
+        })
+      byType.getOrElseUpdate(s.sensorType,
+        scala.collection.mutable.ArrayBuffer.empty) +=
+        Row(uuid, s.timestampUs, s.value)
+    }
+    IngestBatch(local(spark, Schemas.sensors, sensors.values.toSeq),
+      byType.map { case (t, rows) =>
+        t -> local(spark, Schemas.samples(t), rows.toSeq) }.toMap)
+  }
+
+  /** Whether `df` lives in driver memory: its optimized plan is one local
+    * relation, so its rows and every projection or filter over them are
+    * evaluated on the driver, and a write of it needs no exchange.
+    */
+  def driverResident(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** `rows` as a local frame of `schema`, every column nullable. */
+  private def local(
+      spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(
+      schema.fields.map(_.copy(nullable = true))))
 
   /** Normalize sample rows, each carrying its series identity `(name,
     * type, unit_name, labels)` — type as its display name, unit and
@@ -89,8 +148,9 @@ object IngestBatch {
       .select(col("sensor_id"), col("timestamp_us"), col("value"))
 
   /** `rows` plus `uuid`, the content-addressed id of each row's series —
-    * the only place ingest derives it. A row without a name or type fails
-    * the job: it names no series, and its null uuid no catalog row.
+    * the only place a frame's ingest derives it ([[fromLocal]] calls the
+    * same [[Sensor.deriveUuid]] per series). A row without a name or type
+    * fails the job: it names no series, and its null uuid no catalog row.
     */
   private def identify(rows: DataFrame): DataFrame = rows
     .withColumn("unit_name", col("unit_name").cast(StringType))

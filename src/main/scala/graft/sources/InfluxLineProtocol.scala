@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
-import graft.model.SensorType
+import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, LongType}
+import graft.model.{IngestBatch, SensorType}
 
 /** InfluxDB line-protocol ingest (S4):
   * `measurement[,tag=v...] field=value[,field=value...] [timestamp]`.
@@ -16,9 +18,11 @@ import graft.model.SensorType
   *    (`t/f/true/false/T/F/...`), quoted string;
   *  - timestamps decoded at ns/us/ms/s precision to µs.
   *
-  * The parser itself runs distributed via `flatMap` over a `Dataset[String]`
-  * of lines — per-partition imperative logic is genuine here (a recursive
-  * descent grammar is not expressible as Column ops).
+  * [[parse]] runs distributed over a `Dataset[String]` of lines (queries,
+  * imports): a codegen'd columnar path for simple lines, the strict
+  * recursive-descent grammar via `flatMap` for the rest. The gateway's
+  * write route holds the whole body in driver memory and parses it there
+  * with the strict grammar ([[parseLocal]]); both give the same rows.
   */
 object InfluxLineProtocol {
 
@@ -203,6 +207,23 @@ object InfluxLineProtocol {
       when(vtype === "Boolean", lower(v).startsWith("t")).as("bool_value"))
   }
 
+  private type Parsed = (String, Map[String, String], Option[Long], String,
+    Option[Long], Option[Double], Option[String], Option[Boolean])
+
+  /** One line's rows in [[parse]]'s layout, by the strict grammar. */
+  private def parsedRows(
+      line: String, bucket: String, org: String,
+      toUs: Long => Long): Seq[Parsed] =
+    parseLine(line).map { f =>
+      val name = urlencode(f.measurement) + " " + urlencode(f.fieldKey)
+      val labels: Map[String, String] =
+        if (f.tags.isEmpty) Map.empty
+        else (Seq("influxdb_bucket" -> bucket, "influxdb_org" -> org)
+          ++ f.tags).toMap
+      (name, labels, f.timestamp.map(toUs), f.valueType,
+        f.longValue, f.doubleValue, f.stringValue, f.boolValue)
+    }
+
   /** Strict recursive-descent parse via `flatMap` — handles escapes,
     * quoted strings, u64 range checks, and raises on malformed lines
     * exactly like the reference handler.
@@ -214,18 +235,44 @@ object InfluxLineProtocol {
       precision: String): DataFrame = {
     import lines.sparkSession.implicits._
     val toUs = precisionToMicros(precision)
-    lines.flatMap { line =>
-      parseLine(line).map { f =>
-        val name = urlencode(f.measurement) + " " + urlencode(f.fieldKey)
-        val labels: Map[String, String] =
-          if (f.tags.isEmpty) Map.empty
-          else (Seq("influxdb_bucket" -> bucket, "influxdb_org" -> org)
-            ++ f.tags).toMap
-        (name, labels, f.timestamp.map(toUs), f.valueType,
-          f.longValue, f.doubleValue, f.stringValue, f.boolValue)
-      }
-    }.toDF("sensor_name", "labels", "timestamp_us", "type",
-      "long_value", "double_value", "string_value", "bool_value")
+    lines.flatMap(parsedRows(_, bucket, org, toUs)).toDF("sensor_name",
+      "labels", "timestamp_us", "type", "long_value", "double_value",
+      "string_value", "bool_value")
+  }
+
+  /** [[parse]] on the driver, for lines already in driver memory (a
+    * request body): every line goes through the strict grammar into the
+    * samples [[parse]]'s rows hold — no Spark job, and a malformed line
+    * throws its IllegalArgumentException on the consuming thread. Lazy:
+    * each line is parsed as the result is consumed. Numeric values are
+    * cast by Spark's own cast, as in [[toNumeric]].
+    */
+  def parseLocal(
+      lines: Iterator[String],
+      bucket: String,
+      org: String,
+      precision: String = "ns",
+      withNumeric: Boolean = false): Iterator[IngestBatch.LocalSample] = {
+    val toUs = precisionToMicros(precision)
+    def numeric(v: Any, from: DataType): (SensorType, Any) =
+      SensorType.Numeric -> (Cast(Literal(v, from), SensorType.Numeric.sparkType)
+        .eval() match {
+          case d: Decimal => d.toJavaBigDecimal
+          case _ => null
+        })
+    lines.flatMap(parsedRows(_, bucket, org, toUs)).map {
+      case (name, labels, ts, t, l, d, str, b) =>
+        val (st, v) = t match {
+          case "Integer" if withNumeric => numeric(l.get, LongType)
+          case "Float" if withNumeric => numeric(d.get, DoubleType)
+          case "Integer" => SensorType.Integer -> l.get
+          case "Float" => SensorType.Float -> d.get
+          case "String" => SensorType.Str -> str.get
+          case _ => SensorType.Boolean -> b.get
+        }
+        IngestBatch.LocalSample(name, st, null, labels,
+          ts.map(Long.box).orNull, v)
+    }
   }
 
   /** Numeric-mode projection (reference: src/ingestors/http/influxdb.rs:
@@ -271,19 +318,6 @@ object InfluxLineProtocol {
       withNumeric: Boolean = false): DataFrame = {
     val base = parseTyped(lines, bucket, org, precision)
     if (withNumeric) toNumeric(base) else base
-  }
-
-  /** The value types [[parse]] can report. */
-  val Types: Seq[SensorType] = Seq(SensorType.Integer, SensorType.Float,
-    SensorType.Str, SensorType.Boolean, SensorType.Numeric)
-
-  /** The value column of a type-`t` row of [[parse]]'s output. */
-  def value(t: SensorType): Column = t match {
-    case SensorType.Integer => col("long_value")
-    case SensorType.Str => col("string_value")
-    case SensorType.Boolean => col("bool_value")
-    case SensorType.Numeric => col("numeric_value")
-    case _ => col("double_value")
   }
 
   private def parseTyped(

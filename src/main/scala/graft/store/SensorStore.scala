@@ -120,7 +120,10 @@ final class SensorStore(
     } finally batch.release()
 
   /** Append samples of one type. `samples`: (sensor_id, timestamp_us,
-    * value), written in the canonical layout of [[Schemas.samples]].
+    * value), written in the canonical layout of [[Schemas.samples]],
+    * each file sorted by (sensor_id, timestamp_us): a
+    * [[IngestBatch.driverResident]] frame in one task, one file per
+    * month; any other hash-partitioned by (month, sensor_id).
     * Concurrent-appender safe: the write lands in a private staging dir
     * and the committed files rename in (see [[stagedAppend]]).
     */
@@ -137,7 +140,7 @@ final class SensorStore(
     * caller's batch content to be replay-deterministic, which Spark's
     * file sources guarantee (same offsets → same rows) and this write
     * path preserves (hash repartition + sort are deterministic for a
-    * fixed shuffle-partition count).
+    * fixed shuffle-partition count, and so is a single sorted task).
     */
   def publishSamples(
       t: SensorType, samples: DataFrame,
@@ -160,11 +163,19 @@ final class SensorStore(
           canonical.filter(!isnan(col("value")) &&
             abs(col("value")) =!= lit(Double.PositiveInfinity))
         else canonical
-      finite
-        .withColumn("month",
-          date_format(timestamp_micros(col("timestamp_us")), "yyyyMM"))
-        .repartition(col("month"), col("sensor_id"))
-        .sortWithinPartitions("sensor_id", "timestamp_us")
+      val months = finite.withColumn("month",
+        date_format(timestamp_micros(col("timestamp_us")), "yyyyMM"))
+      // a driver-resident frame (a request body, bounded by the decoded
+      // body cap) is written by one task without an exchange. Measured on
+      // 4 cores, Influx bodies over 1,000 series: a 153k-row body commits
+      // in 1.7-2.0 s so (2.1-2.5 s hash-partitioned), a 768k-row body in
+      // 8.7-9.9 s (8.7-8.8 s)
+      val spread =
+        if (IngestBatch.driverResident(samples)) months.coalesce(1)
+        else months.repartition(col("month"), col("sensor_id"))
+      // led by `month`, the order the partitioned write requires: a sort
+      // not led by it is dropped for the write's own sort on `month`
+      spread.sortWithinPartitions("month", "sensor_id", "timestamp_us")
         .write
         .mode(SaveMode.Overwrite)
         .partitionBy("month")

@@ -223,7 +223,8 @@ object StreamingIngest {
   }
 
   /** Column names of [[graft.prometheus.PrometheusRemote.writeRequestRows]]'
-    * tuples, shared by the HTTP endpoint and [[remoteWriteStream]].
+    * tuples in [[remoteWriteStream]]'s frames (the HTTP endpoint builds
+    * its batch from the same tuples on the driver).
     */
   val RemoteWriteColumns: Seq[String] =
     Seq("name", "labels", "unit_name", "timestamp_us", "value")

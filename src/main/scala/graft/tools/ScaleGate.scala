@@ -52,6 +52,35 @@ object ScaleGate {
     } finally src.close()
   }
 
+  /** A JSON string literal's body, escapes included (unrolled, so a long
+    * reason costs no regex recursion).
+    */
+  private val Str = """"([^"\\]*+(?:\\.[^"\\]*+)*+)""""
+  private val ExemptPair = s"""\\s*,?\\s*$Str\\s*:\\s*$Str""".r
+
+  private def unesc(s: String): String =
+    """\\(.)""".r.replaceAllIn(s,
+      m => scala.util.matching.Regex.quoteReplacement(m.group(1)))
+
+  /** The `exempt` map of the manifest at `path` (empty without one), its
+    * keys and reasons unescaped: written back escaped once, a reason
+    * reads the same on every regeneration.
+    */
+  def readExempt(path: String): Map[String, String] = {
+    val f = new java.io.File(path)
+    if (!f.isFile) Map.empty
+    else {
+      val text = new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      """"exempt"\s*:\s*\{""".r.findFirstMatchIn(text).toSeq
+        .flatMap(m => Iterator.unfold(m.end) { i =>
+          ExemptPair.findPrefixMatchOf(text.substring(i)).map(p =>
+            (unesc(p.group(1)) -> unesc(p.group(2)), i + p.end))
+        })
+        .toMap
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: ScaleGate <small.jsonl> <big.jsonl> <outManifest> " +
@@ -64,19 +93,7 @@ object ScaleGate {
     val floorB = 32L * 1048576
 
     // preserve hand-written exemptions across regenerations
-    val prevExempt: Map[String, String] = {
-      val f = new java.io.File(outPath)
-      if (!f.isFile) Map.empty
-      else {
-        val text = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        """"exempt"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(text)
-          .map(_.group(1)).toSeq
-          .flatMap(body => """"([^"]+)"\s*:\s*"([^"]+)"""".r
-            .findAllMatchIn(body).map(m => m.group(1) -> m.group(2)))
-          .toMap
-      }
-    }
+    val prevExempt = readExempt(outPath)
 
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val names = (small.keySet ++ big.keySet ++ smallErr ++ bigErr).toSeq.sorted

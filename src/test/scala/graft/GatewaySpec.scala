@@ -388,27 +388,9 @@ class GatewaySpec extends SparkSpec {
 
   test("Prometheus remote write → remote read roundtrip (SAMPLES)") {
     import PrometheusRemote._
-    val wr = WriteRequest(Seq(TimeSeries(
-      Seq(Label("__name__", "http_requests"), Label("job", "api")),
-      Seq(Sample(1.0, 1704067200000L), Sample(2.0, 1704067260000L)))))
-    // encode WriteRequest with the writer (field 1 = timeseries)
-    val w = new ProtoWriter
-    wr.timeseries.foreach { ts =>
-      val tw = new ProtoWriter
-      ts.labels.foreach { l =>
-        val lw = new ProtoWriter
-        lw.string(1, l.name); lw.string(2, l.value)
-        tw.message(1, lw)
-      }
-      ts.samples.foreach { s =>
-        val sw = new ProtoWriter
-        sw.double(1, s.value); sw.int64(2, s.timestampMs)
-        tw.message(2, sw)
-      }
-      w.message(1, tw)
-    }
-    val rw = post("/api/v1/prometheus_remote_write",
-      snappyCompressLiteral(w.result()), Map.empty)
+    val rw = post("/api/v1/prometheus_remote_write", RemoteWriteBodies(Seq(
+      Seq("__name__" -> "http_requests", "job" -> "api") ->
+        Seq(1.0 -> 1704067200000L, 2.0 -> 1704067260000L))), Map.empty)
     assert(rw.statusCode() == 204)
 
     // read it back: Query{start=1, end=2, matchers=[{EQ,__name__,...}]}
@@ -1052,6 +1034,77 @@ class GatewaySpec extends SparkSpec {
     }
   }
 
+  test("Influx and remote writes run a catalog job only for novel series, " +
+    "plus one job per present type") {
+    // a fresh store: no catalog compaction joins the counted jobs
+    val jobsGateway = new Gateway(spark,
+      new SensorStore(spark, graft.TempDirs.createPath("graft_gateway_jobs")),
+      "jobs-gateway")
+    val jobsPort = jobsGateway.start(0)
+    try withTagJobs { jobs =>
+      def jobsOf(path: String, body: Array[Byte]): Int = {
+        val r = client.send(HttpRequest.newBuilder(
+            new URI(s"http://127.0.0.1:$jobsPort$path"))
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 204, s"$path: ${r.body()}")
+        jobs.started(requestId(r))
+      }
+      val influx = "/api/v2/write?bucket=jb&org=jo"
+      val floats = ("jobs_cpu,host=a usage=1 1704067200000000000\n" +
+        "jobs_cpu,host=b usage=2 1704067260000000000\n")
+        .getBytes(StandardCharsets.UTF_8)
+      assert(jobsOf(influx, floats) == 2, "novel series: catalog + samples")
+      assert(jobsOf(influx, floats) == 1, "known series: samples only")
+      val mixed = "jobs_mix f=1.5,i=2i,b=true,s=\"x\" 1704067200000000000\n"
+        .getBytes(StandardCharsets.UTF_8)
+      assert(jobsOf(influx, mixed) == 5, "catalog + one per type")
+      val rw = "/api/v1/prometheus_remote_write"
+      val body = RemoteWriteBodies(Seq(
+        Seq("__name__" -> "jobs_rw", "job" -> "a") ->
+          Seq(1.0 -> 1704067200000L, 2.0 -> 1704067260000L),
+        Seq("__name__" -> "jobs_rw", "job" -> "b") -> Seq(3.0 -> 1704067200000L)))
+      assert(jobsOf(rw, body) == 2, "novel series: catalog + samples")
+      assert(jobsOf(rw, body) == 1, "known series: samples only")
+    } finally jobsGateway.stop()
+  }
+
+  test("an Influx body with one malformed line answers 400 and stores nothing") {
+    val before = store.samples(SensorType.Float).count()
+    val r = post("/api/v2/write?bucket=db&org=do",
+      ("bad_cpu usage=1 1704067200000000000\n" +
+        "bad_cpu usage= 1704067260000000000\n").getBytes(StandardCharsets.UTF_8),
+      Map.empty)
+    assert(r.statusCode() == 400, new String(r.body(), StandardCharsets.UTF_8))
+    assert(store.samples(SensorType.Float).count() == before)
+    assert(!store.sensors.collect().exists(_.getString(1) == "bad_cpu usage"))
+  }
+
+  test("write routes log decode, parse and commit phases within the " +
+    "request's us") {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val prev = gateway.logSink
+    gateway.logSink = lines.add(_)
+    try {
+      assert(post("/api/v2/write?bucket=db&org=do", BodyCodec.gzip(
+          "phase_cpu usage=1 1704067200000000000\n"),
+        Map("content-encoding" -> "gzip")).statusCode() == 204)
+      assert(post("/api/v1/prometheus_remote_write", RemoteWriteBodies(Seq(
+          Seq("__name__" -> "phase_rw") -> Seq(1.0 -> 1704067200000L))),
+        Map.empty).statusCode() == 204)
+      val Phased = (""".*"path":"([^"]*)","status":204,"us":(\d+),""" +
+        """"decode_us":(\d+),"parse_us":(\d+),"commit_us":(\d+)\}""").r
+      import scala.jdk.CollectionConverters._
+      val seen = lines.asScala.toSeq.collect {
+        case Phased(path, us, d, p, c) =>
+          assert(d.toLong + p.toLong + c.toLong <= us.toLong, path)
+          path
+      }
+      assert(seen.toSet ==
+        Set("/api/v2/write", "/api/v1/prometheus_remote_write"), lines)
+    } finally gateway.logSink = prev
+  }
+
   test("a timed-out publish stops its Spark work and stores nothing") {
     // every core busy: the publish's first job queues behind the
     // blocker, so the 1 s watchdog fires while that job is active
@@ -1093,6 +1146,31 @@ class GatewaySpec extends SparkSpec {
       "timeout_cpu usage=2 1704067200000000000\n"
         .getBytes(StandardCharsets.UTF_8), Map.empty).statusCode() == 204)
     assert(store.samples(SensorType.Float).count() == before + 1)
+  }
+
+  test("a timed-out Influx write stops parsing its body") {
+    // ~770k lines: parsing them on the driver takes seconds, far past the
+    // 1 s timeout, and no Spark job runs for the 408 to cancel
+    val sb = new java.lang.StringBuilder
+    for (i <- 0 until 770000)
+      sb.append("abandon_cpu,host=h").append(i % 100).append(" usage=")
+        .append(i).append(' ').append(1704067200000000000L + i * 1000000000L)
+        .append('\n')
+    val gz = BodyCodec.gzip(sb.toString)
+    val before = store.samples(SensorType.Float).count()
+    val r = withProp("SENSAPP_HTTP_SERVER_TIMEOUT_SECONDS", "1") {
+      post("/api/v2/write?bucket=db&org=do", gz,
+        Map("content-encoding" -> "gzip"))
+    }
+    assert(r.statusCode() == 408)
+    val t408 = System.nanoTime()
+    while (gateway.liveExchangeLocks > 0 &&
+        System.nanoTime() - t408 < 10000L * 1000 * 1000)
+      Thread.sleep(20)
+    val unwindMs = (System.nanoTime() - t408) / 1000000
+    assert(unwindMs < 1000, s"handler ran $unwindMs ms past its 408")
+    assert(store.samples(SensorType.Float).count() == before)
+    assert(!store.sensors.collect().exists(_.getString(1) == "abandon_cpu usage"))
   }
 
   test("saturated ingest queue sheds publishes with 503 + retry-after (T4)") {

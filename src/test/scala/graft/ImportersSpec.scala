@@ -307,12 +307,13 @@ class ImportersSpec extends SparkSpec {
     }
   }
 
-  test("Influx randomized differential: parse() == strict parseLine on 300 lines") {
-    // seeded generator spanning the grammar: escapes, quoted strings,
-    // duplicate/reserved tag keys, every field type, all timestamp signs.
-    // The oracle is parseLine itself, so this pins the fast-path dispatch
-    // (and the LAST_WIN map semantics) against the strict grammar.
-    val rnd = new scala.util.Random(20260812L)
+  /** A seeded generator of lines spanning the grammar: escapes, quoted
+    * strings, duplicate/reserved tag keys, every field type, all
+    * timestamp signs; positive timestamps are `ts0` plus up to 10^6.
+    */
+  private def influxLines(
+      seed: Long, n: Int, ts0: Long = 1700000000000000000L): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
     val measurements = Seq("m", "m.sub_1", "tilde~ok", """weird\ measure""",
       """comma\,m""", "CPU")
     val tagKeys = Seq("a", "b", "host", "influxdb_bucket", """tag\,key""")
@@ -338,13 +339,19 @@ class ImportersSpec extends SparkSpec {
       val fields = fks.map(k => s"$k=${fieldVal()}")
       val ts = rnd.nextInt(3) match {
         case 0 => ""
-        case 1 => s" ${1700000000000000000L + rnd.nextInt(1000000)}"
+        case 1 => s" ${ts0 + rnd.nextInt(1000000)}"
         case 2 => s" -${rnd.nextInt(1000000)}"
       }
       (Seq(m + tags.map("," + _).mkString) ++ Seq(fields.mkString(",")))
         .mkString(" ") + ts
     }
-    val lines = Seq.fill(300)(line())
+    Seq.fill(n)(line())
+  }
+
+  test("Influx randomized differential: parse() == strict parseLine on 300 lines") {
+    // The oracle is parseLine itself, so this pins the fast-path dispatch
+    // (and the LAST_WIN map semantics) against the strict grammar.
+    val lines = influxLines(20260812L, 300)
     val got = InfluxLineProtocol.parse(lines.toDS(), "b", "o", "ns")
       .select("sensor_name", "labels", "timestamp_us", "type",
         "long_value", "double_value", "string_value", "bool_value")
@@ -399,6 +406,51 @@ class ImportersSpec extends SparkSpec {
         f.stringValue: Option[Any], f.boolValue: Option[Any])
     }.toSet
     assert(got == expected)
+  }
+
+  test("Influx driver-side parse (parseLocal) == distributed parse() " +
+    "at every precision, plain and numeric") {
+    // the randomized corpus plus comments, blank lines, u64/i64 bounds,
+    // reserved and duplicate tag keys, escaped quotes in strings
+    val fixed = Seq(
+      "# a comment", "", "   ",
+      """mem free=42i,total=100u,ok=t,name="srv 1"""",
+      """weird\ measure,tag\,key=va\=lue f=1.0""",
+      """str s="a \"quoted\" value",n=1e-3 42""",
+      "m f=9223372036854775807u", "m g=123456789012345678u",
+      "m f=9223372036854775807i,g=-9223372036854775808i",
+      "m1,a=1,a=2 f=1", "m2,influxdb_bucket=x,c=3 f=2",
+      "m3,influxdb_org=y,influxdb_bucket=z f=3",
+      "m x=2i,y=3.5,z=TRUE,w=f 1700000000", "tilde~ok f=0.0 -1")
+    val ts0 = Map("ns" -> 1700000000000000000L, "us" -> 1700000000000000L,
+      "ms" -> 1700000000000L, "s" -> 1700000000L)
+    def bag[A](xs: Seq[A]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+    for (p <- Seq("ns", "us", "ms", "s"); numeric <- Seq(false, true)) {
+      val lines = fixed ++ influxLines(7L, 200, ts0(p))
+      val local = InfluxLineProtocol.parseLocal(
+        lines.iterator, "b", "o", p, numeric).map(s => (s.name, s.labels,
+          Option(s.timestampUs).map(_.longValue), s.sensorType.displayName,
+          s.value, s.unit)).toSeq
+      val dist = InfluxLineProtocol.parse(lines.toDS(), "b", "o", p, numeric)
+        .collect().toSeq.map { r =>
+          val t = r.getAs[String]("type")
+          (r.getAs[String]("sensor_name"), r.getAs[Map[String, String]]("labels"),
+            Option(r.getAs[Any]("timestamp_us")), t, r.getAs[Any](t match {
+              case "Integer" => "long_value"
+              case "Float" => "double_value"
+              case "String" => "string_value"
+              case "Boolean" => "bool_value"
+              case _ => "numeric_value"
+            }), null)
+        }
+      assert(local.nonEmpty && bag(local) == bag(dist), s"$p/$numeric")
+    }
+    // past the u64-to-i64 bound both reject the line
+    val over = Seq("m f=1", "m f=9223372036854775808u")
+    intercept[IllegalArgumentException](InfluxLineProtocol.parseLocal(
+      over.iterator, "b", "o").toSeq)
+    intercept[Exception](
+      InfluxLineProtocol.parse(over.toDS(), "b", "o").collect())
   }
 
   test("influx parse survives sessions without LAST_WIN map-key policy") {

@@ -6,7 +6,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.http.Gateway
 import graft.model.{Schemas, Sensor, SensorType, SensorUnit}
-import graft.prometheus.PrometheusRemote
 import graft.sources.ArrowIO
 import graft.store.SensorStore
 import graft.streaming.StreamingIngest
@@ -81,27 +80,6 @@ class IngestIdentitySpec extends SparkSpec {
     assert(sampleIds.subsetOf(uuids.toSet),
       s"samples without a catalog row: ${sampleIds -- uuids}")
     rows
-  }
-
-  private def remoteWriteBody(
-      series: Seq[(Seq[(String, String)], Seq[(Double, Long)])]): Array[Byte] = {
-    import PrometheusRemote.ProtoWriter
-    val w = new ProtoWriter
-    series.foreach { case (labels, samples) =>
-      val tw = new ProtoWriter
-      labels.foreach { case (k, v) =>
-        val lw = new ProtoWriter
-        lw.string(1, k); lw.string(2, v)
-        tw.message(1, lw)
-      }
-      samples.foreach { case (v, ms) =>
-        val sw = new ProtoWriter
-        sw.double(1, v); sw.int64(2, ms)
-        tw.message(2, sw)
-      }
-      w.message(1, tw)
-    }
-    PrometheusRemote.snappyCompressLiteral(w.result())
   }
 
   private val csv = Map("content-type" -> "text/csv")
@@ -217,7 +195,7 @@ class IngestIdentitySpec extends SparkSpec {
 
   test("remote write with a unit") {
     withEdge { e =>
-      e.ok("/api/v1/prometheus_remote_write", remoteWriteBody(Seq(
+      e.ok("/api/v1/prometheus_remote_write", RemoteWriteBodies(Seq(
         latency -> Seq((0.5, 1704067200000L), (0.7, 1704067260000L)),
         Seq("__name__" -> "up") -> Seq((1.0, 1704067200000L)))))
       val rows = assertIdentity(e.root, e.store)
@@ -228,7 +206,7 @@ class IngestIdentitySpec extends SparkSpec {
 
   test("remote-write stream") {
     val src = graft.TempDirs.create("graft_ingest_identity_rw")
-    java.nio.file.Files.write(src.resolve("frame.bin"), remoteWriteBody(Seq(
+    java.nio.file.Files.write(src.resolve("frame.bin"), RemoteWriteBodies(Seq(
       latency -> Seq((0.5, 1704067200000L)),
       Seq("__name__" -> "up") -> Seq((1.0, 1704067200000L)))))
     val root = graft.TempDirs.createPath("graft_ingest_identity")
@@ -243,7 +221,7 @@ class IngestIdentitySpec extends SparkSpec {
 
   test("resample derives series from the catalog row of their source") {
     withEdge { e =>
-      e.ok("/api/v1/prometheus_remote_write", remoteWriteBody(Seq(
+      e.ok("/api/v1/prometheus_remote_write", RemoteWriteBodies(Seq(
         latency -> Seq((0.5, 1704067800000L), (0.7, 1704068400000L)))))
       val r = e.get("/api/v1/admin/resample?window=1+hour")
       assert(r.statusCode() == 200, r.body())

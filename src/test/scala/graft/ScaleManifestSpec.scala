@@ -62,4 +62,35 @@ class ScaleManifestSpec extends AnyFunSuite {
         s"exemption for ${m.group(1)} needs a substantive reason")
     }
   }
+
+  test("ScaleGate regenerations are byte-identical: exemption reasons " +
+    "keep their backslashes and quotes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_scale_gate")
+    def write(name: String, text: String): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p, text.getBytes("UTF-8"))
+      p.toString
+    }
+    def probe(q: String, bytes: Long) =
+      s"""{"query":"$q","sec":1.0,"rows":10,"shuffle_read_b":$bytes,""" +
+        """"shuffle_write_b":0}"""
+    val small = write("small.jsonl", Seq(probe("q_flagged", 1000000L),
+      probe("q_linear", 1000L)).mkString("\n"))
+    val big = write("big.jsonl", Seq(probe("q_flagged", 1000000000L),
+      probe("q_linear", 10000L)).mkString("\n"))
+    val reasons = Map(
+      "q_flagged" -> """output-bound growth: a \ backslash, a "quoted" word, a } brace""",
+      "q_standing" -> """STANDING CLASS: C:\probe\m100 and "both" scales""")
+    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
+    val manifest = write("manifest.json", """{"exempt":{""" + reasons.toSeq
+      .map { case (k, v) => s""""$k":"${esc(v)}"""" }.mkString(",") + "}}\n")
+    def regenerate(): Array[Byte] = {
+      graft.tools.ScaleGate.main(Array(small, big, manifest))
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(manifest))
+    }
+    val first = regenerate()
+    assert(graft.tools.ScaleGate.readExempt(manifest) == reasons)
+    assert(regenerate().sameElements(first))
+    graft.TempDirs.deleteRecursively(dir.toFile)
+  }
 }

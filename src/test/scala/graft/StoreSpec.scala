@@ -1,6 +1,6 @@
 package graft
 
-import graft.model.SensorType
+import graft.model.{IngestBatch, SensorType}
 import graft.store.SensorStore
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions._
@@ -49,6 +49,70 @@ class StoreSpec extends SparkSpec {
       .toDF("sensor_id", "timestamp_us", "value")
     store.publishSamples(SensorType.Integer, ints)
     assert(store.samples(SensorType.Integer).count() == 1)
+  }
+
+  test("a driver-built batch lands one file per month, each sorted by " +
+    "(sensor_id, timestamp_us), non-finite floats dropped") {
+    val root = tempDir()
+    val store = new SensorStore(spark, root)
+    val jan31 = 1706659200000000L // 2024-01-31T00:00:00Z
+    val feb1 = 1706745600000000L // 2024-02-01T00:00:00Z
+    // three series, out of order, across the month boundary
+    val rows = Seq(
+      ("b", feb1 + 2, 2.0), ("a", jan31 + 5, 1.0), ("c", feb1, Double.NaN),
+      ("a", feb1 + 1, 3.0), ("b", jan31, 4.0),
+      ("a", jan31 + 1, Double.PositiveInfinity), ("c", jan31 + 3, 5.0),
+      ("b", jan31 + 2, Double.NegativeInfinity), ("a", jan31 + 3, 6.0),
+      ("c", feb1 + 7, 7.0))
+      .map { case (n, ts, v) => IngestBatch.LocalSample(
+        n, SensorType.Float, null, Map("k" -> n), ts, v) }
+    val batch = IngestBatch.fromLocal(spark, rows)
+    assert(IngestBatch.driverResident(batch.samples(SensorType.Float)))
+    store.publish(batch)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    def list(dir: String) =
+      fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+    val months = list(s"$root/values_float").filter(_.isDirectory)
+      .map(_.getPath.getName)
+    assert(months.toSet == Set("month=202401", "month=202402"))
+    months.foreach { m =>
+      val files = list(s"$root/values_float/$m")
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      assert(files.length == 1, m)
+      val got = spark.read.parquet(files.head.getPath.toString)
+        .select("sensor_id", "timestamp_us").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(got == got.sorted, m)
+    }
+    assert(store.samples(SensorType.Float).collect().map(_.getDouble(2))
+      .sorted.toSeq == Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0))
+    assert(store.sensors.count() == 3)
+  }
+
+  test("a distributed sample frame is hash-partitioned, each file still " +
+    "sorted by (sensor_id, timestamp_us)") {
+    val root = tempDir()
+    val store = new SensorStore(spark, root)
+    val n = 50000
+    val feb1 = 1706745600000000L // 2024-02-01T00:00:00Z
+    // descending timestamps over 500 interleaved series, across a month
+    // boundary: any file in input order is unsorted
+    val samples = spark.range(n).select(
+      concat(lit("s"), (col("id") % 500).cast("string")).as("sensor_id"),
+      (lit(feb1 - 3600000000L) + (lit(n) - col("id")) * 100000L)
+        .as("timestamp_us"),
+      col("id").cast("double").as("value"))
+    assert(!IngestBatch.driverResident(samples))
+    store.publishSamples(SensorType.Float, samples)
+    val files = spark.read.parquet(s"$root/values_float").inputFiles.toSeq
+    assert(files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.size == 2)
+    files.foreach { f =>
+      val got = spark.read.parquet(f).select("sensor_id", "timestamp_us")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(got == got.sorted, f)
+    }
+    assert(store.samples(SensorType.Float).count() == n)
   }
 
   test("vacuum sweeps crashed-publish staging dirs past the horizon") {
