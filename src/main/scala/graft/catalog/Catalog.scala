@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.model.SensorType
 import graft.operators.{LabelMatcher, Matchers}
@@ -31,6 +31,37 @@ object Catalog {
       df = df.filter(col("type") === t.displayName))
     df
   }
+
+  /** [[filterMetrics]] as a predicate over a summary row's name and type,
+    * for summary rows already on the driver. The substring test folds the
+    * name's case with Spark's own `lower` (evaluated here, no job), so
+    * non-ASCII names fold exactly as in the plan; a bad regex throws here.
+    */
+  def metricsFilter(
+      nameSubstring: Option[String] = None,
+      nameRegex: Option[String] = None,
+      sensorType: Option[String] = None): (String, String) => Boolean = {
+    val needle = nameSubstring.map(_.toLowerCase)
+    val re = nameRegex.map(graft.functions.LinearRegex.compile)
+    val typeName = sensorType.flatMap(SensorType.fromString).map(_.displayName)
+    (name, t) =>
+      needle.forall(n => name != null && sparkLower(name).contains(n)) &&
+        re.forall(r => name != null && r.find(name)) &&
+        typeName.forall(_ == t)
+  }
+
+  private def sparkLower(s: String): String =
+    org.apache.spark.sql.catalyst.expressions.Lower(
+      org.apache.spark.sql.catalyst.expressions.Literal(s)).eval().toString
+
+  /** Label names of catalog rows ([[graft.model.Schemas.sensors]]
+    * layout), sorted, with `__name__` whenever there is a row: the
+    * `/api/v1/labels` answer.
+    */
+  def labelNames(rows: Seq[Row]): Seq[String] =
+    if (rows.isEmpty) Nil
+    else (LabelMatcher.NameLabel +: rows.flatMap(r =>
+      Option(r.getMap[String, String](4)).toSeq.flatMap(_.keys))).distinct.sorted
 
   /** Parse a `/series?selector=` value: either `{label="v",...}` or
     * `metric{label="v"}` — the metric name is ignored for series filtering
@@ -91,10 +122,11 @@ object Catalog {
   }
 
   /** One DCAT dataset per metric (the `/metrics` catalog entries;
-    * reference: src/ingestors/http/crud.rs:259-323).
+    * reference: src/ingestors/http/crud.rs:259-323), beside the metric's
+    * name and type, which the `/metrics` filters read.
     */
   def metricsDatasets(metrics: DataFrame): DataFrame =
-    metrics.select(col("name"), to_json(struct(
+    metrics.select(col("name"), col("type"), to_json(struct(
       lit("dcat:Dataset").as("@type"),
       col("name").as("@id"),
       concat(lit("metric:"), col("name")).as("dct:identifier"),

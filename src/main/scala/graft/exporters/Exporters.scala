@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Format exporters (S7/S8/S10). All are lazy DataFrame transforms producing
   * one output line per row; callers `.collect` only at the HTTP edge.
@@ -55,7 +56,19 @@ object Exporters {
       .select(explode_outer(map_keys(coalesce(col("labels"),
         map().cast(MapType(StringType, StringType))))).as("k"))
       .filter(col("k").isNotNull)
-      .distinct().orderBy("k").as[String].collect().toSeq
+      .distinct().as[String].collect().toSeq
+    toCsvMulti(long, keys)
+  }
+
+  /** [[toCsvMulti]] with the label keys known up front (e.g. those of the
+    * series a matcher selected, already on the driver): no job runs to
+    * find them. They are deduplicated and sorted here in the order
+    * Spark sorts strings (UTF-8 bytes).
+    */
+  def toCsvMulti(long: DataFrame, labelKeys: Seq[String]): (String, Dataset[String]) = {
+    import long.sparkSession.implicits._
+    val keys = labelKeys.distinct.sortWith((a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
     val header = (Seq("timestamp", "sensor_id", "sensor_name", "value", "type")
       ++ keys).mkString(",")
     val labelCols = keys.map(k =>

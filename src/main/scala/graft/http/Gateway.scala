@@ -3,9 +3,9 @@ package graft.http
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
 
 import graft.catalog.Catalog
 import graft.exporters.Exporters
@@ -22,8 +22,9 @@ import graft.store.{CommitGate, SensorStore}
   * catalog (`/metrics`, `/series`), series data, publish (CSV/SenML),
   * InfluxDB write, Prometheus remote write/read, simple PromQL, vacuum,
   * health. Built on the JDK's com.sun.net.httpserver — the HTTP edge is
-  * deliberately thin: every handler composes a DataFrame plan and collects
-  * only the response payload.
+  * deliberately thin: a data handler composes a DataFrame plan and
+  * collects only the response payload; catalog questions are answered
+  * from the store's catalog snapshot on the driver.
   */
 final class Gateway(
     spark: SparkSession,
@@ -93,9 +94,13 @@ final class Gateway(
   }
 
   /** The phases timed on this handler thread for its request's log line,
-    * latest first: the write routes time `decode_us` (body read and
-    * decompression), `parse_us` (parse into an ingest batch) and
-    * `commit_us` (the store commit), all within the request's `us`.
+    * latest first, all within the request's `us`: the write routes time
+    * `decode_us` (body read and decompression), `parse_us` (parse into an
+    * ingest batch) and `commit_us` (the store commit); the catalog,
+    * discovery, PromQL and remote-read routes time `match_us` (reading
+    * the catalog snapshot and selecting its rows, or building the query
+    * plan over them) and `serialize_us` (running the sample reads and
+    * writing the response).
     */
   private val phaseMicros = ThreadLocal.withInitial[List[(String, Long)]](() => Nil)
 
@@ -594,31 +599,38 @@ final class Gateway(
 
   // ------------------------------------------------------------- catalog
 
+  // Catalog and discovery answers come from the store's catalog snapshot
+  // on the driver: the whole-catalog views are built once per snapshot,
+  // and matchers select the snapshot's rows per request — no Spark job
+  // while the catalog is unchanged.
+
   private def handleMetrics(x: HttpExchange, p: Map[String, String]): Unit = {
-    val filtered = Catalog.filterMetrics(
-      SensorOps.metricsSummary(store.sensors),
-      p.get("name_contains"), p.get("name_regex"), p.get("type"))
-    val datasets = Catalog.metricsDatasets(filtered)
-      .select("dataset").collect().map(_.getString(0)).toSeq
-    respond(x, 200, "application/json", Catalog.catalogDocument(
-      datasets, "/metrics", s"$name Metrics Catalog",
-      "Aggregated metrics across all time series"))
+    val datasets = phase("match_us") {
+      val keep = Catalog.metricsFilter(
+        p.get("name_contains"), p.get("name_regex"), p.get("type"))
+      store.catalogSnapshot.metrics
+        .collect { case m if keep(m.name, m.sensorType) => m.dataset }
+    }
+    phase("serialize_us")(respond(x, 200, "application/json",
+      Catalog.catalogDocument(datasets, "/metrics", s"$name Metrics Catalog",
+        "Aggregated metrics across all time series")))
   }
 
   private def handleSeries(x: HttpExchange, p: Map[String, String]): Unit = {
     val path = x.getRequestURI.getPath
     if (path == "/series" || path == "/series/") {
-      // ordered by uuid either way; sensorsByLabels sorts already
-      val sensors = p.get("selector") match {
-        case Some(sel) =>
-          Matchers.sensorsByLabels(store.sensors, Catalog.parseSelector(sel))
-        case None => store.sensors.orderBy("uuid")
+      val datasets = phase("match_us") {
+        val snap = store.catalogSnapshot
+        // ordered by uuid either way: the snapshot's rows are
+        val rows = p.get("selector") match {
+          case Some(sel) => Matchers.selectRows(snap.rows, Catalog.parseSelector(sel))
+          case None => snap.rows
+        }
+        rows.map(r => snap.seriesDataset(r.getString(0)))
       }
-      val datasets = Catalog.seriesDatasets(sensors)
-        .select("dataset").collect().map(_.getString(0)).toSeq
-      respond(x, 200, "application/json", Catalog.catalogDocument(
-        datasets, "/series", s"$name Series Catalog",
-        "All time series datasets"))
+      phase("serialize_us")(respond(x, 200, "application/json",
+        Catalog.catalogDocument(datasets, "/series", s"$name Series Catalog",
+          "All time series datasets")))
     } else handleSeriesData(x, p, path.stripPrefix("/series/"))
   }
 
@@ -936,22 +948,27 @@ final class Gateway(
           throw new IllegalArgumentException(s"bad matcher type: $other")
       }))
     }
-    val sensors = store.sensors
+    val matched = phase("match_us") {
+      val rows = store.catalogSnapshot.rows
+      rq.map(q => Matchers.selectRows(rows, q.matchers, numericOnly = true))
+    }
     // the scan envelope across all queries; each query re-filters its own
     // exact range in RemoteRead.plan
     val samples = numericFloatView(
       rq.map(_.startMs * 1000L).minOption, rq.map(_.endMs * 1000L).maxOption)
-    if (accepted.contains(1)) { // STREAMED_XOR_CHUNKS
-      x.getResponseHeaders.set("content-type",
-        "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
-      val bytes = RemoteRead.chunkedResponse(sensors, samples, rq)
-      x.sendResponseHeaders(200, if (bytes.isEmpty) -1 else bytes.length)
-      if (bytes.nonEmpty) x.getResponseBody.write(bytes)
-    } else {
-      val payload = RemoteRead.samplesResponse(sensors, samples, rq)
-      x.getResponseHeaders.set("content-encoding", "snappy")
-      respondBytes(x, 200, "application/x-protobuf",
-        PrometheusRemote.snappyCompressLiteral(payload))
+    phase("serialize_us") {
+      if (accepted.contains(1)) { // STREAMED_XOR_CHUNKS
+        x.getResponseHeaders.set("content-type",
+          "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse")
+        val bytes = RemoteRead.chunkedResponse(matched, samples, rq)
+        x.sendResponseHeaders(200, if (bytes.isEmpty) -1 else bytes.length)
+        if (bytes.nonEmpty) x.getResponseBody.write(bytes)
+      } else {
+        val payload = RemoteRead.samplesResponse(matched, samples, rq)
+        x.getResponseHeaders.set("content-encoding", "snappy")
+        respondBytes(x, 200, "application/x-protobuf",
+          PrometheusRemote.snappyCompressLiteral(payload))
+      }
     }
   }
 
@@ -977,11 +994,11 @@ final class Gateway(
       throw new IllegalArgumentException("missing dir parameter"))
     val parsed = SimplePromQL.parse(query,
       nowUs = System.currentTimeMillis() * 1000L)
-    val matched = Matchers.sensorsByLabels(store.sensors, parsed.matchers,
-      numericOnly = true).select(col("uuid").as("sensor_id"))
+    val ids = Matchers.selectRows(store.catalogSnapshot.rows,
+      parsed.matchers, numericOnly = true).map(_.getString(0))
     val samples = numericFloatView(Some(parsed.startUs), Some(parsed.endUs))
-      .filter(col("timestamp_us").between(parsed.startUs, parsed.endUs))
-      .join(broadcast(matched), "sensor_id")
+      .filter(col("timestamp_us").between(parsed.startUs, parsed.endUs) &&
+        col("sensor_id").isin(ids: _*))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val enc = graft.sources.ArrowIO.encodeSeriesDistributed(samples)
     val spark2 = spark
@@ -1031,23 +1048,29 @@ final class Gateway(
     }
   }
 
-  /** Catalog rows matching the union of the given series selectors
-    * (each a bare selector — a range like `up[5m]` is a 400, matching
-    * Prometheus). Empty selector list = the whole catalog.
+  /** Catalog snapshot rows matching the union of the given series
+    * selectors (each a bare selector — a range like `up[5m]` is a 400,
+    * matching Prometheus), in uuid order. Empty selector list = the whole
+    * catalog.
     */
-  private def matchedCatalog(selectors: Seq[String]): DataFrame =
-    if (selectors.isEmpty) store.sensors
-    else {
-      val nowUs = System.currentTimeMillis() * 1000L
-      val preds = selectors.map { s =>
-        val parsed = SimplePromQL.parse(s, nowUs)
-        if (parsed.hadRange)
-          throw new IllegalArgumentException(
-            s"match[] must be a series selector without a range: $s")
-        Matchers.predicate(parsed.matchers)
-      }
-      store.sensors.filter(preds.reduce(_ || _))
+  private def matchedCatalog(selectors: Seq[String]): IndexedSeq[Row] = {
+    val nowUs = System.currentTimeMillis() * 1000L
+    val preds = selectors.map { s =>
+      val parsed = SimplePromQL.parse(s, nowUs)
+      if (parsed.hadRange)
+        throw new IllegalArgumentException(
+          s"match[] must be a series selector without a range: $s")
+      Matchers.compiled(parsed.matchers)
     }
+    val rows = store.catalogSnapshot.rows
+    if (preds.isEmpty) rows
+    else rows.filter(r =>
+      preds.exists(_(r.getString(1), r.getMap[String, String](4))))
+  }
+
+  /** A catalog row's labels, empty when it has none. */
+  private def labelsOf(r: Row): Map[String, String] =
+    Option(r.getMap[String, String](4)).map(_.toMap).getOrElse(Map.empty)
 
   /** `limit` parameter shared by the three discovery endpoints
     * (0 / absent = unlimited, Prometheus semantics).
@@ -1064,49 +1087,46 @@ final class Gateway(
 
   /** `GET /api/v1/labels` — distinct label names across the (optionally
     * match[]-filtered) catalog, sorted, `__name__` included whenever any
-    * series matches. One distinct over the exploded label keys of the
-    * always-broadcastable catalog; `start`/`end` are accepted and
-    * ignored (the catalog is not time-bucketed — same answer for every
-    * window, which Prometheus permits).
+    * series matches ([[Catalog.labelNames]]; unfiltered, the snapshot's
+    * view). `start`/`end` are accepted and ignored (the catalog is not
+    * time-bucketed — same answer for every window, which Prometheus
+    * permits).
     */
   private def handleLabelNames(
       x: HttpExchange, p: Map[String, String]): Unit = {
-    import spark.implicits._
-    val cat = matchedCatalog(matchParams(x))
-    val keys = cat
-      .select(explode(map_keys(coalesce(col("labels"),
-        map().cast(MapType(StringType, StringType))))).as("k"))
-      .distinct().as[String].collect().toSeq
-    val any = keys.nonEmpty || !cat.limit(1).isEmpty
-    val names = if (any) ("__name__" +: keys).distinct.sorted else Seq.empty
     val lim = discoveryLimit(p)
+    val names = phase("match_us") {
+      val selectors = matchParams(x)
+      if (selectors.isEmpty) store.catalogSnapshot.labelNames
+      else Catalog.labelNames(matchedCatalog(selectors))
+    }
     val out = if (lim > 0) names.take(lim) else names
-    respond(x, 200, "application/json", successArray(out.map(jsonStr)))
+    phase("serialize_us")(
+      respond(x, 200, "application/json", successArray(out.map(jsonStr))))
   }
 
   /** `GET /api/v1/label/{name}/values` — distinct values of one label
     * (with `__name__` mapping to sensor names), sorted; match[] filters
-    * first. The plan prunes to one column before the distinct.
+    * first.
     */
   private def handleLabelValues(
       x: HttpExchange, p: Map[String, String]): Unit = {
-    import spark.implicits._
     val parts = x.getRequestURI.getPath.split("/").filter(_.nonEmpty)
     // expected: api / v1 / label / {name} / values
     if (parts.length != 5 || parts(4) != "values")
       throw new NoSuchElementException(
         "expected /api/v1/label/{name}/values")
     val label = parts(3)
-    val cat = matchedCatalog(matchParams(x))
-    val valueCol =
-      if (label == LabelMatcher.NameLabel) col("name")
-      else coalesce(col("labels"),
-        map().cast(MapType(StringType, StringType))).getItem(label)
-    val values = cat.select(valueCol.as("v")).filter(col("v").isNotNull)
-      .distinct().as[String].collect().toSeq.sorted
     val lim = discoveryLimit(p)
+    val values = phase("match_us") {
+      val valueOf: Row => Option[String] =
+        if (label == LabelMatcher.NameLabel) r => Option(r.getString(1))
+        else r => labelsOf(r).get(label).flatMap(Option(_))
+      matchedCatalog(matchParams(x)).flatMap(valueOf).distinct.sorted
+    }
     val out = if (lim > 0) values.take(lim) else values
-    respond(x, 200, "application/json", successArray(out.map(jsonStr)))
+    phase("serialize_us")(
+      respond(x, 200, "application/json", successArray(out.map(jsonStr))))
   }
 
   /** `GET /api/v1/series` — the label sets of every series matching at
@@ -1117,23 +1137,23 @@ final class Gateway(
     */
   private def handleSeriesDiscovery(
       x: HttpExchange, p: Map[String, String]): Unit = {
-    import spark.implicits._
     val selectors = matchParams(x)
     if (selectors.isEmpty)
       throw new IllegalArgumentException(
         "series discovery requires at least one match[] selector")
     val lim = discoveryLimit(p)
-    val base = matchedCatalog(selectors).orderBy("uuid")
-      .select(col("name"), coalesce(col("labels"),
-        map().cast(MapType(StringType, StringType))).as("labels"))
-    val limited = if (lim > 0) base.limit(lim) else base
-    val rows = limited.as[(String, Map[String, String])].collect().toSeq
-    val objs = rows.map { case (nm, labels) =>
-      (("__name__" -> nm) +: labels.toSeq.sortBy(_._1))
-        .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
-        .mkString("{", ",", "}")
+    val rows = phase("match_us") {
+      val matched = matchedCatalog(selectors)
+      if (lim > 0) matched.take(lim) else matched
     }
-    respond(x, 200, "application/json", successArray(objs))
+    phase("serialize_us") {
+      val objs = rows.map { r =>
+        (("__name__" -> r.getString(1)) +: labelsOf(r).toSeq.sortBy(_._1))
+          .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+          .mkString("{", ",", "}")
+      }
+      respond(x, 200, "application/json", successArray(objs))
+    }
   }
 
   /** `GET /api/v1/metadata` — per-metric metadata from the catalog
@@ -1143,30 +1163,31 @@ final class Gateway(
     * reference parity, its sensors table has no help text either).
     * `metric` filters to one name; `limit` caps the metric count.
     */
+  private val numericTypeNames = SensorType.numericTypes.map(_.displayName).toSet
+
   private def handleMetricMetadata(
       x: HttpExchange, p: Map[String, String]): Unit = {
-    import spark.implicits._
-    val numeric = SensorType.numericTypes.map(_.displayName).toSet
-    val base = store.sensors.select(col("name"), col("type"),
-      col("unit").getField("name").as("unit_name"))
-    val filtered = p.get("metric") match {
-      case Some(m) => base.filter(col("name") === m)
-      case None => base
-    }
-    val rows = filtered.distinct().as[(String, String, Option[String])]
-      .collect().toSeq.sortBy(r => (r._1, r._2, r._3))
     val lim = discoveryLimit(p)
+    val rows = phase("match_us") {
+      val all = store.catalogSnapshot.rows
+      p.get("metric").fold(all)(m => all.filter(_.getString(1) == m))
+        .map(r => (r.getString(1), r.getString(2),
+          Option(r.getStruct(3)).flatMap(u => Option(u.getString(0)))))
+        .distinct.sortBy(r => (r._1, r._2, r._3))
+    }
     val byName = rows.groupBy(_._1).toSeq.sortBy(_._1)
     val limited = if (lim > 0) byName.take(lim) else byName
-    val body = limited.map { case (nm, entries) =>
-      val objs = entries.map { case (_, t, unit) =>
-        val promType = if (numeric.contains(t)) "gauge" else "unknown"
-        s"""{"type":"$promType","help":"",""" +
-          s""""unit":${jsonStr(unit.getOrElse(""))}}"""
-      }
-      s"${jsonStr(nm)}:${objs.mkString("[", ",", "]")}"
-    }.mkString("""{"status":"success","data":{""", ",", "}}")
-    respond(x, 200, "application/json", body)
+    phase("serialize_us") {
+      val body = limited.map { case (nm, entries) =>
+        val objs = entries.map { case (_, t, unit) =>
+          val promType = if (numericTypeNames.contains(t)) "gauge" else "unknown"
+          s"""{"type":"$promType","help":"",""" +
+            s""""unit":${jsonStr(unit.getOrElse(""))}}"""
+        }
+        s"${jsonStr(nm)}:${objs.mkString("[", ",", "]")}"
+      }.mkString("""{"status":"success","data":{""", ",", "}}")
+      respond(x, 200, "application/json", body)
+    }
   }
 
   private def handlePromql(x: HttpExchange, p: Map[String, String]): Unit = {
@@ -1174,14 +1195,14 @@ final class Gateway(
       throw new IllegalArgumentException("missing query parameter"))
     val parsed = SimplePromQL.parse(query,
       nowUs = System.currentTimeMillis() * 1000L)
-    val matched = Matchers.sensorsByLabels(store.sensors, parsed.matchers)
-      .collect()
+    val matched = phase("match_us")(
+      Matchers.selectRows(store.catalogSnapshot.rows, parsed.matchers))
     // multi-series exports stream exactly like /series/{uuid}: chunked
     // transfer + toLocalIterator — a matcher can select the whole
     // store, so edge residency must stay one partition + one buffer
     import scala.jdk.CollectionConverters._
     val fmt = p.getOrElse("format", "senml")
-    fmt match {
+    phase("serialize_us")(fmt match {
       case "senml" =>
         // ONE plan for all matched series (per-type scans unioned), not a
         // query loop per series; exportMulti assigns base fields per
@@ -1189,14 +1210,16 @@ final class Gateway(
         val lines =
           if (matched.isEmpty) Iterator.empty[String]
           else SenML.exportMulti(senmlLongView(
-            matched.toSeq, parsed.startUs, parsed.endUs))
+            matched, parsed.startUs, parsed.endUs))
             .toLocalIterator().asScala
         respondTextStream(x, 200, "application/senml+json",
           joined(lines, "[", ",", "]"))
       case "csv" | "jsonl" =>
-        val long = longView(matched.toSeq, parsed.startUs, parsed.endUs)
+        val long = longView(matched, parsed.startUs, parsed.endUs)
         if (fmt == "csv") {
-          val (hdr, lines) = Exporters.toCsvMulti(long)
+          // header keys from the matched rows: no job over the samples
+          val (hdr, lines) = Exporters.toCsvMulti(long,
+            matched.flatMap(labelsOf(_).keys))
           respondTextStream(x, 200, "text/csv",
             Iterator(hdr + "\n") ++
               lines.toLocalIterator().asScala.map(_ + "\n"),
@@ -1216,7 +1239,7 @@ final class Gateway(
       case "arrow" =>
         // multi-series export always uses the long all-string schema,
         // streamed in bounded IPC batches
-        val rows = longView(matched.toSeq, parsed.startUs, parsed.endUs)
+        val rows = longView(matched, parsed.startUs, parsed.endUs)
           .orderBy("sensor_id", "timestamp_us")
           .select(col("timestamp_us"), col("sensor_id"), col("sensor_name"),
             col("value"), col("type"),
@@ -1230,8 +1253,26 @@ final class Gateway(
           out => graft.sources.ArrowIO.writeLongFormatStream(rows, out))
       case other => throw new IllegalArgumentException(
         s"Unsupported export format '$other'. Supported formats: senml, csv, jsonl, arrow")
-    }
+    })
   }
+
+  /** The selection the PromQL engine asks for per matcher set: the
+    * snapshot's numeric series the matchers select, as a local
+    * `(sensor_id, labels)` frame built from the driver-matched rows.
+    */
+  private def selectFor(
+      snap: SensorStore.CatalogSnapshot): Seq[LabelMatcher] => DataFrame =
+    ms => {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(
+        Matchers.selectRows(snap.rows, ms, numericOnly = true)
+          .map(r => Row(r.getString(0), r.get(4))).asJava,
+        SelectedSeries)
+    }
+
+  private val SelectedSeries = StructType(Seq(
+    StructField("sensor_id", StringType),
+    StructField("labels", MapType(StringType, StringType))))
 
   /** PromQL analytical extension endpoint: aggregations and *_over_time
     * functions the reference rejects, evaluated as DataFrame aggregations
@@ -1253,14 +1294,13 @@ final class Gateway(
       tParam("start"), tParam("end"))
     // evalWith: binary vector queries select each operand's series
     // independently (two matcher sets); other queries match once
-    val result = ExtendedPromQL.evalWith(parsed,
-      ms => Matchers.sensorsByLabels(store.sensors, ms, numericOnly = true)
-        .select(col("uuid").as("sensor_id"), col("labels")),
-      numericFloatView(Some(parsed.startUs), Some(parsed.endUs)))
+    val result = phase("match_us")(ExtendedPromQL.evalWith(parsed,
+      selectFor(store.catalogSnapshot),
+      numericFloatView(Some(parsed.startUs), Some(parsed.endUs))))
     // a matcher can select arbitrarily many series — stream the JSONL
     // like every other export edge instead of collecting it
     import scala.jdk.CollectionConverters._
-    p.getOrElse("format", "jsonl") match {
+    phase("serialize_us")(p.getOrElse("format", "jsonl") match {
       case "prometheus" =>
         // the Prometheus HTTP-API instant-query VECTOR envelope:
         // {"status":"success","data":{"resultType":"vector","result":
@@ -1291,7 +1331,7 @@ final class Gateway(
         val lines = result.toJSON.toLocalIterator().asScala
         respondTextStream(x, 200, "application/x-ndjson",
           lines.map(_ + "\n"), errorMarker = JsonlErrorMarker)
-    }
+    })
   }
 
   /** Prometheus range-query API (`query_range` — the endpoint dashboards
@@ -1328,12 +1368,11 @@ final class Gateway(
     // resolve against it), resolves @ start()/end() anchors, pins
     // whole-expression `@` queries to a constant series, and computes
     // the sample-scan bounds itself
-    val result = ExtendedPromQL.evalRangeApi(query, startUs, endUs, stepUs,
-      ms => Matchers.sensorsByLabels(store.sensors, ms, numericOnly = true)
-        .select(col("uuid").as("sensor_id"), col("labels")),
-      (lo, hi) => numericFloatView(Some(lo), Some(hi)))
+    val result = phase("match_us")(ExtendedPromQL.evalRangeApi(
+      query, startUs, endUs, stepUs, selectFor(store.catalogSnapshot),
+      (lo, hi) => numericFloatView(Some(lo), Some(hi))))
     import scala.jdk.CollectionConverters._
-    p.getOrElse("format", "jsonl") match {
+    phase("serialize_us")(p.getOrElse("format", "jsonl") match {
       case "prometheus" =>
         // the Prometheus HTTP-API matrix envelope — what Grafana
         // consumes: {"status":"success","data":{"resultType":"matrix",
@@ -1380,7 +1419,7 @@ final class Gateway(
         val lines = result.toJSON.toLocalIterator().asScala
         respondTextStream(x, 200, "application/x-ndjson",
           lines.map(_ + "\n"), errorMarker = JsonlErrorMarker)
-    }
+    })
   }
 
   /** Prometheus wire formatting: seconds with exact µs fraction, and
@@ -1402,20 +1441,12 @@ final class Gateway(
     * one plan.
     */
   private def senmlLongView(
-      matched: Seq[org.apache.spark.sql.Row],
-      startUs: Long, endUs: Long): DataFrame = {
+      matched: Seq[Row], startUs: Long, endUs: Long): DataFrame = {
     import org.apache.spark.sql.types.{BooleanType, DoubleType}
-    val byType = matched.groupBy(_.getString(2))
-    byType.map { case (tn, rows) =>
-      val t = SensorType.fromString(tn).get
-      val ids = rows.map(_.getString(0))
-      val sel = store.sensors
-        .filter(col("uuid").isin(ids: _*))
-        .select(col("uuid").as("sensor_id"), col("name").as("sensor_name"),
-          col("unit.name").as("unit_name"), col("labels"))
-      val nullD = lit(null).cast(DoubleType)
-      val nullS = lit(null).cast(StringType)
-      val nullB = lit(null).cast(BooleanType)
+    val nullD = lit(null).cast(DoubleType)
+    val nullS = lit(null).cast(StringType)
+    val nullB = lit(null).cast(BooleanType)
+    byType(matched, startUs, endUs) { (t, rows) =>
       val (v, vs, vb, vd) = t match {
         case SensorType.Integer | SensorType.Numeric | SensorType.Float =>
           (col("value").cast(DoubleType), nullS, nullB, nullS)
@@ -1424,40 +1455,46 @@ final class Gateway(
         case SensorType.Location => (nullD, to_json(col("value")), nullB, nullS)
         case _ => (nullD, col("value").cast(StringType), nullB, nullS)
       }
-      store.samplesInRange(t, Some(startUs), Some(endUs))
-        .filter(col("sensor_id").isin(ids: _*))
-        .join(broadcast(sel), "sensor_id")
-        .select(col("sensor_id"), col("sensor_name"), col("unit_name"),
-          col("labels"), col("timestamp_us"),
-          v.as("v"), vs.as("vs"), vb.as("vb"), vd.as("vd"))
-    }.reduce(_ unionByName _)
+      Seq(col("sensor_id"), Matchers.seriesName(rows).as("sensor_name"),
+        Matchers.seriesUnit(rows).as("unit_name"),
+        Matchers.seriesLabels(rows).as("labels"), col("timestamp_us"),
+        v.as("v"), vs.as("vs"), vb.as("vb"), vd.as("vd"))
+    }
   }
 
   /** Batch-per-type long view over the matched sensors: one scan per value
-    * type joined to the (broadcast) selected catalog — the reference's
-    * per-type batch-query strategy (src/storage/sqlite/batch_queries.rs).
+    * type keyed on the matched ids, their name and labels carried in the
+    * plan — the reference's per-type batch-query strategy
+    * (src/storage/sqlite/batch_queries.rs).
     */
   private def longView(
-      matched: Seq[org.apache.spark.sql.Row],
-      startUs: Long, endUs: Long): DataFrame = {
-    val byType = matched.groupBy(_.getString(2))
-    byType.map { case (tn, rows) =>
-      val t = SensorType.fromString(tn).get
-      val ids = rows.map(_.getString(0))
-      val sel = store.sensors
-        .filter(col("uuid").isin(ids: _*))
-        .select(col("uuid").as("sensor_id"), col("name").as("sensor_name"),
-          col("labels"))
+      matched: Seq[Row], startUs: Long, endUs: Long): DataFrame =
+    byType(matched, startUs, endUs) { (t, rows) =>
+      Seq(col("timestamp_us"), col("sensor_id"),
+        Matchers.seriesName(rows).as("sensor_name"),
+        (t match {
+          case SensorType.Blob => base64(col("value"))
+          case SensorType.Location => to_json(col("value"))
+          case _ => col("value").cast(StringType)
+        }).as("value"),
+        lit(t.displayName).as("type"),
+        Matchers.seriesLabels(rows).as("labels"))
+    }
+
+  /** The union over the matched rows' types of each type's samples in
+    * `[startUs, endUs]` of those series, projected by `columns`; an empty
+    * match reads an empty Float scan.
+    */
+  private def byType(matched: Seq[Row], startUs: Long, endUs: Long)(
+      columns: (SensorType, Seq[Row]) => Seq[Column]): DataFrame = {
+    val groups =
+      if (matched.isEmpty) Seq(SensorType.Float -> Seq.empty[Row])
+      else matched.groupBy(_.getString(2)).toSeq
+        .map { case (tn, rows) => SensorType.fromString(tn).get -> rows }
+    groups.map { case (t, rows) =>
       store.samplesInRange(t, Some(startUs), Some(endUs))
-        .filter(col("sensor_id").isin(ids: _*))
-        .join(broadcast(sel), "sensor_id")
-        .select(col("timestamp_us"), col("sensor_id"), col("sensor_name"),
-          (t match {
-            case SensorType.Blob => base64(col("value"))
-            case SensorType.Location => to_json(col("value"))
-            case _ => col("value").cast(StringType)
-          }).as("value"),
-          lit(t.displayName).as("type"), col("labels"))
+        .filter(col("sensor_id").isin(rows.map(_.getString(0)): _*))
+        .select(columns(t, rows): _*)
     }.reduce(_ unionByName _)
   }
 
@@ -1519,16 +1556,15 @@ final class Gateway(
     */
   private def handleResample(x: HttpExchange, p: Map[String, String]): Unit = {
     val window = p.getOrElse("window", "1 hour")
-    val selected = (p.get("selector") match {
-      case Some(sel) =>
-        Matchers.sensorsByLabels(store.sensors, Catalog.parseSelector(sel))
-      case None => store.sensors
-    }).filter(col("type").isin("Float", "Integer", "Numeric"))
-      // never re-resample derived series into themselves
-      .filter(coalesce(col("labels")("__resample__"), lit("")) === "")
-    val ids = selected.select(col("uuid").as("sensor_id"))
+    val rows = store.catalogSnapshot.rows
+    val ids = p.get("selector")
+      .fold(rows)(sel => Matchers.selectRows(rows, Catalog.parseSelector(sel)))
+      .filter(r => numericTypeNames.contains(r.getString(2)) &&
+        // never re-resample derived series into themselves
+        labelsOf(r).get("__resample__").forall(v => v == null || v.isEmpty))
+      .map(_.getString(0))
     val src = numericFloatView(parseTime(p, "start"), parseTime(p, "end"))
-      .join(broadcast(ids), "sensor_id")
+      .filter(col("sensor_id").isin(ids: _*))
       .select(col("sensor_id"),
         timestamp_micros(col("timestamp_us")).as("ts"), col("value"))
     // batch mode: the watermark is a no-op, every window is final

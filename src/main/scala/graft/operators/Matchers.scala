@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.model.SensorType
 
@@ -99,18 +101,71 @@ object Matchers {
       name: String,
       labels: Map[String, String],
       ms: Seq[LabelMatcher]): Boolean =
-    ms.nonEmpty && ms.forall { m =>
-      val v: Option[String] =
-        if (m.key == NameLabel) Some(name) else labels.get(m.key)
-      m match {
-        case Eq(_, x)    => v.contains(x)
-        case NotEq(_, x) => !v.contains(x)
+    compiled(ms)(name, labels)
+
+  /** The matcher set as a driver-side predicate over a series' name and
+    * labels (either may be null, like a catalog row's): each regex is
+    * compiled once here, so a pattern error throws before any row is
+    * tested, and testing a whole catalog compiles nothing more.
+    */
+  def compiled(
+      ms: Seq[LabelMatcher]): (String, scala.collection.Map[String, String]) => Boolean = {
+    val tests = ms.map { m =>
+      val test: Option[String] => Boolean = m match {
+        case Eq(_, x)    => _.contains(x)
+        case NotEq(_, x) => v => !v.contains(x)
         case Re(_, p)    =>
           val re = graft.functions.LinearRegex.compile(p)
-          v.exists(re.find)
+          _.exists(re.find)
         case NotRe(_, p) =>
           val re = graft.functions.LinearRegex.compile(p)
-          !v.exists(re.find)
+          v => !v.exists(re.find)
       }
+      (m.key, test)
     }
+    if (tests.isEmpty) (_, _) => false
+    else (name, labels) => tests.forall { case (key, test) =>
+      test(
+        if (key == NameLabel) Option(name)
+        else if (labels == null) None
+        else labels.get(key).flatMap(Option(_)))
+    }
+  }
+
+  /** [[sensorsByLabels]] over catalog rows already on the driver
+    * ([[graft.model.Schemas.sensors]] layout): the rows that match, in
+    * their given order — uuid order for a store snapshot's rows.
+    */
+  def selectRows(
+      rows: Seq[Row],
+      ms: Seq[LabelMatcher],
+      numericOnly: Boolean = false): IndexedSeq[Row] = {
+    val m = compiled(ms)
+    rows.iterator.filter(r =>
+      (!numericOnly || NumericTypeNames.contains(r.getString(2))) &&
+        m(r.getString(1), r.getMap[String, String](4))).toIndexedSeq
+  }
+
+  private val NumericTypeNames = SensorType.numericTypes.map(_.displayName).toSet
+
+  /** The name of each series in `rows` (catalog rows, as for
+    * [[selectRows]]) as a column looked up by `sensor_id`: the matched
+    * rows travel inside the plan, so a sample read keyed on them needs no
+    * catalog join. One hash lookup per sample; null for other ids.
+    */
+  def seriesName(rows: Seq[Row]): Column = bySensorId(rows)(_.getString(1))
+
+  /** [[seriesName]] for the name of each series' unit. */
+  def seriesUnit(rows: Seq[Row]): Column =
+    bySensorId(rows)(r => Option(r.getStruct(3)).map(_.getString(0)).orNull)
+
+  /** [[seriesName]] for each series' labels. */
+  def seriesLabels(rows: Seq[Row]): Column =
+    bySensorId(rows)(r => Option(r.getMap[String, String](4)).map(_.toMap).orNull)
+
+  private def bySensorId[T: TypeTag](rows: Seq[Row])(f: Row => T): Column = {
+    val byId = rows.map(r => r.getString(0) -> f(r)).toMap
+    udf((id: String) => byId.getOrElse(id, null.asInstanceOf[T]))
+      .apply(col("sensor_id"))
+  }
 }

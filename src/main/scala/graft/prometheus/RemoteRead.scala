@@ -1,6 +1,6 @@
 package graft.prometheus
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.{LabelMatcher, Matchers, SensorOps}
 
@@ -9,9 +9,12 @@ import graft.operators.{LabelMatcher, Matchers, SensorOps}
   * STREAMED_XOR_CHUNKS framing at the edge
   * (reference: src/ingestors/http/prometheus_read.rs:105-359).
   *
-  * The Spark plan is: broadcast the matcher-selected catalog into the
-  * sample scan (time predicates pushed to parquet), window-limit per
-  * sensor, collect only the final per-series samples for wire encoding.
+  * The matcher selects catalog rows on the driver; the Spark plan is the
+  * sample scan keyed on their ids (time predicates pushed to parquet),
+  * their name and labels carried in the plan, window-limited per sensor,
+  * collecting only the final per-series samples for wire encoding. Each
+  * entry point taking a catalog frame collects its matcher result and
+  * calls its twin over the matched rows.
   * ReadHints (step/func) are accepted and ignored, like the reference
   * (prometheus_read.rs:153-156).
   */
@@ -31,16 +34,31 @@ object RemoteRead {
       sensors: DataFrame,
       samples: DataFrame,
       q: Query,
-      perSensorLimit: Int = SensorOps.DefaultQueryLimit): DataFrame = {
-    val selected = Matchers.sensorsByLabels(sensors, q.matchers,
-      numericOnly = true)
-      .select(col("uuid").as("sensor_id"), col("name"), col("labels"))
+      perSensorLimit: Int = SensorOps.DefaultQueryLimit): DataFrame =
+    plan(selected(sensors, q), samples, q, perSensorLimit)
+
+  /** [[plan]] over the query's matched catalog rows
+    * ([[Matchers.selectRows]] with `numericOnly`).
+    */
+  def plan(
+      matched: Seq[Row],
+      samples: DataFrame,
+      q: Query,
+      perSensorLimit: Int): DataFrame = {
     val scan = samples
       .filter(col("timestamp_us") >= q.startMs * 1000L &&
-        col("timestamp_us") <= q.endMs * 1000L)
-      .join(broadcast(selected), "sensor_id")
+        col("timestamp_us") <= q.endMs * 1000L &&
+        col("sensor_id").isin(matched.map(_.getString(0)): _*))
+      .select(col("sensor_id"), col("timestamp_us"), col("value"),
+        Matchers.seriesName(matched).as("name"),
+        Matchers.seriesLabels(matched).as("labels"))
     SensorOps.perSensorLimit(scan, perSensorLimit)
   }
+
+  /** The catalog rows `q` selects from a catalog frame, collected. */
+  private def selected(sensors: DataFrame, q: Query): Seq[Row] =
+    Matchers.sensorsByLabels(sensors, q.matchers, numericOnly = true)
+      .collect().toSeq
 
   /** Collect a planned query into wire-ready series: labels sorted with
     * `__name__` first-class, values coerced to f64, timestamps ms.
@@ -75,11 +93,18 @@ object RemoteRead {
     * is the caller's concern, matching the reference layering).
     */
   def samplesResponse(
-      sensors: DataFrame, samples: DataFrame, queries: Seq[Query]): Array[Byte] = {
-    val results = queries.map { q =>
-      collectSeries(plan(sensors, samples, q)).map { case (labels, ss) =>
-        PrometheusRemote.TimeSeries(labels, ss)
-      }
+      sensors: DataFrame, samples: DataFrame, queries: Seq[Query]): Array[Byte] =
+    samplesResponse(queries.map(selected(sensors, _)), samples, queries)
+
+  /** [[samplesResponse]] over each query's matched catalog rows
+    * (`matched(i)` for `queries(i)`).
+    */
+  def samplesResponse(
+      matched: Seq[Seq[Row]], samples: DataFrame, queries: Seq[Query]): Array[Byte] = {
+    require(matched.length == queries.length, "one matched row set per query")
+    val results = queries.zip(matched).map { case (q, rows) =>
+      collectSeries(plan(rows, samples, q, SensorOps.DefaultQueryLimit))
+        .map { case (labels, ss) => PrometheusRemote.TimeSeries(labels, ss) }
     }
     PrometheusRemote.encodeReadResponse(results)
   }
@@ -133,10 +158,19 @@ object RemoteRead {
     * Chunks are encoded distributed ([[collectEncodedSeries]]).
     */
   def chunkedResponse(
-      sensors: DataFrame, samples: DataFrame, queries: Seq[Query]): Array[Byte] = {
+      sensors: DataFrame, samples: DataFrame, queries: Seq[Query]): Array[Byte] =
+    chunkedResponse(queries.map(selected(sensors, _)), samples, queries)
+
+  /** [[chunkedResponse]] over each query's matched catalog rows
+    * (`matched(i)` for `queries(i)`).
+    */
+  def chunkedResponse(
+      matched: Seq[Seq[Row]], samples: DataFrame, queries: Seq[Query]): Array[Byte] = {
+    require(matched.length == queries.length, "one matched row set per query")
     val out = new java.io.ByteArrayOutputStream()
-    queries.zipWithIndex.foreach { case (q, i) =>
-      val series = collectEncodedSeries(plan(sensors, samples, q))
+    queries.zip(matched).zipWithIndex.foreach { case ((q, rows), i) =>
+      val series = collectEncodedSeries(
+        plan(rows, samples, q, SensorOps.DefaultQueryLimit))
       if (series.nonEmpty)
         out.write(PrometheusRemote.encodeChunkedResponsePre(i.toLong, series))
     }

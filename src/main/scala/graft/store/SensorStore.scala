@@ -3,11 +3,14 @@ package graft.store
 import scala.collection.immutable.TreeMap
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import graft.catalog.Catalog
 import graft.model.{IngestBatch, Schemas, SensorType}
+import graft.operators.SensorOps
 
 /** Columnar sensor store (S6/S14), parquet by default with ORC as a
   * drop-in alternative backend: the Spark-native analog of the
@@ -45,6 +48,14 @@ import graft.model.{IngestBatch, Schemas, SensorType}
   * The catalog only grows (compaction replaces files by a superset), so
   * a rebuild that reads a newer directory state than its listing holds a
   * superset of the listing's rows — still only committed rows.
+  *
+  * Catalog questions are answered from the snapshot alone
+  * ([[catalogSnapshot]]): its rows for per-request matcher selection on
+  * the driver, and the answers derived from the whole catalog — the
+  * `/metrics` datasets, the per-series `/series` datasets, the label
+  * names — computed once per snapshot, on first use, by the same Spark
+  * operators a plan over [[sensors]] would run. They live and die with
+  * their snapshot: nothing else caches them, so nothing invalidates them.
   *
   * Ingest has one commit, [[publish]]: every import edge normalizes its
   * payload into a [[graft.model.IngestBatch]] and publishes it, catalog
@@ -350,8 +361,16 @@ final class SensorStore(
     val known = catalog()
     val incoming = sensors.select(Schemas.sensors.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    val novel = SensorStore.byUuid(incoming.collect().toSeq
-      .filterNot(r => known.rows.contains(r.getString(0)))).values.toSeq
+    // a driver-resident frame's optimized plan already holds the cast
+    // rows: read them off it instead of planning and running a collect
+    val rows =
+      if (IngestBatch.driverResident(incoming)) {
+        val rel = incoming.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+        val toRow = CatalystTypeConverters.createToScalaConverter(rel.schema)
+        rel.data.map(r => toRow(r).asInstanceOf[Row])
+      } else incoming.collect().toSeq
+    val novel = SensorStore.byUuid(rows
+      .filterNot(r => known.byId.contains(r.getString(0)))).values.toSeq
     if (novel.isEmpty) return
     val added = stagedAppend(catalogDir)(p =>
       frameOf(LocalRelation.fromExternalRows(SensorStore.catalogOutput, novel))
@@ -399,14 +418,34 @@ final class SensorStore(
       .map(_.getPath.getName).toSet
     catch { case _: java.io.FileNotFoundException => Set.empty }
 
-  /** The catalog as of one listing: its deduped rows by uuid and the
-    * data files they were read from.
+  /** The catalog as of one listing: its deduped rows by uuid, the data
+    * files they were read from, and the answers derived from them. Each
+    * view is built once, on first use, on the thread that first needs it
+    * (its Spark job carries that request's tags).
     */
   private final class Snapshot(
-      val files: Set[String], val rows: TreeMap[String, Row]) {
+      val files: Set[String], val byId: TreeMap[String, Row])
+      extends SensorStore.CatalogSnapshot {
     /** Built once per snapshot; every read takes a fresh instance. */
     lazy val relation: LocalRelation = LocalRelation.fromExternalRows(
-      SensorStore.catalogOutput, rows.values.toSeq)
+      SensorStore.catalogOutput, byId.values.toSeq)
+
+    lazy val rows: IndexedSeq[Row] = byId.values.toIndexedSeq
+
+    private def frame: DataFrame = frameOf(relation.newInstance())
+
+    lazy val metrics: IndexedSeq[SensorStore.MetricDataset] =
+      Catalog.metricsDatasets(SensorOps.metricsSummary(frame)).collect()
+        .map(r => SensorStore.MetricDataset(
+          r.getString(0), r.getString(1), r.getString(2))).toIndexedSeq
+
+    private lazy val seriesDatasets: Map[String, String] =
+      Catalog.seriesDatasets(frame).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+
+    def seriesDataset(uuid: String): String = seriesDatasets(uuid)
+
+    lazy val labelNames: Seq[String] = Catalog.labelNames(rows)
   }
 
   @volatile private var snapshot = new Snapshot(Set.empty, TreeMap.empty)
@@ -442,7 +481,7 @@ final class SensorStore(
       if (removed.subsetOf(cur.files) &&
           catalogFiles() == cur.files -- removed ++ added)
         snapshot = new Snapshot(cur.files -- removed ++ added,
-          SensorStore.byUuid(novel, cur.rows))
+          SensorStore.byUuid(novel, cur.byId))
     }
 
   /** A local relation as a frame in one partition: plans over it (the
@@ -462,7 +501,14 @@ final class SensorStore(
   def sensors: DataFrame = frameOf(catalog().relation.newInstance())
 
   /** One catalog row by uuid, from the snapshot ([[sensors]]' layout). */
-  def sensor(uuid: String): Option[Row] = catalog().rows.get(uuid)
+  def sensor(uuid: String): Option[Row] = catalog().byId.get(uuid)
+
+  /** The catalog and its derived answers as of this call's listing (see
+    * the class doc): one request reads one snapshot, so its rows and
+    * views always agree. Starts no job unless the listing changed under
+    * the snapshot by a foreign write, or a view is first used.
+    */
+  def catalogSnapshot: SensorStore.CatalogSnapshot = catalog()
 
   /** Compact the catalog's accumulated publish files into one. Ordered so
     * a concurrent reader is correct at every step under dedup-on-read:
@@ -802,6 +848,30 @@ final class SensorStore(
 }
 
 object SensorStore {
+  /** One catalog state ([[SensorStore.catalogSnapshot]]): its rows and the
+    * answers derived from the whole of it.
+    */
+  sealed trait CatalogSnapshot {
+    /** The catalog rows, [[Schemas.sensors]]' layout, sorted by uuid. */
+    def rows: IndexedSeq[Row]
+
+    /** The `/metrics` entries, ordered by name: [[Catalog.metricsDatasets]]
+      * over [[SensorOps.metricsSummary]].
+      */
+    def metrics: IndexedSeq[MetricDataset]
+
+    /** The `/series` DCAT dataset of one of [[rows]]' uuids
+      * ([[Catalog.seriesDatasets]]).
+      */
+    def seriesDataset(uuid: String): String
+
+    /** [[Catalog.labelNames]] of all [[rows]]. */
+    def labelNames: Seq[String]
+  }
+
+  /** One metric's `/metrics` entry: its name, type and DCAT dataset JSON. */
+  final case class MetricDataset(name: String, sensorType: String, dataset: String)
+
   /** Staging older than this is assumed crashed, not in-flight — far
     * beyond any realistic publish/compaction duration.
     */

@@ -1011,27 +1011,231 @@ class GatewaySpec extends SparkSpec {
   private def requestId(r: HttpResponse[_]): String =
     r.headers().firstValue("x-request-id").orElseThrow()
 
-  test("catalog routes run one Spark job per request") {
+  test("catalog routes run no Spark job between catalog changes") {
     def enc(s: String) =
       java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    val m = "match%5B%5D" // match[]
     val lines =
       "snap_cpu,host=a,dc=eu usage=1 1704067200000000000\n" +
         "snap_cpu,host=b,dc=us usage=2 1704067200000000000\n"
     assert(post("/api/v2/write?bucket=db&org=do",
       lines.getBytes(StandardCharsets.UTF_8), Map.empty).statusCode() == 204)
+    val snap = enc("""{__name__=~"snap_.*"}""")
     val routes = Seq(
+      "/series",
       "/series?selector=" + enc("""{dc="eu"}"""),
       "/metrics",
+      "/metrics?name_contains=SNAP&type=float",
       "/api/v1/labels",
-      "/api/v1/series?match%5B%5D=" + enc("""{__name__=~"snap_.*"}"""))
+      s"/api/v1/labels?$m=$snap",
+      "/api/v1/label/host/values",
+      s"/api/v1/label/__name__/values?$m=$snap",
+      "/api/v1/metadata",
+      s"/api/v1/series?$m=$snap")
     withTagJobs { jobs =>
+      // the write made a new snapshot: its first reads build the views
+      routes.foreach(route => assert(get(route).statusCode() == 200, route))
       routes.foreach { route =>
         val r = get(route)
         assert(r.statusCode() == 200, route)
         val n = jobs.started(requestId(r))
-        assert(n == 1, s"$route started $n Spark jobs")
+        assert(n == 0, s"$route started $n Spark jobs")
       }
     }
+  }
+
+  test("multi-series CSV query and remote read key their sample reads " +
+      "on the matched rows") {
+    import PrometheusRemote._
+    def enc(s: String) =
+      java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    val nowMs = System.currentTimeMillis()
+    val ms0 = nowMs - 60000L
+    assert(post("/api/v1/prometheus_remote_write", RemoteWriteBodies(Seq(
+        Seq("__name__" -> "pin_cpu", "job" -> "a", "host" -> "x") ->
+          Seq(1.0 -> ms0, 2.0 -> (ms0 + 1000)),
+        Seq("__name__" -> "pin_cpu", "job" -> "a", "zone" -> "q,1") ->
+          Seq(3.0 -> ms0),
+        Seq("__name__" -> "pin_cpu", "job" -> "b", "host" -> "y") ->
+          Seq(4.0 -> ms0))),
+      Map.empty).statusCode() == 204)
+    val query = "/api/v1/query?format=csv&query=" + enc("""pin_cpu{job="a"}[1h]""")
+    val readBody = {
+      val mq = new ProtoWriter
+      mq.int64(1, ms0 - 1000); mq.int64(2, nowMs)
+      Seq("__name__" -> "pin_cpu", "job" -> "a").foreach { case (k, v) =>
+        val mw = new ProtoWriter
+        mw.int64(1, 0); mw.string(2, k); mw.string(3, v)
+        mq.message(3, mw)
+      }
+      val rr = new ProtoWriter
+      rr.message(1, mq)
+      rr.int64(2, 1) // STREAMED_XOR_CHUNKS
+      snappyCompressLiteral(rr.result())
+    }
+    def read() = post("/api/v1/prometheus_remote_read", readBody, Map(
+      "content-encoding" -> "snappy",
+      "content-type" -> "application/x-protobuf",
+      "x-prometheus-remote-read-version" -> "0.1.0"))
+    // warm: the write made a new snapshot
+    assert(get(query).statusCode() == 200)
+    assert(read().statusCode() == 200)
+    withTagJobs { jobs =>
+      val csv = get(query)
+      assert(csv.statusCode() == 200, csv.body())
+      // header keys from the matched series, in Spark's string order
+      val lines = csv.body().linesIterator.toSeq
+      assert(lines.head ==
+        "timestamp,sensor_id,sensor_name,value,type,__name__,host,job,zone",
+        csv.body())
+      assert(lines.tail.map(_.split(",").drop(3).head).sorted ==
+        Seq("1.0", "2.0", "3.0"), csv.body())
+      assert(lines.exists(_.endsWith(""",pin_cpu,,a,"q,1"""")), csv.body())
+      val n = jobs.started(requestId(csv))
+      assert(n == 3, s"CSV query started $n Spark jobs")
+      val rr = read()
+      assert(rr.statusCode() == 200)
+      val ascii = rr.body().map(b => if (b >= 32 && b < 127) b.toChar else '.')
+        .mkString
+      assert(ascii.contains("host") && ascii.contains("zone"), ascii)
+      val nr = jobs.started(requestId(rr))
+      assert(nr == 2, s"remote read started $nr Spark jobs")
+    }
+    // a matcher selecting nothing answers the header alone
+    val none = get("/api/v1/query?format=csv&query=" +
+      enc("""pin_cpu{job="none"}[1h]"""))
+    assert(none.statusCode() == 200, none.body())
+    assert(none.body() == "timestamp,sensor_id,sensor_name,value,type\n")
+  }
+
+  test("catalog answers are fresh after a novel write, a foreign publish " +
+      "and a compaction; each view is built once per snapshot") {
+    import org.apache.spark.sql.functions._
+    import graft.catalog.Catalog
+    import graft.operators.{Matchers, SensorOps}
+    def enc(s: String) =
+      java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    val root2 = graft.TempDirs.createPath("graft_gateway_fresh")
+    val fstore = new SensorStore(spark, root2)
+    val fgw = new Gateway(spark, fstore, "fresh-gateway")
+    val fport = fgw.start(0)
+    def fget(path: String) = client.send(HttpRequest.newBuilder(
+        new URI(s"http://127.0.0.1:$fport$path")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    def q(s: String) = "\"" + s + "\""
+    def success(items: Seq[String]) =
+      items.mkString("""{"status":"success","data":[""", ",", "]}")
+    val selector = """{dc="eu"}"""
+    val series = """{__name__=~"fresh_.*"}"""
+    // each route's answer by the Spark operators over fstore.sensors
+    val expected: Seq[(String, () => String)] = Seq(
+      "/metrics" -> (() => Catalog.catalogDocument(
+        Catalog.metricsDatasets(SensorOps.metricsSummary(fstore.sensors))
+          .select("dataset").collect().map(_.getString(0)).toSeq,
+        "/metrics", "fresh-gateway Metrics Catalog",
+        "Aggregated metrics across all time series")),
+      "/api/v1/labels" -> (() => {
+        val keys = fstore.sensors.select(explode(map_keys(coalesce(
+            col("labels"), map().cast("map<string,string>")))))
+          .distinct().collect().map(_.getString(0)).toSeq
+        val any = keys.nonEmpty || !fstore.sensors.isEmpty
+        success(if (any) ("__name__" +: keys).distinct.sorted.map(q) else Nil)
+      }),
+      "/api/v1/label/dc/values" -> (() => success(fstore.sensors
+        .select(col("labels").getItem("dc").as("v")).filter(col("v").isNotNull)
+        .distinct().collect().map(_.getString(0)).toSeq.sorted.map(q))),
+      "/series?selector=" + enc(selector) -> (() => Catalog.catalogDocument(
+        Catalog.seriesDatasets(Matchers.sensorsByLabels(fstore.sensors,
+          Catalog.parseSelector(selector))).select("dataset").collect()
+          .map(_.getString(0)).toSeq,
+        "/series", "fresh-gateway Series Catalog", "All time series datasets")),
+      "/api/v1/series?match%5B%5D=" + enc(series) -> (() => success(
+        fstore.sensors.filter(Matchers.predicate(graft.promql.SimplePromQL
+            .parse(series, 0L).matchers)).orderBy("uuid").collect().toSeq
+          .map { r =>
+            val labels = Option(r.getMap[String, String](4)).map(_.toSeq)
+              .getOrElse(Nil).sortBy(_._1)
+            (("__name__" -> r.getString(1)) +: labels)
+              .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+          })))
+    def check(stage: String): Unit = withTagJobs { jobs =>
+      expected.foreach { case (path, want) =>
+        val first = fget(path)
+        assert(first.statusCode() == 200, s"$stage $path")
+        assert(first.body() == want(), s"$stage $path")
+        val again = fget(path)
+        assert(again.body() == first.body(), s"$stage $path")
+        val n = jobs.started(requestId(again))
+        assert(n == 0, s"$stage $path: the second read started $n jobs")
+      }
+    }
+    try {
+      check("empty store")
+      val write = client.send(HttpRequest.newBuilder(
+          new URI(s"http://127.0.0.1:$fport/api/v2/write?bucket=fb&org=fo"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          "fresh_cpu,host=a,dc=eu usage=1 1704067200000000000\n" +
+            "fresh_mem,host=b,dc=us free=2 1704067200000000000\n")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(write.statusCode() == 204, write.body())
+      check("novel write")
+      // another store on the same root stands in for another process
+      new SensorStore(spark, root2).publish(graft.model.IngestBatch.fromLocal(
+        spark, Seq(graft.model.IngestBatch.LocalSample("fresh_disk",
+          SensorType.Float, "GB", Map("dc" -> "eu", "rack" -> "r1"),
+          1704067200000000L, 3.0))))
+      check("foreign publish")
+      fstore.compactCatalog()
+      check("compaction")
+      assert(fget("/api/v1/label/dc/values").body() ==
+        """{"status":"success","data":["eu","us"]}""")
+    } finally fgw.stop()
+  }
+
+  test("read routes log match and serialize phases within the request's us") {
+    import PrometheusRemote._
+    def enc(s: String) =
+      java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val prev = gateway.logSink
+    gateway.logSink = lines.add(_)
+    try {
+      val m = "match%5B%5D=" + enc("""{__name__=~"phase_.*"}""")
+      val gets = Seq(
+        "/metrics", "/series?selector=" + enc("""{dc="eu"}"""),
+        "/api/v1/labels", "/api/v1/label/host/values?" + m,
+        "/api/v1/series?" + m, "/api/v1/metadata",
+        "/api/v1/query?format=csv&query=phase_read",
+        "/api/v1/query_extended?query=" + enc("sum(phase_read)"),
+        "/api/v1/query_range?query=phase_read&start=1704067200" +
+          "&end=1704070800&step=600")
+      gets.foreach(g => assert(get(g).statusCode() == 200, g))
+      val mq = new ProtoWriter
+      mq.int64(1, 1704067100000L); mq.int64(2, 1704067300000L)
+      val mw = new ProtoWriter
+      mw.int64(1, 0); mw.string(2, "__name__"); mw.string(3, "phase_read")
+      mq.message(3, mw)
+      val rr = new ProtoWriter
+      rr.message(1, mq)
+      assert(post("/api/v1/prometheus_remote_read",
+        snappyCompressLiteral(rr.result()), Map(
+          "content-encoding" -> "snappy",
+          "content-type" -> "application/x-protobuf",
+          "x-prometheus-remote-read-version" -> "0.1.0")).statusCode() == 200)
+      val Phased = (""".*"path":"([^"]*)","status":200,"us":(\d+),""" +
+        """"match_us":(\d+),"serialize_us":(\d+)\}""").r
+      import scala.jdk.CollectionConverters._
+      val seen = lines.asScala.toSeq.collect {
+        case Phased(path, us, mu, su) =>
+          assert(mu.toLong + su.toLong <= us.toLong, path)
+          path
+      }
+      assert(seen.toSet == Set("/metrics", "/series", "/api/v1/labels",
+        "/api/v1/label", "/api/v1/series", "/api/v1/metadata",
+        "/api/v1/query", "/api/v1/query_extended", "/api/v1/query_range",
+        "/api/v1/prometheus_remote_read"), lines)
+      assert(seen.length == gets.length + 1, lines)
+    } finally gateway.logSink = prev
   }
 
   test("Influx and remote writes run a catalog job only for novel series, " +

@@ -85,4 +85,73 @@ class MatchersSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     assert(got == Set("u1", "u2", "u3")) // all are numeric types here
   }
+
+  test("randomized differential: matches/selectRows == predicate/" +
+      "sensorsByLabels over seeded random catalogs") {
+    import org.apache.spark.sql.functions.col
+    val keys = Seq("env", "dc", "host", "absent", "__name__")
+    val values = Seq("prod", "dev", "", "eu-1", "us-1", "a|b", "Ünï")
+    val patterns = Seq("", ".*", "x*", "^$", "^p", "d$", "^prod$", "prod|dev",
+      "^(eu|us)-1$", "a\\|b", ".", "(?i)ünï", "^$|dev")
+    val types = Seq("Float", "Integer", "Numeric", "String", "Boolean")
+    val schema = StructType(Seq(
+      StructField("uuid", StringType), StructField("name", StringType),
+      StructField("type", StringType), StructField("unit",
+        StructType(Seq(StructField("name", StringType),
+          StructField("description", StringType)))),
+      StructField("labels", MapType(StringType, StringType))))
+    for (seed <- Seq(1L, 2L, 3L)) {
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.length))
+      val rows = (0 until 80).map { i =>
+        // null maps, absent keys, and null values (read as absent)
+        val labels: Map[String, String] =
+          if (rnd.nextInt(5) == 0) null
+          else Seq("env", "dc", "host").filter(_ => rnd.nextBoolean())
+            .map(k => k -> (if (rnd.nextInt(12) == 0) null else pick(values)))
+            .toMap
+        Row(f"u$i%03d", pick(Seq("cpu", "mem", "prod", "dev", "Ünï")),
+          pick(types), null, labels)
+      }
+      val sets: Seq[Seq[LabelMatcher]] = Nil +: (0 until 150).map { _ =>
+        (0 until 1 + rnd.nextInt(3)).map { _ =>
+          val k = pick(keys)
+          rnd.nextInt(4) match {
+            case 0 => Eq(k, pick(values ++ Seq("cpu", "mem")))
+            case 1 => NotEq(k, pick(values ++ Seq("cpu", "mem")))
+            case 2 => Re(k, pick(patterns))
+            case _ => NotRe(k, pick(patterns))
+          }
+        }
+      }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      // every set's Column predicate in one job
+      val byColumn = df.select(col("uuid") +: sets.zipWithIndex.map {
+          case (ms, i) => Matchers.predicate(ms).as(s"m$i") }: _*)
+        .collect().map(r => r.getString(0) -> r).toMap
+      sets.zipWithIndex.foreach { case (ms, i) =>
+        val want = rows.map(_.getString(0)).filter(u => byColumn(u).getBoolean(i + 1))
+        rows.foreach { r =>
+          assert(Matchers.matches(r.getString(1), r.getAs[Map[String, String]](4), ms) ==
+            byColumn(r.getString(0)).getBoolean(i + 1), s"seed $seed $ms on $r")
+        }
+        assert(Matchers.selectRows(rows, ms).map(_.getString(0)) == want,
+          s"seed $seed $ms")
+      }
+      // numericOnly through the DataFrame operator itself, sampled
+      sets.take(12).foreach { ms =>
+        assert(Matchers.selectRows(rows, ms, numericOnly = true)
+            .map(_.getString(0)) ==
+          Matchers.sensorsByLabels(df, ms, numericOnly = true)
+            .collect().map(_.getString(0)).toSeq, s"seed $seed numericOnly $ms")
+      }
+    }
+  }
+
+  test("compiled compiles each regex once, failing before any row") {
+    intercept[IllegalArgumentException](
+      Matchers.compiled(Seq(Re("env", "(a)\\1"))))
+    intercept[IllegalArgumentException](
+      Matchers.selectRows(Nil, Seq(NotRe("env", "(?=a)b"))))
+  }
 }

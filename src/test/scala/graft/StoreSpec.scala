@@ -1002,6 +1002,42 @@ class StoreSpec extends SparkSpec {
     assert(uuids == Seq("dup", "u0"), uuids)
   }
 
+  test("publishSensors reads a driver-resident frame's rows off its " +
+      "plan: same catalog as the distributed frame, no read job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // columns that only the casts to Schemas.sensors bring into shape: an
+    // integer name, a unit struct with other field names
+    val schema = StructType(Seq(
+      StructField("uuid", StringType), StructField("name", IntegerType),
+      StructField("type", StringType),
+      StructField("unit", StructType(Seq(StructField("n", StringType),
+        StructField("d", StringType)))),
+      StructField("labels", MapType(StringType, StringType))))
+    val rows = Seq(
+      Row("u2", 42, "Float", Row("m", null), Map("k" -> "v", "e" -> "")),
+      Row("u1", 7, "Integer", null, null),
+      Row("u3", -1, "String", Row(null, "d"), Map.empty[String, String]),
+      Row("u1", 8, "Float", null, null)) // a repeat uuid: first row wins
+    import scala.jdk.CollectionConverters._
+    val local = spark.createDataFrame(rows.asJava, schema)
+    val distributed = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema)
+    assert(IngestBatch.driverResident(local))
+    assert(!IngestBatch.driverResident(distributed))
+    val localRoot = tempDir()
+    val fromLocal = new SensorStore(spark, localRoot)
+    val (_, jobs) = jobsDuring(fromLocal.publishSensors(local))
+    assert(jobs == 1, s"$jobs jobs: the catalog append only")
+    val fromDistributed = new SensorStore(spark, tempDir())
+    fromDistributed.publishSensors(distributed)
+    val want = fromDistributed.sensors.collect().toSeq
+    assert(want.map(_.getString(0)) == Seq("u1", "u2", "u3"))
+    assert(fromLocal.sensors.collect().toSeq == want)
+    // and as read back from its catalog files by a fresh store
+    assert(new SensorStore(spark, localRoot).sensors.collect().toSeq == want)
+  }
+
   test("sensor(uuid) agrees with sensors.filter") {
     val store = new SensorStore(spark, tempDir())
     assert(store.sensor("u1").isEmpty)
