@@ -9,105 +9,69 @@ import graft.functions.{BpeSplitExpression, CharStatsExpression,
   SensorUuidExpression, TextShinglesExpression, VecDot8Expression,
   VecQuantize8Expression, WinnowFpsExpression}
 
-/** Engine extensions registered via `SparkSessionExtensions`: codegen'd
-  * Catalyst expressions (`sensor_uuid`, `vec_dot`, `vec_q8`, `vec_dot8`,
-  * `text_shingles`, `winnow_fps`, `unicode_normalize`) usable from SQL
-  * and `call_function`,
-  * plus the [[graft.plans.MonthPruneRule]] optimizer rule (timestamp
-  * bounds over store tables imply month partition pruning).
+/** Engine extensions registered via `SparkSessionExtensions`: the
+  * codegen'd Catalyst expressions of [[GraftExtensions.functions]], usable
+  * from SQL and `call_function`, plus the [[graft.plans.MonthPruneRule]]
+  * optimizer rule (timestamp bounds over store tables imply month
+  * partition pruning).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new graft.plans.MonthPruneRule)
     ext.injectPlannerStrategy(_ => new graft.plans.GraftStrategies)
-    ext.injectFunction((
-      new FunctionIdentifier("sensor_uuid"),
-      new ExpressionInfo(classOf[SensorUuidExpression].getName, "sensor_uuid"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          "sensor_uuid(name, type_name, unit_name, labels) takes 4 arguments")
-        SensorUuidExpression(args(0), args(1), args(2), args(3))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProductExpression].getName, "vec_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "vec_dot(a, b) takes 2 arguments")
-        DotProductExpression(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_q8"),
-      new ExpressionInfo(classOf[VecQuantize8Expression].getName, "vec_q8"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "vec_q8(v) takes 1 argument")
-        VecQuantize8Expression(args(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot8"),
-      new ExpressionInfo(classOf[VecDot8Expression].getName, "vec_dot8"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "vec_dot8(a, b) takes 2 arguments")
-        VecDot8Expression(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("text_shingles"),
-      new ExpressionInfo(
-        classOf[TextShinglesExpression].getName, "text_shingles"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "text_shingles(text, n) takes 2 arguments")
-        require(args(1).foldable, "text_shingles n must be a literal")
-        TextShinglesExpression(args(0),
-          args(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("gear_chunks"),
-      new ExpressionInfo(
-        classOf[GearChunksExpression].getName, "gear_chunks"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "gear_chunks(text, mask_bits) takes 2 arguments")
-        require(args(1).foldable, "gear_chunks mask_bits must be a literal")
-        GearChunksExpression(args(0),
-          args(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bpe_split"),
-      new ExpressionInfo(classOf[BpeSplitExpression].getName, "bpe_split"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "bpe_split(word) takes 1 argument")
-        BpeSplitExpression(args(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("char_stats"),
-      new ExpressionInfo(classOf[CharStatsExpression].getName, "char_stats"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "char_stats(text) takes 1 argument")
-        CharStatsExpression(args(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(
-        classOf[NormalizeExpression].getName, "unicode_normalize"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "unicode_normalize(text, form) takes 2 arguments")
-        require(args(1).foldable, "unicode_normalize form must be a literal")
-        NormalizeExpression(args(0),
-          args(1).eval().asInstanceOf[
-            org.apache.spark.unsafe.types.UTF8String].toString)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFpsExpression].getName, "winnow_fps"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "winnow_fps(text, k, w) takes 3 arguments")
-        require(args(1).foldable && args(2).foldable,
-          "winnow_fps k and w must be literals")
-        WinnowFpsExpression(args(0),
-          args(1).eval().asInstanceOf[Number].intValue(),
-          args(2).eval().asInstanceOf[Number].intValue())
-      }))
+    GraftExtensions.functions.foreach(f => ext.injectFunction((
+      new FunctionIdentifier(f.name),
+      new ExpressionInfo(f.cls.getName, f.name),
+      f.resolve _)))
   }
+}
+
+object GraftExtensions {
+  /** One SQL function: `usage` names it and its parameters (its arity is
+    * their count), and the parameters at `literals` must be constant —
+    * `build` evaluates them once, at resolution.
+    */
+  final case class SqlFunction(usage: String, cls: Class[_], literals: Int*)(
+      build: Seq[Expression] => Expression) {
+    val name: String = usage.takeWhile(_ != '(')
+    val params: Seq[String] =
+      usage.dropWhile(_ != '(').drop(1).takeWhile(_ != ')').split(",")
+        .map(_.trim).toSeq
+    def arity: Int = params.length
+
+    def resolve(args: Seq[Expression]): Expression = {
+      require(args.length == arity,
+        s"$usage takes $arity argument${if (arity == 1) "" else "s"}")
+      require(literals.forall(args(_).foldable),
+        s"$name ${literals.map(params).mkString(" and ")} must be " +
+          (if (literals.length == 1) "a literal" else "literals"))
+      build(args)
+    }
+  }
+
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("sensor_uuid(name, type_name, unit_name, labels)",
+      classOf[SensorUuidExpression])(a =>
+      SensorUuidExpression(a(0), a(1), a(2), a(3))),
+    SqlFunction("vec_dot(a, b)", classOf[DotProductExpression])(a =>
+      DotProductExpression(a(0), a(1))),
+    SqlFunction("vec_q8(v)", classOf[VecQuantize8Expression])(a =>
+      VecQuantize8Expression(a(0))),
+    SqlFunction("vec_dot8(a, b)", classOf[VecDot8Expression])(a =>
+      VecDot8Expression(a(0), a(1))),
+    SqlFunction("text_shingles(text, n)", classOf[TextShinglesExpression], 1)(
+      a => TextShinglesExpression(a(0), int(a(1)))),
+    SqlFunction("gear_chunks(text, mask_bits)", classOf[GearChunksExpression],
+      1)(a => GearChunksExpression(a(0), int(a(1)))),
+    SqlFunction("bpe_split(word)", classOf[BpeSplitExpression])(a =>
+      BpeSplitExpression(a(0))),
+    SqlFunction("char_stats(text)", classOf[CharStatsExpression])(a =>
+      CharStatsExpression(a(0))),
+    SqlFunction("unicode_normalize(text, form)", classOf[NormalizeExpression],
+      1)(a => NormalizeExpression(a(0), a(1).eval()
+        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)),
+    SqlFunction("winnow_fps(text, k, w)", classOf[WinnowFpsExpression], 1, 2)(
+      a => WinnowFpsExpression(a(0), int(a(1)), int(a(2)))))
 }

@@ -597,7 +597,7 @@ object LinearRegex {
       pos += 4; cp
     }
 
-    private def predEscape(neg: Boolean): Int = {
+    private def predEscape(): Int = {
       // pos sits just past 'p'/'P'; returns predicate id
       val name =
         if (peek == '{') {
@@ -630,9 +630,9 @@ object LinearRegex {
       case 'Z' => AssertA(AEoz)
       case 'x' => lit(hexEscape(), f)
       case 'u' => lit(uniEscape(), f)
-      case 'p' => ClsA(new CharSet(Array.empty, Array(predEscape(false)),
+      case 'p' => ClsA(new CharSet(Array.empty, Array(predEscape()),
         negated = false, ci = false))
-      case 'P' => ClsA(new CharSet(Array.empty, Array(predEscape(true)),
+      case 'P' => ClsA(new CharSet(Array.empty, Array(predEscape()),
         negated = true, ci = false))
       case 'Q' =>
         val end = pat.indexOf("\\E", pos)
@@ -667,7 +667,7 @@ object LinearRegex {
       case 'b' => 0x8 // backspace inside a class
       case 'x' => hexEscape()
       case 'u' => uniEscape()
-      case 'p' => preds += predEscape(false); -2
+      case 'p' => preds += predEscape(); -2
       case 'P' => err("negated \\P inside [...] is unsupported")
       case c if c.isDigit => err(s"backreferences $Unsupported")
       case c => c.toInt // punctuation escape

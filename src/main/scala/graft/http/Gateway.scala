@@ -1023,7 +1023,7 @@ final class Gateway(
     * Time bounds, when known, prune month partitions at the scan.
     */
   private def numericFloatView(
-      startUs: Option[Long] = None, endUs: Option[Long] = None): DataFrame =
+      startUs: Option[Long], endUs: Option[Long]): DataFrame =
     Seq(SensorType.Float, SensorType.Integer, SensorType.Numeric)
       .map(t => store.samplesInRange(t, startUs, endUs)
         .select(col("sensor_id"), col("timestamp_us"),

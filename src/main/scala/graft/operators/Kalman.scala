@@ -61,7 +61,7 @@ object Kalman {
           private def advance(): Unit = {
             if (!buf.hasNext) { pending = None; return }
             val head = buf.next()
-            var id = head.sensor_id
+            val id = head.sensor_id
             var n = 1L
             var x = head.value
             var p = p0

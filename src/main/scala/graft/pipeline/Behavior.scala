@@ -1147,22 +1147,16 @@ object Behavior {
       idCol: String, pageCol: String,
       gapUs: Long = 1800000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol), col(idCol))
+    val w = Window.partitionBy(col("__u")).orderBy(col("__t"), col("__id"))
     val marked = events
       .select(col(userCol).as("__u"), col(tsCol).as("__t"),
         col(idCol).as("__id"), col(pageCol).as("__p"))
       .withColumn("__brk",
-        when(lag(col("__t"), 1).over(Window.partitionBy(col("__u"))
-          .orderBy(col("__t"), col("__id"))).isNull ||
-          col("__t") - lag(col("__t"), 1)
-            .over(Window.partitionBy(col("__u"))
-              .orderBy(col("__t"), col("__id"))) >= gapUs, 1)
+        when(lag(col("__t"), 1).over(w).isNull ||
+          col("__t") - lag(col("__t"), 1).over(w) >= gapUs, 1)
           .otherwise(0))
       .withColumn("__sid", sum(col("__brk"))
-        .over(Window.partitionBy(col("__u"))
-          .orderBy(col("__t"), col("__id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val sessions = marked.groupBy(col("__u"), col("__sid"))
       .agg(count(lit(1)).as("__n"),
         min(struct(col("__t"), col("__id"), col("__p")))

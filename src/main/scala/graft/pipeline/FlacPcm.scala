@@ -575,7 +575,7 @@ object FlacPcm {
     var decoded = 0L
     val stypes = Vector.newBuilder[Int]
     while (br.pos < bytes.length) {
-      decoded += decodeFrame(bytes, br, rate, channels, bps, chans, stypes)
+      decoded += decodeFrame(bytes, br, channels, bps, chans, stypes)
     }
     if (total > 0)
       require(decoded == total,
@@ -612,7 +612,7 @@ object FlacPcm {
 
   /** @return samples decoded in this frame (per channel). */
   private def decodeFrame(
-      bytes: Array[Byte], br: BitReader, siRate: Int, siChannels: Int,
+      bytes: Array[Byte], br: BitReader, siChannels: Int,
       siBps: Int, out: Array[scala.collection.mutable.Builder[Int,
         Array[Int]]],
       stypes: scala.collection.mutable.Builder[Int, Vector[Int]]): Int = {

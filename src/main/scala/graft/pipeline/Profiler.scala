@@ -262,7 +262,7 @@ object Profiler {
     val one = df.agg(aggs.head, aggs.tail: _*)
     def d(x: Double): String = s"CAST($x AS DOUBLE)"
     val rowCells = rowLocal.zipWithIndex.map {
-      case (MinRows(n), i) =>
+      case (MinRows(n), _) =>
         s"'min_rows', __rows, ${d(n.toDouble)}, __rows >= ${d(n.toDouble)}"
       case (c, i) =>
         val thr = c match {
@@ -441,13 +441,11 @@ object Profiler {
       lo: Double, hi: Double, k: Int): DataFrame = {
     require(k >= 2 && hi > lo, "need k >= 2 buckets and hi > lo")
     val width = (hi - lo) / k
-    def bucket(df: DataFrame): Column = {
-      val v = col(valCol).cast("double")
-      least(greatest(floor((v - lit(lo)) / lit(width)), lit(0.0)),
-        lit((k - 1).toDouble)).cast("long")
-    }
-    val av = a.groupBy(bucket(a).as("b")).agg(count(lit(1)).as("__ca"))
-    val bv = b.groupBy(bucket(b).as("b")).agg(count(lit(1)).as("__cb"))
+    val bucket = least(greatest(floor(
+      (col(valCol).cast("double") - lit(lo)) / lit(width)), lit(0.0)),
+      lit((k - 1).toDouble)).cast("long")
+    val av = a.groupBy(bucket.as("b")).agg(count(lit(1)).as("__ca"))
+    val bv = b.groupBy(bucket.as("b")).agg(count(lit(1)).as("__cb"))
     val m = av.join(bv, Seq("b"), "full")
       .select(col("b"), coalesce(col("__ca"), lit(0L)).as("__ca"),
         coalesce(col("__cb"), lit(0L)).as("__cb"))
@@ -1207,7 +1205,7 @@ object Profiler {
     * BIGINT range for |v| < 3·10³ (measurement-sized values); callers
     * with larger magnitudes pass a coarser quantization scale.
     */
-  private def microUnits(v: Column, unitsPerValue: Double = 1e6): Column =
+  private def microUnits(v: Column, unitsPerValue: Double): Column =
     floor(v.cast("double") * unitsPerValue).cast("long")
 
   /** Per-series autocorrelation at lags 1..maxLag — the

@@ -847,7 +847,7 @@ object ExtendedPromQL {
     // (`(view % 7) ^ 2` recurses into `view % 7`); selector-level parens
     // are still handled by the selector parser unchanged
     if (s.startsWith("(")) {
-      val (inner, rest) = parenGroup(s, s)
+      val (inner, rest) = parenGroup(s)
       if (rest.trim.isEmpty) return parse(inner, nowUs)
     }
     topLevelSetOp(s) match {
@@ -960,7 +960,7 @@ object ExtendedPromQL {
           throw PromQLError(
             s"$head is not supported: ${UnsupportedFns(head)}")
         if (head == "label_replace" || head == "label_join") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val args = splitArgs(inner)
@@ -988,7 +988,7 @@ object ExtendedPromQL {
               args.drop(3).map(str(_, "src label")), vec)
           }
         } else if (head == "count_values") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val ArgRe = """(?s)^\s*"([^"]*)"\s*,\s*(.*)$""".r
@@ -1003,13 +1003,13 @@ object ExtendedPromQL {
               throw PromQLError("count_values expects (\"label\", selector)")
           }
         } else if (head == "vector" && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           VectorLitQ(parseScalar(inner.trim).getOrElse(throw PromQLError(
             s"vector() expects a scalar literal, got '${inner.trim}'")))
         } else if (head == "scalar" && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           parse(inner, nowUs) match {
@@ -1018,13 +1018,13 @@ object ExtendedPromQL {
             case q => ScalarQ(q)
           }
         } else if (head == "absent") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val sel = parseSelector(inner, nowUs)
           AbsentQ(sel.matchers, sel.startUs, sel.endUs)
         } else if (head == "histogram_quantile") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val comma = inner.indexOf(',')
@@ -1055,17 +1055,17 @@ object ExtendedPromQL {
             without = t.startsWith("without")
             haveClause = true
             val (ls, rest) = parenGroup(
-              t.stripPrefix(if (without) "without" else "by").trim, s)
+              t.stripPrefix(if (without) "without" else "by").trim)
             by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             t = rest.trim
           }
-          val (inner, rest0) = parenGroup(t, s)
+          val (inner, rest0) = parenGroup(t)
           var restC = rest0.trim
           if (!haveClause &&
               (restC.startsWith("by") || restC.startsWith("without"))) {
             without = restC.startsWith("without")
             val (ls, r2) = parenGroup(
-              restC.stripPrefix(if (without) "without" else "by").trim, s)
+              restC.stripPrefix(if (without) "without" else "by").trim)
             by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             restC = r2.trim
           }
@@ -1089,7 +1089,7 @@ object ExtendedPromQL {
           TopKQ(head, k, by, without, sel.matchers, sel.startUs,
             sel.endUs)
         } else if (head == "limitk" || head == "limit_ratio") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val comma = inner.indexOf(',')
@@ -1121,7 +1121,7 @@ object ExtendedPromQL {
             LimitRatioQ(r, sel.matchers, sel.startUs, sel.endUs)
           }
         } else if (head == "quantile_over_time") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val comma = inner.indexOf(',')
@@ -1145,7 +1145,7 @@ object ExtendedPromQL {
             QuantileOverTimeQ(phi, sel.matchers, sel.startUs, sel.endUs)
           }
         } else if (head == "mad_over_time") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           parseSubquery("mad", None, inner, nowUs).getOrElse {
@@ -1156,7 +1156,7 @@ object ExtendedPromQL {
             MadOverTimeQ(sel.matchers, sel.startUs, sel.endUs)
           }
         } else if (head == "predict_linear") {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val args = splitArgs(inner)
@@ -1175,7 +1175,7 @@ object ExtendedPromQL {
             head == "double_exponential_smoothing") {
           // Prometheus 3 renamed holt_winters (it is double exponential
           // smoothing, not the seasonal Holt-Winters); accept both
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val args = splitArgs(inner)
@@ -1198,7 +1198,7 @@ object ExtendedPromQL {
               "holt_winters expects a range selector (like metric[5m])")
           HoltWintersQ(sfp, tfp, sel.matchers, sel.startUs, sel.endUs)
         } else if (head == "timestamp" && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val sel = parseSelector(inner, nowUs)
@@ -1207,7 +1207,7 @@ object ExtendedPromQL {
           TimestampQ(sel.matchers, sel.startUs, sel.endUs)
         } else if ((head == "sort_by_label" || head == "sort_by_label_desc")
             && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val args = splitArgs(inner)
@@ -1223,7 +1223,7 @@ object ExtendedPromQL {
             requireVectorOperand(parse(args.head, nowUs), "sorted"))
         } else if ((head == "sort" || head == "sort_desc") &&
             after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           SortQ(head == "sort_desc",
@@ -1231,7 +1231,7 @@ object ExtendedPromQL {
         } else if (head == "absent_over_time") {
           // absent(sel) over a range window — AbsentQ's machinery with
           // the window taken from the range selector
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           if (!inner.contains("["))
@@ -1243,7 +1243,7 @@ object ExtendedPromQL {
           val op = head.stripSuffix("_over_time")
           if (!OverTimeOps.contains(op))
             throw PromQLError(s"Unsupported function: $head")
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           parseSubquery(op, None, inner, nowUs).getOrElse {
@@ -1254,7 +1254,7 @@ object ExtendedPromQL {
             OverTimeQ(op, sel.matchers, sel.startUs, sel.endUs)
           }
         } else if (RangeFnOps.contains(head) && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           if (!inner.contains("["))
@@ -1263,7 +1263,7 @@ object ExtendedPromQL {
           val sel = parseSelector(inner, nowUs)
           RangeFnQ(head, sel.matchers, sel.startUs, sel.endUs)
         } else if (MathFnArity.contains(head) && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim, s)
+          val (inner, rest) = parenGroup(after.trim)
           if (rest.trim.nonEmpty)
             throw PromQLError(s"Unexpected trailing content in query: '$rest'")
           val args = splitArgs(inner)
@@ -1291,17 +1291,17 @@ object ExtendedPromQL {
             without = t.startsWith("without")
             haveClause = true
             val (ls, rest) = parenGroup(
-              t.stripPrefix(if (without) "without" else "by").trim, s)
+              t.stripPrefix(if (without) "without" else "by").trim)
             by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             t = rest.trim
           }
-          val (inner, rest0) = parenGroup(t, s)
+          val (inner, rest0) = parenGroup(t)
           var rest = rest0.trim
           if (!haveClause &&
               (rest.startsWith("by") || rest.startsWith("without"))) {
             without = rest.startsWith("without")
             val (ls, r2) = parenGroup(
-              rest.stripPrefix(if (without) "without" else "by").trim, s)
+              rest.stripPrefix(if (without) "without" else "by").trim)
             by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             rest = r2.trim
           }
@@ -1345,16 +1345,16 @@ object ExtendedPromQL {
             without = t.startsWith("without")
             haveClause = true
             val (ls, rest) = parenGroup(
-              t.stripPrefix(if (without) "without" else "by").trim, s)
+              t.stripPrefix(if (without) "without" else "by").trim)
             by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             t = rest.trim
           }
-          val (inner, rest0) = parenGroup(t, s)
+          val (inner, rest0) = parenGroup(t)
           var rest = rest0.trim
           if (!haveClause && (rest.startsWith("by") || rest.startsWith("without"))) {
             without = rest.startsWith("without")
             val (ls, r2) = parenGroup(
-              rest.stripPrefix(if (without) "without" else "by").trim, s)
+              rest.stripPrefix(if (without) "without" else "by").trim)
             by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
             rest = r2.trim
           }
@@ -1432,7 +1432,7 @@ object ExtendedPromQL {
   /** Extract a balanced `(...)` group from the head of `t`; returns
     * (inner, rest).
     */
-  private def parenGroup(t: String, whole: String): (String, String) = {
+  private def parenGroup(t: String): (String, String) = {
     if (!t.startsWith("("))
       throw PromQLError(s"Failed to parse PromQL query at: '$t'")
     // the closer matching the leading opener is the first depth-0 `)`
@@ -2172,7 +2172,7 @@ object ExtendedPromQL {
       case qa: QuantileAggQ =>
         stepAggVec(perStepAny(qa.inner, steps, refUs, selectFor, samples),
           percentile(col("value"), lit(qa.phi)), qa.by, qa.without)
-      case other =>
+      case _ =>
         throw PromQLError("Unsupported subquery inner expression")
     }
 

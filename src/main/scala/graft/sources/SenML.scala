@@ -30,7 +30,6 @@ object SenML {
     * into resolved rows: name, unit, timestamp_us, typed value columns.
     */
   def parse(docs: Dataset[String]): DataFrame = {
-    val spark = docs.sparkSession
     val exploded = docs.toDF("json")
       .withColumn("doc_id", monotonically_increasing_id())
       .select(col("doc_id"),

@@ -212,10 +212,16 @@ final class SensorStore(
     *
     * The renames pass the [[CommitGate]] first: work abandoned by its
     * caller (a timed-out request) withdraws here instead of landing.
-    * Returns the names of the data files moved in.
+    *
+    * A compaction names the files its rows `replaces`: they are deleted
+    * only after every staged file has moved in (the committed names then
+    * read `compact-<stamp>-<i>`), so a racing reader sees the old files,
+    * old + new, or new + a suffix of old — never a missing row. Returns
+    * the names of the data files moved in.
     */
   private def stagedAppend(
-      dir: String, dedupKey: Option[String] = None)(
+      dir: String, dedupKey: Option[String] = None,
+      replaces: Seq[org.apache.hadoop.fs.Path] = Nil)(
       writeTo: String => Unit): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -232,6 +238,7 @@ final class SensorStore(
       if (dedupKey.isDefined) s"$dir.publish.$stamp.$attempt.tmp"
       else s"$dir.publish.$stamp.tmp")
     val base = new org.apache.hadoop.fs.Path(dir)
+    val kind = if (replaces.isEmpty) "publish" else "compact"
     // the table dir is created ONLY when a data file actually moves in
     // (walk's per-file mkdirs): an all-filtered batch (e.g. nothing but
     // NaN staleness markers) must not leave an empty dir behind —
@@ -256,7 +263,7 @@ final class SensorStore(
             else new org.apache.hadoop.fs.Path(base, rel)
           fs.mkdirs(targetDir)
           val target = new org.apache.hadoop.fs.Path(
-            targetDir, s"publish-$stamp-$idx$suffix")
+            targetDir, s"$kind-$stamp-$idx$suffix")
           idx += 1
           if (dedupKey.isDefined && fs.exists(target)) true
           else {
@@ -300,6 +307,7 @@ final class SensorStore(
         throw new java.io.IOException(
           s"staged append could not move committed files into $dir")
       }
+      replaces.foreach(deleteDataFile(fs, _))
       moved.map(_.getName).toSeq
     } finally fs.delete(tmp, true)
   }
@@ -510,24 +518,17 @@ final class SensorStore(
     */
   def catalogSnapshot: SensorStore.CatalogSnapshot = catalog()
 
-  /** Compact the catalog's accumulated publish files into one. Ordered so
-    * a concurrent reader is correct at every step under dedup-on-read:
-    * the compacted file is ADDED first (readers see old, or old + new =
-    * duplicates that dedup away), the replaced files are deleted after
-    * (readers see new + a suffix of old — still complete). Never a
-    * window with missing rows or an empty directory.
-    *
-    * Failure safety: every rename's result is CHECKED — if moving a
-    * compacted file in fails, the already-moved ones are withdrawn
-    * (duplicates under dedup, safe to remove) and the old files are left
-    * untouched, so a failed compaction never loses catalog data. The tmp
-    * dir and the compacted names carry a UUID, so racing compactions
-    * never collide on paths; each deletes ONLY the files it listed at
-    * start, and every row it read lives in its own compacted output —
-    * so a row always survives in at least one live file (a compactor
-    * that lists mid-race reads the other's output via
-    * [[readCatalog]]'s vanished-file tolerance, and duplicates dedup
-    * away on read).
+  /** Compact the catalog's accumulated publish files into one: a staged
+    * append of their deduped rows that replaces them (see
+    * [[stagedAppend]]). Correct for a concurrent reader at every step
+    * under dedup-on-read: old + compacted rows are duplicates that dedup
+    * away. A failed compaction never loses catalog data: a failed move-in
+    * is withdrawn and the old files stay. Racing compactions never
+    * collide on paths (the staging and the compacted names carry a UUID);
+    * each deletes ONLY the files it listed at start, and every row it read
+    * lives in its own compacted output — so a row always survives in at
+    * least one live file (a compactor that lists mid-race reads the
+    * other's output via [[readCatalog]]'s vanished-file tolerance).
     *
     * Remaining reader caveat (single-process stores won't see it): Spark
     * lists files eagerly but reads them lazily, so a reader that listed
@@ -537,55 +538,28 @@ final class SensorStore(
     * file is a superset under dedup-on-read).
     */
   def compactCatalog(): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(catalogDir)
     val oldNames = catalogFiles()
     if (oldNames.size <= 1) return
-    val old = oldNames.toSeq.map(new org.apache.hadoop.fs.Path(dir, _))
-    val stamp = s"${System.currentTimeMillis()}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$catalogDir.compact.$stamp.tmp")
-    val moved = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
+    val old = oldNames.toSeq.map(new org.apache.hadoop.fs.Path(catalogDir, _))
     try {
+      val added = stagedAppend(catalogDir, replaces = old)(p =>
+        readCatalog(old.map(_.toString): _*).dropDuplicates("uuid")
+          .coalesce(1).write.mode(SaveMode.Overwrite).format(format).save(p))
+      // same rows, new files: re-key the snapshot
+      advance(oldNames, added.toSet, Seq.empty)
+      refreshViews()
+    } catch {
       // EXPLICIT-path loads are not covered by ignoreMissingFiles (the
       // option tolerates files vanishing between listing and scan, not
       // missing paths at load time), so a racing compactor's delete
-      // between our catalogFiles() and this read throws — and any thrown
-      // rename must withdraw the partial move-in. Both cases land in
-      // the catch: compaction is OPPORTUNISTIC maintenance, the
-      // triggering append already succeeded, old files are intact, and
-      // withdrawn duplicates were safe under dedup-on-read — so skip
+      // between our listing and this read throws, as does a failed
+      // move-in. Compaction is OPPORTUNISTIC maintenance: the triggering
+      // append already succeeded and the old files are intact, so skip
       // this round instead of failing the publish.
-      val compacted = readCatalog(old.map(_.toString): _*)
-        .dropDuplicates("uuid").coalesce(1)
-      compacted.write.mode(SaveMode.Overwrite).format(format)
-        .save(tmp.toString)
-      val ok = fs.listStatus(tmp)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-        .zipWithIndex.forall { case (f, i) =>
-          val target = new org.apache.hadoop.fs.Path(
-            dir, s"compact-$stamp-$i$suffix")
-          val renamed = fs.rename(f.getPath, target)
-          if (renamed) moved += target
-          renamed
-        }
-      if (!ok) {
-        // abort: withdraw the partial move-in, keep old files intact
-        moved.foreach(deleteDataFile(fs, _))
-        return
-      }
-      old.foreach(deleteDataFile(fs, _))
-      // same rows, new files: re-key the snapshot
-      advance(oldNames, moved.map(_.getName).toSet, Seq.empty)
-      refreshViews()
-    } catch {
       case scala.util.control.NonFatal(e) =>
-        moved.foreach(deleteDataFile(fs, _))
         System.err.println(
           s"[store] catalog compaction skipped (racing writer?): $e")
-    } finally fs.delete(tmp, true)
+    }
   }
 
   /** Typed sample scan in the canonical 3-column layout. Timestamp
@@ -712,8 +686,9 @@ final class SensorStore(
 
   /** Janitor for crashed publish/compaction staging: a writer that dies
     * between staging and rename-in leaves a `*.publish.<stamp>.tmp`
-    * sibling of the table dir (or a `.*.compact.<stamp>.tmp` sibling of
-    * the month dirs) — invisible to readers, but accumulating forever.
+    * sibling of the table dir (or, from older stores, a
+    * `.*.compact.<stamp>.tmp` sibling of the month dirs) — invisible to
+    * readers, but accumulating forever.
     * Only staging whose NAME-EMBEDDED stamp is older than the horizon is
     * swept, so an in-flight writer is never raced: the horizon bounds
     * publish duration, not clock skew (stamps and the sweep clock come
@@ -724,8 +699,9 @@ final class SensorStore(
       tableDir: org.apache.hadoop.fs.Path,
       horizonMs: Long): Unit = {
     val now = System.currentTimeMillis()
-    // matches both staging shapes: random publishes/compactions
-    // (.publish.<millis>-<hex8>.tmp) and keyed streaming replays
+    // matches every staging shape: random publishes/compactions
+    // (.publish.<millis>-<hex8>.tmp, legacy .compact.<millis>-<hex8>.tmp)
+    // and keyed streaming replays
     // (.publish.c<key>.<millis>-<hex8>.tmp) — the horizon always reads
     // the trailing millis
     val stampRe =
@@ -743,10 +719,10 @@ final class SensorStore(
   }
 
   /** Rewrite one `month=` partition directory to `targetPartitions`
-    * sorted files — same move-in-beside-then-delete standard as
-    * [[compactCatalog]], so the month directory NEVER disappears
-    * mid-compaction (the previous delete-then-rename left a window where
-    * a racing reader saw a missing month).
+    * sorted files: a staged append of the month's rows that replaces its
+    * files (see [[stagedAppend]]), so the month directory NEVER
+    * disappears mid-compaction. The staging is the table-level publish
+    * sibling, never a `month=` sibling partition discovery could read.
     *
     * Mid-state visibility contract: a reader listing during the swap
     * sees old files, old + compacted (every row doubled), or compacted +
@@ -754,9 +730,9 @@ final class SensorStore(
     * missing or empty month. Readers needing exact counts while a
     * vacuum runs should read through the exact-dedup operator (S15,
     * `SensorOps.dedup`), which makes every mid-state exact — the
-    * same dedup-on-read contract the catalog relies on. Rename results
-    * are checked; on failure the partial move-in is withdrawn and the
-    * old files stay, so a failed vacuum never loses samples.
+    * same dedup-on-read contract the catalog relies on. A failed move-in
+    * is withdrawn and thrown; the old files stay, so a failed vacuum never
+    * loses samples.
     *
     * A reader that LISTED before the final delete but scans after will
     * fault on the vanished file — for value tables that fault must stay
@@ -770,50 +746,25 @@ final class SensorStore(
       t: SensorType,
       partDir: org.apache.hadoop.fs.Path,
       targetPartitions: Int): Unit = {
-    val stamp = s"${System.currentTimeMillis()}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(
-      partDir.getParent, s".${partDir.getName}.compact.$stamp.tmp")
     val old = fs.listStatus(partDir)
       .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-      .map(_.getPath)
+      .map(_.getPath).toSeq
     if (old.isEmpty) return
-    // Scan EXACTLY the listed files (as compactCatalog does): scanning
-    // the live directory lazily would fold a publish that lands between
-    // this listing and the write action into the compacted output while
-    // its own file — absent from `old` — survives the delete, leaving
-    // every one of its rows permanently doubled in a table with no
-    // dedup-on-read.
-    readDir(Schemas.samples(t), old.map(_.toString): _*)
-      .repartition(targetPartitions)
-      .sortWithinPartitions("sensor_id", "timestamp_us")
-      .write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    try {
-      val moved = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.Path]
-      // a THROWN rename must withdraw like a false one: leaving the
-      // already-moved compacted files beside the old ones would double
-      // their rows in a table with no dedup-on-read
-      val ok =
-        try fs.listStatus(tmp)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-          .zipWithIndex.forall { case (f, i) =>
-            val target = new org.apache.hadoop.fs.Path(
-              partDir, s"compact-$stamp-$i$suffix")
-            val renamed = fs.rename(f.getPath, target)
-            if (renamed) moved += target
-            renamed
-          }
-        catch { case e: Throwable =>
-          moved.foreach(deleteDataFile(fs, _))
-          throw e
-        }
-      if (!ok) {
-        moved.foreach(deleteDataFile(fs, _))
-        return
-      }
-      old.foreach(deleteDataFile(fs, _))
-    } finally fs.delete(tmp, true)
+    stagedAppend(valueDir(t), replaces = old) { staging =>
+      // Scan EXACTLY the listed files (as compactCatalog does): scanning
+      // the live directory lazily would fold a publish that lands between
+      // this listing and the write action into the compacted output while
+      // its own file — absent from `old` — survives the delete, leaving
+      // every one of its rows permanently doubled in a table with no
+      // dedup-on-read.
+      readDir(Schemas.samples(t), old.map(_.toString): _*)
+        .withColumn("month", lit(partDir.getName.stripPrefix("month=")))
+        .repartition(targetPartitions)
+        .sortWithinPartitions("month", "sensor_id", "timestamp_us")
+        .write.mode(SaveMode.Overwrite).partitionBy("month").format(format)
+        .save(staging)
+    }
+    ()
   }
 
   /** Cheap store liveness probe for the gateway's readiness endpoint

@@ -1,65 +1,124 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicReference
 
-/** Scale probe over a [[ScaleGen]] dataset (r13 verdict item #4): run
-  * the headline pipeline families at ~sf1 and report seconds + shuffle
-  * read/write bytes per query — the empirical backing for the
-  * linear-in-rows claims the plan pins argue structurally. Compare
-  * against the same probe at sf0.1: a family whose time or shuffle
-  * volume grows super-linearly in rows (beyond the 10× data) is a
-  * scale bug.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+
+/** Per-query probe: runs each query once, metered, and reports its wall
+  * seconds with the Spark-machinery counters that explain them — jobs,
+  * stages, tasks, shuffle read/write bytes, memory/disk spill and the
+  * peak single-task execution memory. The counters answer "is this query
+  * slow because of data work or because of plan machinery" (a 2 MB-input
+  * query spending 40 stages is machinery), and shuffle bytes are what
+  * [[ScaleGate]] diffs across two [[ScaleGen]] scales: a family whose
+  * shuffle volume grows super-linearly in rows is a scale bug.
+  *
+  * `--plans <dir>` adds an untimed cold run before the metered one (so
+  * `sec` is a warm run) and writes the AQE-final
+  * `.explain("formatted")` plan to `<dir>/<query>.txt`: the before/after
+  * evidence of plan changes.
   *
   * Usage:
-  *   sbt "runMain graft.tools.ScaleProbe <dataDir> [q24_ngram_jaccard,...]"
-  * Output: one JSON line per query + a summary line.
+  *   sbt "runMain graft.tools.ScaleProbe <dataDir> [q1,q2,...|--all] \
+  *        [--out <file.jsonl>] [--plans <dir>]"
+  * Output: one JSON line per query ([[line]] / [[errorLine]]) + a
+  * summary line.
   */
 object ScaleProbe {
 
+  /** Spark-machinery counters: cumulative in the meter, per query as the
+    * difference of two snapshots. `peakTaskMem` is a maximum, reset per
+    * query instead of subtracted.
+    */
+  final case class Counts(
+      jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+      shuffleRead: Long = 0, shuffleWrite: Long = 0,
+      memSpilled: Long = 0, diskSpilled: Long = 0, peakTaskMem: Long = 0) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, shuffleRead - o.shuffleRead,
+      shuffleWrite - o.shuffleWrite, memSpilled - o.memSpilled,
+      diskSpilled - o.diskSpilled, peakTaskMem)
+  }
+
   /** ONE meter for the JVM's lifetime, read as before/after snapshots
     * with a listener-bus DRAIN BARRIER around each query
-    * ([[org.apache.spark.graft.ListenerBarrier]]). The previous
-    * per-query add/remove scheme mis-attributed under event-flood:
-    * `AsyncEventQueue` delivers backlogged events (posted before
-    * registration) to newly-added listeners, so a heavy query's late
-    * stage completions landed in the NEXT query's meter (measured: a
-    * 1-row audit query "inheriting" 700 MB of shuffle reads).
-    * peakTaskMemory is reset between queries (single-threaded probe).
+    * ([[org.apache.spark.graft.ListenerBarrier]]). A per-query add/remove
+    * scheme mis-attributes under event-flood: `AsyncEventQueue` delivers
+    * backlogged events (posted before registration) to newly-added
+    * listeners, so a heavy query's late stage completions landed in the
+    * NEXT query's meter (measured: a 1-row audit query "inheriting"
+    * 700 MB of shuffle reads).
     */
-  private final class ShuffleMeter extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong()
-    val write = new java.util.concurrent.atomic.AtomicLong()
-    // memory-pressure evidence (r15): spill totals say whether the
-    // working set exceeded execution memory; peakTaskMemory (the MAX
-    // single-task execution-memory peak) is the number that must stay
-    // bounded for the 1000-executor story — a task whose peak grows
-    // with total data size is the cliff
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong()
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong()
-    val peakTaskMemory = new java.util.concurrent.atomic.AtomicLong()
+  private final class QueryMeter extends SparkListener {
+    private val counts = new AtomicReference(Counts())
+    def snap(): Counts = counts.get()
+    def resetPeak(): Unit = { counts.updateAndGet(_.copy(peakTaskMem = 0)); () }
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      counts.updateAndGet(c => c.copy(jobs = c.jobs + 1)); ()
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpilled.addAndGet(m.memoryBytesSpilled)
-        diskSpilled.addAndGet(m.diskBytesSpilled)
-      }
+      counts.updateAndGet(c =>
+        if (m == null) c.copy(stages = c.stages + 1)
+        else c.copy(stages = c.stages + 1,
+          shuffleRead = c.shuffleRead + m.shuffleReadMetrics.totalBytesRead,
+          shuffleWrite = c.shuffleWrite + m.shuffleWriteMetrics.bytesWritten,
+          memSpilled = c.memSpilled + m.memoryBytesSpilled,
+          diskSpilled = c.diskSpilled + m.diskBytesSpilled))
+      ()
     }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+    // memory-pressure evidence: spill totals say whether the working set
+    // exceeded execution memory; the peak single-task memory must stay
+    // bounded as data grows — a task whose peak grows with total data
+    // size is the scale cliff
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
-      if (m != null)
-        peakTaskMemory.getAndAccumulate(m.peakExecutionMemory, Math.max)
+      counts.updateAndGet(c => c.copy(tasks = c.tasks + 1,
+        peakTaskMem =
+          if (m == null) c.peakTaskMem
+          else math.max(c.peakTaskMem, m.peakExecutionMemory)))
+      ()
     }
   }
 
-  private final case class Snap(
-      read: Long, write: Long, mem: Long, disk: Long)
-  private def snap(m: ShuffleMeter): Snap =
-    Snap(m.read.get(), m.write.get(), m.memSpilled.get(),
-      m.diskSpilled.get())
+  /** Minimal JSON string escape: backslash, quote, and all control
+    * characters (a raw tab/newline in an exception message would produce
+    * an invalid JSONL line).
+    */
+  private[tools] def jsonEscape(s: String): String =
+    s.flatMap {
+      case '\\' => "\\\\"
+      case '"' => "\\\""
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+
+  /** One query's probe line. The keys up to `shuffle_write_b` keep the
+    * order [[ScaleGate.parseProbe]] reads; raw byte counts beside the MB
+    * ones because MB truncation hides the growth ratio of small-shuffle
+    * queries. `plan` is a `--plans` run's (cold seconds, exchanges in
+    * the final plan).
+    */
+  def line(query: String, sec: Double, rows: Long, c: Counts,
+      plan: Option[(Double, Int)] = None): String = {
+    val mb = 1048576
+    f"""{"query":"$query","sec":$sec%.3f,"rows":$rows,""" +
+      s""""shuffle_read_mb":${c.shuffleRead / mb},""" +
+      s""""shuffle_write_mb":${c.shuffleWrite / mb},""" +
+      s""""shuffle_read_b":${c.shuffleRead},""" +
+      s""""shuffle_write_b":${c.shuffleWrite},""" +
+      s""""mem_spilled_mb":${c.memSpilled / mb},""" +
+      s""""disk_spilled_mb":${c.diskSpilled / mb},""" +
+      s""""peak_task_mem_mb":${c.peakTaskMem / mb},""" +
+      s""""jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks}""" +
+      plan.fold("") { case (cold, exchanges) =>
+        f""","cold_sec":$cold%.3f,"plan_exchanges":$exchanges""" } + "}"
+  }
+
+  /** The line of a query that threw: it is never recorded as a time. */
+  def errorLine(query: String, message: String): String =
+    s"""{"query":"$query","error":"${jsonEscape(String.valueOf(message))}"}"""
 
   val DefaultQueries: Seq[String] = Seq(
     "q24_ngram_jaccard", "q25_minhash_lsh", "q57_dedup_clusters",
@@ -67,31 +126,27 @@ object ScaleProbe {
     "q197_spearman")
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty,
-      "usage: ScaleProbe <dataDir> [q1,q2,...|--all] [--out <file>]")
+    require(args.nonEmpty, "usage: ScaleProbe <dataDir> [q1,q2,...|--all] " +
+      "[--out <file>] [--plans <dir>]")
     val dir = args(0)
-    // index-based flag parsing ('--out' consumes its following token by
-    // position) — same fix as PlanProbe: string-equality filtering
-    // dropped positional args that equalled the --out value
-    val (outFile, rest) = {
-      var out: Option[String] = None
-      val pos = Seq.newBuilder[String]
-      var i = 1
-      while (i < args.length) {
-        if (args(i) == "--out" && i + 1 < args.length) {
-          out = Some(args(i + 1)); i += 2
-        } else { pos += args(i); i += 1 }
-      }
-      (out, pos.result())
+    // index-based flag parsing: a flag consumes exactly its following
+    // token by POSITION (string-equality filtering dropped any positional
+    // arg that happened to equal a flag's value)
+    val flags = Map.newBuilder[String, String]
+    val rest = Seq.newBuilder[String]
+    var i = 1
+    while (i < args.length) {
+      if ((args(i) == "--out" || args(i) == "--plans") && i + 1 < args.length) {
+        flags += args(i) -> args(i + 1); i += 2
+      } else { rest += args(i); i += 1 }
     }
+    val (opts, pos) = (flags.result(), rest.result())
     val names =
-      if (rest.contains("--all"))
-        // the derived worklist (r15 verdict item 5): EVERY registry
-        // query, not a hand-picked family subset
-        graft.SparkEntry.queries.keys.toSeq.sorted
-      else if (rest.nonEmpty) rest.head.split(",").toSeq
-      else DefaultQueries
-    val sink = outFile.map(f => new java.io.PrintWriter(
+      if (pos.contains("--all")) graft.SparkEntry.queries.keys.toSeq.sorted
+      else pos.headOption.map(_.split(",").toSeq).getOrElse(DefaultQueries)
+    val planDir = opts.get("--plans").map(new java.io.File(_))
+    planDir.foreach(_.mkdirs())
+    val sink = opts.get("--out").map(f => new java.io.PrintWriter(
       new java.io.FileWriter(f, /*append=*/ false)))
     def emit(line: String): Unit = { println(line); sink.foreach { s =>
       s.println(line); s.flush() } }
@@ -99,56 +154,66 @@ object ScaleProbe {
     val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
-    val meter = new ShuffleMeter
+    val meter = new QueryMeter
     spark.sparkContext.addSparkListener(meter)
     def barrier(): Unit =
       org.apache.spark.graft.ListenerBarrier.drain(spark.sparkContext)
 
-    val results = names.flatMap { n =>
-      barrier()
-      val before = snap(meter)
-      meter.peakTaskMemory.set(0L)
-      val t0 = System.nanoTime()
-      // per-query fault isolation: a query whose tables the probe draw
-      // lacks reports and moves on instead of killing the whole probe.
-      // keep the frame so its checkpoint blocks (dedup/ANN entries
-      // materialize eagerly) are FREED after the count — an --all sweep
-      // would otherwise pin hundreds of checkpoints for the JVM's life
-      var built: org.apache.spark.sql.DataFrame = null
-      val rowsOpt =
-        try {
-          built = graft.SparkEntry.queries(n)(spark, dir)
-          Some(built.count())
-        } catch {
-          case e: Throwable =>
-            emit(s"""{"query":"$n","error":"${
-              PlanProbe.jsonEscape(String.valueOf(e.getMessage))}"}""")
-            if (built != null) graft.pipeline.PipelineCache.free(built)
-            None
-        }
-      rowsOpt.map { rows =>
-        val sec = (System.nanoTime() - t0) / 1e9
-        barrier()
-        val after = snap(meter)
-        graft.pipeline.PipelineCache.free(built)
-        val (rd, wr) = (after.read - before.read, after.write - before.write)
-        // raw byte counts too: MB truncation hides the growth ratio of
-        // small-shuffle queries, which is exactly what ScaleGate diffs
-        val line = f"""{"query":"$n","sec":$sec%.2f,"rows":$rows,""" +
-          s""""shuffle_read_mb":${rd / 1048576},""" +
-          s""""shuffle_write_mb":${wr / 1048576},""" +
-          s""""shuffle_read_b":$rd,""" +
-          s""""shuffle_write_b":$wr,""" +
-          s""""mem_spilled_mb":${(after.mem - before.mem) / 1048576},""" +
-          s""""disk_spilled_mb":${(after.disk - before.disk) / 1048576},""" +
-          s""""peak_task_mem_mb":${meter.peakTaskMemory.get() / 1048576}}"""
-        emit(line)
-        (n, sec, rows, rd, wr)
+    val secs = names.flatMap { n =>
+      // the last frame built is freed whatever happens, so its checkpoint
+      // blocks (dedup/ANN entries materialize eagerly) never outlive the
+      // query — an --all sweep would otherwise pin hundreds of them
+      var built: DataFrame = null
+      def run(): Long = {
+        built = graft.SparkEntry.queries(n)(spark, dir)
+        built.count()
       }
+      def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+      // per-query fault isolation: a query whose tables the probe draw
+      // lacks reports and moves on instead of killing the whole probe
+      try {
+        // cold run (untimed beyond wall): plan + codegen warmup
+        val cold = planDir.map { _ =>
+          val t0 = System.nanoTime()
+          run()
+          graft.pipeline.PipelineCache.free(built)
+          since(t0)
+        }
+        barrier()
+        meter.resetPeak()
+        val before = meter.snap()
+        val t0 = System.nanoTime()
+        val rows = run()
+        val sec = since(t0)
+        barrier()
+        val counts = meter.snap() - before
+        val exchanges = planDir.map { d =>
+          // the timed count() ran a SEPARATE grouped QueryExecution, so
+          // this frame's own one is unexecuted and would explain the
+          // initial AdaptiveSparkPlan (isFinalPlan=false), missing AQE's
+          // runtime join-strategy switches: one extra untimed, unmetered
+          // pass buys the final plan
+          val plan =
+            try {
+              built.queryExecution.toRdd.foreach(_ => ())
+              built.queryExecution.explainString(
+                org.apache.spark.sql.execution.ExplainMode.fromString(
+                  "formatted"))
+            } catch { case e: Throwable => s"explain failed: $e" }
+          java.nio.file.Files.writeString(
+            new java.io.File(d, s"$n.txt").toPath, plan)
+          "Exchange".r.findAllIn(plan).length
+        }
+        emit(line(n, sec, rows, counts, cold.zip(exchanges)))
+        Some(sec)
+      } catch {
+        case e: Throwable =>
+          emit(errorLine(n, e.getMessage))
+          None
+      } finally if (built != null) graft.pipeline.PipelineCache.free(built)
     }
-    val total = results.map(_._2).sum
-    emit(f"""{"probe_dir":"$dir","queries":${results.length},""" +
-      f""""total_sec":$total%.1f}""")
+    emit(f"""{"probe_dir":"$dir","queries":${secs.length},""" +
+      f""""total_sec":${secs.sum}%.1f}""")
     sink.foreach(_.close())
     spark.stop()
   }

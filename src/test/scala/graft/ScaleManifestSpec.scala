@@ -71,9 +71,8 @@ class ScaleManifestSpec extends AnyFunSuite {
       java.nio.file.Files.write(p, text.getBytes("UTF-8"))
       p.toString
     }
-    def probe(q: String, bytes: Long) =
-      s"""{"query":"$q","sec":1.0,"rows":10,"shuffle_read_b":$bytes,""" +
-        """"shuffle_write_b":0}"""
+    def probe(q: String, bytes: Long) = graft.tools.ScaleProbe.line(
+      q, 1.0, 10, graft.tools.ScaleProbe.Counts(shuffleRead = bytes))
     val small = write("small.jsonl", Seq(probe("q_flagged", 1000000L),
       probe("q_linear", 1000L)).mkString("\n"))
     val big = write("big.jsonl", Seq(probe("q_flagged", 1000000000L),
@@ -92,5 +91,26 @@ class ScaleManifestSpec extends AnyFunSuite {
     assert(graft.tools.ScaleGate.readExempt(manifest) == reasons)
     assert(regenerate().sameElements(first))
     graft.TempDirs.deleteRecursively(dir.toFile)
+  }
+
+  test("ScaleGate reads ScaleProbe's lines: plain, with --plans fields, " +
+    "and a query that threw") {
+    import graft.tools.ScaleProbe.{Counts, errorLine, line}
+    import graft.tools.ScaleGate.{Probe, parseProbe}
+    val counts = Counts(jobs = 3, stages = 5, tasks = 40,
+      shuffleRead = 3000000000L, shuffleWrite = 123L,
+      memSpilled = 1L << 30, diskSpilled = 1L << 20, peakTaskMem = 5L << 20)
+    val f = java.nio.file.Files.createTempFile("graft_probe", ".jsonl")
+    java.nio.file.Files.write(f, Seq(
+      line("q_plain", 1.234, 42L, counts),
+      line("q_plans", 0.5, 7L, counts, Some((2.5, 4))),
+      errorLine("q_err", "boom: \"quoted\"\n\ta tab")
+    ).mkString("\n").getBytes("UTF-8"))
+    val (ok, err) = parseProbe(f.toString)
+    assert(ok == Map(
+      "q_plain" -> Probe(1.234, 42L, 3000000123L),
+      "q_plans" -> Probe(0.5, 7L, 3000000123L)))
+    assert(err == Set("q_err"))
+    java.nio.file.Files.delete(f)
   }
 }
