@@ -3,6 +3,7 @@ package graft.model
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType, StructType}
@@ -74,6 +75,17 @@ object IngestBatch {
     */
   def driverResident(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** A [[driverResident]] frame's rows, read off its optimized plan
+    * without planning or running a collect; None for any other frame.
+    */
+  def localRows(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case rel: LocalRelation =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(rel.schema)
+        Some(rel.data.map(r => toRow(r).asInstanceOf[Row]))
+      case _ => None
+    }
 
   /** `rows` as a local frame of `schema`, every column nullable. */
   private def local(

@@ -163,9 +163,14 @@ object Matchers {
   def seriesLabels(rows: Seq[Row]): Column =
     bySensorId(rows)(r => Option(r.getMap[String, String](4)).map(_.toMap).orNull)
 
-  private def bySensorId[T: TypeTag](rows: Seq[Row])(f: Row => T): Column = {
-    val byId = rows.map(r => r.getString(0) -> f(r)).toMap
+  /** [[seriesLabels]] from a `sensor_id → labels` map. */
+  def labelsById(byId: Map[String, Map[String, String]]): Column =
+    lookup(byId)
+
+  private def bySensorId[T: TypeTag](rows: Seq[Row])(f: Row => T): Column =
+    lookup(rows.map(r => r.getString(0) -> f(r)).toMap)
+
+  private def lookup[T: TypeTag](byId: Map[String, T]): Column =
     udf((id: String) => byId.getOrElse(id, null.asInstanceOf[T]))
       .apply(col("sensor_id"))
-  }
 }

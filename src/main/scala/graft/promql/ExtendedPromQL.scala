@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.LabelMatcher
+import graft.model.IngestBatch
+import graft.operators.{LabelMatcher, Matchers}
 
 /** PromQL analytical extension — the operations the reference *rejects*
   * with 400s (reference: src/ingestors/http/simple_promql.rs:150-171) and
@@ -43,7 +44,7 @@ import graft.operators.LabelMatcher
   * vector/set/dynamic-scalar operands inside subqueries — the SLO
   * burn-rate shape `max_over_time((errors/requests)[1h:5m])` — now
   * EVALUATE (r14) through [[perStepAny]]: one scan pass per leaf
-  * operand with the broadcast step grid, operands joined per
+  * operand with its step grid, operands joined per
   * (matching-labels, step), nested grids shared across outer steps.
   */
 object ExtendedPromQL {
@@ -1870,6 +1871,50 @@ object ExtendedPromQL {
     v.withColumn("labels", labelsWith(lj.dst, joined))
   }
 
+  /** `samples` of the `selected` series, each row with its series'
+    * columns (`labels`): `sensor_id`, the sample columns, then the
+    * selection's. A driver-resident selection (a local frame, as the
+    * gateway's) travels in the plan — an id filter and a per-sample
+    * lookup, no join and no broadcast job; any other is broadcast-joined.
+    */
+  private def withSelected(samples: DataFrame, selected: DataFrame): DataFrame =
+    (if (selected.columns.toSeq == Seq("sensor_id", "labels"))
+      IngestBatch.localRows(selected) else None) match {
+      case Some(rows) =>
+        val byId = rows.map(r => r.getString(0) ->
+          Option(r.getMap[String, String](1)).map(_.toMap).orNull).toMap
+        samples.filter(col("sensor_id").isin(byId.keys.toSeq: _*))
+          .select((col("sensor_id") +: samples.columns.toSeq
+            .filter(_ != "sensor_id").map(col)) :+
+            Matchers.labelsById(byId).as("labels"): _*)
+      case None => samples.join(broadcast(selected), "sensor_id")
+    }
+
+  /** The steps of `steps` whose window `[t − shift − span, t − shift]`
+    * holds the row's `timestamp_us`, as an array column for a generator.
+    * An evenly spaced grid (every query_range and subquery grid) is a
+    * `sequence` between the first and last step in
+    * `[ts + shift, ts + shift + span]`; any other, the literal grid
+    * filtered.
+    */
+  private def stepsHolding(
+      steps: Seq[Long], shiftUs: Long, spanUs: Long): Column = {
+    val lo = col("timestamp_us") + lit(shiftUs)
+    val hi = lo + lit(spanUs)
+    val sorted = steps.distinct.sorted
+    val gaps = sorted.zip(sorted.drop(1)).map { case (a, b) => b - a }.distinct
+    gaps match {
+      case Seq() | Seq(_) =>
+        val (first, step) = (sorted.head, gaps.headOption.getOrElse(1L))
+        // the grid points nearest inside [lo, hi], clamped to the grid
+        val from = greatest(lo + pmod(lit(first) - lo, lit(step)), lit(first))
+        val to = least(hi - pmod(hi - lit(first), lit(step)), lit(sorted.last))
+        when(from <= to, sequence(from, to, lit(step)))
+      case _ =>
+        filter(typedLit(sorted.toArray), t => t >= lo && t <= hi)
+    }
+  }
+
   /** Prometheus subquery step alignment: evaluation timestamps are the
     * multiples of `step` (since the Unix epoch) inside
     * `[end − range, end]`.
@@ -1891,35 +1936,30 @@ object ExtendedPromQL {
       q: Query, selected: DataFrame, samples: DataFrame): DataFrame =
     q match {
       case s: SelectorQ =>
-        lastInWindow(samples
-          .filter(col("timestamp_us").between(s.startUs, s.endUs))
-          .join(broadcast(selected), "sensor_id"))
+        lastInWindow(withSelected(samples
+          .filter(col("timestamp_us").between(s.startUs, s.endUs)), selected))
           .select("sensor_id", "labels", "value")
       case other => eval(other, selected, samples)
     }
 
   /** The per-step vector of `inner` over a step grid: one row per
     * (series, step) — (sensor_id, __t, labels, value). ONE pass over
-    * the scan: the (tiny) step frame broadcasts into a range join that
-    * lands each sample in every step window holding it (≤ span/step + 1
-    * steps), then the inner evaluates per (series, step) group — never
-    * a per-step job loop. Shared by the subquery *_over_time fold and
-    * the query_range API ([[evalRange]]).
+    * the scan: a generator lands each sample in every step window
+    * holding it (≤ span/step + 1 steps, [[stepsHolding]]), then the
+    * inner evaluates per (series, step) group — never a per-step job
+    * loop. Shared by the subquery *_over_time fold and the query_range
+    * API ([[evalRange]]).
     */
   private def perStepVector(
       inner: Query, steps: Seq[Long],
       innerShiftUs: Long, innerSpanUs: Long,
       selected: DataFrame, samples: DataFrame): DataFrame = {
-    import samples.sparkSession.implicits._
-    val inWindow = samples
+    val inWindow = withSelected(samples
       .filter(col("timestamp_us").between(
-        steps.min - innerShiftUs - innerSpanUs, steps.max - innerShiftUs))
-      .join(broadcast(selected), "sensor_id")
-    val stepsDf = steps.toDF("__t")
-    val lo = col("__t") - lit(innerShiftUs + innerSpanUs)
-    val hi = col("__t") - lit(innerShiftUs)
-    val j = inWindow.join(broadcast(stepsDf),
-      col("timestamp_us") >= lo && col("timestamp_us") <= hi)
+        steps.min - innerShiftUs - innerSpanUs, steps.max - innerShiftUs)),
+      selected)
+    val j = inWindow.withColumn("__t",
+      explode(stepsHolding(steps, innerShiftUs, innerSpanUs)))
     def grouped = j.groupBy(col("sensor_id"), col("__t"))
     // latest sample in the step window, ties on timestamp resolved by
     // value like lastInWindow's (ts desc, value desc) ordering
@@ -2050,8 +2090,8 @@ object ExtendedPromQL {
 
   /** [[perStepVector]] generalized over catalog selection and operand
     * shape: binary vector/set operands evaluate each side independently
-    * (each leaf keeps its own ONE-SCAN perStepVector pass with the
-    * broadcast step grid) and join per (matching-labels, step); nested
+    * (each leaf keeps its own ONE-SCAN perStepVector pass over its step
+    * grid) and join per (matching-labels, step); nested
     * subqueries share one epoch-aligned inner grid across all outer
     * steps (inner step timestamps are epoch multiples, so they repeat
     * across outer steps — one inner pass total, joined to the small
@@ -2280,12 +2320,10 @@ object ExtendedPromQL {
         val once = perStepAny(q, List(pinUs), pinUs, selectFor, samples)
           .select(col("sensor_id"), col("labels"),
             col("value").cast("double").as("value"))
-        // ...replicated across the step grid (tiny grid broadcasts)
-        import samples.sparkSession.implicits._
-        val steps = (startUs to endUs by stepUs).toList
-        once.crossJoin(broadcast(steps.toDF("t_us")))
-          .select(col("sensor_id"), col("labels"), col("t_us"),
-            col("value"))
+        // ...replicated across the step grid
+        once.select(col("sensor_id"), col("labels"),
+          explode(sequence(lit(startUs), lit(endUs - (endUs - startUs) % stepUs),
+            lit(stepUs))).as("t_us"), col("value"))
       case _ =>
         throw PromQLError(
           "@ modifiers on sub-expressions are not supported in " +
@@ -2295,9 +2333,8 @@ object ExtendedPromQL {
   }
 
   def eval(q: Query, selected: DataFrame, samples: DataFrame): DataFrame = {
-    val inWindow = samples
-      .filter(col("timestamp_us").between(q.startUs, q.endUs))
-      .join(broadcast(selected), "sensor_id")
+    val inWindow = withSelected(samples
+      .filter(col("timestamp_us").between(q.startUs, q.endUs)), selected)
     q match {
       case b: BinScalarQ =>
         applyBinScalar(b,

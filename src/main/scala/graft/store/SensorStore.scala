@@ -3,9 +3,10 @@ package graft.store
 import scala.collection.immutable.TreeMap
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.catalog.Catalog
@@ -369,14 +370,8 @@ final class SensorStore(
     val known = catalog()
     val incoming = sensors.select(Schemas.sensors.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    // a driver-resident frame's optimized plan already holds the cast
-    // rows: read them off it instead of planning and running a collect
-    val rows =
-      if (IngestBatch.driverResident(incoming)) {
-        val rel = incoming.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
-        val toRow = CatalystTypeConverters.createToScalaConverter(rel.schema)
-        rel.data.map(r => toRow(r).asInstanceOf[Row])
-      } else incoming.collect().toSeq
+    // a driver-resident frame's optimized plan already holds the cast rows
+    val rows = IngestBatch.localRows(incoming).getOrElse(incoming.collect().toSeq)
     val novel = SensorStore.byUuid(rows
       .filterNot(r => known.byId.contains(r.getString(0)))).values.toSeq
     if (novel.isEmpty) return
@@ -570,11 +565,8 @@ final class SensorStore(
   def samples(t: SensorType): DataFrame =
     if (exists(valueDir(t)))
       readDir(valueSchema(t), valueDir(t)).drop("month")
-    else {
-      val schema = Schemas.samples(t)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), Schemas.samples(t))
 
   /** Canonical-layout scan restricted to `[startUs, endUs]`: derives the
     * `month` partition predicate from the time bounds so Catalyst prunes
@@ -822,6 +814,33 @@ object SensorStore {
 
   /** One metric's `/metrics` entry: its name, type and DCAT dataset JSON. */
   final case class MetricDataset(name: String, sensorType: String, dataset: String)
+
+  /** The bytes of the files `read` scans: for each file relation in its
+    * optimized plan, the files left after pruning by the filters directly
+    * over it (for a store read, the `month` bounds [[samplesInRange]]
+    * derives), summed from the listing the relation made when the read
+    * was built — no IO. A local relation scans nothing. None when the
+    * plan has any other leaf, whose size is unknown.
+    */
+  def scanBytes(read: DataFrame): Option[Long] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
+    }
+    def bytes(p: LogicalPlan, filters: Seq[Expression]): Option[Long] = p match {
+      case Filter(c, child) => bytes(child, filters ++ conjuncts(c))
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation => Some(fs.location.listFiles(filters, Nil)
+          .iterator.flatMap(_.files).map(_.getLen).sum)
+        case _ => None
+      }
+      case _: LocalRelation => Some(0L)
+      case leaf if leaf.children.isEmpty => None
+      case node => node.children.foldLeft(Option(0L)) { (acc, c) =>
+        for (a <- acc; b <- bytes(c, Nil)) yield a + b }
+    }
+    bytes(read.queryExecution.optimizedPlan, Nil)
+  }
 
   /** Staging older than this is assumed crashed, not in-flight — far
     * beyond any realistic publish/compaction duration.

@@ -1092,20 +1092,170 @@ class GatewaySpec extends SparkSpec {
         Seq("1.0", "2.0", "3.0"), csv.body())
       assert(lines.exists(_.endsWith(""",pin_cpu,,a,"q,1"""")), csv.body())
       val n = jobs.started(requestId(csv))
-      assert(n == 3, s"CSV query started $n Spark jobs")
+      assert(n == 1, s"CSV query started $n Spark jobs")
       val rr = read()
       assert(rr.statusCode() == 200)
       val ascii = rr.body().map(b => if (b >= 32 && b < 127) b.toChar else '.')
         .mkString
       assert(ascii.contains("host") && ascii.contains("zone"), ascii)
       val nr = jobs.started(requestId(rr))
-      assert(nr == 2, s"remote read started $nr Spark jobs")
+      assert(nr == 1, s"remote read started $nr Spark jobs")
     }
     // a matcher selecting nothing answers the header alone
     val none = get("/api/v1/query?format=csv&query=" +
       enc("""pin_cpu{job="none"}[1h]"""))
     assert(none.statusCode() == 200, none.body())
     assert(none.body() == "timestamp,sensor_id,sensor_name,value,type\n")
+  }
+
+  private val OpenCost = "spark.sql.files.openCostInBytes"
+
+  private def withSqlConf[A](k: String, v: String)(f: => A): A = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try f finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** The read routes of a gateway over a fresh store far under
+    * [[OpenCost]]: three float series written in three bodies (three
+    * sample files, so a partitioned read has files to split) and one
+    * integer series, all in the last hour. Each route by name, as a
+    * request to send.
+    */
+  private def withSmallReads[A](
+      f: Seq[(String, () => HttpResponse[Array[Byte]])] => A): A = {
+    import PrometheusRemote._
+    def enc(s: String) = java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+    val small = new SensorStore(spark, graft.TempDirs.createPath("graft_gateway_small"))
+    val gw = new Gateway(spark, small, "small-reads")
+    val smallPort = gw.start(0)
+    def send(path: String, body: Option[Array[Byte]],
+        headers: Map[String, String] = Map.empty): HttpResponse[Array[Byte]] = {
+      var b = HttpRequest.newBuilder(new URI(s"http://127.0.0.1:$smallPort$path"))
+      b = body.fold(b.GET())(x => b.POST(HttpRequest.BodyPublishers.ofByteArray(x)))
+      headers.foreach { case (k, v) => b = b.header(k, v) }
+      client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
+    }
+    try {
+      val nowS = System.currentTimeMillis() / 1000L
+      val t0 = (nowS - 50 * 60) * 1000L // ms, 50 minutes ago
+      Seq("a" -> 1.0, "b" -> 2.0, "c" -> 3.0).foreach { case (job, k) =>
+        assert(send("/api/v1/prometheus_remote_write", Some(RemoteWriteBodies(Seq(
+          Seq("__name__" -> "eq_cpu", "job" -> job) ->
+            (0 until 45).map(i => (k * 100 + i * 0.5, t0 + i * 60000L))))))
+          .statusCode() == 204)
+      }
+      val ints = (0 until 45).map(i => s"eq_int,job=a used=${i * 3}i ${(t0 + i * 60000L) * 1000000L}")
+      assert(send("/api/v2/write?bucket=eq&org=eq",
+        Some(ints.mkString("\n").getBytes(StandardCharsets.UTF_8))).statusCode() == 204)
+      val uuidOf = small.catalogSnapshot.rows
+        .map(r => (r.getString(1), r.getString(2)) -> r.getString(0)).toMap
+      val (cpu, int) = (uuidOf(("eq_cpu", "Float")), uuidOf(("eq_int used", "Integer")))
+      val sel = enc("""{__name__=~"eq_.*"}[1h]""")
+      val range = s"&start=${nowS - 40 * 60}&end=${nowS - 5 * 60}&step=300"
+      val avg = enc("""avg_over_time({__name__=~"eq_.*"}[5m])""")
+      def read(accepted: Option[Int]) = {
+        val mq = new ProtoWriter
+        mq.int64(1, t0 - 1000); mq.int64(2, nowS * 1000L)
+        val mw = new ProtoWriter
+        mw.int64(1, 2); mw.string(2, "__name__"); mw.string(3, "eq_.*")
+        mq.message(3, mw)
+        val rr = new ProtoWriter
+        rr.message(1, mq)
+        accepted.foreach(a => rr.int64(2, a))
+        () => send("/api/v1/prometheus_remote_read",
+          Some(snappyCompressLiteral(rr.result())), Map(
+            "content-encoding" -> "snappy",
+            "content-type" -> "application/x-protobuf",
+            "x-prometheus-remote-read-version" -> "0.1.0"))
+      }
+      f(Seq("csv", "jsonl", "arrow", "senml").flatMap(fmt => Seq(
+          s"series $fmt" -> (() => send(s"/series/$cpu?format=$fmt", None)),
+          s"query $fmt" -> (() => send(s"/api/v1/query?format=$fmt&query=$sel", None)))) ++
+        Seq(
+          "series int arrow" -> (() => send(s"/series/$int?format=arrow", None)),
+          "query_range prometheus" -> (() =>
+            send(s"/api/v1/query_range?format=prometheus&query=$avg$range", None)),
+          "query_range jsonl" -> (() =>
+            send(s"/api/v1/query_range?format=jsonl&query=$avg$range", None)),
+          "remote read samples" -> read(None),
+          "remote read chunks" -> read(Some(1))))
+    } finally gw.stop()
+  }
+
+  test("read routes answer byte-identical bodies on the one-task and the " +
+      "partitioned read plan") {
+    withSmallReads { routes =>
+      def answers() = routes.map { case (name, req) =>
+        val r = req()
+        assert(r.statusCode() == 200, s"$name: ${new String(r.body())}")
+        assert(r.body().length > 64, name)
+        name -> r.body()
+      }
+      val oneTask = answers()
+      // a lowered open cost makes every read too big for one task; with
+      // shuffle partitions left uncoalesced, an aggregate's rows really
+      // come from several partitions
+      val partitioned = withSqlConf(OpenCost, "1")(withSqlConf(
+        "spark.sql.adaptive.coalescePartitions.enabled", "false")(answers()))
+      oneTask.zip(partitioned).foreach { case ((name, a), (_, b)) =>
+        assert(java.util.Arrays.equals(a, b),
+          s"$name:\n${new String(a)}\n---\n${new String(b)}")
+      }
+    }
+  }
+
+  test("small series exports, PromQL queries and remote reads start one " +
+      "Spark job each") {
+    withSmallReads { routes =>
+      val pinned = routes.toMap.view.filterKeys(Set("series csv", "series arrow",
+        "query csv", "query_range prometheus", "remote read chunks")).toSeq
+      assert(pinned.length == 5)
+      withTagJobs { jobs =>
+        pinned.foreach { case (name, req) =>
+          assert(req().statusCode() == 200, name)
+          val r = req()
+          val n = jobs.started(requestId(r))
+          assert(n == 1, s"$name started $n Spark jobs")
+        }
+        // the regime is the read's size: past the open cost, the CSV
+        // export is range-partitioned again
+        val forced = withSqlConf(OpenCost, "1")(routes.toMap.apply("series csv")())
+        val n = jobs.started(requestId(forced))
+        assert(n > 1, s"partitioned CSV export started $n Spark jobs")
+      }
+    }
+  }
+
+  test("keep-alive responses leave without a Nagle stall") {
+    val socket = new java.net.Socket("127.0.0.1", port)
+    try {
+      socket.setTcpNoDelay(true)
+      val out = socket.getOutputStream
+      val in = new java.io.BufferedInputStream(socket.getInputStream)
+      val req = "GET /health/live HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n"
+        .getBytes(StandardCharsets.US_ASCII)
+      // one request and its whole response on the same connection
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        out.write(req)
+        out.flush()
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) {
+          val c = in.read()
+          assert(c >= 0, s"connection closed after: $head")
+          head += c.toChar
+        }
+        val len = "(?i)content-length: *(\\d+)".r
+          .findFirstMatchIn(head).get.group(1).toInt
+        assert(in.readNBytes(len).length == len)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 3).foreach(_ => roundTripMs())
+      val ms = (1 to 20).map(_ => roundTripMs()).sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, s"median $median ms over ${ms.mkString(", ")}")
+    } finally socket.close()
   }
 
   test("catalog answers are fresh after a novel write, a foreign publish " +
@@ -1208,7 +1358,8 @@ class GatewaySpec extends SparkSpec {
         "/api/v1/query?format=csv&query=phase_read",
         "/api/v1/query_extended?query=" + enc("sum(phase_read)"),
         "/api/v1/query_range?query=phase_read&start=1704067200" +
-          "&end=1704070800&step=600")
+          "&end=1704070800&step=600",
+        s"/series/${store.catalogSnapshot.rows.head.getString(0)}?format=csv")
       gets.foreach(g => assert(get(g).statusCode() == 200, g))
       val mq = new ProtoWriter
       mq.int64(1, 1704067100000L); mq.int64(2, 1704067300000L)

@@ -37,13 +37,14 @@ class Round13PlanSpec extends SparkSpec {
     assert(!plan.contains("Generate"), plan) // no posexplode stage
   }
 
-  test("PromQL subquery step grid (q375 shape): the ~32-row step frame " +
-    "broadcasts into the range join — never a CartesianProduct, never a " +
-    "shuffle of the scan keyed on steps") {
+  test("PromQL subquery step grid (q375 shape): each sample lands on its " +
+    "steps through one generator over the ~32-step grid — never a " +
+    "CartesianProduct, never a shuffle of the scan keyed on steps") {
     val df = SparkEntry.queries("q375_promql_subquery_agg")(spark, sf)
     val plan = planOf(df)
-    // non-equi range join against the broadcast step frame
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
+    // a generator over the step grid, no join with a step frame
+    assert("Generate explode".r.findAllMatchIn(plan).size == 1, plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 

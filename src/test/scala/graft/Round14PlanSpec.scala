@@ -3,8 +3,9 @@ package graft
 /** Physical-plan pins for the round-14 PromQL composability work
   * (r13 verdict item #2): binary-vector operands and nested subqueries
   * must keep the perStepVector scaling shape — ONE scan pass per leaf
-  * operand with the ~step-count row grid BROADCAST into a range join —
-  * never a per-step job loop, never a Cartesian product, and for
+  * operand whose samples land on their steps through one generator over
+  * the step grid (no join with a step frame) — never a per-step job
+  * loop, never a Cartesian product, and for
   * nested subqueries ONE shared inner pass (epoch-aligned inner steps
   * repeat across outer steps) rather than an inner pass per outer step.
   */
@@ -18,29 +19,32 @@ class Round14PlanSpec extends SparkSpec {
   private def occurrences(plan: String, needle: String): Int =
     plan.sliding(needle.length).count(_ == needle)
 
-  test("burn-rate shape (q377): one broadcast-grid range join PER " +
-    "OPERAND, operands meet in an equi join — no Cartesian, no step loop") {
+  test("burn-rate shape (q377): one step-grid generator PER OPERAND, " +
+    "operands meet in an equi join — no Cartesian, no step loop") {
     val df = SparkEntry.queries("q377_promql_burn_rate")(spark, sf)
     val plan = planOf(df)
-    // each aggregation side = one perStepVector pass = one
-    // BroadcastNestedLoopJoin against the 32-row day grid
-    assert(occurrences(plan, "BroadcastNestedLoopJoin") == 2, plan)
+    // each aggregation side = one perStepVector pass = one generator
+    // over the 32-step day grid
+    assert(occurrences(plan, "Generate explode") == 2, plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("nested subquery (q378): the inner grid is SHARED — exactly one " +
-    "broadcast range join total, outer fan-out via broadcast pair join") {
+    "step-grid generator total, outer fan-out via broadcast pair join") {
     val df = SparkEntry.queries("q378_promql_nested_subquery")(spark, sf)
     val plan = planOf(df)
     // one inner pass (the epoch-aligned inner grid deduplicates across
     // outer steps); the (outer, inner) pair frame attaches as a
-    // broadcast HASH join on the inner step, not another range join
-    assert(occurrences(plan, "BroadcastNestedLoopJoin") == 1, plan)
+    // broadcast HASH join on the inner step, not another grid pass
+    assert(occurrences(plan, "Generate explode") == 1, plan)
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("evalRangeApi pinned @: one instant evaluation replicated by a " +
-    "broadcast step cross join — the scan is NOT keyed on the grid") {
+    "step generator — the scan is NOT keyed on the grid") {
     import org.apache.spark.sql.functions._
     import graft.operators.{LabelMatcher, Matchers}
     import graft.adapters.EventsAdapter
@@ -56,9 +60,10 @@ class Round14PlanSpec extends SparkSpec {
         .filter(col("timestamp_us").between(lo, hi))
         .select("sensor_id", "timestamp_us", "value"))
     val plan = planOf(df)
-    // two broadcast nested loops: the single-step grid range join and
-    // the step-replication cross join — and nothing per-step beyond them
-    assert(occurrences(plan, "BroadcastNestedLoopJoin") == 2, plan)
+    // two generators: the single-step grid and the step replication
+    // over the result — and nothing per-step beyond them
+    assert(occurrences(plan, "Generate explode") == 2, plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 }

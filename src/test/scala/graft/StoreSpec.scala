@@ -29,6 +29,26 @@ class StoreSpec extends SparkSpec {
     assert(pruned.count() == 2)
   }
 
+  test("scanBytes sums the files a read covers after month pruning") {
+    val root = tempDir()
+    val store = new SensorStore(spark, root)
+    store.publishSamples(SensorType.Float, sampleData)
+    def onDisk(month: String): Long =
+      new java.io.File(s"$root/values_float/month=$month").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val (jan, feb) = (onDisk("202401"), onDisk("202402"))
+    assert(jan > 0 && feb > 0)
+    assert(SensorStore.scanBytes(store.samples(SensorType.Float)).contains(jan + feb))
+    // January only: the month bound prunes February's files
+    val janRead = store.samplesInRange(SensorType.Float,
+      Some(1704067200000000L), Some(1706745599999999L))
+    assert(SensorStore.scanBytes(janRead).contains(jan))
+    // a union of reads adds up; an absent table is an empty local frame
+    assert(SensorStore.scanBytes(janRead.unionByName(
+      store.samples(SensorType.Integer))).contains(jan))
+    assert(SensorStore.scanBytes(spark.range(3).toDF()).isEmpty)
+  }
+
   test("non-finite float samples are skipped at the publish edge") {
     // reference sqlite_publishers.rs:60-67: NaN/Inf silently dropped on
     // insert; other types are untouched

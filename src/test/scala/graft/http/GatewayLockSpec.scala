@@ -54,8 +54,8 @@ class GatewayLockSpec extends AnyFunSuite {
     // document the quirk against the REAL server implementation: two
     // sequential requests on one context observe each other's
     // attributes
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = Gateway.createServer(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     @volatile var seenByLater: AnyRef = null
     @volatile var first = true
     server.createContext("/attr", x => {
