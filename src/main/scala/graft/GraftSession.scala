@@ -20,8 +20,9 @@ object GraftSession {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
     // last-wins map keys match the reference's insert-overwrites label
-    // semantics (influx duplicate tag keys, reserved bucket/org labels)
-    // and let str_to_map/map_concat run without pre-dedup regex guards
+    // semantics: a map_concat that adds a label already present
+    // (ExtendedPromQL.labelsWith, the streaming resample tags,
+    // PromqlQueries' synthetic labels) overwrites it instead of throwing
     .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     // FAIR across scheduler pools: the gateway assigns one pool per
     // worker thread so concurrent requests share executors instead of

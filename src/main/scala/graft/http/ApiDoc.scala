@@ -159,9 +159,6 @@ object ApiDoc {
         "age threshold in hours (default 168)"))),
     Route("/docs", "get", "SensApp", "This OpenAPI document"))
 
-  /** Paths covered by the document (for the Gateway's self-check). */
-  def documentedPaths: Set[String] = routes.map(_.path).toSet
-
   /** The reference's 12 documented operations — the parity subset. */
   def referencePaths: Seq[String] = routes.filter(_.tag != "Extensions")
     .map(_.path).filterNot(_ == "/docs")

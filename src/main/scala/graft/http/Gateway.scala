@@ -671,8 +671,8 @@ final class Gateway(
     phase("serialize_us")(p.getOrElse("format", "senml") match {
       case "senml" =>
         val scan = SensorOps.rangeScan(read, uuid, startUs, endUs, limit)
-        val lines = SenML.exportSeries(
-          scan, uuid, row.getString(1), unit, labels, sType)
+        val lines = SenML.exportMulti(SenML.seriesFrame(
+          scan, uuid, row.getString(1), unit, labels, sType))
           .toLocalIterator().asScala
         respondTextStream(x, 200, "application/senml+json",
           joined(lines, "[", ",", "]"))
@@ -734,13 +734,13 @@ final class Gateway(
   /** Text rendering of typed values for CSV/JSONL (blob → base64, location
     * → lat,lon json; reference: src/exporters/csv.rs:90-112).
     */
-  private def renderedValues(scan: DataFrame, t: SensorType): DataFrame = {
-    val v = t match {
-      case SensorType.Blob => base64(col("value"))
-      case SensorType.Location => to_json(col("value"))
-      case _ => col("value").cast(StringType)
-    }
-    scan.select(col("timestamp_us"), v.as("value"))
+  private def renderedValues(scan: DataFrame, t: SensorType): DataFrame =
+    scan.select(col("timestamp_us"), textValue(t).as("value"))
+
+  private def textValue(t: SensorType): Column = t match {
+    case SensorType.Blob => base64(col("value"))
+    case SensorType.Location => to_json(col("value"))
+    case _ => col("value").cast(StringType)
   }
 
   // -------------------------------------------------------------- publish
@@ -1468,31 +1468,17 @@ final class Gateway(
     else "\"" + v.toString + "\""
 
   /** SenML-typed long view: like [[longView]] but the value is routed to
-    * its SenML field (`v` numeric, `vb` boolean, `vd` base64 blob, `vs`
-    * text/JSON/location) so [[SenML.exportMulti]] renders every series in
-    * one plan.
+    * its SenML field ([[SenML.valueFields]]) so [[SenML.exportMulti]]
+    * renders every series in one plan.
     */
   private def senmlLongView(
-      matched: Seq[Row], startUs: Long, endUs: Long): DataFrame = {
-    import org.apache.spark.sql.types.{BooleanType, DoubleType}
-    val nullD = lit(null).cast(DoubleType)
-    val nullS = lit(null).cast(StringType)
-    val nullB = lit(null).cast(BooleanType)
+      matched: Seq[Row], startUs: Long, endUs: Long): DataFrame =
     byType(matched, startUs, endUs) { (t, rows) =>
-      val (v, vs, vb, vd) = t match {
-        case SensorType.Integer | SensorType.Numeric | SensorType.Float =>
-          (col("value").cast(DoubleType), nullS, nullB, nullS)
-        case SensorType.Boolean => (nullD, nullS, col("value"), nullS)
-        case SensorType.Blob => (nullD, nullS, nullB, base64(col("value")))
-        case SensorType.Location => (nullD, to_json(col("value")), nullB, nullS)
-        case _ => (nullD, col("value").cast(StringType), nullB, nullS)
-      }
       Seq(col("sensor_id"), Matchers.seriesName(rows).as("sensor_name"),
         Matchers.seriesUnit(rows).as("unit_name"),
-        Matchers.seriesLabels(rows).as("labels"), col("timestamp_us"),
-        v.as("v"), vs.as("vs"), vb.as("vb"), vd.as("vd"))
+        Matchers.seriesLabels(rows).as("labels"), col("timestamp_us")) ++
+        SenML.valueFields(t)
     }
-  }
 
   /** Batch-per-type long view over the matched sensors: one scan per value
     * type keyed on the matched ids, their name and labels carried in the
@@ -1504,11 +1490,7 @@ final class Gateway(
     byType(matched, startUs, endUs) { (t, rows) =>
       Seq(col("timestamp_us"), col("sensor_id"),
         Matchers.seriesName(rows).as("sensor_name"),
-        (t match {
-          case SensorType.Blob => base64(col("value"))
-          case SensorType.Location => to_json(col("value"))
-          case _ => col("value").cast(StringType)
-        }).as("value"),
+        textValue(t).as("value"),
         lit(t.displayName).as("type"),
         Matchers.seriesLabels(rows).as("labels"))
     }

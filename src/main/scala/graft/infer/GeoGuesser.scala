@@ -21,8 +21,6 @@ object GeoGuesser {
   private val LatRe = s"""(?i)^$prefix(lat|latitude)$$""".r
   private val LonRe = s"""(?i)^$prefix(lng|lon|long|longitude)$$""".r
 
-  def isLikelyCoordinate(v: Double): Boolean = v >= -180.0 && v <= 180.0
-
   /** Score one column as a latitude/longitude candidate. `values` are the
     * raw sampled strings; the column type comes from the inference lattice.
     */

@@ -39,8 +39,6 @@ object SensorType {
     case _          => None
   }
 
-  def fromId(id: Int): Option[SensorType] = all.find(_.id == id)
-
   /** Numeric types accepted by Prometheus-compatible paths
     * (reference: src/storage/sqlite/matchers.rs:48-50).
     */

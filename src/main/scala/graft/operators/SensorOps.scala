@@ -77,13 +77,6 @@ object SensorOps {
       .drop("__rn")
   }
 
-  /** Global ordered scan with limit (W2):
-    * `ORDER BY timestamp_us LIMIT n` — Spark plans TakeOrderedAndProject
-    * (no full sort / single-node sort at scale).
-    */
-  def globalScan(samples: DataFrame, limit: Int): DataFrame =
-    samples.orderBy("timestamp_us").limit(limit)
-
   /** Metrics summary (A1): per (name, type) — series count and the sorted
     * union of label keys (reference: src/storage/sqlite/migrations/
     * 20250819144000_add_metrics_summary_view.sql:1-17).

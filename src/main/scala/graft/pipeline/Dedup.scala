@@ -10,17 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedup on normalized-text fingerprint: keeps the lowest id per
-    * group (deterministic winner).
-    */
-  def exactByFingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val fp = TextAnalysis.fingerprint(col(textCol))
-    docs.withColumn("__fp", fp)
-      .groupBy(col("__fp"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
-      .drop("__fp")
-  }
-
   /** STREAMING exact dedup: keep the first document per content
     * fingerprint as the corpus arrives (the ingest-time dedup a training
     * pipeline runs before anything lands in storage). Scope columns
@@ -546,18 +535,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard"))
   }
 
-  /** MinHash signature arrays: k xxhash64 values per distinct shingle,
-    * element-wise min per doc. Returns (id, sig: array<long>).
-    * Map-side partial aggregation keeps the shuffle at one k-array per
-    * (doc, partition).
-    */
-  def minHashSignatureArrays(
-      docs: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int): DataFrame =
-    signaturesFromShingles(
-      hashedShingleTable(docs, idCol, textCol, n), numHashes)
-      .select("id", "sig")
-
   /** The shingle is hashed ONCE to a long upstream; derive the k family
     * members as codegen'd `xxhash64(h, i)` — a `transform` HOF lambda
     * would be interpreted per element, and re-reading the string k times
@@ -583,15 +560,6 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"),
         col("n_sh"))
   }
-
-  /** MinHash signatures in long form (id, pos, minhash) — kept as the
-    * row-oriented view of [[minHashSignatureArrays]].
-    */
-  def minHashSignatures(
-      docs: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int): DataFrame =
-    minHashSignatureArrays(docs, idCol, textCol, n, numHashes)
-      .select(col("id"), posexplode(col("sig")).as(Seq("pos", "minhash")))
 
   /** MinHash+LSH candidate pairs: band the signature (`bands` bands of
     * `numHashes/bands` rows), bucket-join on (band, band-hash), then verify

@@ -284,8 +284,8 @@ private[graft] object SensorQueries {
       val samples = EventsAdapter.samples(s, d)
         .filter(col("sensor_id") === "purchase 5")
         .select("timestamp_us", "value")
-      val doc = SenML.exportFloatSeries(
-        samples, "uuid-q16", "purchase", None, Map.empty)
+      val doc = SenML.exportMulti(SenML.seriesFrame(samples, "uuid-q16",
+        "purchase", None, Map.empty, graft.model.SensorType.Float))
         .agg(concat(lit("["), concat_ws(",", collect_list(col("value"))),
           lit("]")).as("doc"))
         .as[String]

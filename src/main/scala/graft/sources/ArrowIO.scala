@@ -61,25 +61,16 @@ object ArrowIO {
     Field.notNullable("value",
       new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))).asJava)
 
-  /** Encode one Float series to Arrow IPC file bytes. */
-  def encodeFloatSeries(samples: Seq[(Long, Double)]): Array[Byte] = {
-    val root = VectorSchemaRoot.create(floatSeriesSchema, allocator)
-    try {
-      val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-      val v = root.getVector("value").asInstanceOf[Float8Vector]
-      root.allocateNew()
-      samples.zipWithIndex.foreach { case ((t, x), i) =>
-        ts.setSafe(i, t); v.setSafe(i, x)
-      }
-      root.setRowCount(samples.length)
-      writeIpc(root)
-    } finally root.close()
-  }
+  /** Encode one Float series to Arrow IPC file bytes:
+    * [[writeFloatSeriesStream]] into a byte buffer, in record batches of
+    * [[ipcBatchRows]].
+    */
+  def encodeFloatSeries(samples: Seq[(Long, Double)]): Array[Byte] =
+    ipcBytes(writeFloatSeriesStream(samples.iterator, _, ipcBatchRows))
 
   /** Stream a Float series as Arrow IPC file bytes onto `out` in
-    * bounded batches — the memory-safe counterpart to
-    * [[encodeFloatSeries]] for edge exports at the 10M-row default
-    * query limit: residency is one `batchRows` batch regardless of the
+    * bounded batches — what edge exports at the 10M-row default query
+    * limit need: residency is one `batchRows` batch regardless of the
     * series length. The IPC *file* format writes sequentially (the
     * footer goes last), so a non-seekable response stream works.
     * [[decodeFloatSeries]] already iterates batches, so multi-batch
@@ -247,8 +238,8 @@ object ArrowIO {
   }
 
   /** Encode one typed series to Arrow IPC file bytes (S11 for all 8
-    * value types; the Float fast path [[encodeFloatSeries]] emits the
-    * same layout minus the metadata columns).
+    * value types; [[encodeFloatSeries]] emits the Float layout minus the
+    * metadata columns).
     */
   def encodeTypedSeries(series: TypedSeries): Array[Byte] = {
     val t = series.sensorType
@@ -438,27 +429,11 @@ object ArrowIO {
     Field.notNullable("type", ArrowType.Utf8.INSTANCE),
     Field.notNullable("labels", ArrowType.Utf8.INSTANCE)).asJava)
 
-  /** Encode multi-series long-format rows to Arrow IPC file bytes. */
-  def encodeLongFormat(rows: Seq[LongRow]): Array[Byte] = {
-    val root = VectorSchemaRoot.create(longFormatSchema, allocator)
-    try {
-      root.allocateNew()
-      val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-      def sv(name: String) = root.getVector(name).asInstanceOf[VarCharVector]
-      val (id, nm, vl, tp, lb) = (sv("sensor_id"), sv("sensor_name"),
-        sv("value"), sv("type"), sv("labels"))
-      rows.zipWithIndex.foreach { case (r, i) =>
-        ts.setSafe(i, r.timestampUs)
-        id.setSafe(i, r.sensorId.getBytes("UTF-8"))
-        nm.setSafe(i, r.sensorName.getBytes("UTF-8"))
-        vl.setSafe(i, r.value.getBytes("UTF-8"))
-        tp.setSafe(i, r.valueType.getBytes("UTF-8"))
-        lb.setSafe(i, r.labelsJson.getBytes("UTF-8"))
-      }
-      root.setRowCount(rows.length)
-      writeIpc(root)
-    } finally root.close()
-  }
+  /** Encode multi-series long-format rows to Arrow IPC file bytes:
+    * [[writeLongFormatStream]] into a byte buffer.
+    */
+  def encodeLongFormat(rows: Seq[LongRow]): Array[Byte] =
+    ipcBytes(writeLongFormatStream(rows.iterator, _, ipcBatchRows))
 
   /** Stream long-format rows as Arrow IPC file bytes onto `out` in
     * bounded batches — the multi-series counterpart to
@@ -525,15 +500,25 @@ object ArrowIO {
     } finally reader.close()
   }
 
-  /** IPC write, chunked at SENSAPP_BATCH_SIZE rows per record batch —
-    * the reference's ingest chunking contract carried to the Arrow edge
+  /** Rows per record batch of the in-memory encoders: SENSAPP_BATCH_SIZE
+    * — the reference's ingest chunking contract carried to the Arrow edge
     * (reference: src/datamodel/batch_builder.rs:61-80 into_chunks).
     * Readers stream batch-by-batch instead of one monolithic batch;
     * every decode path here already loops loadNextBatch().
     */
-  private def writeIpc(root: VectorSchemaRoot): Array[Byte] = {
+  private def ipcBatchRows: Int = math.max(1, graft.Config.batchSize)
+
+  private def ipcBytes(write: java.io.OutputStream => Unit): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    val chunkRows = math.max(1, graft.Config.batchSize)
+    write(out)
+    out.toByteArray
+  }
+
+  /** IPC write of a filled root, chunked at [[ipcBatchRows]] rows per
+    * record batch.
+    */
+  private def writeIpc(root: VectorSchemaRoot): Array[Byte] = ipcBytes { out =>
+    val chunkRows = ipcBatchRows
     val total = root.getRowCount
     if (total <= chunkRows) {
       val writer = new ArrowFileWriter(root, null, Channels.newChannel(out))
@@ -565,6 +550,5 @@ object ArrowIO {
         } finally writer.close()
       } finally bound.close()
     }
-    out.toByteArray
   }
 }

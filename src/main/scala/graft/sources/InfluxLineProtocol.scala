@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, LongType}
@@ -18,11 +18,10 @@ import graft.model.{IngestBatch, SensorType}
   *    (`t/f/true/false/T/F/...`), quoted string;
   *  - timestamps decoded at ns/us/ms/s precision to µs.
   *
-  * [[parse]] runs distributed over a `Dataset[String]` of lines (queries,
-  * imports): a codegen'd columnar path for simple lines, the strict
-  * recursive-descent grammar via `flatMap` for the rest. The gateway's
-  * write route holds the whole body in driver memory and parses it there
-  * with the strict grammar ([[parseLocal]]); both give the same rows.
+  * One grammar, the strict recursive-descent [[parseLine]], serves both
+  * entry points: [[parse]] runs it distributed over a `Dataset[String]`
+  * of lines (queries, imports); the gateway's write route holds the whole
+  * body in driver memory and runs it there ([[parseLocal]]).
   */
 object InfluxLineProtocol {
 
@@ -150,63 +149,6 @@ object InfluxLineProtocol {
     case p => throw new IllegalArgumentException(s"Invalid precision: $p")
   }
 
-  /** Fast-path line shape: unreserved-char measurement/field keys (so
-    * urlencode is the identity), no escapes, no quoted strings, numeric or
-    * boolean field values only, optional integer timestamp. Anything else
-    * — escapes, strings, u64 near overflow, weird floats, reserved label
-    * keys — falls back to the strict recursive parser.
-    */
-  private val FastVal =
-    """(?:-?\d+i|\d{1,18}u|(?i:t|true|f|false)|[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)"""
-  private val FastLine =
-    """^[A-Za-z0-9._~-]+(?:,[^,= \\"]+=[^,= \\"]+)* +""" +
-      s"""[A-Za-z0-9._~-]+=$FastVal(?:,[A-Za-z0-9._~-]+=$FastVal)*(?: +-?\\d+)?$$"""
-
-  private def usExpr(raw: Column, precision: String): Column = precision match {
-    // DIV is integral long division (truncates toward zero, same as the
-    // strict path's `_ / 1000`); a double divide would lose precision on
-    // ns epochs > 2^53
-    case "ns" => call_function("div", raw.cast("long"), lit(1000L))
-    case "us" => raw.cast("long")
-    case "ms" => raw.cast("long") * 1000
-    case "s" => raw.cast("long") * 1000000L
-    case p => throw new IllegalArgumentException(s"Invalid precision: $p")
-  }
-
-  /** Codegen'd columnar parse of fast-path lines: split/str_to_map/rlike
-    * Column ops end to end, no per-row Scala objects.
-    */
-  private def parseColumnar(
-      df: DataFrame, bucket: String, org: String, precision: String): DataFrame = {
-    val t = trim(col("line"))
-    val parts = split(t, " +")
-    val head = parts.getItem(0)
-    val comma = locate(",", head)
-    val labels = when(comma > 0,
-      map_concat(
-        map(lit("influxdb_bucket"), lit(bucket), lit("influxdb_org"), lit(org)),
-        str_to_map(head.substr(comma + 1, length(head)), lit(","), lit("="))))
-      .otherwise(map().cast("map<string,string>"))
-    val ts = when(size(parts) >= 3, usExpr(parts.getItem(2), precision))
-    val withKv = df.select(
-      head.as("head0"), labels.as("labels"), ts.as("timestamp_us"),
-      explode(split(parts.getItem(1), ",")).as("kv"))
-    val k = substring_index(col("kv"), "=", 1)
-    val v = expr("substring(kv, instr(kv, '=') + 1)")
-    val vtype = when(v.rlike("^(-?\\d+i|\\d{1,18}u)$"), "Integer")
-      .when(v.rlike("^(?i:t|true|f|false)$"), "Boolean")
-      .otherwise("Float")
-    withKv.select(
-      concat(substring_index(col("head0"), ",", 1), lit(" "), k).as("sensor_name"),
-      col("labels"), col("timestamp_us"),
-      vtype.as("type"),
-      when(vtype === "Integer",
-        regexp_replace(v, "[iu]$", "").cast("long")).as("long_value"),
-      when(vtype === "Float", v.cast("double")).as("double_value"),
-      lit(null).cast("string").as("string_value"),
-      when(vtype === "Boolean", lower(v).startsWith("t")).as("bool_value"))
-  }
-
   private type Parsed = (String, Map[String, String], Option[Long], String,
     Option[Long], Option[Double], Option[String], Option[Boolean])
 
@@ -223,22 +165,6 @@ object InfluxLineProtocol {
       (name, labels, f.timestamp.map(toUs), f.valueType,
         f.longValue, f.doubleValue, f.stringValue, f.boolValue)
     }
-
-  /** Strict recursive-descent parse via `flatMap` — handles escapes,
-    * quoted strings, u64 range checks, and raises on malformed lines
-    * exactly like the reference handler.
-    */
-  private def parseFlatMap(
-      lines: Dataset[String],
-      bucket: String,
-      org: String,
-      precision: String): DataFrame = {
-    import lines.sparkSession.implicits._
-    val toUs = precisionToMicros(precision)
-    lines.flatMap(parsedRows(_, bucket, org, toUs)).toDF("sensor_name",
-      "labels", "timestamp_us", "type", "long_value", "double_value",
-      "string_value", "bool_value")
-  }
 
   /** [[parse]] on the driver, for lines already in driver memory (a
     * request body): every line goes through the strict grammar into the
@@ -304,11 +230,13 @@ object InfluxLineProtocol {
 
   /** Distributed parse of a dataset of lines into the normalized long
     * layout: sensor_name, labels entries, timestamp_us, typed values.
-    * Well-formed simple lines take the codegen'd columnar path; the rest
-    * go through the strict parser (which also raises on malformed input).
-    * `withNumeric = true` is the reference handler's Numeric mode: the
-    * output gains a `numeric_value` DecimalType(38,18) column and
-    * integer/float fields report type `Numeric` (see [[toNumeric]]).
+    * Every line goes through the strict grammar ([[parseLine]], as in
+    * [[parseLocal]]) in one `flatMap`: escapes, quoted strings and u64
+    * range checks are handled, empty and comment lines yield no rows, and
+    * a malformed line raises. `withNumeric = true` is the reference
+    * handler's Numeric mode: the output gains a `numeric_value`
+    * DecimalType(38,18) column and integer/float fields report type
+    * `Numeric` (see [[toNumeric]]).
     */
   def parse(
       lines: Dataset[String],
@@ -316,38 +244,11 @@ object InfluxLineProtocol {
       org: String,
       precision: String = "ns",
       withNumeric: Boolean = false): DataFrame = {
-    val base = parseTyped(lines, bucket, org, precision)
-    if (withNumeric) toNumeric(base) else base
-  }
-
-  private def parseTyped(
-      lines: Dataset[String],
-      bucket: String,
-      org: String,
-      precision: String): DataFrame = {
-    precisionToMicros(precision) // validate precision eagerly
-    val df = lines.toDF("line")
-    val t = trim(col("line"))
-    val nonEmpty = length(t) > 0 && !t.startsWith("#")
     import lines.sparkSession.implicits._
-    // Reserved bucket/org keys and duplicate tag keys are only safe on the
-    // columnar path under LAST_WIN map-key semantics, which give
-    // str_to_map/map_concat the same insert-overwrites behavior as the
-    // strict parser's `.toMap` (one regex per line instead of three).
-    // GraftSession sets that policy; on a session without it (default
-    // EXCEPTION) the fast path would *throw* on such lines instead of
-    // falling back, so route everything through the strict parser there.
-    val lastWin = lines.sparkSession.conf
-      .get("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
-      .equalsIgnoreCase("LAST_WIN")
-    if (!lastWin)
-      return parseFlatMap(
-        df.filter(nonEmpty).select(col("line")).as[String],
-        bucket, org, precision)
-    val fast = t.rlike(FastLine)
-    parseColumnar(df.filter(nonEmpty && fast), bucket, org, precision)
-      .unionByName(parseFlatMap(
-        df.filter(nonEmpty && !fast).select(col("line")).as[String],
-        bucket, org, precision))
+    val toUs = precisionToMicros(precision)
+    val base = lines.flatMap(parsedRows(_, bucket, org, toUs)).toDF(
+      "sensor_name", "labels", "timestamp_us", "type", "long_value",
+      "double_value", "string_value", "bool_value")
+    if (withNumeric) toNumeric(base) else base
   }
 }

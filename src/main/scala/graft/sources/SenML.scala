@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.SensorType
 
-/** SenML (RFC 8428) import + export (S2/S9).
+/** SenML (RFC 8428) import + export (S2/S9). One exporter,
+  * [[exportMulti]], renders one series or many.
   *
   * Import resolves base fields (`bn`/`bt`/`bu`) Spark-side: posexplode the
   * record array, then `last(_, ignoreNulls)` over the record-position
@@ -92,17 +93,58 @@ object SenML {
     }
   }
 
+  /** The SenML value fields `v`, `vs`, `vb`, `vd` of a `value` column
+    * holding samples of type `t`: the value lands in the field for its
+    * type — `v` for numeric, `vs` for strings/JSON text and locations
+    * (`{"lat":..,"lon":..}` JSON text), `vb` for booleans, `vd` (base64)
+    * for blobs — and the other three are null (reference:
+    * src/exporters/senml.rs:46-157).
+    */
+  def valueFields(t: SensorType): Seq[Column] = {
+    val (nullD, nullS, nullB) = (lit(null).cast(DoubleType),
+      lit(null).cast(StringType), lit(null).cast(BooleanType))
+    val (v, vs, vb, vd) = t match {
+      case SensorType.Integer | SensorType.Numeric | SensorType.Float =>
+        (col("value").cast(DoubleType), nullS, nullB, nullS)
+      case SensorType.Boolean => (nullD, nullS, col("value"), nullS)
+      case SensorType.Blob => (nullD, nullS, nullB, base64(col("value")))
+      case SensorType.Location => (nullD, to_json(col("value")), nullB, nullS)
+      case _ => (nullD, col("value").cast(StringType), nullB, nullS)
+    }
+    Seq(v.as("v"), vs.as("vs"), vb.as("vb"), vd.as("vd"))
+  }
+
+  /** One series' `(timestamp_us, value)` samples as [[exportMulti]]'s
+    * long frame: the series' uuid, name, unit and labels on every row,
+    * the value routed by [[valueFields]].
+    */
+  def seriesFrame(
+      samples: DataFrame,
+      uuid: String,
+      name: String,
+      unit: Option[String],
+      labels: Map[String, String],
+      t: SensorType): DataFrame =
+    samples.select(Seq(lit(uuid).as("sensor_id"), lit(name).as("sensor_name"),
+      lit(unit.orNull).cast(StringType).as("unit_name"),
+      typedLit(labels).as("labels"), col("timestamp_us")) ++ valueFields(t): _*)
+
   /** Multi-series SenML export as ONE plan (reference
     * to_senml_json_multi: src/exporters/senml.rs:24-44): the input long
     * frame carries every selected series' samples with the typed SenML
     * value already routed to its field. Per-series windows assign the
-    * base fields (`bn`/`_name`/`bt`/`bu`/`_labels`) to each series' first
-    * record; `bver`=10 lands only on the document's first record overall.
+    * base fields to each series' first record (`bn`=uuid, `_name`,
+    * `bt`=first-sample seconds at ms precision, optional `bu` and
+    * `_labels`); the rest carry `t` relative to it. `bver`=10 lands only
+    * on the document's first record overall. Spark's `to_json` drops
+    * null fields, which gives the reference's field-presence behavior.
     * Replaces a per-series query loop — N series cost one job, not N.
     *
     * @param long (sensor_id, sensor_name, unit_name, labels: map,
     *             timestamp_us, v, vs, vb, vd) — exactly one value column
     *             non-null per row, chosen by the series' type
+    *             ([[valueFields]]; [[seriesFrame]] builds it for one
+    *             series)
     */
   def exportMulti(long: DataFrame): Dataset[String] = {
     import long.sparkSession.implicits._
@@ -111,8 +153,7 @@ object SenML {
     val wSeriesAll = wSeries
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // global order = response order; the output is the already-bounded
-    // HTTP payload, so the single-partition window is fine (same
-    // reasoning as the single-series exporter)
+    // HTTP payload, so the single-partition window is fine
     val wAll = Window.orderBy(col("sensor_id"), col("timestamp_us"))
     val withBase = long
       .withColumn("__bt_ms", (first(col("timestamp_us")).over(wSeriesAll)
@@ -140,82 +181,5 @@ object SenML {
         col("bn"), col("_name"), col("bt"), col("bver"), col("bu"),
         col("_labels"), col("t"), col("v"), col("vs"), col("vb"),
         col("vd"))).as("value")).as[String]
-  }
-
-  /** Export a single series to SenML records (one JSON object string per
-    * row, in sample order). First record carries the base fields
-    * (`bn`=uuid, `_name`, `bt`=first-sample seconds at ms precision,
-    * `bver`=10, optional `bu`, `_labels`); the rest carry relative `t`
-    * (reference: src/exporters/senml.rs:16-157). Spark's `to_json` drops
-    * null fields, which gives the reference's field-presence behavior.
-    *
-    * @param samples (timestamp_us, value: Double) rows for ONE sensor
-    */
-  def exportFloatSeries(
-      samples: DataFrame,
-      uuid: String,
-      name: String,
-      unit: Option[String],
-      labels: Map[String, String]): Dataset[String] =
-    exportSeries(samples, uuid, name, unit, labels, SensorType.Float)
-
-  /** Typed-series export: the value lands in the SenML field for its type —
-    * `v` for numeric, `vs` for strings/JSON text, `vb` for booleans, `vd`
-    * (base64) for blobs (reference: src/exporters/senml.rs:46-157).
-    *
-    * `includeBver=false` drops the `bver` field — multi-series documents
-    * carry it only on the very first record of the whole array
-    * (reference: src/exporters/senml.rs:31-36).
-    */
-  def exportSeries(
-      samples: DataFrame,
-      uuid: String,
-      name: String,
-      unit: Option[String],
-      labels: Map[String, String],
-      sensorType: SensorType,
-      includeBver: Boolean = true): Dataset[String] = {
-    import samples.sparkSession.implicits._
-    val (field, valueCol) = sensorType match {
-      case SensorType.Integer | SensorType.Numeric | SensorType.Float =>
-        ("v", col("value").cast(DoubleType))
-      case SensorType.Boolean => ("vb", col("value"))
-      case SensorType.Blob => ("vd", base64(col("value")))
-      case SensorType.Location =>
-        ("vs", to_json(col("value"))) // {"lat":..,"lon":..} JSON text
-      case _ => ("vs", col("value").cast(StringType))
-    }
-    // the input is ONE series, already range/limit-bounded by the query
-    // layer — the single-partition window IS the per-series semantics
-    // (WindowExec's global-window warning is expected and harmless here;
-    // a constant partition key would be folded away by the optimizer)
-    val w = Window.orderBy(col("timestamp_us"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // base time at millisecond precision (reference: datetime_to_ms)
-    val withBase = samples
-      .withColumn("__bt_ms", (first(col("timestamp_us")).over(w)
-        .cast(LongType) / 1000).cast(LongType))
-      .withColumn("__rn", row_number().over(Window.orderBy(col("timestamp_us"))))
-    val labelsJson =
-      if (labels.isEmpty) lit(null).cast(StringType)
-      else to_json(map(labels.toSeq.sorted.flatMap {
-        case (k, v) => Seq(lit(k), lit(v))
-      }: _*))
-    withBase.select(
-      when(col("__rn") === 1, lit(uuid)).as("bn"),
-      when(col("__rn") === 1, lit(name)).as("_name"),
-      when(col("__rn") === 1, col("__bt_ms").cast(DoubleType) / 1000.0).as("bt"),
-      when(col("__rn") === 1 && lit(includeBver), lit(10)).as("bver"),
-      when(col("__rn") === 1, unit.map(lit).getOrElse(lit(null).cast(StringType))).as("bu"),
-      when(col("__rn") === 1 && labelsJson.isNotNull, labelsJson).as("_labels"),
-      when(col("__rn") === 1, lit(0.0)).otherwise(
-        ((col("timestamp_us") / 1000).cast(LongType) - col("__bt_ms"))
-          .cast(DoubleType) / 1000.0).as("t"),
-      valueCol.as(field),
-      col("__rn"))
-      .orderBy(col("__rn"))
-      .select(to_json(struct(
-        col("bn"), col("_name"), col("bt"), col("bver"), col("bu"),
-        col("_labels"), col("t"), col(field))).as("value")).as[String]
   }
 }

@@ -182,8 +182,15 @@ class GatewaySpec extends SparkSpec {
     val prev = gateway.logSink
     gateway.logSink = lines.add(_)
     try {
+      import scala.jdk.CollectionConverters._
       assert(get("/health/live").statusCode() == 200)
-      val line = lines.iterator().next()
+      // the line is written once the response has left, so it can reach
+      // the sink after the client has the response
+      def healthLine() = lines.asScala.find(_.contains("/health/live"))
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (healthLine().isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val line = healthLine().getOrElse(fail(s"no /health/live line in $lines"))
       assert(line.contains("\"method\":\"GET\""), line)
       assert(line.contains("\"path\":\"/health/live\""), line)
       assert(line.contains("\"status\":200"), line)
@@ -193,6 +200,7 @@ class GatewaySpec extends SparkSpec {
       sys.props("SENSAPP_LOG") = "error"
       try {
         assert(get("/health/live").statusCode() == 200)
+        Thread.sleep(200) // time for a (wrongly) emitted line to land
         assert(lines.isEmpty)
       } finally sys.props.remove("SENSAPP_LOG")
     } finally gateway.logSink = prev
@@ -1203,6 +1211,54 @@ class GatewaySpec extends SparkSpec {
           s"$name:\n${new String(a)}\n---\n${new String(b)}")
       }
     }
+  }
+
+  test("single-series SenML export equals the multi-series export of a " +
+      "selector matching only that series, for every value type") {
+    import graft.model.IngestBatch
+    val own = new SensorStore(spark, graft.TempDirs.createPath("graft_gateway_senml"))
+    val gw = new Gateway(spark, own, "senml-merge")
+    val ownPort = gw.start(0)
+    def fetch(path: String): String = {
+      val r = client.send(HttpRequest.newBuilder(
+        new URI(s"http://127.0.0.1:$ownPort$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, s"$path: ${r.body()}")
+      r.body()
+    }
+    try {
+      // every sample in the last hour: the instant query's `[1h]` window
+      // and the unbounded series read cover the same rows
+      val t0 = (System.currentTimeMillis() - 50 * 60 * 1000L) * 1000L
+      val sixLabels = Map("zone" -> "z", "a" -> "1", "rack" -> "r7",
+        "dc" -> "eu", "b" -> "2", "host" -> "h")
+      val series: Seq[(SensorType, String, Map[String, String], Int => Any)] = Seq(
+        (SensorType.Integer, "count", Map.empty, i => (i * 7 - 3).toLong),
+        (SensorType.Numeric, null, Map("k" -> "v"),
+          i => new java.math.BigDecimal(s"$i.125")),
+        (SensorType.Float, "Cel", sixLabels, i => i * 0.5 - 1.0),
+        (SensorType.Str, null, sixLabels, i => "say \"" + i + "\""),
+        (SensorType.Boolean, "flag", Map("k" -> "v"), i => i % 2 == 0),
+        (SensorType.Location, "deg", Map.empty,
+          i => org.apache.spark.sql.Row(59.9 + i, 10.7 - i)),
+        (SensorType.Json, null, Map.empty, i => s"""{"n":$i}"""),
+        (SensorType.Blob, "raw", sixLabels, i => Array[Byte](i.toByte, -1, 0)))
+      own.publish(IngestBatch.fromLocal(spark, series.flatMap {
+        case (t, unit, labels, value) => (0 until 3).map(i =>
+          IngestBatch.LocalSample(s"senml_${t.displayName.toLowerCase}", t,
+            unit, labels, t0 + i * 60000000L, value(i)))
+      }))
+      val rows = own.catalogSnapshot.rows
+      assert(rows.length == series.length)
+      rows.foreach { r =>
+        val (uuid, name) = (r.getString(0), r.getString(1))
+        val sel = java.net.URLEncoder.encode(
+          s"""{__name__="$name"}[1h]""", StandardCharsets.UTF_8)
+        val single = fetch(s"/series/$uuid?format=senml")
+        assert(single.count(_ == '{') >= 3, single)
+        assert(single == fetch(s"/api/v1/query?format=senml&query=$sel"), name)
+      }
+    } finally gw.stop()
   }
 
   test("small series exports, PromQL queries and remote reads start one " +

@@ -190,8 +190,9 @@ class ImportersSpec extends SparkSpec {
     val samples = Seq(
       (1700000000000000L, 1.5), (1700000001500000L, 2.5))
       .toDF("timestamp_us", "value")
-    val lines = SenML.exportFloatSeries(
-      samples, "uuid-1", "temp", Some("Cel"), Map("env" -> "prod"))
+    val float = graft.model.SensorType.Float
+    val lines = SenML.exportMulti(SenML.seriesFrame(
+      samples, "uuid-1", "temp", Some("Cel"), Map("env" -> "prod"), float))
       .collect()
     assert(lines.length == 2)
     assert(lines(0).contains(""""bn":"uuid-1""""))
@@ -204,9 +205,11 @@ class ImportersSpec extends SparkSpec {
     // multi-series documents carry bver only on the very first record of
     // the whole array (reference: src/exporters/senml.rs:31-36): the
     // non-first series is exported without it
-    val second = SenML.exportSeries(samples, "uuid-2", "hum", None,
-      Map.empty, graft.model.SensorType.Float, includeBver = false)
-      .collect()
+    val second = SenML.exportMulti(SenML.seriesFrame(
+      samples, "uuid-1", "temp", Some("Cel"), Map("env" -> "prod"), float)
+      .unionByName(SenML.seriesFrame(
+        samples, "uuid-2", "hum", None, Map.empty, float)))
+      .collect().drop(2)
     assert(second(0).contains(""""bn":"uuid-2""""))
     assert(!second.exists(_.contains("bver")))
   }
@@ -257,8 +260,8 @@ class ImportersSpec extends SparkSpec {
   }
 
   test("Influx Numeric mode: exact decimals on both parse paths") {
-    // first line is fast-path; the escaped measurement forces the strict
-    // flatMap path — numeric projection must behave identically on both
+    // a tagged line and an escaped measurement — the numeric projection
+    // must behave identically on both
     val lines = Seq(
       """m,host=A v=1.05,c=42i,big=9007199254740993i,ok=t,s="x"""",
       """weird\ measure v=80.4,c=-7i""").toDS()
@@ -349,8 +352,8 @@ class ImportersSpec extends SparkSpec {
   }
 
   test("Influx randomized differential: parse() == strict parseLine on 300 lines") {
-    // The oracle is parseLine itself, so this pins the fast-path dispatch
-    // (and the LAST_WIN map semantics) against the strict grammar.
+    // The oracle is parseLine itself, so this pins the distributed row
+    // layout (names, labels, precision) against the strict grammar.
     val lines = influxLines(20260812L, 300)
     val got = InfluxLineProtocol.parse(lines.toDS(), "b", "o", "ns")
       .select("sensor_name", "labels", "timestamp_us", "type",
@@ -374,8 +377,9 @@ class ImportersSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("Influx columnar fast path agrees with the strict parser") {
-    // all fast-path shaped; the differential oracle is parseLine itself
+  test("Influx simple-shaped lines: parse() agrees with the strict parser") {
+    // unescaped, unquoted, numeric/boolean lines (the shapes a columnar
+    // split would take); the differential oracle is parseLine itself
     val lines = Seq(
       "cpu,host=A usage=64.2 1590488773254420000",
       "m x=2i,y=3.5,z=TRUE,w=f 1700000000123456789",
@@ -455,9 +459,9 @@ class ImportersSpec extends SparkSpec {
 
   test("influx parse survives sessions without LAST_WIN map-key policy") {
     import spark.implicits._
-    // duplicate tag key + reserved label key: under the default EXCEPTION
-    // policy the columnar fast path's str_to_map/map_concat would throw,
-    // so parse() must route everything through the strict parser instead
+    // duplicate tag key + reserved label key: the strict grammar builds
+    // the labels map itself (last wins), so the default EXCEPTION policy
+    // never sees a duplicate key
     val lines = Seq("m1,a=1,a=2 f=1", "m2,influxdb_bucket=x,c=3 f=2")
     val prev = spark.conf.get("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
