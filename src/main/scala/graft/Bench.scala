@@ -187,11 +187,17 @@ object Bench {
       s""""n_failed":${names.count(runs(_).failed)},""" +
       "\"queries\":" + names.map(n => queryJson(n, runs(n)))
         .mkString("{", ",", "}") + "}"
+    // a subset's breakdown lands under the build directory (ignored by
+    // git), so one-off subset runs never rewrite a tracked file
     val defaultOut =
-      if (only.isDefined) "bench_full.partial.json" else "bench_full.json"
+      if (only.isDefined) "target/bench_full.partial.json"
+      else "bench_full.json"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", defaultOut)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), fullJson + "\n")
+    try {
+      val p = java.nio.file.Paths.get(outPath).toAbsolutePath
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, fullJson + "\n")
+    }
     catch { case e: Throwable =>
       System.err.println(s"[bench] full-breakdown write failed: $e")
     }

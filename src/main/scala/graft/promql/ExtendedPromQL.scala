@@ -203,6 +203,11 @@ object ExtendedPromQL {
     * rank window is global but runs over the per-SERIES vector (one row
     * per series, catalog-bounded), the same shape [[TopKQ]] ranks.
     */
+  final case class SortQ(desc: Boolean, inner: Query) extends Query {
+    def matchers: Seq[LabelMatcher] = inner.matchers
+    def startUs: Long = inner.startUs
+    def endUs: Long = inner.endUs
+  }
   /** `sort_by_label[_desc](vec, "l1", "l2", …)` — the instant vector
     * ranked by label VALUES instead of sample values (Prometheus 3
     * experimental; ties fall through the label list, then the series
@@ -211,11 +216,6 @@ object ExtendedPromQL {
     */
   final case class SortByLabelQ(
       desc: Boolean, labels: Seq[String], inner: Query) extends Query {
-    def matchers: Seq[LabelMatcher] = inner.matchers
-    def startUs: Long = inner.startUs
-    def endUs: Long = inner.endUs
-  }
-  final case class SortQ(desc: Boolean, inner: Query) extends Query {
     def matchers: Seq[LabelMatcher] = inner.matchers
     def startUs: Long = inner.startUs
     def endUs: Long = inner.endUs
@@ -429,7 +429,8 @@ object ExtendedPromQL {
     * Inner expressions evaluate per (series, step) with the window
     * re-anchored to the step: selectors contribute their latest sample
     * in the lookback window ending at the step, `<agg>_over_time` /
-    * `quantile_over_time` / rate / increase / delta their window result,
+    * `quantile_over_time` / the range functions their window result
+    * (the instant evaluation's window functions, keyed by step too),
     * and scalar arithmetic / comparison wrappers apply per step value.
     * An inner `offset` shifts every step window back uniformly
     * (`innerShiftUs`); `innerSpanUs` is the inner window length (the
@@ -438,7 +439,8 @@ object ExtendedPromQL {
     * vector (`max_over_time(sum(rate(x[5m]))[1h:5m])`, the canonical
     * alerting shape); the aggregate's group labels become the series
     * identity the outer fold groups on. Binary vector/set operands and
-    * nested subqueries evaluate through [[perStepAny]] (r14).
+    * nested subqueries compose per step too: the whole inner evaluates
+    * through [[perStepAny]], one scan pass per leaf operand.
     *
     * Boundary convention: each step window is CLOSED ON BOTH ENDS
     * (`timestamp_us >= lo && <= hi`), matching this engine's pervasive
@@ -460,17 +462,6 @@ object ExtendedPromQL {
 
   import SimplePromQL.PromQLError
 
-  /** Selector parse with the PromQL `offset` and `@` modifiers (both
-    * absent from the reference's restricted endpoint): `sel [offset
-    * <dur>]` shifts the whole evaluation window back by the duration;
-    * `sel @ <unix_seconds>` pins the evaluation time absolutely (so a
-    * client can replay historical instants against the serving
-    * endpoint, whose default reference is wall-clock now). `@` binds
-    * the reference time first; an `offset` inside then shifts relative
-    * to it. The modifiers are recognized as the final TOKENS of the
-    * query ([[PromQLLexer]]), so keywords inside quoted label values
-    * never match by construction.
-    */
   import PromQLLexer.{Tok, lex}
 
   /** Trailing `@ <unix_seconds>` modifier: Some((inner, seconds)) when
@@ -512,6 +503,17 @@ object ExtendedPromQL {
     }
   }
 
+  /** Selector parse with the PromQL `offset` and `@` modifiers (both
+    * absent from the reference's restricted endpoint): `sel [offset
+    * <dur>]` shifts the whole evaluation window back by the duration;
+    * `sel @ <unix_seconds>` pins the evaluation time absolutely (so a
+    * client can replay historical instants against the serving
+    * endpoint, whose default reference is wall-clock now). `@` binds
+    * the reference time first; an `offset` inside then shifts relative
+    * to it. The modifiers are recognized as the final TOKENS of the
+    * query ([[PromQLLexer]]), so keywords inside quoted label values
+    * never match by construction.
+    */
   private def parseSelector(s: String, nowUs: Long): SimplePromQL.ParsedQuery = {
     val t = s.trim
     trailingAt(t) match {
@@ -686,8 +688,8 @@ object ExtendedPromQL {
     case a: InstantAggVecQ => validSubqueryInner(a.inner)
     case qa: QuantileAggQ => validSubqueryInner(qa.inner)
     // binary vector/set/dynamic-scalar operands and NESTED subqueries
-    // evaluate per step through perStepAny (each leaf keeps its own
-    // one-scan perStepVector pass; operands join on (key, step))
+    // evaluate per step like every other inner (perStepAny: one scan
+    // pass per leaf operand; operands join on (key, step))
     case b: BinVectorQ =>
       validSubqueryInner(b.left) && validSubqueryInner(b.right)
     case b: BinSetQ =>
@@ -696,35 +698,6 @@ object ExtendedPromQL {
       validSubqueryInner(b.inner) && validSubqueryInner(b.scalarQ.inner)
     case sq: SubqueryOverTimeQ => validSubqueryInner(sq.inner)
     case _: VectorLitQ => true
-    case _ => false
-  }
-
-  /** Shapes [[perStepVector]] cannot one-scan: they route through
-    * [[perStepAny]], which recursively gives each leaf operand its own
-    * perStepVector pass and composes the results per (series, step).
-    */
-  private def needsPerStepAny(q: Query): Boolean = q match {
-    case _: BinVectorQ | _: BinSetQ | _: BinDynScalarQ |
-         _: SubqueryOverTimeQ | _: VectorLitQ => true
-    case b: BinScalarQ => needsPerStepAny(b.inner)
-    case b: BinCmpQ => needsPerStepAny(b.inner)
-    case m: MathFnQ => needsPerStepAny(m.inner)
-    case a: InstantAggVecQ => needsPerStepAny(a.inner)
-    case qa: QuantileAggQ => needsPerStepAny(qa.inner)
-    case _ => false
-  }
-
-  /** Whether the subtree contains an operand with its OWN matcher set
-    * (so a caller holding one pre-selected frame cannot evaluate it).
-    */
-  private def hasOwnSelection(q: Query): Boolean = q match {
-    case _: BinVectorQ | _: BinSetQ | _: BinDynScalarQ => true
-    case b: BinScalarQ => hasOwnSelection(b.inner)
-    case b: BinCmpQ => hasOwnSelection(b.inner)
-    case m: MathFnQ => hasOwnSelection(m.inner)
-    case a: InstantAggVecQ => hasOwnSelection(a.inner)
-    case qa: QuantileAggQ => hasOwnSelection(qa.inner)
-    case sq: SubqueryOverTimeQ => hasOwnSelection(sq.inner)
     case _ => false
   }
 
@@ -1463,85 +1436,36 @@ object ExtendedPromQL {
     case other => throw PromQLError(s"Unsupported aggregation: $other")
   }
 
-  /** Evaluate against a selected-series frame and its samples.
-    *
-    * @param selected (sensor_id, labels: map) — the matcher-selected
-    *                 series (callers produce it via
-    *                 `Matchers.sensorsByLabels`)
-    * @param samples  (sensor_id, timestamp_us, value)
-    * @return OverTimeQ / RangeFnQ → (sensor_id, labels, value);
-    *         InstantAggQ → (group_labels, value);
-    *         SelectorQ → (sensor_id, labels, timestamp_us, value)
-    */
   /** [[eval]] generalized over catalog selection: binary vector queries
     * carry TWO independent matcher sets, so the caller provides the
     * matcher→selected-series mapping instead of one pre-selected frame.
-    * Single-selector queries delegate to [[eval]] unchanged.
+    * Every node evaluates here once: operator nodes recurse structurally
+    * through [[operandVec]], so a multi-matcher subtree anywhere
+    * underneath (sum(a / b), abs(a - b) > 0.1) still selects each
+    * operand's series independently, and each leaf reads the samples of
+    * its own selection ([[evalLeaf]]).
     */
   def evalWith(
       q: Query,
       selectFor: Seq[LabelMatcher] => DataFrame,
       samples: DataFrame): DataFrame = q match {
-    case BinVectorQ(op, left, right, matchOn, ignoring, grouping,
-        groupCopy) =>
-      // the join key is the canonical (sorted-entries) form of the
-      // MATCHING labels: all of them, the on() subset, or everything
-      // but the ignoring() subset. Output labels: the matching labels
-      // (one-to-one), or the MANY side's full labels under
-      // group_left/group_right (many-to-one matching — the "one" side's
-      // uniqueness per key is the caller's contract, as in Prometheus)
-      val matched =
-        (c: Column) => matchingEntries(c, matchOn, ignoring)
-      val lv = operandVec(left, selectFor, samples)
-        .select(matched(col("labels")).as("__k"),
-          col("labels").as("__ll"), col("value").as("__lv"))
-      val rv = operandVec(right, selectFor, samples)
-        .select(matched(col("labels")).as("__k"),
-          col("labels").as("__rl"), col("value").as("__rv"))
-      // many-to-one output labels: the many side's full labels, plus
-      // any group_left/right(l1,...) labels copied from the "one" side
-      // (copied keys replace same-named keys on the many side, the
-      // Prometheus contract); built entry-wise so no duplicate keys
-      // ever reach map_from_entries
-      def withCopied(many: Column, one: Column): Column =
-        copiedLabels(many, one, groupCopy)
-      val outLabels = grouping match {
-        case Some("left") => withCopied(col("__ll"), col("__rl"))
-        case Some("right") => withCopied(col("__rl"), col("__ll"))
-        case _ => map_from_entries(col("__k"))
-      }
-      lv.join(rv, "__k")
-        .select(outLabels.as("labels"),
-          binCol(op, col("__lv"), col("__rv")).as("value"))
-    case BinSetQ(op, left, right) =>
-      val canon = (c: Column) => array_sort(map_entries(
-        coalesce(c, map().cast("map<string,string>"))))
-      val lv = operandVec(left, selectFor, samples)
-        .withColumn("__k", canon(col("labels")))
-      val rv = operandVec(right, selectFor, samples)
-        .withColumn("__k", canon(col("labels")))
-      val out = op match {
-        case "and" =>
-          lv.join(rv.select(col("__k")).distinct(), Seq("__k"), "left_semi")
-        case "unless" =>
-          lv.join(rv.select(col("__k")).distinct(), Seq("__k"), "left_anti")
-        case _ => // or
-          lv.unionByName(
-            rv.join(lv.select(col("__k")).distinct(), Seq("__k"), "left_anti"))
-      }
-      out.select("sensor_id", "labels", "value")
-    case sq: SubqueryOverTimeQ if hasOwnSelection(sq.inner) =>
-      // binary vector/set/dynamic-scalar operands inside the subquery:
-      // each leaf selects its own series through selectFor, evaluates
-      // per step (one scan pass per operand, broadcast step grid), and
-      // the sides compose per (matching-labels, step)
+    case b: BinVectorQ =>
+      // an instant binary result is (labels, value); it gets its series
+      // id back when it becomes an operand (normalizeVec)
+      joinVectors(b, operandVec(b.left, selectFor, samples),
+        operandVec(b.right, selectFor, samples), Nil).drop("sensor_id")
+    case b: BinSetQ =>
+      setOp(b.op, operandVec(b.left, selectFor, samples),
+        operandVec(b.right, selectFor, samples), Nil)
+    case sq: SubqueryOverTimeQ =>
+      // the inner evaluates per step (one scan pass per leaf operand over
+      // its step grid; binary sides compose per (matching-labels, step)),
+      // then the outer *_over_time folds each series' step values
       val steps = stepTimestamps(sq.rangeUs, sq.stepUs, sq.evalEndUs)
       if (steps.isEmpty)
         throw PromQLError("Subquery range contains no step timestamps")
-      foldSubquery(
-        perStepAny(sq.inner, steps, sq.evalEndUs, selectFor, samples),
-        sq.op, sq.phi, Seq("sensor_id"))
-        .select("sensor_id", "labels", "value")
+      overTime(perStepAny(sq.inner, steps, sq.evalEndUs, selectFor, samples),
+        sq.op, sq.phi, Seq("sensor_id"), "__t")
     case b: BinDynScalarQ =>
       // the scalar side resolves its own matcher set; its one-row frame
       // broadcasts into a cross join against the vector side — a
@@ -1556,10 +1480,6 @@ object ExtendedPromQL {
     case sq: ScalarQ =>
       scalarValueFrame(operandVec(sq.inner, selectFor, samples))
     case v: VectorLitQ => vectorLitFrame(samples.sparkSession, v.value)
-    // wrapper nodes recurse STRUCTURALLY so a multi-matcher subtree
-    // anywhere underneath (sum(a / b), abs(a - b) > 0.1) still selects
-    // each operand's series independently; the per-node column
-    // transforms are shared with the single-selection eval path
     case b: BinScalarQ =>
       applyBinScalar(b, operandVec(b.inner, selectFor, samples))
     case m: MathFnQ =>
@@ -1580,7 +1500,7 @@ object ExtendedPromQL {
       applyLabelReplace(lr, operandVec(lr.inner, selectFor, samples))
     case lj: LabelJoinQ =>
       applyLabelJoin(lj, operandVec(lj.inner, selectFor, samples))
-    case other => eval(other, selectFor(other.matchers), samples)
+    case other => evalLeaf(other, selectFor(other.matchers), samples)
   }
 
   /** The sorted entry array of the MATCHING labels of a binary vector
@@ -1619,6 +1539,58 @@ object ExtendedPromQL {
       map_from_entries(concat(kept, copied))
     }
 
+  /** The binary vector join of two evaluated operands (each with
+    * labels, value and `keys`): the key is the canonical (sorted-entries)
+    * form of the MATCHING labels — all of them, the on() subset, or
+    * everything but the ignoring() subset — plus `keys` (none for an
+    * instant evaluation, the step `__t` per step). Output labels: the
+    * matching labels (one-to-one), or the MANY side's full labels under
+    * group_left/group_right (many-to-one matching — the "one" side's
+    * uniqueness per key is the caller's contract, as in Prometheus).
+    * Output: the canonical series id of the output labels, keys,
+    * labels, value.
+    */
+  private def joinVectors(
+      b: BinVectorQ, lv: DataFrame, rv: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    def side(v: DataFrame, labels: String, value: String): DataFrame =
+      v.select((matchingEntries(col("labels"), b.matchOn, b.ignoring)
+        .as("__k") +: keys.map(col)) :+ col("labels").as(labels) :+
+        col("value").as(value): _*)
+    val outLabels = b.grouping match {
+      case Some("left") => copiedLabels(col("__ll"), col("__rl"), b.groupCopy)
+      case Some("right") => copiedLabels(col("__rl"), col("__ll"), b.groupCopy)
+      case _ => map_from_entries(col("__k"))
+    }
+    side(lv, "__ll", "__lv").join(side(rv, "__rl", "__rv"), "__k" +: keys)
+      .select((canonicalSeriesId(outLabels).as("sensor_id") +:
+        keys.map(col)) :+ outLabels.as("labels") :+
+        binCol(b.op, col("__lv"), col("__rv")).as("value"): _*)
+  }
+
+  /** Prometheus set operators between two evaluated operands (each with
+    * sensor_id, labels, value and `keys`), matching on the FULL label
+    * set plus `keys`: `and` keeps left rows whose label set also appears
+    * on the right (semi join), `unless` keeps those that don't (anti
+    * join), `or` returns the left plus right rows whose label set has no
+    * left row. Values and labels always come from the contributing side.
+    */
+  private def setOp(
+      op: String, left: DataFrame, right: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val k = "__k" +: keys
+    def keyed(v: DataFrame): DataFrame =
+      v.withColumn("__k", matchingEntries(col("labels"), Nil, ignoring = false))
+    val (lv, rv) = (keyed(left), keyed(right))
+    def keysOf(v: DataFrame): DataFrame = v.select(k.map(col): _*).distinct()
+    val out = op match {
+      case "and" => lv.join(keysOf(rv), k, "left_semi")
+      case "unless" => lv.join(keysOf(rv), k, "left_anti")
+      case _ => lv.unionByName(rv.join(keysOf(lv), k, "left_anti")) // or
+    }
+    out.select((("sensor_id" +: keys) :+ "labels" :+ "value").map(col): _*)
+  }
+
   /** Evaluate an operand to the NORMALIZED instant-vector shape
     * (sensor_id, labels, value: double): selectors contribute their
     * latest sample per series; everything else evaluates through
@@ -1634,7 +1606,9 @@ object ExtendedPromQL {
       samples: DataFrame): DataFrame = q match {
     case v: VectorLitQ => vectorLitFrame(samples.sparkSession, v.value)
     case s: SelectorQ =>
-      normalizeVec(sideVector(s, selectFor(s.matchers), samples))
+      normalizeVec(lastInWindow(withSelected(samples
+        .filter(col("timestamp_us").between(s.startUs, s.endUs)),
+        selectFor(s.matchers))).select("sensor_id", "labels", "value"))
     case other => normalizeVec(evalWith(other, selectFor, samples))
   }
 
@@ -1760,10 +1734,6 @@ object ExtendedPromQL {
       .when(v === 0, lit(Double.NegativeInfinity))
       .otherwise(lit(Double.NaN))
 
-  /** The label set an aggregation groups on: everything collapses to an
-    * empty map without a clause, otherwise the `by` labels (or the
-    * complement under `without`).
-    */
   /** Deterministic 60-bit draw from a series' label set: md5 of the
     * sorted `k=v` canonical string — membership in limitk/limit_ratio
     * depends only on labels, so it is stable across evals and exactly
@@ -1775,6 +1745,10 @@ object ExtendedPromQL {
         e => concat(e.getField("key"), lit("="), e.getField("value"))))
       .cast("binary")), 1, 15), 16, 10).cast("long")
 
+  /** The label set an aggregation groups on: everything collapses to an
+    * empty map without a clause, otherwise the `by` labels (or the
+    * complement under `without`).
+    */
   private def groupLabelsCol(by: Seq[String], without: Boolean): Column =
     if (by.isEmpty && !without)
       map().cast("map<string,string>") // aggregate everything
@@ -1801,8 +1775,8 @@ object ExtendedPromQL {
   }
 
   // ---- per-node column transforms over an evaluated vector frame,
-  // ---- shared between eval (single selection) and evalWith (structural
-  // ---- recursion with per-operand selection)
+  // ---- shared between the instant evaluation (evalWith) and the
+  // ---- per-step one (perStepAny)
 
   private def applyBinScalar(b: BinScalarQ, v: DataFrame): DataFrame = {
     val expr =
@@ -1844,9 +1818,9 @@ object ExtendedPromQL {
 
   private def applyGroupAgg(
       agg: Column, by: Seq[String], without: Boolean,
-      v: DataFrame): DataFrame =
+      v: DataFrame, keys: Seq[String] = Nil): DataFrame =
     v.withColumn("group_labels", groupLabelsCol(by, without))
-      .groupBy(col("group_labels"))
+      .groupBy(keys.map(col) :+ col("group_labels"): _*)
       .agg(agg.as("value"))
 
   private def applyLabelReplace(lr: LabelReplaceQ, v: DataFrame): DataFrame = {
@@ -1927,176 +1901,162 @@ object ExtendedPromQL {
     (first to endUs by stepUs).toList
   }
 
-  /** Evaluate an operand to its instant vector (one row per series:
-    * sensor_id, labels, value): a plain selector contributes each
-    * series' latest sample in the window; per-series functions
-    * contribute their result.
+  /** `<op>_over_time` of each `keys` group's values in `rows` (keys,
+    * labels, value, and the column `at` that orders `last`): the one
+    * fold behind the window functions ([[windowed]], ordered by
+    * timestamp) and the subquery outer fold (ordered by step). `op` is
+    * an [[OverTimeQ]] op, `quantile` (with `phi`) or `mad`. Output:
+    * keys, labels, value.
     */
-  private def sideVector(
-      q: Query, selected: DataFrame, samples: DataFrame): DataFrame =
-    q match {
-      case s: SelectorQ =>
-        lastInWindow(withSelected(samples
-          .filter(col("timestamp_us").between(s.startUs, s.endUs)), selected))
-          .select("sensor_id", "labels", "value")
-      case other => eval(other, selected, samples)
+  private def overTime(
+      rows: DataFrame, op: String, phi: Option[Double],
+      keys: Seq[String], at: String): DataFrame = {
+    def fold(value: Column): DataFrame = foldBy(rows, keys, value)
+    (op, phi) match {
+      case ("quantile", Some(p)) => fold(percentile(col("value"), lit(p)))
+      case ("mad", _) =>
+        // median(|x − median(x)|): the group median joins back first
+        val med = rows.groupBy(keys.map(col): _*)
+          .agg(percentile(col("value"), lit(0.5)).as("__med"))
+        foldBy(rows.join(med, keys), keys,
+          percentile(abs(col("value") - col("__med")), lit(0.5)))
+      // latest by `at`, ties resolved by the larger value
+      case ("last", _) =>
+        fold(max(struct(col(at), col("value"))).getField("value"))
+      case (op2, _) => fold(aggCol(op2, col("value")))
     }
+  }
 
-  /** The per-step vector of `inner` over a step grid: one row per
-    * (series, step) — (sensor_id, __t, labels, value). ONE pass over
-    * the scan: a generator lands each sample in every step window
-    * holding it (≤ span/step + 1 steps, [[stepsHolding]]), then the
-    * inner evaluates per (series, step) group — never a per-step job
-    * loop. Shared by the subquery *_over_time fold and the query_range
-    * API ([[evalRange]]).
+  /** `rows` folded per `keys` group: the group's labels, `value` and any
+    * `more` aggregates.
     */
-  private def perStepVector(
-      inner: Query, steps: Seq[Long],
-      innerShiftUs: Long, innerSpanUs: Long,
-      selected: DataFrame, samples: DataFrame): DataFrame = {
-    val inWindow = withSelected(samples
-      .filter(col("timestamp_us").between(
-        steps.min - innerShiftUs - innerSpanUs, steps.max - innerShiftUs)),
-      selected)
-    val j = inWindow.withColumn("__t",
-      explode(stepsHolding(steps, innerShiftUs, innerSpanUs)))
-    def grouped = j.groupBy(col("sensor_id"), col("__t"))
-    // latest sample in the step window, ties on timestamp resolved by
-    // value like lastInWindow's (ts desc, value desc) ordering
-    def lastAtStep: DataFrame = grouped
-      .agg(first(col("labels")).as("labels"),
-        max(struct(col("timestamp_us"), col("value")))
-          .getField("value").as("value"))
-    // cross-series aggregation at each step: the per-step vector groups
-    // by its kept labels, and the group becomes the series the caller
-    // keys on (canonical-rendered id)
-    def stepAgg(sv: DataFrame, agg: Column, by: Seq[String],
-        without: Boolean): DataFrame =
-      sv.withColumn("group_labels", groupLabelsCol(by, without))
-        .groupBy(col("__t"), col("group_labels"))
-        .agg(agg.as("value"))
-        .select(canonicalSeriesId(col("group_labels")).as("sensor_id"),
-          col("__t"), col("group_labels").as("labels"),
-          col("value").cast("double").as("value"))
-    def stepValues(q0: Query): DataFrame = q0 match {
-      case _: SelectorQ => lastAtStep
-      case OverTimeQ("last", _, _, _) => lastAtStep
-      case OverTimeQ(op2, _, _, _) =>
-        grouped.agg(first(col("labels")).as("labels"),
-          aggCol(op2, col("value")).as("value"))
-      case QuantileOverTimeQ(phi, _, _, _) =>
-        grouped.agg(first(col("labels")).as("labels"),
-          percentile(col("value"), lit(phi)).as("value"))
+  private def foldBy(rows: DataFrame, keys: Seq[String], value: Column,
+      more: Column*): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(first(col("labels")).as("labels"), value.as("value") +: more: _*)
+
+  /** A per-series window function over `rows` (sensor_id, labels,
+    * timestamp_us, value and `keys`), folded per `keys` group: the
+    * series alone for an instant evaluation, (series, step `__t`) per
+    * step — one implementation for both. A selector contributes its
+    * latest sample (`last_over_time` over its lookback), ties on
+    * timestamp resolved by the larger value like [[lastInWindow]].
+    * Output: keys, labels, value.
+    */
+  private def windowed(
+      q: Query, rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val latest = struct(col("timestamp_us"), col("value"))
+    // the lag order includes value so ties on timestamp stay deterministic
+    val ord = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("timestamp_us"), col("value"))
+    def withPrev = rows.withColumn("__prev", lag(col("value"), 1).over(ord))
+    def over(op: String, phi: Option[Double] = None): DataFrame =
+      overTime(rows, op, phi, keys, "timestamp_us")
+    q match {
+      case _: SelectorQ => over("last")
+      case OverTimeQ(op, _, _, _) => over(op)
+      case QuantileOverTimeQ(phi, _, _, _) => over("quantile", Some(phi))
+      case _: MadOverTimeQ => over("mad")
       case RangeFnQ("delta", _, _, _) =>
-        grouped.agg(first(col("labels")).as("labels"),
-          (max(struct(col("timestamp_us"), col("value")))
-            .getField("value") -
-            min(struct(col("timestamp_us"), col("value")))
-              .getField("value")).as("value"),
+        // last − first via lexicographic (ts, value) struct extrema —
+        // deterministic under timestamp ties, no summation involved
+        foldBy(rows, keys,
+          max(latest).getField("value") - min(latest).getField("value"),
           count(lit(1)).as("__n"))
-          .filter(col("__n") >= 2)
-          .select(col("sensor_id"), col("__t"), col("labels"),
-            col("value"))
-      case RangeFnQ(op2 @ ("resets" | "changes"), _, _, _) =>
-        val ord = Window.partitionBy(col("sensor_id"), col("__t"))
-          .orderBy(col("timestamp_us"), col("value"))
-        val withPrev =
-          j.withColumn("__prev", lag(col("value"), 1).over(ord))
+          .filter(col("__n") >= 2).drop("__n")
+      case RangeFnQ(op @ ("resets" | "changes"), _, _, _) =>
+        // per-pair indicators summed per series: resets = counter
+        // decreases, changes = any value change (Prometheus counts
+        // pairs, so singleton series yield 0, empty windows nothing)
         val ind =
-          if (op2 == "resets") col("value") < col("__prev")
+          if (op == "resets") col("value") < col("__prev")
           else col("value") =!= col("__prev")
-        withPrev.groupBy(col("sensor_id"), col("__t"))
+        foldBy(withPrev, keys, sum(when(col("__prev").isNotNull && ind, 1L)
+          .otherwise(0L)).cast("double"))
+      case RangeFnQ(op @ ("idelta" | "irate"), _, _, _) =>
+        // the LAST adjacent pair per series: lag rides along into a
+        // lexicographic (ts, value) struct max. irate is the
+        // instantaneous counter rate over that pair (reset-aware,
+        // divided by the pair's own time gap — Prometheus semantics); a
+        // pair sharing one timestamp yields nothing, as in Prometheus
+        val lastPair = withPrev
+          .withColumn("__prev_ts", lag(col("timestamp_us"), 1).over(ord))
+          .groupBy(keys.map(col): _*)
           .agg(first(col("labels")).as("labels"),
-            sum(when(col("__prev").isNotNull && ind, 1L)
-              .otherwise(0L)).cast("double").as("value"))
-      case RangeFnQ(op2 @ ("increase" | "rate"), _, _, _) =>
-        val ord = Window.partitionBy(col("sensor_id"), col("__t"))
-          .orderBy(col("timestamp_us"), col("value"))
-        val d = j.withColumn("__prev", lag(col("value"), 1).over(ord))
+            max(struct(col("timestamp_us"), col("value"),
+              col("__prev"), col("__prev_ts"))).as("__last"))
+          .filter(col("__last.__prev").isNotNull &&
+            col("__last.timestamp_us") > col("__last.__prev_ts"))
+        val v = col("__last.value")
+        val p = col("__last.__prev")
+        val gapS = (col("__last.timestamp_us") - col("__last.__prev_ts"))
+          .cast("double") / lit(1e6)
+        lastPair.withColumn("value",
+          if (op == "idelta") v - p
+          else when(v >= p, (v - p) / gapS).otherwise(v / gapS))
+          .drop("__last")
+      case RangeFnQ("deriv", _, _, endUs) =>
+        // least-squares slope of value over time-in-seconds
+        // (Prometheus deriv); x is anchored at the window end so the
+        // regression arithmetic is replayable
+        val x = (col("timestamp_us") - lit(endUs)).cast("double") / lit(1e6)
+        foldBy(rows, keys, regr_slope(col("value"), x), count(lit(1)).as("__n"))
+          .filter(col("__n") >= 2 && col("value").isNotNull).drop("__n")
+      case RangeFnQ(op, _, startUs, endUs) => // increase | rate
+        val d = withPrev
           .withColumn("__d",
             when(col("__prev").isNull, lit(null).cast("double"))
               .when(col("value") >= col("__prev"),
                 col("value") - col("__prev"))
               .otherwise(col("value")))
-        val agg = d.groupBy(col("sensor_id"), col("__t"))
-          .agg(first(col("labels")).as("labels"),
-            sum(col("__d")).as("value"))
-          .filter(col("value").isNotNull)
-        if (op2 == "rate")
-          agg.withColumn("value",
-            col("value") / lit(innerSpanUs / 1e6))
+        // plain f64 summation — Prometheus values are f64, and any
+        // quantization here (e.g. a decimal cast) would corrupt
+        // fractional counter deltas for generic callers; callers that
+        // need order-independent comparison round at their own layer
+        val agg = foldBy(d, keys, sum(col("__d")))
+          .filter(col("value").isNotNull) // <2 samples ⇒ no result
+        if (op == "rate")
+          agg.withColumn("value", col("value") / lit((endUs - startUs) / 1e6))
         else agg
-      case b: BinScalarQ =>
-        val v = stepValues(b.inner)
-        val e =
-          if (b.scalarOnLeft) binCol(b.op, lit(b.scalar), col("value"))
-          else binCol(b.op, col("value"), lit(b.scalar))
-        v.withColumn("value", e)
-      case a: InstantAggQ =>
-        stepAgg(lastAtStep, aggCol(a.op, col("value")), a.by, a.without)
-      case a: InstantAggVecQ =>
-        stepAgg(stepValues(a.inner), aggCol(a.op, col("value")),
-          a.by, a.without)
-      case qa: QuantileAggQ =>
-        stepAgg(stepValues(qa.inner),
-          percentile(col("value"), lit(qa.phi)), qa.by, qa.without)
-      case m: MathFnQ =>
-        stepValues(m.inner)
-          .withColumn("value", mathCol(m.fn, m.args, col("value")))
-      case b: BinCmpQ =>
-        val v = stepValues(b.inner)
-        val (l, r) =
-          if (b.scalarOnLeft) (lit(b.scalar), col("value"))
-          else (col("value"), lit(b.scalar))
-        val pred = cmpPred(b.op, l, r)
-        if (b.bool) v.withColumn("value", when(pred, 1.0).otherwise(0.0))
-        else v.filter(pred)
       case _ =>
         throw PromQLError("Unsupported subquery inner expression")
     }
-    stepValues(inner)
   }
 
-  /** The subquery OUTER fold: `<op>_over_time` across the per-step
-    * vector, grouped by `keys` (the series id, plus the outer step for
-    * nested subqueries). Shared by the single-selection eval path and
-    * [[perStepAny]].
+  /** The per-step vector of a leaf over a step grid: one row per
+    * (series, step) — (sensor_id, __t, labels, value). ONE pass over
+    * the scan: a generator lands each sample in every step window
+    * holding it (≤ span/step + 1 steps, [[stepsHolding]]), then the
+    * leaf's window function folds per (series, step) group — never a
+    * per-step job loop. The leaf's window is re-anchored at each step,
+    * shifted back by its distance from `refUs`, the parse-time
+    * evaluation reference (an `offset`).
     */
-  private def foldSubquery(
-      sv: DataFrame, op: String, phi: Option[Double],
-      keys: Seq[String]): DataFrame = {
-    val ks = keys.map(col)
-    (op, phi) match {
-      case ("quantile", Some(p)) =>
-        sv.groupBy(ks: _*).agg(first(col("labels")).as("labels"),
-          percentile(col("value"), lit(p)).as("value"))
-      case ("mad", _) =>
-        val med = sv.groupBy(ks: _*)
-          .agg(percentile(col("value"), lit(0.5)).as("__med"))
-        sv.join(med, keys)
-          .groupBy(ks: _*)
-          .agg(first(col("labels")).as("labels"),
-            percentile(abs(col("value") - col("__med")), lit(0.5))
-              .as("value"))
-      case ("last", _) =>
-        sv.groupBy(ks: _*).agg(first(col("labels")).as("labels"),
-          max(struct(col("__t"), col("value")))
-            .getField("value").as("value"))
-      case (op2, _) =>
-        sv.groupBy(ks: _*).agg(first(col("labels")).as("labels"),
-          aggCol(op2, col("value")).as("value"))
-    }
+  private def perStepVector(
+      leaf: Query, steps: Seq[Long], refUs: Long,
+      selected: DataFrame, samples: DataFrame): DataFrame = {
+    val shiftUs = refUs - leaf.endUs
+    val spanUs = leaf.endUs - leaf.startUs
+    val inWindow = withSelected(samples
+      .filter(col("timestamp_us").between(
+        steps.min - shiftUs - spanUs, steps.max - shiftUs)),
+      selected)
+    windowed(leaf,
+      inWindow.withColumn("__t", explode(stepsHolding(steps, shiftUs, spanUs))),
+      Seq("sensor_id", "__t"))
   }
 
-  /** [[perStepVector]] generalized over catalog selection and operand
-    * shape: binary vector/set operands evaluate each side independently
-    * (each leaf keeps its own ONE-SCAN perStepVector pass over its step
-    * grid) and join per (matching-labels, step); nested
+  /** The per-step evaluation of any subquery-valid expression over a
+    * step grid — the one per-step recursion, shared by subqueries,
+    * [[evalRange]] and the pinned [[evalRangeApi]]. Each leaf selects
+    * its own series and gets ONE scan pass over its step grid
+    * ([[perStepVector]]); wrappers and aggregations apply the same
+    * per-node transforms as the instant evaluation, per step; binary
+    * vector/set operands join per (matching-labels, step); nested
     * subqueries share one epoch-aligned inner grid across all outer
     * steps (inner step timestamps are epoch multiples, so they repeat
     * across outer steps — one inner pass total, joined to the small
     * (outer, inner) pair frame); dynamic scalars resolve per step.
-    * Single-selection subtrees delegate to [[perStepVector]] unchanged.
     * Output: (sensor_id, __t, labels, value), one row per (series, step).
     *
     * `refUs` is the parse-time evaluation reference (every node's
@@ -2105,64 +2065,25 @@ object ExtendedPromQL {
   private def perStepAny(
       q: Query, steps: Seq[Long], refUs: Long,
       selectFor: Seq[LabelMatcher] => DataFrame,
-      samples: DataFrame): DataFrame =
-    if (!needsPerStepAny(q))
-      perStepVector(q, steps, refUs - q.endUs, q.endUs - q.startUs,
-        selectFor(q.matchers), samples)
-    else q match {
+      samples: DataFrame): DataFrame = {
+    def sub(q2: Query): DataFrame =
+      perStepAny(q2, steps, refUs, selectFor, samples)
+    q match {
       case b: BinVectorQ =>
-        val lv = perStepAny(b.left, steps, refUs, selectFor, samples)
-          .select(
-            matchingEntries(col("labels"), b.matchOn, b.ignoring).as("__k"),
-            col("__t"), col("labels").as("__ll"), col("value").as("__lv"))
-        val rv = perStepAny(b.right, steps, refUs, selectFor, samples)
-          .select(
-            matchingEntries(col("labels"), b.matchOn, b.ignoring).as("__k"),
-            col("__t"), col("labels").as("__rl"), col("value").as("__rv"))
-        val outLabels = b.grouping match {
-          case Some("left") => copiedLabels(col("__ll"), col("__rl"), b.groupCopy)
-          case Some("right") => copiedLabels(col("__rl"), col("__ll"), b.groupCopy)
-          case _ => map_from_entries(col("__k"))
-        }
-        lv.join(rv, Seq("__k", "__t"))
-          .select(canonicalSeriesId(outLabels).as("sensor_id"), col("__t"),
-            outLabels.as("labels"),
-            binCol(b.op, col("__lv"), col("__rv")).as("value"))
-      case b: BinSetQ =>
-        val canon = (c: Column) => array_sort(map_entries(
-          coalesce(c, map().cast("map<string,string>"))))
-        val lv = perStepAny(b.left, steps, refUs, selectFor, samples)
-          .withColumn("__k", canon(col("labels")))
-        val rv = perStepAny(b.right, steps, refUs, selectFor, samples)
-          .withColumn("__k", canon(col("labels")))
-        val out = b.op match {
-          case "and" =>
-            lv.join(rv.select(col("__k"), col("__t")).distinct(),
-              Seq("__k", "__t"), "left_semi")
-          case "unless" =>
-            lv.join(rv.select(col("__k"), col("__t")).distinct(),
-              Seq("__k", "__t"), "left_anti")
-          case _ => // or
-            lv.unionByName(rv.join(
-              lv.select(col("__k"), col("__t")).distinct(),
-              Seq("__k", "__t"), "left_anti"))
-        }
-        out.select("sensor_id", "__t", "labels", "value")
+        joinVectors(b, sub(b.left), sub(b.right), Seq("__t"))
+      case b: BinSetQ => setOp(b.op, sub(b.left), sub(b.right), Seq("__t"))
       case b: BinDynScalarQ =>
         // scalar(x) per step: the single series' value when the step's
         // vector has exactly one element, NaN otherwise (Prometheus);
         // steps with an EMPTY vector surface NaN via the left join
-        val scv = perStepAny(b.scalarQ.inner, steps, refUs, selectFor,
-          samples)
-        val sc = scv.groupBy(col("__t"))
+        val sc = sub(b.scalarQ.inner).groupBy(col("__t"))
           .agg(when(count(lit(1)) === 1, min(col("value")))
             .otherwise(lit(Double.NaN)).as("__s"))
-        val v = perStepAny(b.inner, steps, refUs, selectFor, samples)
         val s = coalesce(col("__s"), lit(Double.NaN))
         val e =
           if (b.scalarOnLeft) binCol(b.op, s, col("value"))
           else binCol(b.op, col("value"), s)
-        v.join(broadcast(sc), Seq("__t"), "left")
+        sub(b.inner).join(broadcast(sc), Seq("__t"), "left")
           .withColumn("value", e).drop("__s")
       case v: VectorLitQ =>
         import samples.sparkSession.implicits._
@@ -2185,45 +2106,32 @@ object ExtendedPromQL {
         val sv = perStepAny(sq.inner, innerTs, refUs, selectFor, samples)
         import samples.sparkSession.implicits._
         val pairDf = broadcast(pairs.toDF("__ot", "__t"))
-        foldSubquery(sv.join(pairDf, "__t"), sq.op, sq.phi,
-          Seq("sensor_id", "__ot"))
+        overTime(sv.join(pairDf, "__t"), sq.op, sq.phi,
+          Seq("sensor_id", "__ot"), "__t")
           .select(col("sensor_id"), col("__ot").as("__t"), col("labels"),
             col("value"))
-      case b: BinScalarQ =>
-        val v = perStepAny(b.inner, steps, refUs, selectFor, samples)
-        val e =
-          if (b.scalarOnLeft) binCol(b.op, lit(b.scalar), col("value"))
-          else binCol(b.op, col("value"), lit(b.scalar))
-        v.withColumn("value", e)
-      case m: MathFnQ =>
-        perStepAny(m.inner, steps, refUs, selectFor, samples)
-          .withColumn("value", mathCol(m.fn, m.args, col("value")))
-      case b: BinCmpQ =>
-        val v = perStepAny(b.inner, steps, refUs, selectFor, samples)
-        val (l, r) =
-          if (b.scalarOnLeft) (lit(b.scalar), col("value"))
-          else (col("value"), lit(b.scalar))
-        val pred = cmpPred(b.op, l, r)
-        if (b.bool) v.withColumn("value", when(pred, 1.0).otherwise(0.0))
-        else v.filter(pred)
-      case a: InstantAggVecQ =>
-        stepAggVec(perStepAny(a.inner, steps, refUs, selectFor, samples),
+      case b: BinScalarQ => applyBinScalar(b, sub(b.inner))
+      case m: MathFnQ => applyMathFn(m, sub(m.inner))
+      case b: BinCmpQ => applyBinCmp(b, sub(b.inner))
+      case a: InstantAggQ =>
+        stepAggVec(sub(SelectorQ(a.matchers, a.startUs, a.endUs)),
           aggCol(a.op, col("value")), a.by, a.without)
+      case a: InstantAggVecQ =>
+        stepAggVec(sub(a.inner), aggCol(a.op, col("value")), a.by, a.without)
       case qa: QuantileAggQ =>
-        stepAggVec(perStepAny(qa.inner, steps, refUs, selectFor, samples),
-          percentile(col("value"), lit(qa.phi)), qa.by, qa.without)
-      case _ =>
-        throw PromQLError("Unsupported subquery inner expression")
+        stepAggVec(sub(qa.inner), percentile(col("value"), lit(qa.phi)),
+          qa.by, qa.without)
+      case leaf =>
+        perStepVector(leaf, steps, refUs, selectFor(leaf.matchers), samples)
     }
+  }
 
   /** Cross-series aggregation of a per-step vector at each step: the
     * aggregate's group labels become the series identity.
     */
   private def stepAggVec(sv: DataFrame, agg: Column, by: Seq[String],
       without: Boolean): DataFrame =
-    sv.withColumn("group_labels", groupLabelsCol(by, without))
-      .groupBy(col("__t"), col("group_labels"))
-      .agg(agg.as("value"))
+    applyGroupAgg(agg, by, without, sv, Seq("__t"))
       .select(canonicalSeriesId(col("group_labels")).as("sensor_id"),
         col("__t"), col("group_labels").as("labels"),
         col("value").cast("double").as("value"))
@@ -2247,15 +2155,8 @@ object ExtendedPromQL {
       samples: DataFrame): DataFrame = {
     rangeChecks(q, startUs, endUs, stepUs)
     val steps = (startUs to endUs by stepUs).toList
-    // binary vector/set/dynamic-scalar expressions and subqueries route
-    // through perStepAny (each leaf one scan pass; sides joined per
-    // (matching-labels, step)) — `errors / requests` charted at every
-    // step is the dashboard ratio panel
-    val sv =
-      if (needsPerStepAny(q)) perStepAny(q, steps, endUs, selectFor, samples)
-      else perStepVector(q, steps, endUs - q.endUs, q.endUs - q.startUs,
-        selectFor(q.matchers), samples)
-    sv.select(col("sensor_id"), col("labels"), col("__t").as("t_us"),
+    perStepAny(q, steps, endUs, selectFor, samples)
+      .select(col("sensor_id"), col("labels"), col("__t").as("t_us"),
         col("value").cast("double").as("value"))
   }
 
@@ -2314,9 +2215,7 @@ object ExtendedPromQL {
         val samples = samplesFor(q.startUs, q.endUs)
         // one evaluation at the pinned instant (a single-step grid at
         // the pinned window's end, zero shift) — through perStepAny, so
-        // every shape rangeChecks admits (binary-vector operands, nested
-        // subqueries, dynamic scalars) pins too, not just the
-        // single-selection subtrees perStepVector can one-scan
+        // every shape rangeChecks admits pins too
         val once = perStepAny(q, List(pinUs), pinUs, selectFor, samples)
           .select(col("sensor_id"), col("labels"),
             col("value").cast("double").as("value"))
@@ -2332,17 +2231,44 @@ object ExtendedPromQL {
     }
   }
 
+  /** Evaluate against a selected-series frame and its samples: the
+    * evaluation [[evalWith]] runs with every leaf reading `selected`.
+    * Binary vector/set operators anywhere in the tree carry two
+    * independent matcher sets, so they reject here.
+    *
+    * @param selected (sensor_id, labels: map) — the matcher-selected
+    *                 series (callers produce it via
+    *                 `Matchers.sensorsByLabels`)
+    * @param samples  (sensor_id, timestamp_us, value)
+    * @return OverTimeQ / RangeFnQ → (sensor_id, labels, value);
+    *         InstantAggQ → (group_labels, value);
+    *         SelectorQ → (sensor_id, labels, timestamp_us, value)
+    */
   def eval(q: Query, selected: DataFrame, samples: DataFrame): DataFrame = {
+    if (hasVectorJoin(q))
+      throw PromQLError(
+        "binary vector queries carry two matcher sets — evaluate via evalWith")
+    evalWith(q, _ => selected, samples)
+  }
+
+  /** Whether the subtree holds a binary vector/set operator. */
+  private def hasVectorJoin(q: Query): Boolean = q match {
+    case _: BinVectorQ | _: BinSetQ => true
+    case node: Product => node.productIterator.exists {
+      case c: Query => hasVectorJoin(c)
+      case _ => false
+    }
+  }
+
+  /** A leaf node: the shapes that read the samples of ONE selection
+    * directly, each within its own window. The per-series window
+    * functions are [[windowed]] keyed by the series alone.
+    */
+  private def evalLeaf(
+      q: Query, selected: DataFrame, samples: DataFrame): DataFrame = {
     val inWindow = withSelected(samples
       .filter(col("timestamp_us").between(q.startUs, q.endUs)), selected)
     q match {
-      case b: BinScalarQ =>
-        applyBinScalar(b,
-          normalizeVec(sideVector(b.inner, selected, samples)))
-      case m: MathFnQ =>
-        applyMathFn(m, normalizeVec(sideVector(m.inner, selected, samples)))
-      case b: BinCmpQ =>
-        applyBinCmp(b, normalizeVec(sideVector(b.inner, selected, samples)))
       case LimitKQ(k, _, _, _) =>
         lastInWindow(inWindow)
           .withColumn("__d", labelDraw(col("labels")))
@@ -2420,49 +2346,8 @@ object ExtendedPromQL {
         lastInWindow(inWindow)
           .select(col("sensor_id"), col("labels"),
             (col("timestamp_us").cast("double") / lit(1e6)).as("value"))
-      case s: SortByLabelQ =>
-        applySortByLabel(s,
-          normalizeVec(sideVector(s.inner, selected, samples)))
-      case SortQ(desc, inner) =>
-        applySort(desc, normalizeVec(sideVector(inner, selected, samples)))
-      case v: VectorLitQ => vectorLitFrame(samples.sparkSession, v.value)
-      case sq: ScalarQ =>
-        // sideVector gives the INSTANT vector for a plain selector
-        // (latest per series), which is what scalar() consumes
-        scalarValueFrame(sideVector(sq.inner, selected, samples))
-      case b: BinDynScalarQ =>
-        // single-selection variant (nested under a per-series wrapper,
-        // or a caller-supplied selection covering both operands)
-        val sc = broadcast(eval(b.scalarQ, selected, samples)
-          .select(col("value").as("__s")))
-        val v = sideVector(b.inner, selected, samples)
-        val expr =
-          if (b.scalarOnLeft) binCol(b.op, col("__s"), col("value"))
-          else binCol(b.op, col("value"), col("__s"))
-        v.crossJoin(sc).withColumn("value", expr).drop("__s")
       case SelectorQ(_, _, _) =>
         inWindow.select("sensor_id", "labels", "timestamp_us", "value")
-      case OverTimeQ(op, _, _, _) =>
-        val c = if (op == "last") null else aggCol(op, col("value"))
-        if (op == "last") lastInWindow(inWindow)
-          .select(col("sensor_id"), col("labels"), col("value"))
-        else inWindow.groupBy(col("sensor_id"))
-          .agg(first(col("labels")).as("labels"), c.as("value"))
-          .select("sensor_id", "labels", "value")
-      case QuantileOverTimeQ(phi, _, _, _) =>
-        inWindow.groupBy(col("sensor_id"))
-          .agg(first(col("labels")).as("labels"),
-            percentile(col("value"), lit(phi)).as("value"))
-          .select("sensor_id", "labels", "value")
-      case MadOverTimeQ(_, _, _) =>
-        val med = inWindow.groupBy(col("sensor_id"))
-          .agg(percentile(col("value"), lit(0.5)).as("__med"))
-        inWindow.join(med, "sensor_id")
-          .groupBy(col("sensor_id"))
-          .agg(first(col("labels")).as("labels"),
-            percentile(abs(col("value") - col("__med")), lit(0.5))
-              .as("value"))
-          .select("sensor_id", "labels", "value")
       case PredictLinearQ(horizonS, _, _, endUs) =>
         // x anchored at the window end, so the prediction at now + t is
         // intercept + slope * t — replayable regression arithmetic
@@ -2474,128 +2359,9 @@ object ExtendedPromQL {
             count(lit(1)).as("__n"))
           .filter(col("__n") >= 2 && col("value").isNotNull)
           .select("sensor_id", "labels", "value")
-      case RangeFnQ(op, _, startUs, endUs) =>
-        // one shuffle on sensor_id (the storage sort key); the lag order
-        // includes value so ties on timestamp stay deterministic
-        val ord = Window.partitionBy(col("sensor_id"))
-          .orderBy(col("timestamp_us"), col("value"))
-        op match {
-          case "delta" =>
-            // last − first via lexicographic (ts, value) struct extrema —
-            // deterministic under timestamp ties, no summation involved
-            inWindow.groupBy(col("sensor_id"))
-              .agg(first(col("labels")).as("labels"),
-                (max(struct(col("timestamp_us"), col("value")))
-                  .getField("value") -
-                  min(struct(col("timestamp_us"), col("value")))
-                    .getField("value")).as("value"),
-                count(lit(1)).as("__n"))
-              .filter(col("__n") >= 2)
-              .select("sensor_id", "labels", "value")
-          case "resets" | "changes" =>
-            // per-pair indicators summed per series: resets = counter
-            // decreases, changes = any value change (Prometheus counts
-            // pairs, so singleton series yield 0, empty windows nothing)
-            val ind =
-              if (op == "resets") col("value") < col("__prev")
-              else col("value") =!= col("__prev")
-            inWindow
-              .withColumn("__prev", lag(col("value"), 1).over(ord))
-              .groupBy(col("sensor_id"))
-              .agg(first(col("labels")).as("labels"),
-                sum(when(col("__prev").isNotNull && ind, 1L)
-                  .otherwise(0L)).cast("double").as("value"))
-              .select("sensor_id", "labels", "value")
-          case "idelta" | "irate" =>
-            // the LAST adjacent pair per series: lag rides along into a
-            // lexicographic (ts, value) struct max. irate is the
-            // instantaneous counter rate over that pair (reset-aware,
-            // divided by the pair's own time gap — Prometheus semantics)
-            val lastPair = inWindow
-              .withColumn("__prev", lag(col("value"), 1).over(ord))
-              .withColumn("__prev_ts", lag(col("timestamp_us"), 1).over(ord))
-              .groupBy(col("sensor_id"))
-              .agg(first(col("labels")).as("labels"),
-                max(struct(col("timestamp_us"), col("value"),
-                  col("__prev"), col("__prev_ts"))).as("__last"))
-              .filter(col("__last.__prev").isNotNull)
-            val v = col("__last.value")
-            val p = col("__last.__prev")
-            val gapS = (col("__last.timestamp_us") - col("__last.__prev_ts"))
-              .cast("double") / lit(1e6)
-            val e =
-              if (op == "idelta") v - p
-              else when(v >= p, (v - p) / gapS).otherwise(v / gapS)
-            lastPair.select(col("sensor_id"), col("labels"), e.as("value"))
-          case "deriv" =>
-            // least-squares slope of value over time-in-seconds
-            // (Prometheus deriv); x is anchored at the window end so the
-            // regression arithmetic is replayable
-            val x = (col("timestamp_us") - lit(endUs)).cast("double") /
-              lit(1e6)
-            inWindow.groupBy(col("sensor_id"))
-              .agg(first(col("labels")).as("labels"),
-                regr_slope(col("value"), x).as("value"),
-                count(lit(1)).as("__n"))
-              .filter(col("__n") >= 2 && col("value").isNotNull)
-              .select("sensor_id", "labels", "value")
-          case _ => // increase | rate
-            val d = inWindow
-              .withColumn("__prev", lag(col("value"), 1).over(ord))
-              .withColumn("__d",
-                when(col("__prev").isNull, lit(null).cast("double"))
-                  .when(col("value") >= col("__prev"),
-                    col("value") - col("__prev"))
-                  .otherwise(col("value")))
-            // plain f64 summation — Prometheus values are f64, and any
-            // quantization here (e.g. a decimal cast) would corrupt
-            // fractional counter deltas for generic callers; callers that
-            // need order-independent comparison round at their own layer
-            val agg = d.groupBy(col("sensor_id"))
-              .agg(first(col("labels")).as("labels"),
-                sum(col("__d")).as("value"))
-              .filter(col("value").isNotNull) // <2 samples ⇒ no result
-            if (op == "rate")
-              agg.withColumn("value",
-                col("value") / lit((endUs - startUs) / 1e6))
-                .select("sensor_id", "labels", "value")
-            else agg.select("sensor_id", "labels", "value")
-        }
-      case sq: SubqueryOverTimeQ =>
-        if (hasOwnSelection(sq.inner))
-          throw PromQLError(
-            "subquery operands with their own matcher sets carry " +
-              "multiple selections — evaluate via evalWith")
-        val steps = stepTimestamps(sq.rangeUs, sq.stepUs, sq.evalEndUs)
-        if (steps.isEmpty)
-          throw PromQLError("Subquery range contains no step timestamps")
-        // single-matcher subtrees (incl. NESTED subqueries) can reuse
-        // the caller's pre-selected frame for every leaf
-        val sv =
-          if (needsPerStepAny(sq.inner))
-            perStepAny(sq.inner, steps, sq.evalEndUs, _ => selected,
-              samples)
-          else perStepVector(sq.inner, steps, sq.innerShiftUs,
-            sq.innerSpanUs, selected, samples)
-        foldSubquery(sv, sq.op, sq.phi, Seq("sensor_id"))
-          .select("sensor_id", "labels", "value")
       case InstantAggQ(op, by, without, _, _, _) =>
-        lastInWindow(inWindow)
-          .withColumn("group_labels", groupLabelsCol(by, without))
-          .groupBy(col("group_labels"))
-          .agg(aggCol(op, col("value")).as("value"))
-      case a: InstantAggVecQ =>
-        applyGroupAgg(aggCol(a.op, col("value")), a.by, a.without,
-          normalizeVec(sideVector(a.inner, selected, samples)))
-      case qa: QuantileAggQ =>
-        applyGroupAgg(percentile(col("value"), lit(qa.phi)), qa.by,
-          qa.without, normalizeVec(sideVector(qa.inner, selected, samples)))
-      case lr: LabelReplaceQ =>
-        applyLabelReplace(lr,
-          normalizeVec(sideVector(lr.inner, selected, samples)))
-      case lj: LabelJoinQ =>
-        applyLabelJoin(lj,
-          normalizeVec(sideVector(lj.inner, selected, samples)))
+        applyGroupAgg(aggCol(op, col("value")), by, without,
+          lastInWindow(inWindow))
       case HistogramQuantileQ(phi, _, _, _) =>
         // buckets per group = labels minus `le`; arrays are tiny (one
         // entry per bucket boundary), so the interpolation runs as a
@@ -2629,9 +2395,7 @@ object ExtendedPromQL {
           .filter(col("__n") === 0)
           .select(map().cast("map<string,string>").as("labels"),
             lit(1.0).as("value"))
-      case _: BinVectorQ | _: BinSetQ =>
-        throw PromQLError(
-          "binary vector queries carry two matcher sets — evaluate via evalWith")
+      case _ => windowed(q, inWindow, Seq("sensor_id"))
     }
   }
 

@@ -1522,9 +1522,10 @@ private[graft] object PromqlQueries {
 
     // The canonical SLO burn-rate alerting shape — a binary vector
     // expression INSIDE a subquery (r13 rejected this; r14 evaluates
-    // through perStepAny): daily error/view ratio, maxed over January.
-    // Each aggregation side is one scan pass with the broadcast day
-    // grid; the sides join per (empty-group-key, step); division and
+    // it per step): daily error/view ratio, maxed over January. Each
+    // aggregation side is one scan pass whose samples land on the day
+    // grid through one generator (perStepVector); the sides join per
+    // (empty-group-key, step) in perStepAny's one recursion; division and
     // max are exact-integer-derived doubles, bit-identical in DuckDB.
     q(
       "q377_promql_burn_rate",

@@ -1432,6 +1432,12 @@ class GatewaySpec extends SparkSpec {
       val Phased = (""".*"path":"([^"]*)","status":200,"us":(\d+),""" +
         """"match_us":(\d+),"serialize_us":(\d+)\}""").r
       import scala.jdk.CollectionConverters._
+      // each line is written once its response has left, so the last
+      // ones can reach the sink after the client has its response
+      def phased() = lines.asScala.count(Phased.matches(_))
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (phased() < gets.length + 1 && System.nanoTime() < deadline)
+        Thread.sleep(10)
       val seen = lines.asScala.toSeq.collect {
         case Phased(path, us, mu, su) =>
           assert(mu.toLong + su.toLong <= us.toLong, path)
@@ -1506,6 +1512,12 @@ class GatewaySpec extends SparkSpec {
       val Phased = (""".*"path":"([^"]*)","status":204,"us":(\d+),""" +
         """"decode_us":(\d+),"parse_us":(\d+),"commit_us":(\d+)\}""").r
       import scala.jdk.CollectionConverters._
+      // each line is written once its response has left, so the last
+      // one can reach the sink after the client has its response
+      def phased() = lines.asScala.count(Phased.matches(_))
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      while (phased() < 2 && System.nanoTime() < deadline)
+        Thread.sleep(10)
       val seen = lines.asScala.toSeq.collect {
         case Phased(path, us, d, p, c) =>
           assert(d.toLong + p.toLong + c.toLong <= us.toLong, path)

@@ -508,6 +508,122 @@ class PromQLComposeSpec extends SparkSpec {
     } yield (s"a $u", t, v)).toSet)
   }
 
+  // ------------------------- randomized differential: instant vs per-step
+
+  /** Asserts that `evalRange` at the one-step grid [t, t] equals
+    * `evalWith` at t for each of `shapes`: an instant query is the
+    * per-step evaluation at one step — same window, same kernels. Runs
+    * over seeded series with timestamp ties, counter resets and a
+    * one-sample series. Integer-valued samples keep every sum exact;
+    * only the central-moment folds (stddev/stdvar, deriv's regression)
+    * may differ in the last bits with the partial-aggregation order.
+    */
+  private def instantEqualsOneStep(shapes: Seq[String]): Unit = {
+    import spark.implicits._
+    val t = 3600L * 1000000L
+    for (seed <- Seq(7, 11, 23)) {
+      val rnd = new scala.util.Random(seed)
+      // per (metric, user) series: zone follows the user's parity. m's
+      // users 1-3 carry the fixed edge cases — one sample in the window,
+      // a timestamp tie, a counter reset — and every other series draws
+      // 2-8 samples on a 30 s grid around the window, ties allowed
+      val series = for {
+        metric <- Seq("m", "n"); user <- 1 to 5
+        if metric == "m" || rnd.nextInt(4) > 0
+      } yield {
+        val id = s"$metric $user"
+        val pts: Seq[(Long, Double)] = (metric, user) match {
+          case ("m", 1) => Seq((t - 60000000L, 5.0))
+          case ("m", 2) =>
+            Seq((t - 300000000L, 3.0), (t - 120000000L, 4.0),
+              (t - 120000000L, 9.0), (t, 10.0))
+          case ("m", 3) =>
+            Seq((t - 600000000L, 30.0), (t - 400000000L, 41.0),
+              (t - 200000000L, 2.0), (t - 30000000L, 7.0))
+          case _ =>
+            var v = 1 + rnd.nextInt(10)
+            Seq.fill(2 + rnd.nextInt(7)) {
+              v = if (rnd.nextInt(5) == 0) 1 + rnd.nextInt(3)
+                else v + rnd.nextInt(6)
+              (t - 30000000L * rnd.nextInt(30) + 90000000L, v.toDouble)
+            }
+        }
+        (id, metric, Map("user" -> user.toString,
+          "zone" -> (if (user % 2 == 0) "even" else "odd")), pts)
+      }
+      val cat = series.map { case (id, metric, labels, _) =>
+        (id, metric, labels) }.toDF("sensor_id", "metric", "labels")
+      val samples = series.flatMap { case (id, _, _, pts) =>
+        pts.map { case (ts, v) => (id, ts, v) } }
+        .toDF("sensor_id", "timestamp_us", "value")
+      val selectFor = (ms: Seq[LabelMatcher]) => {
+        val name = ms.collectFirst {
+          case LabelMatcher.Eq(LabelMatcher.NameLabel, n) => n
+        }.getOrElse(fail(s"no metric name in $ms"))
+        cat.filter(col("metric") === name).select("sensor_id", "labels")
+      }
+      def rows(df: DataFrame): Seq[(Map[String, String], Double)] = {
+        val labels =
+          if (df.columns.contains("labels")) col("labels")
+          else col("group_labels")
+        df.select(labels, col("value").cast("double"))
+          .as[(Map[String, String], Double)].collect().toSeq
+          .sortBy(r => (r._1.toSeq.sorted.mkString(","), r._2))
+      }
+      for (shape <- shapes) {
+        val q = ExtendedPromQL.parse(shape, t)
+        val instant = rows(ExtendedPromQL.evalWith(q, selectFor, samples))
+        val stepped = rows(ExtendedPromQL.evalRange(
+          q, t, t, 1000000L, selectFor, samples))
+        val clue = s"seed $seed, '$shape': instant $instant, step $stepped"
+        assert(instant.nonEmpty, clue)
+        assert(instant.map(_._1) == stepped.map(_._1), clue)
+        instant.zip(stepped).foreach { case ((_, a), (_, b)) =>
+          if (shape.startsWith("std") || shape.startsWith("deriv"))
+            assert(math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(a)), clue)
+          else assert(a == b, clue)
+        }
+      }
+    }
+  }
+
+  test("randomized differential: evalRange at one step equals evalWith " +
+      "at that instant for every shape both paths evaluate") {
+    instantEqualsOneStep(Seq("sum", "avg", "count", "min", "max", "last",
+      "stddev", "stdvar", "present").map(op => s"${op}_over_time(m[10m])") ++
+      Seq("quantile_over_time(0.3, m[10m])", "delta(m[10m])",
+        "resets(m[10m])", "changes(m[10m])", "increase(m[10m])",
+        "rate(m[10m])", "rate(m[10m]) * 60", "2 - max_over_time(m[10m])",
+        "abs(delta(m[10m]))", "sqrt(increase(m[10m]))",
+        "max_over_time(m[10m]) > 20", "changes(m[10m]) >= bool 2",
+        "sum by (zone) (m)", "sum by (zone) (increase(m[10m]))",
+        "count without (user) (m)", "quantile(0.5, m)",
+        "quantile by (zone) (0.75, max_over_time(m[10m]))",
+        "m / n", "m and n",
+        "sum_over_time(m[10m]) / count_over_time(n[10m])"))
+  }
+
+  test("idelta, irate and deriv evaluate per step like the other range " +
+      "functions") {
+    // one window-function implementation serves both paths, so the
+    // last-pair and regression functions are subquery and query_range
+    // operands too
+    instantEqualsOneStep(Seq("idelta(m[10m])", "irate(m[10m])",
+      "deriv(m[10m])", "max_over_time(irate(m[10m])[20m:5m])"))
+    // a last pair sharing one timestamp has no interval: no result (the
+    // Prometheus zero-interval rule), where irate divided by zero
+    import spark.implicits._
+    val sel = Seq(("x 1", Map("user" -> "1")), ("x 2", Map("user" -> "2")))
+      .toDF("sensor_id", "labels")
+    val samples = Seq(("x 1", 1000000L, 1.0), ("x 1", 2000000L, 3.0),
+      ("x 1", 2000000L, 4.0), ("x 2", 1000000L, 1.0), ("x 2", 2000000L, 3.0))
+      .toDF("sensor_id", "timestamp_us", "value")
+    for (fn <- Seq("idelta", "irate"))
+      assert(ExtendedPromQL.evalWith(ExtendedPromQL.parse(s"$fn(x[1m])",
+          2000000L), _ => sel, samples)
+        .select("sensor_id").as[String].collect().toSeq == Seq("x 2"), fn)
+  }
+
   // --------------------------------------- randomized differential: sets
 
   /** Reference evaluator for set-operator chains over user→value maps,

@@ -1,15 +1,15 @@
 package graft
 
-/** Physical-plan pins for the round-14 PromQL composability work
-  * (r13 verdict item #2): binary-vector operands and nested subqueries
-  * must keep the perStepVector scaling shape — ONE scan pass per leaf
-  * operand whose samples land on their steps through one generator over
-  * the step grid (no join with a step frame) — never a per-step job
-  * loop, never a Cartesian product, and for
-  * nested subqueries ONE shared inner pass (epoch-aligned inner steps
-  * repeat across outer steps) rather than an inner pass per outer step.
+/** Physical-plan pins for the PromQL evaluator (`ExtendedPromQL`): every
+  * step-grid shape keeps the one-scan scaling shape — ONE scan pass per
+  * leaf operand whose samples land on their steps through one generator
+  * over the step grid (no join with a step frame) — never a per-step job
+  * loop, never a Cartesian product; nested subqueries run ONE shared
+  * inner pass (epoch-aligned inner steps repeat across outer steps)
+  * rather than an inner pass per outer step; and set chains and
+  * aggregation ratios join on labels.
   */
-class Round14PlanSpec extends SparkSpec {
+class PromQLPlanSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -18,6 +18,25 @@ class Round14PlanSpec extends SparkSpec {
 
   private def occurrences(plan: String, needle: String): Int =
     plan.sliding(needle.length).count(_ == needle)
+
+  test("PromQL subquery step grid (q375 shape): each sample lands on its " +
+    "steps through one generator over the ~32-step grid — never a " +
+    "CartesianProduct, never a shuffle of the scan keyed on steps") {
+    val df = SparkEntry.queries("q375_promql_subquery_agg")(spark, sf)
+    val plan = planOf(df)
+    // a generator over the step grid, no join with a step frame
+    assert("Generate explode".r.findAllMatchIn(plan).size == 1, plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(!plan.contains("CartesianProduct"), plan)
+  }
+
+  test("PromQL set chain and aggregation ratio (q374/q372 shapes): " +
+    "label-keyed joins, no cartesian anywhere") {
+    for (name <- Seq("q374_promql_unless_chain", "q372_promql_agg_ratio")) {
+      val plan = planOf(SparkEntry.queries(name)(spark, sf))
+      assert(!plan.contains("CartesianProduct"), s"$name:\n$plan")
+    }
+  }
 
   test("burn-rate shape (q377): one step-grid generator PER OPERAND, " +
     "operands meet in an equi join — no Cartesian, no step loop") {

@@ -37,25 +37,6 @@ class Round13PlanSpec extends SparkSpec {
     assert(!plan.contains("Generate"), plan) // no posexplode stage
   }
 
-  test("PromQL subquery step grid (q375 shape): each sample lands on its " +
-    "steps through one generator over the ~32-step grid — never a " +
-    "CartesianProduct, never a shuffle of the scan keyed on steps") {
-    val df = SparkEntry.queries("q375_promql_subquery_agg")(spark, sf)
-    val plan = planOf(df)
-    // a generator over the step grid, no join with a step frame
-    assert("Generate explode".r.findAllMatchIn(plan).size == 1, plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
-  }
-
-  test("PromQL set chain and aggregation ratio (q374/q372 shapes): " +
-    "label-keyed joins, no cartesian anywhere") {
-    for (name <- Seq("q374_promql_unless_chain", "q372_promql_agg_ratio")) {
-      val plan = planOf(SparkEntry.queries(name)(spark, sf))
-      assert(!plan.contains("CartesianProduct"), s"$name:\n$plan")
-    }
-  }
-
   test("vocabulary count rollup (q119/q202 head) rides the token " +
     "bucketing: bucketed scan, ZERO Exchange") {
     val docs = Tables.documents(spark, sf)
