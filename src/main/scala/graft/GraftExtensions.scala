@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.{BpeSplitExpression, CharStatsExpression,
   DotProductExpression, GearChunksExpression, NormalizeExpression,
@@ -13,12 +15,19 @@ import graft.functions.{BpeSplitExpression, CharStatsExpression,
   * codegen'd Catalyst expressions of [[GraftExtensions.functions]], usable
   * from SQL and `call_function`, plus the [[graft.plans.MonthPruneRule]]
   * optimizer rule (timestamp bounds over store tables imply month
-  * partition pruning).
+  * partition pruning) and the [[graft.plans.ParameterizeLiterals]]
+  * physical rule (per-request values stay out of generated code), which
+  * runs before the transitions, so before whole-stage codegen, in the
+  * static plan and in every adaptive stage.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new graft.plans.MonthPruneRule)
     ext.injectPlannerStrategy(_ => new graft.plans.GraftStrategies)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.ParameterizeLiterals
+    })
     GraftExtensions.functions.foreach(f => ext.injectFunction((
       new FunctionIdentifier(f.name),
       new ExpressionInfo(f.cls.getName, f.name),

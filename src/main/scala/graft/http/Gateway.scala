@@ -110,7 +110,12 @@ final class Gateway(
       (name -> (System.nanoTime() - t0) / 1000L) :: phaseMicros.get())
   }
 
-  /** Prometheus exposition text for the gateway + Spark scheduler. */
+  /** Prometheus exposition text for the gateway, the Spark scheduler and
+    * Spark's code generator: the JVM's Janino compiles so far and their
+    * time in ms (Spark's histogram keeps a decaying sample, so the
+    * quantiles lean to recent compiles). A read of an already compiled
+    * shape moves neither.
+    */
   private def metricsExposition(): String = {
     val sb = new StringBuilder
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -131,6 +136,14 @@ final class Gateway(
     sb ++= s"graft_spark_active_stages ${tracker.getActiveStageIds().length}\n"
     sb ++= "# TYPE graft_ingest_slots_available gauge\n"
     sb ++= s"graft_ingest_slots_available ${ingestSlots.availablePermits()}\n"
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    sb ++= "# TYPE graft_codegen_compiles_total counter\n"
+    sb ++= s"graft_codegen_compiles_total ${compiles.getCount}\n"
+    val ms = compiles.getSnapshot
+    sb ++= "# TYPE graft_codegen_compile_ms summary\n"
+    sb ++= s"""graft_codegen_compile_ms{quantile="0.5"} ${ms.getMedian}\n"""
+    sb ++= s"""graft_codegen_compile_ms{quantile="0.99"} ${ms.get99thPercentile}\n"""
     sb.result()
   }
 
@@ -871,7 +884,9 @@ final class Gateway(
     * 10 MB body of 153k lines answers in 2.5-3.0 s (8-9 s with a
     * distributed parse), a gzip body decoding to 50 MB (768k lines) in
     * 12-15 s (30 s, at the timeout); one decoding to 250 MB (4M lines)
-    * times out either way.
+    * times out either way, so the default decoded cap
+    * ([[graft.Config.DecodedBodyLimitDefault]], 16 MiB) answers it 413
+    * before its parse.
     */
   private def handleInfluxWrite(x: HttpExchange, p: Map[String, String]): Unit = withIngestSlot(x) {
     val text = phase("decode_us")(BodyCodec.decodeBody(body(x),

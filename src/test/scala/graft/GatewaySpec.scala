@@ -1124,21 +1124,43 @@ class GatewaySpec extends SparkSpec {
     try f finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
-  /** The read routes of a gateway over a fresh store far under
-    * [[OpenCost]]: three float series written in three bodies (three
-    * sample files, so a partitioned read has files to split) and one
-    * integer series, all in the last hour. Each route by name, as a
-    * request to send.
+  /** A gateway over a fresh store far under [[OpenCost]]: three float
+    * series `eq_cpu` (jobs a, b, c) written in three bodies (three sample
+    * files, so a partitioned read has files to split) and one integer
+    * series, all in the last hour, one sample a minute from `t0Ms`.
     */
-  private def withSmallReads[A](
-      f: Seq[(String, () => HttpResponse[Array[Byte]])] => A): A = {
-    import PrometheusRemote._
-    def enc(s: String) = java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
+  private final class SmallStore(
+      val send: (String, Option[Array[Byte]], Map[String, String]) =>
+        HttpResponse[Array[Byte]],
+      val nowS: Long, val t0Ms: Long, val cpu: String, val int: String) {
+    def get(path: String): HttpResponse[Array[Byte]] = send(path, None, Map.empty)
+
+    /** A remote read of `eq_.*` over `[startMs, endMs]`. */
+    def remoteRead(startMs: Long, endMs: Long,
+        accepted: Option[Int]): HttpResponse[Array[Byte]] = {
+      import PrometheusRemote._
+      val mq = new ProtoWriter
+      mq.int64(1, startMs); mq.int64(2, endMs)
+      val mw = new ProtoWriter
+      mw.int64(1, 2); mw.string(2, "__name__"); mw.string(3, "eq_.*")
+      mq.message(3, mw)
+      val rr = new ProtoWriter
+      rr.message(1, mq)
+      accepted.foreach(a => rr.int64(2, a))
+      send("/api/v1/prometheus_remote_read",
+        Some(snappyCompressLiteral(rr.result())), Map(
+          "content-encoding" -> "snappy",
+          "content-type" -> "application/x-protobuf",
+          "x-prometheus-remote-read-version" -> "0.1.0"))
+    }
+  }
+
+  private def withSmallStore[A](f: SmallStore => A): A = {
     val small = new SensorStore(spark, graft.TempDirs.createPath("graft_gateway_small"))
     val gw = new Gateway(spark, small, "small-reads")
     val smallPort = gw.start(0)
     def send(path: String, body: Option[Array[Byte]],
-        headers: Map[String, String] = Map.empty): HttpResponse[Array[Byte]] = {
+        headers: Map[String, String]): HttpResponse[Array[Byte]] = {
       var b = HttpRequest.newBuilder(new URI(s"http://127.0.0.1:$smallPort$path"))
       b = body.fold(b.GET())(x => b.POST(HttpRequest.BodyPublishers.ofByteArray(x)))
       headers.foreach { case (k, v) => b = b.header(k, v) }
@@ -1150,46 +1172,45 @@ class GatewaySpec extends SparkSpec {
       Seq("a" -> 1.0, "b" -> 2.0, "c" -> 3.0).foreach { case (job, k) =>
         assert(send("/api/v1/prometheus_remote_write", Some(RemoteWriteBodies(Seq(
           Seq("__name__" -> "eq_cpu", "job" -> job) ->
-            (0 until 45).map(i => (k * 100 + i * 0.5, t0 + i * 60000L))))))
-          .statusCode() == 204)
+            (0 until 45).map(i => (k * 100 + i * 0.5, t0 + i * 60000L))))),
+          Map.empty).statusCode() == 204)
       }
       val ints = (0 until 45).map(i => s"eq_int,job=a used=${i * 3}i ${(t0 + i * 60000L) * 1000000L}")
       assert(send("/api/v2/write?bucket=eq&org=eq",
-        Some(ints.mkString("\n").getBytes(StandardCharsets.UTF_8))).statusCode() == 204)
+        Some(ints.mkString("\n").getBytes(StandardCharsets.UTF_8)), Map.empty)
+        .statusCode() == 204)
       val uuidOf = small.catalogSnapshot.rows
         .map(r => (r.getString(1), r.getString(2)) -> r.getString(0)).toMap
-      val (cpu, int) = (uuidOf(("eq_cpu", "Float")), uuidOf(("eq_int used", "Integer")))
+      f(new SmallStore(send, nowS, t0, uuidOf(("eq_cpu", "Float")),
+        uuidOf(("eq_int used", "Integer"))))
+    } finally gw.stop()
+  }
+
+  /** The read routes of [[withSmallStore]]'s gateway, each by name, as a
+    * request to send.
+    */
+  private def withSmallReads[A](
+      f: Seq[(String, () => HttpResponse[Array[Byte]])] => A): A =
+    withSmallStore { s =>
+      import s.{cpu, int, nowS, t0Ms}
+      def enc(s: String) = java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
       val sel = enc("""{__name__=~"eq_.*"}[1h]""")
       val range = s"&start=${nowS - 40 * 60}&end=${nowS - 5 * 60}&step=300"
       val avg = enc("""avg_over_time({__name__=~"eq_.*"}[5m])""")
-      def read(accepted: Option[Int]) = {
-        val mq = new ProtoWriter
-        mq.int64(1, t0 - 1000); mq.int64(2, nowS * 1000L)
-        val mw = new ProtoWriter
-        mw.int64(1, 2); mw.string(2, "__name__"); mw.string(3, "eq_.*")
-        mq.message(3, mw)
-        val rr = new ProtoWriter
-        rr.message(1, mq)
-        accepted.foreach(a => rr.int64(2, a))
-        () => send("/api/v1/prometheus_remote_read",
-          Some(snappyCompressLiteral(rr.result())), Map(
-            "content-encoding" -> "snappy",
-            "content-type" -> "application/x-protobuf",
-            "x-prometheus-remote-read-version" -> "0.1.0"))
-      }
+      def read(accepted: Option[Int]) =
+        () => s.remoteRead(t0Ms - 1000, nowS * 1000L, accepted)
       f(Seq("csv", "jsonl", "arrow", "senml").flatMap(fmt => Seq(
-          s"series $fmt" -> (() => send(s"/series/$cpu?format=$fmt", None)),
-          s"query $fmt" -> (() => send(s"/api/v1/query?format=$fmt&query=$sel", None)))) ++
+          s"series $fmt" -> (() => s.get(s"/series/$cpu?format=$fmt")),
+          s"query $fmt" -> (() => s.get(s"/api/v1/query?format=$fmt&query=$sel")))) ++
         Seq(
-          "series int arrow" -> (() => send(s"/series/$int?format=arrow", None)),
+          "series int arrow" -> (() => s.get(s"/series/$int?format=arrow")),
           "query_range prometheus" -> (() =>
-            send(s"/api/v1/query_range?format=prometheus&query=$avg$range", None)),
+            s.get(s"/api/v1/query_range?format=prometheus&query=$avg$range")),
           "query_range jsonl" -> (() =>
-            send(s"/api/v1/query_range?format=jsonl&query=$avg$range", None)),
+            s.get(s"/api/v1/query_range?format=jsonl&query=$avg$range")),
           "remote read samples" -> read(None),
           "remote read chunks" -> read(Some(1))))
-    } finally gw.stop()
-  }
+    }
 
   test("read routes answer byte-identical bodies on the one-task and the " +
       "partitioned read plan") {
@@ -1281,6 +1302,98 @@ class GatewaySpec extends SparkSpec {
         assert(n > 1, s"partitioned CSV export started $n Spark jobs")
       }
     }
+  }
+
+  /** The admin exposition's samples by name and labels; every line is a
+    * `# TYPE` comment or a `name{labels} value` sample.
+    */
+  private def exposition(send: String => String): Map[String, Double] = {
+    val Sample = """([a-zA-Z_:][a-zA-Z0-9_:]*(?:\{[^}]*\})?) (\S+)""".r
+    send("/api/v1/admin/metrics").linesIterator.filterNot(_.startsWith("# TYPE "))
+      .map {
+        case Sample(key, v) => key -> v.toDouble
+        case line => fail(s"not an exposition line: $line")
+      }.toMap
+  }
+
+  test("a second read of each shape with new bounds compiles no class: " +
+      "series csv and arrow, instant and range PromQL, remote read") {
+    withSmallStore { s =>
+      import s.{cpu, nowS, t0Ms}
+      def enc(q: String) = java.net.URLEncoder.encode(q, StandardCharsets.UTF_8)
+      def iso(ms: Long) = enc(java.time.Instant.ofEpochMilli(ms).toString)
+      def series(fmt: String)(k: Int) = s.get(s"/series/$cpu?format=$fmt" +
+        s"&start=${iso(t0Ms + k * 60000L)}&end=${iso(t0Ms + (k + 20) * 60000L)}")
+      // the instant query reads the wall clock, so each request is new
+      def instant(k: Int) = s.get("/api/v1/query?format=csv&query=" +
+        enc(s"""{__name__="eq_cpu"}[${10 + k}m]"""))
+      // a different matched-series count, 2 jobs then 3, over a shifted
+      // grid; the range stays a whole number of steps, since a last step
+      // short of `end` adds a filter bound, a shape of its own
+      def range(k: Int) = s.get("/api/v1/query_range?format=prometheus&query=" +
+        enc(s"""avg_over_time({__name__="eq_cpu",job=~"${
+          if (k == 0) "a|b" else "a|b|c"}"}[5m])""") +
+        s"&start=${nowS - (40 - k) * 60}&end=${nowS - (5 - k) * 60}&step=300")
+      def read(k: Int) = s.remoteRead(t0Ms + k * 60000L,
+        t0Ms + (30 + k) * 60000L, Some(1))
+      val shapes = Seq[(String, Int => HttpResponse[Array[Byte]])](
+        "series csv" -> series("csv"), "series arrow" -> series("arrow"),
+        "query csv" -> instant, "query_range prometheus" -> range,
+        "remote read chunks" -> read)
+      def metrics() = exposition(p => new String(s.get(p).body(), "UTF-8"))
+      val first = metrics()
+      Seq("graft_codegen_compiles_total", "graft_codegen_compile_ms{quantile=\"0.5\"}",
+        "graft_codegen_compile_ms{quantile=\"0.99\"}")
+        .foreach(k => assert(first.contains(k), s"$k missing: $first"))
+      shapes.foreach { case (name, req) =>
+        val a = req(0)
+        assert(a.statusCode() == 200, s"$name: ${new String(a.body())}")
+        val before = metrics()("graft_codegen_compiles_total")
+        val b = req(1)
+        assert(b.statusCode() == 200, s"$name: ${new String(b.body())}")
+        assert(!java.util.Arrays.equals(a.body(), b.body()),
+          s"$name answered the same body to new bounds")
+        val after = metrics()("graft_codegen_compiles_total")
+        assert(after == before, s"$name compiled ${after - before} classes")
+      }
+    }
+  }
+
+  test("a gzip Influx body decoding past the default decoded cap answers " +
+      "413 before its parse and starts no Spark job; one decoding to just " +
+      "under it commits within the server timeout") {
+    val cap = Config.DecodedBodyLimitDefault
+    assert(Config.decodedBodyLimit == cap)
+    def line(k: Int) = s"cap_cpu,host=h${k % 1000} usage=${k % 97}.5 " +
+      s"${1704067200000000000L + k * 1000000000L}\n"
+    val text = new java.lang.StringBuilder
+    var k = 0
+    while (text.length + line(k).length < cap - 1024) { text.append(line(k)); k += 1 }
+    val under = BodyCodec.gzip(text.toString)
+    while (text.length <= cap) { text.append(line(k)); k += 1 }
+    val over = BodyCodec.gzip(text.toString)
+    val gzip = Map("content-encoding" -> "gzip")
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val prev = gateway.logSink
+    gateway.logSink = lines.add(_)
+    try withTagJobs { jobs =>
+      val r = post("/api/v2/write?bucket=cap&org=cap", over, gzip)
+      assert(r.statusCode() == 413, new String(r.body(), "UTF-8"))
+      assert(new String(r.body(), "UTF-8").contains("exceeds limit"))
+      assert(jobs.started(requestId(r)) == 0)
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 10000L * 1000 * 1000
+      def refused = lines.asScala.find(_.contains("\"status\":413"))
+      while (refused.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(refused.exists(l => l.contains("\"decode_us\"") &&
+        !l.contains("\"parse_us\"")), lines)
+      val t0 = System.nanoTime()
+      val ok = post("/api/v2/write?bucket=cap&org=cap", under, gzip)
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(ok.statusCode() == 204, new String(ok.body(), "UTF-8"))
+      assert(seconds < Config.httpServerTimeoutSeconds, seconds)
+      assert(store.catalogSnapshot.rows.count(_.getString(1) == "cap_cpu usage") == 1000)
+    } finally gateway.logSink = prev
   }
 
   test("keep-alive responses leave without a Nagle stall") {
@@ -1573,7 +1686,8 @@ class GatewaySpec extends SparkSpec {
 
   test("a timed-out Influx write stops parsing its body") {
     // ~770k lines: parsing them on the driver takes seconds, far past the
-    // 1 s timeout, and no Spark job runs for the 408 to cancel
+    // 1 s timeout, and no Spark job runs for the 408 to cancel; they decode
+    // to ~52 MB, so the decoded cap is raised past its default for them
     val sb = new java.lang.StringBuilder
     for (i <- 0 until 770000)
       sb.append("abandon_cpu,host=h").append(i % 100).append(" usage=")
@@ -1582,8 +1696,10 @@ class GatewaySpec extends SparkSpec {
     val gz = BodyCodec.gzip(sb.toString)
     val before = store.samples(SensorType.Float).count()
     val r = withProp("SENSAPP_HTTP_SERVER_TIMEOUT_SECONDS", "1") {
-      post("/api/v2/write?bucket=db&org=do", gz,
-        Map("content-encoding" -> "gzip"))
+      withProp("GRAFT_HTTP_DECODED_BODY_LIMIT", "64mb") {
+        post("/api/v2/write?bucket=db&org=do", gz,
+          Map("content-encoding" -> "gzip"))
+      }
     }
     assert(r.statusCode() == 408)
     val t408 = System.nanoTime()
