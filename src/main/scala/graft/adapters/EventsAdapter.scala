@@ -4,10 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.model.{Sensor, SensorType}
+import graft.operators.{LabelMatcher, Matchers}
 
 /** Maps the driver's `events` table into the engine's sensor model:
   * one Float sensor per (event_type, user_id), labels = {"user": <id>},
   * samples = (sensor_id, timestamp_us, value).
+  *
+  * The series key is `event_type + " " + user_id`: [[samples]] keys its
+  * rows by it and [[promSeries]] keys the PromQL selection by it, so the
+  * two join. Queries over the events take both from here rather than
+  * rebuilding the key.
   *
   * The catalog is tiny relative to the samples (reference situation too:
   * sensors ≪ samples), so sample↔catalog joins broadcast the catalog.
@@ -43,4 +49,15 @@ object EventsAdapter {
         col("user_id").cast("string").as("user"),
         unix_micros(col("ts")).as("timestamp_us"),
         col("value"))
+
+  /** The PromQL series selection over the events: matchers → the
+    * (sensor_id, labels) of the matched series, `sensor_id` keyed the way
+    * [[samples]] keys its rows. This is the `selectFor` argument of the
+    * `ExtendedPromQL` entry points.
+    */
+  def promSeries(spark: SparkSession, dir: String)
+      : Seq[LabelMatcher] => DataFrame = ms =>
+    Matchers.sensorsByLabels(sensors(spark, dir), ms)
+      .select(concat(col("name"), lit(" "),
+        col("labels").getItem("user")).as("sensor_id"), col("labels"))
 }

@@ -1436,14 +1436,22 @@ object ExtendedPromQL {
     case other => throw PromQLError(s"Unsupported aggregation: $other")
   }
 
-  /** [[eval]] generalized over catalog selection: binary vector queries
-    * carry TWO independent matcher sets, so the caller provides the
+  /** The instant evaluation. Binary vector and set operators carry TWO
+    * independent matcher sets, so the caller provides the
     * matcher→selected-series mapping instead of one pre-selected frame.
     * Every node evaluates here once: operator nodes recurse structurally
     * through [[operandVec]], so a multi-matcher subtree anywhere
     * underneath (sum(a / b), abs(a - b) > 0.1) still selects each
     * operand's series independently, and each leaf reads the samples of
     * its own selection ([[evalLeaf]]).
+    *
+    * @param selectFor matchers → (sensor_id, labels: map), the selected
+    *                  series (`Matchers.sensorsByLabels` projected; over
+    *                  the events, `EventsAdapter.promSeries`)
+    * @param samples   (sensor_id, timestamp_us, value)
+    * @return OverTimeQ / RangeFnQ → (sensor_id, labels, value);
+    *         InstantAggQ → (group_labels, value);
+    *         SelectorQ → (sensor_id, labels, timestamp_us, value)
     */
   def evalWith(
       q: Query,
@@ -2202,10 +2210,15 @@ object ExtendedPromQL {
     val resolved = resolveAtAnchors(query, startUs, endUs)
     if (!containsAt(resolved)) {
       val q = parse(resolved, endUs)
+      rangeChecks(q, startUs, endUs, stepUs)
       val shiftUs = endUs - q.endUs
       val spanUs = q.endUs - q.startUs
+      // the scan ends at the last step, not at `end`: the same bound as
+      // perStepVector's, so the two merge and an unaligned range plans
+      // like an aligned one
+      val lastStepUs = endUs - (endUs - startUs) % stepUs
       return evalRange(q, startUs, endUs, stepUs, selectFor,
-        samplesFor(startUs - shiftUs - spanUs, endUs - shiftUs))
+        samplesFor(startUs - shiftUs - spanUs, lastStepUs - shiftUs))
     }
     trailingAt(resolved.trim) match {
       case Some((inner, ts)) if !containsAt(inner) =>
@@ -2228,35 +2241,6 @@ object ExtendedPromQL {
           "@ modifiers on sub-expressions are not supported in " +
             "query_range; pin the whole expression with a trailing @ " +
             "(e.g. `sum(metric) @ end()`)")
-    }
-  }
-
-  /** Evaluate against a selected-series frame and its samples: the
-    * evaluation [[evalWith]] runs with every leaf reading `selected`.
-    * Binary vector/set operators anywhere in the tree carry two
-    * independent matcher sets, so they reject here.
-    *
-    * @param selected (sensor_id, labels: map) — the matcher-selected
-    *                 series (callers produce it via
-    *                 `Matchers.sensorsByLabels`)
-    * @param samples  (sensor_id, timestamp_us, value)
-    * @return OverTimeQ / RangeFnQ → (sensor_id, labels, value);
-    *         InstantAggQ → (group_labels, value);
-    *         SelectorQ → (sensor_id, labels, timestamp_us, value)
-    */
-  def eval(q: Query, selected: DataFrame, samples: DataFrame): DataFrame = {
-    if (hasVectorJoin(q))
-      throw PromQLError(
-        "binary vector queries carry two matcher sets — evaluate via evalWith")
-    evalWith(q, _ => selected, samples)
-  }
-
-  /** Whether the subtree holds a binary vector/set operator. */
-  private def hasVectorJoin(q: Query): Boolean = q match {
-    case _: BinVectorQ | _: BinSetQ => true
-    case node: Product => node.productIterator.exists {
-      case c: Query => hasVectorJoin(c)
-      case _ => false
     }
   }
 
@@ -2389,7 +2373,7 @@ object ExtendedPromQL {
             .as("group_labels"), col("__n").as("value"))
       case AbsentQ(_, _, _) =>
         // lazy: a global count that keeps its row only when zero — no
-        // Spark job runs at plan-construction time (eval stays a pure
+        // Spark job runs at plan-construction time (evaluation stays a pure
         // plan builder on every branch)
         inWindow.agg(count(lit(1)).as("__n"))
           .filter(col("__n") === 0)

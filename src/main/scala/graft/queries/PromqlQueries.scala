@@ -9,16 +9,32 @@ import graft.exporters.Exporters
 import graft.operators.{AsOfJoin, LabelMatcher, Matchers, SensorOps}
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.prometheus.{PrometheusRemote, XorChunk}
-import graft.promql.SimplePromQL
+import graft.promql.{ExtendedPromQL, SimplePromQL}
 import graft.sources.{CsvImporter, InfluxLineProtocol, SenML}
 import QueryHelpers._
 
 /** PromQL engine queries: instant/range selectors, rate/delta, aggregations, binary ops, subqueries (SURVEY §2.11 PromQL family).
   *
+  * The queries read the `events` table as one Float series per
+  * (event_type, user). [[EventsAdapter.promSeries]] is the one
+  * events→series convention: each query goes through `promql` (or hands
+  * `promSeries` to an `ExtendedPromQL` entry itself) and adds only its
+  * output projection. q60 and q64 label views by `name` before the key is
+  * built, q62 synthesizes its bucket series and q19 runs `SimplePromQL`,
+  * so those four keep their own selection.
+  *
   * One of the family registries composed into [[graft.Queries]];
   * oracle/alias conventions are documented there.
   */
 private[graft] object PromqlQueries {
+
+  /** `q` evaluated over the events as PromQL series: the selection and
+    * the samples both come from [[EventsAdapter]], keyed alike.
+    */
+  private def promql(s: SparkSession, d: String,
+      q: ExtendedPromQL.Query): DataFrame =
+    ExtendedPromQL.evalWith(q, EventsAdapter.promSeries(s, d),
+      EventsAdapter.samples(s, d).select("sensor_id", "timestamp_us", "value"))
 
   val registry: Seq[Q] = Seq(
 
@@ -60,15 +76,8 @@ private[graft] object PromqlQueries {
         |  AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000
         |GROUP BY user_tag ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "count_over_time(view[31d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "count_over_time(view[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value").cast("long").as("n"))
         .orderBy("user_tag")
@@ -88,15 +97,8 @@ private[graft] object PromqlQueries {
         |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000
         |) WHERE rn = 1 ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "sum by (user) (view)", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "sum by (user) (view)", 1706659200000000L))
         .select(element_at(col("group_labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -125,17 +127,10 @@ private[graft] object PromqlQueries {
         |  ELSE value END) IS NOT NULL
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "rate(view[31d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
       // the evaluator sums f64 (Prometheus semantics); ROUND(9) on both
       // sides absorbs summation-order ULP drift for the exact compare
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "rate(view[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 9).as("value"))
         .orderBy("user_tag")
@@ -160,15 +155,8 @@ private[graft] object PromqlQueries {
         |    - MAX(CASE WHEN rf = 1 THEN value END) AS value
         |FROM w WHERE n >= 2 GROUP BY user_id ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "delta(view[31d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "delta(view[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -187,15 +175,8 @@ private[graft] object PromqlQueries {
         |  AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000
         |GROUP BY user_id ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "quantile_over_time(0.9, view[31d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "quantile_over_time(0.9, view[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -220,15 +201,8 @@ private[graft] object PromqlQueries {
         |  WHERE rn = 1)
         |WHERE rank <= 5 ORDER BY rank"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "topk(5, view)", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "topk(5, view)", 1706659200000000L))
         .select("rank", "sensor_id", "value")
         .orderBy("rank")
     },
@@ -262,14 +236,8 @@ private[graft] object PromqlQueries {
         |  AND v.event_type = 'view' AND c.event_type = 'click'
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "rate(view[31d]) / rate(click[31d])", 1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "rate(view[31d]) / rate(click[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -303,9 +271,9 @@ private[graft] object PromqlQueries {
         |  AND v.event_type = 'view' AND c.event_type = 'click'
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      val parsed = ExtendedPromQL.parse(
         "rate(view[31d]) / on(user) rate(click[31d])", 1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
+      ExtendedPromQL.evalWith(parsed,
         ms => {
           val base = Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
             .select(concat(col("name"), lit(" "),
@@ -343,13 +311,9 @@ private[graft] object PromqlQueries {
         |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
         |WHERE rn = 1 GROUP BY 1 ORDER BY val_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        """count_values("val", view)""", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(
+        """count_values("val", view)""", 1706659200000000L),
+        EventsAdapter.promSeries(s, d),
         EventsAdapter.samples(s, d)
           .select(col("sensor_id"), col("timestamp_us"),
             col("value").cast("decimal(18,2)").as("value")))
@@ -416,9 +380,9 @@ private[graft] object PromqlQueries {
         concat(lit("view_bucket "), col("user"), lit(" "), col("le"))
           .as("sensor_id"),
         map(lit("user"), col("user"), lit("le"), col("le")).as("labels"))
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      val parsed = ExtendedPromQL.parse(
         "histogram_quantile(0.9, view_bucket)", endUs)
-      graft.promql.ExtendedPromQL.eval(parsed, selected, samples)
+      ExtendedPromQL.evalWith(parsed, _ => selected, samples)
         .select(element_at(col("group_labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -448,16 +412,9 @@ private[graft] object PromqlQueries {
       // decade = user id minus its last digit ("42" -> "4"); ids with one
       // digit expand to "" which DROPS the label (Prometheus rule), so
       // those series fall out of the by-decade aggregation below
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         """label_replace(view, "decade", "$1", "user", "([0-9]+)[0-9]")""",
-        1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706659200000000L))
         .filter(element_at(col("labels"), "decade").isNotNull)
         .groupBy(element_at(col("labels"), "decade").as("decade"))
         .agg(dsum(col("value")).as("value"))
@@ -493,10 +450,10 @@ private[graft] object PromqlQueries {
         |  AND v.event_type = 'view' AND c.event_type = 'click'
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      val parsed = ExtendedPromQL.parse(
         "rate(view[31d]) / on(user) group_left rate(click[31d])",
         1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
+      ExtendedPromQL.evalWith(parsed,
         ms => {
           val base = Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
             .select(concat(col("name"), lit(" "),
@@ -542,15 +499,9 @@ private[graft] object PromqlQueries {
         |  ELSE value END) IS NOT NULL
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         """rate(view[31d]) unless rate(click{user=~".*[02468]"}[31d])""",
-        1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 9).as("value"))
         .orderBy("user_tag")
@@ -582,15 +533,8 @@ private[graft] object PromqlQueries {
         |  ROUND(rate, 9) AS value
         |FROM r WHERE rate > 0.00003 ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "rate(view[31d]) > 0.00003", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "rate(view[31d]) > 0.00003", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 9).as("value"))
         .orderBy("user_tag")
@@ -635,15 +579,8 @@ private[graft] object PromqlQueries {
         |  ROUND(MAX(rate), 9) AS value
         |FROM r GROUP BY user_id ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "max_over_time(rate(view[1d])[31d:1d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "max_over_time(rate(view[1d])[31d:1d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 9).as("value"))
         .orderBy("user_tag")
@@ -678,16 +615,9 @@ private[graft] object PromqlQueries {
         |    AS value
         |FROM r ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "clamp(round(rate(view[31d]), 0.000001), 0.00002, 0.00003)",
-        1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -719,15 +649,8 @@ private[graft] object PromqlQueries {
         |    ELSE value END) IS NOT NULL)
         |SELECT ROUND(SUM(rate), 9) AS value FROM r"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "sum(rate(view[31d]))", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "sum(rate(view[31d]))", 1706745600000000L))
         .select(round(col("value"), 9).as("value"))
     },
 
@@ -743,15 +666,8 @@ private[graft] object PromqlQueries {
         |  AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000
         |GROUP BY user_tag ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "present_over_time(view[31d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "present_over_time(view[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -775,15 +691,8 @@ private[graft] object PromqlQueries {
         |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000)
         |GROUP BY user_id HAVING COUNT(*) >= 2 ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "predict_linear(view[31d], 86400)", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "predict_linear(view[31d], 86400)", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 4).as("value"))
         .orderBy("user_tag")
@@ -831,15 +740,8 @@ private[graft] object PromqlQueries {
         |WHERE r.i = cnt.n AND cnt.n >= 2
         |ORDER BY r.user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "holt_winters(view[31d], 0.5, 0.3)", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "holt_winters(view[31d], 0.5, 0.3)", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -865,15 +767,8 @@ private[graft] object PromqlQueries {
         |  WHERE rn = 1)
         |ORDER BY rank"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "sort(view)", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "sort(view)", 1706659200000000L))
         .select("rank", "sensor_id", "value")
         .orderBy("rank")
     },
@@ -902,18 +797,10 @@ private[graft] object PromqlQueries {
         |FROM t ORDER BY user_tag"""
     ) { (s, d) =>
       val now = 1706659200000000L
-      def ev(qs: String, as: String) = {
-        val parsed = graft.promql.ExtendedPromQL.parse(qs, now)
-        val selected = Matchers.sensorsByLabels(
-          EventsAdapter.sensors(s, d), parsed.matchers)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels"))
-        graft.promql.ExtendedPromQL.eval(parsed, selected,
-          EventsAdapter.samples(s, d)
-            .select("sensor_id", "timestamp_us", "value"))
+      def ev(qs: String, as: String) =
+        promql(s, d, ExtendedPromQL.parse(qs, now))
           .select(element_at(col("labels"), "user").as("user_tag"),
             col("value").as(as))
-      }
       ev("timestamp(view)", "ts_s")
         .join(ev("hour(timestamp(view))", "hr"), "user_tag")
         .join(ev("day_of_week(timestamp(view))", "dow"), "user_tag")
@@ -932,15 +819,8 @@ private[graft] object PromqlQueries {
         |  AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "group by (user) (view)", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "group by (user) (view)", 1706659200000000L))
         .select(element_at(col("group_labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -972,19 +852,12 @@ private[graft] object PromqlQueries {
         |ORDER BY part, user_tag"""
     ) { (s, d) =>
       val now = 1706659200000000L
-      def ev(qs: String, tag: String) = {
-        val parsed = graft.promql.ExtendedPromQL.parse(qs, now)
-        graft.promql.ExtendedPromQL.evalWith(parsed,
-          ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-            .select(concat(col("name"), lit(" "),
-              col("labels").getItem("user")).as("sensor_id"), col("labels")),
-          EventsAdapter.samples(s, d)
-            .select("sensor_id", "timestamp_us", "value"))
+      def ev(qs: String, tag: String) =
+        promql(s, d, ExtendedPromQL.parse(qs, now))
           .select(lit(tag).as("part"),
             coalesce(element_at(col("labels"), "user"), lit(""))
               .as("user_tag"),
             col("value"))
-      }
       ev("view * scalar(count(view))", "scaled")
         .unionByName(ev("nosuchmetric or vector(42)", "fallback"))
         .orderBy("part", "user_tag")
@@ -1016,20 +889,12 @@ private[graft] object PromqlQueries {
       val now = 1706745600000000L
       val rangeStart = 1706572800000000L
       val rangeEnd = 1706659200000000L
-      def ev(qs: String, tag: String) = {
-        val parsed = graft.promql.ExtendedPromQL.parse(
-          qs, now, Some(rangeStart), Some(rangeEnd))
-        val selected = Matchers.sensorsByLabels(
-          EventsAdapter.sensors(s, d), parsed.matchers)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels"))
-        graft.promql.ExtendedPromQL.eval(parsed, selected,
-          EventsAdapter.samples(s, d)
-            .select("sensor_id", "timestamp_us", "value"))
+      def ev(qs: String, tag: String) =
+        promql(s, d, ExtendedPromQL.parse(
+          qs, now, Some(rangeStart), Some(rangeEnd)))
           .select(lit(tag).as("fn"),
             element_at(col("labels"), "user").as("user_tag"),
             col("value"))
-      }
       ev("max_over_time(view[1h] @ end())", "max_end")
         .unionByName(ev("count_over_time(view[2h] @ start())", "cnt_start"))
         .orderBy("fn", "user_tag")
@@ -1054,16 +919,9 @@ private[graft] object PromqlQueries {
         |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
         |WHERE rn = 1 ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "round(deg(atan(sin(rad(view)))), 0.000000001)",
-        1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706659200000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -1097,14 +955,8 @@ private[graft] object PromqlQueries {
         |  ROUND(atan2(l.value, r.value), 6) AS value
         |FROM l JOIN r USING (user_id) ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "view atan2 on(user) click", 1706659200000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "view atan2 on(user) click", 1706659200000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -1128,15 +980,8 @@ private[graft] object PromqlQueries {
         |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
         |WHERE rn = 1 ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "(view % 7) ^ 2", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "(view % 7) ^ 2", 1706659200000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -1159,15 +1004,8 @@ private[graft] object PromqlQueries {
         |FROM s JOIN m USING (user_id)
         |GROUP BY s.user_id ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "mad_over_time(view[31d])", 1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "mad_over_time(view[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -1189,15 +1027,8 @@ private[graft] object PromqlQueries {
         |WHERE rn = 1
         |HAVING COUNT(*) > 0"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "quantile(0.75, view)", 1706659200000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "quantile(0.75, view)", 1706659200000000L))
         .select(round(col("value"), 6).as("value"))
     },
 
@@ -1224,16 +1055,12 @@ private[graft] object PromqlQueries {
         |  WHERE rn = 1)
         |WHERE rank <= 3 ORDER BY parity, rank"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "topk by (parity) (3, view)", 1705500000000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"),
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(
+        "topk by (parity) (3, view)", 1705500000000000L),
+        EventsAdapter.promSeries(s, d).andThen(_.select(col("sensor_id"),
           map_concat(col("labels"), map(lit("parity"),
             (col("labels")("user").cast("long") % 2).cast("string")))
-            .as("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
+            .as("labels"))),
         EventsAdapter.samples(s, d)
           .select("sensor_id", "timestamp_us", "value"))
         .select(element_at(col("labels"), "parity").cast("long")
@@ -1262,15 +1089,8 @@ private[graft] object PromqlQueries {
         |    ::BIGINT::DOUBLE / 1152921504606846976.0::DOUBLE < 0.4::DOUBLE
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "limit_ratio(0.4, view)", 1705500000000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "limit_ratio(0.4, view)", 1705500000000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -1295,15 +1115,8 @@ private[graft] object PromqlQueries {
         |  ORDER BY d, 'view ' || CAST(user_id AS VARCHAR) LIMIT 5)
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "limitk(5, view)", 1705500000000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        "limitk(5, view)", 1705500000000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value"))
         .orderBy("user_tag")
@@ -1331,15 +1144,8 @@ private[graft] object PromqlQueries {
         |  WHERE rn = 1)
         |ORDER BY rank"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        """sort_by_label_desc(view, "user")""", 1705500000000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+      promql(s, d, ExtendedPromQL.parse(
+        """sort_by_label_desc(view, "user")""", 1705500000000000L))
         .select(col("rank"),
           element_at(col("labels"), "user").as("user_tag"), col("value"))
         .orderBy("rank")
@@ -1368,15 +1174,9 @@ private[graft] object PromqlQueries {
         |  AS BIGINT) AS ratio_micro
         |FROM v, c"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "sum(count_over_time(view[31d])) / sum(count_over_time(click[31d]))",
-        1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(floor(col("value") * lit(1e6)).cast("long").as("ratio_micro"))
     },
 
@@ -1399,15 +1199,9 @@ private[graft] object PromqlQueries {
         |WHERE nv > 0 AND nc > 0
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "abs(count_over_time(view[31d]) - count_over_time(click[31d]))",
-        1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value").cast("long").as("diff"))
         .orderBy("user_tag")
@@ -1438,16 +1232,10 @@ private[graft] object PromqlQueries {
         |  AND v.user_id NOT IN (SELECT user_id FROM p)
         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "count_over_time(view[31d]) unless count_over_time(click[48h]) " +
           "unless count_over_time(purchase[48h])",
-        1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           col("value").cast("long").as("views"))
         .orderBy("user_tag")
@@ -1475,16 +1263,9 @@ private[graft] object PromqlQueries {
         |  GROUP BY st.step_us)
         |SELECT CAST(MAX(n) AS BIGINT) AS max_views FROM c"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "max_over_time(sum(count_over_time(view[1d]))[31d:1d])",
-        1706745600000000L)
-      val selected = Matchers.sensorsByLabels(
-        EventsAdapter.sensors(s, d), parsed.matchers)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
-      graft.promql.ExtendedPromQL.eval(parsed, selected,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(col("value").cast("long").as("max_views"))
     },
 
@@ -1506,13 +1287,10 @@ private[graft] object PromqlQueries {
         |WHERE e.event_type = 'view'
         |GROUP BY 1, 2 ORDER BY 1, 2"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
-        "count_over_time(view[1d])", 1706745600000000L)
-      graft.promql.ExtendedPromQL.evalRange(parsed,
+      ExtendedPromQL.evalRange(ExtendedPromQL.parse(
+        "count_over_time(view[1d])", 1706745600000000L),
         1704067200000000L, 1706745600000000L, 86400000000L,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
+        EventsAdapter.promSeries(s, d),
         EventsAdapter.samples(s, d)
           .select("sensor_id", "timestamp_us", "value"))
         .select(element_at(col("labels"), "user").as("user_tag"),
@@ -1546,16 +1324,10 @@ private[graft] object PromqlQueries {
         |  * 1e9) AS BIGINT) AS burn_rate_nano
         |FROM e JOIN v USING (step_us)"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "max_over_time((sum(count_over_time(error[1d])) / " +
           "sum(count_over_time(view[1d])))[31d:1d])",
-        1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         // integer compare surface (floor-scaled nanos): the one value
         // class that has never failed the driver hash
         .select(floor(col("value") * 1e9).cast("long")
@@ -1588,16 +1360,10 @@ private[graft] object PromqlQueries {
         |SELECT CAST(FLOOR(MAX(ma) * 1e9) AS BIGINT) AS max_ma_nano
         |FROM a"""
     ) { (s, d) =>
-      val parsed = graft.promql.ExtendedPromQL.parse(
+      promql(s, d, ExtendedPromQL.parse(
         "max_over_time(avg_over_time(" +
           "sum(count_over_time(view[1d]))[7d:1d])[31d:1d])",
-        1706745600000000L)
-      graft.promql.ExtendedPromQL.evalWith(parsed,
-        ms => Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-          .select(concat(col("name"), lit(" "),
-            col("labels").getItem("user")).as("sensor_id"), col("labels")),
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(floor(col("value") * 1e9).cast("long").as("max_ma_nano"))
     }
   )

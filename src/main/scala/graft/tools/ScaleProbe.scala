@@ -17,7 +17,9 @@ import org.apache.spark.sql.DataFrame
   * `--plans <dir>` adds an untimed cold run before the metered one (so
   * `sec` is a warm run) and writes the AQE-final
   * `.explain("formatted")` plan to `<dir>/<query>.txt`: the before/after
-  * evidence of plan changes.
+  * evidence of plan changes. The written plan is [[stablePlan]]'s, so two
+  * checkouts that plan a query alike write the same file and `diff -r`
+  * of two plan directories shows only plan changes.
   *
   * Usage:
   *   sbt "runMain graft.tools.ScaleProbe <dataDir> [q1,q2,...|--all] \
@@ -125,6 +127,29 @@ object ScaleProbe {
     "q134_semdedup", "q154_pq_topk", "q116_stream_interval_join",
     "q197_spearman")
 
+  /** The AQE-final formatted plan of `df`. Running the frame's own
+    * QueryExecution first is what makes it final: a count() runs a
+    * separate grouped one, so this frame's would still explain the
+    * initial AdaptiveSparkPlan (isFinalPlan=false), missing AQE's
+    * runtime join-strategy switches.
+    */
+  def finalPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+  }
+
+  /** `plan` with what differs between two builds of one plan replaced by
+    * fixed text: expression ids (`#123`), exchange plan ids
+    * (`plan_id=4567`), lambda-variable counters (`lambda x_12`) and JVM
+    * lambda class names with their identity hash.
+    */
+  def stablePlan(plan: String): String =
+    plan.replaceAll("#\\d+", "#x")
+      .replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("(lambda [a-z]+)_\\d+", "$1_x")
+      .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda")
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <dataDir> [q1,q2,...|--all] " +
       "[--out <file>] [--plans <dir>]")
@@ -188,18 +213,10 @@ object ScaleProbe {
         barrier()
         val counts = meter.snap() - before
         val exchanges = planDir.map { d =>
-          // the timed count() ran a SEPARATE grouped QueryExecution, so
-          // this frame's own one is unexecuted and would explain the
-          // initial AdaptiveSparkPlan (isFinalPlan=false), missing AQE's
-          // runtime join-strategy switches: one extra untimed, unmetered
-          // pass buys the final plan
+          // one extra untimed, unmetered pass buys the final plan
           val plan =
-            try {
-              built.queryExecution.toRdd.foreach(_ => ())
-              built.queryExecution.explainString(
-                org.apache.spark.sql.execution.ExplainMode.fromString(
-                  "formatted"))
-            } catch { case e: Throwable => s"explain failed: $e" }
+            try stablePlan(finalPlan(built))
+            catch { case e: Throwable => s"explain failed: $e" }
           java.nio.file.Files.writeString(
             new java.io.File(d, s"$n.txt").toPath, plan)
           "Exchange".r.findAllIn(plan).length

@@ -1328,17 +1328,20 @@ class GatewaySpec extends SparkSpec {
       def instant(k: Int) = s.get("/api/v1/query?format=csv&query=" +
         enc(s"""{__name__="eq_cpu"}[${10 + k}m]"""))
       // a different matched-series count, 2 jobs then 3, over a shifted
-      // grid; the range stays a whole number of steps, since a last step
-      // short of `end` adds a filter bound, a shape of its own
-      def range(k: Int) = s.get("/api/v1/query_range?format=prometheus&query=" +
+      // grid; `shortS` moves `end` off the grid, so the last step falls
+      // short of it
+      def range(k: Int, shortS: Int = 0) = s.get(
+        "/api/v1/query_range?format=prometheus&query=" +
         enc(s"""avg_over_time({__name__="eq_cpu",job=~"${
           if (k == 0) "a|b" else "a|b|c"}"}[5m])""") +
-        s"&start=${nowS - (40 - k) * 60}&end=${nowS - (5 - k) * 60}&step=300")
+        s"&start=${nowS - (40 - k) * 60}&end=${nowS - (5 - k) * 60 - shortS}" +
+        "&step=300")
       def read(k: Int) = s.remoteRead(t0Ms + k * 60000L,
         t0Ms + (30 + k) * 60000L, Some(1))
       val shapes = Seq[(String, Int => HttpResponse[Array[Byte]])](
         "series csv" -> series("csv"), "series arrow" -> series("arrow"),
-        "query csv" -> instant, "query_range prometheus" -> range,
+        "query csv" -> instant, "query_range prometheus" -> (k => range(k)),
+        "query_range unaligned" -> (k => range(k, if (k == 0) 0 else 120)),
         "remote read chunks" -> read)
       def metrics() = exposition(p => new String(s.get(p).body(), "UTF-8"))
       val first = metrics()

@@ -65,16 +65,11 @@ class PromQLPlanSpec extends SparkSpec {
   test("evalRangeApi pinned @: one instant evaluation replicated by a " +
     "step generator — the scan is NOT keyed on the grid") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{LabelMatcher, Matchers}
     import graft.adapters.EventsAdapter
-    val selectFor = (ms: Seq[LabelMatcher]) =>
-      Matchers.sensorsByLabels(EventsAdapter.sensors(spark, sf), ms)
-        .select(concat(col("name"), lit(" "),
-          col("labels").getItem("user")).as("sensor_id"), col("labels"))
     val df = graft.promql.ExtendedPromQL.evalRangeApi(
       "sum(count_over_time(view[1d])) @ start()",
       1704067200000000L, 1706745600000000L, 86400000000L,
-      selectFor,
+      EventsAdapter.promSeries(spark, sf),
       (lo, hi) => EventsAdapter.samples(spark, sf)
         .filter(col("timestamp_us").between(lo, hi))
         .select("sensor_id", "timestamp_us", "value"))
@@ -84,5 +79,22 @@ class PromQLPlanSpec extends SparkSpec {
     assert(occurrences(plan, "Generate explode") == 2, plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+  }
+
+  test("EventsAdapter.promSeries keys each series the way samples keys " +
+    "its rows: the view selection is the distinct view sensor_ids, " +
+    "each labelled with its user") {
+    import org.apache.spark.sql.functions._
+    import graft.adapters.EventsAdapter
+    import graft.operators.LabelMatcher.Eq
+    val got = EventsAdapter.promSeries(spark, sf)(Seq(Eq("__name__", "view")))
+      .collect().map(r => r.getString(0) -> r.getMap[String, String](1).toMap)
+    val want = EventsAdapter.samples(spark, sf)
+      .filter(col("sensor_name") === "view")
+      .select("sensor_id", "user").distinct().collect()
+      .map(r => r.getString(0) -> Map("user" -> r.getString(1)))
+    assert(want.nonEmpty)
+    assert(got.length == got.toMap.size, "a sensor_id selected twice")
+    assert(got.toMap == want.toMap)
   }
 }

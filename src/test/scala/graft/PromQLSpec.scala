@@ -216,7 +216,7 @@ class ExtendedPromQLSpec extends SparkSpec {
         .toDF("sensor_id", "timestamp_us", "value")
       val selected = Seq(("view 7")).toDF("sensor_id")
         .withColumn("labels", map(lit("user"), lit("7")))
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("sensor_id", "value").as[(String, Double)].collect().toSeq
     }
     assert(run(Seq(10, 12, 14), "holt_winters(view[5m], 0.5, 0.5)") ==
@@ -236,7 +236,7 @@ class ExtendedPromQLSpec extends SparkSpec {
         .toDF("sensor_id", "timestamp_us", "value")
       val selected = Seq("view 7").toDF("sensor_id")
         .withColumn("labels", map(lit("user"), lit("7")))
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("value").as[Double].collect().toSeq
     }
     // scalar arithmetic: % is float mod (sign follows dividend), ^ is pow
@@ -284,9 +284,9 @@ class ExtendedPromQLSpec extends SparkSpec {
     val selected = Seq(("view a1", "a"), ("view a2", "a"),
       ("view b1", "b"), ("view b2", "b")).toDF("sensor_id", "g")
       .withColumn("labels", map(lit("grp"), $"g")).select("sensor_id", "labels")
-    val out = ExtendedPromQL.eval(
+    val out = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("topk by (grp) (1, view)", now),
-      selected, samples)
+      _ => selected, samples)
       .select("sensor_id", "value").as[(String, Double)].collect().toSet
     // per-group winners, not the global top-2
     assert(out == Set(("view a2", 30.0), ("view b1", 20.0)))
@@ -309,7 +309,7 @@ class ExtendedPromQLSpec extends SparkSpec {
         .withColumn("labels", map().cast("map<string,string>"))
         .select("sensor_id", "labels"))
     def run(q: String): Seq[String] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .orderBy("rank").select("sensor_id").as[String].collect().toSeq
     // lexicographic: "10" < "2"; the label-less series sorts first ("")
     assert(run("""sort_by_label(view, "user")""") ==
@@ -333,7 +333,7 @@ class ExtendedPromQLSpec extends SparkSpec {
       .withColumn("labels", map(lit("user"), $"u"))
       .select("sensor_id", "labels")
     def run(q: String): Set[String] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("sensor_id").as[String].collect().toSet
     val k = run("limitk(7, view)")
     assert(k.size == 7 && k == run("limitk(7, view)")) // stable
@@ -366,7 +366,7 @@ class ExtendedPromQLSpec extends SparkSpec {
       .withColumn("labels", map(lit("user"), $"u"))
       .select("sensor_id", "labels")
     def run(q: String): Seq[Double] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("value").as[Double].collect().toSeq.sorted
     assert(run("quantile(0.5, view)") == Seq(20.0))
     assert(run("quantile(0.75, view)") == Seq(30.0))
@@ -391,7 +391,7 @@ class ExtendedPromQLSpec extends SparkSpec {
     val selected = Seq("view 7").toDF("sensor_id")
       .withColumn("labels", map(lit("user"), lit("7")))
     def run(q: String): Double =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("value").as[Double].head()
     // timestamp(): float seconds, µs precision survives
     assert(run("timestamp(view)") == ts / 1e6)
@@ -423,7 +423,7 @@ class ExtendedPromQLSpec extends SparkSpec {
       .withColumn("labels", map(lit("user"),
         org.apache.spark.sql.functions.substring(col("sensor_id"), 6, 2)))
     def run(q: String) =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("rank", "sensor_id").as[(Int, String)].collect().toSeq
         .sortBy(_._1)
     assert(run("sort(view)") == Seq(
@@ -557,19 +557,19 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("a 1", 1000000L, 5.0), ("a 1", 2000000L, 1.0), // latest = 1.0
       ("a 2", 1500000L, 4.0)).toDF("sensor_id", "timestamp_us", "value")
     // literal vector standalone: one unlabeled series
-    val vlit = ExtendedPromQL.eval(VectorLitQ(7.5), selected, samples)
+    val vlit = ExtendedPromQL.evalWith(VectorLitQ(7.5), _ => selected, samples)
       .select("value").as[Double].collect().toSeq
     assert(vlit == Seq(7.5))
     // dynamic scalar: count(instant vector) = 2 series, value doubles
     val dyn = BinDynScalarQ('*',
       ScalarQ(InstantAggQ("count", Nil, false, Nil, 0L, 3000000L)),
       scalarOnLeft = false, SelectorQ(Nil, 0L, 3000000L))
-    val out = ExtendedPromQL.eval(dyn, selected, samples)
+    val out = ExtendedPromQL.evalWith(dyn, _ => selected, samples)
       .select("sensor_id", "value").as[(String, Double)].collect().toMap
     assert(out == Map("a 1" -> 2.0, "a 2" -> 8.0))
     // scalar() of a multi-element vector is NaN (Prometheus semantics)
-    val nan = ExtendedPromQL.eval(
-      ScalarQ(SelectorQ(Nil, 0L, 3000000L)), selected, samples)
+    val nan = ExtendedPromQL.evalWith(
+      ScalarQ(SelectorQ(Nil, 0L, 3000000L)), _ => selected, samples)
       .select("value").as[Double].collect()
     assert(nan.length == 1 && nan(0).isNaN)
     // the canonical `expr or vector(0)` fallback on an empty left side
@@ -616,8 +616,8 @@ class ExtendedPromQLSpec extends SparkSpec {
       .toDF("sensor_id", "labels")
     val samples = Seq(("a 1", 1L, 1.0), ("a 1", 2L, 2.0), ("a 1", 3L, 10.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    val v = ExtendedPromQL.eval(
-      QuantileOverTimeQ(0.5, Nil, 0L, 10L), selected, samples)
+    val v = ExtendedPromQL.evalWith(
+      QuantileOverTimeQ(0.5, Nil, 0L, 10L), _ => selected, samples)
       .select("value").as[Double].collect().head
     assert(v == 2.0) // exact median
   }
@@ -628,12 +628,12 @@ class ExtendedPromQLSpec extends SparkSpec {
       .toDF("sensor_id", "labels")
     val samples = Seq(("a 1", 1L, 2.0), ("a 1", 2L, 4.0), ("a 1", 3L, 6.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    val v = ExtendedPromQL.eval(
-      OverTimeQ("stdvar", Nil, 0L, 10L), selected, samples)
+    val v = ExtendedPromQL.evalWith(
+      OverTimeQ("stdvar", Nil, 0L, 10L), _ => selected, samples)
       .select("value").as[Double].collect().head
     assert(math.abs(v - 8.0 / 3.0) < 1e-12) // population variance
-    val sd = ExtendedPromQL.eval(
-      OverTimeQ("stddev", Nil, 0L, 10L), selected, samples)
+    val sd = ExtendedPromQL.evalWith(
+      OverTimeQ("stddev", Nil, 0L, 10L), _ => selected, samples)
       .select("value").as[Double].collect().head
     assert(math.abs(sd - math.sqrt(8.0 / 3.0)) < 1e-12)
   }
@@ -648,18 +648,18 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("c 1", 3000000L, 2.0), ("c 1", 4000000L, 5.0))
       .toDF("sensor_id", "timestamp_us", "value")
     def evalOne(op: String): Double =
-      ExtendedPromQL.eval(RangeFnQ(op, Nil, 0L, 10000000L),
-        selected, samples).select("value").as[Double].collect().head
+      ExtendedPromQL.evalWith(RangeFnQ(op, Nil, 0L, 10000000L),
+        _ => selected, samples).select("value").as[Double].collect().head
     assert(evalOne("increase") == 8.0)
     assert(evalOne("rate") == 8.0 / 10.0) // 10-second range
     assert(evalOne("delta") == 4.0) // 5.0 - 1.0
     // a single-sample series yields no result (PromQL needs two points)
     val one = Seq(("c 1", 1000000L, 1.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    assert(ExtendedPromQL.eval(RangeFnQ("rate", Nil, 0L, 10000000L),
-      selected, one).count() == 0)
-    assert(ExtendedPromQL.eval(RangeFnQ("delta", Nil, 0L, 10000000L),
-      selected, one).count() == 0)
+    assert(ExtendedPromQL.evalWith(RangeFnQ("rate", Nil, 0L, 10000000L),
+      _ => selected, one).count() == 0)
+    assert(ExtendedPromQL.evalWith(RangeFnQ("delta", Nil, 0L, 10000000L),
+      _ => selected, one).count() == 0)
   }
 
   test("evaluator: rate/increase keep sub-cent counter deltas (f64 sum)") {
@@ -671,14 +671,14 @@ class ExtendedPromQLSpec extends SparkSpec {
     // increase = 0 — a 100% error
     val samples = (0 to 5).map(i => ("c 1", i * 1000000L, i * 0.004))
       .toDF("sensor_id", "timestamp_us", "value")
-    val inc = ExtendedPromQL.eval(RangeFnQ("increase", Nil, 0L, 10000000L),
-      selected, samples).select("value").as[Double].collect().head
+    val inc = ExtendedPromQL.evalWith(RangeFnQ("increase", Nil, 0L, 10000000L),
+      _ => selected, samples).select("value").as[Double].collect().head
     assert(math.abs(inc - 0.02) < 1e-12)
     // and huge deltas don't overflow to null / drop out of the sum
     val big = Seq(("c 1", 1000000L, 0.0), ("c 1", 2000000L, 4e16))
       .toDF("sensor_id", "timestamp_us", "value")
-    val incBig = ExtendedPromQL.eval(RangeFnQ("increase", Nil, 0L, 10000000L),
-      selected, big).select("value").as[Double].collect().head
+    val incBig = ExtendedPromQL.evalWith(RangeFnQ("increase", Nil, 0L, 10000000L),
+      _ => selected, big).select("value").as[Double].collect().head
     assert(incBig == 4e16)
   }
 
@@ -691,21 +691,21 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("a 1", 1000000L, 1.0), ("a 1", 2000000L, 2.0),
       ("a 2", 1500000L, 10.0), ("a 2", 9999999999L, 99.0) // out of window
     ).toDF("sensor_id", "timestamp_us", "value")
-    val ot = ExtendedPromQL.eval(
-      OverTimeQ("sum", Nil, 0L, 3000000L), selected, samples)
+    val ot = ExtendedPromQL.evalWith(
+      OverTimeQ("sum", Nil, 0L, 3000000L), _ => selected, samples)
       .select("sensor_id", "value").as[(String, Double)].collect().toMap
     assert(ot == Map("a 1" -> 3.0, "a 2" -> 10.0))
 
     // instant: last sample per series in window, summed over all (empty by)
-    val inst = ExtendedPromQL.eval(
-      InstantAggQ("sum", Nil, false, Nil, 0L, 3000000L), selected, samples)
+    val inst = ExtendedPromQL.evalWith(
+      InstantAggQ("sum", Nil, false, Nil, 0L, 3000000L), _ => selected, samples)
       .select("value").as[Double].collect()
     assert(inst.toSeq == Seq(12.0)) // 2.0 (last of a1) + 10.0 (last of a2)
 
     // grouped: by (user) keeps each series separate here
-    val byUser = ExtendedPromQL.eval(
+    val byUser = ExtendedPromQL.evalWith(
       InstantAggQ("max", Seq("user"), false, Nil, 0L, 3000000L),
-      selected, samples)
+      _ => selected, samples)
       .select(element_at(col("group_labels"), "user"), col("value"))
       .as[(String, Double)].collect().toMap
     assert(byUser == Map("1" -> 2.0, "2" -> 10.0))
@@ -767,7 +767,7 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("v 1", now - 1000000000L, 5.0))
       .toDF("sensor_id", "timestamp_us", "value")
     def run(q: String): Map[String, Double] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("sensor_id", "value").as[(String, Double)].collect().toMap
     assert(run("max_over_time(view[1h:15m])") == Map("v 1" -> 5.0))
     assert(run("min_over_time(view[1h:15m])") == Map("v 1" -> 1.0))
@@ -784,9 +784,9 @@ class ExtendedPromQLSpec extends SparkSpec {
     // of step (Prometheus alignment) -> 4 steps, all holding the sample
     val aligned = Seq(("v 1", now - 2700000000L, 7.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    val n = ExtendedPromQL.eval(
+    val n = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("count_over_time(view[50m:15m])", now),
-      selected, aligned)
+      _ => selected, aligned)
       .select("value").as[Double].collect().head
     assert(n == 4.0)
   }
@@ -801,12 +801,12 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("c 1", now - 30000000L + i * 5000000L, i.toDouble))
       .toDF("sensor_id", "timestamp_us", "value")
     val q = ExtendedPromQL.parse("max_over_time(rate(view[10s])[30s:10s])", now)
-    val got = ExtendedPromQL.eval(q, selected, samples)
+    val got = ExtendedPromQL.evalWith(q, _ => selected, samples)
       .select("value").as[Double].collect().head
     assert(math.abs(got - 0.2) < 1e-12)
-    val cnt = ExtendedPromQL.eval(
+    val cnt = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("count_over_time(rate(view[10s])[30s:10s])", now),
-      selected, samples).select("value").as[Double].collect().head
+      _ => selected, samples).select("value").as[Double].collect().head
     assert(cnt == 3.0) // 4 steps, first has a single sample -> no rate
   }
 
@@ -886,21 +886,21 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("a 2", 1000000L, 7.0), // latest = 7.0
       ("a 3", 1500000L, 4.0) // latest = 4.0
     ).toDF("sensor_id", "timestamp_us", "value")
-    val top2 = ExtendedPromQL.eval(
-      TopKQ("topk", 2, Nil, false, Nil, 0L, 3000000L), selected, samples)
+    val top2 = ExtendedPromQL.evalWith(
+      TopKQ("topk", 2, Nil, false, Nil, 0L, 3000000L), _ => selected, samples)
       .select("rank", "sensor_id", "value")
       .as[(Int, String, Double)].collect().toSeq
     assert(top2 == Seq((1, "a 2", 7.0), (2, "a 3", 4.0)))
-    val bottom1 = ExtendedPromQL.eval(
-      TopKQ("bottomk", 1, Nil, false, Nil, 0L, 3000000L), selected, samples)
+    val bottom1 = ExtendedPromQL.evalWith(
+      TopKQ("bottomk", 1, Nil, false, Nil, 0L, 3000000L), _ => selected, samples)
       .select("rank", "sensor_id", "value")
       .as[(Int, String, Double)].collect().toSeq
     assert(bottom1 == Seq((1, "a 1", 1.0)))
 
     // scalar op on an instant vector
-    val scaled = ExtendedPromQL.eval(
+    val scaled = ExtendedPromQL.evalWith(
       BinScalarQ('*', 10.0, scalarOnLeft = false,
-        SelectorQ(Nil, 0L, 3000000L)), selected, samples)
+        SelectorQ(Nil, 0L, 3000000L)), _ => selected, samples)
       .select("sensor_id", "value").as[(String, Double)].collect().toMap
     assert(scaled == Map("a 1" -> 10.0, "a 2" -> 70.0, "a 3" -> 40.0))
 
@@ -982,15 +982,15 @@ class ExtendedPromQLSpec extends SparkSpec {
       case other => fail(s"unexpected: $other")
     }
     intercept[PromQLError] { ExtendedPromQL.parse("a > b", now) }
-    val cmpKeep = ExtendedPromQL.eval(
+    val cmpKeep = ExtendedPromQL.evalWith(
       BinCmpQ(">", 5.0, scalarOnLeft = false, bool = false,
-        SelectorQ(Nil, 0L, 10L)), selL, samples)
+        SelectorQ(Nil, 0L, 10L)), _ => selL, samples)
       .select(element_at(col("labels"), "user"), col("value"))
       .as[(String, Double)].collect().toMap
     assert(cmpKeep == Map("2" -> 9.0)) // 4.0 filtered out
-    val cmpBool = ExtendedPromQL.eval(
+    val cmpBool = ExtendedPromQL.evalWith(
       BinCmpQ(">", 5.0, scalarOnLeft = false, bool = true,
-        SelectorQ(Nil, 0L, 10L)), selL, samples)
+        SelectorQ(Nil, 0L, 10L)), _ => selL, samples)
       .select(element_at(col("labels"), "user"), col("value"))
       .as[(String, Double)].collect().toMap
     assert(cmpBool == Map("1" -> 0.0, "2" -> 1.0))
@@ -1024,18 +1024,18 @@ class ExtendedPromQLSpec extends SparkSpec {
       Set(("1", 4.0), ("2", 9.0), ("1", 2.0), ("2", 4.0)))
 
     // count_values: frequency of distinct latest values
-    val cv = ExtendedPromQL.eval(
+    val cv = ExtendedPromQL.evalWith(
       CountValuesQ("v", Nil, 0L, 10L),
-      selL.unionByName(selR), samples)
+      _ => selL.unionByName(selR), samples)
       .select(element_at(col("group_labels"), "v"), col("value"))
       .as[(String, Long)].collect().toMap
     assert(cv == Map("4.0" -> 2L, "9.0" -> 1L, "2.0" -> 1L))
 
     // absent: empty when series exist, one row of 1.0 when none do
-    assert(ExtendedPromQL.eval(AbsentQ(Nil, 0L, 10L), selL, samples)
+    assert(ExtendedPromQL.evalWith(AbsentQ(Nil, 0L, 10L), _ => selL, samples)
       .count() == 0)
     val none = samples.filter(col("timestamp_us") > 100L)
-    val ab = ExtendedPromQL.eval(AbsentQ(Nil, 0L, 10L), selL, none)
+    val ab = ExtendedPromQL.evalWith(AbsentQ(Nil, 0L, 10L), _ => selL, none)
       .select("value").as[Double].collect().toSeq
     assert(ab == Seq(1.0))
   }
@@ -1062,16 +1062,16 @@ class ExtendedPromQLSpec extends SparkSpec {
       toDF("sensor_id", "labels")
     val samples = Seq(("a 42", 1L, 1.0), ("a x", 1L, 2.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    val lr = ExtendedPromQL.eval(
+    val lr = ExtendedPromQL.evalWith(
       LabelReplaceQ("grp", "$1", "user", "([0-9]).*",
-        SelectorQ(Nil, 0L, 10L)), sel, samples)
+        SelectorQ(Nil, 0L, 10L)), _ => sel, samples)
       .select(col("sensor_id"), col("labels"))
       .as[(String, Map[String, String])].collect().toMap
     assert(lr("a 42") == Map("user" -> "42", "grp" -> "4"))
     assert(lr("a x") == Map("user" -> "x")) // no full match: untouched
-    val lj = ExtendedPromQL.eval(
+    val lj = ExtendedPromQL.evalWith(
       LabelJoinQ("uid", "-", Seq("user", "missing"),
-        SelectorQ(Nil, 0L, 10L)), sel, samples)
+        SelectorQ(Nil, 0L, 10L)), _ => sel, samples)
       .select(col("sensor_id"), col("labels"))
       .as[(String, Map[String, String])].collect().toMap
     assert(lj("a 42") == Map("user" -> "42", "uid" -> "42-"))
@@ -1102,15 +1102,15 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("b 1 1", 1L, 10.0), ("b 1 2", 1L, 30.0), ("b 1 inf", 1L, 40.0),
       ("z 2", 1L, 0.0)) // zero total drops out
       .toDF("sensor_id", "timestamp_us", "value")
-    val got = ExtendedPromQL.eval(
-      HistogramQuantileQ(0.5, Nil, 0L, 10L), sel, samples)
+    val got = ExtendedPromQL.evalWith(
+      HistogramQuantileQ(0.5, Nil, 0L, 10L), _ => sel, samples)
       .select(element_at(col("group_labels"), "user"), col("value"))
       .as[(String, Double)].collect().toMap
     // rank = 0.5*40 = 20; covering bucket (1,2]: 1 + 1*(20-10)/(30-10) = 1.5
     assert(got == Map("1" -> 1.5))
     // phi high enough to land in +Inf -> highest finite le
-    val inf = ExtendedPromQL.eval(
-      HistogramQuantileQ(0.99, Nil, 0L, 10L), sel, samples)
+    val inf = ExtendedPromQL.evalWith(
+      HistogramQuantileQ(0.99, Nil, 0L, 10L), _ => sel, samples)
       .select(element_at(col("group_labels"), "user"), col("value"))
       .as[(String, Double)].collect().toMap
     assert(inf == Map("1" -> 2.0)) // 0.99*40=39.6 > 30 -> +Inf bucket
@@ -1125,8 +1125,8 @@ class ExtendedPromQLSpec extends SparkSpec {
       vs.map { case (sid, v) => (sid, now - 1000L, v) }
         .toDF("sensor_id", "timestamp_us", "value")
     def run(q: String, vs: (String, Double)*): Map[String, Double] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now),
-        selected, samplesOf(vs: _*))
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now),
+        _ => selected, samplesOf(vs: _*))
         .select("sensor_id", "value").as[(String, Double)].collect().toMap
     assert(run("abs(m)", "m 1" -> -2.5, "m 2" -> 3.0) ==
       Map("m 1" -> 2.5, "m 2" -> 3.0))
@@ -1190,7 +1190,7 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("v 1", now - 20000000L, 3.0), ("v 1", now - 10000000L, 1.0),
       ("v 1", now, 4.0)).toDF("sensor_id", "timestamp_us", "value")
     def run(q: String): Seq[Double] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("value").as[Double].collect().toSeq
     assert(run("resets(view[1m])") == Seq(1.0))  // 3 -> 1
     assert(run("changes(view[1m])") == Seq(3.0)) // 1->3, 3->1, 1->4
@@ -1200,36 +1200,36 @@ class ExtendedPromQLSpec extends SparkSpec {
     val resetTail = Seq(
       ("v 1", now - 10000000L, 9.0), ("v 1", now, 2.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    assert(ExtendedPromQL.eval(
-      ExtendedPromQL.parse("irate(view[1m])", now), selected, resetTail)
+    assert(ExtendedPromQL.evalWith(
+      ExtendedPromQL.parse("irate(view[1m])", now), _ => selected, resetTail)
       .select("value").as[Double].head() == 0.2)
     // perfectly linear series: slope 0.5/s, prediction exact
     val linear = Seq.tabulate(5)(i =>
       ("v 1", now - (40 - 10 * i) * 1000000L, i * 5.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    val d = ExtendedPromQL.eval(
-      ExtendedPromQL.parse("deriv(view[1m])", now), selected, linear)
+    val d = ExtendedPromQL.evalWith(
+      ExtendedPromQL.parse("deriv(view[1m])", now), _ => selected, linear)
       .select("value").as[Double].head()
     assert(math.abs(d - 0.5) < 1e-9)
-    val p = ExtendedPromQL.eval(
+    val p = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("predict_linear(view[1m], 60)", now),
-      selected, linear)
+      _ => selected, linear)
       .select("value").as[Double].head()
     assert(math.abs(p - (20.0 + 0.5 * 60)) < 1e-9)
     // singleton series yield nothing for the pairwise/regression family
     val one = Seq(("v 1", now, 5.0)).toDF("sensor_id", "timestamp_us", "value")
     for (q <- Seq("idelta(view[1m])", "irate(view[1m])", "deriv(view[1m])",
       "predict_linear(view[1m], 60)"))
-      assert(ExtendedPromQL.eval(
-        ExtendedPromQL.parse(q, now), selected, one).count() == 0, q)
+      assert(ExtendedPromQL.evalWith(
+        ExtendedPromQL.parse(q, now), _ => selected, one).count() == 0, q)
     // but resets/changes count zero pairs as zero
-    assert(ExtendedPromQL.eval(
-      ExtendedPromQL.parse("resets(view[1m])", now), selected, one)
+    assert(ExtendedPromQL.evalWith(
+      ExtendedPromQL.parse("resets(view[1m])", now), _ => selected, one)
       .select("value").as[Double].collect().toSeq == Seq(0.0))
     // subquery composition for the pairwise counters
-    assert(ExtendedPromQL.eval(
+    assert(ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("max_over_time(changes(view[40s])[1m:20s])", now),
-      selected, samples).select("value").as[Double].head() >= 1.0)
+      _ => selected, samples).select("value").as[Double].head() >= 1.0)
   }
 
   test("present_over_time and absent_over_time") {
@@ -1238,25 +1238,25 @@ class ExtendedPromQLSpec extends SparkSpec {
       .toDF("sensor_id", "labels")
     val samples = Seq(("v 1", now - 1000L, 5.0))
       .toDF("sensor_id", "timestamp_us", "value")
-    val present = ExtendedPromQL.eval(
+    val present = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("present_over_time(view[1h])", now),
-      selected, samples)
+      _ => selected, samples)
       .select("sensor_id", "value").as[(String, Double)].collect().toMap
     assert(present == Map("v 1" -> 1.0))
     // data in the window -> absent_over_time yields nothing
-    assert(ExtendedPromQL.eval(
+    assert(ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("absent_over_time(view[1h])", now),
-      selected, samples).count() == 0)
+      _ => selected, samples).count() == 0)
     // window ending before every sample -> one absent row, value 1
-    val early = ExtendedPromQL.eval(
+    val early = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse(s"absent_over_time(view[1h] @ ${(now / 1e6).toLong - 7200})", now),
-      selected, samples)
+      _ => selected, samples)
       .select("value").as[Double].collect().toSeq
     assert(early == Seq(1.0))
     // composes: inner of a subquery fold
-    val sub = ExtendedPromQL.eval(
+    val sub = ExtendedPromQL.evalWith(
       ExtendedPromQL.parse("sum_over_time(present_over_time(view[30m])[1h:15m])", now),
-      selected, samples)
+      _ => selected, samples)
       .select("value").as[Double].collect().toSeq
     assert(sub.nonEmpty && sub.head >= 1.0)
   }
@@ -1286,7 +1286,7 @@ class ExtendedPromQLSpec extends SparkSpec {
       ("v 3", now - 2000L, 5.0), ("v 3", now - 1000L, 15.0))
       .toDF("sensor_id", "timestamp_us", "value")
     def run(q: String): Map[Map[String, String], Double] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now), selected, samples)
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now), _ => selected, samples)
         .select("group_labels", "value")
         .as[(Map[String, String], Double)].collect().toMap
     assert(run("sum(increase(view[1h]))") == Map(Map.empty -> 16.0))
@@ -1326,8 +1326,8 @@ class ExtendedPromQLSpec extends SparkSpec {
     val selected = Seq(("m 1", Map("user" -> "1")))
       .toDF("sensor_id", "labels")
     def run(q: String, v: Double): Map[String, Double] =
-      ExtendedPromQL.eval(ExtendedPromQL.parse(q, now),
-        selected,
+      ExtendedPromQL.evalWith(ExtendedPromQL.parse(q, now),
+        _ => selected,
         Seq(("m 1", now - 1000L, v))
           .toDF("sensor_id", "timestamp_us", "value"))
         .select("sensor_id", "value").as[(String, Double)].collect().toMap

@@ -113,4 +113,21 @@ class ScaleManifestSpec extends AnyFunSuite {
     assert(err == Set("q_err"))
     java.nio.file.Files.delete(f)
   }
+
+  test("ScaleProbe --plans writes the same file for two builds of one " +
+    "query: expression ids, plan ids, lambda counters and JVM lambda " +
+    "names are stripped") {
+    import graft.tools.ScaleProbe.{finalPlan, stablePlan}
+    val spark = SparkSpec.spark
+    val sf = "/root/testdata/sf0.001"
+    // q82 plans a typed fold (JVM lambdas), q124 a label-map filter
+    // (lambda variables)
+    for (q <- Seq("q82_promql_holt_winters", "q124_promql_topk_by")) {
+      val Seq(a, b) = Seq.fill(2)(finalPlan(SparkEntry.queries(q)(spark, sf)))
+      assert(a != b, s"$q: two builds share expression ids")
+      assert(stablePlan(a) == stablePlan(b), q)
+      assert("#\\d|plan_id=\\d|lambda [a-z]+_\\d|Lambda\\$\\d".r
+        .findFirstIn(stablePlan(a)).isEmpty, q)
+    }
+  }
 }
