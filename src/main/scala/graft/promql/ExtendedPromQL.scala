@@ -25,13 +25,19 @@ import graft.operators.{LabelMatcher, Matchers}
   *    for + - * /, with selectors and per-series range functions as
   *    operands (`rate(a[5m]) / rate(b[5m])`).
   *
+  * A query is lexed once ([[PromQLLexer]]) and parsed in one
+  * recursive-descent pass over its tokens: binary operators by
+  * precedence climbing (`or` < `and`/`unless` < comparisons < `+ -` <
+  * `* / % atan2` < `^`, all left-associative except `^`), then function
+  * calls and selectors. A query nested deeper than a fixed bound rejects
+  * with [[SimplePromQL.PromQLError]] instead of overflowing the stack.
   * Selector parsing (matchers, ranges, durations, rejection of binary ops
   * etc.) is delegated to [[SimplePromQL]], so reference-compatible
   * selector semantics — 1h default lookback, inclusive bounds — carry
-  * over; the `offset <dur>` modifier (also absent from the reference) is
-  * handled here by shifting the evaluation window. [[SimplePromQL]]
-  * itself keeps the reference's strict rejection behavior; this
-  * evaluator is the opt-in extension.
+  * over; the `offset <dur>` and `@ <time>` modifiers (also absent from
+  * the reference) are handled here by shifting or pinning the evaluation
+  * window. [[SimplePromQL]] itself keeps the reference's strict rejection
+  * behavior; this evaluator is the opt-in extension.
   *
   * Documented deviations from upstream Prometheus (beyond the
   * inclusive-bounds convention noted on [[SubqueryOverTimeQ]]): the
@@ -460,184 +466,747 @@ object ExtendedPromQL {
     def endUs: Long = evalEndUs - innerShiftUs
   }
 
-  import SimplePromQL.PromQLError
+  import SimplePromQL.{ParsedQuery, PromQLError, msToUs, parseDurationMs}
 
-  import PromQLLexer.{Tok, lex}
+  import PromQLLexer.{Dur, Ident, Kind, Num, Op, Punct, Str, Tok, lex}
 
-  /** Trailing `@ <unix_seconds>` modifier: Some((inner, seconds)) when
-    * the query ENDS with `@ number` (whitespace around `@` optional —
-    * Prometheus tokenizes). Token-tail matching replaces the old greedy
-    * prefix regex: a quoted label value can never BE the final two
-    * tokens, so values containing `@` stay inert by construction.
+  /** The deepest nesting a query may have: each parenthesised group,
+    * function argument and operator operand is one level. The parser
+    * and the evaluator both recurse once per level on the caller's
+    * thread, and a gateway worker's default stack overflowed on 300
+    * nested parens or a 400-term `x + x + …` chain; real queries nest a
+    * handful of levels.
     */
-  private def trailingAt(s: String): Option[(String, String)] = {
-    val toks = lex(s)
-    if (toks.length < 2) None
-    else {
-      val at = toks(toks.length - 2)
-      val num = toks.last
-      if (at.kind == PromQLLexer.Op && at.text == "@" &&
-          num.kind == PromQLLexer.Num &&
-          num.text.matches("[0-9]+(\\.[0-9]+)?"))
-        Some((s.substring(0, at.start), num.text))
-      else None
-    }
+  private val MaxDepth = 64
+
+  def parse(query: String, nowUs: Long): Query =
+    Parser(query, nowUs, None).query()
+
+  /** Parse with PromQL's `@ start()` / `@ end()` anchors resolved
+    * against an explicit evaluation range (a range query's start/end
+    * parameters). Both anchors default to the instant evaluation time
+    * when the range bound is absent — Prometheus's instant-query
+    * semantics, where start() == end() == the query time. An anchor
+    * stands wherever a numeric `@ <seconds>` does.
+    */
+  def parse(query: String, nowUs: Long,
+      rangeStartUs: Option[Long], rangeEndUs: Option[Long]): Query =
+    Parser(query, nowUs, Some((
+      rangeStartUs.getOrElse(nowUs), rangeEndUs.getOrElse(nowUs)))).query()
+
+  /** A query's operator structure: operand token runs joined by binary
+    * operators, each node spanning the token range [lo, hi).
+    */
+  private sealed trait Node { def lo: Int; def hi: Int }
+  private final case class Leaf(lo: Int, hi: Int) extends Node
+  /** `l op r`, `op` the operator's token index, `tier` its precedence
+    * level (0 loosest).
+    */
+  private final case class Bin(tier: Int, op: Int, l: Node, r: Node)
+      extends Node {
+    val lo: Int = l.lo // fields, not defs: a chain's tree is deep
+    val hi: Int = r.hi
   }
 
-  /** Trailing `offset <dur>` modifier (whitespace-preceded, like the
-    * reference grammar): Some((inner, duration)).
-    */
-  private def trailingOffset(s: String): Option[(String, String)] = {
-    val toks = lex(s)
-    if (toks.length < 2) None
-    else {
-      val kw = toks(toks.length - 2)
-      val d = toks.last
-      val durShaped = (d.kind == PromQLLexer.Dur ||
-        d.kind == PromQLLexer.Num || d.kind == PromQLLexer.Ident) &&
-        d.text.matches("[0-9a-z]+")
-      if (kw.kind == PromQLLexer.Ident && kw.text == "offset" &&
-          kw.start > 0 && s.charAt(kw.start - 1).isWhitespace && durShaped)
-        Some((s.substring(0, kw.start), d.text))
-      else None
-    }
-  }
+  // operator tiers, loosest first; `^` is the one right-associative tier
+  private val OrTier = 0     // or
+  private val AndTier = 1    // and, unless
+  private val CmpTier = 2    // == != > >= < <=
+  private val AddTier = 3    // + -
+  private val MulTier = 4    // * / % atan2
+  private val PowTier = 5    // ^
+  private val Operand = -1   // part of an operand
+  private val BoolMod = 6    // `bool` right after a comparison
 
-  /** Selector parse with the PromQL `offset` and `@` modifiers (both
-    * absent from the reference's restricted endpoint): `sel [offset
-    * <dur>]` shifts the whole evaluation window back by the duration;
-    * `sel @ <unix_seconds>` pins the evaluation time absolutely (so a
-    * client can replay historical instants against the serving
-    * endpoint, whose default reference is wall-clock now). `@` binds
-    * the reference time first; an `offset` inside then shifts relative
-    * to it. The modifiers are recognized as the final TOKENS of the
-    * query ([[PromQLLexer]]), so keywords inside quoted label values
-    * never match by construction.
+  /** The extended front end: one recursive-descent pass over the
+    * query's tokens, every node a token range of them. A range first
+    * splits into its operator tree ([[tree]], precedence climbing: each
+    * left-associative tier is a loop), then each node turns into a
+    * [[Query]] top-down ([[lower]]), so a node's own checks run before
+    * its operands are read. Selector leaves go to [[SimplePromQL.parse]]
+    * with their source text, which keeps the reference's selector
+    * semantics and messages in one place.
+    *
+    * Depth, bracket matching and argument commas count from the start
+    * of the range at hand ([[PromQLLexer.depths]]), so a stray closer
+    * inside a group behaves as it does at the top of a query.
     */
-  private def parseSelector(s: String, nowUs: Long): SimplePromQL.ParsedQuery = {
-    val t = s.trim
-    trailingAt(t) match {
-      case Some((inner, ts)) =>
-        parseSelector(inner.trim, (ts.toDouble * 1e6).toLong)
-      case None => trailingOffset(t) match {
-        case Some((inner, dur)) =>
-          val shiftUs = SimplePromQL.msToUs(SimplePromQL.parseDurationMs(dur))
-          val sel = parseSelector(inner.trim, nowUs)
-          sel.copy(startUs = sel.startUs - shiftUs, endUs = sel.endUs - shiftUs)
-        case None => SimplePromQL.parse(t, nowUs)
-      }
-    }
-  }
+  private final class Parser(src: String, toks: Vector[Tok], nowUs: Long,
+      anchors: Option[(Long, Long)]) {
 
-  /** The binary-operator SPLIT POINT (+ - * / % ^, or the word operator
-    * `atan2`) at top level — outside quotes and all bracket kinds.
-    * Prometheus precedence and associativity decide which occurrence
-    * splits: the expression divides at the LAST operator of the lowest
-    * tier present (`+ -` below `* / % atan2` below `^`), so
-    * left-associative chains group left (`a - b - c` = `(a - b) - c`,
-    * `a * b + c` = `(a * b) + c`); `^` alone is right-associative and
-    * splits at its FIRST occurrence. A `+`/`-` whose previous
-    * non-space character is another operator or an opening paren (or
-    * the string start) is a scalar SIGN, not an operator, as is the
-    * exponent sign inside scientific notation. `atan2` only counts
-    * with non-name-char boundaries, so `atan2_total` or `x_atan2`
-    * never read as operators. Returns (index, operator length,
-    * operator tag — the symbol itself, or 'A' for atan2).
-    */
-  private def topLevelOp(s: String): Option[(Int, Int, Char)] = {
-    val toks = lex(s)
-    var addSub: Option[(Int, Int, Char)] = None // tier 0: + - (last)
-    var mulDiv: Option[(Int, Int, Char)] = None // tier 1: * / % atan2 (last)
-    var pow: Option[(Int, Int, Char)] = None    // tier 2: ^ (FIRST: right-assoc)
-    // a +/- is a scalar SIGN, not an operator, when nothing or another
-    // operator/open-paren/comma precedes it (`x * -3`, `f(, -2)`,
-    // `x atan2 -3`); exponent signs never reach here — the lexer folds
-    // `1e-3` into one number token
-    def signContext(prev: Option[Tok]): Boolean = prev match {
-      case None => true
-      case Some(p) =>
-        (p.kind == PromQLLexer.Op && "+-*/%^".contains(p.text)) ||
-        (p.kind == PromQLLexer.Punct && (p.text == "(" || p.text == ",")) ||
-        (p.kind == PromQLLexer.Ident && p.text == "atan2" && p.depth == 0)
+    def query(): Query = expr(0, toks.length, 0)
+
+    private def is(k: Int, kind: Kind, text: String): Boolean =
+      k >= 0 && k < toks.length && toks(k).kind == kind && toks(k).text == text
+
+    /** The source text of tokens [lo, hi). */
+    private def text(lo: Int, hi: Int): String =
+      if (lo >= hi) "" else src.substring(toks(lo).start, toks(hi - 1).end)
+    private def text(r: (Int, Int)): String = text(r._1, r._2)
+
+    private def depths(lo: Int, hi: Int): Array[Int] =
+      PromQLLexer.depths(toks, lo, hi)
+
+    /** The `)` that brings the depth counted from `open` back to 0, or
+      * -1 when there is none.
+      */
+    private def closeOf(open: Int, hi: Int): Int = {
+      val ds = depths(open, hi)
+      (open until hi).find(k => ds(k - open) == 0 && is(k, Punct, ")"))
+        .getOrElse(-1)
     }
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.depth == 0) {
-        val prev = if (i > 0) Some(toks(i - 1)) else None
-        t.kind match {
-          case PromQLLexer.Ident if t.text == "atan2" && i > 0 =>
-            mulDiv = Some((t.start, 5, 'A'))
-          case PromQLLexer.Op => t.text match {
-            case "+" | "-" if signContext(prev) => ()
-            case "+" | "-" => addSub = Some((t.start, 1, t.text.head))
-            case "*" | "/" | "%" => mulDiv = Some((t.start, 1, t.text.head))
-            case "^" => if (pow.isEmpty) pow = Some((t.start, 1, '^'))
-            case _ => ()
-          }
-          case _ => ()
+
+    /** The operator tier of each token of [lo, hi) (or [[Operand]]).
+      * A word operator, and a `+`/`-` that would otherwise be binary,
+      * is an operand at the start of its tier's segment: the range start,
+      * or right after a looser operator. A `+`/`-` after an arithmetic
+      * operator, `(`, `,` or `atan2` is a sign. With `arithOnly` the
+      * set and comparison operators count as operand tokens.
+      */
+    private def tiers(lo: Int, hi: Int, arithOnly: Boolean): Array[Int] = {
+      val ds = depths(lo, hi)
+      val out = Array.fill(hi - lo)(Operand)
+      for (k <- lo until hi if ds(k - lo) == 0) {
+        val t = toks(k)
+        val prev = if (k > lo) out(k - lo - 1) else Operand
+        def startsSegment(tier: Int): Boolean =
+          k == lo || (prev != Operand &&
+            (if (prev == BoolMod) CmpTier else prev) < tier)
+        def sign: Boolean = startsSegment(AddTier) || {
+          val p = toks(k - 1)
+          (p.kind == Op && p.text.length == 1 && "+-*/%^".contains(p.text)) ||
+          (p.kind == Punct && (p.text == "(" || p.text == ",")) ||
+          (p.kind == Ident && p.text == "atan2" && ds(k - 1 - lo) == 0)
+        }
+        out(k - lo) = (t.kind, t.text) match {
+          case (Ident, "or") if !arithOnly && k > lo => OrTier
+          case (Ident, "and" | "unless") if !arithOnly && startsSegment(AndTier) => Operand
+          case (Ident, "and" | "unless") if !arithOnly => AndTier
+          case (Ident, "bool") if prev == CmpTier => BoolMod
+          case (Op, "==" | "!=" | ">" | ">=" | "<" | "<=") if !arithOnly => CmpTier
+          case (Op, "+" | "-") => if (sign) Operand else AddTier
+          case (Op, "*" | "/" | "%") => MulTier
+          case (Ident, "atan2") => if (startsSegment(MulTier)) Operand else MulTier
+          case (Op, "^") => PowTier
+          case _ => Operand
         }
       }
-      i += 1
+      out
     }
-    addSub.orElse(mulDiv).orElse(pow)
+
+    /** The operator tree of [lo, hi): operands are the maximal runs of
+      * operand tokens, possibly empty (`x or` has an empty right one).
+      */
+    private def tree(lo: Int, hi: Int): Node = {
+      val tier = tiers(lo, hi, arithOnly = false)
+      var pos = lo
+      def at(k: Int): Int = if (k < hi) tier(k - lo) else Operand
+      def operand(): Node = {
+        val st = pos
+        while (pos < hi && at(pos) == Operand) pos += 1
+        Leaf(st, pos)
+      }
+      def climb(t: Int): Node =
+        if (t == PowTier) {
+          val parts = scala.collection.mutable.ArrayBuffer(operand())
+          val ops = scala.collection.mutable.ArrayBuffer.empty[Int]
+          while (at(pos) == PowTier) { ops += pos; pos += 1; parts += operand() }
+          ops.indices.foldRight(parts.last)((i, r) => Bin(t, ops(i), parts(i), r))
+        } else {
+          var left = climb(t + 1)
+          while (at(pos) == t) {
+            val op = pos
+            pos += 1
+            if (at(pos) == BoolMod) pos += 1
+            left = Bin(t, op, left, climb(t + 1))
+          }
+          left
+        }
+      climb(OrTier)
+    }
+
+    private def expr(lo: Int, hi: Int, depth: Int): Query =
+      lower(tree(lo, hi), depth)
+
+    private def lower(n: Node, depth: Int): Query = {
+      if (depth > MaxDepth)
+        throw PromQLError(s"Query nests deeper than $MaxDepth levels")
+      // a paren group spanning the whole node unwraps
+      if (n.lo < n.hi && is(n.lo, Punct, "(")) {
+        val close = closeOf(n.lo, n.hi)
+        if (close < 0)
+          throw PromQLError("Failed to parse PromQL query: unbalanced parentheses")
+        if (close == n.hi - 1) return expr(n.lo + 1, close, depth + 1)
+      }
+      n match {
+        case b: Bin => binary(b, depth)
+        case Leaf(lo, hi) => primary(lo, hi, depth)
+      }
+    }
+
+    /** The name of the zero-argument call `name()` filling [lo, hi),
+      * written without spaces.
+      */
+    private def call0(lo: Int, hi: Int): Option[String] =
+      if (hi - lo == 3 && toks(lo).kind == Ident && is(lo + 1, Punct, "(") &&
+          is(lo + 2, Punct, ")") && toks(lo + 1).start == toks(lo).end &&
+          toks(lo + 2).start == toks(lo + 1).end) Some(toks(lo).text)
+      else None
+
+    /** `time()` (the evaluation time in epoch seconds, Prometheus's
+      * funcTime) and `pi()`.
+      */
+    private def constant(name: String): Option[Double] = name match {
+      case "time" => Some(nowUs / 1e6)
+      case "pi" => Some(math.Pi)
+      case _ => None
+    }
+
+    /** A number: a float literal in Java's syntax, or `time()` / `pi()`
+      * with an optional sign right before it.
+      */
+    private def scalarOf(lo: Int, hi: Int): Option[Double] = {
+      val signed = hi - lo == 4 && toks(lo).kind == Op &&
+        (toks(lo).text == "-" || toks(lo).text == "+") &&
+        toks(lo).end == toks(lo + 1).start
+      call0(if (signed) lo + 1 else lo, hi).flatMap(constant) match {
+        case Some(v) => Some(if (signed && toks(lo).text == "-") -v else v)
+        case None => parseScalar(text(lo, hi))
+      }
+    }
+    private def scalarOf(r: (Int, Int)): Option[Double] = scalarOf(r._1, r._2)
+    private def scalarOf(n: Node): Option[Double] = scalarOf(n.lo, n.hi)
+
+    private def binary(b: Bin, depth: Int): Query = {
+      val op = toks(b.op).text
+      def sub(n: Node): Query = lower(n, depth + 1)
+      val missing = b.l.lo == b.l.hi || b.r.lo == b.r.hi
+      def scalarScalar = PromQLError("Scalar-scalar expressions are not supported")
+      if (b.tier <= AndTier) {
+        if (missing)
+          throw PromQLError(s"Set operator '$op' is missing an operand")
+        BinSetQ(op, requireVectorOperand(sub(b.l), "left"),
+          requireVectorOperand(sub(b.r), "right"))
+      } else if (b.tier == CmpTier) {
+        if (missing)
+          throw PromQLError(s"Comparison '$op' is missing an operand")
+        val bool = b.r.lo > b.op + 1 // `bool` sits between op and operand
+        (scalarOf(b.l), scalarOf(b.r)) match {
+          case (Some(_), Some(_)) => throw scalarScalar
+          case (Some(v), None) =>
+            BinCmpQ(op, v, scalarOnLeft = true, bool,
+              requireVectorOperand(sub(b.r), "right"))
+          case (None, Some(v)) =>
+            BinCmpQ(op, v, scalarOnLeft = false, bool,
+              requireVectorOperand(sub(b.l), "left"))
+          case (None, None) =>
+            throw PromQLError(
+              "vector-vector comparisons are not supported — compare " +
+                "against a scalar")
+        }
+      } else {
+        val c = if (op == "atan2") 'A' else op.head
+        def noOperand = PromQLError(s"Binary operator '$c' is missing an operand")
+        if (missing) throw noOperand
+        (scalarOf(b.l), scalarOf(b.r)) match {
+          case (Some(_), Some(_)) => throw scalarScalar
+          case (Some(v), None) =>
+            BinScalarQ(c, v, scalarOnLeft = true,
+              requireVectorOperand(sub(b.r), "right"))
+          case (None, Some(v)) =>
+            BinScalarQ(c, v, scalarOnLeft = false,
+              requireVectorOperand(sub(b.l), "left"))
+          case (None, None) =>
+            // optional matching modifiers before the right operand:
+            // on(l1,...) or ignoring(l1,...), then group_left/group_right
+            // (many-to-one matching), bare or with labels to copy from
+            // the "one" side
+            val hi = b.r.hi
+            def word(k: Int, w: String): Boolean = k < hi && is(k, Ident, w)
+            // `(l1, ...)` at k, closed by the first `)`: the labels and
+            // the index after the list
+            def labels(k: Int): Option[(Seq[String], Int)] =
+              if (k < hi && is(k, Punct, "("))
+                (k + 1 until hi).find(is(_, Punct, ")"))
+                  .map(c => (labelList(k + 1, c), c + 1))
+              else None
+            var k = b.r.lo
+            val matching =
+              if (word(k, "on") || word(k, "ignoring")) labels(k + 1) else None
+            val ignoring = matching.nonEmpty && word(k, "ignoring")
+            val matchOn = matching.fold(Seq.empty[String])(_._1)
+            matching.foreach(m => k = m._2)
+            var grouping = Option.empty[String]
+            var groupCopy = Seq.empty[String]
+            if (word(k, "group_left") || word(k, "group_right")) {
+              grouping = Some(toks(k).text.stripPrefix("group_"))
+              labels(k + 1) match {
+                case Some((ls, next)) => groupCopy = ls; k = next
+                case None if k + 1 < hi && toks(k + 1).start > toks(k).end =>
+                  k += 1
+                case None => grouping = None
+              }
+            }
+            if (k >= hi) throw noOperand
+            val lq = sub(b.l)
+            val rq = if (k == b.r.lo) sub(b.r) else expr(k, hi, depth + 1)
+            val plainMatch = matchOn.isEmpty && !ignoring && grouping.isEmpty
+            (lq, rq) match {
+              // a scalar() operand turns the vector op into dynamic-
+              // scalar arithmetic (matching modifiers don't apply to a
+              // scalar side, so they force the vector-vector path and
+              // its operand validation)
+              case (sq: ScalarQ, _) if plainMatch =>
+                BinDynScalarQ(c, sq, scalarOnLeft = true,
+                  requireVectorOperand(rq, "right"))
+              case (_, sq: ScalarQ) if plainMatch =>
+                BinDynScalarQ(c, sq, scalarOnLeft = false,
+                  requireVectorOperand(lq, "left"))
+              case _ =>
+                BinVectorQ(c,
+                  requireVectorOperand(lq, "left"),
+                  requireVectorOperand(rq, "right"),
+                  matchOn, ignoring, grouping, groupCopy)
+            }
+        }
+      }
+    }
+
+    /** Comma-separated label names, empty entries dropped. */
+    private def labelList(lo: Int, hi: Int): Seq[String] =
+      text(lo, hi).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+    /** The arguments of [lo, hi): the ranges between its top-level
+      * commas.
+      */
+    private def args(r: (Int, Int)): Seq[(Int, Int)] = {
+      val (lo, hi) = r
+      val ds = depths(lo, hi)
+      val commas = (lo until hi).filter(k => ds(k - lo) == 0 && is(k, Punct, ","))
+      (lo +: commas.map(_ + 1)).zip(commas :+ hi)
+    }
+
+    /** The first comma of [lo, hi) at any depth, or -1: the `k, vec`
+      * and `φ, vec` argument lists split there.
+      */
+    private def firstComma(lo: Int, hi: Int): Int =
+      (lo until hi).find(is(_, Punct, ",")).getOrElse(-1)
+
+    private def trailing(from: Int, hi: Int): PromQLError =
+      PromQLError("Unexpected trailing content in query: '" +
+        src.substring(from, toks(hi - 1).end) + "'")
+
+    /** The `(` … `)` group at `open`: its closing index. */
+    private def group(open: Int, hi: Int): Int = {
+      if (!(open < hi && is(open, Punct, "(")))
+        throw PromQLError(s"Failed to parse PromQL query at: '${text(open, hi)}'")
+      val close = closeOf(open, hi)
+      if (close < 0)
+        throw PromQLError("Failed to parse PromQL query: unbalanced parentheses")
+      close
+    }
+
+    /** `head(args)` filling [lo, hi): the argument range. */
+    private def call(lo: Int, hi: Int): (Int, Int) = {
+      val close = group(lo + 1, hi)
+      if (close + 1 < hi) throw trailing(toks(close).end, hi)
+      (lo + 2, close)
+    }
+
+    /** An aggregation `head [by|without (labels)] (args)
+      * [by|without (labels)]`: (labels, without, argument range). The
+      * clause goes before or after the arguments, not both.
+      */
+    private def aggregation(lo: Int, hi: Int): (Seq[String], Boolean, (Int, Int)) = {
+      def clause(k: Int): Option[(Seq[String], Boolean, Int)] =
+        if (k < hi && toks(k).kind == Ident &&
+            (toks(k).text.startsWith("by") || toks(k).text.startsWith("without"))) {
+          val kw = if (toks(k).text.startsWith("without")) "without" else "by"
+          if (toks(k).text != kw)
+            throw PromQLError("Failed to parse PromQL query at: '" +
+              src.substring(toks(k).start + kw.length, toks(hi - 1).end).trim + "'")
+          val close = group(k + 1, hi)
+          Some((labelList(k + 2, close), kw == "without", close + 1))
+        } else None
+      val before = clause(lo + 1)
+      val open = before.fold(lo + 1)(_._3)
+      val close = group(open, hi)
+      val after = if (before.isEmpty) clause(close + 1) else None
+      val end = after.fold(close + 1)(_._3)
+      if (end < hi) throw trailing(toks(end).start, hi)
+      val (labels, without) =
+        before.orElse(after).fold((Seq.empty[String], false))(c => (c._1, c._2))
+      (labels, without, (open + 1, close))
+    }
+
+    /** `φ, rest`: φ in [0, 1] and the range after the comma. */
+    private def phiArg(r: (Int, Int), usage: String): (Double, (Int, Int)) = {
+      val comma = firstComma(r._1, r._2)
+      if (comma < 0) throw PromQLError(usage)
+      val t = text(r._1, comma)
+      val phi = scalarOf(r._1, comma).getOrElse(
+        throw PromQLError(s"Bad quantile value '$t'"))
+      if (phi < 0.0 || phi > 1.0)
+        throw PromQLError(s"Quantile $phi out of [0, 1]")
+      (phi, (comma + 1, r._2))
+    }
+
+    private def kArg(t: String): Int =
+      try t.toInt
+      catch { case _: NumberFormatException =>
+        throw PromQLError(s"Bad k value '$t'")
+      }
+
+    /** A label name written `"name"`. */
+    private def quoted(t: String): Option[String] =
+      if (t.length >= 2 && t.head == '"' && t.last == '"' &&
+          !t.substring(1, t.length - 1).contains('"'))
+        Some(t.substring(1, t.length - 1))
+      else None
+
+    /** A range selector argument of `fn`. */
+    private def rangeSelector(fn: String, r: (Int, Int)): ParsedQuery = {
+      if (!text(r).contains("["))
+        throw PromQLError(s"$fn expects a range selector (like metric[5m])")
+      selector(r)
+    }
+
+    /** An instant selector argument of `fn`. */
+    private def instantSelector(what: String, r: (Int, Int)): ParsedQuery = {
+      if (text(r).contains("[")) throw PromQLError(what)
+      selector(r)
+    }
+
+    /** The body of `<op>_over_time(…)`: a subquery `<expr>[range:step]`
+      * (its last five tokens), else a range selector.
+      */
+    private def overTime(fn: String, op: String, phi: Option[Double],
+        r: (Int, Int), depth: Int)(plain: ParsedQuery => Query): Query = {
+      val (lo, hi) = r
+      def dur(k: Int): Boolean =
+        (toks(k).kind == Dur || toks(k).kind == Num) &&
+          toks(k).text.matches("[0-9a-z]+")
+      if (hi - lo < 5 || !is(hi - 5, Punct, "[") || !is(hi - 3, Punct, ":") ||
+          !is(hi - 1, Punct, "]") || !dur(hi - 4) || !dur(hi - 2))
+        return plain(rangeSelector(fn, r))
+      val (rangeD, stepD) = (toks(hi - 4).text, toks(hi - 2).text)
+      val rangeUs = msToUs(parseDurationMs(rangeD))
+      val stepUs = msToUs(parseDurationMs(stepD))
+      if (rangeUs <= 0 || stepUs <= 0)
+        throw PromQLError("Subquery range and step must be positive")
+      if (rangeUs / stepUs > 100000L)
+        throw PromQLError(
+          s"Subquery [$rangeD:$stepD] resolves to more than 100000 steps")
+      val inner = expr(lo, hi - 5, depth + 1)
+      if (!validSubqueryInner(inner))
+        throw PromQLError(
+          "Subquery inner expression must be a selector or a per-series " +
+            "function (cross-series aggregations are not subquery operands)")
+      SubqueryOverTimeQ(op, phi, inner, rangeUs, stepUs, nowUs,
+        innerShiftUs = nowUs - inner.endUs,
+        innerSpanUs = inner.endUs - inner.startUs)
+    }
+
+    /** An aggregation's vector argument: a plain selector, else any
+      * vector expression. When both fail on a selector-shaped argument
+      * (no call head, no leading paren, no arithmetic operator), the
+      * selector's message names the actual syntax error.
+      */
+    private def aggregated(fn: String, r: (Int, Int), depth: Int)
+        : Either[ParsedQuery, Query] = {
+      val (lo, hi) = r
+      (try Right(selector(r)) catch { case e: PromQLError => Left(e) }) match {
+        case Right(sel) if sel.hadRange =>
+          throw PromQLError(s"$fn aggregates an instant vector; use " +
+            s"${fn}_over_time for range windows")
+        case Right(sel) => Left(sel)
+        case Left(selErr) =>
+          try Right(requireVectorOperand(expr(lo, hi, depth + 1), "aggregated"))
+          catch {
+            case _: PromQLError if selectorShaped(lo, hi) => throw selErr
+          }
+      }
+    }
+
+    /** No call head, no leading paren and no arithmetic operator: text
+      * that can only have been meant as a selector.
+      */
+    private def selectorShaped(lo: Int, hi: Int): Boolean =
+      !(lo + 1 < hi && toks(lo).kind == Ident && is(lo + 1, Punct, "(")) &&
+        !(lo < hi && is(lo, Punct, "(")) &&
+        !tiers(lo, hi, arithOnly = true).exists(_ != Operand)
+
+    /** An operand with no operator at its top level: a function call or
+      * a selector.
+      */
+    private def primary(lo: Int, hi: Int, depth: Int): Query = {
+      val head = if (lo < hi && toks(lo).kind == Ident) toks(lo).text else ""
+      val called = lo + 1 < hi && is(lo + 1, Punct, "(")
+      def sub(r: (Int, Int)): Query = expr(r._1, r._2, depth + 1)
+      head match {
+        case h if UnsupportedFns.contains(h) && called =>
+          throw PromQLError(s"$head is not supported: ${UnsupportedFns(head)}")
+        case "label_replace" | "label_join" =>
+          val as = args(call(lo, hi))
+          def str(r: (Int, Int), what: String): String = {
+            val t = text(r)
+            if (t.length < 2 || t.head != '"' || t.last != '"')
+              throw PromQLError(s"$head expects a quoted string for $what")
+            t.substring(1, t.length - 1)
+          }
+          val vec = requireVectorOperand(sub(as.head), "vector")
+          if (head == "label_replace") {
+            if (as.length != 5)
+              throw PromQLError(
+                "label_replace expects (vec, dst, replacement, src, regex)")
+            LabelReplaceQ(str(as(1), "dst"), str(as(2), "replacement"),
+              str(as(3), "src"), str(as(4), "regex"), vec)
+          } else {
+            if (as.length < 3)
+              throw PromQLError("label_join expects (vec, dst, sep, src...)")
+            LabelJoinQ(str(as(1), "dst"), str(as(2), "sep"),
+              as.drop(3).map(str(_, "src label")), vec)
+          }
+        case "count_values" =>
+          val (a, b) = call(lo, hi)
+          val label = (if (b - a >= 2 && toks(a).kind == Str && is(a + 1, Punct, ","))
+            quoted(toks(a).text) else None).getOrElse(
+              throw PromQLError("count_values expects (\"label\", selector)"))
+          val sel = instantSelector(
+            "count_values aggregates an instant vector", (a + 2, b))
+          CountValuesQ(label, sel.matchers, sel.startUs, sel.endUs)
+        case "vector" if called =>
+          val r = call(lo, hi)
+          VectorLitQ(scalarOf(r).getOrElse(throw PromQLError(
+            s"vector() expects a scalar literal, got '${text(r)}'")))
+        case "scalar" if called =>
+          sub(call(lo, hi)) match {
+            case _: ScalarQ => throw PromQLError(
+              "scalar() expects an instant vector, not another scalar()")
+            case q => ScalarQ(q)
+          }
+        case "absent" =>
+          val sel = selector(call(lo, hi))
+          AbsentQ(sel.matchers, sel.startUs, sel.endUs)
+        case "histogram_quantile" =>
+          val (phi, r) = phiArg(call(lo, hi), "histogram_quantile expects (φ, selector)")
+          val sel = instantSelector(
+            "histogram_quantile aggregates an instant vector of buckets", r)
+          HistogramQuantileQ(phi, sel.matchers, sel.startUs, sel.endUs)
+        case "topk" | "bottomk" =>
+          val (by, without, (a, b)) = aggregation(lo, hi)
+          val comma = firstComma(a, b)
+          if (comma < 0) throw PromQLError(s"$head expects (k, selector)")
+          val k = kArg(text(a, comma))
+          if (k < 1) throw PromQLError(s"$head needs k >= 1, got $k")
+          val sel = instantSelector(
+            s"$head ranks an instant vector, not a range selector", (comma + 1, b))
+          TopKQ(head, k, by, without, sel.matchers, sel.startUs, sel.endUs)
+        case "limitk" | "limit_ratio" =>
+          val (a, b) = call(lo, hi)
+          val comma = firstComma(a, b)
+          if (comma < 0)
+            throw PromQLError(s"$head expects (${
+              if (head == "limitk") "k" else "ratio"}, selector)")
+          val arg = text(a, comma)
+          val sel = instantSelector(
+            s"$head samples an instant vector, not a range selector", (comma + 1, b))
+          if (head == "limitk") {
+            val k = kArg(arg)
+            if (k < 1) throw PromQLError(s"limitk needs k >= 1, got $k")
+            LimitKQ(k, sel.matchers, sel.startUs, sel.endUs)
+          } else {
+            val r = scalarOf(a, comma).getOrElse(
+              throw PromQLError(s"Bad ratio value '$arg'"))
+            if (r < -1.0 || r > 1.0)
+              throw PromQLError(s"limit_ratio $r out of [-1, 1]")
+            LimitRatioQ(r, sel.matchers, sel.startUs, sel.endUs)
+          }
+        case "quantile_over_time" =>
+          val (phi, r) = phiArg(call(lo, hi), "quantile_over_time expects (φ, metric[range])")
+          overTime(head, "quantile", Some(phi), r, depth)(sel =>
+            QuantileOverTimeQ(phi, sel.matchers, sel.startUs, sel.endUs))
+        case "mad_over_time" =>
+          overTime(head, "mad", None, call(lo, hi), depth)(sel =>
+            MadOverTimeQ(sel.matchers, sel.startUs, sel.endUs))
+        case "predict_linear" =>
+          val as = args(call(lo, hi))
+          if (as.length != 2)
+            throw PromQLError("predict_linear expects (metric[range], t_seconds)")
+          val horizon = scalarOf(as(1)).getOrElse(throw PromQLError(
+            s"predict_linear expects a scalar horizon, got '${text(as(1))}'"))
+          val sel = rangeSelector(head, as.head)
+          PredictLinearQ(horizon, sel.matchers, sel.startUs, sel.endUs)
+        case "holt_winters" | "double_exponential_smoothing" =>
+          // Prometheus 3 renamed holt_winters (it is double exponential
+          // smoothing, not the seasonal Holt-Winters); accept both
+          val as = args(call(lo, hi))
+          if (as.length != 3)
+            throw PromQLError("holt_winters expects (metric[range], sf, tf)")
+          def factor(r: (Int, Int), what: String): Double = {
+            val a = text(r)
+            val v = scalarOf(r).getOrElse(throw PromQLError(
+              s"holt_winters expects a scalar $what, got '$a'"))
+            if (!(v > 0.0 && v < 1.0))
+              throw PromQLError(s"holt_winters $what must be in (0, 1), got '$a'")
+            v
+          }
+          val sfp = factor(as(1), "smoothing factor")
+          val tfp = factor(as(2), "trend factor")
+          val sel = selector(as.head)
+          if (!sel.hadRange)
+            throw PromQLError(
+              "holt_winters expects a range selector (like metric[5m])")
+          HoltWintersQ(sfp, tfp, sel.matchers, sel.startUs, sel.endUs)
+        case "timestamp" if called =>
+          val sel = selector(call(lo, hi))
+          if (sel.hadRange) throw PromQLError("timestamp expects an instant vector")
+          TimestampQ(sel.matchers, sel.startUs, sel.endUs)
+        case "sort_by_label" | "sort_by_label_desc" if called =>
+          val as = args(call(lo, hi))
+          if (as.length < 2)
+            throw PromQLError(s"$head expects (vec, \"label\", ...)")
+          val labels = as.tail.map(r => quoted(text(r)).getOrElse(throw PromQLError(
+            s"$head expects quoted label names, got '${text(r)}'")))
+          SortByLabelQ(head.endsWith("_desc"), labels,
+            requireVectorOperand(sub(as.head), "sorted"))
+        case "sort" | "sort_desc" if called =>
+          SortQ(head == "sort_desc",
+            requireVectorOperand(sub(call(lo, hi)), "sorted"))
+        case "absent_over_time" =>
+          // absent(sel) over a range window — AbsentQ's machinery with
+          // the window taken from the range selector
+          val sel = rangeSelector(head, call(lo, hi))
+          AbsentQ(sel.matchers, sel.startUs, sel.endUs)
+        case h if h.endsWith("_over_time") =>
+          val op = h.stripSuffix("_over_time")
+          if (!OverTimeOps.contains(op))
+            throw PromQLError(s"Unsupported function: $head")
+          overTime(head, op, None, call(lo, hi), depth)(sel =>
+            OverTimeQ(op, sel.matchers, sel.startUs, sel.endUs))
+        case h if RangeFnOps.contains(h) && called =>
+          val sel = rangeSelector(head, call(lo, hi))
+          RangeFnQ(head, sel.matchers, sel.startUs, sel.endUs)
+        case h if MathFnArity.contains(h) && called =>
+          val as = args(call(lo, hi))
+          val arity = MathFnArity(head)
+          val scalars = as.tail.map(r => scalarOf(r).getOrElse(
+            throw PromQLError(s"$head expects scalar arguments, got '${text(r)}'")))
+          if (!arity.contains(scalars.length))
+            throw PromQLError(s"$head expects ${arity.min}" +
+              (if (arity.min == arity.max) "" else s"..${arity.max}") +
+              s" scalar argument(s) after the vector, got ${scalars.length}")
+          if (head == "round" && scalars.headOption.exists(_ <= 0.0))
+            throw PromQLError("round step must be positive")
+          MathFnQ(head, scalars,
+            requireVectorOperand(sub(as.head), "vector"))
+        case "quantile" =>
+          val (by, without, r) = aggregation(lo, hi)
+          val (phi, vec) = phiArg(r, "quantile expects (φ, vector)")
+          QuantileAggQ(phi, by, without, aggregated(head, vec, depth).fold(
+            sel => SelectorQ(sel.matchers, sel.startUs, sel.endUs), identity))
+        case h if InstantAggOps.contains(h) =>
+          // plain selector -> the classic InstantAggQ; anything else
+          // (rate(x[5m]), abs(m), m * 2, nested math) -> aggregation
+          // over the per-series vector it evaluates to
+          val (by, without, r) = aggregation(lo, hi)
+          aggregated(head, r, depth).fold(
+            sel => InstantAggQ(head, by, without, sel.matchers, sel.startUs, sel.endUs),
+            q => InstantAggVecQ(head, by, without, q))
+        case _ =>
+          val sel = selector((lo, hi))
+          SelectorQ(sel.matchers, sel.startUs, sel.endUs)
+      }
+    }
+
+    /** A trailing `@ <unix_seconds>` (or `@ time()`, or given a range
+      * `@ start()` / `@ end()`) ending at `hi`: the pinned time and the
+      * index of `@`.
+      */
+    private def pin(lo: Int, hi: Int): Option[(Long, Int)] =
+      if (hi - lo >= 2 && is(hi - 2, Op, "@") && toks(hi - 1).kind == Num &&
+          toks(hi - 1).text.matches("[0-9]+(\\.[0-9]+)?")) {
+        val secs = toks(hi - 1).text
+        val us = secs.toDouble * 1e6
+        if (us >= Long.MaxValue.toDouble)
+          throw PromQLError(s"timestamp out of bounds for @ modifier: $secs")
+        Some((us.toLong, hi - 2))
+      } else if (hi - lo >= 4 && is(hi - 4, Op, "@")) {
+        call0(hi - 3, hi).flatMap {
+          case "start" | "end" if anchors.nonEmpty =>
+            val (startUs, endUs) = anchors.get
+            val us = if (toks(hi - 3).text == "start") startUs else endUs
+            require(us >= 0, s"@ anchor must be a non-negative time, got $us")
+            Some(us)
+          case name => constant(name).map(v => (v * 1e6).toLong)
+        }.map((_, hi - 4))
+      } else None
+
+    /** A selector with its trailing `@` and `offset <dur>` modifiers
+      * (both absent from the reference's restricted endpoint), read from
+      * the end: `@` pins the evaluation time absolutely (so a client can
+      * replay historical instants against the serving endpoint), each
+      * `offset` shifts the window back by its duration. Each modifier
+      * applies to the selector on its left, so the leftmost `@` is the
+      * one in force.
+      */
+    private def selector(r: (Int, Int)): ParsedQuery = {
+      val (lo, hi) = r
+      var end = hi
+      var evalUs = nowUs
+      var shiftUs = 0L
+      var more = true
+      while (more) pin(lo, end) match {
+        case Some((us, at)) => evalUs = us; end = at
+        case None =>
+          val kw = end - 2
+          more = kw > lo && is(kw, Ident, "offset") &&
+            toks(kw - 1).end < toks(kw).start &&
+            Set[Kind](Dur, Num, Ident).contains(toks(kw + 1).kind) &&
+            toks(kw + 1).text.matches("[0-9a-z]+")
+          if (more) {
+            shiftUs += msToUs(parseDurationMs(toks(kw + 1).text))
+            end = kw
+          }
+      }
+      if (call0(lo, end).flatMap(constant).nonEmpty)
+        throw SimplePromQL.rejection("literal")
+      val sel = SimplePromQL.parse(text(lo, end), evalUs)
+      sel.copy(startUs = sel.startUs - shiftUs, endUs = sel.endUs - shiftUs)
+    }
+
+    /** A `query_range` expression: `(query, Some(pinnedUs))` when a
+      * trailing `@` pins the whole expression, None when it carries no
+      * `@` at all.
+      */
+    def rangeQuery(): (Query, Option[Long]) = {
+      val ats = toks.count(t => t.kind == Op && t.text == "@")
+      if (ats == 0) (query(), None)
+      else pin(0, toks.length) match {
+        // `@ time()` pins a selector, not a range query's grid
+        case Some((pinUs, at)) if ats == 1 &&
+            !call0(at + 1, toks.length).exists(constant(_).nonEmpty) =>
+          (new Parser(src, toks, pinUs, anchors).expr(0, at, 0), Some(pinUs))
+        case _ =>
+          throw PromQLError(
+            "@ modifiers on sub-expressions are not supported in " +
+              "query_range; pin the whole expression with a trailing @ " +
+              "(e.g. `sum(metric) @ end()`)")
+      }
+    }
+  }
+
+  private object Parser {
+    /** A parser of the query with its surrounding whitespace trimmed. */
+    def apply(query: String, nowUs: Long,
+        anchors: Option[(Long, Long)]): Parser = {
+      val src = query.trim
+      new Parser(src, lex(src), nowUs, anchors)
+    }
   }
 
   private def parseScalar(s: String): Option[Double] =
     try Some(s.trim.toDouble) catch { case _: NumberFormatException => None }
-
-  // metric-name chars (letters, digits, '_', ':') bound operator words —
-  // `foo_and_bar` or `band` must not read as operators
-  private def isNameChar(c: Char): Boolean =
-    c.isLetterOrDigit || c == '_' || c == ':'
-
-  /** LAST top-level comparison operator (> >= < <= == !=) outside
-    * quotes/brackets — comparisons are left-associative in Prometheus,
-    * so a chain like `a > 1 < 2` splits at the final operator and the
-    * left side recurses (`(a > 1) < 2`). Returns (index, operator).
-    */
-  private def topLevelCmpOp(s: String): Option[(Int, String)] = {
-    val cmps = Set(">", ">=", "<", "<=", "==", "!=")
-    lex(s).filter(t => t.depth == 0 && t.kind == PromQLLexer.Op &&
-        cmps.contains(t.text))
-      .lastOption.map(t => (t.start, t.text))
-  }
-
-  /** The set-operator SPLIT POINT (`and` / `or` / `unless` as whole
-    * words outside quotes/brackets). Prometheus precedence: `or` binds
-    * loosest, `and`/`unless` one tier tighter, all left-associative —
-    * so the expression divides at the LAST `or` when one exists
-    * (`a and b or c` = `(a and b) or c`), otherwise at the LAST
-    * `and`/`unless` (`a unless b unless c` = `(a unless b) unless c`;
-    * a first-occurrence split would evaluate the right-associative
-    * grouping, a semantically different set). Returns (opIndex, opLength).
-    */
-  private def topLevelSetOp(s: String): Option[(Int, Int)] = {
-    var lastOr: Option[(Int, Int)] = None
-    var lastAndUnless: Option[(Int, Int)] = None
-    lex(s).foreach { t =>
-      if (t.depth == 0 && t.kind == PromQLLexer.Ident && t.start > 0)
-        t.text match {
-          case "or" => lastOr = Some((t.start, 2))
-          case "and" => lastAndUnless = Some((t.start, 3))
-          case "unless" => lastAndUnless = Some((t.start, 6))
-          case _ => ()
-        }
-    }
-    lastOr.orElse(lastAndUnless)
-  }
-
-  /** A query string that can only have been MEANT as a plain selector:
-    * no function-call head (`name(`) and no top-level binary operator,
-    * so the full-parse fallback has nothing to recurse into and its
-    * failure message would be less specific than the selector parser's.
-    */
-  private def selectorShaped(s: String): Boolean = {
-    val t = s.trim
-    val isCall = """^[a-zA-Z_:][a-zA-Z0-9_:]*\s*\(""".r
-      .findPrefixMatchOf(t).isDefined
-    !isCall && !t.startsWith("(") && topLevelOp(t).isEmpty
-  }
 
   /** Every query shape evaluates to an instant vector except `scalar()`
     * — Prometheus composes aggregations, ranked vectors, and binary
@@ -651,27 +1220,6 @@ object ExtendedPromQL {
       s"$side operand must be an instant vector — scalar() produces a " +
         "scalar (use it directly as the scalar side of an arithmetic op)")
     case _ => q
-  }
-
-  /** `[range:step]` at the tail of an expression — the subquery form,
-    * recognized as the final five TOKENS, so an inner selector range
-    * (`rate(x[5m])[1h:5m]`) naturally splits at the LAST bracket group.
-    */
-  private def trailingSubquery(s: String): Option[(String, String, String)] = {
-    val toks = lex(s)
-    if (toks.length < 5) None
-    else {
-      val Seq(lb, r, colon, st, rb) = toks.takeRight(5)
-      def durTok(t: Tok): Boolean =
-        (t.kind == PromQLLexer.Dur || t.kind == PromQLLexer.Num) &&
-          t.text.matches("[0-9a-z]+")
-      if (lb.kind == PromQLLexer.Punct && lb.text == "[" &&
-          colon.kind == PromQLLexer.Punct && colon.text == ":" &&
-          rb.kind == PromQLLexer.Punct && rb.text == "]" &&
-          durTok(r) && durTok(st))
-        Some((s.substring(0, lb.start), r.text, st.text))
-      else None
-    }
   }
 
   private def validSubqueryInner(q: Query): Boolean = q match {
@@ -699,725 +1247,6 @@ object ExtendedPromQL {
     case sq: SubqueryOverTimeQ => validSubqueryInner(sq.inner)
     case _: VectorLitQ => true
     case _ => false
-  }
-
-  /** Parse `body` as `<inner>[range:step]` when it has the subquery tail;
-    * None otherwise (plain range selectors have no `:`).
-    */
-  private def parseSubquery(
-      op: String, phi: Option[Double], body: String,
-      nowUs: Long): Option[Query] = trailingSubquery(body.trim) match {
-    case Some((innerStr, rangeD, stepD)) =>
-      val rangeUs = SimplePromQL.msToUs(SimplePromQL.parseDurationMs(rangeD))
-      val stepUs = SimplePromQL.msToUs(SimplePromQL.parseDurationMs(stepD))
-      if (rangeUs <= 0 || stepUs <= 0)
-        throw PromQLError("Subquery range and step must be positive")
-      if (rangeUs / stepUs > 100000L)
-        throw PromQLError(
-          s"Subquery [$rangeD:$stepD] resolves to more than 100000 steps")
-      val inner = parse(innerStr.trim, nowUs)
-      if (!validSubqueryInner(inner))
-        throw PromQLError(
-          "Subquery inner expression must be a selector or a per-series " +
-            "function (cross-series aggregations are not subquery operands)")
-      Some(SubqueryOverTimeQ(op, phi, inner, rangeUs, stepUs, nowUs,
-        innerShiftUs = nowUs - inner.endUs,
-        innerSpanUs = inner.endUs - inner.startUs))
-    case _ => None
-  }
-
-  /** Parse with PromQL's `@ start()` / `@ end()` anchors resolved
-    * against an explicit evaluation range (a range query's start/end
-    * parameters). Both anchors default to the instant evaluation time
-    * when the range bound is absent — Prometheus's instant-query
-    * semantics, where start() == end() == the query time. The anchors
-    * are rewritten, quote-aware, to the numeric `@ <seconds>` modifier
-    * the selector parser already supports, so `offset`/`@` composition
-    * rules are inherited unchanged.
-    */
-  def parse(query: String, nowUs: Long,
-      rangeStartUs: Option[Long], rangeEndUs: Option[Long]): Query =
-    parse(
-      resolveAtAnchors(query, rangeStartUs.getOrElse(nowUs),
-        rangeEndUs.getOrElse(nowUs)),
-      nowUs)
-
-  /** Rewrite `@ start()` / `@ end()` (outside quoted label values) to
-    * `@ <unix_seconds>`. Exact: microseconds render as a fixed 6-digit
-    * decimal fraction, which the `@` modifier parses back losslessly.
-    */
-  private def resolveAtAnchors(
-      query: String, startUs: Long, endUs: Long): String = {
-    def secs(us: Long): String = {
-      require(us >= 0, s"@ anchor must be a non-negative time, got $us")
-      (us / 1000000L).toString + "." + "%06d".format(us % 1000000L)
-    }
-    val AnchorRe = """^\s*(start|end)\(\)""".r
-    val out = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < query.length) {
-      val c = query.charAt(i)
-      if (inStr) {
-        out.append(c)
-        if (c == '\\' && i + 1 < query.length) {
-          out.append(query.charAt(i + 1)); i += 1
-        } else if (c == '"') inStr = false
-      } else if (c == '"') { inStr = true; out.append(c) }
-      else if (c == '@') {
-        AnchorRe.findPrefixMatchOf(query.substring(i + 1)) match {
-          case Some(m) =>
-            out.append("@ ").append(
-              secs(if (m.group(1) == "start") startUs else endUs))
-            i += m.end
-          case None => out.append(c)
-        }
-      } else out.append(c)
-      i += 1
-    }
-    out.toString
-  }
-
-  /** Rewrite the zero-arg scalar functions `time()` (evaluation time in
-    * float epoch seconds — Prometheus promql/functions.go funcTime) and
-    * `pi()` to literal scalars, outside quoted label values and only at
-    * name boundaries (`uptime()` is untouched). Substitution makes them
-    * compose with every scalar-vector context for free and is
-    * idempotent, so the recursive parse re-scanning substrings is
-    * harmless.
-    */
-  private def resolveZeroArgFns(query: String, nowUs: Long): String = {
-    if (!query.contains("time()") && !query.contains("pi()")) return query
-    val timeLit = (nowUs / 1000000L).toString + "." +
-      "%06d".format(nowUs % 1000000L)
-    val piLit = math.Pi.toString
-    val out = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < query.length) {
-      val c = query.charAt(i)
-      if (inStr) {
-        out.append(c)
-        if (c == '\\' && i + 1 < query.length) {
-          out.append(query.charAt(i + 1)); i += 1
-        } else if (c == '"') inStr = false
-        i += 1
-      } else if (c == '"') { inStr = true; out.append(c); i += 1 }
-      else {
-        val atBoundary = i == 0 || !isNameChar(query.charAt(i - 1))
-        if (atBoundary && query.startsWith("time()", i)) {
-          out.append(timeLit); i += 6
-        } else if (atBoundary && query.startsWith("pi()", i)) {
-          out.append(piLit); i += 4
-        } else { out.append(c); i += 1 }
-      }
-    }
-    out.toString
-  }
-
-  def parse(query: String, nowUs: Long): Query = {
-    val s = resolveZeroArgFns(query.trim, nowUs)
-    // a paren group spanning the whole expression unwraps structurally
-    // (`(view % 7) ^ 2` recurses into `view % 7`); selector-level parens
-    // are still handled by the selector parser unchanged
-    if (s.startsWith("(")) {
-      val (inner, rest) = parenGroup(s)
-      if (rest.trim.isEmpty) return parse(inner, nowUs)
-    }
-    topLevelSetOp(s) match {
-      case Some((i, len)) =>
-        val op = s.substring(i, i + len)
-        val (ls, rs) = (s.substring(0, i).trim, s.substring(i + len).trim)
-        if (ls.isEmpty || rs.isEmpty)
-          throw PromQLError(s"Set operator '$op' is missing an operand")
-        return BinSetQ(op,
-          requireVectorOperand(parse(ls, nowUs), "left"),
-          requireVectorOperand(parse(rs, nowUs), "right"))
-      case None => ()
-    }
-    topLevelCmpOp(s) match {
-      case Some((i, op)) =>
-        val ls = s.substring(0, i).trim
-        var rs = s.substring(i + op.length).trim
-        var bool = false
-        if (rs.startsWith("bool") &&
-            (rs.length == 4 || !isNameChar(rs.charAt(4)))) {
-          bool = true
-          rs = rs.substring(4).trim
-        }
-        if (ls.isEmpty || rs.isEmpty)
-          throw PromQLError(s"Comparison '$op' is missing an operand")
-        return (parseScalar(ls), parseScalar(rs)) match {
-          case (Some(_), Some(_)) =>
-            throw PromQLError("Scalar-scalar expressions are not supported")
-          case (Some(v), None) =>
-            BinCmpQ(op, v, scalarOnLeft = true, bool,
-              requireVectorOperand(parse(rs, nowUs), "right"))
-          case (None, Some(v)) =>
-            BinCmpQ(op, v, scalarOnLeft = false, bool,
-              requireVectorOperand(parse(ls, nowUs), "left"))
-          case (None, None) =>
-            throw PromQLError(
-              "vector-vector comparisons are not supported — compare " +
-                "against a scalar")
-        }
-      case None => ()
-    }
-    topLevelOp(s) match {
-      case Some((i, opLen, op)) =>
-        val (ls, rs) = (s.substring(0, i).trim, s.substring(i + opLen).trim)
-        if (ls.isEmpty || rs.isEmpty)
-          throw PromQLError(s"Binary operator '$op' is missing an operand")
-        return (parseScalar(ls), parseScalar(rs)) match {
-          case (Some(_), Some(_)) =>
-            throw PromQLError("Scalar-scalar expressions are not supported")
-          case (Some(v), None) =>
-            BinScalarQ(op, v, scalarOnLeft = true,
-              requireVectorOperand(parse(rs, nowUs), "right"))
-          case (None, Some(v)) =>
-            BinScalarQ(op, v, scalarOnLeft = false,
-              requireVectorOperand(parse(ls, nowUs), "left"))
-          case (None, None) =>
-            // optional matching modifier between the operator and the
-            // right operand: on(l1,...) or ignoring(l1,...), optionally
-            // followed by group_left/group_right (many-to-one matching)
-            val ModRe = """(?s)^(on|ignoring)\s*\((.*?)\)\s*(.*)$""".r
-            val (matchOn, ignoring, rs1) = rs match {
-              case ModRe(kind, ls0, rest) =>
-                (ls0.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-                  kind == "ignoring", rest)
-              case _ => (Seq.empty[String], false, rs)
-            }
-            // bare `group_left expr`, or `group_left(l1, l2) expr`
-            // with labels to copy from the "one" side onto the output
-            val GroupParenRe =
-              """(?s)^group_(left|right)\s*\(([^)]*)\)\s*(.*)$""".r
-            val GroupRe = """(?s)^group_(left|right)\s+(.*)$""".r
-            val (grouping, groupCopy, rs2) = rs1 match {
-              case GroupParenRe(side, ls0, rest) =>
-                (Some(side),
-                  ls0.split(",").map(_.trim).filter(_.nonEmpty).toSeq, rest)
-              case GroupRe(side, rest) => (Some(side), Seq.empty[String], rest)
-              case _ => (None, Seq.empty[String], rs1)
-            }
-            if (rs2.isEmpty)
-              throw PromQLError(s"Binary operator '$op' is missing an operand")
-            val lq = parse(ls, nowUs)
-            val rq = parse(rs2, nowUs)
-            val plainMatch = matchOn.isEmpty && !ignoring && grouping.isEmpty
-            (lq, rq) match {
-              // a scalar() operand turns the vector op into dynamic-
-              // scalar arithmetic (matching modifiers don't apply to a
-              // scalar side, so they force the vector-vector path and
-              // its operand validation)
-              case (sq: ScalarQ, _) if plainMatch =>
-                BinDynScalarQ(op, sq, scalarOnLeft = true,
-                  requireVectorOperand(rq, "right"))
-              case (_, sq: ScalarQ) if plainMatch =>
-                BinDynScalarQ(op, sq, scalarOnLeft = false,
-                  requireVectorOperand(lq, "left"))
-              case _ =>
-                BinVectorQ(op,
-                  requireVectorOperand(lq, "left"),
-                  requireVectorOperand(rq, "right"),
-                  matchOn, ignoring, grouping, groupCopy)
-            }
-        }
-      case None => ()
-    }
-    val headRe = """^([a-zA-Z_:][a-zA-Z0-9_:]*)""".r
-    headRe.findPrefixMatchOf(s) match {
-      case Some(m) =>
-        val head = m.matched
-        val after = s.substring(head.length)
-        if (UnsupportedFns.contains(head) && after.trim.startsWith("("))
-          throw PromQLError(
-            s"$head is not supported: ${UnsupportedFns(head)}")
-        if (head == "label_replace" || head == "label_join") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val args = splitArgs(inner)
-          def str(a: String, what: String): String = {
-            val t = a.trim
-            if (t.length < 2 || t.head != '"' || t.last != '"')
-              throw PromQLError(s"$head expects a quoted string for $what")
-            t.substring(1, t.length - 1)
-          }
-          val vec = requireVectorOperand(
-            parse(args.headOption.getOrElse(
-              throw PromQLError(s"$head expects a vector first argument")),
-              nowUs), "vector")
-          if (head == "label_replace") {
-            if (args.length != 5)
-              throw PromQLError(
-                "label_replace expects (vec, dst, replacement, src, regex)")
-            LabelReplaceQ(str(args(1), "dst"), str(args(2), "replacement"),
-              str(args(3), "src"), str(args(4), "regex"), vec)
-          } else {
-            if (args.length < 3)
-              throw PromQLError(
-                "label_join expects (vec, dst, sep, src...)")
-            LabelJoinQ(str(args(1), "dst"), str(args(2), "sep"),
-              args.drop(3).map(str(_, "src label")), vec)
-          }
-        } else if (head == "count_values") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val ArgRe = """(?s)^\s*"([^"]*)"\s*,\s*(.*)$""".r
-          inner match {
-            case ArgRe(label, selStr) =>
-              if (selStr.contains("["))
-                throw PromQLError(
-                  "count_values aggregates an instant vector")
-              val sel = parseSelector(selStr, nowUs)
-              CountValuesQ(label, sel.matchers, sel.startUs, sel.endUs)
-            case _ =>
-              throw PromQLError("count_values expects (\"label\", selector)")
-          }
-        } else if (head == "vector" && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          VectorLitQ(parseScalar(inner.trim).getOrElse(throw PromQLError(
-            s"vector() expects a scalar literal, got '${inner.trim}'")))
-        } else if (head == "scalar" && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          parse(inner, nowUs) match {
-            case _: ScalarQ => throw PromQLError(
-              "scalar() expects an instant vector, not another scalar()")
-            case q => ScalarQ(q)
-          }
-        } else if (head == "absent") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val sel = parseSelector(inner, nowUs)
-          AbsentQ(sel.matchers, sel.startUs, sel.endUs)
-        } else if (head == "histogram_quantile") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val comma = inner.indexOf(',')
-          if (comma < 0)
-            throw PromQLError("histogram_quantile expects (φ, selector)")
-          val phi =
-            try inner.substring(0, comma).trim.toDouble
-            catch { case _: NumberFormatException =>
-              throw PromQLError(
-                s"Bad quantile value '${inner.substring(0, comma).trim}'")
-            }
-          if (phi < 0.0 || phi > 1.0)
-            throw PromQLError(s"Quantile $phi out of [0, 1]")
-          val selStr = inner.substring(comma + 1).trim
-          if (selStr.contains("["))
-            throw PromQLError(
-              "histogram_quantile aggregates an instant vector of buckets")
-          val sel = parseSelector(selStr, nowUs)
-          HistogramQuantileQ(phi, sel.matchers, sel.startUs, sel.endUs)
-        } else if (head == "topk" || head == "bottomk") {
-          // optional `by (labels)` / `without (labels)` clause before or
-          // after the body: per-group ranking instead of a global one
-          var t = after.trim
-          var by = Seq.empty[String]
-          var without = false
-          var haveClause = false
-          if (t.startsWith("by") || t.startsWith("without")) {
-            without = t.startsWith("without")
-            haveClause = true
-            val (ls, rest) = parenGroup(
-              t.stripPrefix(if (without) "without" else "by").trim)
-            by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            t = rest.trim
-          }
-          val (inner, rest0) = parenGroup(t)
-          var restC = rest0.trim
-          if (!haveClause &&
-              (restC.startsWith("by") || restC.startsWith("without"))) {
-            without = restC.startsWith("without")
-            val (ls, r2) = parenGroup(
-              restC.stripPrefix(if (without) "without" else "by").trim)
-            by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            restC = r2.trim
-          }
-          val rest = restC
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val comma = inner.indexOf(',')
-          if (comma < 0)
-            throw PromQLError(s"$head expects (k, selector)")
-          val k =
-            try inner.substring(0, comma).trim.toInt
-            catch { case _: NumberFormatException =>
-              throw PromQLError(s"Bad k value '${inner.substring(0, comma).trim}'")
-            }
-          if (k < 1) throw PromQLError(s"$head needs k >= 1, got $k")
-          val selStr = inner.substring(comma + 1).trim
-          if (selStr.contains("["))
-            throw PromQLError(
-              s"$head ranks an instant vector, not a range selector")
-          val sel = parseSelector(selStr, nowUs)
-          TopKQ(head, k, by, without, sel.matchers, sel.startUs,
-            sel.endUs)
-        } else if (head == "limitk" || head == "limit_ratio") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val comma = inner.indexOf(',')
-          if (comma < 0)
-            throw PromQLError(s"$head expects (${
-              if (head == "limitk") "k" else "ratio"}, selector)")
-          val argStr = inner.substring(0, comma).trim
-          val selStr = inner.substring(comma + 1).trim
-          if (selStr.contains("["))
-            throw PromQLError(
-              s"$head samples an instant vector, not a range selector")
-          val sel = parseSelector(selStr, nowUs)
-          if (head == "limitk") {
-            val k =
-              try argStr.toInt
-              catch { case _: NumberFormatException =>
-                throw PromQLError(s"Bad k value '$argStr'")
-              }
-            if (k < 1) throw PromQLError(s"limitk needs k >= 1, got $k")
-            LimitKQ(k, sel.matchers, sel.startUs, sel.endUs)
-          } else {
-            val r =
-              try argStr.toDouble
-              catch { case _: NumberFormatException =>
-                throw PromQLError(s"Bad ratio value '$argStr'")
-              }
-            if (r < -1.0 || r > 1.0)
-              throw PromQLError(s"limit_ratio $r out of [-1, 1]")
-            LimitRatioQ(r, sel.matchers, sel.startUs, sel.endUs)
-          }
-        } else if (head == "quantile_over_time") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val comma = inner.indexOf(',')
-          if (comma < 0)
-            throw PromQLError(
-              "quantile_over_time expects (φ, metric[range])")
-          val phi =
-            try inner.substring(0, comma).trim.toDouble
-            catch { case _: NumberFormatException =>
-              throw PromQLError(
-                s"Bad quantile value '${inner.substring(0, comma).trim}'")
-            }
-          if (phi < 0.0 || phi > 1.0)
-            throw PromQLError(s"Quantile $phi out of [0, 1]")
-          val selStr = inner.substring(comma + 1).trim
-          parseSubquery("quantile", Some(phi), selStr, nowUs).getOrElse {
-            if (!selStr.contains("["))
-              throw PromQLError(
-                "quantile_over_time expects a range selector (like metric[5m])")
-            val sel = parseSelector(selStr, nowUs)
-            QuantileOverTimeQ(phi, sel.matchers, sel.startUs, sel.endUs)
-          }
-        } else if (head == "mad_over_time") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          parseSubquery("mad", None, inner, nowUs).getOrElse {
-            if (!inner.contains("["))
-              throw PromQLError(
-                "mad_over_time expects a range selector (like metric[5m])")
-            val sel = parseSelector(inner, nowUs)
-            MadOverTimeQ(sel.matchers, sel.startUs, sel.endUs)
-          }
-        } else if (head == "predict_linear") {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val args = splitArgs(inner)
-          if (args.length != 2)
-            throw PromQLError(
-              "predict_linear expects (metric[range], t_seconds)")
-          val horizon = parseScalar(args(1)).getOrElse(
-            throw PromQLError(
-              s"predict_linear expects a scalar horizon, got '${args(1)}'"))
-          if (!args.head.contains("["))
-            throw PromQLError(
-              "predict_linear expects a range selector (like metric[5m])")
-          val sel = parseSelector(args.head, nowUs)
-          PredictLinearQ(horizon, sel.matchers, sel.startUs, sel.endUs)
-        } else if (head == "holt_winters" ||
-            head == "double_exponential_smoothing") {
-          // Prometheus 3 renamed holt_winters (it is double exponential
-          // smoothing, not the seasonal Holt-Winters); accept both
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val args = splitArgs(inner)
-          if (args.length != 3)
-            throw PromQLError(
-              "holt_winters expects (metric[range], sf, tf)")
-          def factor(a: String, what: String): Double = {
-            val v = parseScalar(a).getOrElse(throw PromQLError(
-              s"holt_winters expects a scalar $what, got '$a'"))
-            if (!(v > 0.0 && v < 1.0))
-              throw PromQLError(
-                s"holt_winters $what must be in (0, 1), got '$a'")
-            v
-          }
-          val sfp = factor(args(1), "smoothing factor")
-          val tfp = factor(args(2), "trend factor")
-          val sel = parseSelector(args.head, nowUs)
-          if (!sel.hadRange)
-            throw PromQLError(
-              "holt_winters expects a range selector (like metric[5m])")
-          HoltWintersQ(sfp, tfp, sel.matchers, sel.startUs, sel.endUs)
-        } else if (head == "timestamp" && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val sel = parseSelector(inner, nowUs)
-          if (sel.hadRange)
-            throw PromQLError("timestamp expects an instant vector")
-          TimestampQ(sel.matchers, sel.startUs, sel.endUs)
-        } else if ((head == "sort_by_label" || head == "sort_by_label_desc")
-            && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val args = splitArgs(inner)
-          if (args.length < 2)
-            throw PromQLError(s"$head expects (vec, \"label\", ...)")
-          val QuotedRe = """^"([^"]*)"$""".r
-          val labelNames = args.tail.map(_.trim).map {
-            case QuotedRe(l) => l
-            case other =>
-              throw PromQLError(s"$head expects quoted label names, got '$other'")
-          }
-          SortByLabelQ(head.endsWith("_desc"), labelNames,
-            requireVectorOperand(parse(args.head, nowUs), "sorted"))
-        } else if ((head == "sort" || head == "sort_desc") &&
-            after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          SortQ(head == "sort_desc",
-            requireVectorOperand(parse(inner, nowUs), "sorted"))
-        } else if (head == "absent_over_time") {
-          // absent(sel) over a range window — AbsentQ's machinery with
-          // the window taken from the range selector
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          if (!inner.contains("["))
-            throw PromQLError(
-              "absent_over_time expects a range selector (like metric[5m])")
-          val sel = parseSelector(inner, nowUs)
-          AbsentQ(sel.matchers, sel.startUs, sel.endUs)
-        } else if (head.endsWith("_over_time")) {
-          val op = head.stripSuffix("_over_time")
-          if (!OverTimeOps.contains(op))
-            throw PromQLError(s"Unsupported function: $head")
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          parseSubquery(op, None, inner, nowUs).getOrElse {
-            if (!inner.contains("["))
-              throw PromQLError(
-                s"$head expects a range selector (like metric[5m])")
-            val sel = parseSelector(inner, nowUs)
-            OverTimeQ(op, sel.matchers, sel.startUs, sel.endUs)
-          }
-        } else if (RangeFnOps.contains(head) && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          if (!inner.contains("["))
-            throw PromQLError(
-              s"$head expects a range selector (like metric[5m])")
-          val sel = parseSelector(inner, nowUs)
-          RangeFnQ(head, sel.matchers, sel.startUs, sel.endUs)
-        } else if (MathFnArity.contains(head) && after.trim.startsWith("(")) {
-          val (inner, rest) = parenGroup(after.trim)
-          if (rest.trim.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val args = splitArgs(inner)
-          if (args.isEmpty)
-            throw PromQLError(s"$head expects a vector first argument")
-          val arity = MathFnArity(head)
-          val scalars = args.tail.map(a => parseScalar(a).getOrElse(
-            throw PromQLError(s"$head expects scalar arguments, got '$a'")))
-          if (!arity.contains(scalars.length))
-            throw PromQLError(s"$head expects ${arity.min}" +
-              (if (arity.min == arity.max) "" else s"..${arity.max}") +
-              s" scalar argument(s) after the vector, got ${scalars.length}")
-          if (head == "round" && scalars.headOption.exists(_ <= 0.0))
-            throw PromQLError("round step must be positive")
-          MathFnQ(head, scalars,
-            requireVectorOperand(parse(args.head, nowUs), "vector"))
-        } else if (head == "quantile") {
-          // `quantile [by|without (...)] (φ, vec)` — same clause
-          // placement rules as the other instant aggregations
-          var t = after.trim
-          var by = Seq.empty[String]
-          var without = false
-          var haveClause = false
-          if (t.startsWith("by") || t.startsWith("without")) {
-            without = t.startsWith("without")
-            haveClause = true
-            val (ls, rest) = parenGroup(
-              t.stripPrefix(if (without) "without" else "by").trim)
-            by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            t = rest.trim
-          }
-          val (inner, rest0) = parenGroup(t)
-          var rest = rest0.trim
-          if (!haveClause &&
-              (rest.startsWith("by") || rest.startsWith("without"))) {
-            without = rest.startsWith("without")
-            val (ls, r2) = parenGroup(
-              rest.stripPrefix(if (without) "without" else "by").trim)
-            by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            rest = r2.trim
-          }
-          if (rest.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          val comma = inner.indexOf(',')
-          if (comma < 0)
-            throw PromQLError("quantile expects (φ, vector)")
-          val phi =
-            try inner.substring(0, comma).trim.toDouble
-            catch { case _: NumberFormatException =>
-              throw PromQLError(
-                s"Bad quantile value '${inner.substring(0, comma).trim}'")
-            }
-          if (phi < 0.0 || phi > 1.0)
-            throw PromQLError(s"Quantile $phi out of [0, 1]")
-          val vecStr = inner.substring(comma + 1).trim
-          (try Right(parseSelector(vecStr, nowUs))
-          catch { case e: PromQLError => Left(e) }) match {
-            case Right(sel) if sel.hadRange =>
-              throw PromQLError(
-                "quantile aggregates an instant vector; use " +
-                  "quantile_over_time for range windows")
-            case Right(sel) =>
-              QuantileAggQ(phi, by, without,
-                SelectorQ(sel.matchers, sel.startUs, sel.endUs))
-            case Left(selErr) =>
-              try QuantileAggQ(phi, by, without,
-                requireVectorOperand(parse(vecStr, nowUs), "aggregated"))
-              catch {
-                case _: PromQLError if selectorShaped(vecStr) => throw selErr
-              }
-          }
-        } else if (InstantAggOps.contains(head)) {
-          // clause may precede or follow the parenthesized body
-          var t = after.trim
-          var by = Seq.empty[String]
-          var without = false
-          var haveClause = false
-          if (t.startsWith("by") || t.startsWith("without")) {
-            without = t.startsWith("without")
-            haveClause = true
-            val (ls, rest) = parenGroup(
-              t.stripPrefix(if (without) "without" else "by").trim)
-            by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            t = rest.trim
-          }
-          val (inner, rest0) = parenGroup(t)
-          var rest = rest0.trim
-          if (!haveClause && (rest.startsWith("by") || rest.startsWith("without"))) {
-            without = rest.startsWith("without")
-            val (ls, r2) = parenGroup(
-              rest.stripPrefix(if (without) "without" else "by").trim)
-            by = ls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            rest = r2.trim
-          }
-          if (rest.nonEmpty)
-            throw PromQLError(s"Unexpected trailing content in query: '$rest'")
-          // plain selector -> the classic InstantAggQ; anything else
-          // (rate(x[5m]), abs(m), m * 2, nested math) -> aggregation
-          // over the per-series vector it evaluates to. A bare RANGE
-          // selector (sum(metric[5m])) is invalid PromQL — detected
-          // structurally from the selector parse (hadRange), so a regex
-          // matcher carrying brackets or parens cannot sneak one past a
-          // textual guard
-          (try Right(parseSelector(inner, nowUs))
-          catch { case e: PromQLError => Left(e) }) match {
-            case Right(sel) if sel.hadRange =>
-              throw PromQLError(
-                s"$head aggregates an instant vector; use " +
-                  s"${head}_over_time for range windows")
-            case Right(sel) =>
-              InstantAggQ(head, by, without,
-                sel.matchers, sel.startUs, sel.endUs)
-            case Left(selErr) =>
-              try InstantAggVecQ(head, by, without,
-                requireVectorOperand(parse(inner, nowUs), "aggregated"))
-              catch {
-                // selector-shaped inner (no function head, no top-level
-                // operator to recurse into): the selector's own message
-                // names the actual syntax error; the generic fallback
-                // error would mask it
-                case _: PromQLError if selectorShaped(inner) => throw selErr
-              }
-          }
-        } else {
-          val sel = parseSelector(s, nowUs)
-          SelectorQ(sel.matchers, sel.startUs, sel.endUs)
-        }
-      case None =>
-        val sel = parseSelector(s, nowUs)
-        SelectorQ(sel.matchers, sel.startUs, sel.endUs)
-    }
-  }
-
-  /** Split a function argument list on top-level commas (outside quotes
-    * and all bracket kinds) — selectors like `view{a="1",b="2"}` stay one
-    * argument.
-    */
-  private def splitArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var par = 0; var br = 0; var brace = 0; var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1 else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '(' => par += 1
-        case ')' => par -= 1
-        case '[' => br += 1
-        case ']' => br -= 1
-        case '{' => brace += 1
-        case '}' => brace -= 1
-        case ',' if par == 0 && br == 0 && brace == 0 =>
-          out += s.substring(start, i).trim
-          start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start).trim
-    out.result()
-  }
-
-  /** Extract a balanced `(...)` group from the head of `t`; returns
-    * (inner, rest).
-    */
-  private def parenGroup(t: String): (String, String) = {
-    if (!t.startsWith("("))
-      throw PromQLError(s"Failed to parse PromQL query at: '$t'")
-    // the closer matching the leading opener is the first depth-0 `)`
-    lex(t).find(tok => tok.depth == 0 && tok.kind == PromQLLexer.Punct &&
-        tok.text == ")") match {
-      case Some(close) =>
-        (t.substring(1, close.start), t.substring(close.end))
-      case None =>
-        throw PromQLError(
-          "Failed to parse PromQL query: unbalanced parentheses")
-    }
   }
 
   // -------------------------------------------------------------- evaluate
@@ -2154,7 +1983,7 @@ object ExtendedPromQL {
     * bracketed window, scalar arithmetic/comparison/math wrappers, and
     * cross-series aggregations over any of them. Parse the query with
     * `nowUs = endUs` so selector windows and `offset` resolve against
-    * the range end (the 3-arg [[parse]] overload also resolves
+    * the range end (the 4-argument [[parse]] overload also resolves
     * `@ start()` / `@ end()` anchors).
     */
   def evalRange(
@@ -2181,10 +2010,6 @@ object ExtendedPromQL {
           "wrappers, and cross-series aggregations over them")
   }
 
-  /** `@` anywhere outside quoted label values? */
-  private def containsAt(s: String): Boolean =
-    lex(s).exists(t => t.kind == PromQLLexer.Op && t.text == "@")
-
   /** The query_range API entry: parses `query`, resolves `@ start()` /
     * `@ end()` anchors against the range bounds, and dispatches:
     *
@@ -2207,24 +2032,19 @@ object ExtendedPromQL {
       query: String, startUs: Long, endUs: Long, stepUs: Long,
       selectFor: Seq[LabelMatcher] => DataFrame,
       samplesFor: (Long, Long) => DataFrame): DataFrame = {
-    val resolved = resolveAtAnchors(query, startUs, endUs)
-    if (!containsAt(resolved)) {
-      val q = parse(resolved, endUs)
-      rangeChecks(q, startUs, endUs, stepUs)
-      val shiftUs = endUs - q.endUs
-      val spanUs = q.endUs - q.startUs
-      // the scan ends at the last step, not at `end`: the same bound as
-      // perStepVector's, so the two merge and an unaligned range plans
-      // like an aligned one
-      val lastStepUs = endUs - (endUs - startUs) % stepUs
-      return evalRange(q, startUs, endUs, stepUs, selectFor,
-        samplesFor(startUs - shiftUs - spanUs, lastStepUs - shiftUs))
-    }
-    trailingAt(resolved.trim) match {
-      case Some((inner, ts)) if !containsAt(inner) =>
-        val pinUs = (ts.toDouble * 1e6).toLong
-        val q = parse(inner.trim, pinUs)
-        rangeChecks(q, startUs, endUs, stepUs)
+    val (q, pinned) = Parser(query, endUs, Some((startUs, endUs))).rangeQuery()
+    rangeChecks(q, startUs, endUs, stepUs)
+    val lastStepUs = endUs - (endUs - startUs) % stepUs
+    pinned match {
+      case None =>
+        val shiftUs = endUs - q.endUs
+        val spanUs = q.endUs - q.startUs
+        // the scan ends at the last step, not at `end`: the same bound as
+        // perStepVector's, so the two merge and an unaligned range plans
+        // like an aligned one
+        evalRange(q, startUs, endUs, stepUs, selectFor,
+          samplesFor(startUs - shiftUs - spanUs, lastStepUs - shiftUs))
+      case Some(pinUs) =>
         val samples = samplesFor(q.startUs, q.endUs)
         // one evaluation at the pinned instant (a single-step grid at
         // the pinned window's end, zero shift) — through perStepAny, so
@@ -2234,13 +2054,8 @@ object ExtendedPromQL {
             col("value").cast("double").as("value"))
         // ...replicated across the step grid
         once.select(col("sensor_id"), col("labels"),
-          explode(sequence(lit(startUs), lit(endUs - (endUs - startUs) % stepUs),
-            lit(stepUs))).as("t_us"), col("value"))
-      case _ =>
-        throw PromQLError(
-          "@ modifiers on sub-expressions are not supported in " +
-            "query_range; pin the whole expression with a trailing @ " +
-            "(e.g. `sum(metric) @ end()`)")
+          explode(sequence(lit(startUs), lit(lastStepUs), lit(stepUs)))
+            .as("t_us"), col("value"))
     }
   }
 

@@ -2,24 +2,20 @@ package graft.promql
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Positioned-token lexer for the extended PromQL front end (r13
-  * verdict item #6). The hand-rolled character scanners duplicated
-  * quote/bracket-depth tracking across `topLevelSetOp`, `topLevelOp`,
-  * `topLevelCmpOp`, `parenGroup`, and three trailing-modifier regexes —
-  * a class that produced four separate trap fixes (`@` whitespace,
-  * duration overflow, float-suffix step, depth-tracking drift). This
-  * lexer is the ONE place quotes, brackets, numbers/durations, and word
-  * boundaries are recognized; the splitters operate on tokens.
+/** Positioned-token lexer for the extended PromQL front end: the one
+  * place quotes, brackets, numbers/durations and word boundaries are
+  * recognized. [[ExtendedPromQL]] lexes a query once and parses the
+  * token vector by index.
   *
   * TOTAL by design: lexing never throws. Malformed input (unterminated
-  * string, stray byte) becomes a token the downstream parser rejects
-  * with its own specific message — preserving the pre-lexer error
-  * surface byte-for-byte (the old char scanners also never threw).
+  * string, stray byte) becomes a token the parser rejects with its own
+  * specific message.
   *
   * Tokens carry their character span (`start` inclusive, `end`
-  * exclusive) so the recursive-descent parser keeps slicing the
-  * original string, and their bracket `depth` (nesting of all of
-  * `( [ {` at the token) so "top-level" checks are a field read.
+  * exclusive), so the source text of any token range, a selector handed
+  * to [[SimplePromQL]] or the text an error message quotes, is one
+  * substring of the query. Bracket nesting is [[depths]], counted from
+  * the start of whichever token range is being parsed.
   */
 object PromQLLexer {
 
@@ -32,12 +28,32 @@ object PromQLLexer {
   case object Punct extends Kind   // ( ) [ ] { } , :
   case object Unknown extends Kind // anything else, one char
 
-  final case class Tok(
-      kind: Kind, text: String, start: Int, end: Int, depth: Int)
+  final case class Tok(kind: Kind, text: String, start: Int, end: Int)
+
+  private def opener(t: Tok): Boolean =
+    t.kind == Punct && (t.text == "(" || t.text == "[" || t.text == "{")
+  private def closer(t: Tok): Boolean =
+    t.kind == Punct && (t.text == ")" || t.text == "]" || t.text == "}")
+
+  /** The bracket depth of each token of `toks(lo until hi)`, counted
+    * from `lo`: all of `( [ {` share one counter, an opener carries the
+    * depth outside it and a closer the depth it returns to, and a stray
+    * closer clamps at 0, so the tokens after an unbalanced `)` still read
+    * as top-level.
+    */
+  def depths(toks: IndexedSeq[Tok], lo: Int, hi: Int): Array[Int] = {
+    val out = new Array[Int](hi - lo)
+    var d = 0
+    for (k <- lo until hi) {
+      if (closer(toks(k))) d = math.max(0, d - 1)
+      out(k - lo) = d
+      if (opener(toks(k))) d += 1
+    }
+    out
+  }
 
   def lex(s: String): Vector[Tok] = {
     val out = new ArrayBuffer[Tok]()
-    var depth = 0
     var i = 0
     val n = s.length
     def isIdentStart(c: Char): Boolean = c.isLetter || c == '_'
@@ -56,7 +72,7 @@ object PromQLLexer {
           else if (d == '"') { i += 1; done = true }
           else i += 1
         }
-        out += Tok(Str, s.substring(st, i), st, i, depth)
+        out += Tok(Str, s.substring(st, i), st, i)
       } else if (c.isDigit ||
           (c == '.' && i + 1 < n && s.charAt(i + 1).isDigit)) {
         val st = i
@@ -82,33 +98,23 @@ object PromQLLexer {
           isNum = false
           while (i < n && (s.charAt(i).isLetterOrDigit)) i += 1
         }
-        out += Tok(if (isNum) Num else Dur, s.substring(st, i), st, i, depth)
+        out += Tok(if (isNum) Num else Dur, s.substring(st, i), st, i)
       } else if (isIdentStart(c)) {
         val st = i
         while (i < n && isIdentPart(s.charAt(i))) i += 1
-        out += Tok(Ident, s.substring(st, i), st, i, depth)
+        out += Tok(Ident, s.substring(st, i), st, i)
       } else {
         val two = if (i + 1 < n) s.substring(i, i + 2) else ""
         c match {
-          case '(' | '[' | '{' =>
-            out += Tok(Punct, c.toString, i, i + 1, depth)
-            depth += 1; i += 1
-          case ')' | ']' | '}' =>
-            // clamp at 0: a stray closing bracket must not drive depth
-            // negative, or every later genuinely-top-level token would
-            // carry depth -1 and the top-level splitters would skip it
-            depth = math.max(0, depth - 1)
-            out += Tok(Punct, c.toString, i, i + 1, depth)
-            i += 1
-          case ',' | ':' =>
-            out += Tok(Punct, c.toString, i, i + 1, depth); i += 1
+          case '(' | '[' | '{' | ')' | ']' | '}' | ',' | ':' =>
+            out += Tok(Punct, c.toString, i, i + 1); i += 1
           case _ if two == "==" || two == "!=" || two == "<=" ||
               two == ">=" || two == "=~" || two == "!~" =>
-            out += Tok(Op, two, i, i + 2, depth); i += 2
+            out += Tok(Op, two, i, i + 2); i += 2
           case '+' | '-' | '*' | '/' | '%' | '^' | '<' | '>' | '=' | '@' =>
-            out += Tok(Op, c.toString, i, i + 1, depth); i += 1
+            out += Tok(Op, c.toString, i, i + 1); i += 1
           case other =>
-            out += Tok(Unknown, other.toString, i, i + 1, depth); i += 1
+            out += Tok(Unknown, other.toString, i, i + 1); i += 1
         }
       }
     }

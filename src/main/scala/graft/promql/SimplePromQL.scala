@@ -7,7 +7,7 @@ import graft.operators.LabelMatcher
   * (instant; implicit 1h lookback) and matrix selectors (`metric[5m]` →
   * now-range..now) are legal. Aggregations, function calls, binary/unary
   * ops, subqueries, and literals are rejected with specific messages;
-  * parentheses unwrap recursively; trailing input is rejected. The metric
+  * parentheses unwrap; trailing input is rejected. The metric
   * name becomes a `__name__` equality matcher.
   */
 object SimplePromQL {
@@ -51,6 +51,33 @@ object SimplePromQL {
     }
   }
 
+  /** The reference's rejection of a non-selector query: `what` is one
+    * of agg, call, binary, unary, subquery or literal.
+    */
+  private[promql] def rejection(what: String): PromQLError = what match {
+    case "agg" => PromQLError(
+      "Aggregation expressions (like sum(), avg(), count()) are not " +
+        "supported. Only simple selectors like 'metric_name{label=\"value\"}' " +
+        "or 'metric_name[5m]' are supported.")
+    case "call" => PromQLError(
+      "Function calls (like rate(), increase(), histogram_quantile()) are " +
+        "not supported. Only simple selectors like " +
+        "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
+    case "binary" => PromQLError(
+      "Binary operations (like +, -, *, /) are not supported. Only simple " +
+        "selectors like 'metric_name{label=\"value\"}' or 'metric_name[5m]' " +
+        "are supported.")
+    case "unary" => PromQLError(
+      "Unary operations are not supported. Only simple selectors like " +
+        "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
+    case "subquery" => PromQLError(
+      "Subqueries are not supported. Only simple selectors like " +
+        "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
+    case _ => PromQLError(
+      "Literal values are not valid queries. Use a metric selector like " +
+        "'metric_name{label=\"value\"}'.")
+  }
+
   private def requireMatchers(ms: Seq[LabelMatcher]): Unit =
     if (ms.isEmpty)
       throw PromQLError(
@@ -66,42 +93,25 @@ object SimplePromQL {
     def skipWs(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
     private def peek: Char = if (i < s.length) s.charAt(i) else '\u0000'
 
-    private def reject(what: String): Nothing = what match {
-      case "agg" => throw PromQLError(
-        "Aggregation expressions (like sum(), avg(), count()) are not " +
-          "supported. Only simple selectors like 'metric_name{label=\"value\"}' " +
-          "or 'metric_name[5m]' are supported.")
-      case "call" => throw PromQLError(
-        "Function calls (like rate(), increase(), histogram_quantile()) are " +
-          "not supported. Only simple selectors like " +
-          "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
-      case "binary" => throw PromQLError(
-        "Binary operations (like +, -, *, /) are not supported. Only simple " +
-          "selectors like 'metric_name{label=\"value\"}' or 'metric_name[5m]' " +
-          "are supported.")
-      case "unary" => throw PromQLError(
-        "Unary operations are not supported. Only simple selectors like " +
-          "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
-      case "subquery" => throw PromQLError(
-        "Subqueries are not supported. Only simple selectors like " +
-          "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
-      case _ => throw PromQLError(
-        "Literal values are not valid queries. Use a metric selector like " +
-          "'metric_name{label=\"value\"}'.")
-    }
+    private def reject(what: String): Nothing = throw rejection(what)
 
     def parseExpr(): Selector = {
+      // parens unwrap (reference: simple_promql.rs:162-164), counted in a
+      // loop so that no nesting depth can overflow the stack
+      var open = 0
       skipWs()
-      if (peek == '(') {
-        // parens unwrap recursively (reference: simple_promql.rs:162-164)
-        i += 1
-        val inner = parseExpr()
+      while (peek == '(') { i += 1; open += 1; skipWs() }
+      val inner = parseSelector()
+      for (_ <- 0 until open) {
         skipWs()
         if (peek != ')') throw PromQLError("Failed to parse PromQL query: unbalanced parentheses")
         i += 1
         checkTrailingOperator()
-        return inner
       }
+      inner
+    }
+
+    private def parseSelector(): Selector = {
       if (peek == '+' || peek == '-') reject("unary")
       if (peek.isDigit) reject("literal")
       if (peek == '"' || peek == '\'') reject("literal")

@@ -586,22 +586,11 @@ private[graft] object QueryHelpers {
     */
   val scopedStreamSessions = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, SparkSession]()
-  /** GRAFT_STREAM_STATE_PARTITIONS, validated ONCE at first use: a
-    * malformed value fails with a configuration error naming the env
-    * var, not a bare NumberFormatException thrown from inside the
-    * first streaming query's computeIfAbsent.
-    */
-  lazy val streamStatePartitions: Int = {
-    val raw = sys.env.getOrElse("GRAFT_STREAM_STATE_PARTITIONS", "4")
-    val parsed = scala.util.Try(raw.trim.toInt).toOption
-    require(parsed.exists(_ >= 1),
-      s"GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, got '$raw'")
-    parsed.get
-  }
+  private val StreamStatePartitions = 4
   def streamSession(s: SparkSession): SparkSession =
     scopedStreamSessions.computeIfAbsent(s,
       _ => graft.streaming.StreamingIngest.stateScopedSession(s,
-        streamStatePartitions))
+        StreamStatePartitions))
 
   /** Materialize a bounded memory-sink result (`out`, a view over the
     * scoped session's sink table, transforms applied but UNSORTED) as a

@@ -16,10 +16,14 @@ import org.apache.spark.sql.DataFrame
   *
   * `--plans <dir>` adds an untimed cold run before the metered one (so
   * `sec` is a warm run) and writes the AQE-final
-  * `.explain("formatted")` plan to `<dir>/<query>.txt`: the before/after
-  * evidence of plan changes. The written plan is [[stablePlan]]'s, so two
-  * checkouts that plan a query alike write the same file and `diff -r`
-  * of two plan directories shows only plan changes.
+  * `.explain("formatted")` plan to `<dir>/<query>.txt` and the optimized
+  * logical plan to `<dir>/<query>.logical.txt`: the before/after
+  * evidence of plan changes. Both go through [[stablePlan]], so two
+  * checkouts that plan a query alike write the same files and `diff -r`
+  * of two plan directories shows only plan changes. Where both sides of
+  * a join are small enough to broadcast, AQE builds whichever side's
+  * stage finished first, so the final plan can differ between two runs
+  * of one commit; the logical plan, which AQE plays no part in, cannot.
   *
   * Usage:
   *   sbt "runMain graft.tools.ScaleProbe <dataDir> [q1,q2,...|--all] \
@@ -150,6 +154,25 @@ object ScaleProbe {
       .replaceAll("(lambda [a-z]+)_\\d+", "$1_x")
       .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda")
 
+  /** The optimized logical plan of `df`, as [[stablePlan]] writes it. */
+  def logicalPlan(df: DataFrame): String =
+    stablePlan(df.queryExecution.optimizedPlan.toString)
+
+  /** Writes `<dir>/<query>.txt` (the AQE-final plan) and
+    * `<dir>/<query>.logical.txt`; returns the final plan's exchange count.
+    */
+  def writePlans(dir: java.io.File, query: String, df: DataFrame): Int = {
+    def write(suffix: String, plan: => String): String = {
+      val text = try plan catch { case e: Throwable => s"explain failed: $e" }
+      java.nio.file.Files.writeString(
+        new java.io.File(dir, query + suffix).toPath, text)
+      text
+    }
+    val plan = write(".txt", stablePlan(finalPlan(df)))
+    write(".logical.txt", logicalPlan(df))
+    "Exchange".r.findAllIn(plan).length
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <dataDir> [q1,q2,...|--all] " +
       "[--out <file>] [--plans <dir>]")
@@ -212,15 +235,8 @@ object ScaleProbe {
         val sec = since(t0)
         barrier()
         val counts = meter.snap() - before
-        val exchanges = planDir.map { d =>
-          // one extra untimed, unmetered pass buys the final plan
-          val plan =
-            try stablePlan(finalPlan(built))
-            catch { case e: Throwable => s"explain failed: $e" }
-          java.nio.file.Files.writeString(
-            new java.io.File(d, s"$n.txt").toPath, plan)
-          "Exchange".r.findAllIn(plan).length
-        }
+        // one extra untimed, unmetered pass buys the final plan
+        val exchanges = planDir.map(writePlans(_, n, built))
         emit(line(n, sec, rows, counts, cold.zip(exchanges)))
         Some(sec)
       } catch {

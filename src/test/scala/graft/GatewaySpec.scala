@@ -801,6 +801,28 @@ class GatewaySpec extends SparkSpec {
     assert(pb.contains(""""values":[[1704067200,"1"]]"""), pb)
   }
 
+  test("deep nesting and long operator chains answer 400, not a stack " +
+      "overflow") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val parens = "(" * 300 + "http_requests" + ")" * 300
+    val chain = Seq.fill(400)("http_requests").mkString(" + ")
+    for (q <- Seq(parens, chain)) {
+      val instant = get(s"/api/v1/query_extended?query=${enc(q)}")
+      assert(instant.statusCode() == 400, instant.body())
+      assert(instant.body().contains("nests deeper"), instant.body())
+      val range = get(s"/api/v1/query_range?query=${enc(q)}" +
+        "&start=1704067200&end=1704240000&step=1d")
+      assert(range.statusCode() == 400, range.body())
+    }
+    // the strict endpoint unwraps any number of parens around a selector
+    val deep = get("/api/v1/query?query=" +
+      enc("(" * 5000 + "http_requests" + ")" * 5000))
+    val flat = get("/api/v1/query?query=" + enc("(http_requests)"))
+    assert(flat.statusCode() == 200, flat.body())
+    assert(deep.statusCode() == flat.statusCode())
+    assert(deep.body() == flat.body())
+  }
+
   test("bulk export: per-series IPC files + manifest, no data on driver path") {
     val dir = graft.TempDirs.createPath("gw_bulk")
     // http_requests samples live at 2024-01 (remote-write fixture) —

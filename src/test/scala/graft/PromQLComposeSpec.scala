@@ -197,24 +197,33 @@ class PromQLComposeSpec extends SparkSpec {
     // StringIndexOutOfBounds from a substring, StackOverflowError from
     // runaway recursion) would surface as a 500 — this fuzz pins the
     // whole exception surface, the class the duration-overflow bug
-    // (silent Long wrap / raw NFE) belonged to
-    val rnd = new scala.util.Random(0xFADE)
-    val atoms = Seq("view", "sum", "rate", "topk", "by", "or", "and",
-      "unless", "offset", "bool", "atan2", "scalar", "vector",
-      "count_over_time", "label_replace", "quantile", "(", ")", "[", "]",
-      "{", "}", "\"", ",", "=", "!=", "=~", "!~", "+", "-", "*", "/",
-      "%", "^", "<", ">", "==", ":", "@", " ", "5m", "1h", "0.5", "3",
-      "99999999999999999999", "9999999999y", "e", "_", "user")
+    // (silent Long wrap / raw NFE) belonged to. Deep nesting and long
+    // operator chains, hundreds to thousands of levels, are what
+    // recursion overflows on.
+    val rnd = new scala.util.Random(0xDEE9)
+    val wrappers = Seq("(", "abs(", "sum(", "scalar(", "sort(", "-(",
+      "rate(", "count_over_time(", "sum by (a) (", "max_over_time(")
+    val ops = Seq(" + ", " - ", " * ", " / ", " ^ ", " % ", " atan2 ",
+      " and ", " or ", " unless ", " > ", " == bool ", " / on(a) ")
+    val deep = Seq(50, 300, 1000, 5000).flatMap { n =>
+      val nest = Seq.fill(n)(wrappers(rnd.nextInt(wrappers.length)))
+      val chain = Seq.fill(n)(ops(rnd.nextInt(ops.length)))
+      Seq("(" * n + "x" + ")" * n,
+        nest.mkString + "x[5m]" + ")" * n,
+        nest.mkString + "x" + ")" * n,
+        Seq.fill(n)("x").mkString(" + "),
+        Seq.fill(n)("x").mkString(" ^ "),
+        chain.map("x" + _).mkString + "x",
+        chain.map("(x" + _).mkString + "x" + ")" * n)
+    }
     var parsed = 0
-    for (_ <- 0 until 3000) {
-      val n = 1 + rnd.nextInt(12)
-      val q = Seq.fill(n)(atoms(rnd.nextInt(atoms.length))).mkString("")
+    for (q <- PromQLCorpus.fuzzStrings(3000) ++ deep) {
       try { ExtendedPromQL.parse(q, now); parsed += 1 }
       catch {
         case _: PromQLError => () // the one legal failure mode
         case e: Throwable =>
-          fail(s"'$q' escaped the parser with ${e.getClass.getName}: " +
-            s"${e.getMessage}")
+          fail(s"'${q.take(80)}' (${q.length} chars) escaped the parser " +
+            s"with ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     assert(parsed > 0) // the generator does produce some valid queries

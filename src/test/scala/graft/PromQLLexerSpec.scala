@@ -4,15 +4,17 @@ import graft.promql.PromQLLexer
 import graft.promql.PromQLLexer._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The positioned-token lexer under the PromQL splitters (r13 verdict
-  * item #6): quote/bracket/number recognition lives HERE once — these
-  * pins are the trap cases that previously each required a bespoke fix
-  * in some character scanner.
+/** The positioned-token lexer under the extended PromQL parser:
+  * quote/bracket/number recognition lives HERE once — these pins are the
+  * trap cases that previously each required a bespoke fix in some
+  * character scanner.
   */
 class PromQLLexerSpec extends AnyFunSuite {
 
   private def kinds(s: String): Seq[(Kind, String)] =
     lex(s).map(t => (t.kind, t.text))
+  private def depthOf(toks: Vector[Tok], t: Tok): Int =
+    depths(toks, 0, toks.length)(toks.indexOf(t))
 
   test("numbers vs durations vs scientific notation") {
     assert(kinds("1 + 1.5 - .5 * 1e-3 / 2e+4") == Seq(
@@ -31,18 +33,18 @@ class PromQLLexerSpec extends AnyFunSuite {
     // the 'and' outside the string is a depth-0 ident; nothing inside
     // the string leaked as a token
     val and = toks.filter(t => t.kind == Ident && t.text == "and")
-    assert(and.length == 1 && and.head.depth == 0)
+    assert(and.length == 1 && depthOf(toks, and.head) == 0)
     assert(!toks.exists(t => t.kind == Op && t.text == "@"))
   }
 
   test("depth: openers carry outer depth on closers, idents nest") {
     val toks = lex("sum(rate(x[5m])) or y")
     val or = toks.find(t => t.text == "or").get
-    assert(or.depth == 0)
+    assert(depthOf(toks, or) == 0)
     val x = toks.find(t => t.text == "x").get
-    assert(x.depth == 2)
+    assert(depthOf(toks, x) == 2)
     val closers = toks.filter(_.text == ")")
-    assert(closers.map(_.depth) == Vector(1, 0))
+    assert(closers.map(depthOf(toks, _)) == Vector(1, 0))
   }
 
   test("@ without whitespace tokenizes (the r12 trap)") {
@@ -80,10 +82,11 @@ class PromQLLexerSpec extends AnyFunSuite {
   test("depth clamps at 0 after stray closers — top-level tokens after " +
       "an unbalanced ')' still read as top-level (r15)") {
     val toks = lex(") a or b")
-    assert(toks.forall(_.depth >= 0))
+    assert(depths(toks, 0, toks.length).forall(_ >= 0))
     val or = toks.find(t => t.kind == Ident && t.text == "or").get
-    assert(or.depth == 0)
+    assert(depthOf(toks, or) == 0)
     // balanced input unchanged by the clamp
-    assert(lex("sum(a) or b").find(_.text == "or").get.depth == 0)
+    val balanced = lex("sum(a) or b")
+    assert(depthOf(balanced, balanced.find(_.text == "or").get) == 0)
   }
 }

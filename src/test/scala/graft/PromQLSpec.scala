@@ -97,6 +97,26 @@ class PromQLSpec extends AnyFunSuite {
     assert(SimplePromQL.parseDurationMs("2d") == 172800000L)
     intercept[PromQLError](SimplePromQL.parseDurationMs("5x"))
   }
+
+  /** Replays `promql_parse_corpus.tsv`, written by [[PromQLCorpus]] from
+    * the string-slicing parser of commit f265c4a: every query the PromQL
+    * specs, GatewaySpec and the registry's 42 PromQL queries parse,
+    * perfbench's templates and the parser fuzz's 3,000 strings, each with
+    * its `Query` or message.
+    */
+  test("golden parse corpus: every input keeps its query or its message") {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/promql_parse_corpus.tsv"), "UTF-8")
+    val cases = try PromQLCorpus.cases(src.getLines()) finally src.close()
+    assert(cases.length > 3000)
+    val diffs = cases.flatMap { case (mode, q, want) =>
+      val got = PromQLCorpus.result(mode, q)
+      if (got == want) None
+      else Some(s"$mode '$q'\n  want $want\n  got  $got")
+    }
+    assert(diffs.isEmpty, s"${diffs.length} of ${cases.length} differ:\n" +
+      diffs.take(40).mkString("\n"))
+  }
 }
 
 class ExtendedPromQLSpec extends SparkSpec {
@@ -483,6 +503,12 @@ class ExtendedPromQLSpec extends SparkSpec {
         assert(ms.contains(LabelMatcher.Eq("note", "a @ 5")))
       case other => fail(s"unexpected: $other")
     }
+    // a time whose microseconds overflow a Long rejects, as Prometheus
+    // does ("timestamp out of bounds for @ modifier"), instead of
+    // saturating to Long.MaxValue
+    assert(intercept[PromQLError] {
+      ExtendedPromQL.parse("view @ 99999999999999999999", now)
+    }.message.contains("out of bounds for @ modifier"))
   }
 
   test("@ start()/end() anchors resolve against the provided range") {

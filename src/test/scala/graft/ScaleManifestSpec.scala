@@ -24,6 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScaleManifestSpec extends AnyFunSuite {
 
+  private val sf = "/root/testdata/sf0.001"
+
   test("SCALE_MANIFEST.json: full-registry coverage, every flagged " +
     "super-linear query carries a recorded exemption") {
     val f = new java.io.File("SCALE_MANIFEST.json")
@@ -119,7 +121,6 @@ class ScaleManifestSpec extends AnyFunSuite {
     "names are stripped") {
     import graft.tools.ScaleProbe.{finalPlan, stablePlan}
     val spark = SparkSpec.spark
-    val sf = "/root/testdata/sf0.001"
     // q82 plans a typed fold (JVM lambdas), q124 a label-map filter
     // (lambda variables)
     for (q <- Seq("q82_promql_holt_winters", "q124_promql_topk_by")) {
@@ -129,5 +130,22 @@ class ScaleManifestSpec extends AnyFunSuite {
       assert("#\\d|plan_id=\\d|lambda [a-z]+_\\d|Lambda\\$\\d".r
         .findFirstIn(stablePlan(a)).isEmpty, q)
     }
+  }
+
+  test("ScaleProbe --plans writes byte-identical logical plans for two " +
+    "builds of a broadcast-join query") {
+    // q52 joins two small sides: AQE builds whichever finishes first, so
+    // its final plan may differ between two runs; its logical plan not
+    val spark = SparkSpec.spark
+    val q = "q52_promql_binary"
+    val files = Seq("a", "b").map { run =>
+      val dir = graft.TempDirs.create(s"plans_$run").toFile
+      graft.tools.ScaleProbe.writePlans(dir, q,
+        SparkEntry.queries(q)(spark, sf))
+      java.nio.file.Files.readAllBytes(
+        new java.io.File(dir, s"$q.logical.txt").toPath)
+    }
+    assert(new String(files.head, "UTF-8").contains("Join"))
+    assert(files.head.sameElements(files(1)))
   }
 }
