@@ -272,6 +272,13 @@ object LinearRegex {
   val MaxProgramSize = 20000
   val MaxPatternLength = 4000
 
+  /** Group nesting cap: the parser and the emitter recurse once per
+    * nested group on the caller's stack, and a default-size thread
+    * stack overflows somewhere between 900 and 2,000 levels, inside
+    * [[MaxPatternLength]]. Deeper patterns reject instead.
+    */
+  val MaxGroupDepth = 128
+
   final class Program(
       val op: Array[Int], val a1: Array[Int], val a2: Array[Int],
       val cls: Array[CharSet]) extends Serializable {
@@ -392,6 +399,7 @@ object LinearRegex {
   private final class Parser(pat: String) {
     private var pos = 0
     private var groupCount = 0
+    private var depth = 0
     val names = scala.collection.mutable.Map[String, Int]()
 
     private def err(msg: String): Nothing =
@@ -527,6 +535,13 @@ object LinearRegex {
     }
 
     private def group(f: Flags): Either[Flags, Ast] = {
+      depth += 1
+      if (depth > MaxGroupDepth)
+        err(s"groups nest deeper than $MaxGroupDepth levels")
+      try groupBody(f) finally depth -= 1
+    }
+
+    private def groupBody(f: Flags): Either[Flags, Ast] = {
       if (peek == '?') {
         pos += 1
         peek match {

@@ -386,6 +386,10 @@ final class Gateway(
           case e: IllegalArgumentException => respondError(x, 400, e.getMessage)
           case e: NoSuchElementException => respondError(x, 404, e.getMessage)
           case e: Exception => respondError(x, 500, String.valueOf(e.getMessage))
+          // the one Error a request can provoke on its own: the stack
+          // unwound, so the thread is fit to answer
+          case _: StackOverflowError =>
+            respondError(x, 500, "request nests too deeply to evaluate")
         } finally {
           // cancel returns false when the watchdog already fired — its
           // 408 write may still be queued on (or mid-flight in) the
@@ -1547,7 +1551,6 @@ final class Gateway(
     * response goes out.
     */
   private def handleLineage(x: HttpExchange, p: Map[String, String]): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val df = (p.get("view"), p.get("query")) match {
       case (Some(v), None) =>
         require(v.matches("[A-Za-z0-9_.]+"), s"invalid view name: $v")
@@ -1567,12 +1570,12 @@ final class Gateway(
       val lin = graft.plans.Lineage.columnLineage(df)
       val cols = df.schema.fieldNames.map { c =>
         val srcs = lin.getOrElse(c, Set.empty).toSeq.sorted
-          .map(s => s""""${esc(s)}"""").mkString(",")
-        s""""${esc(c)}":[$srcs]"""
+          .map(jsonStr).mkString(",")
+        s"""${jsonStr(c)}:[$srcs]"""
       }.mkString(",")
       val target = p.get("view").orElse(p.get("query")).get
       respond(x, 200, "application/json",
-        s"""{"target":"${esc(target)}","columns":{$cols}}""")
+        s"""{"target":${jsonStr(target)},"columns":{$cols}}""")
     } finally graft.pipeline.PipelineCache.free(df)
   }
 

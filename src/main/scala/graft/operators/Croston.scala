@@ -51,40 +51,19 @@ object Croston {
       .repartition(col("item"))
       .sortWithinPartitions("item", "period")
       .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Long, Long, Double, Double)] {
-          private var pending: Option[(Long, Long, Double, Double)] =
-            None
-          private def advance(): Unit = {
-            pending = None
-            while (pending.isEmpty && buf.hasNext) {
-              val head = buf.next()
-              val id = head.item
-              var n = 1L
-              var z = head.qty
-              var p = 0.0
-              var lastPeriod = head.period
-              while (buf.hasNext && buf.head.item == id) {
-                val s = buf.next()
-                val gap = (s.period - lastPeriod).toDouble
-                z = z + alpha * (s.qty - z)
-                p = if (n == 1L) gap else p + alpha * (gap - p)
-                lastPeriod = s.period
-                n += 1
-              }
-              if (n >= minDemands) pending = Some((id, n, z, p))
-            }
+        SeriesFold.perRun(it)(_.item) { (head, rest) =>
+          var n = 1L
+          var z = head.qty
+          var p = 0.0
+          var lastPeriod = head.period
+          rest.foreach { s =>
+            val gap = (s.period - lastPeriod).toDouble
+            z = z + alpha * (s.qty - z)
+            p = if (n == 1L) gap else p + alpha * (gap - p)
+            lastPeriod = s.period
+            n += 1
           }
-          override def hasNext: Boolean = {
-            if (pending.isEmpty) advance()
-            pending.isDefined
-          }
-          override def next(): (Long, Long, Double, Double) = {
-            if (pending.isEmpty) advance()
-            val v = pending.get
-            pending = None
-            v
-          }
+          if (n >= minDemands) Some((head.item, n, z, p)) else None
         }
       }
       .toDF("item", "n_demands", "z_size", "p_interval")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** One-sided (upper) CUSUM change-point detection per series — the
   * classic Page cumulative-sum chart: accumulate excursions above a
@@ -34,13 +33,7 @@ object Cusum {
     require(slack >= 0 && threshold > 0,
       "slack must be >= 0 and threshold positive")
     import samples.sparkSession.implicits._
-    samples
-      .select(col("sensor_id").cast("string"),
-        col("timestamp_us").cast("long"),
-        col("value").cast("double"))
-      .as[Sample]
-      .repartition(col("sensor_id"))
-      .sortWithinPartitions("sensor_id", "timestamp_us", "value")
+    SeriesFold.sorted[Sample](samples)
       .mapPartitions { it =>
         var currentId: String = null
         var s = 0.0

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Per-series exponentially-weighted moving average — the time-decayed
   * mean every monitoring stack ships (Prometheus keeps the
@@ -41,13 +40,7 @@ object Ewma {
   def smooth(samples: DataFrame, alpha: Double): DataFrame = {
     require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
     import samples.sparkSession.implicits._
-    samples
-      .select(col("sensor_id").cast("string"),
-        col("timestamp_us").cast("long"),
-        col("value").cast("double"))
-      .as[Sample]
-      .repartition(col("sensor_id"))
-      .sortWithinPartitions("sensor_id", "timestamp_us", "value")
+    SeriesFold.sorted[Sample](samples)
       .mapPartitions { it =>
         var currentId: String = null
         var level = 0.0
@@ -74,13 +67,7 @@ object Ewma {
   def smoothHalfLife(samples: DataFrame, halfLifeUs: Long): DataFrame = {
     require(halfLifeUs > 0, "halfLifeUs must be positive")
     import samples.sparkSession.implicits._
-    samples
-      .select(col("sensor_id").cast("string"),
-        col("timestamp_us").cast("long"),
-        col("value").cast("double"))
-      .as[Sample]
-      .repartition(col("sensor_id"))
-      .sortWithinPartitions("sensor_id", "timestamp_us", "value")
+    SeriesFold.sorted[Sample](samples)
       .mapPartitions { it =>
         var currentId: String = null
         var level = 0.0

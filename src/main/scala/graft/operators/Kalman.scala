@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Per-series scalar Kalman filter for the random-walk + observation-
   * noise model (the "level" filter behind most sensor-smoothing
@@ -44,47 +43,21 @@ object Kalman {
       p0: Double = 1.0): DataFrame = {
     require(q > 0 && r > 0 && p0 > 0, "variances must be positive")
     import samples.sparkSession.implicits._
-    samples
-      .select(col("sensor_id").cast("string"),
-        col("timestamp_us").cast("long"),
-        col("value").cast("double"))
-      .as[Sample]
-      .repartition(col("sensor_id"))
-      .sortWithinPartitions("sensor_id", "timestamp_us", "value")
+    SeriesFold.sorted[Sample](samples)
       .mapPartitions { it =>
-        // fold runs per contiguous series group; emit one row per
-        // series at each group boundary
-        val buf = it.buffered
-        new Iterator[(String, Long, Double, Double)] {
-          private var pending: Option[(String, Long, Double, Double)] =
-            None
-          private def advance(): Unit = {
-            if (!buf.hasNext) { pending = None; return }
-            val head = buf.next()
-            val id = head.sensor_id
-            var n = 1L
-            var x = head.value
-            var p = p0
-            while (buf.hasNext && buf.head.sensor_id == id) {
-              val s = buf.next()
-              val pp = p + q
-              val kk = pp / (pp + r)
-              x = x + kk * (s.value - x)
-              p = (1.0 - kk) * pp
-              n += 1
-            }
-            pending = Some((id, n, x, p))
+        // one row per series, at the end of its contiguous run
+        SeriesFold.perRun(it)(_.sensor_id) { (head, rest) =>
+          var n = 1L
+          var x = head.value
+          var p = p0
+          rest.foreach { s =>
+            val pp = p + q
+            val kk = pp / (pp + r)
+            x = x + kk * (s.value - x)
+            p = (1.0 - kk) * pp
+            n += 1
           }
-          override def hasNext: Boolean = {
-            if (pending.isEmpty) advance()
-            pending.isDefined
-          }
-          override def next(): (String, Long, Double, Double) = {
-            if (pending.isEmpty) advance()
-            val v = pending.get
-            pending = None
-            v
-          }
+          Some((head.sensor_id, n, x, p))
         }
       }
       .toDF("sensor_id", "n_samples", "level", "p_var")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Page–Hinkley change detector per series — the sequential mean-shift
   * test (Page 1954, Hinkley 1971) that CUSUM users reach for when the
@@ -39,50 +38,22 @@ object PageHinkley {
       lambda: Double = 5.0): DataFrame = {
     require(lambda > 0, "lambda must be positive")
     import samples.sparkSession.implicits._
-    samples
-      .select(col("sensor_id").cast("string"),
-        col("timestamp_us").cast("long"),
-        col("value").cast("double"))
-      .as[Sample]
-      .repartition(col("sensor_id"))
-      .sortWithinPartitions("sensor_id", "timestamp_us", "value")
+    SeriesFold.sorted[Sample](samples)
       .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(String, Long, Double, Double, Double, Boolean)] {
-          private var pending
-            : Option[(String, Long, Double, Double, Double, Boolean)] =
-            None
-          private def advance(): Unit = {
-            if (!buf.hasNext) { pending = None; return }
-            val head = buf.next()
-            val id = head.sensor_id
-            var n = 1L
-            var mean = head.value
-            var m = -delta
-            var mn = m
-            var exc = 0.0
-            while (buf.hasNext && buf.head.sensor_id == id) {
-              val s = buf.next()
-              n += 1
-              mean = mean + (s.value - mean) / n.toDouble
-              m = m + (s.value - mean - delta)
-              if (m < mn) mn = m
-              if (m - mn > exc) exc = m - mn
-              ()
-            }
-            pending = Some((id, n, m, mn, exc, exc > lambda))
+        SeriesFold.perRun(it)(_.sensor_id) { (head, rest) =>
+          var n = 1L
+          var mean = head.value
+          var m = -delta
+          var mn = m
+          var exc = 0.0
+          rest.foreach { s =>
+            n += 1
+            mean = mean + (s.value - mean) / n.toDouble
+            m = m + (s.value - mean - delta)
+            if (m < mn) mn = m
+            if (m - mn > exc) exc = m - mn
           }
-          override def hasNext: Boolean = {
-            if (pending.isEmpty) advance()
-            pending.isDefined
-          }
-          override def next()
-            : (String, Long, Double, Double, Double, Boolean) = {
-            if (pending.isEmpty) advance()
-            val v = pending.get
-            pending = None
-            v
-          }
+          Some((head.sensor_id, n, m, mn, exc, exc > lambda))
         }
       }
       .toDF("sensor_id", "n_samples", "ph_m", "ph_min", "max_excess",

@@ -51,38 +51,20 @@ object Sprt {
       .repartition(col("trial"))
       .sortWithinPartitions("trial", "seq")
       .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(String, Long, Double, Int, Long)] {
-          private var pending: Option[(String, Long, Double, Int, Long)] =
-            None
-          private def advance(): Unit = {
-            if (!buf.hasNext) { pending = None; return }
-            var n = 0L
-            var llr = 0.0
-            var dec = 0
-            var nStop = 0L
-            val id = buf.head.trial
-            while (buf.hasNext && buf.head.trial == id) {
-              val o = buf.next()
-              n += 1
-              if (dec == 0) {
-                llr = llr + (if (o.success == 1) ls else lf)
-                if (llr >= a) { dec = 1; nStop = n }
-                else if (llr <= b) { dec = -1; nStop = n }
-              }
+        SeriesFold.perRun(it)(_.trial) { (head, rest) =>
+          var n = 0L
+          var llr = 0.0
+          var dec = 0
+          var nStop = 0L
+          (Iterator.single(head) ++ rest).foreach { o =>
+            n += 1
+            if (dec == 0) {
+              llr = llr + (if (o.success == 1) ls else lf)
+              if (llr >= a) { dec = 1; nStop = n }
+              else if (llr <= b) { dec = -1; nStop = n }
             }
-            pending = Some((id, n, llr, dec, nStop))
           }
-          override def hasNext: Boolean = {
-            if (pending.isEmpty) advance()
-            pending.isDefined
-          }
-          override def next(): (String, Long, Double, Int, Long) = {
-            if (pending.isEmpty) advance()
-            val v = pending.get
-            pending = None
-            v
-          }
+          Some((head.trial, n, llr, dec, nStop))
         }
       }
       .toDF("trial", "n_obs", "llr", "decision", "n_at_decision")

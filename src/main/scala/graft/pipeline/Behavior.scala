@@ -754,6 +754,21 @@ object Behavior {
         round(col("__risk"), 6).as("risk_ratio"))
   }
 
+  /** Each order as (cust, `__mi` month index year·12 + month − 1,
+    * `__cents` exact amount in cents): the input of [[ltvCurve]] and
+    * [[newVsReturning]].
+    */
+  private def orderMonths(
+      orders: DataFrame, custCol: String, tsCol: String,
+      amountCol: String): DataFrame = {
+    val monthIdx = expr(s"year(`$tsCol`) * 12 + month(`$tsCol`) - 1")
+      .cast("long")
+    orders.select(col(custCol).as("cust"),
+      monthIdx.as("__mi"),
+      (col(amountCol).cast("decimal(18,2)") * 100).cast("long")
+        .as("__cents"))
+  }
+
   /** Cohort LTV curve: average cumulative spend per customer by
     * cohort age — customers cohorted by their first-order month, each
     * (cohort, month-offset) cell accumulating exact cent revenue, the
@@ -772,12 +787,7 @@ object Behavior {
   def ltvCurve(
       orders: DataFrame, custCol: String, tsCol: String,
       amountCol: String): DataFrame = {
-    val monthIdx = expr(s"year(`$tsCol`) * 12 + month(`$tsCol`) - 1")
-      .cast("long")
-    val base = orders.select(col(custCol).as("cust"),
-      monthIdx.as("__mi"),
-      (col(amountCol).cast("decimal(18,2)") * 100).cast("long")
-        .as("__cents"))
+    val base = orderMonths(orders, custCol, tsCol, amountCol)
     val cohort = base.groupBy(col("cust"))
       .agg(min(col("__mi")).as("__c0"))
     val sizes = cohort.groupBy(col("__c0").as("cohort_month"))
@@ -809,12 +819,7 @@ object Behavior {
   def newVsReturning(
       orders: DataFrame, custCol: String, tsCol: String,
       amountCol: String): DataFrame = {
-    val monthIdx = expr(s"year(`$tsCol`) * 12 + month(`$tsCol`) - 1")
-      .cast("long")
-    val base = orders.select(col(custCol).as("cust"),
-      monthIdx.as("__mi"),
-      (col(amountCol).cast("decimal(18,2)") * 100).cast("long")
-        .as("__cents"))
+    val base = orderMonths(orders, custCol, tsCol, amountCol)
     // cohort month = min month over a customer-keyed window — ONE
     // exchange of the order rows, where the former groupBy-cohort +
     // join-back paid a second full exchange and a join whose strategy
@@ -899,6 +904,30 @@ object Behavior {
           .as("jaccard"))
   }
 
+  /** The lifetime tables of [[kaplanMeier]], [[nelsonAalen]] and
+    * [[rmstDays]]: `durs`, per user the whole days between first and
+    * last event with `__death` = 1 unless the last event falls within
+    * `censorHorizonUs` of the corpus end; `byDur`, per duration the
+    * users `__c` and deaths `d`.
+    */
+  private def lifetimes(
+      events: DataFrame, userCol: String, tsCol: String,
+      censorHorizonUs: Long): (DataFrame, DataFrame) = {
+    val lif = events
+      .select(col(userCol).as("user"),
+        col(tsCol).cast("long").as("__t"))
+      .groupBy(col("user"))
+      .agg(min(col("__t")).as("__first"), max(col("__t")).as("__last"))
+    val gmax = broadcast(lif.agg(max(col("__last")).as("__gmax")))
+    val durs = lif.crossJoin(gmax).select(
+      expr("(__last - __first) div 86400000000").as("dur"),
+      (col("__last") < col("__gmax") - censorHorizonUs).cast("int")
+        .as("__death"))
+    val byDur = durs.groupBy(col("dur"))
+      .agg(count(lit(1)).as("__c"), sum(col("__death")).as("d"))
+    (durs, byDur)
+  }
+
   /** Kaplan–Meier survival curve over user lifetimes: duration = days
     * between a user's first and last event; users whose last event
     * falls within `censorHorizonUs` of the corpus end are censored
@@ -924,18 +953,8 @@ object Behavior {
       events: DataFrame, userCol: String, tsCol: String,
       censorHorizonUs: Long = 7L * 86400000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lif = events
-      .select(col(userCol).as("user"),
-        col(tsCol).cast("long").as("__t"))
-      .groupBy(col("user"))
-      .agg(min(col("__t")).as("__first"), max(col("__t")).as("__last"))
-    val gmax = broadcast(lif.agg(max(col("__last")).as("__gmax")))
-    val durs = lif.crossJoin(gmax).select(
-      expr("(__last - __first) div 86400000000").as("dur"),
-      (col("__last") < col("__gmax") - censorHorizonUs).cast("int")
-        .as("__death"))
-    val byDur = durs.groupBy(col("dur"))
-      .agg(count(lit(1)).as("__c"), sum(col("__death")).as("d"))
+    val (durs, byDur) =
+      lifetimes(events, userCol, tsCol, censorHorizonUs)
     val tot = broadcast(durs.agg(count(lit(1)).as("__n")))
     val wAsc = Window.orderBy(col("dur"))
     val before = byDur.crossJoin(tot)
@@ -981,18 +1000,8 @@ object Behavior {
       events: DataFrame, userCol: String, tsCol: String,
       censorHorizonUs: Long = 7L * 86400000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lif = events
-      .select(col(userCol).as("user"),
-        col(tsCol).cast("long").as("__t"))
-      .groupBy(col("user"))
-      .agg(min(col("__t")).as("__first"), max(col("__t")).as("__last"))
-    val gmax = broadcast(lif.agg(max(col("__last")).as("__gmax")))
-    val durs = lif.crossJoin(gmax).select(
-      expr("(__last - __first) div 86400000000").as("dur"),
-      (col("__last") < col("__gmax") - censorHorizonUs).cast("int")
-        .as("__death"))
-    val byDur = durs.groupBy(col("dur"))
-      .agg(count(lit(1)).as("__c"), sum(col("__death")).as("d"))
+    val (durs, byDur) =
+      lifetimes(events, userCol, tsCol, censorHorizonUs)
     val tot = broadcast(durs.agg(count(lit(1)).as("__n")))
     val wAsc = Window.orderBy(col("dur"))
     byDur.crossJoin(tot)
@@ -1079,18 +1088,8 @@ object Behavior {
       events: DataFrame, userCol: String, tsCol: String,
       censorHorizonUs: Long = 7L * 86400000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lif = events
-      .select(col(userCol).as("user"),
-        col(tsCol).cast("long").as("__t"))
-      .groupBy(col("user"))
-      .agg(min(col("__t")).as("__first"), max(col("__t")).as("__last"))
-    val gmax = broadcast(lif.agg(max(col("__last")).as("__gmax")))
-    val durs = lif.crossJoin(gmax).select(
-      expr("(__last - __first) div 86400000000").as("dur"),
-      (col("__last") < col("__gmax") - censorHorizonUs).cast("int")
-        .as("__death"))
-    val byDur = durs.groupBy(col("dur"))
-      .agg(count(lit(1)).as("__c"), sum(col("__death")).as("d"))
+    val (durs, byDur) =
+      lifetimes(events, userCol, tsCol, censorHorizonUs)
     val tot = broadcast(durs.agg(count(lit(1)).as("__n"),
       max(col("dur")).as("__tau")))
     val wAsc = Window.orderBy(col("dur"))

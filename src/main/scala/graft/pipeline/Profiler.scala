@@ -914,10 +914,8 @@ object Profiler {
     val run = bucketed.withColumn("__cum", sum(col("__cnt")).over(wIn))
     val totals = run.groupBy(col("__bucket"))
       .agg(sum(col("__cnt")).as("__tot"))
-    val wCarry = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__bucket")).rowsBetween(Long.MinValue, -1)
     val carried = totals.withColumn("__carry",
-      coalesce(sum(col("__tot")).over(wCarry), lit(0L)))
+      coalesce(sum(col("__tot")).over(bucketsBelow), lit(0L)))
     run.join(broadcast(carried.select(col("__bucket"), col("__carry"))),
         "__bucket")
       .select(col("__v").as("value"),
@@ -961,6 +959,33 @@ object Profiler {
         (col("__n").cast("double") * col("__sx")), 6).as("gini"))
   }
 
+  /** `vc` (one row per distinct long `__v`) with `__bucket`, its
+    * equal-width bucket of [min, max] among `buckets`: the partition
+    * key of the bucketed DISTRIBUTED prefix counts ([[valueRanks]],
+    * [[liftTable]], [[abcClassification]]).
+    */
+  private def withValueBucket(vc: DataFrame, buckets: Int): DataFrame = {
+    val bounds = broadcast(vc.agg(
+      min(col("__v")).as("__lo"), max(col("__v")).as("__hi")))
+    vc.crossJoin(bounds).withColumn("__bucket",
+      when(col("__hi") === col("__lo"), lit(0L)).otherwise(
+        least(lit(buckets - 1L),
+          floor((col("__v") - col("__lo")).cast("double") /
+            ((col("__hi") - col("__lo")).cast("double") / buckets))
+            .cast("long"))))
+  }
+
+  /** The rows of the current `__bucket` below the current `__v`. */
+  private def belowInBucket = org.apache.spark.sql.expressions.Window
+    .partitionBy(col("__bucket")).orderBy(col("__v"))
+    .rowsBetween(Long.MinValue, -1)
+
+  /** The `__bucket`s below the current one: the carry of the per-bucket
+    * totals.
+    */
+  private def bucketsBelow = org.apache.spark.sql.expressions.Window
+    .orderBy(col("__bucket")).rowsBetween(Long.MinValue, -1)
+
   /** Distinct-value rank table for integer-unit distributions: one row
     * per distinct value with its multiplicity and the exact count of
     * rows strictly below it, from the bucketed DISTRIBUTED prefix
@@ -973,25 +998,12 @@ object Profiler {
     val vc = df.select(col(valueCol).cast("long").as("__v"))
       .filter(col("__v").isNotNull)
       .groupBy(col("__v")).agg(count(lit(1)).as("__m"))
-    val bounds = broadcast(vc.agg(
-      min(col("__v")).as("__lo"), max(col("__v")).as("__hi")))
-    val bucketed = vc.crossJoin(bounds).withColumn("__bucket",
-      when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-        least(lit(buckets - 1L),
-          floor((col("__v") - col("__lo")).cast("double") /
-            ((col("__hi") - col("__lo")).cast("double") / buckets))
-            .cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__bucket")).orderBy(col("__v"))
-      .rowsBetween(Long.MinValue, -1)
-    val run = bucketed.withColumn("__cin",
-      coalesce(sum(col("__m")).over(wIn), lit(0L)))
+    val run = withValueBucket(vc, buckets).withColumn("__cin",
+      coalesce(sum(col("__m")).over(belowInBucket), lit(0L)))
     val totals = run.groupBy(col("__bucket"))
       .agg(sum(col("__m")).as("__tot"))
-    val wCarry = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__bucket")).rowsBetween(Long.MinValue, -1)
     val carried = totals.withColumn("__carry",
-      coalesce(sum(col("__tot")).over(wCarry), lit(0L)))
+      coalesce(sum(col("__tot")).over(bucketsBelow), lit(0L)))
     run
       .join(broadcast(carried.select(col("__bucket"), col("__carry"))),
         "__bucket")
@@ -1072,27 +1084,18 @@ object Profiler {
         col(labelCol).cast("long").as("__lab"))
       .groupBy(col("__v"))
       .agg(count(lit(1)).as("__m"), sum(col("__lab")).as("__pos"))
-    val bounds = broadcast(vc.agg(
-      min(col("__v")).as("__lo"), max(col("__v")).as("__hi")))
-    val bucketed = vc.crossJoin(bounds).withColumn("__bucket",
-      when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-        least(lit(buckets - 1L),
-          floor((col("__v") - col("__lo")).cast("double") /
-            ((col("__hi") - col("__lo")).cast("double") / buckets))
-            .cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__bucket")).orderBy(col("__v"))
-      .rowsBetween(Long.MinValue, -1)
-    val run = bucketed
-      .withColumn("__cin", coalesce(sum(col("__m")).over(wIn), lit(0L)))
-      .withColumn("__pin", coalesce(sum(col("__pos")).over(wIn), lit(0L)))
+    val run = withValueBucket(vc, buckets)
+      .withColumn("__cin",
+        coalesce(sum(col("__m")).over(belowInBucket), lit(0L)))
+      .withColumn("__pin",
+        coalesce(sum(col("__pos")).over(belowInBucket), lit(0L)))
     val totals = run.groupBy(col("__bucket"))
       .agg(sum(col("__m")).as("__tm"), sum(col("__pos")).as("__tp"))
-    val wCarry = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__bucket")).rowsBetween(Long.MinValue, -1)
     val carried = totals
-      .withColumn("__cm", coalesce(sum(col("__tm")).over(wCarry), lit(0L)))
-      .withColumn("__cp", coalesce(sum(col("__tp")).over(wCarry), lit(0L)))
+      .withColumn("__cm",
+        coalesce(sum(col("__tm")).over(bucketsBelow), lit(0L)))
+      .withColumn("__cp",
+        coalesce(sum(col("__tp")).over(bucketsBelow), lit(0L)))
     val ranked = run
       .join(broadcast(carried.select(col("__bucket"), col("__cm"),
         col("__cp"))), "__bucket")
@@ -1229,6 +1232,24 @@ object Profiler {
       df: DataFrame, seriesCol: String, tsCol: String, valCol: String,
       maxLag: Int = 3, unitsPerValue: Double = 1e6): DataFrame = {
     require(maxLag >= 1, "need at least lag 1")
+    val one = lagMoments(df, seriesCol, tsCol, valCol, maxLag, unitsPerValue)
+    val cells = (1 to maxLag).map { k =>
+      s"$k, CAST(`__n$k` AS BIGINT), round(${lagCorr(k)}, 6)"
+    }.mkString(", ")
+    one.selectExpr(seriesCol,
+      s"stack($maxLag, $cells) AS (lag_k, n_pairs, acf)")
+  }
+
+  /** Per series: the `leading` aggregates, then for each lag k in
+    * 1..`maxLag` the exact µ-unit moments of the values with a k-step
+    * predecessor in (time, value) order — pair count `__n<k>` and the
+    * sums `__sx<k>`, `__sxx<k>`, `__sy<k>`, `__syy<k>`, `__sxy<k>` —
+    * from one keyed window sort and one aggregate.
+    */
+  private def lagMoments(
+      df: DataFrame, seriesCol: String, tsCol: String, valCol: String,
+      maxLag: Int, unitsPerValue: Double,
+      leading: Seq[Column] = Nil): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(seriesCol)).orderBy(col(tsCol), col("__vq"))
     val lagged = (1 to maxLag).foldLeft(
@@ -1237,7 +1258,7 @@ object Profiler {
       acc.withColumn(s"__l$k", lag(col("__vq"), k).over(w))
     }
     def dsum0(c: Column) = sum(c.cast("decimal(38,0)")).cast("double")
-    val aggs = (1 to maxLag).flatMap { k =>
+    val aggs = leading ++ (1 to maxLag).flatMap { k =>
       val y = col(s"__l$k")
       val on = y.isNotNull
       Seq(
@@ -1248,17 +1269,16 @@ object Profiler {
         dsum0(y * y).as(s"__syy$k"),
         dsum0(col("__vq") * y).as(s"__sxy$k"))
     }
-    val one = lagged.groupBy(col(seriesCol))
-      .agg(aggs.head, aggs.tail: _*)
-    val cells = (1 to maxLag).map { k =>
-      s"$k, CAST(`__n$k` AS BIGINT), round(try_divide(" +
-        s"`__n$k` * `__sxy$k` - `__sx$k` * `__sy$k`," +
-        s" sqrt(`__n$k` * `__sxx$k` - `__sx$k` * `__sx$k`)" +
-        s" * sqrt(`__n$k` * `__syy$k` - `__sy$k` * `__sy$k`)), 6)"
-    }.mkString(", ")
-    one.selectExpr(seriesCol,
-      s"stack($maxLag, $cells) AS (lag_k, n_pairs, acf)")
+    lagged.groupBy(col(seriesCol)).agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The lag-k sample correlation over [[lagMoments]]' sums; null for a
+    * degenerate series.
+    */
+  private def lagCorr(k: Int): String =
+    s"try_divide(`__n$k` * `__sxy$k` - `__sx$k` * `__sy$k`," +
+      s" sqrt(`__n$k` * `__sxx$k` - `__sx$k` * `__sx$k`)" +
+      s" * sqrt(`__n$k` * `__syy$k` - `__sy$k` * `__sy$k`))"
 
   /** Partial autocorrelation at lags 1–3 via the Durbin–Levinson
     * recursion on the [[autocorrelation]] sample correlations — the
@@ -1281,35 +1301,11 @@ object Profiler {
   def pacf3(
       df: DataFrame, seriesCol: String, tsCol: String, valCol: String,
       unitsPerValue: Double = 1e6): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(seriesCol)).orderBy(col(tsCol), col("__vq"))
-    val lagged = (1 to 3).foldLeft(
-      df.select(col(seriesCol), col(tsCol),
-        microUnits(col(valCol), unitsPerValue).as("__vq"))) { (acc, k) =>
-      acc.withColumn(s"__l$k", lag(col("__vq"), k).over(w))
-    }
-    def dsum0(c: Column) = sum(c.cast("decimal(38,0)")).cast("double")
-    val aggs = (1 to 3).flatMap { k =>
-      val y = col(s"__l$k")
-      val on = y.isNotNull
-      Seq(
-        count(y).cast("double").as(s"__n$k"),
-        dsum0(when(on, col("__vq"))).as(s"__sx$k"),
-        dsum0(when(on, col("__vq") * col("__vq"))).as(s"__sxx$k"),
-        dsum0(y).as(s"__sy$k"),
-        dsum0(y * y).as(s"__syy$k"),
-        dsum0(col("__vq") * y).as(s"__sxy$k"))
-    }
-    val one = lagged.groupBy(col(seriesCol))
-      .agg(aggs.head, aggs.tail: _*)
-    def rExpr(k: Int): String =
-      s"try_divide(`__n$k` * `__sxy$k` - `__sx$k` * `__sy$k`," +
-        s" sqrt(`__n$k` * `__sxx$k` - `__sx$k` * `__sx$k`)" +
-        s" * sqrt(`__n$k` * `__syy$k` - `__sy$k` * `__sy$k`))"
+    val one = lagMoments(df, seriesCol, tsCol, valCol, 3, unitsPerValue)
     one
       .selectExpr(seriesCol, s"CAST(`__n1` AS BIGINT) AS n_pairs1",
-        s"${rExpr(1)} AS __r1", s"${rExpr(2)} AS __r2",
-        s"${rExpr(3)} AS __r3")
+        s"${lagCorr(1)} AS __r1", s"${lagCorr(2)} AS __r2",
+        s"${lagCorr(3)} AS __r3")
       .selectExpr(seriesCol, "n_pairs1", "__r1", "__r2", "__r3",
         "try_divide(__r2 - __r1 * __r1, 1.0D - __r1 * __r1) AS __f22")
       .selectExpr(seriesCol, "n_pairs1", "__r1", "__r2", "__r3",
@@ -2046,25 +2042,12 @@ object Profiler {
       .filter(col("__v").isNotNull)
       .groupBy(col("__v")).agg(count(lit(1)).as("__m"))
       .withColumn("__mass", (-col("__v")) * col("__m"))
-    val bounds = broadcast(vc.agg(
-      min(col("__v")).as("__lo"), max(col("__v")).as("__hi")))
-    val bucketed = vc.crossJoin(bounds).withColumn("__bucket",
-      when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-        least(lit(buckets - 1L),
-          floor((col("__v") - col("__lo")).cast("double") /
-            ((col("__hi") - col("__lo")).cast("double") / buckets))
-            .cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__bucket")).orderBy(col("__v"))
-      .rowsBetween(Long.MinValue, -1)
-    val run = bucketed.withColumn("__min",
-      coalesce(sum(col("__mass")).over(wIn), lit(0L)))
+    val run = withValueBucket(vc, buckets).withColumn("__min",
+      coalesce(sum(col("__mass")).over(belowInBucket), lit(0L)))
     val totals = run.groupBy(col("__bucket"))
       .agg(sum(col("__mass")).as("__tot"))
-    val wCarry = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__bucket")).rowsBetween(Long.MinValue, -1)
     val carried = totals.withColumn("__carry",
-      coalesce(sum(col("__tot")).over(wCarry), lit(0L)))
+      coalesce(sum(col("__tot")).over(bucketsBelow), lit(0L)))
     val tot = broadcast(run.agg(sum(col("__mass")).as("__T")))
     run
       .join(broadcast(carried.select(col("__bucket"), col("__carry"))),
@@ -2850,35 +2833,12 @@ object Profiler {
   def effectiveSampleSize(
       df: DataFrame, seriesCol: String, tsCol: String,
       valCol: String, unitsPerValue: Double = 1e6): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(seriesCol)).orderBy(col(tsCol), col("__vq"))
-    val lagged = (1 to 3).foldLeft(
-      df.select(col(seriesCol), col(tsCol),
-        microUnits(col(valCol), unitsPerValue).as("__vq"))) { (acc, k) =>
-      acc.withColumn(s"__l$k", lag(col("__vq"), k).over(w))
-    }
-    def dsum0(c: Column) = sum(c.cast("decimal(38,0)")).cast("double")
-    val aggs = count(lit(1)).as("__n0") +: (1 to 3).flatMap { k =>
-      val y = col(s"__l$k")
-      val on = y.isNotNull
-      Seq(
-        count(y).cast("double").as(s"__n$k"),
-        dsum0(when(on, col("__vq"))).as(s"__sx$k"),
-        dsum0(when(on, col("__vq") * col("__vq"))).as(s"__sxx$k"),
-        dsum0(y).as(s"__sy$k"),
-        dsum0(y * y).as(s"__syy$k"),
-        dsum0(col("__vq") * y).as(s"__sxy$k"))
-    }
-    val one = lagged.groupBy(col(seriesCol))
-      .agg(aggs.head, aggs.tail: _*)
-    def rExpr(k: Int): String =
-      s"try_divide(`__n$k` * `__sxy$k` - `__sx$k` * `__sy$k`," +
-        s" sqrt(`__n$k` * `__sxx$k` - `__sx$k` * `__sx$k`)" +
-        s" * sqrt(`__n$k` * `__syy$k` - `__sy$k` * `__sy$k`))"
+    val one = lagMoments(df, seriesCol, tsCol, valCol, 3, unitsPerValue,
+      leading = Seq(count(lit(1)).as("__n0")))
     one
       .selectExpr(seriesCol, "CAST(`__n0` AS BIGINT) AS n",
-        s"${rExpr(1)} AS __r1", s"${rExpr(2)} AS __r2",
-        s"${rExpr(3)} AS __r3")
+        s"${lagCorr(1)} AS __r1", s"${lagCorr(2)} AS __r2",
+        s"${lagCorr(3)} AS __r3")
       .selectExpr(seriesCol, "n",
         "round(__r1, 6) AS rho1", "round(__r2, 6) AS rho2",
         "round(__r3, 6) AS rho3",

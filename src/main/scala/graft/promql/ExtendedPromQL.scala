@@ -864,16 +864,22 @@ object ExtendedPromQL {
         Some(t.substring(1, t.length - 1))
       else None
 
+    /** Whether tokens [lo, hi) hold a `[` — a range or subquery
+      * bracket, never one inside a quoted label value.
+      */
+    private def hasBracket(r: (Int, Int)): Boolean =
+      (r._1 until r._2).exists(is(_, Punct, "["))
+
     /** A range selector argument of `fn`. */
     private def rangeSelector(fn: String, r: (Int, Int)): ParsedQuery = {
-      if (!text(r).contains("["))
+      if (!hasBracket(r))
         throw PromQLError(s"$fn expects a range selector (like metric[5m])")
       selector(r)
     }
 
     /** An instant selector argument of `fn`. */
     private def instantSelector(what: String, r: (Int, Int)): ParsedQuery = {
-      if (text(r).contains("[")) throw PromQLError(what)
+      if (hasBracket(r)) throw PromQLError(what)
       selector(r)
     }
 

@@ -20,6 +20,36 @@ import QueryHelpers._
   */
 private[graft] object BehaviorQueries {
 
+  /** The funnel oracles' stages (q144, q221) over the first two days
+    * of events: `s0` each user's first view, `s1` the first click after
+    * it, `s2` the first purchase after that, each with its time `t`.
+    */
+  private val funnelStageCtes =
+    """e AS (
+      |  SELECT user_id, event_type, ts FROM events
+      |  WHERE epoch_us(ts) < 1704240000000000),
+      |s0 AS (SELECT user_id, min(ts) AS t FROM e
+      |  WHERE event_type = 'view' GROUP BY 1),
+      |s1 AS (SELECT e.user_id, min(e.ts) AS t FROM e
+      |  JOIN s0 USING (user_id)
+      |  WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY 1),
+      |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e
+      |  JOIN s1 USING (user_id)
+      |  WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY 1)"""
+
+  /** The order-cohort oracles' months (q240, q241): `b` each order's
+    * customer, month index and exact cents, `ch` each customer's first
+    * order month `c0`.
+    */
+  private val orderMonthCtes =
+    """b AS (SELECT o_custkey AS cust,
+      |    CAST(date_part('year', o_orderdate) * 12
+      |      + date_part('month', o_orderdate) - 1 AS BIGINT) AS mi,
+      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |      AS cents
+      |  FROM orders),
+      |ch AS (SELECT cust, MIN(mi) AS c0 FROM b GROUP BY 1)"""
+
   val registry: Seq[Q] = Seq(
 
     // URL/domain analysis (C4 ancestry): documents augmented with
@@ -140,28 +170,18 @@ private[graft] object BehaviorQueries {
     // per-stage min-aggregate chain with the same strict > gates.
     q(
       "q144_funnel",
-      """WITH e AS (
-        |  SELECT user_id, event_type, ts FROM events
-        |  WHERE epoch_us(ts) < 1704240000000000),
-        |s0 AS (SELECT user_id, min(ts) AS t FROM e
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s1 AS (SELECT e.user_id, min(e.ts) AS t FROM e
-        |  JOIN s0 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY 1),
-        |c AS (SELECT (SELECT COUNT(*) FROM s0) AS n0,
-        |  (SELECT COUNT(*) FROM s1) AS n1,
-        |  (SELECT COUNT(*) FROM s2) AS n2)
-        |SELECT 0::BIGINT AS stage_idx, 'view' AS stage,
-        |  n0 AS n_users, ROUND(n0::DOUBLE / n0::DOUBLE, 6) AS conversion
-        |FROM c
-        |UNION ALL SELECT 1::BIGINT, 'click', n1,
-        |  ROUND(n1::DOUBLE / n0::DOUBLE, 6) FROM c
-        |UNION ALL SELECT 2::BIGINT, 'purchase', n2,
-        |  ROUND(n2::DOUBLE / n0::DOUBLE, 6) FROM c
-        |ORDER BY stage_idx"""
+      s"""WITH $funnelStageCtes,
+         |c AS (SELECT (SELECT COUNT(*) FROM s0) AS n0,
+         |  (SELECT COUNT(*) FROM s1) AS n1,
+         |  (SELECT COUNT(*) FROM s2) AS n2)
+         |SELECT 0::BIGINT AS stage_idx, 'view' AS stage,
+         |  n0 AS n_users, ROUND(n0::DOUBLE / n0::DOUBLE, 6) AS conversion
+         |FROM c
+         |UNION ALL SELECT 1::BIGINT, 'click', n1,
+         |  ROUND(n1::DOUBLE / n0::DOUBLE, 6) FROM c
+         |UNION ALL SELECT 2::BIGINT, 'purchase', n2,
+         |  ROUND(n2::DOUBLE / n0::DOUBLE, 6) FROM c
+         |ORDER BY stage_idx"""
     ) { (s, d) =>
       graft.pipeline.Behavior.funnel(
           Tables.events(s, d)
@@ -271,27 +291,17 @@ private[graft] object BehaviorQueries {
     // global window exactly, by associativity.
     q(
       "q190_max_concurrency",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t, value FROM events),
-        |g AS (SELECT sensor_id, t, value,
-        |    CASE WHEN LAG(t) OVER w IS NULL
-        |         OR t - LAG(t) OVER w > 172800000000
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, value)),
-        |i AS (SELECT sensor_id, t, SUM(brk) OVER (
-        |    PARTITION BY sensor_id ORDER BY t, value
-        |    ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM g),
-        |iv AS (SELECT MIN(t) AS start_us, MAX(t) AS end_us
-        |  FROM i GROUP BY sensor_id, island),
-        |d AS (SELECT start_us AS t, 1 AS delta FROM iv
-        |  UNION ALL SELECT end_us + 1, -1 FROM iv),
-        |r AS (SELECT t, SUM(delta) OVER (
-        |    ORDER BY t, delta ROWS UNBOUNDED PRECEDING) AS c FROM d),
-        |m AS (SELECT MAX(c) AS mc FROM r)
-        |SELECT CAST(m.mc AS BIGINT) AS max_concurrent,
-        |  MIN(r.t) AS at_us
-        |FROM r, m WHERE r.c = m.mc GROUP BY m.mc"""
+      s"""WITH $sensorIslandCtes,
+         |iv AS (SELECT MIN(t) AS start_us, MAX(t) AS end_us
+         |  FROM i GROUP BY sensor_id, island),
+         |d AS (SELECT start_us AS t, 1 AS delta FROM iv
+         |  UNION ALL SELECT end_us + 1, -1 FROM iv),
+         |r AS (SELECT t, SUM(delta) OVER (
+         |    ORDER BY t, delta ROWS UNBOUNDED PRECEDING) AS c FROM d),
+         |m AS (SELECT MAX(c) AS mc FROM r)
+         |SELECT CAST(m.mc AS BIGINT) AS max_concurrent,
+         |  MIN(r.t) AS at_us
+         |FROM r, m WHERE r.c = m.mc GROUP BY m.mc"""
     ) { (s, d) =>
       graft.operators.SensorOps.maxConcurrency(
         graft.operators.SensorOps.availabilityIntervals(
@@ -470,31 +480,21 @@ private[graft] object BehaviorQueries {
     // Delays in seconds — never ROUND µs-magnitude doubles.
     q(
       "q221_funnel_delays",
-      """WITH e AS (
-        |  SELECT user_id, event_type, ts FROM events
-        |  WHERE epoch_us(ts) < 1704240000000000),
-        |s0 AS (SELECT user_id, min(ts) AS t FROM e
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s1 AS (SELECT e.user_id, min(e.ts) AS t FROM e
-        |  JOIN s0 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY 1),
-        |d1 AS (SELECT (epoch_us(s1.t) - epoch_us(s0.t)) / 1000000.0
-        |    AS ds FROM s1 JOIN s0 USING (user_id)),
-        |d2 AS (SELECT (epoch_us(s2.t) - epoch_us(s1.t)) / 1000000.0
-        |    AS ds FROM s2 JOIN s1 USING (user_id))
-        |SELECT 1::BIGINT AS stage_idx, 'view' AS from_stage,
-        |  'click' AS to_stage, COUNT(*) AS n_users,
-        |  ROUND(quantile_cont(ds, 0.5), 6) AS p50_s,
-        |  ROUND(quantile_cont(ds, 0.9), 6) AS p90_s
-        |FROM d1
-        |UNION ALL SELECT 2::BIGINT, 'click', 'purchase', COUNT(*),
-        |  ROUND(quantile_cont(ds, 0.5), 6),
-        |  ROUND(quantile_cont(ds, 0.9), 6)
-        |FROM d2
-        |ORDER BY stage_idx"""
+      s"""WITH $funnelStageCtes,
+         |d1 AS (SELECT (epoch_us(s1.t) - epoch_us(s0.t)) / 1000000.0
+         |    AS ds FROM s1 JOIN s0 USING (user_id)),
+         |d2 AS (SELECT (epoch_us(s2.t) - epoch_us(s1.t)) / 1000000.0
+         |    AS ds FROM s2 JOIN s1 USING (user_id))
+         |SELECT 1::BIGINT AS stage_idx, 'view' AS from_stage,
+         |  'click' AS to_stage, COUNT(*) AS n_users,
+         |  ROUND(quantile_cont(ds, 0.5), 6) AS p50_s,
+         |  ROUND(quantile_cont(ds, 0.9), 6) AS p90_s
+         |FROM d1
+         |UNION ALL SELECT 2::BIGINT, 'click', 'purchase', COUNT(*),
+         |  ROUND(quantile_cont(ds, 0.5), 6),
+         |  ROUND(quantile_cont(ds, 0.9), 6)
+         |FROM d2
+         |ORDER BY stage_idx"""
     ) { (s, d) =>
       graft.pipeline.Behavior.funnelDelays(
           Tables.events(s, d)
@@ -829,31 +829,25 @@ private[graft] object BehaviorQueries {
     // grid, one division by cohort size.
     q(
       "q240_ltv_curve",
-      """WITH b AS (SELECT o_custkey AS cust,
-        |    CAST(date_part('year', o_orderdate) * 12
-        |      + date_part('month', o_orderdate) - 1 AS BIGINT) AS mi,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS cents
-        |  FROM orders),
-        |ch AS (SELECT cust, MIN(mi) AS c0 FROM b GROUP BY 1),
-        |sz AS (SELECT c0 AS cohort_month, COUNT(*) AS n_customers
-        |  FROM ch GROUP BY 1),
-        |cl AS (SELECT ch.c0 AS cohort_month, b.mi - ch.c0
-        |      AS month_offset,
-        |    CAST(SUM(b.cents) AS BIGINT) AS revenue_cents
-        |  FROM b JOIN ch ON b.cust = ch.cust GROUP BY 1, 2),
-        |r AS (SELECT cl.cohort_month, cl.month_offset,
-        |    sz.n_customers, cl.revenue_cents,
-        |    CAST(SUM(cl.revenue_cents) OVER (
-        |      PARTITION BY cl.cohort_month ORDER BY cl.month_offset
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum_cents
-        |  FROM cl JOIN sz ON cl.cohort_month = sz.cohort_month)
-        |SELECT cohort_month, month_offset, n_customers, revenue_cents,
-        |  cum_cents,
-        |  ROUND(CAST(cum_cents AS DOUBLE)
-        |    / CAST(n_customers AS DOUBLE) / 100.0, 6) AS avg_ltv
-        |FROM r ORDER BY cohort_month, month_offset"""
+      s"""WITH $orderMonthCtes,
+         |sz AS (SELECT c0 AS cohort_month, COUNT(*) AS n_customers
+         |  FROM ch GROUP BY 1),
+         |cl AS (SELECT ch.c0 AS cohort_month, b.mi - ch.c0
+         |      AS month_offset,
+         |    CAST(SUM(b.cents) AS BIGINT) AS revenue_cents
+         |  FROM b JOIN ch ON b.cust = ch.cust GROUP BY 1, 2),
+         |r AS (SELECT cl.cohort_month, cl.month_offset,
+         |    sz.n_customers, cl.revenue_cents,
+         |    CAST(SUM(cl.revenue_cents) OVER (
+         |      PARTITION BY cl.cohort_month ORDER BY cl.month_offset
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |      AS BIGINT) AS cum_cents
+         |  FROM cl JOIN sz ON cl.cohort_month = sz.cohort_month)
+         |SELECT cohort_month, month_offset, n_customers, revenue_cents,
+         |  cum_cents,
+         |  ROUND(CAST(cum_cents AS DOUBLE)
+         |    / CAST(n_customers AS DOUBLE) / 100.0, 6) AS avg_ltv
+         |FROM r ORDER BY cohort_month, month_offset"""
     ) { (s, d) =>
       graft.pipeline.Behavior.ltvCurve(
           Tables.orders(s, d), "o_custkey", "o_orderdate",
@@ -865,25 +859,19 @@ private[graft] object BehaviorQueries {
     // first-order month; conditional exact cent sums.
     q(
       "q241_new_vs_returning",
-      """WITH b AS (SELECT o_custkey AS cust,
-        |    CAST(date_part('year', o_orderdate) * 12
-        |      + date_part('month', o_orderdate) - 1 AS BIGINT) AS mi,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      AS cents
-        |  FROM orders),
-        |ch AS (SELECT cust, MIN(mi) AS c0 FROM b GROUP BY 1)
-        |SELECT b.mi AS month_idx, COUNT(*) AS n_orders,
-        |  CAST(SUM(CASE WHEN b.mi = ch.c0 THEN b.cents ELSE 0 END)
-        |    AS BIGINT) AS rev_new_cents,
-        |  CAST(SUM(CASE WHEN b.mi <> ch.c0 THEN b.cents ELSE 0 END)
-        |    AS BIGINT) AS rev_returning_cents,
-        |  ROUND(CAST(SUM(CASE WHEN b.mi = ch.c0 THEN b.cents ELSE 0
-        |      END) AS DOUBLE)
-        |    / CAST(SUM(CASE WHEN b.mi = ch.c0 THEN b.cents ELSE 0 END)
-        |       + SUM(CASE WHEN b.mi <> ch.c0 THEN b.cents ELSE 0 END)
-        |      AS DOUBLE), 6) AS new_share
-        |FROM b JOIN ch ON b.cust = ch.cust
-        |GROUP BY 1 ORDER BY month_idx"""
+      s"""WITH $orderMonthCtes
+         |SELECT b.mi AS month_idx, COUNT(*) AS n_orders,
+         |  CAST(SUM(CASE WHEN b.mi = ch.c0 THEN b.cents ELSE 0 END)
+         |    AS BIGINT) AS rev_new_cents,
+         |  CAST(SUM(CASE WHEN b.mi <> ch.c0 THEN b.cents ELSE 0 END)
+         |    AS BIGINT) AS rev_returning_cents,
+         |  ROUND(CAST(SUM(CASE WHEN b.mi = ch.c0 THEN b.cents ELSE 0
+         |      END) AS DOUBLE)
+         |    / CAST(SUM(CASE WHEN b.mi = ch.c0 THEN b.cents ELSE 0 END)
+         |       + SUM(CASE WHEN b.mi <> ch.c0 THEN b.cents ELSE 0 END)
+         |      AS DOUBLE), 6) AS new_share
+         |FROM b JOIN ch ON b.cust = ch.cust
+         |GROUP BY 1 ORDER BY month_idx"""
     ) { (s, d) =>
       graft.pipeline.Behavior.newVsReturning(
           Tables.orders(s, d), "o_custkey", "o_orderdate",
@@ -995,22 +983,10 @@ private[graft] object BehaviorQueries {
     // (order, brand) baskets — support and lift per brand pair.
     q(
       "q256_brand_affinity",
-      """WITH b AS (
-        |  SELECT DISTINCT l.l_orderkey AS u, p.p_brand AS item
-        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-        |n AS (SELECT COUNT(DISTINCT u)::DOUBLE AS nu FROM b),
-        |ic AS (SELECT item, COUNT(*) AS cnt FROM b GROUP BY 1),
-        |p AS (SELECT a.item AS ia, c.item AS ib, COUNT(*) AS co
-        |  FROM b a JOIN b c ON a.u = c.u AND a.item < c.item
-        |  GROUP BY 1, 2)
-        |SELECT ia AS item_a, ib AS item_b, co AS n_both,
-        |  x.cnt AS n_a, y.cnt AS n_b,
-        |  co::DOUBLE / n.nu AS support,
-        |  co::DOUBLE * n.nu / (x.cnt::DOUBLE * y.cnt::DOUBLE) AS lift
-        |FROM p JOIN ic x ON p.ia = x.item JOIN ic y ON p.ib = y.item
-        |CROSS JOIN n
-        |WHERE co >= 2
-        |ORDER BY item_a, item_b"""
+      s"""WITH b AS (
+         |  SELECT DISTINCT l.l_orderkey AS u, p.p_brand AS item
+         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+         |$coOccurrenceSql"""
     ) { (s, d) =>
       graft.pipeline.Behavior.coOccurrence(
           Tables.lineitem(s, d)
@@ -1410,11 +1386,7 @@ private[graft] object BehaviorQueries {
         |FROM agg JOIN pk ON agg.nation = pk.nation
         |ORDER BY agg.nation"""
     ) { (s, d) =>
-      val j = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
+      val j = ordersWithNation(s, d)
         .select(col("n_name").as("nation"),
           month(col("o_orderdate")).cast("int").as("mon"))
       val m = j.groupBy(col("nation"), col("mon"))
@@ -1460,11 +1432,7 @@ private[graft] object BehaviorQueries {
         |JOIN nation n ON c.c_nationkey = n.n_nationkey
         |GROUP BY 1 ORDER BY nation"""
     ) { (s, d) =>
-      val j = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
+      val j = ordersWithNation(s, d)
         .select(col("n_name").as("nation"),
           col("o_orderpriority").as("pri"),
           (col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -1724,12 +1692,7 @@ private[graft] object BehaviorQueries {
         |    / CAST(COUNT(*) AS DOUBLE), 6) AS mean_x_dist
         |FROM mt CROSS JOIN ntr GROUP BY ntr.n_treated"""
     ) { (s, d) =>
-      val ot = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("long").as("tot"))
-      val base = Tables.customer(s, d)
-        .join(ot, col("c_custkey") === col("o_custkey"), "left")
+      val base = customerSpend(s, d)
         .select(col("c_nationkey").as("key"),
           (col("c_acctbal").cast("decimal(18,2)") * 100)
             .cast("long").as("x"),

@@ -20,6 +20,17 @@ import QueryHelpers._
   */
 private[graft] object DedupQueries {
 
+  /** The exact 3-gram Jaccard ≥ 0.5 pairs: the oracle of q24 and of
+    * q25, whose MinHash candidates verify to the same pairs.
+    */
+  private val jaccardPairsOracleSql =
+    s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
+       |$shinglePairCtes
+       |SELECT da AS id_a, db AS id_b, c::DOUBLE/(sa.n + sb.n - c) AS jaccard
+       |FROM p JOIN sizes sa ON p.da = sa.doc_id JOIN sizes sb ON p.db = sb.doc_id
+       |WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5
+       |ORDER BY id_a, id_b"""
+
   val registry: Seq[Q] = Seq(
 
     // S15: exact dedup on (sensor_id, timestamp_us, value)
@@ -54,21 +65,7 @@ private[graft] object DedupQueries {
 
     // Exact 3-gram Jaccard near-dup pairs via inverted-index self-join —
     // the DuckDB oracle recomputes the same shingle/jaccard definition.
-    q(
-      "q24_ngram_jaccard",
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (SELECT DISTINCT doc_id,
-        |        unnest(list_transform(generate_series(1, len(toks)-2),
-        |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |      FROM t),
-        |sizes AS (SELECT doc_id, count(*) n FROM g GROUP BY 1),
-        |p AS (SELECT a.doc_id da, b.doc_id db, count(*) c FROM g a
-        |      JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT da AS id_a, db AS id_b, c::DOUBLE/(sa.n + sb.n - c) AS jaccard
-        |FROM p JOIN sizes sa ON p.da = sa.doc_id JOIN sizes sb ON p.db = sb.doc_id
-        |WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5
-        |ORDER BY id_a, id_b"""
-    ) { (s, d) =>
+    q("q24_ngram_jaccard", jaccardPairsOracleSql) { (s, d) =>
       // the shared pair-graph artifact carries the exact Jaccard
       // scores, so the q24 report is a filtered read of the bucketed
       // layout — the inverted-index join (ngramJaccardPairs; prefix-
@@ -83,21 +80,7 @@ private[graft] object DedupQueries {
     // MinHash+LSH near-dup: banded signatures generate candidates, exact
     // Jaccard verifies — same oracle as q24 (recall at j≈0.98 with 16
     // bands of 4 rows: P[miss] ≈ 1e-18).
-    q(
-      "q25_minhash_lsh",
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (SELECT DISTINCT doc_id,
-        |        unnest(list_transform(generate_series(1, len(toks)-2),
-        |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |      FROM t),
-        |sizes AS (SELECT doc_id, count(*) n FROM g GROUP BY 1),
-        |p AS (SELECT a.doc_id da, b.doc_id db, count(*) c FROM g a
-        |      JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT da AS id_a, db AS id_b, c::DOUBLE/(sa.n + sb.n - c) AS jaccard
-        |FROM p JOIN sizes sa ON p.da = sa.doc_id JOIN sizes sb ON p.db = sb.doc_id
-        |WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5
-        |ORDER BY id_a, id_b"""
-    ) { (s, d) =>
+    q("q25_minhash_lsh", jaccardPairsOracleSql) { (s, d) =>
       // 8 bands × 4 rows: P[miss] at j≈0.98 is (1-j⁴)^8 ≈ 1e-9, false-
       // candidate rate at j≈0.2 ≈ 1%, at half the signature cost of 64
       Dedup.minHashLshPairs(
@@ -244,32 +227,11 @@ private[graft] object DedupQueries {
     // with a recursive-CTE reachability closure over the same edge set.
     q(
       "q57_dedup_clusters",
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents),
-        |g AS (SELECT DISTINCT doc_id,
-        |        unnest(list_transform(generate_series(1, len(toks)-2),
-        |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |      FROM t),
-        |sizes AS (SELECT doc_id, count(*) n FROM g GROUP BY 1),
-        |p AS (SELECT a.doc_id da, b.doc_id db, count(*) c FROM g a
-        |      JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT da AS id_a, db AS id_b
-        |  FROM p JOIN sizes sa ON p.da = sa.doc_id
-        |         JOIN sizes sb ON p.db = sb.doc_id
-        |  WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        |comp AS (SELECT a AS id, MIN(b) AS mn FROM reach GROUP BY a)
-        |SELECT d.doc_id AS id,
-        |  COALESCE(LEAST(c.id, c.mn), d.doc_id) AS cluster_id
-        |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-        |ORDER BY id"""
+      s"""WITH RECURSIVE $nearDupClosureCtes
+         |SELECT d.doc_id AS id,
+         |  COALESCE(LEAST(c.id, c.mn), d.doc_id) AS cluster_id
+         |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
+         |ORDER BY id"""
     ) { (s, d) =>
       Dedup.nearDupClustersShared(
         Tables.spread(s, Tables.documents(s, d)),
@@ -287,10 +249,7 @@ private[graft] object DedupQueries {
       "q58_contamination",
       s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
          |           FROM documents),
-         |g AS (SELECT DISTINCT doc_id,
-         |        unnest(list_transform(generate_series(1, len(toks)-2),
-         |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-         |      FROM t),
+         |$shingleCte,
          |ev AS (SELECT doc_id FROM documents
          |       WHERE ('0x' || substr(md5('eval:' || doc_id), 1, 15))::BIGINT
          |         < ${(0.1 * (1L << 60).toDouble).toLong}),
@@ -368,58 +327,19 @@ private[graft] object DedupQueries {
     // the cluster-scoped Σ|c|² scale shape is the library story.
     q(
       "q134_semdedup",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |           FROM embeddings WHERE vec_id < 600),
-        |c0 AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-        |a1 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c0.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c0.cv), c0.cid) AS rnk
-        |    FROM e, c0) WHERE rnk = 1),
-        |m1 AS (
-        |  SELECT a1.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a1 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c1 AS (
-        |  SELECT c0.cid, COALESCE(n.cv, c0.cv) AS cv
-        |  FROM c0 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m1 GROUP BY cid) n
-        |    USING (cid)),
-        |a2 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c1.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c1.cv), c1.cid) AS rnk
-        |    FROM e, c1) WHERE rnk = 1),
-        |m2 AS (
-        |  SELECT a2.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a2 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c2 AS (
-        |  SELECT c1.cid, COALESCE(n.cv, c1.cv) AS cv
-        |  FROM c1 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m2 GROUP BY cid) n
-        |    USING (cid)),
-        |a3 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c2.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c2.cv), c2.cid) AS rnk
-        |    FROM e, c2) WHERE rnk = 1),
-        |dropped AS (
-        |  SELECT DISTINCT b.vec_id
-        |  FROM a3 a JOIN a3 b ON a.cid = b.cid AND a.vec_id < b.vec_id
-        |  JOIN e ea ON ea.vec_id = a.vec_id
-        |  JOIN e eb ON eb.vec_id = b.vec_id
-        |  WHERE list_cosine_similarity(ea.v, eb.v) >= 0.44)
-        |SELECT a3.vec_id, CAST(a3.cid AS INT) AS cluster
-        |FROM a3 ANTI JOIN dropped ON a3.vec_id = dropped.vec_id
-        |ORDER BY vec_id"""
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+         |           FROM embeddings WHERE vec_id < 600),
+         |$kmeansLloydCtes,
+         |${kmeansAssign("a3", "c2")},
+         |dropped AS (
+         |  SELECT DISTINCT b.vec_id
+         |  FROM a3 a JOIN a3 b ON a.cid = b.cid AND a.vec_id < b.vec_id
+         |  JOIN e ea ON ea.vec_id = a.vec_id
+         |  JOIN e eb ON eb.vec_id = b.vec_id
+         |  WHERE list_cosine_similarity(ea.v, eb.v) >= 0.44)
+         |SELECT a3.vec_id, CAST(a3.cid AS INT) AS cluster
+         |FROM a3 ANTI JOIN dropped ON a3.vec_id = dropped.vec_id
+         |ORDER BY vec_id"""
     ) { (s, d) =>
       val e = Tables.embeddings(s, d)
         .filter(col("vec_id") < 600)

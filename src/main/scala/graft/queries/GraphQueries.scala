@@ -30,23 +30,11 @@ private[graft] object GraphQueries {
     // on items.
     q(
       "q152_cooccurrence",
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    json_extract(props, '$.k')::BIGINT AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |n AS (SELECT COUNT(DISTINCT u)::DOUBLE AS nu FROM b),
-        |ic AS (SELECT item, COUNT(*) AS cnt FROM b GROUP BY 1),
-        |p AS (SELECT a.item AS ia, c.item AS ib, COUNT(*) AS co
-        |  FROM b a JOIN b c ON a.u = c.u AND a.item < c.item
-        |  GROUP BY 1, 2)
-        |SELECT ia AS item_a, ib AS item_b, co AS n_both,
-        |  x.cnt AS n_a, y.cnt AS n_b,
-        |  co::DOUBLE / n.nu AS support,
-        |  co::DOUBLE * n.nu / (x.cnt::DOUBLE * y.cnt::DOUBLE) AS lift
-        |FROM p JOIN ic x ON p.ia = x.item JOIN ic y ON p.ib = y.item
-        |CROSS JOIN n
-        |WHERE co >= 2
-        |ORDER BY item_a, item_b"""
+      s"""WITH b AS (
+         |  SELECT DISTINCT user_id AS u,
+         |    json_extract(props, '$$.k')::BIGINT AS item
+         |  FROM events WHERE event_type = 'purchase'),
+         |$coOccurrenceSql"""
     ) { (s, d) =>
       graft.pipeline.Behavior.coOccurrence(
           Tables.events(s, d)

@@ -20,6 +20,39 @@ import QueryHelpers._
   */
 private[graft] object MultimodalQueries {
 
+  /** The windowed audio-energy oracle of q293, q371 and q380: each
+    * printable character of a document is one sample of amplitude
+    * ascii − 79; per 16-sample window, the sample count, the exact
+    * Σs² energy and the silence gate Σs² < 100 per sample. The lossless
+    * WAV and FLAC roundtrips must reproduce q293's stub-lane answer.
+    */
+  private val audioEnergyOracleSql =
+    """WITH sx AS (SELECT doc_id AS media_id,
+      |    regexp_replace(text, '[^ -~]', '', 'g') AS s
+      |  FROM documents
+      |  WHERE length(regexp_replace(text, '[^ -~]', '', 'g')) > 0),
+      |p AS (SELECT media_id, s, UNNEST(range(0, length(s))) AS pos
+      |  FROM sx),
+      |a AS (SELECT media_id, pos // 16 AS win,
+      |    ascii(substr(s, CAST(pos + 1 AS INTEGER), 1)) - 79 AS amp
+      |  FROM p)
+      |SELECT media_id, win, COUNT(*) AS n_samples,
+      |  CAST(SUM(amp * amp) AS BIGINT) AS energy,
+      |  CAST(SUM(amp * amp) < COUNT(*) * 100 AS INTEGER) AS silence
+      |FROM a GROUP BY 1, 2 ORDER BY media_id, win"""
+
+  /** The frame-sampling oracles' container arithmetic (q379, q383,
+    * q384): a document's animation has (n_chars % `frames`) + 1
+    * frames, and sampling every 2nd keeps the even indexes — their
+    * count and index sum per document.
+    */
+  private def frameSampleOracleSql(frames: Int): String =
+    s"""SELECT doc_id AS media_id,
+       |  ((n_chars % $frames) + 2) // 2 AS frames_sampled,
+       |  (((n_chars % $frames) // 2) * (((n_chars % $frames) // 2) + 1))
+       |    AS idx_sum
+       |FROM documents ORDER BY media_id"""
+
   val registry: Seq[Q] = Seq(
 
     // Multimodal plumbing: documents' bytes as opaque media, batch decode
@@ -113,22 +146,7 @@ private[graft] object MultimodalQueries {
     // VAD/silence-trim front): scan-stage position explode, one
     // (media, window) map-side-combined aggregate, exact Σs² energy.
     // Decode is the documented stub lane (JDK ships no audio codecs).
-    q(
-      "q293_audio_energy",
-      """WITH sx AS (SELECT doc_id AS media_id,
-        |    regexp_replace(text, '[^ -~]', '', 'g') AS s
-        |  FROM documents
-        |  WHERE length(regexp_replace(text, '[^ -~]', '', 'g')) > 0),
-        |p AS (SELECT media_id, s, UNNEST(range(0, length(s))) AS pos
-        |  FROM sx),
-        |a AS (SELECT media_id, pos // 16 AS win,
-        |    ascii(substr(s, CAST(pos + 1 AS INTEGER), 1)) - 79 AS amp
-        |  FROM p)
-        |SELECT media_id, win, COUNT(*) AS n_samples,
-        |  CAST(SUM(amp * amp) AS BIGINT) AS energy,
-        |  CAST(SUM(amp * amp) < COUNT(*) * 100 AS INTEGER) AS silence
-        |FROM a GROUP BY 1, 2 ORDER BY media_id, win"""
-    ) { (s, d) =>
+    q("q293_audio_energy", audioEnergyOracleSql) { (s, d) =>
       Multimodal.fakePcmEnergy(
         Tables.spread(s, Tables.documents(s, d)), "doc_id", "text",
         windowSamples = 16, silencePerSample = 100)
@@ -142,22 +160,7 @@ private[graft] object MultimodalQueries {
     // sample-exact — the end-to-end pin on the real audio lane. Decode
     // and windowing fold sequentially inside the partition sweep (no
     // explode, no shuffle); exact integer arithmetic end to end.
-    q(
-      "q371_wav_energy",
-      """WITH sx AS (SELECT doc_id AS media_id,
-        |    regexp_replace(text, '[^ -~]', '', 'g') AS s
-        |  FROM documents
-        |  WHERE length(regexp_replace(text, '[^ -~]', '', 'g')) > 0),
-        |p AS (SELECT media_id, s, UNNEST(range(0, length(s))) AS pos
-        |  FROM sx),
-        |a AS (SELECT media_id, pos // 16 AS win,
-        |    ascii(substr(s, CAST(pos + 1 AS INTEGER), 1)) - 79 AS amp
-        |  FROM p)
-        |SELECT media_id, win, COUNT(*) AS n_samples,
-        |  CAST(SUM(amp * amp) AS BIGINT) AS energy,
-        |  CAST(SUM(amp * amp) < COUNT(*) * 100 AS INTEGER) AS silence
-        |FROM a GROUP BY 1, 2 ORDER BY media_id, win"""
-    ) { (s, d) =>
+    q("q371_wav_energy", audioEnergyOracleSql) { (s, d) =>
       Multimodal.wavEnergy(
         Multimodal.textToWav(
           Tables.spread(s, Tables.documents(s, d)), "doc_id", "text"),
@@ -173,14 +176,7 @@ private[graft] object MultimodalQueries {
     // the CONTAINER arithmetic the lane must reproduce: sampled-frame
     // count and index sum per document — rows exist only if every
     // demuxed frame actually DECODES (the sampler fails loudly).
-    q(
-      "q379_mjpeg_frame_sample",
-      """SELECT doc_id AS media_id,
-        |  ((n_chars % 7) + 2) // 2 AS frames_sampled,
-        |  (((n_chars % 7) // 2) * (((n_chars % 7) // 2) + 1))
-        |    AS idx_sum
-        |FROM documents ORDER BY media_id"""
-    ) { (s, d) =>
+    q("q379_mjpeg_frame_sample", frameSampleOracleSql(7)) { (s, d) =>
       import s.implicits._
       val media = Tables.spread(s, Tables.documents(s, d))
         .select(col("doc_id"), col("n_chars"))
@@ -217,22 +213,7 @@ private[graft] object MultimodalQueries {
     // sample-exact; identical oracle SQL to q371 because FLAC is
     // LOSSLESS. Same scan-stage shape: decode + windowing fold
     // sequentially inside the partition sweep, no explode, no shuffle.
-    q(
-      "q380_flac_energy",
-      """WITH sx AS (SELECT doc_id AS media_id,
-        |    regexp_replace(text, '[^ -~]', '', 'g') AS s
-        |  FROM documents
-        |  WHERE length(regexp_replace(text, '[^ -~]', '', 'g')) > 0),
-        |p AS (SELECT media_id, s, UNNEST(range(0, length(s))) AS pos
-        |  FROM sx),
-        |a AS (SELECT media_id, pos // 16 AS win,
-        |    ascii(substr(s, CAST(pos + 1 AS INTEGER), 1)) - 79 AS amp
-        |  FROM p)
-        |SELECT media_id, win, COUNT(*) AS n_samples,
-        |  CAST(SUM(amp * amp) AS BIGINT) AS energy,
-        |  CAST(SUM(amp * amp) < COUNT(*) * 100 AS INTEGER) AS silence
-        |FROM a GROUP BY 1, 2 ORDER BY media_id, win"""
-    ) { (s, d) =>
+    q("q380_flac_energy", audioEnergyOracleSql) { (s, d) =>
       Multimodal.flacEnergy(
         Multimodal.textToFlac(
           Tables.spread(s, Tables.documents(s, d)), "doc_id", "text"),
@@ -285,14 +266,7 @@ private[graft] object MultimodalQueries {
     // surface is the container arithmetic the lane must reproduce —
     // and rows exist only if every reconstructed frame actually
     // DECODES and every chunk CRC verifies (the sampler fails loudly).
-    q(
-      "q383_apng_frame_sample",
-      """SELECT doc_id AS media_id,
-        |  ((n_chars % 5) + 2) // 2 AS frames_sampled,
-        |  (((n_chars % 5) // 2) * (((n_chars % 5) // 2) + 1))
-        |    AS idx_sum
-        |FROM documents ORDER BY media_id"""
-    ) { (s, d) =>
+    q("q383_apng_frame_sample", frameSampleOracleSql(5)) { (s, d) =>
       import s.implicits._
       val media = Tables.spread(s, Tables.documents(s, d))
         .select(col("doc_id"), col("n_chars"))
@@ -328,14 +302,7 @@ private[graft] object MultimodalQueries {
     // q379/q383 discipline), so the gate holds iff dispatch picks the
     // right demuxer for every payload and all three lanes decode —
     // a GIF routed to the APNG walker fails loudly, not approximately.
-    q(
-      "q384_mixed_container_frames",
-      """SELECT doc_id AS media_id,
-        |  ((n_chars % 5) + 2) // 2 AS frames_sampled,
-        |  (((n_chars % 5) // 2) * (((n_chars % 5) // 2) + 1))
-        |    AS idx_sum
-        |FROM documents ORDER BY media_id"""
-    ) { (s, d) =>
+    q("q384_mixed_container_frames", frameSampleOracleSql(5)) { (s, d) =>
       import s.implicits._
       val media = Tables.spread(s, Tables.documents(s, d))
         .select(col("doc_id"), col("n_chars"))

@@ -299,27 +299,11 @@ private[graft] object ProfilingQueries {
     // router with no caller-picked constant) and must still produce
     // exactly the plain join. Same join as q129; only the threshold's
     // provenance differs.
-    q(
-      "q142_auto_skew_profiled",
-      """WITH dim AS (
-        |  SELECT user_id, COUNT(*) AS clicks FROM events
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |f AS (SELECT user_id FROM events WHERE event_type = 'view')
-        |SELECT f.user_id, COUNT(*) AS n_views, dim.clicks
-        |FROM f JOIN dim USING (user_id)
-        |GROUP BY 1, 3 ORDER BY 1"""
-    ) { (s, d) =>
-      val e = Tables.events(s, d)
-      val dim = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("clicks"))
-      val fact = e.filter(col("event_type") === "view")
-        .select(col("user_id"))
-      graft.operators.SaltedJoin
-        .autoJoinProfiled(fact, dim, "user_id", salts = 8)
-        .groupBy(col("user_id"), col("clicks"))
-        .agg(count(lit(1)).as("n_views"))
-        .select(col("user_id"), col("n_views"), col("clicks"))
-        .orderBy("user_id")
+    q("q142_auto_skew_profiled", viewsPerClickUserOracleSql) { (s, d) =>
+      viewsPerClickUser(s, d) { (fact, dim) =>
+        graft.operators.SaltedJoin
+          .autoJoinProfiled(fact, dim, "user_id", salts = 8)
+      }
     },
 
     // Robust per-user outlier detection: purchase rows with
@@ -395,21 +379,11 @@ private[graft] object ProfilingQueries {
     // then one island aggregate). Pure integer µs.
     q(
       "q170_availability",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t, value FROM events),
-        |g AS (SELECT sensor_id, t, value,
-        |    CASE WHEN LAG(t) OVER w IS NULL
-        |         OR t - LAG(t) OVER w > 172800000000
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, value)),
-        |i AS (SELECT sensor_id, t, SUM(brk) OVER (
-        |    PARTITION BY sensor_id ORDER BY t, value
-        |    ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM g)
-        |SELECT sensor_id, MIN(t) AS start_us, MAX(t) AS end_us,
-        |  COUNT(*) AS n_samples, MAX(t) - MIN(t) AS duration_us
-        |FROM i GROUP BY sensor_id, island
-        |ORDER BY sensor_id, start_us"""
+      s"""WITH $sensorIslandCtes
+         |SELECT sensor_id, MIN(t) AS start_us, MAX(t) AS end_us,
+         |  COUNT(*) AS n_samples, MAX(t) - MIN(t) AS duration_us
+         |FROM i GROUP BY sensor_id, island
+         |ORDER BY sensor_id, start_us"""
     ) { (s, d) =>
       graft.operators.SensorOps.availabilityIntervals(
           EventsAdapter.samples(s, d), thresholdUs = 172800000000L)

@@ -20,8 +20,8 @@ import QueryHelpers._
   * events→series convention: each query goes through `promql` (or hands
   * `promSeries` to an `ExtendedPromQL` entry itself) and adds only its
   * output projection. q60 and q64 label views by `name` before the key is
-  * built, q62 synthesizes its bucket series and q19 runs `SimplePromQL`,
-  * so those four keep their own selection.
+  * built (`promqlWithViewParity`), q62 synthesizes its bucket series and
+  * q19 runs `SimplePromQL`, so those four keep their own selection.
   *
   * One of the family registries composed into [[graft.Queries]];
   * oracle/alias conventions are documented there.
@@ -35,6 +35,80 @@ private[graft] object PromqlQueries {
       q: ExtendedPromQL.Query): DataFrame =
     ExtendedPromQL.evalWith(q, EventsAdapter.promSeries(s, d),
       EventsAdapter.samples(s, d).select("sensor_id", "timestamp_us", "value"))
+
+  /** `q` over the events as series whose view series carry a
+    * synthetic `parity` label (user id mod 2) that the click series
+    * lack: q60 and q64 match across that label-set difference.
+    */
+  private def promqlWithViewParity(s: SparkSession, d: String,
+      q: ExtendedPromQL.Query): DataFrame =
+    ExtendedPromQL.evalWith(q,
+      ms => {
+        val base = Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
+          .select(concat(col("name"), lit(" "),
+            col("labels").getItem("user")).as("sensor_id"),
+            col("name"), col("labels"))
+        base.select(col("sensor_id"),
+          when(col("name") === "view", map_concat(col("labels"),
+            map(lit("parity"),
+              (col("labels")("user").cast("long") % 2).cast("string"))))
+            .otherwise(col("labels")).as("labels"))
+      },
+      EventsAdapter.samples(s, d)
+        .select("sensor_id", "timestamp_us", "value"))
+
+  /** The counter-rate oracles' lag CTE: `s` pairs each sample in
+    * [2024-01-01, 2024-02-01] of the series keyed by `keys` with its
+    * predecessor in (time, value) order, over the events `where`
+    * selects.
+    */
+  private def rateLagCte(keys: String, where: String): String =
+    s"""s AS (
+       |  SELECT $keys, value,
+       |    lag(value) OVER (PARTITION BY $keys
+       |      ORDER BY epoch_us(ts), value) AS prev
+       |  FROM events
+       |  WHERE $where
+       |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000)"""
+
+  /** `s` and `r`, the oracle of `rate(x[31d])`: per series, the sum of
+    * reset-aware deltas over the range divided by its 2,678,400 s (no
+    * extrapolation); a series without a sample pair has no rate.
+    */
+  private def rateCtes(keys: String, where: String, groupBy: String)
+      : String =
+    s"""${rateLagCte(keys, where)},
+       |r AS (
+       |  SELECT $keys,
+       |    SUM(CASE WHEN prev IS NULL THEN NULL
+       |      WHEN value >= prev THEN value - prev
+       |      ELSE value END) / 2678400.0 AS rate
+       |  FROM s GROUP BY $groupBy
+       |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
+       |    WHEN value >= prev THEN value - prev
+       |    ELSE value END) IS NOT NULL)"""
+
+  /** Per-user view samples and rates, `rate(view[31d])`. */
+  private val viewLagCte = rateLagCte("user_id", "event_type = 'view'")
+  private val viewRateCtes =
+    rateCtes("user_id", "event_type = 'view'", "user_id")
+
+  /** Per-(event type, user) view and click rates. */
+  private val viewClickRateCtes =
+    rateCtes("event_type, user_id", "event_type IN ('view', 'click')",
+      "1, 2")
+
+  /** `rate(view[31d]) / rate(click[31d])` per user, one-to-one: the
+    * oracle of q52 and of q60, whose on(user) matching gives the same
+    * pairs.
+    */
+  private val viewClickRatioSql =
+    s"""WITH $viewClickRateCtes
+       |SELECT CAST(v.user_id AS VARCHAR) AS user_tag,
+       |  ROUND(v.rate / c.rate, 6) AS value
+       |FROM r v JOIN r c ON v.user_id = c.user_id
+       |  AND v.event_type = 'view' AND c.event_type = 'click'
+       |ORDER BY user_tag"""
 
   val registry: Seq[Q] = Seq(
 
@@ -110,22 +184,16 @@ private[graft] object PromqlQueries {
     // so the exact compare is immune to summation-order ULP drift.
     q(
       "q43_promql_rate",
-      """WITH s AS (
-        |  SELECT user_id, value,
-        |    lag(value) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000)
-        |SELECT CAST(user_id AS VARCHAR) AS user_tag,
-        |  ROUND(SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) / 2678400.0, 9) AS value
-        |FROM s GROUP BY user_id
-        |HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |  WHEN value >= prev THEN value - prev
-        |  ELSE value END) IS NOT NULL
-        |ORDER BY user_tag"""
+      s"""WITH $viewLagCte
+         |SELECT CAST(user_id AS VARCHAR) AS user_tag,
+         |  ROUND(SUM(CASE WHEN prev IS NULL THEN NULL
+         |    WHEN value >= prev THEN value - prev
+         |    ELSE value END) / 2678400.0, 9) AS value
+         |FROM s GROUP BY user_id
+         |HAVING SUM(CASE WHEN prev IS NULL THEN NULL
+         |  WHEN value >= prev THEN value - prev
+         |  ELSE value END) IS NOT NULL
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       // the evaluator sums f64 (Prometheus semantics); ROUND(9) on both
       // sides absorbs summation-order ULP drift for the exact compare
@@ -212,30 +280,7 @@ private[graft] object PromqlQueries {
     // form): per-user ratio of view rate to click rate. Both operands
     // evaluate as independent per-series rate() plans; ROUND(6) absorbs
     // f64 summation-order ULP drift inside each rate.
-    q(
-      "q52_promql_binary",
-      """WITH s AS (
-        |  SELECT event_type, user_id, value,
-        |    lag(value) OVER (PARTITION BY event_type, user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type IN ('view', 'click')
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000),
-        |r AS (
-        |  SELECT event_type, user_id,
-        |    SUM(CASE WHEN prev IS NULL THEN NULL
-        |      WHEN value >= prev THEN value - prev
-        |      ELSE value END) / 2678400.0 AS rate
-        |  FROM s GROUP BY 1, 2
-        |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) IS NOT NULL)
-        |SELECT CAST(v.user_id AS VARCHAR) AS user_tag,
-        |  ROUND(v.rate / c.rate, 6) AS value
-        |FROM r v JOIN r c ON v.user_id = c.user_id
-        |  AND v.event_type = 'view' AND c.event_type = 'click'
-        |ORDER BY user_tag"""
-    ) { (s, d) =>
+    q("q52_promql_binary", viewClickRatioSql) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "rate(view[31d]) / rate(click[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
@@ -247,47 +292,9 @@ private[graft] object PromqlQueries {
     // `parity` label, so FULL-set matching would find nothing — on(user)
     // restricts the one-to-one join key to the shared label and the
     // result equals the plain per-user ratio (q52's oracle verbatim).
-    q(
-      "q60_promql_on_binary",
-      """WITH s AS (
-        |  SELECT event_type, user_id, value,
-        |    lag(value) OVER (PARTITION BY event_type, user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type IN ('view', 'click')
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000),
-        |r AS (
-        |  SELECT event_type, user_id,
-        |    SUM(CASE WHEN prev IS NULL THEN NULL
-        |      WHEN value >= prev THEN value - prev
-        |      ELSE value END) / 2678400.0 AS rate
-        |  FROM s GROUP BY 1, 2
-        |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) IS NOT NULL)
-        |SELECT CAST(v.user_id AS VARCHAR) AS user_tag,
-        |  ROUND(v.rate / c.rate, 6) AS value
-        |FROM r v JOIN r c ON v.user_id = c.user_id
-        |  AND v.event_type = 'view' AND c.event_type = 'click'
-        |ORDER BY user_tag"""
-    ) { (s, d) =>
-      val parsed = ExtendedPromQL.parse(
-        "rate(view[31d]) / on(user) rate(click[31d])", 1706745600000000L)
-      ExtendedPromQL.evalWith(parsed,
-        ms => {
-          val base = Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-            .select(concat(col("name"), lit(" "),
-              col("labels").getItem("user")).as("sensor_id"),
-              col("name"), col("labels"))
-          // views get a synthetic parity label the clicks lack
-          base.select(col("sensor_id"),
-            when(col("name") === "view", map_concat(col("labels"),
-              map(lit("parity"),
-                (col("labels")("user").cast("long") % 2).cast("string"))))
-              .otherwise(col("labels")).as("labels"))
-        },
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+    q("q60_promql_on_binary", viewClickRatioSql) { (s, d) =>
+      promqlWithViewParity(s, d, ExtendedPromQL.parse(
+        "rate(view[31d]) / on(user) rate(click[31d])", 1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           round(col("value"), 6).as("value"))
         .orderBy("user_tag")
@@ -427,46 +434,17 @@ private[graft] object PromqlQueries {
     // label intact (the oracle recomputes parity as user_id % 2).
     q(
       "q64_promql_group_left",
-      """WITH s AS (
-        |  SELECT event_type, user_id, value,
-        |    lag(value) OVER (PARTITION BY event_type, user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type IN ('view', 'click')
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000),
-        |r AS (
-        |  SELECT event_type, user_id,
-        |    SUM(CASE WHEN prev IS NULL THEN NULL
-        |      WHEN value >= prev THEN value - prev
-        |      ELSE value END) / 2678400.0 AS rate
-        |  FROM s GROUP BY 1, 2
-        |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) IS NOT NULL)
-        |SELECT CAST(v.user_id AS VARCHAR) AS user_tag,
-        |  CAST(v.user_id % 2 AS VARCHAR) AS parity,
-        |  ROUND(v.rate / c.rate, 6) AS value
-        |FROM r v JOIN r c ON v.user_id = c.user_id
-        |  AND v.event_type = 'view' AND c.event_type = 'click'
-        |ORDER BY user_tag"""
+      s"""WITH $viewClickRateCtes
+         |SELECT CAST(v.user_id AS VARCHAR) AS user_tag,
+         |  CAST(v.user_id % 2 AS VARCHAR) AS parity,
+         |  ROUND(v.rate / c.rate, 6) AS value
+         |FROM r v JOIN r c ON v.user_id = c.user_id
+         |  AND v.event_type = 'view' AND c.event_type = 'click'
+         |ORDER BY user_tag"""
     ) { (s, d) =>
-      val parsed = ExtendedPromQL.parse(
+      promqlWithViewParity(s, d, ExtendedPromQL.parse(
         "rate(view[31d]) / on(user) group_left rate(click[31d])",
-        1706745600000000L)
-      ExtendedPromQL.evalWith(parsed,
-        ms => {
-          val base = Matchers.sensorsByLabels(EventsAdapter.sensors(s, d), ms)
-            .select(concat(col("name"), lit(" "),
-              col("labels").getItem("user")).as("sensor_id"),
-              col("name"), col("labels"))
-          base.select(col("sensor_id"),
-            when(col("name") === "view", map_concat(col("labels"),
-              map(lit("parity"),
-                (col("labels")("user").cast("long") % 2).cast("string"))))
-              .otherwise(col("labels")).as("labels"))
-        },
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
+        1706745600000000L))
         .select(element_at(col("labels"), "user").as("user_tag"),
           element_at(col("labels"), "parity").as("parity"),
           round(col("value"), 6).as("value"))
@@ -480,24 +458,18 @@ private[graft] object PromqlQueries {
     // users with all-odd-digit ids.
     q(
       "q65_promql_unless",
-      """WITH s AS (
-        |  SELECT user_id, value,
-        |    lag(value) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000)
-        |SELECT CAST(user_id AS VARCHAR) AS user_tag,
-        |  ROUND(SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) / 2678400.0, 9) AS value
-        |FROM s
-        |WHERE NOT regexp_matches(CAST(user_id AS VARCHAR), '[02468]')
-        |GROUP BY user_id
-        |HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |  WHEN value >= prev THEN value - prev
-        |  ELSE value END) IS NOT NULL
-        |ORDER BY user_tag"""
+      s"""WITH $viewLagCte
+         |SELECT CAST(user_id AS VARCHAR) AS user_tag,
+         |  ROUND(SUM(CASE WHEN prev IS NULL THEN NULL
+         |    WHEN value >= prev THEN value - prev
+         |    ELSE value END) / 2678400.0, 9) AS value
+         |FROM s
+         |WHERE NOT regexp_matches(CAST(user_id AS VARCHAR), '[02468]')
+         |GROUP BY user_id
+         |HAVING SUM(CASE WHEN prev IS NULL THEN NULL
+         |  WHEN value >= prev THEN value - prev
+         |  ELSE value END) IS NOT NULL
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         """rate(view[31d]) unless rate(click{user=~".*[02468]"}[31d])""",
@@ -513,25 +485,10 @@ private[graft] object PromqlQueries {
     // (identical arithmetic), ROUND(9) only formats the survivors.
     q(
       "q66_promql_threshold",
-      """WITH s AS (
-        |  SELECT user_id, value,
-        |    lag(value) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000),
-        |r AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN prev IS NULL THEN NULL
-        |      WHEN value >= prev THEN value - prev
-        |      ELSE value END) / 2678400.0 AS rate
-        |  FROM s GROUP BY user_id
-        |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) IS NOT NULL)
-        |SELECT CAST(user_id AS VARCHAR) AS user_tag,
-        |  ROUND(rate, 9) AS value
-        |FROM r WHERE rate > 0.00003 ORDER BY user_tag"""
+      s"""WITH $viewRateCtes
+         |SELECT CAST(user_id AS VARCHAR) AS user_tag,
+         |  ROUND(rate, 9) AS value
+         |FROM r WHERE rate > 0.00003 ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "rate(view[31d]) > 0.00003", 1706745600000000L))
@@ -593,27 +550,12 @@ private[graft] object PromqlQueries {
     // clamp clips into [2e-5, 3e-5] with LEAST/GREATEST in the oracle.
     q(
       "q72_promql_math",
-      """WITH s AS (
-        |  SELECT user_id, value,
-        |    lag(value) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000),
-        |r AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN prev IS NULL THEN NULL
-        |      WHEN value >= prev THEN value - prev
-        |      ELSE value END) / 2678400.0 AS rate
-        |  FROM s GROUP BY user_id
-        |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) IS NOT NULL)
-        |SELECT CAST(user_id AS VARCHAR) AS user_tag,
-        |  LEAST(GREATEST(
-        |    floor(rate / 0.000001 + 0.5) * 0.000001, 0.00002), 0.00003)
-        |    AS value
-        |FROM r ORDER BY user_tag"""
+      s"""WITH $viewRateCtes
+         |SELECT CAST(user_id AS VARCHAR) AS user_tag,
+         |  LEAST(GREATEST(
+         |    floor(rate / 0.000001 + 0.5) * 0.000001, 0.00002), 0.00003)
+         |    AS value
+         |FROM r ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "clamp(round(rate(view[31d]), 0.000001), 0.00002, 0.00003)",
@@ -631,23 +573,8 @@ private[graft] object PromqlQueries {
     // (per-series delta sums, then the cross-series fold).
     q(
       "q73_promql_sum_rate",
-      """WITH s AS (
-        |  SELECT user_id, value,
-        |    lag(value) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), value) AS prev
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1704067200000000 AND 1706745600000000),
-        |r AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN prev IS NULL THEN NULL
-        |      WHEN value >= prev THEN value - prev
-        |      ELSE value END) / 2678400.0 AS rate
-        |  FROM s GROUP BY user_id
-        |  HAVING SUM(CASE WHEN prev IS NULL THEN NULL
-        |    WHEN value >= prev THEN value - prev
-        |    ELSE value END) IS NOT NULL)
-        |SELECT ROUND(SUM(rate), 9) AS value FROM r"""
+      s"""WITH $viewRateCtes
+         |SELECT ROUND(SUM(rate), 9) AS value FROM r"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "sum(rate(view[31d]))", 1706745600000000L))

@@ -42,6 +42,110 @@ private[graft] object QueryHelpers {
   def dsum(c: Column): Column =
     sum(c.cast("decimal(18,2)")).cast("double")
 
+  /** Each order with its customer and the customer's nation. */
+  def ordersWithNation(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)),
+        col("c_nationkey") === col("n_nationkey"))
+
+  /** Every customer with `tot`, the exact cents of its orders (null for
+    * a customer without orders).
+    */
+  def customerSpend(s: SparkSession, d: String): DataFrame = {
+    val ot = Tables.orders(s, d)
+      .groupBy(col("o_custkey"))
+      .agg(sum(col("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long").as("tot"))
+    Tables.customer(s, d)
+      .join(ot, col("c_custkey") === col("o_custkey"), "left")
+  }
+
+  /** Per user with clicks: views and click count, through the
+    * fact/dimension `join` under test (q111, q129, q142 route it
+    * through [[graft.operators.SaltedJoin]]); `viewsPerClickUserOracleSql`
+    * is the plain join every routing must equal.
+    */
+  def viewsPerClickUser(s: SparkSession, d: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = Tables.events(s, d)
+    val dim = e.filter(col("event_type") === "click")
+      .groupBy(col("user_id")).agg(count(lit(1)).as("clicks"))
+    val fact = e.filter(col("event_type") === "view")
+      .select(col("user_id"))
+    join(fact, dim)
+      .groupBy(col("user_id"), col("clicks"))
+      .agg(count(lit(1)).as("n_views"))
+      .select(col("user_id"), col("n_views"), col("clicks"))
+      .orderBy("user_id")
+  }
+
+  lazy val viewsPerClickUserOracleSql: String =
+    """WITH dim AS (
+      |  SELECT user_id, COUNT(*) AS clicks FROM events
+      |  WHERE event_type = 'click' GROUP BY 1),
+      |f AS (SELECT user_id FROM events WHERE event_type = 'view')
+      |SELECT f.user_id, COUNT(*) AS n_views, dim.clicks
+      |FROM f JOIN dim USING (user_id)
+      |GROUP BY 1, 3 ORDER BY 1"""
+
+  /** Support and lift of every item pair bought together at least
+    * twice, over a preceding `b (u, item)` basket CTE — the oracle of
+    * [[graft.pipeline.Behavior.coOccurrence]] (q152, q256).
+    */
+  lazy val coOccurrenceSql: String =
+    """n AS (SELECT COUNT(DISTINCT u)::DOUBLE AS nu FROM b),
+      |ic AS (SELECT item, COUNT(*) AS cnt FROM b GROUP BY 1),
+      |p AS (SELECT a.item AS ia, c.item AS ib, COUNT(*) AS co
+      |  FROM b a JOIN b c ON a.u = c.u AND a.item < c.item
+      |  GROUP BY 1, 2)
+      |SELECT ia AS item_a, ib AS item_b, co AS n_both,
+      |  x.cnt AS n_a, y.cnt AS n_b,
+      |  co::DOUBLE / n.nu AS support,
+      |  co::DOUBLE * n.nu / (x.cnt::DOUBLE * y.cnt::DOUBLE) AS lift
+      |FROM p JOIN ic x ON p.ia = x.item JOIN ic y ON p.ib = y.item
+      |CROSS JOIN n
+      |WHERE co >= 2
+      |ORDER BY item_a, item_b"""
+
+  /** Per-sensor activity islands (q170, q190): `s` the events as
+    * sensor samples, `g` a break where a sample follows the previous
+    * one by more than 2 days, `i` each sample's running island id.
+    */
+  lazy val sensorIslandCtes: String =
+    """s AS (SELECT event_type || ' ' || user_id AS sensor_id,
+      |    epoch_us(ts) AS t, value FROM events),
+      |g AS (SELECT sensor_id, t, value,
+      |    CASE WHEN LAG(t) OVER w IS NULL
+      |         OR t - LAG(t) OVER w > 172800000000
+      |      THEN 1 ELSE 0 END AS brk
+      |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, value)),
+      |i AS (SELECT sensor_id, t, SUM(brk) OVER (
+      |    PARTITION BY sensor_id ORDER BY t, value
+      |    ROWS UNBOUNDED PRECEDING) AS island
+      |  FROM g)"""
+
+  /** The HyperLogLog register table of q271 (batch) and q275
+    * (streaming), b = 8 over md5-60-bit orderkey hashes: `t` the keys
+    * per returnflag, `m` each register's max rank `mj`, `g` per flag
+    * the registers observed and the exact harmonic sum Σ 2^(53−mj).
+    */
+  lazy val hllRegisterCtes: String =
+    """t AS (SELECT l_returnflag AS flag,
+      |    CAST(l_orderkey AS VARCHAR) AS k FROM lineitem),
+      |h AS (SELECT flag,
+      |    ('0x'||substr(md5('0:'||k),1,15))::BIGINT AS hv FROM t),
+      |r AS (SELECT flag, hv % 256 AS reg, hv // 256 AS w FROM h),
+      |m AS (SELECT flag, reg,
+      |    MAX(CASE WHEN w = 0 THEN 53
+      |        ELSE 53 - length(bin(w)) END) AS mj
+      |  FROM r GROUP BY 1, 2),
+      |g AS (SELECT flag, COUNT(*) AS registers_observed,
+      |    CAST(SUM(CAST(1 AS BIGINT) << CAST(53 - mj AS INT))
+      |      AS BIGINT) AS tobs
+      |  FROM m GROUP BY 1)"""
+
   /** Oracle SQL for q28: replays the seeded random-hyperplane LSH in
     * DuckDB. The 4×64 hyperplane components from
     * `Similarity.hyperplanes(64, 4, 42)` are inlined as full-precision
@@ -228,18 +332,31 @@ private[graft] object QueryHelpers {
        |FROM g ORDER BY query_id""".stripMargin
   }
 
-  lazy val annRecallOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-       |  FROM embeddings),
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-       |  WHERE vec_id < 10),
+  /** `e` the embeddings as DOUBLE[] and `q` the ten query vectors
+    * (vec_id < 10) of the vector-search oracles.
+    */
+  lazy val annQueryCtes: String =
+    """e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+      |  FROM embeddings),
+      |q AS (SELECT vec_id AS query_id, v AS qv FROM e
+      |  WHERE vec_id < 10)"""
+
+  /** [[annQueryCtes]], then `brute`: each query's exact top-5 cosine
+    * neighbors, ties to the lower vec_id — the reference side of the
+    * recall oracles (q308, q327).
+    */
+  lazy val bruteTop5Ctes: String =
+    s"""$annQueryCtes,
        |brute AS (SELECT query_id, vec_id FROM (
        |    SELECT q.query_id, e.vec_id,
        |      ROW_NUMBER() OVER (PARTITION BY q.query_id
        |        ORDER BY list_cosine_similarity(q.qv, e.v) DESC,
        |          e.vec_id) AS rank
        |    FROM q, e WHERE e.vec_id <> q.query_id)
-       |  WHERE rank <= 5),
+       |  WHERE rank <= 5)"""
+
+  lazy val annRecallOracleSql: String =
+    s"""WITH $bruteTop5Ctes,
        |lsh AS (SELECT query_id, vec_id FROM ($lshOracleSql))
        |SELECT b.query_id, COUNT(l.vec_id) AS n_hit,
        |  CAST(COUNT(l.vec_id) AS DOUBLE) / 5.0 AS recall
@@ -247,54 +364,76 @@ private[graft] object QueryHelpers {
        |  ON b.query_id = l.query_id AND b.vec_id = l.vec_id
        |GROUP BY 1 ORDER BY b.query_id""".stripMargin
 
+  /** `g`, the distinct 3-gram shingles of each document of a preceding
+    * `t (doc_id, toks)` CTE — the shingle definition of
+    * [[graft.pipeline.Dedup]]'s exact-Jaccard join.
+    */
+  lazy val shingleCte: String =
+    """g AS (SELECT DISTINCT doc_id,
+      |        unnest(list_transform(generate_series(1, len(toks)-2),
+      |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
+      |      FROM t)"""
+
+  /** `g`, then `sizes` (shingles per document) and `p` (shingles
+    * shared by each document pair `da < db`): the exact-Jaccard inputs
+    * of the near-duplicate oracles.
+    */
+  lazy val shinglePairCtes: String =
+    s"""$shingleCte,
+       |sizes AS (SELECT doc_id, count(*) n FROM g GROUP BY 1),
+       |p AS (SELECT a.doc_id da, b.doc_id db, count(*) c FROM g a
+       |      JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)"""
+
+  /** The near-duplicate clustering oracles' CTEs (q57, q86, q299),
+    * behind a `WITH RECURSIVE`: Jaccard ≥ 0.5 document pairs as
+    * symmetric edges, their reachability closure `reach`, and `comp`,
+    * each reached document's smallest reachable id.
+    */
+  lazy val nearDupClosureCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+       |  FROM documents),
+       |$shinglePairCtes,
+       |pairs AS (
+       |  SELECT da AS id_a, db AS id_b
+       |  FROM p JOIN sizes sa ON p.da = sa.doc_id
+       |         JOIN sizes sb ON p.db = sb.doc_id
+       |  WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5),
+       |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+       |          UNION SELECT id_b, id_a FROM pairs),
+       |reach AS (
+       |  SELECT a, b FROM edges
+       |  UNION
+       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |comp AS (SELECT a AS id, MIN(b) AS mn FROM reach GROUP BY a)"""
+
   /** q299's oracle: q57's reachability-closure clustering CTE extended
     * with the survivorship election — mode via ROW_NUMBER over
     * (count DESC, value ASC), max completeness, min-id representative.
     */
   lazy val goldenRecordOracleSql: String =
-    """WITH RECURSIVE t AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-      |  FROM documents),
-      |g AS (SELECT DISTINCT doc_id,
-      |        unnest(list_transform(generate_series(1, len(toks)-2),
-      |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-      |      FROM t),
-      |sizes AS (SELECT doc_id, count(*) n FROM g GROUP BY 1),
-      |p AS (SELECT a.doc_id da, b.doc_id db, count(*) c FROM g a
-      |      JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      |pairs AS (
-      |  SELECT da AS id_a, db AS id_b
-      |  FROM p JOIN sizes sa ON p.da = sa.doc_id
-      |         JOIN sizes sb ON p.db = sb.doc_id
-      |  WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5),
-      |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-      |          UNION SELECT id_b, id_a FROM pairs),
-      |reach AS (
-      |  SELECT a, b FROM edges
-      |  UNION
-      |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-      |comp AS (SELECT a AS id, MIN(b) AS mn FROM reach GROUP BY a),
-      |cl AS (SELECT d.doc_id AS id,
-      |    COALESCE(LEAST(c.id, c.mn), d.doc_id) AS cluster_id,
-      |    d.lang, d.source, d.n_chars
-      |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-      |base AS (SELECT cluster_id, MIN(id) AS rep_id,
-      |    COUNT(*) AS n_members, MAX(n_chars) AS n_chars_max
-      |  FROM cl GROUP BY 1),
-      |lm AS (SELECT cluster_id, lang AS lang_mode FROM (
-      |    SELECT cluster_id, lang, ROW_NUMBER() OVER (
-      |      PARTITION BY cluster_id
-      |      ORDER BY COUNT(*) DESC, lang ASC) AS rk
-      |    FROM cl GROUP BY cluster_id, lang) WHERE rk = 1),
-      |sm AS (SELECT cluster_id, source AS source_mode FROM (
-      |    SELECT cluster_id, source, ROW_NUMBER() OVER (
-      |      PARTITION BY cluster_id
-      |      ORDER BY COUNT(*) DESC, source ASC) AS rk
-      |    FROM cl GROUP BY cluster_id, source) WHERE rk = 1)
-      |SELECT b.cluster_id, b.rep_id, b.n_members, b.n_chars_max,
-      |  lm.lang_mode, sm.source_mode
-      |FROM base b JOIN lm USING (cluster_id) JOIN sm USING (cluster_id)
-      |ORDER BY cluster_id"""
+    s"""WITH RECURSIVE $nearDupClosureCtes,
+       |cl AS (SELECT d.doc_id AS id,
+       |    COALESCE(LEAST(c.id, c.mn), d.doc_id) AS cluster_id,
+       |    d.lang, d.source, d.n_chars
+       |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+       |base AS (SELECT cluster_id, MIN(id) AS rep_id,
+       |    COUNT(*) AS n_members, MAX(n_chars) AS n_chars_max
+       |  FROM cl GROUP BY 1),
+       |lm AS (SELECT cluster_id, lang AS lang_mode FROM (
+       |    SELECT cluster_id, lang, ROW_NUMBER() OVER (
+       |      PARTITION BY cluster_id
+       |      ORDER BY COUNT(*) DESC, lang ASC) AS rk
+       |    FROM cl GROUP BY cluster_id, lang) WHERE rk = 1),
+       |sm AS (SELECT cluster_id, source AS source_mode FROM (
+       |    SELECT cluster_id, source, ROW_NUMBER() OVER (
+       |      PARTITION BY cluster_id
+       |      ORDER BY COUNT(*) DESC, source ASC) AS rk
+       |    FROM cl GROUP BY cluster_id, source) WHERE rk = 1)
+       |SELECT b.cluster_id, b.rep_id, b.n_members, b.n_chars_max,
+       |  lm.lang_mode, sm.source_mode
+       |FROM base b JOIN lm USING (cluster_id) JOIN sm USING (cluster_id)
+       |ORDER BY cluster_id"""
 
   /** q296's oracle: the batch interval join, plus unmatched clicks
     * gated by the joint watermark rule (boundary form pinned against
@@ -592,6 +731,9 @@ private[graft] object QueryHelpers {
       _ => graft.streaming.StreamingIngest.stateScopedSession(s,
         StreamStatePartitions))
 
+  /** Rows a bounded memory-sink result may hold (see [[boundedResult]]). */
+  private val StreamResultCap = 2000000
+
   /** Materialize a bounded memory-sink result (`out`, a view over the
     * scoped session's sink table, transforms applied but UNSORTED) as a
     * driver-local single-partition DataFrame on the caller's session,
@@ -618,17 +760,12 @@ private[graft] object QueryHelpers {
     // (observed: scheduler-thread OOM at sf10). Probe the count with a
     // limit-pushdown take (never ships the full set) and fail LOUDLY
     // with remediation instead of dying in the scheduler.
-    val cap = sys.env.get("GRAFT_STREAM_RESULT_CAP").map(_.toLong)
-      .getOrElse(2000000L)
-    val probeN =
-      out.limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).count()
-    if (probeN > cap) {
+    if (out.limit(StreamResultCap + 1).count() > StreamResultCap) {
       ss.catalog.dropTempView(name)
       throw new IllegalStateException(
-        s"streaming result exceeds the $cap-row driver-local " +
+        s"streaming result exceeds the $StreamResultCap-row driver-local " +
           "memory-sink contract — route this stream to a file sink " +
-          "(StreamingIngest file/store sinks) or raise " +
-          "GRAFT_STREAM_RESULT_CAP if the driver heap is sized for it")
+          "(StreamingIngest file/store sinks)")
     }
     val rows = java.util.Arrays.asList(
       out.coalesce(1).sortWithinPartitions(sortCols.map(col): _*)
@@ -750,6 +887,49 @@ private[graft] object QueryHelpers {
        |adc AS (SELECT qid, vec_id,
        |    l[1]+l[2]+l[3]+l[4]+l[5]+l[6]+l[7]+l[8] AS dist FROM lists)"""
   }
+
+  /** One k-means assignment CTE for the Lloyd oracles: each vector of
+    * `e` to its nearest centroid of `c`, ties to the lower cid — the
+    * argmin [[graft.pipeline.SimilarityArtifacts.kmeansAssignments]]
+    * takes.
+    */
+  def kmeansAssign(a: String, c: String): String =
+    s"""$a AS (
+       |  SELECT vec_id, cid FROM (
+       |    SELECT e.vec_id, $c.cid,
+       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+       |        ORDER BY list_distance(e.v, $c.cv), $c.cid) AS rnk
+       |    FROM e, $c) WHERE rnk = 1)"""
+
+  /** One unrolled Lloyd round `i`: assign to c(i-1), per-dimension
+    * SUM/COUNT means, empty clusters keep their previous centroid.
+    */
+  private def lloydRound(i: Int): String = {
+    val (p, a, m, c) = (s"c${i - 1}", s"a$i", s"m$i", s"c$i")
+    s"""${kmeansAssign(a, p)},
+       |$m AS (
+       |  SELECT $a.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
+       |  FROM $a JOIN e USING (vec_id),
+       |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
+       |  GROUP BY 1, 2),
+       |$c AS (
+       |  SELECT $p.cid, COALESCE(n.cv, $p.cv) AS cv
+       |  FROM $p LEFT JOIN (
+       |    SELECT cid, list(x ORDER BY p) AS cv FROM $m GROUP BY cid) n
+       |    USING (cid))"""
+  }
+
+  /** The k=8, two-round Lloyd unroll of the k-means oracles (q98,
+    * q118, q134, q137) over a preceding `e (vec_id, v)` CTE: first-8
+    * seeds `c0`, then rounds `c1` and `c2`, generated so the rounds
+    * cannot drift apart.
+    */
+  lazy val kmeansLloydCtes: String =
+    s"""c0 AS (
+       |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
+       |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
+       |${lloydRound(1)},
+       |${lloydRound(2)}"""
 
   /** One unrolled PageRank iteration for the q153 oracle: the incoming
     * mass join/sum and the damped update, ROUND(9) — the same

@@ -20,6 +20,22 @@ import QueryHelpers._
   */
 private[graft] object SamplingQueries {
 
+  /** The daily-resample oracles' grid (q191, q288): per sensor, `bv`
+    * each day's latest value, `j` every day of the sensor's own span
+    * with that value or NULL.
+    */
+  private val dailyGridCtes =
+    """s AS (SELECT event_type || ' ' || user_id AS sensor_id,
+      |    epoch_us(ts) AS t, value FROM events),
+      |b AS (SELECT sensor_id, t // 86400000000 AS bk, t, value,
+      |    ROW_NUMBER() OVER (PARTITION BY sensor_id, t // 86400000000
+      |      ORDER BY t DESC, value DESC) AS rn FROM s),
+      |bv AS (SELECT sensor_id, bk, value AS v FROM b WHERE rn = 1),
+      |sp AS (SELECT sensor_id, UNNEST(range(MIN(bk), MAX(bk) + 1))
+      |    AS bk FROM bv GROUP BY sensor_id),
+      |j AS (SELECT sp.sensor_id, sp.bk, bv.v FROM sp
+      |  LEFT JOIN bv ON sp.sensor_id = bv.sensor_id AND sp.bk = bv.bk)"""
+
   val registry: Seq[Q] = Seq(
 
     // Deterministic keyed sampling: a row is kept iff the top 60 bits of
@@ -223,55 +239,16 @@ private[graft] object SamplingQueries {
     // unroll and then the (hash, id) rank inside each cluster.
     q(
       "q118_balanced_cluster_sample",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c0 AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-        |a1 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c0.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c0.cv), c0.cid) AS rnk
-        |    FROM e, c0) WHERE rnk = 1),
-        |m1 AS (
-        |  SELECT a1.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a1 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c1 AS (
-        |  SELECT c0.cid, COALESCE(n.cv, c0.cv) AS cv
-        |  FROM c0 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m1 GROUP BY cid) n
-        |    USING (cid)),
-        |a2 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c1.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c1.cv), c1.cid) AS rnk
-        |    FROM e, c1) WHERE rnk = 1),
-        |m2 AS (
-        |  SELECT a2.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a2 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c2 AS (
-        |  SELECT c1.cid, COALESCE(n.cv, c1.cv) AS cv
-        |  FROM c1 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m2 GROUP BY cid) n
-        |    USING (cid)),
-        |a3 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c2.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c2.cv), c2.cid) AS rnk
-        |    FROM e, c2) WHERE rnk = 1)
-        |SELECT vec_id, CAST(cid AS INT) AS cluster FROM (
-        |  SELECT vec_id, cid,
-        |    ROW_NUMBER() OVER (PARTITION BY cid
-        |      ORDER BY ('0x' || substr(md5('bal:' || vec_id), 1, 15))::BIGINT,
-        |        vec_id) AS rk
-        |  FROM a3)
-        |WHERE rk <= 10 ORDER BY vec_id"""
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |$kmeansLloydCtes,
+         |${kmeansAssign("a3", "c2")}
+         |SELECT vec_id, CAST(cid AS INT) AS cluster FROM (
+         |  SELECT vec_id, cid,
+         |    ROW_NUMBER() OVER (PARTITION BY cid
+         |      ORDER BY ('0x' || substr(md5('bal:' || vec_id), 1, 15))::BIGINT,
+         |        vec_id) AS rk
+         |  FROM a3)
+         |WHERE rk <= 10 ORDER BY vec_id"""
     ) { (s, d) =>
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
@@ -471,21 +448,12 @@ private[graft] object SamplingQueries {
     // rows exist.
     q(
       "q191_ffill_resample",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t, value FROM events),
-        |b AS (SELECT sensor_id, t // 86400000000 AS bk, t, value,
-        |    ROW_NUMBER() OVER (PARTITION BY sensor_id, t // 86400000000
-        |      ORDER BY t DESC, value DESC) AS rn FROM s),
-        |bv AS (SELECT sensor_id, bk, value AS v FROM b WHERE rn = 1),
-        |sp AS (SELECT sensor_id, UNNEST(range(MIN(bk), MAX(bk) + 1))
-        |    AS bk FROM bv GROUP BY sensor_id),
-        |j AS (SELECT sp.sensor_id, sp.bk, bv.v FROM sp
-        |  LEFT JOIN bv ON sp.sensor_id = bv.sensor_id AND sp.bk = bv.bk)
-        |SELECT sensor_id, bk * 86400000000 AS bucket_start_us,
-        |  last_value(v IGNORE NULLS) OVER (PARTITION BY sensor_id
-        |    ORDER BY bk ROWS UNBOUNDED PRECEDING) AS value,
-        |  CAST(v IS NULL AS INTEGER) AS filled
-        |FROM j ORDER BY sensor_id, bucket_start_us"""
+      s"""WITH $dailyGridCtes
+         |SELECT sensor_id, bk * 86400000000 AS bucket_start_us,
+         |  last_value(v IGNORE NULLS) OVER (PARTITION BY sensor_id
+         |    ORDER BY bk ROWS UNBOUNDED PRECEDING) AS value,
+         |  CAST(v IS NULL AS INTEGER) AS filled
+         |FROM j ORDER BY sensor_id, bucket_start_us"""
     ) { (s, d) =>
       graft.operators.SensorOps.resampleForwardFill(
           EventsAdapter.samples(s, d), bucketUs = 86400000000L)
@@ -530,34 +498,25 @@ private[graft] object SamplingQueries {
     // sensor partitioning.
     q(
       "q288_linear_resample",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t, value FROM events),
-        |b AS (SELECT sensor_id, t // 86400000000 AS bk, t, value,
-        |    ROW_NUMBER() OVER (PARTITION BY sensor_id, t // 86400000000
-        |      ORDER BY t DESC, value DESC) AS rn FROM s),
-        |bv AS (SELECT sensor_id, bk, value AS v FROM b WHERE rn = 1),
-        |sp AS (SELECT sensor_id, UNNEST(range(MIN(bk), MAX(bk) + 1))
-        |    AS bk FROM bv GROUP BY sensor_id),
-        |j AS (SELECT sp.sensor_id, sp.bk, bv.v FROM sp
-        |  LEFT JOIN bv ON sp.sensor_id = bv.sensor_id AND sp.bk = bv.bk),
-        |g AS (SELECT sensor_id, bk, v,
-        |    last_value(v IGNORE NULLS) OVER wb AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN bk END IGNORE NULLS)
-        |      OVER wb AS pb,
-        |    first_value(v IGNORE NULLS) OVER wf AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN bk END IGNORE NULLS)
-        |      OVER wf AS nb
-        |  FROM j
-        |  WINDOW wb AS (PARTITION BY sensor_id ORDER BY bk
-        |      ROWS UNBOUNDED PRECEDING),
-        |    wf AS (PARTITION BY sensor_id ORDER BY bk
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT sensor_id, bk * 86400000000 AS bucket_start_us,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |    ELSE pv + (nv - pv) * (CAST(bk - pb AS DOUBLE)
-        |      / CAST(nb - pb AS DOUBLE)) END AS value,
-        |  CAST(v IS NULL AS INTEGER) AS filled
-        |FROM g ORDER BY sensor_id, bucket_start_us"""
+      s"""WITH $dailyGridCtes,
+         |g AS (SELECT sensor_id, bk, v,
+         |    last_value(v IGNORE NULLS) OVER wb AS pv,
+         |    last_value(CASE WHEN v IS NOT NULL THEN bk END IGNORE NULLS)
+         |      OVER wb AS pb,
+         |    first_value(v IGNORE NULLS) OVER wf AS nv,
+         |    first_value(CASE WHEN v IS NOT NULL THEN bk END IGNORE NULLS)
+         |      OVER wf AS nb
+         |  FROM j
+         |  WINDOW wb AS (PARTITION BY sensor_id ORDER BY bk
+         |      ROWS UNBOUNDED PRECEDING),
+         |    wf AS (PARTITION BY sensor_id ORDER BY bk
+         |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+         |SELECT sensor_id, bk * 86400000000 AS bucket_start_us,
+         |  CASE WHEN v IS NOT NULL THEN v
+         |    ELSE pv + (nv - pv) * (CAST(bk - pb AS DOUBLE)
+         |      / CAST(nb - pb AS DOUBLE)) END AS value,
+         |  CAST(v IS NULL AS INTEGER) AS filled
+         |FROM g ORDER BY sensor_id, bucket_start_us"""
     ) { (s, d) =>
       graft.operators.SensorOps.resampleLinear(
           EventsAdapter.samples(s, d), bucketUs = 86400000000L)

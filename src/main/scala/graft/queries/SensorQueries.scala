@@ -20,6 +20,60 @@ import QueryHelpers._
   */
 private[graft] object SensorQueries {
 
+  /** The as-of join inputs (q14, q301–q303): purchases (user_id,
+    * ts_us, purchase_value) and clicks (user_id, ts_us, click_value).
+    */
+  private def purchasesAndClicks(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d)
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("value").as("purchase_value"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("value").as("click_value"))
+    (purchases, clicks)
+  }
+
+  /** Each purchase with the user's latest click at or before it: the
+    * oracle of the composed (q14) and the native (q301) as-of join.
+    */
+  private val asOfOracleSql =
+    """SELECT p.user_id, epoch_us(p.ts) AS ts_us, p.value AS purchase_value,
+      |  epoch_us(c.ts) AS click_ts_us, c.value AS click_value
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      |  ON p.user_id = c.user_id AND p.ts >= c.ts
+      |ORDER BY p.user_id, ts_us"""
+
+  /** Sensor `view 7` in [2024-01-05, 2024-01-20], first 100 samples:
+    * the range scan of q2, read back from the store by q33 and q79.
+    */
+  private val rangeScanOracleSql =
+    """SELECT epoch_us(ts) AS timestamp_us, value
+      |FROM events
+      |WHERE event_type = 'view' AND user_id = 7
+      |  AND epoch_us(ts) BETWEEN 1704412800000000 AND 1705708800000000
+      |ORDER BY timestamp_us LIMIT 100"""
+
+  /** q2's range scan over a fresh `format` store under a `tmp` temp
+    * dir holding the events' samples: publish, then a month-pruned
+    * read.
+    */
+  private def storeRangeScan(s: SparkSession, d: String, tmp: String,
+      format: String): DataFrame = {
+    val store = new graft.store.SensorStore(s,
+      graft.TempDirs.createPath(tmp), format = format)
+    store.publishSamples(graft.model.SensorType.Float,
+      EventsAdapter.samples(s, d)
+        .select("sensor_id", "timestamp_us", "value"))
+    SensorOps.rangeScan(
+      store.samplesInRange(graft.model.SensorType.Float,
+        Some(1704412800000000L), Some(1705708800000000L)), "view 7",
+      Some(1704412800000000L), Some(1705708800000000L), 100)
+      .select("timestamp_us", "value")
+  }
+
   val registry: Seq[Q] = Seq(
 
     // ---------------------------------------------------------------------
@@ -46,14 +100,7 @@ private[graft] object SensorQueries {
     // ---------------------------------------------------------------------
     // P1/W2: time-range + limit scan for one sensor
     // (reference: src/storage/sqlite/storage.rs:663-704).
-    q(
-      "q2_range_scan",
-      """SELECT epoch_us(ts) AS timestamp_us, value
-        |FROM events
-        |WHERE event_type = 'view' AND user_id = 7
-        |  AND epoch_us(ts) BETWEEN 1704412800000000 AND 1705708800000000
-        |ORDER BY timestamp_us LIMIT 100"""
-    ) { (s, d) =>
+    q("q2_range_scan", rangeScanOracleSql) { (s, d) =>
       SensorOps.rangeScan(
         EventsAdapter.samples(s, d), "view 7",
         Some(1704412800000000L), Some(1705708800000000L), 100)
@@ -226,22 +273,8 @@ private[graft] object SensorQueries {
 
     // As-of join (doc-only in the reference: docs/DATAMODEL.md:125-131):
     // for each purchase, the user's most recent click at-or-before it.
-    q(
-      "q14_asof_join",
-      """SELECT p.user_id, epoch_us(p.ts) AS ts_us, p.value AS purchase_value,
-        |  epoch_us(c.ts) AS click_ts_us, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.user_id, ts_us"""
-    ) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("purchase_value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("click_value"))
+    q("q14_asof_join", asOfOracleSql) { (s, d) =>
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       AsOfJoin.asOf(purchases, clicks, "user_id", "ts_us", Seq("click_value"))
         .select(col("user_id"), col("ts_us"), col("purchase_value"),
           col("right_ts").as("click_ts_us"), col("click_value"))
@@ -401,24 +434,8 @@ private[graft] object SensorQueries {
 
     // S6: SensorStore write/read roundtrip — month-partitioned sorted
     // parquet publish, then a pruned range scan over the store.
-    q(
-      "q33_store_roundtrip",
-      """SELECT epoch_us(ts) AS timestamp_us, value
-        |FROM events
-        |WHERE event_type = 'view' AND user_id = 7
-        |  AND epoch_us(ts) BETWEEN 1704412800000000 AND 1705708800000000
-        |ORDER BY timestamp_us LIMIT 100"""
-    ) { (s, d) =>
-      val root = graft.TempDirs.createPath("graft_store")
-      val store = new graft.store.SensorStore(s, root)
-      store.publishSamples(graft.model.SensorType.Float,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
-      SensorOps.rangeScan(
-        store.samplesInRange(graft.model.SensorType.Float,
-          Some(1704412800000000L), Some(1705708800000000L)), "view 7",
-        Some(1704412800000000L), Some(1705708800000000L), 100)
-        .select("timestamp_us", "value")
+    q("q33_store_roundtrip", rangeScanOracleSql) { (s, d) =>
+      storeRangeScan(s, d, "graft_store", "parquet")
     },
 
     // S3/S11: Arrow IPC export→import roundtrip, one IPC file per sensor,
@@ -707,24 +724,8 @@ private[graft] object SensorQueries {
     // analog is Spark's datasource layer — the SAME store logic (month
     // partitioning, sorted files, pruned range reads) over ORC instead
     // of parquet. Same oracle as the parquet roundtrip q33.
-    q(
-      "q79_store_orc",
-      """SELECT epoch_us(ts) AS timestamp_us, value
-        |FROM events
-        |WHERE event_type = 'view' AND user_id = 7
-        |  AND epoch_us(ts) BETWEEN 1704412800000000 AND 1705708800000000
-        |ORDER BY timestamp_us LIMIT 100"""
-    ) { (s, d) =>
-      val root = graft.TempDirs.createPath("graft_store_orc")
-      val store = new graft.store.SensorStore(s, root, format = "orc")
-      store.publishSamples(graft.model.SensorType.Float,
-        EventsAdapter.samples(s, d)
-          .select("sensor_id", "timestamp_us", "value"))
-      SensorOps.rangeScan(
-        store.samplesInRange(graft.model.SensorType.Float,
-          Some(1704412800000000L), Some(1705708800000000L)), "view 7",
-        Some(1704412800000000L), Some(1705708800000000L), 100)
-        .select("timestamp_us", "value")
+    q("q79_store_orc", rangeScanOracleSql) { (s, d) =>
+      storeRangeScan(s, d, "graft_store_orc", "orc")
     },
 
     // Typed Arrow roundtrip for the non-Float value types (S3/S11,
@@ -959,22 +960,8 @@ private[graft] object SensorQueries {
     // streaming merge per co-partitioned co-sorted partition pair,
     // O(1) state, left partitioning preserved. Same DuckDB ASOF
     // oracle as q14; PropertySpec pins native ≡ composed.
-    q(
-      "q301_asof_native",
-      """SELECT p.user_id, epoch_us(p.ts) AS ts_us, p.value AS purchase_value,
-        |  epoch_us(c.ts) AS click_ts_us, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.user_id, ts_us"""
-    ) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("purchase_value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("click_value"))
+    q("q301_asof_native", asOfOracleSql) { (s, d) =>
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       AsOfJoin.asOfNative(
           purchases, clicks, "user_id", "ts_us", Seq("click_value"))
         .select(col("user_id"), col("ts_us"), col("purchase_value"),
@@ -997,13 +984,7 @@ private[graft] object SensorQueries {
         |WHERE epoch_us(p.ts) - epoch_us(c.ts) <= 3600000000
         |ORDER BY p.user_id, ts_us"""
     ) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("purchase_value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("click_value"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       AsOfJoin.asOfNative(
           purchases, clicks, "user_id", "ts_us", Seq("click_value"))
         .filter(col("ts_us") - col("right_ts") <= 3600000000L)
@@ -1052,13 +1033,7 @@ private[graft] object SensorQueries {
         |FROM ch WHERE rts IS NOT NULL AND ABS(t - rts) <= 3600000000
         |ORDER BY user_id, ts_us"""
     ) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("purchase_value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("value").as("click_value"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       AsOfJoin.asOfNearest(purchases, clicks, "user_id", "ts_us",
           "click_value", toleranceUs = 3600000000L)
         .select(col("user_id"), col("ts_us"), col("purchase_value"),

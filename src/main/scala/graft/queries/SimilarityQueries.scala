@@ -20,6 +20,36 @@ import QueryHelpers._
   */
 private[graft] object SimilarityQueries {
 
+  /** The ANN queries' corpus (vec_id, vec) and their queries, the
+    * vectors with vec_id < 10 as (query_id, qvec).
+    */
+  private def vectorsAndQueries(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+    val queries = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+    (e, queries)
+  }
+
+  /** The int8 ANN oracles' quantization (q75, q76): `qz` holds each
+    * vector's scale max|x|/127 and its codes floor(x·127/max + 0.5),
+    * `qs` those of the queries (vec_id < 10).
+    */
+  private val quantizedCtes =
+    """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      |s AS (SELECT vec_id, v,
+      |        list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
+      |qz AS (SELECT vec_id,
+      |  CASE WHEN amax = 0 THEN 0.0 ELSE amax / 127.0 END AS scale,
+      |  CASE WHEN amax = 0
+      |    THEN list_transform(v, x -> CAST(0 AS BIGINT))
+      |    ELSE list_transform(v,
+      |      x -> CAST(floor(x * 127.0 / amax + 0.5) AS BIGINT)) END AS q
+      |  FROM s),
+      |qs AS (SELECT vec_id AS query_id, scale AS sq, q AS qq
+      |       FROM qz WHERE vec_id < 10)"""
+
   val registry: Seq[Q] = Seq(
 
     // Brute-force cosine top-5 ANN baseline over the embeddings table.
@@ -35,10 +65,7 @@ private[graft] object SimilarityQueries {
         |  FROM q, e WHERE e.vec_id <> q.query_id)
         |WHERE rank <= 5 ORDER BY query_id, rank"""
     ) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       Similarity.bruteForceTopK(queries, e, 5)
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy("query_id", "rank")
@@ -50,10 +77,7 @@ private[graft] object SimilarityQueries {
     // oracle SQL (Double.toString round-trips, so DuckDB parses the exact
     // same doubles), which replays bucketing + multiprobe + top-k exactly.
     q("q28_ann_lsh", lshOracleSql) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       Similarity.lshTopK(queries, e, k = 5, bits = 4, probeHamming = 2)
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy("query_id", "rank")
@@ -94,10 +118,7 @@ private[graft] object SimilarityQueries {
         |  FROM cand)
         |WHERE rank <= 5 ORDER BY query_id, rank"""
     ) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       val centroids = e.filter(col("vec_id") < 8).orderBy("vec_id")
         .select("vec").collect().map(_.getSeq[Double](0).toArray)
       Similarity.ivfTopKWith(queries, e, k = 5, centroids, nprobe = 4)
@@ -143,35 +164,21 @@ private[graft] object SimilarityQueries {
     // ranks AND both score columns hash-match bit-for-bit.
     q(
       "q75_ann_quantized",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |s AS (SELECT vec_id, v,
-        |        list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
-        |qz AS (SELECT vec_id,
-        |  CASE WHEN amax = 0 THEN 0.0 ELSE amax / 127.0 END AS scale,
-        |  CASE WHEN amax = 0
-        |    THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |    ELSE list_transform(v,
-        |      x -> CAST(floor(x * 127.0 / amax + 0.5) AS BIGINT)) END AS q
-        |  FROM s),
-        |qs AS (SELECT vec_id AS query_id, scale AS sq, q AS qq
-        |       FROM qz WHERE vec_id < 10),
-        |p AS (
-        |  SELECT qs.query_id, c.vec_id,
-        |    list_dot_product(qs.qq, c.q) AS dotq,
-        |    list_dot_product(qs.qq, c.q) * qs.sq * c.scale AS approx
-        |  FROM qs JOIN qz c ON c.vec_id <> qs.query_id)
-        |SELECT query_id, rank, vec_id, CAST(dotq AS BIGINT) AS dot_q8,
-        |  approx AS approx_dot
-        |FROM (SELECT query_id, vec_id, dotq, approx,
-        |        ROW_NUMBER() OVER (PARTITION BY query_id
-        |          ORDER BY approx DESC, vec_id ASC) AS rank
-        |      FROM p)
-        |WHERE rank <= 5 ORDER BY query_id, rank"""
+      s"""WITH $quantizedCtes,
+         |p AS (
+         |  SELECT qs.query_id, c.vec_id,
+         |    list_dot_product(qs.qq, c.q) AS dotq,
+         |    list_dot_product(qs.qq, c.q) * qs.sq * c.scale AS approx
+         |  FROM qs JOIN qz c ON c.vec_id <> qs.query_id)
+         |SELECT query_id, rank, vec_id, CAST(dotq AS BIGINT) AS dot_q8,
+         |  approx AS approx_dot
+         |FROM (SELECT query_id, vec_id, dotq, approx,
+         |        ROW_NUMBER() OVER (PARTITION BY query_id
+         |          ORDER BY approx DESC, vec_id ASC) AS rank
+         |      FROM p)
+         |WHERE rank <= 5 ORDER BY query_id, rank"""
     ) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       Similarity.quantizedTopK(queries, e, k = 5)
         .orderBy("query_id", "rank")
     },
@@ -183,41 +190,27 @@ private[graft] object SimilarityQueries {
     // as q27).
     q(
       "q76_ann_rerank",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |s AS (SELECT vec_id, v,
-        |        list_max(list_transform(v, x -> abs(x))) AS amax FROM e),
-        |qz AS (SELECT vec_id,
-        |  CASE WHEN amax = 0 THEN 0.0 ELSE amax / 127.0 END AS scale,
-        |  CASE WHEN amax = 0
-        |    THEN list_transform(v, x -> CAST(0 AS BIGINT))
-        |    ELSE list_transform(v,
-        |      x -> CAST(floor(x * 127.0 / amax + 0.5) AS BIGINT)) END AS q
-        |  FROM s),
-        |qs AS (SELECT vec_id AS query_id, scale AS sq, q AS qq
-        |       FROM qz WHERE vec_id < 10),
-        |surv AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT qs.query_id, c.vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY qs.query_id
-        |        ORDER BY list_dot_product(qs.qq, c.q) * qs.sq * c.scale
-        |          DESC, c.vec_id ASC) AS rnk
-        |    FROM qs JOIN qz c ON c.vec_id <> qs.query_id)
-        |  WHERE rnk <= 20),
-        |qv AS (SELECT vec_id AS query_id, v AS qvec FROM e
-        |       WHERE vec_id < 10)
-        |SELECT query_id, rank, vec_id, ROUND(cosine, 6) AS cosine FROM (
-        |  SELECT surv.query_id, surv.vec_id,
-        |    list_cosine_similarity(qv.qvec, e.v) AS cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY surv.query_id
-        |      ORDER BY list_cosine_similarity(qv.qvec, e.v) DESC,
-        |        surv.vec_id ASC) AS rank
-        |  FROM surv JOIN e USING (vec_id) JOIN qv USING (query_id))
-        |WHERE rank <= 5 ORDER BY query_id, rank"""
+      s"""WITH $quantizedCtes,
+         |surv AS (
+         |  SELECT query_id, vec_id FROM (
+         |    SELECT qs.query_id, c.vec_id,
+         |      ROW_NUMBER() OVER (PARTITION BY qs.query_id
+         |        ORDER BY list_dot_product(qs.qq, c.q) * qs.sq * c.scale
+         |          DESC, c.vec_id ASC) AS rnk
+         |    FROM qs JOIN qz c ON c.vec_id <> qs.query_id)
+         |  WHERE rnk <= 20),
+         |qv AS (SELECT vec_id AS query_id, v AS qvec FROM e
+         |       WHERE vec_id < 10)
+         |SELECT query_id, rank, vec_id, ROUND(cosine, 6) AS cosine FROM (
+         |  SELECT surv.query_id, surv.vec_id,
+         |    list_cosine_similarity(qv.qvec, e.v) AS cosine,
+         |    ROW_NUMBER() OVER (PARTITION BY surv.query_id
+         |      ORDER BY list_cosine_similarity(qv.qvec, e.v) DESC,
+         |        surv.vec_id ASC) AS rank
+         |  FROM surv JOIN e USING (vec_id) JOIN qv USING (query_id))
+         |WHERE rank <= 5 ORDER BY query_id, rank"""
     ) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       Similarity.quantizedRerankTopK(queries, e, k = 5, overfetch = 4)
         .withColumn("cosine", round(col("cosine"), 6))
         .orderBy("query_id", "rank")
@@ -235,47 +228,13 @@ private[graft] object SimilarityQueries {
     // the engines' summation orders never flips an argmin.
     q(
       "q98_kmeans_clusters",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |c0 AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-        |a1 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c0.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c0.cv), c0.cid) AS rnk
-        |    FROM e, c0) WHERE rnk = 1),
-        |m1 AS (
-        |  SELECT a1.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a1 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c1 AS (
-        |  SELECT c0.cid, COALESCE(n.cv, c0.cv) AS cv
-        |  FROM c0 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m1 GROUP BY cid) n
-        |    USING (cid)),
-        |a2 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c1.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c1.cv), c1.cid) AS rnk
-        |    FROM e, c1) WHERE rnk = 1),
-        |m2 AS (
-        |  SELECT a2.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a2 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c2 AS (
-        |  SELECT c1.cid, COALESCE(n.cv, c1.cv) AS cv
-        |  FROM c1 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m2 GROUP BY cid) n
-        |    USING (cid))
-        |SELECT vec_id, CAST(cid AS INT) AS cluster FROM (
-        |  SELECT e.vec_id, c2.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_distance(e.v, c2.cv), c2.cid) AS rnk
-        |  FROM e, c2) WHERE rnk = 1 ORDER BY vec_id"""
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |$kmeansLloydCtes
+         |SELECT vec_id, CAST(cid AS INT) AS cluster FROM (
+         |  SELECT e.vec_id, c2.cid,
+         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
+         |      ORDER BY list_distance(e.v, c2.cv), c2.cid) AS rnk
+         |  FROM e, c2) WHERE rnk = 1 ORDER BY vec_id"""
     ) { (s, d) =>
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
@@ -506,11 +465,7 @@ private[graft] object SimilarityQueries {
     // with. Membership ordering replays exactly (the q27/q28
     // surfaces); recall is an integer count over 5.0.
     q("q308_ann_recall", annRecallOracleSql) { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       val brute = Similarity.bruteForceTopK(queries, e, 5)
         .select(col("query_id"), col("vec_id"))
       val lsh = Similarity.lshTopK(queries, e, k = 5, bits = 4,
@@ -530,36 +485,22 @@ private[graft] object SimilarityQueries {
     // construction with the truncated ranking as the candidate.
     q(
       "q327_matryoshka_recall",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-        |  WHERE vec_id < 10),
-        |brute AS (SELECT query_id, vec_id FROM (
-        |    SELECT q.query_id, e.vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q.query_id
-        |        ORDER BY list_cosine_similarity(q.qv, e.v) DESC,
-        |          e.vec_id) AS rank
-        |    FROM q, e WHERE e.vec_id <> q.query_id)
-        |  WHERE rank <= 5),
-        |trunc AS (SELECT query_id, vec_id FROM (
-        |    SELECT q.query_id, e.vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q.query_id
-        |        ORDER BY list_cosine_similarity(q.qv[1:16],
-        |          e.v[1:16]) DESC, e.vec_id) AS rank
-        |    FROM q, e WHERE e.vec_id <> q.query_id)
-        |  WHERE rank <= 5)
-        |SELECT b.query_id, COUNT(t.vec_id) AS n_hit,
-        |  CAST(COUNT(t.vec_id) AS DOUBLE) / 5.0 AS overlap
-        |FROM brute b LEFT JOIN trunc t
-        |  ON b.query_id = t.query_id AND b.vec_id = t.vec_id
-        |GROUP BY 1 ORDER BY b.query_id"""
+      s"""WITH $bruteTop5Ctes,
+         |trunc AS (SELECT query_id, vec_id FROM (
+         |    SELECT q.query_id, e.vec_id,
+         |      ROW_NUMBER() OVER (PARTITION BY q.query_id
+         |        ORDER BY list_cosine_similarity(q.qv[1:16],
+         |          e.v[1:16]) DESC, e.vec_id) AS rank
+         |    FROM q, e WHERE e.vec_id <> q.query_id)
+         |  WHERE rank <= 5)
+         |SELECT b.query_id, COUNT(t.vec_id) AS n_hit,
+         |  CAST(COUNT(t.vec_id) AS DOUBLE) / 5.0 AS overlap
+         |FROM brute b LEFT JOIN trunc t
+         |  ON b.query_id = t.query_id AND b.vec_id = t.vec_id
+         |GROUP BY 1 ORDER BY b.query_id"""
     ) { (s, d) =>
       import graft.pipeline.Similarity
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("vec"))
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+      val (e, queries) = vectorsAndQueries(s, d)
       val full = Similarity.bruteForceTopK(queries, e, 5)
         .select(col("query_id"), col("vec_id"))
       val eT = e.select(col("vec_id"), slice(col("vec"), 1, 16)

@@ -83,29 +83,17 @@ private[graft] object SketchQueries {
     // matter how many lineitems feed it.
     q(
       "q271_hll_distinct",
-      """WITH t AS (SELECT l_returnflag AS flag,
-        |    CAST(l_orderkey AS VARCHAR) AS k FROM lineitem),
-        |h AS (SELECT flag,
-        |    ('0x'||substr(md5('0:'||k),1,15))::BIGINT AS hv FROM t),
-        |r AS (SELECT flag, hv % 256 AS reg, hv // 256 AS w FROM h),
-        |m AS (SELECT flag, reg,
-        |    MAX(CASE WHEN w = 0 THEN 53
-        |        ELSE 53 - length(bin(w)) END) AS mj
-        |  FROM r GROUP BY 1, 2),
-        |g AS (SELECT flag, COUNT(*) AS registers_observed,
-        |    CAST(SUM(CAST(1 AS BIGINT) << CAST(53 - mj AS INT))
-        |      AS BIGINT) AS tobs
-        |  FROM m GROUP BY 1),
-        |e AS (SELECT flag, CAST(COUNT(DISTINCT k) AS BIGINT)
-        |    AS n_exact FROM t GROUP BY 1)
-        |SELECT g.flag, e.n_exact, g.registers_observed,
-        |  g.tobs + (256 - g.registers_observed) *
-        |    (CAST(1 AS BIGINT) << 53) AS t_scaled,
-        |  (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 256.0::DOUBLE))
-        |    * 256.0::DOUBLE * 256.0::DOUBLE * 9007199254740992.0::DOUBLE
-        |    / CAST(g.tobs + (256 - g.registers_observed) *
-        |        (CAST(1 AS BIGINT) << 53) AS DOUBLE) AS hll_estimate
-        |FROM g JOIN e ON g.flag = e.flag ORDER BY g.flag"""
+      s"""WITH $hllRegisterCtes,
+         |e AS (SELECT flag, CAST(COUNT(DISTINCT k) AS BIGINT)
+         |    AS n_exact FROM t GROUP BY 1)
+         |SELECT g.flag, e.n_exact, g.registers_observed,
+         |  g.tobs + (256 - g.registers_observed) *
+         |    (CAST(1 AS BIGINT) << 53) AS t_scaled,
+         |  (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 256.0::DOUBLE))
+         |    * 256.0::DOUBLE * 256.0::DOUBLE * 9007199254740992.0::DOUBLE
+         |    / CAST(g.tobs + (256 - g.registers_observed) *
+         |        (CAST(1 AS BIGINT) << 53) AS DOUBLE) AS hll_estimate
+         |FROM g JOIN e ON g.flag = e.flag ORDER BY g.flag"""
     ) { (s, d) =>
       val t = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("flag"),

@@ -20,6 +20,157 @@ import QueryHelpers._
   */
 private[graft] object StatsQueries {
 
+  /** The autocorrelation oracles' inputs (q199, q321, q370): `s`
+    * quantizes each event's value to integer µ-units, `l` lags it 1–3
+    * steps within its series in (time, value) order.
+    */
+  private val lagInputCtes =
+    """s AS (SELECT event_type || ' ' || user_id AS sensor_id,
+      |    epoch_us(ts) AS t,
+      |    CAST(floor(value * 1000000.0) AS BIGINT) AS v
+      |  FROM events),
+      |l AS (SELECT sensor_id, v,
+      |    LAG(v, 1) OVER w AS l1, LAG(v, 2) OVER w AS l2,
+      |    LAG(v, 3) OVER w AS l3
+      |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, v))"""
+
+  /** `l` and its per-series moments `a` (q199, q321): for each lag k,
+    * the number of pairs with a k-step predecessor and the exact sums
+    * Σx, Σx², Σy, Σy², Σxy over them, generated so the lags cannot
+    * drift apart.
+    */
+  private val lagMomentCtes = {
+    def sums(k: Int) =
+      s"""    CAST(COUNT(l$k) AS DOUBLE) AS n$k,
+         |    CAST(SUM(CASE WHEN l$k IS NOT NULL THEN v END) AS DOUBLE)
+         |      AS sx$k,
+         |    CAST(SUM(CASE WHEN l$k IS NOT NULL THEN v * v END) AS DOUBLE)
+         |      AS sxx$k,
+         |    CAST(SUM(l$k) AS DOUBLE) AS sy$k,
+         |    CAST(SUM(l$k * l$k) AS DOUBLE) AS syy$k,
+         |    CAST(SUM(v * l$k) AS DOUBLE) AS sxy$k"""
+    s"""$lagInputCtes,
+       |a AS (SELECT sensor_id,
+       |${(1 to 3).map(sums).mkString(",\n|")}
+       |  FROM l GROUP BY 1)"""
+  }
+
+  /** The survival oracles' lifetimes (q206, q317, q335): `lif` each
+    * user's first and last event, `durs` the lifetime in whole days
+    * with a death flag unless the last event falls within 12 h of the
+    * corpus end, `bd` deaths and users per duration — the construction
+    * of [[graft.pipeline.Behavior.kaplanMeier]].
+    */
+  private val lifetimeCtes =
+    """lif AS (SELECT user_id, MIN(epoch_us(ts)) AS f,
+      |    MAX(epoch_us(ts)) AS l FROM events GROUP BY 1),
+      |gm AS (SELECT MAX(l) AS gmax FROM lif),
+      |durs AS (SELECT (l - f) // 86400000000 AS dur,
+      |    CASE WHEN l < gmax - 43200000000 THEN 1 ELSE 0 END
+      |      AS death
+      |  FROM lif CROSS JOIN gm),
+      |bd AS (SELECT dur, COUNT(*) AS c, CAST(SUM(death) AS BIGINT)
+      |    AS d FROM durs GROUP BY 1)"""
+
+  /** `lifetimeCtes`, then `tt` (all users) and `r`, each duration's
+    * users lost before it `cb` — the risk sets of q206 and q317.
+    */
+  private val riskSetCtes =
+    s"""$lifetimeCtes,
+       |tt AS (SELECT COUNT(*) AS n FROM durs),
+       |r AS (SELECT bd.dur, bd.d, tt.n,
+       |    CAST(COALESCE(SUM(bd.c) OVER (ORDER BY bd.dur
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS BIGINT) AS cb
+       |  FROM bd CROSS JOIN tt)"""
+
+  /** The lag-1..3 sample correlations `r1`..`r3` over `lagMomentCtes`'
+    * sums (q321, q370).
+    */
+  private val lagCorrCols =
+    """    (n1 * sxy1 - sx1 * sy1) / (sqrt(n1 * sxx1 - sx1 * sx1)
+      |      * sqrt(n1 * syy1 - sy1 * sy1)) AS r1,
+      |    (n2 * sxy2 - sx2 * sy2) / (sqrt(n2 * sxx2 - sx2 * sx2)
+      |      * sqrt(n2 * syy2 - sy2 * sy2)) AS r2,
+      |    (n3 * sxy3 - sx3 * sy3) / (sqrt(n3 * sxx3 - sx3 * sx3)
+      |      * sqrt(n3 * syy3 - sy3 * sy3)) AS r3"""
+
+  /** The recursive per-series oracles' inputs (q324, q334): `base`
+    * numbers each sensor's samples in (time, value) order, `cnt` holds
+    * each sensor's sample count.
+    */
+  private val seriesRowCtes =
+    """src AS (
+      |  SELECT event_type || ' ' || user_id AS sensor_id,
+      |    epoch_us(ts) AS t, value FROM events),
+      |base AS (SELECT sensor_id, value,
+      |    ROW_NUMBER() OVER (PARTITION BY sensor_id
+      |      ORDER BY t, value) AS rn
+      |  FROM src),
+      |cnt AS (SELECT sensor_id, MAX(rn) AS n FROM base GROUP BY 1)"""
+
+  /** The calibration oracles' scored customers (q344, q346): the
+    * dyadic score numerator `num` from the account balance, label `y`
+    * = at least 5 orders.
+    */
+  private val scoredCustomerCtes =
+    """ot AS (SELECT o_custkey, COUNT(*) AS c FROM orders
+      |  GROUP BY 1),
+      |base AS (SELECT
+      |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |      + 100000 AS num,
+      |    CASE WHEN COALESCE(ot.c, 0) >= 5 THEN 1 ELSE 0 END AS y
+      |  FROM customer LEFT JOIN ot ON ot.o_custkey = c_custkey)"""
+
+  /** Spark side of `scoredCustomerCtes`. */
+  private def scoredCustomers(s: SparkSession, d: String): DataFrame = {
+    val ot = Tables.orders(s, d)
+      .groupBy(col("o_custkey")).agg(count(lit(1)).as("c"))
+    Tables.customer(s, d)
+      .join(ot, col("c_custkey") === col("o_custkey"), "left")
+      .select(
+        ((col("c_acctbal").cast("decimal(18,2)") * 100)
+          .cast("long") + 100000L).as("num"),
+        when(coalesce(col("c"), lit(0L)) >= 5, lit(1))
+          .otherwise(lit(0)).as("y"))
+  }
+
+  /** The inequality oracles' spend ranks (q203, q210): per-customer
+    * spend `v` in cents, its multiplicity `m` and the count `cb` of
+    * customers below it.
+    */
+  private val spendRankCtes =
+    """sp AS (SELECT o_custkey,
+      |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
+      |      AS BIGINT) AS v
+      |  FROM orders GROUP BY 1),
+      |vc AS (SELECT v, COUNT(*) AS m FROM sp GROUP BY 1),
+      |r AS (SELECT v, m,
+      |    CAST(COALESCE(SUM(m) OVER (ORDER BY v
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS BIGINT) AS cb
+      |  FROM vc)"""
+
+  /** The pairwise correlation matrix over the moment sums of a
+    * preceding `s` CTE, output column `stat` (q150 Pearson, q197
+    * Spearman).
+    */
+  private def corrMatrixSql(stat: String): String =
+    s"""SELECT col_a, col_b, $stat FROM (
+       |  SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
+       |    ROUND((n * sp_qp - s_q * s_p)
+       |      / sqrt((n * ss_q - s_q * s_q) * (n * ss_p - s_p * s_p)), 6)
+       |      AS $stat FROM s
+       |  UNION ALL SELECT 'l_quantity', 'l_discount',
+       |    ROUND((n * sp_qd - s_q * s_d)
+       |      / sqrt((n * ss_q - s_q * s_q) * (n * ss_d - s_d * s_d)), 6)
+       |    FROM s
+       |  UNION ALL SELECT 'l_extendedprice', 'l_discount',
+       |    ROUND((n * sp_pd - s_p * s_d)
+       |      / sqrt((n * ss_p - s_p * s_p) * (n * ss_d - s_d * s_d)), 6)
+       |    FROM s)
+       |ORDER BY col_a, col_b"""
+
   val registry: Seq[Q] = Seq(
 
     // S10 roundtrip: JSONL export parsed back (µs-exact timestamps).
@@ -51,45 +202,24 @@ private[graft] object StatsQueries {
     // max(struct(score, -id)), no window, no per-group sort.
     q(
       "q86_cluster_best",
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents),
-        |g AS (SELECT DISTINCT doc_id,
-        |        unnest(list_transform(generate_series(1, len(toks)-2),
-        |          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |      FROM t),
-        |sizes AS (SELECT doc_id, count(*) n FROM g GROUP BY 1),
-        |p AS (SELECT a.doc_id da, b.doc_id db, count(*) c FROM g a
-        |      JOIN g b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT da AS id_a, db AS id_b
-        |  FROM p JOIN sizes sa ON p.da = sa.doc_id
-        |         JOIN sizes sb ON p.db = sb.doc_id
-        |  WHERE c::DOUBLE/(sa.n + sb.n - c) >= 0.5),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        |comp AS (SELECT a AS id, MIN(b) AS mn FROM reach GROUP BY a),
-        |assign AS (
-        |  SELECT d.doc_id AS id,
-        |    COALESCE(LEAST(c.id, c.mn), d.doc_id) AS cluster_id
-        |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-        |scored AS (
-        |  SELECT doc_id,
-        |    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS score
-        |  FROM documents)
-        |SELECT cluster_id, doc_id AS best_id, score AS best_score,
-        |  n_members
-        |FROM (
-        |  SELECT a.cluster_id, s.doc_id, s.score,
-        |    COUNT(*) OVER (PARTITION BY a.cluster_id) AS n_members,
-        |    ROW_NUMBER() OVER (PARTITION BY a.cluster_id
-        |      ORDER BY s.score DESC, s.doc_id ASC) AS rk
-        |  FROM assign a JOIN scored s ON s.doc_id = a.id)
-        |WHERE rk = 1 ORDER BY cluster_id"""
+      s"""WITH RECURSIVE $nearDupClosureCtes,
+         |assign AS (
+         |  SELECT d.doc_id AS id,
+         |    COALESCE(LEAST(c.id, c.mn), d.doc_id) AS cluster_id
+         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
+         |scored AS (
+         |  SELECT doc_id,
+         |    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS score
+         |  FROM documents)
+         |SELECT cluster_id, doc_id AS best_id, score AS best_score,
+         |  n_members
+         |FROM (
+         |  SELECT a.cluster_id, s.doc_id, s.score,
+         |    COUNT(*) OVER (PARTITION BY a.cluster_id) AS n_members,
+         |    ROW_NUMBER() OVER (PARTITION BY a.cluster_id
+         |      ORDER BY s.score DESC, s.doc_id ASC) AS rk
+         |  FROM assign a JOIN scored s ON s.doc_id = a.id)
+         |WHERE rk = 1 ORDER BY cluster_id"""
     ) { (s, d) =>
       import graft.pipeline.Dedup
       val docs = Tables.spread(s, Tables.documents(s, d))
@@ -167,27 +297,11 @@ private[graft] object StatsQueries {
     // totals (dim) through SaltedJoin — hot users fan out across 8
     // salts, cold users pay nothing, and the salt never surfaces, so
     // the oracle is the PLAIN join it must be indistinguishable from.
-    q(
-      "q111_salted_join",
-      """WITH dim AS (
-        |  SELECT user_id, COUNT(*) AS clicks FROM events
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |f AS (SELECT user_id FROM events WHERE event_type = 'view')
-        |SELECT f.user_id, COUNT(*) AS n_views, dim.clicks
-        |FROM f JOIN dim USING (user_id)
-        |GROUP BY 1, 3 ORDER BY 1"""
-    ) { (s, d) =>
-      val e = Tables.events(s, d)
-      val dim = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("clicks"))
-      val fact = e.filter(col("event_type") === "view")
-        .select(col("user_id"))
-      graft.operators.SaltedJoin
-        .join(fact, dim, "user_id", salts = 8, hotThreshold = 20L)
-        .groupBy(col("user_id"), col("clicks"))
-        .agg(count(lit(1)).as("n_views"))
-        .select(col("user_id"), col("n_views"), col("clicks"))
-        .orderBy("user_id")
+    q("q111_salted_join", viewsPerClickUserOracleSql) { (s, d) =>
+      viewsPerClickUser(s, d) { (fact, dim) =>
+        graft.operators.SaltedJoin
+          .join(fact, dim, "user_id", salts = 8, hotThreshold = 20L)
+      }
     },
 
     // CUBE aggregation (all four grouping combinations of returnflag ×
@@ -326,27 +440,11 @@ private[graft] object StatsQueries {
     // automatically — q111 proves the salted mechanism, this proves
     // the ROUTING preserves semantics end-to-end. The oracle is the
     // plain join it must equal regardless of which shape fires.
-    q(
-      "q129_auto_skew_join",
-      """WITH dim AS (
-        |  SELECT user_id, COUNT(*) AS clicks FROM events
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |f AS (SELECT user_id FROM events WHERE event_type = 'view')
-        |SELECT f.user_id, COUNT(*) AS n_views, dim.clicks
-        |FROM f JOIN dim USING (user_id)
-        |GROUP BY 1, 3 ORDER BY 1"""
-    ) { (s, d) =>
-      val e = Tables.events(s, d)
-      val dim = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("clicks"))
-      val fact = e.filter(col("event_type") === "view")
-        .select(col("user_id"))
-      graft.operators.SaltedJoin
-        .autoJoin(fact, dim, "user_id", salts = 8, hotThreshold = 20L)
-        .groupBy(col("user_id"), col("clicks"))
-        .agg(count(lit(1)).as("n_views"))
-        .select(col("user_id"), col("n_views"), col("clicks"))
-        .orderBy("user_id")
+    q("q129_auto_skew_join", viewsPerClickUserOracleSql) { (s, d) =>
+      viewsPerClickUser(s, d) { (fact, dim) =>
+        graft.operators.SaltedJoin
+          .autoJoin(fact, dim, "user_id", salts = 8, hotThreshold = 20L)
+      }
     },
 
     // Clustering-quality evaluation: purity and Adjusted Rand Index of
@@ -360,70 +458,31 @@ private[graft] object StatsQueries {
     // operands, ROUND(6) on the output surface.
     q(
       "q137_cluster_agreement",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
-        |           FROM embeddings),
-        |c0 AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-        |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-        |a1 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c0.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c0.cv), c0.cid) AS rnk
-        |    FROM e, c0) WHERE rnk = 1),
-        |m1 AS (
-        |  SELECT a1.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a1 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c1 AS (
-        |  SELECT c0.cid, COALESCE(n.cv, c0.cv) AS cv
-        |  FROM c0 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m1 GROUP BY cid) n
-        |    USING (cid)),
-        |a2 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c1.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c1.cv), c1.cid) AS rnk
-        |    FROM e, c1) WHERE rnk = 1),
-        |m2 AS (
-        |  SELECT a2.cid, u.s['p'] AS p, SUM(u.s['x']) / COUNT(*) AS x
-        |  FROM a2 JOIN e USING (vec_id),
-        |    UNNEST(list_transform(e.v, (x, i) -> {'p': i, 'x': x})) AS u(s)
-        |  GROUP BY 1, 2),
-        |c2 AS (
-        |  SELECT c1.cid, COALESCE(n.cv, c1.cv) AS cv
-        |  FROM c1 LEFT JOIN (
-        |    SELECT cid, list(x ORDER BY p) AS cv FROM m2 GROUP BY cid) n
-        |    USING (cid)),
-        |a3 AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT e.vec_id, c2.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(e.v, c2.cv), c2.cid) AS rnk
-        |    FROM e, c2) WHERE rnk = 1),
-        |cont AS (
-        |  SELECT a3.cid AS c, e.label AS l, COUNT(*) AS nij
-        |  FROM a3 JOIN e USING (vec_id) GROUP BY 1, 2),
-        |sp AS (SELECT SUM(nij*(nij-1)//2) AS sp, SUM(nij) AS n FROM cont),
-        |ac AS (SELECT SUM(ai*(ai-1)//2) AS a FROM (
-        |  SELECT SUM(nij) AS ai FROM cont GROUP BY c)),
-        |bc AS (SELECT SUM(bj*(bj-1)//2) AS b FROM (
-        |  SELECT SUM(nij) AS bj FROM cont GROUP BY l)),
-        |pur AS (SELECT SUM(mx) AS pure FROM (
-        |  SELECT MAX(nij) AS mx FROM cont GROUP BY c))
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  ROUND(CAST(pure AS DOUBLE) / CAST(n AS DOUBLE), 6) AS purity,
-        |  ROUND(CASE WHEN CAST(a + b AS DOUBLE) * 0.5::DOUBLE = exp
-        |    THEN 1.0::DOUBLE
-        |    ELSE (CAST(sp AS DOUBLE) - exp) /
-        |      (CAST(a + b AS DOUBLE) * 0.5::DOUBLE - exp) END, 6) AS ari
-        |FROM (
-        |  SELECT sp.n, sp.sp, ac.a, bc.b, pur.pure,
-        |    CAST(ac.a AS DOUBLE) * CAST(bc.b AS DOUBLE) /
-        |      CAST(n*(n-1)//2 AS DOUBLE) AS exp
-        |  FROM sp, ac, bc, pur)"""
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
+         |           FROM embeddings),
+         |$kmeansLloydCtes,
+         |${kmeansAssign("a3", "c2")},
+         |cont AS (
+         |  SELECT a3.cid AS c, e.label AS l, COUNT(*) AS nij
+         |  FROM a3 JOIN e USING (vec_id) GROUP BY 1, 2),
+         |sp AS (SELECT SUM(nij*(nij-1)//2) AS sp, SUM(nij) AS n FROM cont),
+         |ac AS (SELECT SUM(ai*(ai-1)//2) AS a FROM (
+         |  SELECT SUM(nij) AS ai FROM cont GROUP BY c)),
+         |bc AS (SELECT SUM(bj*(bj-1)//2) AS b FROM (
+         |  SELECT SUM(nij) AS bj FROM cont GROUP BY l)),
+         |pur AS (SELECT SUM(mx) AS pure FROM (
+         |  SELECT MAX(nij) AS mx FROM cont GROUP BY c))
+         |SELECT CAST(n AS BIGINT) AS n,
+         |  ROUND(CAST(pure AS DOUBLE) / CAST(n AS DOUBLE), 6) AS purity,
+         |  ROUND(CASE WHEN CAST(a + b AS DOUBLE) * 0.5::DOUBLE = exp
+         |    THEN 1.0::DOUBLE
+         |    ELSE (CAST(sp AS DOUBLE) - exp) /
+         |      (CAST(a + b AS DOUBLE) * 0.5::DOUBLE - exp) END, 6) AS ari
+         |FROM (
+         |  SELECT sp.n, sp.sp, ac.a, bc.b, pur.pure,
+         |    CAST(ac.a AS DOUBLE) * CAST(bc.b AS DOUBLE) /
+         |      CAST(n*(n-1)//2 AS DOUBLE) AS exp
+         |  FROM sp, ac, bc, pur)"""
     ) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val e = emb.select(col("vec_id"),
@@ -525,38 +584,25 @@ private[graft] object StatsQueries {
     // arithmetic on identical numbers in the identical shape, ROUND(6).
     q(
       "q150_correlation",
-      """WITH s AS (SELECT
-        |  CAST(COUNT(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS s_q,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(24,4))
-        |    * CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS ss_q,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE) AS s_p,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(24,4))
-        |    * CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE) AS ss_p,
-        |  CAST(SUM(CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS s_d,
-        |  CAST(SUM(CAST(l_discount AS DECIMAL(24,4))
-        |    * CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS ss_d,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(24,4))
-        |    * CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE) AS sp_qp,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(24,4))
-        |    * CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS sp_qd,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(24,4))
-        |    * CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS sp_pd
-        |FROM lineitem)
-        |SELECT col_a, col_b, corr FROM (
-        |  SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
-        |    ROUND((n * sp_qp - s_q * s_p)
-        |      / sqrt((n * ss_q - s_q * s_q) * (n * ss_p - s_p * s_p)), 6)
-        |      AS corr FROM s
-        |  UNION ALL SELECT 'l_quantity', 'l_discount',
-        |    ROUND((n * sp_qd - s_q * s_d)
-        |      / sqrt((n * ss_q - s_q * s_q) * (n * ss_d - s_d * s_d)), 6)
-        |    FROM s
-        |  UNION ALL SELECT 'l_extendedprice', 'l_discount',
-        |    ROUND((n * sp_pd - s_p * s_d)
-        |      / sqrt((n * ss_p - s_p * s_p) * (n * ss_d - s_d * s_d)), 6)
-        |    FROM s)
-        |ORDER BY col_a, col_b"""
+      s"""WITH s AS (SELECT
+         |  CAST(COUNT(*) AS DOUBLE) AS n,
+         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS s_q,
+         |  CAST(SUM(CAST(l_quantity AS DECIMAL(24,4))
+         |    * CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS ss_q,
+         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE) AS s_p,
+         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(24,4))
+         |    * CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE) AS ss_p,
+         |  CAST(SUM(CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS s_d,
+         |  CAST(SUM(CAST(l_discount AS DECIMAL(24,4))
+         |    * CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS ss_d,
+         |  CAST(SUM(CAST(l_quantity AS DECIMAL(24,4))
+         |    * CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE) AS sp_qp,
+         |  CAST(SUM(CAST(l_quantity AS DECIMAL(24,4))
+         |    * CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS sp_qd,
+         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(24,4))
+         |    * CAST(l_discount AS DECIMAL(12,4))) AS DOUBLE) AS sp_pd
+         |FROM lineitem)
+         |${corrMatrixSql("corr")}"""
     ) { (s, d) =>
       graft.pipeline.Profiler.correlationMatrix(
           Tables.lineitem(s, d),
@@ -713,37 +759,34 @@ private[graft] object StatsQueries {
     // integers — no rounding needed anywhere.
     q(
       "q167_rrf_fusion",
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-        |  WHERE vec_id < 10),
-        |rc AS (SELECT query_id, vec_id, rank FROM (
-        |  SELECT q.query_id, e.vec_id, ROW_NUMBER() OVER (
-        |      PARTITION BY q.query_id
-        |      ORDER BY list_cosine_similarity(q.qv, e.v) DESC, e.vec_id)
-        |    AS rank
-        |  FROM q, e WHERE e.vec_id <> q.query_id) WHERE rank <= 20),
-        |re AS (SELECT query_id, vec_id, rank FROM (
-        |  SELECT q.query_id, e.vec_id, ROW_NUMBER() OVER (
-        |      PARTITION BY q.query_id
-        |      ORDER BY (list_dot_product(q.qv, q.qv)
-        |          + list_dot_product(e.v, e.v))
-        |        - CAST(2 AS DOUBLE) * list_dot_product(q.qv, e.v) ASC,
-        |        e.vec_id)
-        |    AS rank
-        |  FROM q, e WHERE e.vec_id <> q.query_id) WHERE rank <= 20),
-        |f AS (SELECT COALESCE(rc.query_id, re.query_id) AS query_id,
-        |    COALESCE(rc.vec_id, re.vec_id) AS vec_id,
-        |    COALESCE(CAST(1 AS DOUBLE) / CAST(60 + rc.rank AS DOUBLE),
-        |        CAST(0 AS DOUBLE))
-        |      + COALESCE(CAST(1 AS DOUBLE) / CAST(60 + re.rank AS DOUBLE),
-        |        CAST(0 AS DOUBLE)) AS rrf_score
-        |  FROM rc FULL JOIN re
-        |    ON rc.query_id = re.query_id AND rc.vec_id = re.vec_id)
-        |SELECT query_id, fused_rank, vec_id, rrf_score FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY rrf_score DESC, vec_id) AS fused_rank FROM f)
-        |WHERE fused_rank <= 10 ORDER BY query_id, fused_rank"""
+      s"""WITH $annQueryCtes,
+         |rc AS (SELECT query_id, vec_id, rank FROM (
+         |  SELECT q.query_id, e.vec_id, ROW_NUMBER() OVER (
+         |      PARTITION BY q.query_id
+         |      ORDER BY list_cosine_similarity(q.qv, e.v) DESC, e.vec_id)
+         |    AS rank
+         |  FROM q, e WHERE e.vec_id <> q.query_id) WHERE rank <= 20),
+         |re AS (SELECT query_id, vec_id, rank FROM (
+         |  SELECT q.query_id, e.vec_id, ROW_NUMBER() OVER (
+         |      PARTITION BY q.query_id
+         |      ORDER BY (list_dot_product(q.qv, q.qv)
+         |          + list_dot_product(e.v, e.v))
+         |        - CAST(2 AS DOUBLE) * list_dot_product(q.qv, e.v) ASC,
+         |        e.vec_id)
+         |    AS rank
+         |  FROM q, e WHERE e.vec_id <> q.query_id) WHERE rank <= 20),
+         |f AS (SELECT COALESCE(rc.query_id, re.query_id) AS query_id,
+         |    COALESCE(rc.vec_id, re.vec_id) AS vec_id,
+         |    COALESCE(CAST(1 AS DOUBLE) / CAST(60 + rc.rank AS DOUBLE),
+         |        CAST(0 AS DOUBLE))
+         |      + COALESCE(CAST(1 AS DOUBLE) / CAST(60 + re.rank AS DOUBLE),
+         |        CAST(0 AS DOUBLE)) AS rrf_score
+         |  FROM rc FULL JOIN re
+         |    ON rc.query_id = re.query_id AND rc.vec_id = re.vec_id)
+         |SELECT query_id, fused_rank, vec_id, rrf_score FROM (
+         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY rrf_score DESC, vec_id) AS fused_rank FROM f)
+         |WHERE fused_rank <= 10 ORDER BY query_id, fused_rank"""
     ) { (s, d) =>
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"),
@@ -945,47 +988,34 @@ private[graft] object StatsQueries {
     // reduction-order-free sums, IEEE formula on identical numbers.
     q(
       "q197_spearman",
-      """WITH r AS (SELECT
-        |  RANK() OVER (ORDER BY l_quantity)
-        |    + (COUNT(*) OVER (PARTITION BY l_quantity) - 1) / 2.0 AS rq,
-        |  RANK() OVER (ORDER BY l_extendedprice)
-        |    + (COUNT(*) OVER (PARTITION BY l_extendedprice) - 1) / 2.0
-        |      AS rp,
-        |  RANK() OVER (ORDER BY l_discount)
-        |    + (COUNT(*) OVER (PARTITION BY l_discount) - 1) / 2.0 AS rd
-        |FROM lineitem),
-        |s AS (SELECT
-        |  CAST(COUNT(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(rq AS DECIMAL(18,4))) AS DOUBLE) AS s_q,
-        |  CAST(SUM(CAST(rq AS DECIMAL(24,4))
-        |    * CAST(rq AS DECIMAL(18,4))) AS DOUBLE) AS ss_q,
-        |  CAST(SUM(CAST(rp AS DECIMAL(18,4))) AS DOUBLE) AS s_p,
-        |  CAST(SUM(CAST(rp AS DECIMAL(24,4))
-        |    * CAST(rp AS DECIMAL(18,4))) AS DOUBLE) AS ss_p,
-        |  CAST(SUM(CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS s_d,
-        |  CAST(SUM(CAST(rd AS DECIMAL(24,4))
-        |    * CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS ss_d,
-        |  CAST(SUM(CAST(rq AS DECIMAL(24,4))
-        |    * CAST(rp AS DECIMAL(18,4))) AS DOUBLE) AS sp_qp,
-        |  CAST(SUM(CAST(rq AS DECIMAL(24,4))
-        |    * CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS sp_qd,
-        |  CAST(SUM(CAST(rp AS DECIMAL(24,4))
-        |    * CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS sp_pd
-        |FROM r)
-        |SELECT col_a, col_b, rho FROM (
-        |  SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
-        |    ROUND((n * sp_qp - s_q * s_p)
-        |      / sqrt((n * ss_q - s_q * s_q) * (n * ss_p - s_p * s_p)), 6)
-        |      AS rho FROM s
-        |  UNION ALL SELECT 'l_quantity', 'l_discount',
-        |    ROUND((n * sp_qd - s_q * s_d)
-        |      / sqrt((n * ss_q - s_q * s_q) * (n * ss_d - s_d * s_d)), 6)
-        |    FROM s
-        |  UNION ALL SELECT 'l_extendedprice', 'l_discount',
-        |    ROUND((n * sp_pd - s_p * s_d)
-        |      / sqrt((n * ss_p - s_p * s_p) * (n * ss_d - s_d * s_d)), 6)
-        |    FROM s)
-        |ORDER BY col_a, col_b"""
+      s"""WITH r AS (SELECT
+         |  RANK() OVER (ORDER BY l_quantity)
+         |    + (COUNT(*) OVER (PARTITION BY l_quantity) - 1) / 2.0 AS rq,
+         |  RANK() OVER (ORDER BY l_extendedprice)
+         |    + (COUNT(*) OVER (PARTITION BY l_extendedprice) - 1) / 2.0
+         |      AS rp,
+         |  RANK() OVER (ORDER BY l_discount)
+         |    + (COUNT(*) OVER (PARTITION BY l_discount) - 1) / 2.0 AS rd
+         |FROM lineitem),
+         |s AS (SELECT
+         |  CAST(COUNT(*) AS DOUBLE) AS n,
+         |  CAST(SUM(CAST(rq AS DECIMAL(18,4))) AS DOUBLE) AS s_q,
+         |  CAST(SUM(CAST(rq AS DECIMAL(24,4))
+         |    * CAST(rq AS DECIMAL(18,4))) AS DOUBLE) AS ss_q,
+         |  CAST(SUM(CAST(rp AS DECIMAL(18,4))) AS DOUBLE) AS s_p,
+         |  CAST(SUM(CAST(rp AS DECIMAL(24,4))
+         |    * CAST(rp AS DECIMAL(18,4))) AS DOUBLE) AS ss_p,
+         |  CAST(SUM(CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS s_d,
+         |  CAST(SUM(CAST(rd AS DECIMAL(24,4))
+         |    * CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS ss_d,
+         |  CAST(SUM(CAST(rq AS DECIMAL(24,4))
+         |    * CAST(rp AS DECIMAL(18,4))) AS DOUBLE) AS sp_qp,
+         |  CAST(SUM(CAST(rq AS DECIMAL(24,4))
+         |    * CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS sp_qd,
+         |  CAST(SUM(CAST(rp AS DECIMAL(24,4))
+         |    * CAST(rd AS DECIMAL(18,4))) AS DOUBLE) AS sp_pd
+         |FROM r)
+         |${corrMatrixSql("rho")}"""
     ) { (s, d) =>
       graft.pipeline.Profiler.spearmanMatrix(
           Tables.lineitem(s, d),
@@ -1038,56 +1068,23 @@ private[graft] object StatsQueries {
     // identical numbers, ROUND(6).
     q(
       "q199_acf",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS v
-        |  FROM events),
-        |l AS (SELECT sensor_id, v,
-        |    LAG(v, 1) OVER w AS l1, LAG(v, 2) OVER w AS l2,
-        |    LAG(v, 3) OVER w AS l3
-        |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, v)),
-        |a AS (SELECT sensor_id,
-        |    CAST(COUNT(l1) AS DOUBLE) AS n1,
-        |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx1,
-        |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v * v END) AS DOUBLE)
-        |      AS sxx1,
-        |    CAST(SUM(l1) AS DOUBLE) AS sy1,
-        |    CAST(SUM(l1 * l1) AS DOUBLE) AS syy1,
-        |    CAST(SUM(v * l1) AS DOUBLE) AS sxy1,
-        |    CAST(COUNT(l2) AS DOUBLE) AS n2,
-        |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx2,
-        |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v * v END) AS DOUBLE)
-        |      AS sxx2,
-        |    CAST(SUM(l2) AS DOUBLE) AS sy2,
-        |    CAST(SUM(l2 * l2) AS DOUBLE) AS syy2,
-        |    CAST(SUM(v * l2) AS DOUBLE) AS sxy2,
-        |    CAST(COUNT(l3) AS DOUBLE) AS n3,
-        |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx3,
-        |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v * v END) AS DOUBLE)
-        |      AS sxx3,
-        |    CAST(SUM(l3) AS DOUBLE) AS sy3,
-        |    CAST(SUM(l3 * l3) AS DOUBLE) AS syy3,
-        |    CAST(SUM(v * l3) AS DOUBLE) AS sxy3
-        |  FROM l GROUP BY 1)
-        |SELECT sensor_id, lag_k, n_pairs, acf FROM (
-        |  SELECT sensor_id, 1 AS lag_k, CAST(n1 AS BIGINT) AS n_pairs,
-        |    ROUND((n1 * sxy1 - sx1 * sy1)
-        |      / (sqrt(n1 * sxx1 - sx1 * sx1)
-        |         * sqrt(n1 * syy1 - sy1 * sy1)), 6) AS acf FROM a
-        |  UNION ALL
-        |  SELECT sensor_id, 2, CAST(n2 AS BIGINT),
-        |    ROUND((n2 * sxy2 - sx2 * sy2)
-        |      / (sqrt(n2 * sxx2 - sx2 * sx2)
-        |         * sqrt(n2 * syy2 - sy2 * sy2)), 6) FROM a
-        |  UNION ALL
-        |  SELECT sensor_id, 3, CAST(n3 AS BIGINT),
-        |    ROUND((n3 * sxy3 - sx3 * sy3)
-        |      / (sqrt(n3 * sxx3 - sx3 * sx3)
-        |         * sqrt(n3 * syy3 - sy3 * sy3)), 6) FROM a)
-        |ORDER BY sensor_id, lag_k"""
+      s"""WITH $lagMomentCtes
+         |SELECT sensor_id, lag_k, n_pairs, acf FROM (
+         |  SELECT sensor_id, 1 AS lag_k, CAST(n1 AS BIGINT) AS n_pairs,
+         |    ROUND((n1 * sxy1 - sx1 * sy1)
+         |      / (sqrt(n1 * sxx1 - sx1 * sx1)
+         |         * sqrt(n1 * syy1 - sy1 * sy1)), 6) AS acf FROM a
+         |  UNION ALL
+         |  SELECT sensor_id, 2, CAST(n2 AS BIGINT),
+         |    ROUND((n2 * sxy2 - sx2 * sy2)
+         |      / (sqrt(n2 * sxx2 - sx2 * sx2)
+         |         * sqrt(n2 * syy2 - sy2 * sy2)), 6) FROM a
+         |  UNION ALL
+         |  SELECT sensor_id, 3, CAST(n3 AS BIGINT),
+         |    ROUND((n3 * sxy3 - sx3 * sy3)
+         |      / (sqrt(n3 * sxx3 - sx3 * sx3)
+         |         * sqrt(n3 * syy3 - sy3 * sy3)), 6) FROM a)
+         |ORDER BY sensor_id, lag_k"""
     ) { (s, d) =>
       graft.pipeline.Profiler.autocorrelation(
           EventsAdapter.samples(s, d),
@@ -1184,27 +1181,18 @@ private[graft] object StatsQueries {
     // order-free), integer cents end to end, one IEEE shape at the top.
     q(
       "q203_gini",
-      """WITH sp AS (SELECT o_custkey,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
-        |      AS BIGINT) AS v
-        |  FROM orders GROUP BY 1),
-        |vc AS (SELECT v, COUNT(*) AS m FROM sp GROUP BY 1),
-        |r AS (SELECT v, m,
-        |    CAST(COALESCE(SUM(m) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM vc),
-        |agg AS (SELECT CAST(SUM(m) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(v AS HUGEINT) * m) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(v AS HUGEINT)
-        |      * (CAST(m AS HUGEINT) * cb
-        |         + (CAST(m AS HUGEINT) * (m + 1)) // 2)) AS DOUBLE)
-        |      AS six
-        |  FROM r)
-        |SELECT n, sx AS units_total,
-        |  ROUND((2.0 * six - (CAST(n AS DOUBLE) + 1.0) * sx)
-        |    / (CAST(n AS DOUBLE) * sx), 6) AS gini
-        |FROM agg"""
+      s"""WITH $spendRankCtes,
+         |agg AS (SELECT CAST(SUM(m) AS BIGINT) AS n,
+         |    CAST(SUM(CAST(v AS HUGEINT) * m) AS DOUBLE) AS sx,
+         |    CAST(SUM(CAST(v AS HUGEINT)
+         |      * (CAST(m AS HUGEINT) * cb
+         |         + (CAST(m AS HUGEINT) * (m + 1)) // 2)) AS DOUBLE)
+         |      AS six
+         |  FROM r)
+         |SELECT n, sx AS units_total,
+         |  ROUND((2.0 * six - (CAST(n AS DOUBLE) + 1.0) * sx)
+         |    / (CAST(n AS DOUBLE) * sx), 6) AS gini
+         |FROM agg"""
     ) { (s, d) =>
       val spend = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
@@ -1260,38 +1248,24 @@ private[graft] object StatsQueries {
     // log-product prefix accumulates DECIMAL(28,12)-quantized terms.
     q(
       "q206_kaplan_meier",
-      """WITH lif AS (SELECT user_id, MIN(epoch_us(ts)) AS f,
-        |    MAX(epoch_us(ts)) AS l FROM events GROUP BY 1),
-        |gm AS (SELECT MAX(l) AS gmax FROM lif),
-        |durs AS (SELECT (l - f) // 86400000000 AS dur,
-        |    CASE WHEN l < gmax - 43200000000 THEN 1 ELSE 0 END
-        |      AS death
-        |  FROM lif CROSS JOIN gm),
-        |bd AS (SELECT dur, COUNT(*) AS c, CAST(SUM(death) AS BIGINT)
-        |    AS d FROM durs GROUP BY 1),
-        |tt AS (SELECT COUNT(*) AS n FROM durs),
-        |r AS (SELECT bd.dur, bd.d, tt.n,
-        |    CAST(COALESCE(SUM(bd.c) OVER (ORDER BY bd.dur
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM bd CROSS JOIN tt),
-        |dth AS (SELECT dur, d, n - cb AS nar,
-        |    CASE WHEN d < n - cb THEN
-        |      CAST(ln(1.0::DOUBLE - CAST(d AS DOUBLE)
-        |        / CAST(n - cb AS DOUBLE)) AS DECIMAL(28,12))
-        |    ELSE CAST(0.0 AS DECIMAL(28,12)) END AS term
-        |  FROM r WHERE d > 0),
-        |fin AS (SELECT dur, nar, d,
-        |    MAX(CASE WHEN d = nar THEN 1 ELSE 0 END) OVER (
-        |      ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS z,
-        |    SUM(term) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS cum
-        |  FROM dth)
-        |SELECT dur AS duration_days, nar AS n_at_risk, d AS n_deaths,
-        |  CASE WHEN z = 1 THEN 0.0::DOUBLE
-        |       ELSE ROUND(exp(CAST(cum AS DOUBLE)), 6) END AS survival
-        |FROM fin ORDER BY duration_days"""
+      s"""WITH $riskSetCtes,
+         |dth AS (SELECT dur, d, n - cb AS nar,
+         |    CASE WHEN d < n - cb THEN
+         |      CAST(ln(1.0::DOUBLE - CAST(d AS DOUBLE)
+         |        / CAST(n - cb AS DOUBLE)) AS DECIMAL(28,12))
+         |    ELSE CAST(0.0 AS DECIMAL(28,12)) END AS term
+         |  FROM r WHERE d > 0),
+         |fin AS (SELECT dur, nar, d,
+         |    MAX(CASE WHEN d = nar THEN 1 ELSE 0 END) OVER (
+         |      ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
+         |      AND CURRENT ROW) AS z,
+         |    SUM(term) OVER (ORDER BY dur ROWS BETWEEN UNBOUNDED
+         |      PRECEDING AND CURRENT ROW) AS cum
+         |  FROM dth)
+         |SELECT dur AS duration_days, nar AS n_at_risk, d AS n_deaths,
+         |  CASE WHEN z = 1 THEN 0.0::DOUBLE
+         |       ELSE ROUND(exp(CAST(cum AS DOUBLE)), 6) END AS survival
+         |FROM fin ORDER BY duration_days"""
     ) { (s, d) =>
       graft.pipeline.Behavior.kaplanMeier(
           Tables.events(s, d)
@@ -1367,38 +1341,29 @@ private[graft] object StatsQueries {
     // assignment); exact DECIMAL masses, single-division shares.
     q(
       "q210_lorenz",
-      """WITH sp AS (SELECT o_custkey,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100
-        |      AS BIGINT) AS v
-        |  FROM orders GROUP BY 1),
-        |vc AS (SELECT v, COUNT(*) AS m FROM sp GROUP BY 1),
-        |r AS (SELECT v, m,
-        |    CAST(COALESCE(SUM(m) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM vc),
-        |tot AS (SELECT CAST(SUM(m) AS BIGINT) AS n,
-        |    SUM(CAST(v AS HUGEINT) * m) AS mass FROM vc),
-        |dec AS (SELECT UNNEST(range(10)) AS decile),
-        |cells AS (SELECT dec.decile, r.v,
-        |    GREATEST(0, LEAST(r.cb + r.m, ((dec.decile + 1) * tot.n)
-        |        // 10) - GREATEST(r.cb, (dec.decile * tot.n) // 10))
-        |      AS cnt,
-        |    tot.mass AS tm
-        |  FROM r CROSS JOIN tot CROSS JOIN dec),
-        |byd AS (SELECT decile, CAST(SUM(cnt) AS BIGINT) AS n_rows,
-        |    SUM(CAST(v AS HUGEINT) * cnt) AS dm, MAX(tm) AS tm
-        |  FROM cells WHERE cnt > 0 GROUP BY 1),
-        |fin AS (SELECT decile, n_rows, dm, tm,
-        |    SUM(dm) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS cm
-        |  FROM byd)
-        |SELECT CAST(decile AS INTEGER) AS decile, n_rows,
-        |  CAST(dm AS DOUBLE) AS units_mass,
-        |  ROUND(CAST(dm AS DOUBLE) / CAST(tm AS DOUBLE), 6) AS share,
-        |  ROUND(CAST(cm AS DOUBLE) / CAST(tm AS DOUBLE), 6)
-        |    AS cum_share
-        |FROM fin ORDER BY decile"""
+      s"""WITH $spendRankCtes,
+         |tot AS (SELECT CAST(SUM(m) AS BIGINT) AS n,
+         |    SUM(CAST(v AS HUGEINT) * m) AS mass FROM vc),
+         |dec AS (SELECT UNNEST(range(10)) AS decile),
+         |cells AS (SELECT dec.decile, r.v,
+         |    GREATEST(0, LEAST(r.cb + r.m, ((dec.decile + 1) * tot.n)
+         |        // 10) - GREATEST(r.cb, (dec.decile * tot.n) // 10))
+         |      AS cnt,
+         |    tot.mass AS tm
+         |  FROM r CROSS JOIN tot CROSS JOIN dec),
+         |byd AS (SELECT decile, CAST(SUM(cnt) AS BIGINT) AS n_rows,
+         |    SUM(CAST(v AS HUGEINT) * cnt) AS dm, MAX(tm) AS tm
+         |  FROM cells WHERE cnt > 0 GROUP BY 1),
+         |fin AS (SELECT decile, n_rows, dm, tm,
+         |    SUM(dm) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED
+         |      PRECEDING AND CURRENT ROW) AS cm
+         |  FROM byd)
+         |SELECT CAST(decile AS INTEGER) AS decile, n_rows,
+         |  CAST(dm AS DOUBLE) AS units_mass,
+         |  ROUND(CAST(dm AS DOUBLE) / CAST(tm AS DOUBLE), 6) AS share,
+         |  ROUND(CAST(cm AS DOUBLE) / CAST(tm AS DOUBLE), 6)
+         |    AS cum_share
+         |FROM fin ORDER BY decile"""
     ) { (s, d) =>
       val spend = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
@@ -1836,11 +1801,7 @@ private[graft] object StatsQueries {
         |FROM r WHERE rn = (np + 1) // 2 OR rn = (np + 2) // 2
         |GROUP BY nation ORDER BY nation"""
     ) { (s, d) =>
-      val j = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
+      val j = ordersWithNation(s, d)
         .select(col("n_name").as("nation"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
             .cast("long").as("t"))
@@ -2217,33 +2178,19 @@ private[graft] object StatsQueries {
     // DECIMAL(28,12)-quantized before the order-free prefix sum.
     q(
       "q317_nelson_aalen",
-      """WITH lif AS (SELECT user_id, MIN(epoch_us(ts)) AS f,
-        |    MAX(epoch_us(ts)) AS l FROM events GROUP BY 1),
-        |gm AS (SELECT MAX(l) AS gmax FROM lif),
-        |durs AS (SELECT (l - f) // 86400000000 AS dur,
-        |    CASE WHEN l < gmax - 43200000000 THEN 1 ELSE 0 END
-        |      AS death
-        |  FROM lif CROSS JOIN gm),
-        |bd AS (SELECT dur, COUNT(*) AS c, CAST(SUM(death) AS BIGINT)
-        |    AS d FROM durs GROUP BY 1),
-        |tt AS (SELECT COUNT(*) AS n FROM durs),
-        |r AS (SELECT bd.dur, bd.d, tt.n,
-        |    CAST(COALESCE(SUM(bd.c) OVER (ORDER BY bd.dur
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM bd CROSS JOIN tt),
-        |h AS (SELECT dur, d, n - cb AS nar,
-        |    CAST(CAST(d AS DOUBLE) / CAST(n - cb AS DOUBLE)
-        |      AS DECIMAL(28,12)) AS ht,
-        |    CAST(CAST(d * (n - cb - d) AS DOUBLE)
-        |      / (CAST(n - cb AS DOUBLE) * CAST(n - cb AS DOUBLE)
-        |         * CAST(n - cb AS DOUBLE)) AS DECIMAL(28,12)) AS vt
-        |  FROM r WHERE d > 0)
-        |SELECT dur AS duration_days, nar AS n_at_risk, d AS n_deaths,
-        |  ROUND(CAST(SUM(ht) OVER wc AS DOUBLE), 6) AS cum_hazard,
-        |  ROUND(CAST(SUM(vt) OVER wc AS DOUBLE), 6) AS hazard_var
-        |FROM h WINDOW wc AS (ORDER BY dur ROWS UNBOUNDED PRECEDING)
-        |ORDER BY duration_days"""
+      s"""WITH $riskSetCtes,
+         |h AS (SELECT dur, d, n - cb AS nar,
+         |    CAST(CAST(d AS DOUBLE) / CAST(n - cb AS DOUBLE)
+         |      AS DECIMAL(28,12)) AS ht,
+         |    CAST(CAST(d * (n - cb - d) AS DOUBLE)
+         |      / (CAST(n - cb AS DOUBLE) * CAST(n - cb AS DOUBLE)
+         |         * CAST(n - cb AS DOUBLE)) AS DECIMAL(28,12)) AS vt
+         |  FROM r WHERE d > 0)
+         |SELECT dur AS duration_days, nar AS n_at_risk, d AS n_deaths,
+         |  ROUND(CAST(SUM(ht) OVER wc AS DOUBLE), 6) AS cum_hazard,
+         |  ROUND(CAST(SUM(vt) OVER wc AS DOUBLE), 6) AS hazard_var
+         |FROM h WINDOW wc AS (ORDER BY dur ROWS UNBOUNDED PRECEDING)
+         |ORDER BY duration_days"""
     ) { (s, d) =>
       graft.pipeline.Behavior.nelsonAalen(
           Tables.events(s, d)
@@ -2388,57 +2335,19 @@ private[graft] object StatsQueries {
     // the output surface.
     q(
       "q321_pacf",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS v
-        |  FROM events),
-        |l AS (SELECT sensor_id, v,
-        |    LAG(v, 1) OVER w AS l1, LAG(v, 2) OVER w AS l2,
-        |    LAG(v, 3) OVER w AS l3
-        |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, v)),
-        |a AS (SELECT sensor_id,
-        |    CAST(COUNT(l1) AS DOUBLE) AS n1,
-        |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx1,
-        |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v * v END) AS DOUBLE)
-        |      AS sxx1,
-        |    CAST(SUM(l1) AS DOUBLE) AS sy1,
-        |    CAST(SUM(l1 * l1) AS DOUBLE) AS syy1,
-        |    CAST(SUM(v * l1) AS DOUBLE) AS sxy1,
-        |    CAST(COUNT(l2) AS DOUBLE) AS n2,
-        |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx2,
-        |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v * v END) AS DOUBLE)
-        |      AS sxx2,
-        |    CAST(SUM(l2) AS DOUBLE) AS sy2,
-        |    CAST(SUM(l2 * l2) AS DOUBLE) AS syy2,
-        |    CAST(SUM(v * l2) AS DOUBLE) AS sxy2,
-        |    CAST(COUNT(l3) AS DOUBLE) AS n3,
-        |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx3,
-        |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v * v END) AS DOUBLE)
-        |      AS sxx3,
-        |    CAST(SUM(l3) AS DOUBLE) AS sy3,
-        |    CAST(SUM(l3 * l3) AS DOUBLE) AS syy3,
-        |    CAST(SUM(v * l3) AS DOUBLE) AS sxy3
-        |  FROM l GROUP BY 1),
-        |r AS (SELECT sensor_id, n1,
-        |    (n1 * sxy1 - sx1 * sy1) / (sqrt(n1 * sxx1 - sx1 * sx1)
-        |      * sqrt(n1 * syy1 - sy1 * sy1)) AS r1,
-        |    (n2 * sxy2 - sx2 * sy2) / (sqrt(n2 * sxx2 - sx2 * sx2)
-        |      * sqrt(n2 * syy2 - sy2 * sy2)) AS r2,
-        |    (n3 * sxy3 - sx3 * sy3) / (sqrt(n3 * sxx3 - sx3 * sx3)
-        |      * sqrt(n3 * syy3 - sy3 * sy3)) AS r3
-        |  FROM a),
-        |f2 AS (SELECT sensor_id, n1, r1, r2, r3,
-        |    (r2 - r1 * r1) / (1.0::DOUBLE - r1 * r1) AS f22 FROM r),
-        |f3 AS (SELECT sensor_id, n1, r1, r2, r3, f22,
-        |    r1 - f22 * r1 AS f21 FROM f2)
-        |SELECT sensor_id, CAST(n1 AS BIGINT) AS n_pairs1,
-        |  ROUND(r1, 6) AS phi1, ROUND(f22, 6) AS phi2,
-        |  ROUND((r3 - f21 * r2 - f22 * r1)
-        |    / (1.0::DOUBLE - f21 * r1 - f22 * r2), 6) AS phi3
-        |FROM f3 ORDER BY sensor_id"""
+      s"""WITH $lagMomentCtes,
+         |r AS (SELECT sensor_id, n1,
+         |$lagCorrCols
+         |  FROM a),
+         |f2 AS (SELECT sensor_id, n1, r1, r2, r3,
+         |    (r2 - r1 * r1) / (1.0::DOUBLE - r1 * r1) AS f22 FROM r),
+         |f3 AS (SELECT sensor_id, n1, r1, r2, r3, f22,
+         |    r1 - f22 * r1 AS f21 FROM f2)
+         |SELECT sensor_id, CAST(n1 AS BIGINT) AS n_pairs1,
+         |  ROUND(r1, 6) AS phi1, ROUND(f22, 6) AS phi2,
+         |  ROUND((r3 - f21 * r2 - f22 * r1)
+         |    / (1.0::DOUBLE - f21 * r1 - f22 * r2), 6) AS phi3
+         |FROM f3 ORDER BY sensor_id"""
     ) { (s, d) =>
       graft.pipeline.Profiler.pacf3(
           EventsAdapter.samples(s, d),
@@ -2452,31 +2361,24 @@ private[graft] object StatsQueries {
     // recursive CTE (q82 discipline). Final state per series, raw.
     q(
       "q324_kalman",
-      """WITH RECURSIVE src AS (
-        |  SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t, value FROM events),
-        |base AS (SELECT sensor_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY sensor_id
-        |      ORDER BY t, value) AS rn
-        |  FROM src),
-        |cnt AS (SELECT sensor_id, MAX(rn) AS n FROM base GROUP BY 1),
-        |rec AS (
-        |  SELECT sensor_id, 1 AS i, value AS x, 1.0::DOUBLE AS p
-        |  FROM base WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.sensor_id, r.i + 1,
-        |    r.x + ((r.p + 0.25::DOUBLE)
-        |        / (r.p + 0.25::DOUBLE + 4.0::DOUBLE))
-        |      * (z.value - r.x),
-        |    (1.0::DOUBLE - (r.p + 0.25::DOUBLE)
-        |        / (r.p + 0.25::DOUBLE + 4.0::DOUBLE))
-        |      * (r.p + 0.25::DOUBLE)
-        |  FROM rec r JOIN base z
-        |    ON z.sensor_id = r.sensor_id AND z.rn = r.i + 1)
-        |SELECT r.sensor_id, CAST(cnt.n AS BIGINT) AS n_samples,
-        |  r.x AS level, r.p AS p_var
-        |FROM rec r JOIN cnt ON cnt.sensor_id = r.sensor_id
-        |WHERE r.i = cnt.n ORDER BY r.sensor_id"""
+      s"""WITH RECURSIVE $seriesRowCtes,
+         |rec AS (
+         |  SELECT sensor_id, 1 AS i, value AS x, 1.0::DOUBLE AS p
+         |  FROM base WHERE rn = 1
+         |  UNION ALL
+         |  SELECT r.sensor_id, r.i + 1,
+         |    r.x + ((r.p + 0.25::DOUBLE)
+         |        / (r.p + 0.25::DOUBLE + 4.0::DOUBLE))
+         |      * (z.value - r.x),
+         |    (1.0::DOUBLE - (r.p + 0.25::DOUBLE)
+         |        / (r.p + 0.25::DOUBLE + 4.0::DOUBLE))
+         |      * (r.p + 0.25::DOUBLE)
+         |  FROM rec r JOIN base z
+         |    ON z.sensor_id = r.sensor_id AND z.rn = r.i + 1)
+         |SELECT r.sensor_id, CAST(cnt.n AS BIGINT) AS n_samples,
+         |  r.x AS level, r.p AS p_var
+         |FROM rec r JOIN cnt ON cnt.sensor_id = r.sensor_id
+         |WHERE r.i = cnt.n ORDER BY r.sensor_id"""
     ) { (s, d) =>
       graft.operators.Kalman.filterLast(
           EventsAdapter.samples(s, d)
@@ -2707,41 +2609,34 @@ private[graft] object StatsQueries {
     // correctly-rounded IEEE op both engines, raw replay.
     q(
       "q334_page_hinkley",
-      """WITH RECURSIVE src AS (
-        |  SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t, value FROM events),
-        |base AS (SELECT sensor_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY sensor_id
-        |      ORDER BY t, value) AS rn
-        |  FROM src),
-        |cnt AS (SELECT sensor_id, MAX(rn) AS n FROM base GROUP BY 1),
-        |rec AS (
-        |  SELECT sensor_id, 1 AS i, value AS mean,
-        |    -0.5::DOUBLE AS m, -0.5::DOUBLE AS mn, 0.0::DOUBLE AS exc
-        |  FROM base WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.sensor_id, r.i + 1,
-        |    r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE),
-        |    r.m + (z.value
-        |      - (r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE))
-        |      - 0.5::DOUBLE),
-        |    LEAST(r.mn, r.m + (z.value
-        |      - (r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE))
-        |      - 0.5::DOUBLE)),
-        |    GREATEST(r.exc, r.m + (z.value
-        |      - (r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE))
-        |      - 0.5::DOUBLE)
-        |      - LEAST(r.mn, r.m + (z.value
-        |        - (r.mean + (z.value - r.mean)
-        |          / CAST(r.i + 1 AS DOUBLE))
-        |        - 0.5::DOUBLE)))
-        |  FROM rec r JOIN base z
-        |    ON z.sensor_id = r.sensor_id AND z.rn = r.i + 1)
-        |SELECT r.sensor_id, CAST(cnt.n AS BIGINT) AS n_samples,
-        |  r.m AS ph_m, r.mn AS ph_min, r.exc AS max_excess,
-        |  r.exc > 5.0::DOUBLE AS alarm
-        |FROM rec r JOIN cnt ON cnt.sensor_id = r.sensor_id
-        |WHERE r.i = cnt.n ORDER BY r.sensor_id"""
+      s"""WITH RECURSIVE $seriesRowCtes,
+         |rec AS (
+         |  SELECT sensor_id, 1 AS i, value AS mean,
+         |    -0.5::DOUBLE AS m, -0.5::DOUBLE AS mn, 0.0::DOUBLE AS exc
+         |  FROM base WHERE rn = 1
+         |  UNION ALL
+         |  SELECT r.sensor_id, r.i + 1,
+         |    r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE),
+         |    r.m + (z.value
+         |      - (r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE))
+         |      - 0.5::DOUBLE),
+         |    LEAST(r.mn, r.m + (z.value
+         |      - (r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE))
+         |      - 0.5::DOUBLE)),
+         |    GREATEST(r.exc, r.m + (z.value
+         |      - (r.mean + (z.value - r.mean) / CAST(r.i + 1 AS DOUBLE))
+         |      - 0.5::DOUBLE)
+         |      - LEAST(r.mn, r.m + (z.value
+         |        - (r.mean + (z.value - r.mean)
+         |          / CAST(r.i + 1 AS DOUBLE))
+         |        - 0.5::DOUBLE)))
+         |  FROM rec r JOIN base z
+         |    ON z.sensor_id = r.sensor_id AND z.rn = r.i + 1)
+         |SELECT r.sensor_id, CAST(cnt.n AS BIGINT) AS n_samples,
+         |  r.m AS ph_m, r.mn AS ph_min, r.exc AS max_excess,
+         |  r.exc > 5.0::DOUBLE AS alarm
+         |FROM rec r JOIN cnt ON cnt.sensor_id = r.sensor_id
+         |WHERE r.i = cnt.n ORDER BY r.sensor_id"""
     ) { (s, d) =>
       graft.operators.PageHinkley.detect(
           EventsAdapter.samples(s, d)
@@ -2754,43 +2649,35 @@ private[graft] object StatsQueries {
     // quantization; "expected days retained within the window".
     q(
       "q335_rmst",
-      """WITH lif AS (SELECT user_id, MIN(epoch_us(ts)) AS f,
-        |    MAX(epoch_us(ts)) AS l FROM events GROUP BY 1),
-        |gm AS (SELECT MAX(l) AS gmax FROM lif),
-        |durs AS (SELECT (l - f) // 86400000000 AS dur,
-        |    CASE WHEN l < gmax - 43200000000 THEN 1 ELSE 0 END
-        |      AS death
-        |  FROM lif CROSS JOIN gm),
-        |bd AS (SELECT dur, COUNT(*) AS c, CAST(SUM(death) AS BIGINT)
-        |    AS d FROM durs GROUP BY 1),
-        |tt AS (SELECT COUNT(*) AS n, MAX(dur) AS tau FROM durs),
-        |r AS (SELECT bd.dur, bd.d, tt.n, tt.tau,
-        |    CAST(COALESCE(SUM(bd.c) OVER (ORDER BY bd.dur
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM bd CROSS JOIN tt),
-        |dth AS (SELECT dur, d, n - cb AS nar, tau,
-        |    CASE WHEN d < n - cb THEN
-        |      CAST(ln(1.0::DOUBLE - CAST(d AS DOUBLE)
-        |        / CAST(n - cb AS DOUBLE)) AS DECIMAL(28,12))
-        |    ELSE CAST(0.0 AS DECIMAL(28,12)) END AS term
-        |  FROM r WHERE d > 0),
-        |fin AS (SELECT dur, tau,
-        |    MAX(CASE WHEN d = nar THEN 1 ELSE 0 END) OVER wc AS z,
-        |    SUM(term) OVER wc AS cum,
-        |    COALESCE(LEAD(dur) OVER (ORDER BY dur), tau) AS nxt
-        |  FROM dth WINDOW wc AS (ORDER BY dur ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW)),
-        |pc AS (SELECT tau,
-        |    CAST((CASE WHEN z = 1 THEN 0.0::DOUBLE
-        |        ELSE exp(CAST(cum AS DOUBLE)) END)
-        |      * CAST(nxt - dur AS DOUBLE) AS DECIMAL(28,6)) AS piece
-        |  FROM fin),
-        |hd AS (SELECT CAST(MIN(dur) AS DOUBLE) AS head FROM dth)
-        |SELECT CAST(MAX(tau) AS BIGINT) AS tau_days,
-        |  COUNT(*) AS n_death_times,
-        |  ROUND(hd.head + CAST(SUM(piece) AS DOUBLE), 6) AS rmst_days
-        |FROM pc CROSS JOIN hd GROUP BY hd.head"""
+      s"""WITH $lifetimeCtes,
+         |tt AS (SELECT COUNT(*) AS n, MAX(dur) AS tau FROM durs),
+         |r AS (SELECT bd.dur, bd.d, tt.n, tt.tau,
+         |    CAST(COALESCE(SUM(bd.c) OVER (ORDER BY bd.dur
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS BIGINT) AS cb
+         |  FROM bd CROSS JOIN tt),
+         |dth AS (SELECT dur, d, n - cb AS nar, tau,
+         |    CASE WHEN d < n - cb THEN
+         |      CAST(ln(1.0::DOUBLE - CAST(d AS DOUBLE)
+         |        / CAST(n - cb AS DOUBLE)) AS DECIMAL(28,12))
+         |    ELSE CAST(0.0 AS DECIMAL(28,12)) END AS term
+         |  FROM r WHERE d > 0),
+         |fin AS (SELECT dur, tau,
+         |    MAX(CASE WHEN d = nar THEN 1 ELSE 0 END) OVER wc AS z,
+         |    SUM(term) OVER wc AS cum,
+         |    COALESCE(LEAD(dur) OVER (ORDER BY dur), tau) AS nxt
+         |  FROM dth WINDOW wc AS (ORDER BY dur ROWS BETWEEN UNBOUNDED
+         |    PRECEDING AND CURRENT ROW)),
+         |pc AS (SELECT tau,
+         |    CAST((CASE WHEN z = 1 THEN 0.0::DOUBLE
+         |        ELSE exp(CAST(cum AS DOUBLE)) END)
+         |      * CAST(nxt - dur AS DOUBLE) AS DECIMAL(28,6)) AS piece
+         |  FROM fin),
+         |hd AS (SELECT CAST(MIN(dur) AS DOUBLE) AS head FROM dth)
+         |SELECT CAST(MAX(tau) AS BIGINT) AS tau_days,
+         |  COUNT(*) AS n_death_times,
+         |  ROUND(hd.head + CAST(SUM(piece) AS DOUBLE), 6) AS rmst_days
+         |FROM pc CROSS JOIN hd GROUP BY hd.head"""
     ) { (s, d) =>
       graft.pipeline.Behavior.rmstDays(
         Tables.events(s, d)
@@ -2872,37 +2759,23 @@ private[graft] object StatsQueries {
     // cross-multiplied Brier numerator all replay as integers.
     q(
       "q344_calibration_bins",
-      """WITH ot AS (SELECT o_custkey, COUNT(*) AS c FROM orders
-        |  GROUP BY 1),
-        |base AS (SELECT
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      + 100000 AS num,
-        |    CASE WHEN COALESCE(ot.c, 0) >= 5 THEN 1 ELSE 0 END AS y
-        |  FROM customer LEFT JOIN ot ON ot.o_custkey = c_custkey),
-        |b AS (SELECT num * 10 // 2097152 AS bin, num, y,
-        |    num - y * 2097152 AS e FROM base),
-        |a AS (SELECT bin, COUNT(*) AS n,
-        |    CAST(SUM(num) AS BIGINT) AS sn,
-        |    CAST(SUM(y) AS BIGINT) AS sy,
-        |    CAST(SUM(CAST(e AS HUGEINT) * e) AS DOUBLE) AS sq
-        |  FROM b GROUP BY 1)
-        |SELECT bin, CAST(n AS BIGINT) AS n, sy AS n_pos,
-        |  CAST(sn AS DOUBLE)
-        |    / (CAST(n AS DOUBLE) * 2097152.0) AS mean_pred,
-        |  CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS rate,
-        |  ROUND(sq / (CAST(n AS DOUBLE) * 2097152.0 * 2097152.0), 6)
-        |    AS brier
-        |FROM a ORDER BY bin"""
+      s"""WITH $scoredCustomerCtes,
+         |b AS (SELECT num * 10 // 2097152 AS bin, num, y,
+         |    num - y * 2097152 AS e FROM base),
+         |a AS (SELECT bin, COUNT(*) AS n,
+         |    CAST(SUM(num) AS BIGINT) AS sn,
+         |    CAST(SUM(y) AS BIGINT) AS sy,
+         |    CAST(SUM(CAST(e AS HUGEINT) * e) AS DOUBLE) AS sq
+         |  FROM b GROUP BY 1)
+         |SELECT bin, CAST(n AS BIGINT) AS n, sy AS n_pos,
+         |  CAST(sn AS DOUBLE)
+         |    / (CAST(n AS DOUBLE) * 2097152.0) AS mean_pred,
+         |  CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS rate,
+         |  ROUND(sq / (CAST(n AS DOUBLE) * 2097152.0 * 2097152.0), 6)
+         |    AS brier
+         |FROM a ORDER BY bin"""
     ) { (s, d) =>
-      val ot = Tables.orders(s, d)
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("c"))
-      val base = Tables.customer(s, d)
-        .join(ot, col("c_custkey") === col("o_custkey"), "left")
-        .select(
-          ((col("c_acctbal").cast("decimal(18,2)") * 100)
-            .cast("long") + 100000L).as("num"),
-          when(coalesce(col("c"), lit(0L)) >= 5, lit(1))
-            .otherwise(lit(0)).as("y"))
+      val base = scoredCustomers(s, d)
       graft.pipeline.Profiler.calibrationBins(base, "num", "y", 21)
         .orderBy("bin")
     },
@@ -2964,41 +2837,27 @@ private[graft] object StatsQueries {
     // division — no sorting of floats, no trapezoids.
     q(
       "q346_auc",
-      """WITH ot AS (SELECT o_custkey, COUNT(*) AS c FROM orders
-        |  GROUP BY 1),
-        |base AS (SELECT
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      + 100000 AS num,
-        |    CASE WHEN COALESCE(ot.c, 0) >= 5 THEN 1 ELSE 0 END AS y
-        |  FROM customer LEFT JOIN ot ON ot.o_custkey = c_custkey),
-        |bv AS (SELECT num AS v, COUNT(*) AS c,
-        |    CAST(COALESCE(SUM(CASE WHEN y = 1 THEN 1 END), 0)
-        |      AS BIGINT) AS cp
-        |  FROM base GROUP BY 1),
-        |rk AS (SELECT v, c, cp,
-        |    CAST(COALESCE(SUM(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cb
-        |  FROM bv),
-        |a AS (SELECT CAST(SUM(cp) AS BIGINT) AS np,
-        |    CAST(SUM(c) - SUM(cp) AS BIGINT) AS nn,
-        |    CAST(SUM(cp * (2 * cb + c + 1)) AS BIGINT) AS r2p
-        |  FROM rk)
-        |SELECT np AS n_pos, nn AS n_neg,
-        |  CAST(r2p - np * (np + 1) AS DOUBLE)
-        |    / (2.0::DOUBLE * CAST(np AS DOUBLE) * CAST(nn AS DOUBLE))
-        |    AS auc
-        |FROM a"""
+      s"""WITH $scoredCustomerCtes,
+         |bv AS (SELECT num AS v, COUNT(*) AS c,
+         |    CAST(COALESCE(SUM(CASE WHEN y = 1 THEN 1 END), 0)
+         |      AS BIGINT) AS cp
+         |  FROM base GROUP BY 1),
+         |rk AS (SELECT v, c, cp,
+         |    CAST(COALESCE(SUM(c) OVER (ORDER BY v
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS BIGINT) AS cb
+         |  FROM bv),
+         |a AS (SELECT CAST(SUM(cp) AS BIGINT) AS np,
+         |    CAST(SUM(c) - SUM(cp) AS BIGINT) AS nn,
+         |    CAST(SUM(cp * (2 * cb + c + 1)) AS BIGINT) AS r2p
+         |  FROM rk)
+         |SELECT np AS n_pos, nn AS n_neg,
+         |  CAST(r2p - np * (np + 1) AS DOUBLE)
+         |    / (2.0::DOUBLE * CAST(np AS DOUBLE) * CAST(nn AS DOUBLE))
+         |    AS auc
+         |FROM a"""
     ) { (s, d) =>
-      val ot = Tables.orders(s, d)
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("c"))
-      val base = Tables.customer(s, d)
-        .join(ot, col("c_custkey") === col("o_custkey"), "left")
-        .select(
-          ((col("c_acctbal").cast("decimal(18,2)") * 100)
-            .cast("long") + 100000L).as("num"),
-          when(coalesce(col("c"), lit(0L)) >= 5, lit(1))
-            .otherwise(lit(0)).as("y"))
+      val base = scoredCustomers(s, d)
       graft.pipeline.Profiler.aucExact(base, "num", "y")
     },
 
@@ -3064,12 +2923,7 @@ private[graft] object StatsQueries {
         |    AS theil
         |FROM t2 GROUP BY g ORDER BY nation"""
     ) { (s, d) =>
-      val ot = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("long").as("tot"))
-      val base = Tables.customer(s, d)
-        .join(ot, col("c_custkey") === col("o_custkey"), "left")
+      val base = customerSpend(s, d)
         .select(col("c_nationkey").as("nation"),
           coalesce(col("tot"), lit(0L)).as("x"))
       graft.pipeline.Profiler.theilIndex(base, "nation", "x")
@@ -3243,54 +3097,42 @@ private[graft] object StatsQueries {
     // the honest-n behind any confidence band on telemetry.
     q(
       "q370_ess",
-      """WITH s AS (SELECT event_type || ' ' || user_id AS sensor_id,
-        |    epoch_us(ts) AS t,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS v
-        |  FROM events),
-        |l AS (SELECT sensor_id, v,
-        |    LAG(v, 1) OVER w AS l1, LAG(v, 2) OVER w AS l2,
-        |    LAG(v, 3) OVER w AS l3
-        |  FROM s WINDOW w AS (PARTITION BY sensor_id ORDER BY t, v)),
-        |a AS (SELECT sensor_id, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(COUNT(l1) AS DOUBLE) AS n1,
-        |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx1,
-        |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v * v END)
-        |      AS DOUBLE) AS sxx1,
-        |    CAST(SUM(l1) AS DOUBLE) AS sy1,
-        |    CAST(SUM(l1 * l1) AS DOUBLE) AS syy1,
-        |    CAST(SUM(v * l1) AS DOUBLE) AS sxy1,
-        |    CAST(COUNT(l2) AS DOUBLE) AS n2,
-        |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx2,
-        |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v * v END)
-        |      AS DOUBLE) AS sxx2,
-        |    CAST(SUM(l2) AS DOUBLE) AS sy2,
-        |    CAST(SUM(l2 * l2) AS DOUBLE) AS syy2,
-        |    CAST(SUM(v * l2) AS DOUBLE) AS sxy2,
-        |    CAST(COUNT(l3) AS DOUBLE) AS n3,
-        |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v END) AS DOUBLE)
-        |      AS sx3,
-        |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v * v END)
-        |      AS DOUBLE) AS sxx3,
-        |    CAST(SUM(l3) AS DOUBLE) AS sy3,
-        |    CAST(SUM(l3 * l3) AS DOUBLE) AS syy3,
-        |    CAST(SUM(v * l3) AS DOUBLE) AS sxy3
-        |  FROM l GROUP BY 1),
-        |r AS (SELECT sensor_id, n,
-        |    (n1 * sxy1 - sx1 * sy1) / (sqrt(n1 * sxx1 - sx1 * sx1)
-        |      * sqrt(n1 * syy1 - sy1 * sy1)) AS r1,
-        |    (n2 * sxy2 - sx2 * sy2) / (sqrt(n2 * sxx2 - sx2 * sx2)
-        |      * sqrt(n2 * syy2 - sy2 * sy2)) AS r2,
-        |    (n3 * sxy3 - sx3 * sy3) / (sqrt(n3 * sxx3 - sx3 * sx3)
-        |      * sqrt(n3 * syy3 - sy3 * sy3)) AS r3
-        |  FROM a)
-        |SELECT sensor_id, n, ROUND(r1, 6) AS rho1,
-        |  ROUND(r2, 6) AS rho2, ROUND(r3, 6) AS rho3,
-        |  ROUND(CAST(n AS DOUBLE)
-        |    / (1.0::DOUBLE + 2.0::DOUBLE * (r1 + r2 + r3)), 6)
-        |    AS ess
-        |FROM r ORDER BY sensor_id"""
+      s"""WITH $lagInputCtes,
+         |a AS (SELECT sensor_id, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(COUNT(l1) AS DOUBLE) AS n1,
+         |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v END) AS DOUBLE)
+         |      AS sx1,
+         |    CAST(SUM(CASE WHEN l1 IS NOT NULL THEN v * v END)
+         |      AS DOUBLE) AS sxx1,
+         |    CAST(SUM(l1) AS DOUBLE) AS sy1,
+         |    CAST(SUM(l1 * l1) AS DOUBLE) AS syy1,
+         |    CAST(SUM(v * l1) AS DOUBLE) AS sxy1,
+         |    CAST(COUNT(l2) AS DOUBLE) AS n2,
+         |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v END) AS DOUBLE)
+         |      AS sx2,
+         |    CAST(SUM(CASE WHEN l2 IS NOT NULL THEN v * v END)
+         |      AS DOUBLE) AS sxx2,
+         |    CAST(SUM(l2) AS DOUBLE) AS sy2,
+         |    CAST(SUM(l2 * l2) AS DOUBLE) AS syy2,
+         |    CAST(SUM(v * l2) AS DOUBLE) AS sxy2,
+         |    CAST(COUNT(l3) AS DOUBLE) AS n3,
+         |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v END) AS DOUBLE)
+         |      AS sx3,
+         |    CAST(SUM(CASE WHEN l3 IS NOT NULL THEN v * v END)
+         |      AS DOUBLE) AS sxx3,
+         |    CAST(SUM(l3) AS DOUBLE) AS sy3,
+         |    CAST(SUM(l3 * l3) AS DOUBLE) AS syy3,
+         |    CAST(SUM(v * l3) AS DOUBLE) AS sxy3
+         |  FROM l GROUP BY 1),
+         |r AS (SELECT sensor_id, n,
+         |$lagCorrCols
+         |  FROM a)
+         |SELECT sensor_id, n, ROUND(r1, 6) AS rho1,
+         |  ROUND(r2, 6) AS rho2, ROUND(r3, 6) AS rho3,
+         |  ROUND(CAST(n AS DOUBLE)
+         |    / (1.0::DOUBLE + 2.0::DOUBLE * (r1 + r2 + r3)), 6)
+         |    AS ess
+         |FROM r ORDER BY sensor_id"""
     ) { (s, d) =>
       graft.pipeline.Profiler.effectiveSampleSize(
           EventsAdapter.samples(s, d),

@@ -20,6 +20,91 @@ import QueryHelpers._
   */
 private[graft] object StreamingQueries {
 
+  /** An events stream with `ts` a timestamp whatever its stored type
+    * (a corpus may store epoch milliseconds).
+    */
+  private def withTimestamps(raw: DataFrame): DataFrame =
+    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+    else raw
+
+  /** The events file stream of the scoped session `ss`. */
+  private def eventsStream(s: SparkSession, ss: SparkSession, d: String)
+      : DataFrame =
+    withTimestamps(ss.readStream.schema(Tables.load(s, d, "events").schema)
+      .parquet(streamSourceDir(s, d, "events")))
+
+  /** The stream-stream interval join of q116 and q296: clicks joined
+    * by `joinType` to the same user's views within ±5 minutes, both
+    * sides watermarked 1 h. user_id < 10 bounds the state-store demo:
+    * the machinery cost (two state stores, per-row puts) is the fixed
+    * overhead being exercised, not the corpus size.
+    */
+  private def clickViewJoin(stream: DataFrame, joinType: String)
+      : DataFrame = {
+    val clicks = stream.filter(col("event_type") === "click" &&
+        col("user_id") < 10)
+      .select(col("user_id").as("cu"), col("ts").as("cts"))
+      .withWatermark("cts", "1 hour")
+    val views = stream.filter(col("event_type") === "view" &&
+        col("user_id") < 10)
+      .select(col("user_id").as("vu"), col("ts").as("vts"))
+      .withWatermark("vts", "1 hour")
+    clicks.join(views, expr(
+      """cu = vu AND
+        |vts BETWEEN cts - INTERVAL 5 MINUTES
+        |        AND cts + INTERVAL 5 MINUTES""".stripMargin), joinType)
+  }
+
+  /** q291 and q313: 10-minute tumbling counts per event type under a
+    * 30-minute watermark over the three-batch late-data source, drained
+    * in `outputMode` and returned sorted by `sortCols`.
+    */
+  private def lateWindowCounts(s: SparkSession, d: String, query: String,
+      outputMode: String, sortCols: Seq[String]): DataFrame = {
+    val ss = streamSession(s)
+    val late = ss.readStream.schema(Tables.load(s, d, "events").schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(lateSourceDir(s, d))
+    val agg = withTimestamps(late)
+      .withWatermark("ts", "30 minutes")
+      .groupBy(col("event_type"), window(col("ts"), "10 minutes").as("w"))
+      .agg(count(lit(1)).as("n"))
+    val name = s"${query}_out_${System.nanoTime()}"
+    val running = agg.writeStream.outputMode(outputMode)
+      .format("memory").queryName(name).start()
+    try drainWithEviction(ss, running, name, 1800000L)
+    finally graft.streaming.StreamingIngest.stopAndCleanCheckpoint(running)
+    val out = ss.table(name)
+      .select(col("event_type"),
+        unix_micros(col("w.start")).as("window_start_us"), col("n"))
+    boundedResult(s, ss, name, out, sortCols)
+  }
+
+  /** The 30-minute sessions per user as gaps-and-islands — the oracle of
+    * batch q105 and of streaming q284: break where the gap to the
+    * previous event is >= 30 min, running-sum session ids, then
+    * per-session extrema.
+    */
+  private val sessionOracleSql =
+    """WITH m AS (
+      |  SELECT user_id, ts,
+      |    CASE WHEN LAG(ts) OVER w IS NULL
+      |      OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
+      |      THEN 1 ELSE 0 END AS brk
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+      |s AS (
+      |  SELECT user_id, ts,
+      |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
+      |      ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM m)
+      |SELECT user_id, epoch_us(MIN(ts)) AS start_us,
+      |  epoch_us(MAX(ts)) + 1800000000 AS end_us,
+      |  COUNT(*) AS n
+      |FROM s GROUP BY user_id, sid
+      |ORDER BY user_id, start_us"""
+
   val registry: Seq[Q] = Seq(
 
     // ---------------------------------------------------------------------
@@ -38,16 +123,9 @@ private[graft] object StreamingQueries {
       // the stateful agg on the 4-partition scoped session (fixed
       // state-store overhead, identical answer)
       val ss = streamSession(s)
-      val schema = Tables.load(s, d, "events").schema
-      val stream = ss.readStream.schema(schema)
-        .parquet(streamSourceDir(s, d, "events"))
-      val streamSamples =
-        (if (stream.schema("ts").dataType ==
-          org.apache.spark.sql.types.LongType)
-          stream.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        else stream)
-          .select(concat(col("event_type"), lit(" "), col("user_id"))
-            .as("sensor_id"), col("ts"), col("value"))
+      val streamSamples = eventsStream(s, ss, d)
+        .select(concat(col("event_type"), lit(" "), col("user_id"))
+          .as("sensor_id"), col("ts"), col("value"))
       val agg = graft.streaming.StreamingIngest
         .windowedResample(streamSamples, "1 day", "1 hour")
         .drop("avg_value")
@@ -96,26 +174,7 @@ private[graft] object StreamingQueries {
     // events. The oracle replays it as gaps-and-islands: break when the
     // gap to the previous event is >= 30min, running-sum session ids,
     // then per-session extrema — an all-integer hash surface.
-    q(
-      "q105_session_windows",
-      """WITH m AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |      OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM m)
-        |SELECT user_id, epoch_us(MIN(ts)) AS start_us,
-        |  epoch_us(MAX(ts)) + 1800000000 AS end_us,
-        |  COUNT(*) AS n
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_us"""
-    ) { (s, d) =>
+    q("q105_session_windows", sessionOracleSql) { (s, d) =>
       Tables.events(s, d)
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("sw"))
@@ -154,29 +213,7 @@ private[graft] object StreamingQueries {
       // re-plan anything planned concurrently with 4 partitions.
       val ss = streamSession(s)
       locally {
-        val schema = Tables.load(s, d, "events").schema
-        val raw = ss.readStream.schema(schema)
-          .parquet(streamSourceDir(s, d, "events"))
-        val stream =
-          if (raw.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-          else raw
-        // user_id < 10 bounds the state-store demo: the machinery cost
-        // (two state stores, per-row puts) is the fixed overhead being
-        // exercised, not the corpus size
-        val clicks = stream.filter(col("event_type") === "click" &&
-            col("user_id") < 10)
-          .select(col("user_id").as("cu"), col("ts").as("cts"))
-          .withWatermark("cts", "1 hour")
-        val views = stream.filter(col("event_type") === "view" &&
-            col("user_id") < 10)
-          .select(col("user_id").as("vu"), col("ts").as("vts"))
-          .withWatermark("vts", "1 hour")
-        val joined = clicks.join(views, expr(
-          """cu = vu AND
-            |vts BETWEEN cts - INTERVAL 5 MINUTES
-            |        AND cts + INTERVAL 5 MINUTES""".stripMargin))
+        val joined = clickViewJoin(eventsStream(s, ss, d), "inner")
         val name = s"q116_out_${System.nanoTime()}"
         val query = joined.writeStream.outputMode("append")
           .format("memory").queryName(name).start()
@@ -279,27 +316,15 @@ private[graft] object StreamingQueries {
     // stream ≡ batch, pinned by sharing q271's oracle arithmetic.
     q(
       "q275_stream_hll",
-      """WITH t AS (SELECT l_returnflag AS flag,
-        |    CAST(l_orderkey AS VARCHAR) AS k FROM lineitem),
-        |h AS (SELECT flag,
-        |    ('0x'||substr(md5('0:'||k),1,15))::BIGINT AS hv FROM t),
-        |r AS (SELECT flag, hv % 256 AS reg, hv // 256 AS w FROM h),
-        |m AS (SELECT flag, reg,
-        |    MAX(CASE WHEN w = 0 THEN 53
-        |        ELSE 53 - length(bin(w)) END) AS mj
-        |  FROM r GROUP BY 1, 2),
-        |g AS (SELECT flag, COUNT(*) AS registers_observed,
-        |    CAST(SUM(CAST(1 AS BIGINT) << CAST(53 - mj AS INT))
-        |      AS BIGINT) AS tobs
-        |  FROM m GROUP BY 1)
-        |SELECT flag, registers_observed,
-        |  tobs + (256 - registers_observed) *
-        |    (CAST(1 AS BIGINT) << 53) AS t_scaled,
-        |  (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 256.0::DOUBLE))
-        |    * 256.0::DOUBLE * 256.0::DOUBLE * 9007199254740992.0::DOUBLE
-        |    / CAST(tobs + (256 - registers_observed) *
-        |        (CAST(1 AS BIGINT) << 53) AS DOUBLE) AS hll_estimate
-        |FROM g ORDER BY flag"""
+      s"""WITH $hllRegisterCtes
+         |SELECT flag, registers_observed,
+         |  tobs + (256 - registers_observed) *
+         |    (CAST(1 AS BIGINT) << 53) AS t_scaled,
+         |  (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 256.0::DOUBLE))
+         |    * 256.0::DOUBLE * 256.0::DOUBLE * 9007199254740992.0::DOUBLE
+         |    / CAST(tobs + (256 - registers_observed) *
+         |        (CAST(1 AS BIGINT) << 53) AS DOUBLE) AS hll_estimate
+         |FROM g ORDER BY flag"""
     ) { (s, d) =>
       val ss = streamSession(s)
       val schema = Tables.load(s, d, "lineitem").schema
@@ -324,36 +349,10 @@ private[graft] object StreamingQueries {
     // parity against q105's gaps-and-islands oracle; production runs
     // append mode + watermark for state eviction, which changes WHEN
     // sessions emit, never their extent.
-    q(
-      "q284_stream_sessions",
-      """WITH m AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |      OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) >= 1800000000
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM m)
-        |SELECT user_id, epoch_us(MIN(ts)) AS start_us,
-        |  epoch_us(MAX(ts)) + 1800000000 AS end_us,
-        |  COUNT(*) AS n
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, start_us"""
-    ) { (s, d) =>
+    q("q284_stream_sessions", sessionOracleSql) { (s, d) =>
       val ss = streamSession(s)
       locally {
-        val schema = Tables.load(s, d, "events").schema
-        val raw = ss.readStream.schema(schema)
-          .parquet(streamSourceDir(s, d, "events"))
-        val stream =
-          if (raw.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-          else raw
+        val stream = eventsStream(s, ss, d)
         val sess = stream
           .groupBy(col("user_id"),
             session_window(col("ts"), "30 minutes").as("sw"))
@@ -381,31 +380,8 @@ private[graft] object StreamingQueries {
     // (the closing no-data batch handles a batch-2 advance). The
     // oracle replays BOTH rules in SQL.
     q("q291_stream_late_data", lateDataOracleSql) { (s, d) =>
-      val ss = streamSession(s)
-      locally {
-        val schema = Tables.load(s, d, "events").schema
-        val raw = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(lateSourceDir(s, d))
-        val stream =
-          if (raw.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-          else raw
-        val agg = stream.withWatermark("ts", "30 minutes")
-          .groupBy(col("event_type"),
-            window(col("ts"), "10 minutes").as("w"))
-          .agg(count(lit(1)).as("n"))
-        val name = s"q291_out_${System.nanoTime()}"
-        val query = agg.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try drainWithEviction(ss, query, name, 1800000L) finally graft.streaming.StreamingIngest.stopAndCleanCheckpoint(query)
-        val out = ss.table(name)
-          .select(col("event_type"),
-            unix_micros(col("w.start")).as("window_start_us"), col("n"))
-        boundedResult(s, ss, name, out,
-          Seq("event_type", "window_start_us"))
-      }
+      lateWindowCounts(s, d, "q291", "append",
+        Seq("event_type", "window_start_us"))
     },
 
     // Streaming LEFT OUTER interval join — q116's outer twin, pinning
@@ -418,27 +394,7 @@ private[graft] object StreamingQueries {
     q("q296_stream_outer_join", outerJoinOracleSql) { (s, d) =>
       val ss = streamSession(s)
       locally {
-        val schema = Tables.load(s, d, "events").schema
-        val raw = ss.readStream.schema(schema)
-          .parquet(streamSourceDir(s, d, "events"))
-        val stream =
-          if (raw.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-          else raw
-        val clicks = stream.filter(col("event_type") === "click" &&
-            col("user_id") < 10)
-          .select(col("user_id").as("cu"), col("ts").as("cts"))
-          .withWatermark("cts", "1 hour")
-        val views = stream.filter(col("event_type") === "view" &&
-            col("user_id") < 10)
-          .select(col("user_id").as("vu"), col("ts").as("vts"))
-          .withWatermark("vts", "1 hour")
-        val joined = clicks.join(views, expr(
-          """cu = vu AND
-            |vts BETWEEN cts - INTERVAL 5 MINUTES
-            |        AND cts + INTERVAL 5 MINUTES""".stripMargin),
-          "leftOuter")
+        val joined = clickViewJoin(eventsStream(s, ss, d), "leftOuter")
         val name = s"q296_out_${System.nanoTime()}"
         val query = joined.writeStream.outputMode("append")
           .format("memory").queryName(name).start()
@@ -487,31 +443,8 @@ private[graft] object StreamingQueries {
         |    AND ball.ws = p2.ws
         |ORDER BY event_type, window_start_us, n"""
     ) { (s, d) =>
-      val ss = streamSession(s)
-      locally {
-        val schema = Tables.load(s, d, "events").schema
-        val raw = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(lateSourceDir(s, d))
-        val stream =
-          if (raw.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-          else raw
-        val agg = stream.withWatermark("ts", "30 minutes")
-          .groupBy(col("event_type"),
-            window(col("ts"), "10 minutes").as("w"))
-          .agg(count(lit(1)).as("n"))
-        val name = s"q313_out_${System.nanoTime()}"
-        val query = agg.writeStream.outputMode("update")
-          .format("memory").queryName(name).start()
-        try drainWithEviction(ss, query, name, 1800000L) finally graft.streaming.StreamingIngest.stopAndCleanCheckpoint(query)
-        val out = ss.table(name)
-          .select(col("event_type"),
-            unix_micros(col("w.start")).as("window_start_us"), col("n"))
-        boundedResult(s, ss, name, out,
-          Seq("event_type", "window_start_us", "n"))
-      }
+      lateWindowCounts(s, d, "q313", "update",
+        Seq("event_type", "window_start_us", "n"))
     }
   )
 }

@@ -20,6 +20,53 @@ import QueryHelpers._
   */
 private[graft] object TextQueries {
 
+  /** The repeat-scrub oracles' 5-gram keys (q97, q104): `g` holds
+    * each gram position of a preceding `t (id, toks)` CTE with its
+    * 60-bit md5 key.
+    */
+  private val scrubGramCte =
+    """g AS (
+      |  SELECT id, i AS gpos,
+      |    ('0x' || substr(md5(
+      |      array_to_string(list_slice(toks, i + 1, i + 5), ' ')),
+      |      1, 15))::BIGINT AS gram
+      |  FROM t, UNNEST(range(0, GREATEST(len(toks) - 4, 0))) AS u(i))"""
+
+  /** The repeat-scrub oracles' reassembly: the tokens of `t` outside the
+    * `cov` spans, rejoined in order, per document with its token and
+    * kept counts.
+    */
+  private val scrubReassemblySql =
+    """tok AS (
+      |  SELECT id, s['pos'] - 1 AS pos, s['tok'] AS tok
+      |  FROM (SELECT id,
+      |    UNNEST(list_transform(toks, (x, i) -> {'pos': i, 'tok': x}))
+      |      AS s FROM t)),
+      |kept AS (
+      |  SELECT tok.id, tok.pos, tok.tok FROM tok
+      |  ANTI JOIN cov ON tok.id = cov.id AND tok.pos = cov.pos),
+      |agg AS (
+      |  SELECT id, COUNT(*) AS n_kept,
+      |    string_agg(tok, ' ' ORDER BY pos) AS text
+      |  FROM kept GROUP BY id)
+      |SELECT t.id, len(t.toks) AS n_tokens,
+      |  COALESCE(agg.n_kept, 0) AS n_kept,
+      |  COALESCE(agg.text, '') AS text
+      |FROM t LEFT JOIN agg USING (id) ORDER BY t.id"""
+
+  /** The per-source token oracles' counts (q356, q357): `tf` each
+    * (source `g`, token) count, `pc` each source's token total `n`.
+    */
+  private val sourceTokenCtes =
+    """tok AS (SELECT source AS g,
+      |    unnest(string_split_regex(trim(lower(text)), '\s+'))
+      |      AS token
+      |  FROM documents),
+      |tf AS (SELECT g, token, COUNT(*) AS c FROM tok
+      |  WHERE length(token) > 0 GROUP BY 1, 2),
+      |pc AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n FROM tf
+      |  GROUP BY 1)"""
+
   val registry: Seq[Q] = Seq(
 
     // ---------------------------------------------------------------------
@@ -334,41 +381,21 @@ private[graft] object TextQueries {
     // md5 gram keys.
     q(
       "q97_repeat_scrub",
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |    string_split_regex(trim(text
-        |      || ' promo' || CAST(doc_id % 7 AS VARCHAR)
-        |      || ' click here now again promo' || CAST(doc_id % 7 AS VARCHAR)
-        |      || ' click here now again'), '\s+') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT id, i AS gpos,
-        |    ('0x' || substr(md5(
-        |      array_to_string(list_slice(toks, i + 1, i + 5), ' ')),
-        |      1, 15))::BIGINT AS gram
-        |  FROM t, UNNEST(range(0, GREATEST(len(toks) - 4, 0))) AS u(i)),
-        |f AS (SELECT id, gram, MIN(gpos) AS fp FROM g GROUP BY 1, 2),
-        |cov AS (
-        |  SELECT DISTINCT id, gpos + j AS pos FROM (
-        |    SELECT g.id, g.gpos FROM g JOIN f USING (id, gram)
-        |    WHERE g.gpos > f.fp),
-        |    UNNEST(range(0, 5)) AS v(j)),
-        |tok AS (
-        |  SELECT id, s['pos'] - 1 AS pos, s['tok'] AS tok
-        |  FROM (SELECT id,
-        |    UNNEST(list_transform(toks, (x, i) -> {'pos': i, 'tok': x}))
-        |      AS s FROM t)),
-        |kept AS (
-        |  SELECT tok.id, tok.pos, tok.tok FROM tok
-        |  ANTI JOIN cov ON tok.id = cov.id AND tok.pos = cov.pos),
-        |agg AS (
-        |  SELECT id, COUNT(*) AS n_kept,
-        |    string_agg(tok, ' ' ORDER BY pos) AS text
-        |  FROM kept GROUP BY id)
-        |SELECT t.id, len(t.toks) AS n_tokens,
-        |  COALESCE(agg.n_kept, 0) AS n_kept,
-        |  COALESCE(agg.text, '') AS text
-        |FROM t LEFT JOIN agg USING (id) ORDER BY t.id"""
+      s"""WITH t AS (
+         |  SELECT doc_id AS id,
+         |    string_split_regex(trim(text
+         |      || ' promo' || CAST(doc_id % 7 AS VARCHAR)
+         |      || ' click here now again promo' || CAST(doc_id % 7 AS VARCHAR)
+         |      || ' click here now again'), '\\s+') AS toks
+         |  FROM documents),
+         |$scrubGramCte,
+         |f AS (SELECT id, gram, MIN(gpos) AS fp FROM g GROUP BY 1, 2),
+         |cov AS (
+         |  SELECT DISTINCT id, gpos + j AS pos FROM (
+         |    SELECT g.id, g.gpos FROM g JOIN f USING (id, gram)
+         |    WHERE g.gpos > f.fp),
+         |    UNNEST(range(0, 5)) AS v(j)),
+         |$scrubReassemblySql"""
     ) { (s, d) =>
       val aug = Tables.spread(s, Tables.documents(s, d))
         .select(col("doc_id"), concat(col("text"),
@@ -435,42 +462,22 @@ private[graft] object TextQueries {
     // ordered reassembly.
     q(
       "q104_corpus_repeat_scrub",
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |    string_split_regex(trim(text
-        |      || ' visit our site today for more great deals'), '\s+')
-        |      AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT id, i AS gpos,
-        |    ('0x' || substr(md5(
-        |      array_to_string(list_slice(toks, i + 1, i + 5), ' ')),
-        |      1, 15))::BIGINT AS gram
-        |  FROM t, UNNEST(range(0, GREATEST(len(toks) - 4, 0))) AS u(i)),
-        |f AS (
-        |  SELECT gram, MIN({'id': id, 'gpos': gpos}) AS fo
-        |  FROM g GROUP BY gram),
-        |cov AS (
-        |  SELECT DISTINCT id, gpos + j AS pos FROM (
-        |    SELECT g.id, g.gpos FROM g JOIN f USING (gram)
-        |    WHERE NOT (g.id = f.fo['id'] AND g.gpos = f.fo['gpos'])),
-        |    UNNEST(range(0, 5)) AS v(j)),
-        |tok AS (
-        |  SELECT id, s['pos'] - 1 AS pos, s['tok'] AS tok
-        |  FROM (SELECT id,
-        |    UNNEST(list_transform(toks, (x, i) -> {'pos': i, 'tok': x}))
-        |      AS s FROM t)),
-        |kept AS (
-        |  SELECT tok.id, tok.pos, tok.tok FROM tok
-        |  ANTI JOIN cov ON tok.id = cov.id AND tok.pos = cov.pos),
-        |agg AS (
-        |  SELECT id, COUNT(*) AS n_kept,
-        |    string_agg(tok, ' ' ORDER BY pos) AS text
-        |  FROM kept GROUP BY id)
-        |SELECT t.id, len(t.toks) AS n_tokens,
-        |  COALESCE(agg.n_kept, 0) AS n_kept,
-        |  COALESCE(agg.text, '') AS text
-        |FROM t LEFT JOIN agg USING (id) ORDER BY t.id"""
+      s"""WITH t AS (
+         |  SELECT doc_id AS id,
+         |    string_split_regex(trim(text
+         |      || ' visit our site today for more great deals'), '\\s+')
+         |      AS toks
+         |  FROM documents),
+         |$scrubGramCte,
+         |f AS (
+         |  SELECT gram, MIN({'id': id, 'gpos': gpos}) AS fo
+         |  FROM g GROUP BY gram),
+         |cov AS (
+         |  SELECT DISTINCT id, gpos + j AS pos FROM (
+         |    SELECT g.id, g.gpos FROM g JOIN f USING (gram)
+         |    WHERE NOT (g.id = f.fo['id'] AND g.gpos = f.fo['gpos'])),
+         |    UNNEST(range(0, 5)) AS v(j)),
+         |$scrubReassemblySql"""
     ) { (s, d) =>
       val aug = Tables.spread(s, Tables.documents(s, d))
         .select(col("doc_id"), concat(col("text"),
@@ -1363,31 +1370,24 @@ private[graft] object TextQueries {
     // IEEE score shape, per-class top-10 on (rounded score, token).
     q(
       "q356_class_tfidf",
-      """WITH tok AS (SELECT source AS g,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS token
-        |  FROM documents),
-        |tf AS (SELECT g, token, COUNT(*) AS c FROM tok
-        |  WHERE length(token) > 0 GROUP BY 1, 2),
-        |pc AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n FROM tf
-        |  GROUP BY 1),
-        |corpus AS (SELECT token, CAST(SUM(c) AS BIGINT) AS f FROM tf
-        |  GROUP BY 1),
-        |av AS (SELECT CAST(SUM(n) AS BIGINT) AS tot, COUNT(*) AS k
-        |  FROM pc),
-        |sc AS (SELECT g, token, c,
-        |    ROUND(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)
-        |      * ln(1.0::DOUBLE + (CAST(tot AS DOUBLE)
-        |        / CAST(k AS DOUBLE)) / CAST(f AS DOUBLE)), 6)
-        |      AS score
-        |  FROM tf JOIN pc USING (g) JOIN corpus USING (token)
-        |  CROSS JOIN av),
-        |rk AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY g
-        |    ORDER BY score DESC, token) AS INTEGER) AS rank
-        |  FROM sc)
-        |SELECT g AS source, token, CAST(c AS BIGINT) AS tf, score,
-        |  rank
-        |FROM rk WHERE rank <= 10 ORDER BY source, rank"""
+      s"""WITH $sourceTokenCtes,
+         |corpus AS (SELECT token, CAST(SUM(c) AS BIGINT) AS f FROM tf
+         |  GROUP BY 1),
+         |av AS (SELECT CAST(SUM(n) AS BIGINT) AS tot, COUNT(*) AS k
+         |  FROM pc),
+         |sc AS (SELECT g, token, c,
+         |    ROUND(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)
+         |      * ln(1.0::DOUBLE + (CAST(tot AS DOUBLE)
+         |        / CAST(k AS DOUBLE)) / CAST(f AS DOUBLE)), 6)
+         |      AS score
+         |  FROM tf JOIN pc USING (g) JOIN corpus USING (token)
+         |  CROSS JOIN av),
+         |rk AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY g
+         |    ORDER BY score DESC, token) AS INTEGER) AS rank
+         |  FROM sc)
+         |SELECT g AS source, token, CAST(c AS BIGINT) AS tf, score,
+         |  rank
+         |FROM rk WHERE rank <= 10 ORDER BY source, rank"""
     ) { (s, d) =>
       graft.pipeline.TextAnalysis.classTfIdf(
           Tables.documents(s, d), "source", "text")
@@ -1402,43 +1402,36 @@ private[graft] object TextQueries {
     // dropped on both engines.
     q(
       "q357_burrows_delta",
-      """WITH tok AS (SELECT source AS g,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS token
-        |  FROM documents),
-        |tf AS (SELECT g, token, COUNT(*) AS c FROM tok
-        |  WHERE length(token) > 0 GROUP BY 1, 2),
-        |pc AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n FROM tf
-        |  GROUP BY 1),
-        |top AS (SELECT token FROM (SELECT token,
-        |    CAST(SUM(c) AS BIGINT) AS f FROM tf GROUP BY 1)
-        |  ORDER BY f DESC, token LIMIT 50),
-        |grid AS (SELECT pc.g, top.token,
-        |    CAST(CAST(COALESCE(tf.c, 0) AS DOUBLE)
-        |      / CAST(pc.n AS DOUBLE) AS DECIMAL(28,12)) AS r
-        |  FROM pc CROSS JOIN top
-        |  LEFT JOIN tf ON tf.g = pc.g AND tf.token = top.token),
-        |st AS (SELECT token, COUNT(*) AS s, SUM(r) AS sr,
-        |    SUM(CAST(CAST(r AS DOUBLE) * CAST(r AS DOUBLE)
-        |      AS DECIMAL(28,12))) AS srr
-        |  FROM grid GROUP BY 1),
-        |z AS (SELECT grid.g, grid.token,
-        |    (CAST(r AS DOUBLE) - CAST(sr AS DOUBLE)
-        |        / CAST(s AS DOUBLE))
-        |      / sqrt(CAST(srr AS DOUBLE) / CAST(s AS DOUBLE)
-        |        - (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE))
-        |          * (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE))) AS z
-        |  FROM grid JOIN st USING (token)
-        |  WHERE CAST(srr AS DOUBLE) / CAST(s AS DOUBLE)
-        |    - (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE))
-        |      * (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE)) > 0),
-        |pr AS (SELECT a.g AS g_a, b.g AS g_b,
-        |    CAST(ABS(a.z - b.z) AS DECIMAL(28,12)) AS dd
-        |  FROM z a JOIN z b ON a.token = b.token AND a.g < b.g)
-        |SELECT g_a, g_b, COUNT(*) AS n_tokens,
-        |  ROUND(CAST(SUM(dd) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE),
-        |    6) AS delta
-        |FROM pr GROUP BY 1, 2 ORDER BY g_a, g_b"""
+      s"""WITH $sourceTokenCtes,
+         |top AS (SELECT token FROM (SELECT token,
+         |    CAST(SUM(c) AS BIGINT) AS f FROM tf GROUP BY 1)
+         |  ORDER BY f DESC, token LIMIT 50),
+         |grid AS (SELECT pc.g, top.token,
+         |    CAST(CAST(COALESCE(tf.c, 0) AS DOUBLE)
+         |      / CAST(pc.n AS DOUBLE) AS DECIMAL(28,12)) AS r
+         |  FROM pc CROSS JOIN top
+         |  LEFT JOIN tf ON tf.g = pc.g AND tf.token = top.token),
+         |st AS (SELECT token, COUNT(*) AS s, SUM(r) AS sr,
+         |    SUM(CAST(CAST(r AS DOUBLE) * CAST(r AS DOUBLE)
+         |      AS DECIMAL(28,12))) AS srr
+         |  FROM grid GROUP BY 1),
+         |z AS (SELECT grid.g, grid.token,
+         |    (CAST(r AS DOUBLE) - CAST(sr AS DOUBLE)
+         |        / CAST(s AS DOUBLE))
+         |      / sqrt(CAST(srr AS DOUBLE) / CAST(s AS DOUBLE)
+         |        - (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE))
+         |          * (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE))) AS z
+         |  FROM grid JOIN st USING (token)
+         |  WHERE CAST(srr AS DOUBLE) / CAST(s AS DOUBLE)
+         |    - (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE))
+         |      * (CAST(sr AS DOUBLE) / CAST(s AS DOUBLE)) > 0),
+         |pr AS (SELECT a.g AS g_a, b.g AS g_b,
+         |    CAST(ABS(a.z - b.z) AS DECIMAL(28,12)) AS dd
+         |  FROM z a JOIN z b ON a.token = b.token AND a.g < b.g)
+         |SELECT g_a, g_b, COUNT(*) AS n_tokens,
+         |  ROUND(CAST(SUM(dd) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE),
+         |    6) AS delta
+         |FROM pr GROUP BY 1, 2 ORDER BY g_a, g_b"""
     ) { (s, d) =>
       graft.pipeline.TextAnalysis.burrowsDelta(
           Tables.documents(s, d), "source", "text")

@@ -558,9 +558,12 @@ final class SensorStore(
   }
 
   /** Typed sample scan in the canonical 3-column layout. Timestamp
-    * predicates applied by callers reach the parquet row-group stats but
-    * CANNOT prune `month=` directories (the partition column is dropped
-    * here); time-bounded reads should go through [[samplesInRange]].
+    * predicates applied by callers reach the parquet row-group stats,
+    * and on a session with [[graft.GraftExtensions]] (every
+    * `GraftSession`) [[graft.plans.MonthPruneRule]] derives the
+    * `month=` directory pruning from them too, although the partition
+    * column is dropped here. On a session without the extension only
+    * [[samplesInRange]] prunes months.
     */
   def samples(t: SensorType): DataFrame =
     if (exists(valueDir(t)))
@@ -573,7 +576,10 @@ final class SensorStore(
     * `month=` directories before any IO — the ClickHouse monthly-partition
     * index analog this layout exists for — then applies the row-level
     * timestamp filters (which parquet min/max stats serve within the
-    * surviving partitions).
+    * surviving partitions). [[graft.plans.MonthPruneRule]] derives the
+    * same predicate on a GraftSession (and stands aside when the filter
+    * already names `month`); the hand-derived one is what prunes on a
+    * session without [[graft.GraftExtensions]].
     */
   def samplesInRange(
       t: SensorType,

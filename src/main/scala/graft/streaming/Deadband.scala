@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Deadband compression — the classic TSDB ingest reducer: a sample is
@@ -31,14 +30,7 @@ object Deadband {
     */
   def compress(samples: DataFrame, eps: Double): DataFrame = {
     import samples.sparkSession.implicits._
-    val ds = samples
-      .select(col("sensor_id").cast("string"),
-        col("timestamp_us").cast("long"),
-        col("value").cast("double"))
-      .as[Sample]
-      .repartition(col("sensor_id"))
-      .sortWithinPartitions("sensor_id", "timestamp_us", "value")
-    ds.mapPartitions { it =>
+    graft.operators.SeriesFold.sorted[Sample](samples).mapPartitions { it =>
       // explicit started-flag, not a null id sentinel: a NULL sensor_id
       // series would collide with the "no series yet" state and have
       // its first sample deadbanded against the phantom lastKept = 0.0

@@ -823,6 +823,21 @@ class GatewaySpec extends SparkSpec {
     assert(deep.body() == flat.body())
   }
 
+  test("deeply nested label regexes answer 400, not a stack overflow") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    // both inside the 4,000-char pattern cap; 1,999 groups overflowed
+    // the compiler's stack on a gateway worker
+    for (n <- Seq(900, 1999)) {
+      val deep = "(" * n + "x" + ")" * n
+      val series = get("/series?selector=" + enc(s"""{env=~"$deep"}"""))
+      assert(series.statusCode() == 400, series.body())
+      assert(series.body().contains("nest deeper"), series.body())
+      val metrics = get("/metrics?name_regex=" + enc(deep))
+      assert(metrics.statusCode() == 400, metrics.body())
+      assert(metrics.body().contains("nest deeper"), metrics.body())
+    }
+  }
+
   test("bulk export: per-series IPC files + manifest, no data on driver path") {
     val dir = graft.TempDirs.createPath("gw_bulk")
     // http_requests samples live at 2024-01 (remote-write fixture) —

@@ -166,6 +166,14 @@ class LinearRegexSpec extends AnyFunSuite {
     }
   }
 
+  test("group nesting cap: the deepest allowed compiles, one more rejects") {
+    def nested(n: Int) = "(" * n + "x" + ")" * n
+    assert(LinearRegex.compile(nested(LinearRegex.MaxGroupDepth)).find("x"))
+    val e = intercept[IllegalArgumentException](
+      LinearRegex.compile(nested(LinearRegex.MaxGroupDepth + 1)))
+    assert(e.getMessage.contains("nest deeper"), e.getMessage)
+  }
+
   test("program size cap rejects duplication blowups") {
     assertThrows[IllegalArgumentException](
       LinearRegex.compile("(a{1000}b{1000}c{1000}d{1000}e{1000}" +

@@ -42,8 +42,10 @@ class PlanSpec extends SparkSpec {
       .toDF("sensor_id", "timestamp_us", "value"))
     val plan = planOf(store.samplesInRange(graft.model.SensorType.Float,
       Some(1704067200000000L), Some(1705000000000000L)))
-    // the derived month predicate must reach PartitionFilters (a plain
-    // timestamp filter cannot prune month= directories)
+    // the derived month predicate must reach PartitionFilters (on this
+    // GraftSession MonthPruneRule would derive it from the timestamp
+    // filter as well; the hand-derived one prunes on a session without
+    // GraftExtensions)
     assert(plan.contains("PartitionFilters: [isnotnull(month"), plan)
     assert(plan.contains("(month") && plan.contains("202401"), plan)
     // and the row-level timestamp bounds still reach the parquet scan

@@ -128,6 +128,19 @@ class ExtendedPromQLSpec extends SparkSpec {
 
   private val now = 1706745600000000L
 
+  test("a `[` inside a label value is not a range bracket") {
+    val e = intercept[PromQLError](
+      ExtendedPromQL.parse("""rate(x{a="["})""", now))
+    assert(e.getMessage.contains("rate expects a range selector"),
+      e.getMessage)
+    ExtendedPromQL.parse("""topk(3, x{a="["})""", now) match {
+      case TopKQ("topk", 3, Seq(), false, ms, _, e) =>
+        assert(ms.contains(LabelMatcher.Eq("a", "[")), ms)
+        assert(e == now)
+      case other => fail(s"unexpected: $other")
+    }
+  }
+
   test("parses over_time functions with range") {
     ExtendedPromQL.parse("sum_over_time(view[31d])", now) match {
       case OverTimeQ("sum", ms, s, e) =>
