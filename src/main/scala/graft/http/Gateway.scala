@@ -672,15 +672,16 @@ final class Gateway(
     // Export bodies STREAM (chunked transfer + toLocalIterator): the
     // default query limit is 10M rows (reference:
     // src/storage/mod.rs:17), and a collect()-then-respond shape would
-    // buffer the full payload at the edge. The bulk formats scan
-    // WITHOUT the plan-level limit — orderBy+limit collapses to ONE
-    // output partition, which toLocalIterator would materialize whole
-    // on the driver (see rangeScanUnlimited) — and enforce the row cap
-    // on the iterator instead, so edge residency is one RANGE partition
-    // + one 64 KiB text buffer (or one Arrow batch). SenML keeps the
-    // limited scan: its base-time window is global by format design
-    // (record 1 carries the base fields every other record is relative
-    // to), so that plan single-partitions regardless.
+    // buffer the full payload at the edge. CSV, JSONL and Arrow (every
+    // value type) scan WITHOUT the plan-level limit — orderBy+limit
+    // collapses to ONE output partition, which toLocalIterator would
+    // materialize whole on the driver (see rangeScanUnlimited) — and
+    // enforce the row cap on the iterator instead, so edge residency is
+    // one RANGE partition + one 64 KiB text buffer (or one Arrow batch)
+    // regardless of export size. SenML keeps the limited scan, so its
+    // plan collapses to one partition: its base-time window is global by
+    // format design (record 1 carries the base fields every other record
+    // is relative to).
     import scala.jdk.CollectionConverters._
     lazy val read = sampleRead(store.samplesInRange(sType, startUs, endUs))
     lazy val scanUnlimited =
@@ -712,36 +713,18 @@ final class Gateway(
         // the established slim timestamp+value layout, the rest carry
         // sensor_id/sensor_name like the reference. The long all-string
         // schema remains the multi-series contract (export_bulk).
-        sType match {
-          case SensorType.Float =>
-            // the volume type streams IPC batches straight onto the
-            // response — bounded by one 64Ki-row batch
-            val rows = scanUnlimited
-              .select(col("timestamp_us"), col("value"))
-              .toLocalIterator().asScala.take(limit)
-              .map(r => (r.getLong(0), r.getDouble(1)))
-            respondStreaming(x, 200, "application/vnd.apache.arrow.file")(
-              out => graft.sources.ArrowIO.writeFloatSeriesStream(rows, out))
-          case _ =>
-            // the non-Float typed encoders buffer one series; these
-            // are the low-volume value types (location fixes, blobs,
-            // json) — the Float stream above carries the bulk path
-            val scan = SensorOps.rangeScan(read, uuid, startUs, endUs, limit)
-            val rows = scan.select(col("timestamp_us"), col("value"))
-              .collect().map { r =>
-                val v: Any = sType match {
-                  case SensorType.Location =>
-                    (r.getStruct(1).getDouble(0), r.getStruct(1).getDouble(1))
-                  case SensorType.Numeric => r.getDecimal(1)
-                  case _ => r.get(1)
-                }
-                (r.getLong(0), v)
-              }.toSeq
-            respondBytes(x, 200, "application/vnd.apache.arrow.file",
-              graft.sources.ArrowIO.encodeTypedSeries(
-                graft.sources.ArrowIO.TypedSeries(
-                  sType, Some(uuid), Some(row.getString(1)), rows)))
-        }
+        val slim = sType == SensorType.Float
+        val value: Row => Any =
+          if (sType == SensorType.Location) { r =>
+            val p = r.getStruct(1)
+            (p.getDouble(0), p.getDouble(1))
+          } else _.get(1)
+        val rows = scanUnlimited.select(col("timestamp_us"), col("value"))
+          .toLocalIterator().asScala.take(limit)
+          .map(r => (r.getLong(0), value(r)))
+        respondStreaming(x, 200, "application/vnd.apache.arrow.file")(out =>
+          graft.sources.ArrowIO.writeTypedSeriesStream(sType,
+            Option.unless(slim)(uuid), Option.unless(slim)(row.getString(1)), rows, out))
       case other =>
         throw new IllegalArgumentException(
           s"Unsupported export format '$other'. Supported formats: senml, csv, jsonl, arrow")

@@ -5,7 +5,7 @@ import java.nio.channels.Channels
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.{BigIntVector, BitVector, DecimalVector, Float8Vector, TimeStampMicroVector, VarBinaryVector, VarCharVector, VectorSchemaRoot}
+import org.apache.arrow.vector.{BigIntVector, BitVector, DecimalVector, FieldVector, Float8Vector, TimeStampMicroVector, VarBinaryVector, VarCharVector, VectorSchemaRoot}
 import org.apache.arrow.vector.complex.StructVector
 import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter}
 import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit}
@@ -20,13 +20,19 @@ import graft.model.SensorType
   * library Spark already ships.
   *
   * Schema contracts mirrored from the reference:
-  *  - single Float series: `timestamp: Timestamp(µs, naive)`, `value:
-  *    Float64` (reference: src/exporters/arrow/mod.rs:224-388);
+  *  - single typed series: `timestamp: Timestamp(µs, naive)`, a `value`
+  *    of the type's Arrow type, and constant `sensor_id`/`sensor_name`
+  *    columns when given (reference: src/exporters/arrow/mod.rs:224-388);
+  *    the Float series is that layout without the two metadata columns;
   *  - multi-series "long" format: `timestamp(µs), sensor_id, sensor_name,
   *    value(utf8), type, labels(json utf8)` all non-null
   *    (reference: src/exporters/arrow/mod.rs:34-92);
   *  - import requires `timestamp` + `value` columns
   *    (reference: src/importers/arrow.rs:26-52).
+  *
+  * Each layout is a schema plus a row setter (and getter) bound once per
+  * file; every file goes through the one batched writer
+  * ([[writeBatches]]) and the one reader ([[withReader]], [[readRows]]).
   */
 object ArrowIO {
 
@@ -56,31 +62,27 @@ object ArrowIO {
       timestampUs: Long, sensorId: String, sensorName: String,
       value: String, valueType: String, labelsJson: String)
 
-  def floatSeriesSchema: Schema = new Schema(List(
-    Field.notNullable("timestamp", new ArrowType.Timestamp(TimeUnit.MICROSECOND, null)),
-    Field.notNullable("value",
-      new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))).asJava)
-
-  /** Encode one Float series to Arrow IPC file bytes:
-    * [[writeFloatSeriesStream]] into a byte buffer, in record batches of
-    * [[ipcBatchRows]].
+  /** A layout's row writer: puts row `r` at index `i` of the vectors it
+    * was bound to. (A trait rather than a function type, so the index
+    * stays an unboxed Int.)
     */
-  def encodeFloatSeries(samples: Seq[(Long, Double)]): Array[Byte] =
-    ipcBytes(writeFloatSeriesStream(samples.iterator, _, ipcBatchRows))
+  private trait RowSetter[-R] { def apply(i: Int, r: R): Unit }
 
-  /** Stream a Float series as Arrow IPC file bytes onto `out` in
-    * bounded batches — what edge exports at the 10M-row default query
-    * limit need: residency is one `batchRows` batch regardless of the
-    * series length. The IPC *file* format writes sequentially (the
-    * footer goes last), so a non-seekable response stream works.
-    * [[decodeFloatSeries]] already iterates batches, so multi-batch
-    * files round-trip unchanged.
+  /** A layout's row reader: the row at index `i` of its bound vectors. */
+  private trait RowGetter[+R] { def apply(i: Int): R }
+
+  /** The one IPC write: `rows` onto `out` as an Arrow IPC file, in record
+    * batches of at most `batchRows`, through the setter `bind` returns
+    * for the file's root. Residency is one batch regardless of the row
+    * count, and the IPC *file* format writes sequentially (the footer
+    * goes last), so a non-seekable response stream works. No rows give
+    * a valid zero-batch file.
     */
-  def writeFloatSeriesStream(
-      rows: Iterator[(Long, Double)], out: java.io.OutputStream,
-      batchRows: Int = 1 << 16): Unit = {
+  private def writeBatches[R](
+      schema: Schema, rows: Iterator[R], out: java.io.OutputStream,
+      batchRows: Int)(bind: VectorSchemaRoot => RowSetter[R]): Unit = {
     require(batchRows >= 1, "batchRows must be positive")
-    val root = VectorSchemaRoot.create(floatSeriesSchema, allocator)
+    val root = VectorSchemaRoot.create(schema, allocator)
     try {
       val writer = new ArrowFileWriter(root, null, Channels.newChannel(out))
       // the footer is written ONLY on success: ArrowWriter.close()
@@ -91,15 +93,12 @@ object ArrowIO {
       // writer holds no resources of its own: buffers belong to `root`,
       // closed below; the channel wraps the caller's stream.)
       writer.start()
-      val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-      val v = root.getVector("value").asInstanceOf[Float8Vector]
-      // an empty series still yields a valid zero-batch file
+      val set = bind(root)
       while (rows.hasNext) {
         root.allocateNew()
         var i = 0
         while (i < batchRows && rows.hasNext) {
-          val (t, x) = rows.next()
-          ts.setSafe(i, t); v.setSafe(i, x)
+          set(i, rows.next())
           i += 1
         }
         root.setRowCount(i)
@@ -110,11 +109,64 @@ object ArrowIO {
     } finally root.close()
   }
 
+  /** The one IPC open: `read` over a reader of `bytes`, under
+    * [[decodeGuard]], the reader closed after.
+    */
+  private def withReader[T](bytes: Array[Byte])(read: ArrowFileReader => T): T =
+    decodeGuard {
+      val reader = new ArrowFileReader(
+        new ByteArrayReadableSeekableByteChannel(bytes), allocator)
+      try read(reader) finally reader.close()
+    }
+
+  /** Every row of the file `reader` reads, batch by batch, through `get`.
+    * The root's vectors stay the same objects while batches load, so a
+    * getter bound to them once serves the whole file.
+    */
+  private def readRows[R](reader: ArrowFileReader)(get: RowGetter[R]): Seq[R] = {
+    val root = reader.getVectorSchemaRoot
+    val out = Seq.newBuilder[R]
+    while (reader.loadNextBatch()) {
+      var i = 0
+      while (i < root.getRowCount) {
+        out += get(i)
+        i += 1
+      }
+    }
+    out.result()
+  }
+
+  private def timestamps(root: VectorSchemaRoot): TimeStampMicroVector =
+    root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
+
+  private def utf8(root: VectorSchemaRoot, name: String): VarCharVector =
+    root.getVector(name).asInstanceOf[VarCharVector]
+
+  /** Encode one Float series to Arrow IPC file bytes:
+    * [[writeFloatSeriesStream]] into a byte buffer, in record batches of
+    * [[ipcBatchRows]].
+    */
+  def encodeFloatSeries(samples: Seq[(Long, Double)]): Array[Byte] =
+    ipcBytes(writeFloatSeriesStream(samples.iterator, _, ipcBatchRows))
+
+  /** Stream a Float series as Arrow IPC file bytes onto `out` in
+    * bounded batches: the typed Float layout without its
+    * `sensor_id`/`sensor_name` columns, its rows kept as unboxed
+    * `(Long, Double)`. Residency is one `batchRows` batch regardless of
+    * the series length — what edge exports at the 10M-row default query
+    * limit need.
+    */
+  def writeFloatSeriesStream(
+      rows: Iterator[(Long, Double)], out: java.io.OutputStream,
+      batchRows: Int = 1 << 16): Unit =
+    writeTyped(SensorType.Float, None, None, rows, out, batchRows) { root =>
+      val (ts, v) = (timestamps(root), root.getVector("value").asInstanceOf[Float8Vector])
+      (i, r) => { ts.setSafe(i, r._1); v.setSafe(i, r._2) }
+    }
+
   /** Decode a Float-series IPC file; requires timestamp+value columns. */
-  def decodeFloatSeries(bytes: Array[Byte]): Seq[(Long, Double)] = decodeGuard {
-    val reader = new ArrowFileReader(
-      new ByteArrayReadableSeekableByteChannel(bytes), allocator)
-    try {
+  def decodeFloatSeries(bytes: Array[Byte]): Seq[(Long, Double)] =
+    withReader(bytes) { reader =>
       val root = reader.getVectorSchemaRoot
       val fields = root.getSchema.getFields.asScala
         .map(f => f.getName -> f.getType).toMap
@@ -124,41 +176,34 @@ object ArrowIO {
         "'timestamp' column must be a Timestamp")
       require(fields("value").isInstanceOf[ArrowType.FloatingPoint],
         "'value' column must be Float64 for a Float series")
-      val out = Seq.newBuilder[(Long, Double)]
-      while (reader.loadNextBatch()) {
-        val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-        val v = root.getVector("value").asInstanceOf[Float8Vector]
-        var i = 0
-        while (i < root.getRowCount) {
-          out += ((ts.get(i), v.get(i)))
-          i += 1
-        }
-      }
-      out.result()
-    } finally reader.close()
-  }
+      val (ts, v) = (timestamps(root), root.getVector("value").asInstanceOf[Float8Vector])
+      readRows(reader)(i => (ts.get(i), v.get(i)))
+    }
 
   /** Distributed Arrow bulk export: one IPC file payload per series,
-    * encoded on the EXECUTORS (one shuffle on sensor_id, sorted sweep) —
-    * the Flight-style bulk path the reference stops short of (its Arrow
-    * exporter buffers one request's series on the server:
-    * src/exporters/arrow/mod.rs:17-105). The driver only ever sees
-    * `(sensor_id, n_samples, ipc bytes)` — response assembly is bounded
-    * by the encoded payload, not the scanned samples; rows per series
-    * are bounded by the caller's per-sensor limit upstream.
+    * encoded on the EXECUTORS (one shuffle on sensor_id, each series'
+    * group sorted by timestamp then value) — the Flight-style bulk path
+    * the reference stops short of (its Arrow exporter buffers one
+    * request's series on the server: src/exporters/arrow/mod.rs:17-105).
+    * The driver only ever sees `(sensor_id, n_samples, ipc bytes)` —
+    * response assembly is bounded by the encoded payload, not the
+    * scanned samples. Each series keeps its first
+    * [[graft.operators.SensorOps.DefaultQueryLimit]] samples, streamed
+    * from its sorted group into the encoder.
     */
   def encodeSeriesDistributed(samples: DataFrame): DataFrame = {
     import samples.sparkSession.implicits._
+    val cap = graft.operators.SensorOps.DefaultQueryLimit
     samples
       .select(col("sensor_id").cast("string"),
         col("timestamp_us").cast("long"), col("value").cast("double"))
       .as[(String, Long, Double)]
       .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        val sorted = it.map(r => (r._2, r._3)).toArray
-          .sortBy(identity)(Ordering.Tuple2(
-            Ordering.Long, Ordering.Double.TotalOrdering))
-        (id, sorted.length.toLong, encodeFloatSeries(sorted.toSeq))
+      .flatMapSortedGroups(col("timestamp_us"), col("value")) { (id, group) =>
+        var n = 0L
+        val rows = group.take(cap).map { r => n += 1; (r._2, r._3) }
+        val ipc = ipcBytes(writeFloatSeriesStream(rows, _, ipcBatchRows))
+        Iterator.single((id, n, ipc))
       }
       .toDF("sensor_id", "n_samples", "ipc")
   }
@@ -238,144 +283,169 @@ object ArrowIO {
   }
 
   /** Encode one typed series to Arrow IPC file bytes (S11 for all 8
-    * value types; [[encodeFloatSeries]] emits the Float layout minus the
-    * metadata columns).
+    * value types): [[writeTypedSeriesStream]] into a byte buffer, in
+    * record batches of [[ipcBatchRows]].
     */
-  def encodeTypedSeries(series: TypedSeries): Array[Byte] = {
-    val t = series.sensorType
-    val schema = typedSeriesSchema(t,
-      withSensorId = series.sensorId.isDefined,
-      withSensorName = series.sensorName.isDefined)
-    val root = VectorSchemaRoot.create(schema, allocator)
-    try {
-      root.allocateNew()
-      val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-      val value = root.getVector("value")
-      series.samples.zipWithIndex.foreach { case ((at, v), i) =>
-        ts.setSafe(i, at)
-        (t, v) match {
-          case (SensorType.Integer, x: Long) =>
-            value.asInstanceOf[BigIntVector].setSafe(i, x)
-          case (SensorType.Numeric, x: java.math.BigDecimal) =>
-            value.asInstanceOf[DecimalVector].setSafe(i, x.setScale(18))
-          case (SensorType.Float, x: Double) =>
-            value.asInstanceOf[Float8Vector].setSafe(i, x)
-          case (SensorType.Str | SensorType.Json, x: String) =>
-            value.asInstanceOf[VarCharVector]
-              .setSafe(i, x.getBytes("UTF-8"))
-          case (SensorType.Boolean, x: Boolean) =>
-            value.asInstanceOf[BitVector].setSafe(i, if (x) 1 else 0)
-          case (SensorType.Location, (lat: Double, lon: Double)) =>
-            val sv = value.asInstanceOf[StructVector]
-            sv.getChild("latitude", classOf[Float8Vector]).setSafe(i, lat)
-            sv.getChild("longitude", classOf[Float8Vector]).setSafe(i, lon)
-            sv.setIndexDefined(i)
-          case (SensorType.Blob, x: Array[Byte]) =>
-            value.asInstanceOf[VarBinaryVector].setSafe(i, x)
-          case (typ, other) => throw new IllegalArgumentException(
-            s"sample value ${other.getClass.getSimpleName} does not match " +
-              s"series type ${typ.displayName}")
+  def encodeTypedSeries(series: TypedSeries): Array[Byte] =
+    ipcBytes(writeTypedSeriesStream(series.sensorType, series.sensorId,
+      series.sensorName, series.samples.iterator, _, ipcBatchRows))
+
+  /** Stream one typed series as Arrow IPC file bytes onto `out` in
+    * bounded batches: [[typedSeriesSchema]] with the metadata columns
+    * that are given, each a constant. Samples carry the value
+    * representation [[TypedSeries]] documents; a sample of another JVM
+    * type is an IllegalArgumentException.
+    */
+  def writeTypedSeriesStream(
+      t: SensorType, sensorId: Option[String], sensorName: Option[String],
+      rows: Iterator[(Long, Any)], out: java.io.OutputStream,
+      batchRows: Int = 1 << 16): Unit =
+    writeTyped(t, sensorId, sensorName, rows, out, batchRows) { root =>
+      val (ts, value) = (timestamps(root), valueSetter(t, root.getVector("value")))
+      (i, r) => { ts.setSafe(i, r._1); value(i, r._2) }
+    }
+
+  /** The typed layout's write: its schema, and `set` for the timestamp
+    * and value, plus the constant `sensor_id`/`sensor_name` columns.
+    */
+  private def writeTyped[R](
+      t: SensorType, sensorId: Option[String], sensorName: Option[String],
+      rows: Iterator[R], out: java.io.OutputStream, batchRows: Int)(
+      set: VectorSchemaRoot => RowSetter[R]): Unit =
+    writeBatches(typedSeriesSchema(t, sensorId.isDefined, sensorName.isDefined),
+      rows, out, batchRows) { root =>
+      val row = set(root)
+      val consts = Seq("sensor_id" -> sensorId, "sensor_name" -> sensorName)
+        .collect { case (name, Some(s)) => (utf8(root, name), s.getBytes("UTF-8")) }
+      if (consts.isEmpty) row
+      else (i, r) => {
+        row(i, r)
+        consts.foreach { case (vec, bytes) => vec.setSafe(i, bytes) }
+      }
+    }
+
+  /** The setter of a typed `value` vector, picked once per file. */
+  private def valueSetter(t: SensorType, value: FieldVector): RowSetter[Any] = {
+    def mismatch(other: Any): Nothing = throw new IllegalArgumentException(
+      s"sample value ${other.getClass.getSimpleName} does not match " +
+        s"series type ${t.displayName}")
+    t match {
+      case SensorType.Integer =>
+        val v = value.asInstanceOf[BigIntVector]
+        (i, x) => x match { case l: Long => v.setSafe(i, l); case o => mismatch(o) }
+      case SensorType.Numeric =>
+        val v = value.asInstanceOf[DecimalVector]
+        (i, x) => x match {
+          case d: java.math.BigDecimal => v.setSafe(i, d.setScale(18))
+          case o => mismatch(o)
         }
-      }
-      def fill(name: String, v: Option[String]): Unit = v.foreach { s =>
-        val vec = root.getVector(name).asInstanceOf[VarCharVector]
-        val bytes = s.getBytes("UTF-8")
-        (0 until series.samples.length).foreach(vec.setSafe(_, bytes))
-      }
-      fill("sensor_id", series.sensorId)
-      fill("sensor_name", series.sensorName)
-      root.setRowCount(series.samples.length)
-      writeIpc(root)
-    } finally root.close()
+      case SensorType.Float =>
+        val v = value.asInstanceOf[Float8Vector]
+        (i, x) => x match { case d: Double => v.setSafe(i, d); case o => mismatch(o) }
+      case SensorType.Str | SensorType.Json =>
+        val v = value.asInstanceOf[VarCharVector]
+        (i, x) => x match {
+          case s: String => v.setSafe(i, s.getBytes("UTF-8"))
+          case o => mismatch(o)
+        }
+      case SensorType.Boolean =>
+        val v = value.asInstanceOf[BitVector]
+        (i, x) => x match {
+          case b: Boolean => v.setSafe(i, if (b) 1 else 0)
+          case o => mismatch(o)
+        }
+      case SensorType.Location =>
+        val v = value.asInstanceOf[StructVector]
+        val (lat, lon) = (v.getChild("latitude", classOf[Float8Vector]),
+          v.getChild("longitude", classOf[Float8Vector]))
+        (i, x) => x match {
+          case (a: Double, b: Double) =>
+            lat.setSafe(i, a); lon.setSafe(i, b); v.setIndexDefined(i)
+          case o => mismatch(o)
+        }
+      case SensorType.Blob =>
+        val v = value.asInstanceOf[VarBinaryVector]
+        (i, x) => x match {
+          case b: Array[Byte] => v.setSafe(i, b)
+          case o => mismatch(o)
+        }
+    }
   }
+
+  /** The getter of a typed `value` vector, picked once per file. */
+  private def valueGetter(t: SensorType, value: FieldVector): RowGetter[Any] =
+    t match {
+      case SensorType.Integer =>
+        val v = value.asInstanceOf[BigIntVector]; i => v.get(i)
+      case SensorType.Float =>
+        val v = value.asInstanceOf[Float8Vector]; i => v.get(i)
+      case SensorType.Numeric =>
+        val v = value.asInstanceOf[DecimalVector]; i => v.getObject(i)
+      case SensorType.Str =>
+        val v = value.asInstanceOf[VarCharVector]; i => new String(v.get(i), "UTF-8")
+      case SensorType.Boolean =>
+        val v = value.asInstanceOf[BitVector]; i => v.get(i) != 0
+      case SensorType.Location =>
+        val v = value.asInstanceOf[StructVector]
+        val (lat, lon) = (v.getChild("latitude", classOf[Float8Vector]),
+          v.getChild("longitude", classOf[Float8Vector]))
+        i => (lat.get(i), lon.get(i))
+      case SensorType.Blob =>
+        val v = value.asInstanceOf[VarBinaryVector]; i => v.get(i)
+      case other => throw new IllegalStateException(other.displayName)
+    }
 
   /** Decode a typed-series IPC file, inferring the sensor type from the
     * value field's Arrow type exactly as the reference importer does
     * (src/importers/arrow.rs:143-294): Int64→Integer, Float64→Float,
     * Decimal128→Numeric, Utf8→String, Boolean→Boolean,
     * Struct{latitude,longitude}→Location, Binary→Blob. Anything else is
-    * rejected.
+    * rejected. `sensor_id`/`sensor_name` come from the first row.
     */
-  def decodeTypedSeries(bytes: Array[Byte]): TypedSeries = decodeGuard {
-    val reader = new ArrowFileReader(
-      new ByteArrayReadableSeekableByteChannel(bytes), allocator)
-    try {
-      val root = reader.getVectorSchemaRoot
-      val byName = root.getSchema.getFields.asScala
-        .map(f => f.getName -> f).toMap
-      require(byName.contains("timestamp") && byName.contains("value"),
-        "Arrow file must contain 'timestamp' and 'value' columns")
-      require(byName("timestamp").getType.isInstanceOf[ArrowType.Timestamp],
-        "'timestamp' column must be a Timestamp")
-      val t = byName("value").getType match {
-        case i: ArrowType.Int if i.getBitWidth == 64 => SensorType.Integer
-        case f: ArrowType.FloatingPoint
-            if f.getPrecision == FloatingPointPrecision.DOUBLE =>
-          SensorType.Float
-        case _: ArrowType.Decimal => SensorType.Numeric
-        case _: ArrowType.Utf8 => SensorType.Str
-        case _: ArrowType.Bool => SensorType.Boolean
-        case _: ArrowType.Struct
-            if byName("value").getChildren.asScala.map(_.getName) ==
-              Seq("latitude", "longitude") =>
-          SensorType.Location
-        case _: ArrowType.Binary => SensorType.Blob
-        case other => throw new IllegalArgumentException(
-          s"Unsupported Arrow value type: $other")
-      }
-      val out = Seq.newBuilder[(Long, Any)]
-      var sensorId: Option[String] = None
-      var sensorName: Option[String] = None
-      while (reader.loadNextBatch()) {
-        val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-        val value = root.getVector("value")
-        var i = 0
-        while (i < root.getRowCount) {
-          val v: Any = t match {
-            case SensorType.Integer =>
-              value.asInstanceOf[BigIntVector].get(i)
-            case SensorType.Float =>
-              value.asInstanceOf[Float8Vector].get(i)
-            case SensorType.Numeric =>
-              value.asInstanceOf[DecimalVector].getObject(i)
-            case SensorType.Str =>
-              new String(value.asInstanceOf[VarCharVector].get(i), "UTF-8")
-            case SensorType.Boolean =>
-              value.asInstanceOf[BitVector].get(i) != 0
-            case SensorType.Location =>
-              val sv = value.asInstanceOf[StructVector]
-              (sv.getChild("latitude", classOf[Float8Vector]).get(i),
-                sv.getChild("longitude", classOf[Float8Vector]).get(i))
-            case SensorType.Blob =>
-              value.asInstanceOf[VarBinaryVector].get(i)
-            case other => throw new IllegalStateException(other.displayName)
-          }
-          out += ((ts.get(i), v))
-          i += 1
-        }
-        def const(name: String): Option[String] =
-          byName.get(name).filter(_ => root.getRowCount > 0).map { _ =>
-            new String(
-              root.getVector(name).asInstanceOf[VarCharVector].get(0), "UTF-8")
-          }
-        if (sensorId.isEmpty) sensorId = const("sensor_id")
-        if (sensorName.isEmpty) sensorName = const("sensor_name")
-      }
-      TypedSeries(t, sensorId, sensorName, out.result())
-    } finally reader.close()
+  def decodeTypedSeries(bytes: Array[Byte]): TypedSeries = withReader(bytes) { reader =>
+    val root = reader.getVectorSchemaRoot
+    val byName = root.getSchema.getFields.asScala
+      .map(f => f.getName -> f).toMap
+    require(byName.contains("timestamp") && byName.contains("value"),
+      "Arrow file must contain 'timestamp' and 'value' columns")
+    require(byName("timestamp").getType.isInstanceOf[ArrowType.Timestamp],
+      "'timestamp' column must be a Timestamp")
+    val t = byName("value").getType match {
+      case i: ArrowType.Int if i.getBitWidth == 64 => SensorType.Integer
+      case f: ArrowType.FloatingPoint
+          if f.getPrecision == FloatingPointPrecision.DOUBLE =>
+        SensorType.Float
+      case _: ArrowType.Decimal => SensorType.Numeric
+      case _: ArrowType.Utf8 => SensorType.Str
+      case _: ArrowType.Bool => SensorType.Boolean
+      case _: ArrowType.Struct
+          if byName("value").getChildren.asScala.map(_.getName) ==
+            Seq("latitude", "longitude") =>
+        SensorType.Location
+      case _: ArrowType.Binary => SensorType.Blob
+      case other => throw new IllegalArgumentException(
+        s"Unsupported Arrow value type: $other")
+    }
+    val (ts, value) = (timestamps(root), valueGetter(t, root.getVector("value")))
+    val consts = Seq("sensor_id", "sensor_name")
+      .map(name => byName.get(name).map(_ => utf8(root, name)))
+    var meta = Seq.empty[Option[String]]
+    val samples = readRows(reader) { i =>
+      if (meta.isEmpty)
+        meta = consts.map(_.map(vec => new String(vec.get(i), "UTF-8")))
+      (ts.get(i), value(i))
+    }
+    val Seq(sensorId, sensorName) = if (meta.isEmpty) Seq(None, None) else meta
+    TypedSeries(t, sensorId, sensorName, samples)
   }
 
   /** Top-level field names of an IPC file — the cheap peek HTTP edges use
     * to route between the typed single-series layout and the long
     * multi-series layout before committing to a decode.
     */
-  def ipcFieldNames(bytes: Array[Byte]): Set[String] = decodeGuard {
-    val reader = new ArrowFileReader(
-      new ByteArrayReadableSeekableByteChannel(bytes), allocator)
-    try reader.getVectorSchemaRoot.getSchema.getFields.asScala
-      .map(_.getName).toSet
-    finally reader.close()
-  }
+  def ipcFieldNames(bytes: Array[Byte]): Set[String] =
+    withReader(bytes)(_.getVectorSchemaRoot.getSchema.getFields.asScala
+      .map(_.getName).toSet)
 
   /** A decoded typed series as a canonical-layout frame (sensor_id,
     * timestamp_us, value) with the value in the type's native Spark
@@ -437,74 +507,39 @@ object ArrowIO {
 
   /** Stream long-format rows as Arrow IPC file bytes onto `out` in
     * bounded batches — the multi-series counterpart to
-    * [[writeFloatSeriesStream]] (same memory contract: residency is
-    * one batch regardless of export size; [[decodeLongFormat]]
-    * iterates batches, so multi-batch files round-trip).
+    * [[writeFloatSeriesStream]], with the same memory contract.
     */
   def writeLongFormatStream(
       rows: Iterator[LongRow], out: java.io.OutputStream,
-      batchRows: Int = 1 << 16): Unit = {
-    require(batchRows >= 1, "batchRows must be positive")
-    val root = VectorSchemaRoot.create(longFormatSchema, allocator)
-    try {
-      val writer = new ArrowFileWriter(root, null, Channels.newChannel(out))
-      // footer only on success — see writeFloatSeriesStream: a footer
-      // over partial batches would decode as a complete shorter export
-      writer.start()
-      val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-      def sv(name: String) = root.getVector(name).asInstanceOf[VarCharVector]
-      val (id, nm, vl, tp, lb) = (sv("sensor_id"), sv("sensor_name"),
-        sv("value"), sv("type"), sv("labels"))
-      while (rows.hasNext) {
-        root.allocateNew()
-        var i = 0
-        while (i < batchRows && rows.hasNext) {
-          val r = rows.next()
-          ts.setSafe(i, r.timestampUs)
-          id.setSafe(i, r.sensorId.getBytes("UTF-8"))
-          nm.setSafe(i, r.sensorName.getBytes("UTF-8"))
-          vl.setSafe(i, r.value.getBytes("UTF-8"))
-          tp.setSafe(i, r.valueType.getBytes("UTF-8"))
-          lb.setSafe(i, r.labelsJson.getBytes("UTF-8"))
-          i += 1
-        }
-        root.setRowCount(i)
-        writer.writeBatch()
+      batchRows: Int = 1 << 16): Unit =
+    writeBatches(longFormatSchema, rows, out, batchRows) { root =>
+      val ts = timestamps(root)
+      val Seq(id, nm, vl, tp, lb) =
+        Seq("sensor_id", "sensor_name", "value", "type", "labels").map(utf8(root, _))
+      (i, r) => {
+        ts.setSafe(i, r.timestampUs)
+        id.setSafe(i, r.sensorId.getBytes("UTF-8"))
+        nm.setSafe(i, r.sensorName.getBytes("UTF-8"))
+        vl.setSafe(i, r.value.getBytes("UTF-8"))
+        tp.setSafe(i, r.valueType.getBytes("UTF-8"))
+        lb.setSafe(i, r.labelsJson.getBytes("UTF-8"))
       }
-      writer.end()
-      writer.close()
-    } finally root.close()
-  }
+    }
 
-  def decodeLongFormat(bytes: Array[Byte]): Seq[LongRow] = decodeGuard {
-    val reader = new ArrowFileReader(
-      new ByteArrayReadableSeekableByteChannel(bytes), allocator)
-    try {
-      val root = reader.getVectorSchemaRoot
-      val out = Seq.newBuilder[LongRow]
-      while (reader.loadNextBatch()) {
-        val ts = root.getVector("timestamp").asInstanceOf[TimeStampMicroVector]
-        def sv(name: String) = root.getVector(name).asInstanceOf[VarCharVector]
-        val (id, nm, vl, tp, lb) = (sv("sensor_id"), sv("sensor_name"),
-          sv("value"), sv("type"), sv("labels"))
-        var i = 0
-        while (i < root.getRowCount) {
-          out += LongRow(ts.get(i),
-            new String(id.get(i), "UTF-8"), new String(nm.get(i), "UTF-8"),
-            new String(vl.get(i), "UTF-8"), new String(tp.get(i), "UTF-8"),
-            new String(lb.get(i), "UTF-8"))
-          i += 1
-        }
-      }
-      out.result()
-    } finally reader.close()
+  def decodeLongFormat(bytes: Array[Byte]): Seq[LongRow] = withReader(bytes) { reader =>
+    val root = reader.getVectorSchemaRoot
+    val ts = timestamps(root)
+    val Seq(id, nm, vl, tp, lb) =
+      Seq("sensor_id", "sensor_name", "value", "type", "labels").map(utf8(root, _))
+    def str(v: VarCharVector, i: Int) = new String(v.get(i), "UTF-8")
+    readRows(reader)(i => LongRow(ts.get(i), str(id, i), str(nm, i),
+      str(vl, i), str(tp, i), str(lb, i)))
   }
 
   /** Rows per record batch of the in-memory encoders: SENSAPP_BATCH_SIZE
     * — the reference's ingest chunking contract carried to the Arrow edge
     * (reference: src/datamodel/batch_builder.rs:61-80 into_chunks).
-    * Readers stream batch-by-batch instead of one monolithic batch;
-    * every decode path here already loops loadNextBatch().
+    * Readers stream batch-by-batch instead of one monolithic batch.
     */
   private def ipcBatchRows: Int = math.max(1, graft.Config.batchSize)
 
@@ -512,43 +547,5 @@ object ArrowIO {
     val out = new ByteArrayOutputStream()
     write(out)
     out.toByteArray
-  }
-
-  /** IPC write of a filled root, chunked at [[ipcBatchRows]] rows per
-    * record batch.
-    */
-  private def writeIpc(root: VectorSchemaRoot): Array[Byte] = ipcBytes { out =>
-    val chunkRows = ipcBatchRows
-    val total = root.getRowCount
-    if (total <= chunkRows) {
-      val writer = new ArrowFileWriter(root, null, Channels.newChannel(out))
-      try {
-        writer.start(); writer.writeBatch(); writer.end()
-      } finally writer.close()
-    } else {
-      // one writer bound to the first slice; later slices are loaded
-      // into the bound root batch-by-batch (zero-copy splitAndTransfer)
-      val bound = root.slice(0, chunkRows)
-      try {
-        val writer = new ArrowFileWriter(bound, null, Channels.newChannel(out))
-        try {
-          val loader = new org.apache.arrow.vector.VectorLoader(bound)
-          writer.start(); writer.writeBatch()
-          var start = chunkRows
-          while (start < total) {
-            val len = math.min(chunkRows, total - start)
-            val slice = root.slice(start, len)
-            try {
-              val rb = new org.apache.arrow.vector.VectorUnloader(slice)
-                .getRecordBatch
-              try loader.load(rb) finally rb.close()
-              writer.writeBatch()
-            } finally slice.close()
-            start += len
-          }
-          writer.end()
-        } finally writer.close()
-      } finally bound.close()
-    }
   }
 }

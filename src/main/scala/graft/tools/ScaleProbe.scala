@@ -145,14 +145,19 @@ object ScaleProbe {
 
   /** `plan` with what differs between two builds of one plan replaced by
     * fixed text: expression ids (`#123`), exchange plan ids
-    * (`plan_id=4567`), lambda-variable counters (`lambda x_12`) and JVM
-    * lambda class names with their identity hash.
+    * (`plan_id=4567`), lambda-variable counters (`lambda x_12`), JVM
+    * lambda class names with their identity hash, the identity hash
+    * other objects print (`Dedup$KmvAgg@4e3cb222`), and the random
+    * suffixes of scratch-directory paths
+    * (`/graft_scratch<N>/graft_warehouse<N>/`, see [[graft.TempDirs]]).
     */
   def stablePlan(plan: String): String =
     plan.replaceAll("#\\d+", "#x")
       .replaceAll("plan_id=\\d+", "plan_id=x")
       .replaceAll("(lambda [a-z]+)_\\d+", "$1_x")
       .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]+\\b", "@x")
+      .replaceAll("(/graft_[a-z_]*[a-z])\\d+", "$1x")
 
   /** The optimized logical plan of `df`, as [[stablePlan]] writes it. */
   def logicalPlan(df: DataFrame): String =

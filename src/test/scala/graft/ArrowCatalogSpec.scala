@@ -2,6 +2,7 @@ package graft
 
 import graft.adapters.EventsAdapter
 import graft.catalog.Catalog
+import graft.model.SensorType
 import graft.operators.{LabelMatcher, SensorOps}
 import graft.prometheus.RemoteRead
 import graft.sources.ArrowIO
@@ -45,6 +46,58 @@ class ArrowCatalogSpec extends SparkSpec {
     assert(failOut.size() > 0, "some batches were written before failure")
     intercept[Exception] {
       ArrowIO.decodeFloatSeries(failOut.toByteArray)
+    }
+    // the typed stream writer: multi-batch roundtrip, no footer on failure
+    val typedIn = (0 until 7).map(i => (1700000000000000L + i, s"v$i": Any))
+    val tOut = new java.io.ByteArrayOutputStream()
+    ArrowIO.writeTypedSeriesStream(SensorType.Str, Some("u"), Some("n"),
+      typedIn.iterator, tOut, batchRows = 3)
+    assert(ArrowIO.decodeTypedSeries(tOut.toByteArray) ==
+      ArrowIO.TypedSeries(SensorType.Str, Some("u"), Some("n"), typedIn))
+    val tFail = new java.io.ByteArrayOutputStream()
+    intercept[RuntimeException] {
+      ArrowIO.writeTypedSeriesStream(SensorType.Str, Some("u"), Some("n"),
+        typedIn.iterator.take(5) ++ Iterator.tabulate(1)(_ =>
+          throw new RuntimeException("task failed mid-export")),
+        tFail, batchRows = 2)
+    }
+    assert(tFail.size() > 0, "some batches were written before failure")
+    intercept[Exception](ArrowIO.decodeTypedSeries(tFail.toByteArray))
+  }
+
+  /** Replays `arrow_golden.tsv`, written by [[ArrowGolden]] from the
+    * writers of commit 3ba5bd5: every case's IPC bytes keep their digest.
+    */
+  test("golden Arrow digests: every writer keeps its bytes") {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/arrow_golden.tsv"), "UTF-8")
+    val want = try src.getLines().map(_.split("\t") match {
+      case Array(name, digest) => name -> digest
+    }).toMap finally src.close()
+    val got = ArrowGolden.cases.map { case (n, b) => n -> ArrowGolden.sha256(b) }
+    assert(got.map(_._1).toSet == want.keySet)
+    val diffs = got.filter { case (n, d) => want(n) != d }.map(_._1)
+    assert(diffs.isEmpty, s"${diffs.length} of ${got.length} differ: $diffs")
+  }
+
+  test("typed series of 0 rows and of several batches decode to their rows") {
+    import ArrowGolden.{Types, typed, withProp}
+    // Array[Byte] has no value equality: compare blobs as sequences
+    def norm(s: ArrowIO.TypedSeries) = s.copy(samples = s.samples.map {
+      case (t, b: Array[Byte]) => (t, b.toSeq)
+      case other => other
+    })
+    withProp("SENSAPP_BATCH_SIZE", "2") {
+      for (t <- Types; n <- Seq(0, 5); id <- Seq(true, false)) {
+        val in = typed(t, n, id, name = id)
+        val back = ArrowIO.decodeTypedSeries(ArrowIO.encodeTypedSeries(in))
+        // JSON imports as String; no rows carry no metadata
+        val want = in.copy(
+          sensorType = if (t == SensorType.Json) SensorType.Str else t,
+          sensorId = in.sensorId.filter(_ => n > 0),
+          sensorName = in.sensorName.filter(_ => n > 0))
+        assert(norm(back) == norm(want), s"$t n=$n id=$id")
+      }
     }
   }
 
@@ -264,5 +317,21 @@ class ArrowCatalogSpec extends SparkSpec {
       .as[(String, Long, Double)].collect().toSet
     assert(back == Set(
       ("s1", 1L, 10.0), ("s1", 2L, 20.0), ("s1", 3L, 30.0), ("s2", 5L, 0.5)))
+  }
+
+  test("distributed Arrow bulk export caps each series at the default " +
+    "query limit, keeping its first samples") {
+    val samples = Seq(("s1", 5L, 5.0), ("s1", 2L, 2.0), ("s1", 4L, 4.0),
+      ("s1", 1L, 1.0), ("s1", 3L, 3.0), ("s2", 9L, 0.5))
+      .toDF("sensor_id", "timestamp_us", "value")
+    val rows = ArrowGolden.withProp("GRAFT_DEFAULT_QUERY_LIMIT", "3") {
+      ArrowIO.encodeSeriesDistributed(samples)
+        .as[(String, Long, Array[Byte])].collect().sortBy(_._1)
+    }
+    assert(rows.map(r => (r._1, r._2)).toSeq == Seq(("s1", 3L), ("s2", 1L)))
+    assert(ArrowIO.decodeFloatSeries(rows.head._3) ==
+      Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
+    // a series under the cap keeps the bytes of its plain encode
+    assert(rows(1)._3.sameElements(ArrowIO.encodeFloatSeries(Seq((9L, 0.5)))))
   }
 }

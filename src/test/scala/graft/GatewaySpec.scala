@@ -604,6 +604,26 @@ class GatewaySpec extends SparkSpec {
     assert(lback.sensorName.contains(luuid)) // name fell back to sensor_id
   }
 
+  test("typed arrow export of a non-Float series streams: chunked, " +
+    "capped at limit") {
+    import graft.sources.ArrowIO
+    val uuid = "22222222-3333-4444-5555-666666666666"
+    val ser = ArrowIO.TypedSeries(SensorType.Integer, Some(uuid), Some("steps"),
+      (0 until 5).map(i => (1704067200000000L + i * 1000000L, i * 10L - 20L)))
+    assert(post("/publish", ArrowIO.encodeTypedSeries(ser),
+      Map("content-type" -> "application/vnd.apache.arrow.file"))
+      .statusCode() == 200)
+    val out = client.send(
+      HttpRequest.newBuilder(url(s"/series/$uuid?format=arrow&limit=3"))
+        .GET().build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+    assert(out.statusCode() == 200)
+    assert(out.headers().firstValue("content-length").isEmpty,
+      out.headers().map().toString)
+    val back = ArrowIO.decodeTypedSeries(out.body())
+    assert(back == ser.copy(samples = ser.samples.take(3)))
+  }
+
   test("typed arrow publish without sensor_id mints a fresh uuid") {
     import graft.sources.ArrowIO
     // The gateway's own Float export emits only timestamp+value; the

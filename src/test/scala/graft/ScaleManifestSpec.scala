@@ -147,5 +147,22 @@ class ScaleManifestSpec extends AnyFunSuite {
     }
     assert(new String(files.head, "UTF-8").contains("Join"))
     assert(files.head.sameElements(files(1)))
+    // q26 prints a JVM identity hash (`Dedup$SimHashAgg$@2207d47d`) and
+    // q98 an artifact-warehouse scratch path in their logical plans;
+    // both vary between JVMs, so the dump masks them. In one JVM they
+    // repeat, so another JVM's dump is made by changing them
+    import graft.tools.ScaleProbe.stablePlan
+    val varying = "(?<=[\\w$])@[0-9a-f]+|/graft_scratch\\d+".r
+    for (q <- Seq("q26_simhash", "q98_kmeans_clusters")) {
+      val Seq(a, b) = Seq.fill(2)(
+        SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan.toString)
+      assert(varying.findFirstIn(a).isDefined, s"$q: $a")
+      val otherJvm = varying.replaceAllIn(b, m =>
+        java.util.regex.Matcher.quoteReplacement(
+          if (m.matched.startsWith("@")) "@0badcafe" else "/graft_scratch42"))
+      assert(otherJvm != a, q)
+      assert(stablePlan(otherJvm) == stablePlan(a), q)
+      assert(varying.findFirstIn(stablePlan(a)).isEmpty, q)
+    }
   }
 }

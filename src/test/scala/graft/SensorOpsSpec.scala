@@ -6,6 +6,11 @@ import org.apache.spark.sql.functions._
 class SensorOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  private val sf = "/root/testdata/sf0.001"
+
+  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
+
   private lazy val samples = Seq(
     ("a", 100L, 1.0), ("a", 200L, 2.0), ("a", 300L, 3.0), ("a", 400L, 4.0),
     ("b", 150L, 5.0), ("b", 250L, 6.0),
@@ -192,5 +197,30 @@ class SensorOpsSpec extends SparkSpec {
       .schema
     assert(schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType))
+  }
+
+  test("rangeScanUnlimited (export-edge scan) keeps parallel RANGE " +
+    "partitions — no GlobalLimit single-partition collapse") {
+    // parquet-backed samples: a tiny LocalRelation would let Catalyst
+    // fold the limit/sort away and pin nothing
+    val samples = Tables.events(spark, sf)
+      .select(col("event_type").as("sensor_id"),
+        unix_micros(col("ts")).as("timestamp_us"), col("value"))
+    val unlimited = graft.operators.SensorOps.rangeScanUnlimited(
+      samples, "click", Some(0L), None)
+    val plan = planOf(unlimited)
+    // orderBy alone = RangePartitioning: globally ordered ACROSS
+    // bounded partitions, which toLocalIterator pages one at a time —
+    // the residency contract of the streaming export edge
+    assert(plan.contains("rangepartitioning"), plan)
+    assert(!plan.contains("GlobalLimit") && !plan.contains("TakeOrdered"),
+      plan)
+    // the query-surface rangeScan keeps its limit semantics (and its
+    // single-partition collapse — fine for bounded query answers)
+    val limited = graft.operators.SensorOps.rangeScan(
+      samples, "click", Some(0L), None, limit = 10)
+    val lplan = planOf(limited)
+    assert(lplan.contains("TakeOrdered") || lplan.contains("GlobalLimit"),
+      lplan)
   }
 }
