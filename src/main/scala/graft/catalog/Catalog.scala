@@ -63,15 +63,15 @@ object Catalog {
     else (LabelMatcher.NameLabel +: rows.flatMap(r =>
       Option(r.getMap[String, String](4)).toSeq.flatMap(_.keys))).distinct.sorted
 
-  /** Parse a `/series?selector=` value: either `{label="v",...}` or
-    * `metric{label="v"}` — the metric name is ignored for series filtering
-    * (reference: src/ingestors/http/crud.rs:98-144).
+  /** Parse a `/series?selector=` value: either `{label="v",...}` (`{}`
+    * matches every series) or `metric{label="v"}` — the metric name is
+    * ignored for series filtering (reference:
+    * src/ingestors/http/crud.rs:98-144).
     */
-  def parseSelector(selector: String): Seq[LabelMatcher] = {
-    val q = if (selector.trim.startsWith("{")) s"dummy$selector" else selector
-    SimplePromQL.parse(q, nowUs = 0L).matchers
+  def parseSelector(selector: String): Seq[LabelMatcher] =
+    (if (selector.trim.startsWith("{")) SimplePromQL.parseBlock(selector, nowUs = 0L)
+     else SimplePromQL.parse(selector, nowUs = 0L)).matchers
       .filter(_.key != LabelMatcher.NameLabel)
-  }
 
   /** Prometheus-style series id: `name{k="v",...}`
     * (reference: src/ingestors/http/crud.rs:405-414).

@@ -9,21 +9,11 @@ import graft.operators.{LabelMatcher, Matchers}
 
 /** PromQL analytical extension — the operations the reference *rejects*
   * with 400s (reference: src/ingestors/http/simple_promql.rs:150-171) and
-  * explicitly delegates to the storage backend as future work
-  * (SURVEY §2.5). Here the backend is Spark, so they evaluate natively:
-  *
-  *  - `<agg>_over_time(sel[range])` — per-series aggregation over the
-  *    range window (sum/avg/count/min/max/last);
-  *  - `<agg> by (l1,...) (sel)` / `<agg> without (...) (sel)` /
-  *    bare `<agg>(sel)` — instant-vector aggregation across series: each
-  *    series contributes its latest sample in the lookback window, grouped
-  *    by the label clause (sum/avg/count/min/max);
-  *  - `topk(k, sel)` / `bottomk(k, sel)` — deterministic global ranking
-  *    of the instant vector (TakeOrderedAndProject, never a full sort);
-  *  - binary expressions `vec ⊙ vec` (one-to-one label matching on the
-  *    canonical sorted-entries form of the labels map) and `vec ⊙ scalar`
-  *    for + - * /, with selectors and per-series range functions as
-  *    operands (`rate(a[5m]) / rate(b[5m])`).
+  * delegates to the storage backend as future work (SURVEY §2.5). Here
+  * the backend is Spark, so they evaluate natively: `<agg>_over_time`
+  * range functions, instant aggregations with `by`/`without`, `topk`,
+  * binary expressions (one-to-one matching on the canonical sorted label
+  * entries) and the rest of the function families below.
   *
   * A query is lexed once ([[PromQLLexer]]) and parsed in one
   * recursive-descent pass over its tokens: binary operators by
@@ -31,27 +21,21 @@ import graft.operators.{LabelMatcher, Matchers}
   * `* / % atan2` < `^`, all left-associative except `^`), then function
   * calls and selectors. A query nested deeper than a fixed bound rejects
   * with [[SimplePromQL.PromQLError]] instead of overflowing the stack.
-  * Selector parsing (matchers, ranges, durations, rejection of binary ops
-  * etc.) is delegated to [[SimplePromQL]], so reference-compatible
-  * selector semantics — 1h default lookback, inclusive bounds — carry
-  * over; the `offset <dur>` and `@ <time>` modifiers (also absent from
-  * the reference) are handled here by shifting or pinning the evaluation
-  * window. [[SimplePromQL]] itself keeps the reference's strict rejection
-  * behavior; this evaluator is the opt-in extension.
+  * Selector leaves are read by [[SimplePromQL]]'s grammar over the same
+  * tokens, so the reference's selector semantics and messages (1h default
+  * lookback, inclusive bounds) hold here too; the `offset <dur>` and
+  * `@ <time>` modifiers (absent from the reference) shift or pin the
+  * evaluation window around them.
   *
   * Documented deviations from upstream Prometheus (beyond the
   * inclusive-bounds convention noted on [[SubqueryOverTimeQ]]): the
   * duration grammar accepts unit terms in any order with repeats
-  * (`1h30m` ≡ `30m1h`), a strict superset of Prometheus's
-  * descending-unique order; `@` on a sub-expression of a range query
-  * rejects (whole-expression pins evaluate once and replicate — see
-  * [[evalRangeApi]]). NESTED subqueries
-  * (`max_over_time(min_over_time(x[5m:1m])[1h:5m])`) and binary
-  * vector/set/dynamic-scalar operands inside subqueries — the SLO
-  * burn-rate shape `max_over_time((errors/requests)[1h:5m])` — now
-  * EVALUATE (r14) through [[perStepAny]]: one scan pass per leaf
-  * operand with its step grid, operands joined per
-  * (matching-labels, step), nested grids shared across outer steps.
+  * (`1h30m` ≡ `30m1h`); `@` on a sub-expression of a range query rejects
+  * (whole-expression pins evaluate once and replicate — see
+  * [[evalRangeApi]]). Nested subqueries and binary operands inside
+  * subqueries (`max_over_time((errors/requests)[1h:5m])`) evaluate
+  * through [[perStepAny]]: one scan pass per leaf operand with its step
+  * grid, operands joined per (matching-labels, step).
   */
 object ExtendedPromQL {
 
@@ -480,7 +464,7 @@ object ExtendedPromQL {
   private val MaxDepth = 64
 
   def parse(query: String, nowUs: Long): Query =
-    Parser(query, nowUs, None).query()
+    new Parser(query, nowUs, None).query()
 
   /** Parse with PromQL's `@ start()` / `@ end()` anchors resolved
     * against an explicit evaluation range (a range query's start/end
@@ -491,7 +475,7 @@ object ExtendedPromQL {
     */
   def parse(query: String, nowUs: Long,
       rangeStartUs: Option[Long], rangeEndUs: Option[Long]): Query =
-    Parser(query, nowUs, Some((
+    new Parser(query, nowUs, Some((
       rangeStartUs.getOrElse(nowUs), rangeEndUs.getOrElse(nowUs)))).query()
 
   /** A query's operator structure: operand token runs joined by binary
@@ -523,9 +507,8 @@ object ExtendedPromQL {
     * splits into its operator tree ([[tree]], precedence climbing: each
     * left-associative tier is a loop), then each node turns into a
     * [[Query]] top-down ([[lower]]), so a node's own checks run before
-    * its operands are read. Selector leaves go to [[SimplePromQL.parse]]
-    * with their source text, which keeps the reference's selector
-    * semantics and messages in one place.
+    * its operands are read. Selector leaves go to [[SimplePromQL]]'s
+    * grammar as token ranges of the same vector.
     *
     * Depth, bracket matching and argument commas count from the start
     * of the range at hand ([[PromQLLexer.depths]]), so a stray closer
@@ -533,6 +516,10 @@ object ExtendedPromQL {
     */
   private final class Parser(src: String, toks: Vector[Tok], nowUs: Long,
       anchors: Option[(Long, Long)]) {
+
+    /** A parser of the query with its surrounding whitespace trimmed. */
+    def this(query: String, nowUs: Long, anchors: Option[(Long, Long)]) =
+      this(query.trim, lex(query.trim), nowUs, anchors)
 
     def query(): Query = expr(0, toks.length, 0)
 
@@ -772,9 +759,16 @@ object ExtendedPromQL {
       }
     }
 
-    /** Comma-separated label names, empty entries dropped. */
-    private def labelList(lo: Int, hi: Int): Seq[String] =
-      text(lo, hi).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    /** Label names separated by commas, a trailing comma allowed:
+      * `Ident` tokens in the even places of [lo, hi), `,` in the odd.
+      */
+    private def labelList(lo: Int, hi: Int): Seq[String] = {
+      if ((lo until hi).exists(k =>
+          if ((k - lo) % 2 == 0) toks(k).kind != Ident else !is(k, Punct, ",")))
+        throw PromQLError(s"Bad label list '${text(lo, hi)}': expected " +
+          "label names separated by commas")
+      (lo until hi by 2).map(toks(_).text)
+    }
 
     /** The arguments of [lo, hi): the ranges between its top-level
       * commas.
@@ -1177,7 +1171,7 @@ object ExtendedPromQL {
       }
       if (call0(lo, end).flatMap(constant).nonEmpty)
         throw SimplePromQL.rejection("literal")
-      val sel = SimplePromQL.parse(text(lo, end), evalUs)
+      val sel = SimplePromQL.parse(src, toks, lo, end, evalUs)
       sel.copy(startUs = sel.startUs - shiftUs, endUs = sel.endUs - shiftUs)
     }
 
@@ -1199,15 +1193,6 @@ object ExtendedPromQL {
               "query_range; pin the whole expression with a trailing @ " +
               "(e.g. `sum(metric) @ end()`)")
       }
-    }
-  }
-
-  private object Parser {
-    /** A parser of the query with its surrounding whitespace trimmed. */
-    def apply(query: String, nowUs: Long,
-        anchors: Option[(Long, Long)]): Parser = {
-      val src = query.trim
-      new Parser(src, lex(src), nowUs, anchors)
     }
   }
 
@@ -2038,7 +2023,7 @@ object ExtendedPromQL {
       query: String, startUs: Long, endUs: Long, stepUs: Long,
       selectFor: Seq[LabelMatcher] => DataFrame,
       samplesFor: (Long, Long) => DataFrame): DataFrame = {
-    val (q, pinned) = Parser(query, endUs, Some((startUs, endUs))).rangeQuery()
+    val (q, pinned) = new Parser(query, endUs, Some((startUs, endUs))).rangeQuery()
     rangeChecks(q, startUs, endUs, stepUs)
     val lastStepUs = endUs - (endUs - startUs) % stepUs
     pinned match {

@@ -2,20 +2,21 @@ package graft.promql
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Positioned-token lexer for the extended PromQL front end: the one
-  * place quotes, brackets, numbers/durations and word boundaries are
+/** Positioned-token lexer for both PromQL front ends: the one place
+  * quotes, brackets, numbers/durations and word boundaries are
   * recognized. [[ExtendedPromQL]] lexes a query once and parses the
-  * token vector by index.
+  * token vector by index; [[SimplePromQL]]'s selector grammar reads the
+  * same tokens, a whole restricted query's or an extended selector leaf's.
   *
   * TOTAL by design: lexing never throws. Malformed input (unterminated
   * string, stray byte) becomes a token the parser rejects with its own
   * specific message.
   *
   * Tokens carry their character span (`start` inclusive, `end`
-  * exclusive), so the source text of any token range, a selector handed
-  * to [[SimplePromQL]] or the text an error message quotes, is one
-  * substring of the query. Bracket nesting is [[depths]], counted from
-  * the start of whichever token range is being parsed.
+  * exclusive), so the text an error message quotes (the rest of a
+  * selector, a duration between brackets) is one substring of the query.
+  * Bracket nesting is [[depths]], counted from the start of whichever
+  * token range is being parsed.
   */
 object PromQLLexer {
 

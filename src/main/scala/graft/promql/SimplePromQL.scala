@@ -1,6 +1,10 @@
 package graft.promql
 
+import scala.util.matching.Regex
+
 import graft.operators.LabelMatcher
+import graft.promql.PromQLLexer.{Dur, Ident, Kind, Num, Op, Punct, Str, Tok,
+  Unknown, lex}
 
 /** Restricted PromQL endpoint semantics (reference:
   * src/ingestors/http/simple_promql.rs:25-324): only vector selectors
@@ -9,6 +13,9 @@ import graft.operators.LabelMatcher
   * ops, subqueries, and literals are rejected with specific messages;
   * parentheses unwrap; trailing input is rejected. The metric
   * name becomes a `__name__` equality matcher.
+  *
+  * The grammar reads [[PromQLLexer]] tokens, so the extended front end
+  * parses its selector leaves here from its own token vector.
   */
 object SimplePromQL {
 
@@ -36,194 +43,207 @@ object SimplePromQL {
     *              the wall clock
     */
   def parse(query: String, nowUs: Long): ParsedQuery = {
-    val p = new Parser(query)
-    val result = p.parseExpr()
-    p.skipWs()
-    if (!p.atEnd)
-      throw PromQLError(s"Unexpected trailing content in query: '${p.rest}'")
-    result match {
-      case Selector(matchers, None) =>
-        requireMatchers(matchers)
-        ParsedQuery(matchers, nowUs - DefaultLookbackMs * 1000L, nowUs)
-      case Selector(matchers, Some(rangeMs)) =>
-        requireMatchers(matchers)
-        ParsedQuery(matchers, nowUs - msToUs(rangeMs), nowUs, hadRange = true)
-    }
+    val toks = lex(query)
+    restricted(new Grammar(query, toks, toks.length, query.length), 0, nowUs)
   }
+
+  /** [[parse]] of the query that tokens [lo, hi) of `src` spell. */
+  private[promql] def parse(src: String, toks: IndexedSeq[Tok], lo: Int,
+      hi: Int, nowUs: Long): ParsedQuery =
+    restricted(new Grammar(src, toks, hi, if (hi > lo) toks(hi - 1).end else 0),
+      lo, nowUs)
+
+  private def restricted(g: Grammar, lo: Int, nowUs: Long): ParsedQuery = {
+    val sel = g.query(lo)
+    if (sel.matchers.isEmpty)
+      throw PromQLError(
+        "Query must have at least one matcher (metric name or label)")
+    window(sel, nowUs)
+  }
+
+  /** A selector without its metric name: a `{…}` block, which may be
+    * empty (`{}` matches every series), then the rest of the grammar.
+    */
+  def parseBlock(query: String, nowUs: Long): ParsedQuery = {
+    val toks = lex(query)
+    val g = new Grammar(query, toks, toks.length, query.length)
+    window(g.end(g.afterName(0, Nil)), nowUs)
+  }
+
+  private def window(sel: Selector, nowUs: Long): ParsedQuery =
+    ParsedQuery(sel.matchers,
+      nowUs - sel.rangeMs.fold(DefaultLookbackMs * 1000L)(msToUs), nowUs,
+      hadRange = sel.rangeMs.nonEmpty)
 
   /** The reference's rejection of a non-selector query: `what` is one
     * of agg, call, binary, unary, subquery or literal.
     */
-  private[promql] def rejection(what: String): PromQLError = what match {
-    case "agg" => PromQLError(
-      "Aggregation expressions (like sum(), avg(), count()) are not " +
-        "supported. Only simple selectors like 'metric_name{label=\"value\"}' " +
-        "or 'metric_name[5m]' are supported.")
-    case "call" => PromQLError(
-      "Function calls (like rate(), increase(), histogram_quantile()) are " +
-        "not supported. Only simple selectors like " +
-        "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
-    case "binary" => PromQLError(
-      "Binary operations (like +, -, *, /) are not supported. Only simple " +
-        "selectors like 'metric_name{label=\"value\"}' or 'metric_name[5m]' " +
-        "are supported.")
-    case "unary" => PromQLError(
-      "Unary operations are not supported. Only simple selectors like " +
-        "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
-    case "subquery" => PromQLError(
-      "Subqueries are not supported. Only simple selectors like " +
-        "'metric_name{label=\"value\"}' or 'metric_name[5m]' are supported.")
-    case _ => PromQLError(
-      "Literal values are not valid queries. Use a metric selector like " +
-        "'metric_name{label=\"value\"}'.")
+  private[promql] def rejection(what: String): PromQLError = {
+    val only = "Only simple selectors like 'metric_name{label=\"value\"}' " +
+      "or 'metric_name[5m]' are supported."
+    PromQLError(what match {
+      case "agg" => "Aggregation expressions (like sum(), avg(), count()) " +
+        s"are not supported. $only"
+      case "call" => "Function calls (like rate(), increase(), " +
+        s"histogram_quantile()) are not supported. $only"
+      case "binary" =>
+        s"Binary operations (like +, -, *, /) are not supported. $only"
+      case "unary" => s"Unary operations are not supported. $only"
+      case "subquery" => s"Subqueries are not supported. $only"
+      case _ => "Literal values are not valid queries. Use a metric " +
+        "selector like 'metric_name{label=\"value\"}'."
+    })
   }
-
-  private def requireMatchers(ms: Seq[LabelMatcher]): Unit =
-    if (ms.isEmpty)
-      throw PromQLError(
-        "Query must have at least one matcher (metric name or label)")
 
   private final case class Selector(
       matchers: Seq[LabelMatcher], rangeMs: Option[Long])
 
-  private final class Parser(s: String) {
-    private var i = 0
-    def atEnd: Boolean = i >= s.length
-    def rest: String = s.substring(math.min(i, s.length))
-    def skipWs(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    private def peek: Char = if (i < s.length) s.charAt(i) else '\u0000'
+  private val Escape = "(?s)\\\\(.)".r
 
-    private def reject(what: String): Nothing = throw rejection(what)
+  /** The value of a `"…"` token: `\n` and `\t` decode, any other
+    * escaped character stands for itself. The lexer pairs escapes the
+    * same way, so the string is closed when a quote is left over at its
+    * end once the escape pairs are gone.
+    */
+  private def unquote(t: Tok): String = {
+    val body = t.text.substring(1)
+    if (!Escape.replaceAllIn(body, "").endsWith("\""))
+      throw PromQLError("Failed to parse PromQL query: unterminated string")
+    Escape.replaceAllIn(body.dropRight(1), m => Regex.quoteReplacement(
+      m.group(1) match { case "n" => "\n"; case "t" => "\t"; case c => c }))
+  }
 
-    def parseExpr(): Selector = {
-      // parens unwrap (reference: simple_promql.rs:162-164), counted in a
-      // loop so that no nesting depth can overflow the stack
-      var open = 0
-      skipWs()
-      while (peek == '(') { i += 1; open += 1; skipWs() }
-      val inner = parseSelector()
-      for (_ <- 0 until open) {
-        skipWs()
-        if (peek != ')') throw PromQLError("Failed to parse PromQL query: unbalanced parentheses")
-        i += 1
-        checkTrailingOperator()
-      }
-      inner
+  /** The grammar over tokens [.., hi) of `src`: parens, then a metric
+    * name and/or a `{…}` matcher block, then an optional `[dur]`. Each
+    * function takes the index of its first token and returns the index
+    * after its last. Messages quote the source from the offending token
+    * up to `stop`.
+    */
+  private final class Grammar(src: String, toks: IndexedSeq[Tok], hi: Int,
+      stop: Int) {
+    private def is(k: Int, kind: Kind, text: String): Boolean =
+      k < hi && toks(k).kind == kind && toks(k).text == text
+    private def from(k: Int): Int = if (k < hi) toks(k).start else stop
+    private def failAt(at: Int) = PromQLError(
+      s"Failed to parse PromQL query at: '${src.substring(at, stop)}'")
+    private def trailing(at: Int) = PromQLError(
+      s"Unexpected trailing content in query: '${src.substring(at, stop)}'")
+    private def unbalanced =
+      PromQLError("Failed to parse PromQL query: unbalanced parentheses")
+
+    /** A selector in any number of parens (reference:
+      * simple_promql.rs:162-164), filling the range.
+      */
+    def query(lo: Int): Selector = {
+      val open = (lo until hi).takeWhile(is(_, Punct, "(")).length
+      val (sel, next) = selector(lo + open, open)
+      end((sel, (0 until open).foldLeft(next) { (k, _) =>
+        if (!is(k, Punct, ")")) throw unbalanced
+        trailingOperator(k + 1)
+      }))
     }
 
-    private def parseSelector(): Selector = {
-      if (peek == '+' || peek == '-') reject("unary")
-      if (peek.isDigit) reject("literal")
-      if (peek == '"' || peek == '\'') reject("literal")
-      if (peek == '{') {
-        val matchers = parseMatcherBlock()
-        val range = parseOptionalRange()
-        checkTrailingOperator()
-        return Selector(matchers, range)
-      }
-      val name = parseIdentifier()
-      if (name.isEmpty) throw PromQLError(s"Failed to parse PromQL query at: '$rest'")
-      skipWs()
-      if (peek == '(') {
-        if (AggregationKeywords.contains(name)) reject("agg") else reject("call")
-      }
-      // `sum by (x) (...)` form
-      if (AggregationKeywords.contains(name)) {
-        val save = i
-        val word = parseIdentifier()
-        if (word == "by" || word == "without") reject("agg")
-        i = save
-      }
-      val matchers = scala.collection.mutable.ArrayBuffer[LabelMatcher](
-        LabelMatcher.Eq(LabelMatcher.NameLabel, name))
-      skipWs()
-      if (peek == '{') matchers ++= parseMatcherBlock()
-      val range = parseOptionalRange()
-      checkTrailingOperator()
-      Selector(matchers.toSeq, range)
+    def end(r: (Selector, Int)): Selector =
+      if (r._2 < hi) throw trailing(toks(r._2).start) else r._1
+
+    /** A name: the adjacent `Ident`, `:` and digit-led number tokens from
+      * `k`, cut at the first `.`, `+` or `-` inside a number, as (name,
+      * next token, offset of the cut or -1).
+      */
+    private def word(k: Int): (String, Int, Int) = {
+      var j = k
+      while (j < hi && (j == k || toks(j).start == toks(j - 1).end) &&
+          (toks(j).kind == Ident || is(j, Punct, ":") ||
+            ((toks(j).kind == Num || toks(j).kind == Dur) &&
+              toks(j).text.head.isDigit))) j += 1
+      val run = src.substring(from(k), if (j > k) toks(j - 1).end else from(k))
+      val cut = run.indexWhere("+-.".contains(_))
+      if (cut < 0) (run, j, -1) else (run.take(cut), j, from(k) + cut)
     }
 
-    private def checkTrailingOperator(): Unit = {
-      skipWs()
-      if (atEnd || peek == ')') return
-      peek match {
-        case '+' | '-' | '*' | '/' | '%' | '^' | '=' | '!' | '>' | '<' =>
-          reject("binary")
+    private def selector(k: Int, open: Int): (Selector, Int) = {
+      if (k < hi) toks(k) match {
+        case Tok(Op, "+" | "-", _, _) => throw rejection("unary")
+        case Tok(Num | Dur, t, _, _) if t.head.isDigit => throw rejection("literal")
+        case Tok(Str, _, _, _) | Tok(Unknown, "'", _, _) => throw rejection("literal")
+        case Tok(Punct, "{", _, _) => return afterName(k, Nil)
         case _ =>
-          val save = i
-          val word = parseIdentifier()
-          i = save
-          if (Set("and", "or", "unless").contains(word)) reject("binary")
       }
+      val (name, next, cut) = word(k)
+      if (name.isEmpty) throw failAt(from(k))
+      // a name cut inside a number is followed by a sign (a binary
+      // operator) or by a `.` (trailing content)
+      if (cut >= 0) throw (if (src.charAt(cut) != '.') rejection("binary")
+        else if (open > 0) unbalanced else trailing(cut))
+      val agg = AggregationKeywords.contains(name)
+      if (is(next, Punct, "(")) throw rejection(if (agg) "agg" else "call")
+      // `sum by (x) (...)` form
+      if (agg && (is(next, Ident, "by") || is(next, Ident, "without")))
+        throw rejection("agg")
+      afterName(next, Seq(LabelMatcher.Eq(LabelMatcher.NameLabel, name)))
     }
 
-    private def parseIdentifier(): String = {
-      skipWs()
-      val start = i
-      while (i < s.length &&
-        (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_' || s.charAt(i) == ':'))
-        i += 1
-      s.substring(start, i)
+    /** The matcher block, range and operator check after a metric name. */
+    def afterName(k: Int, named: Seq[LabelMatcher]): (Selector, Int) = {
+      val (block, next) =
+        if (is(k, Punct, "{")) matcherBlock(k + 1) else (Nil, k)
+      val (range, after) = optionalRange(next)
+      (Selector(named ++ block, range), trailingOperator(after))
     }
 
-    private def parseMatcherBlock(): Seq[LabelMatcher] = {
-      // at '{'
-      i += 1
-      val out = scala.collection.mutable.ArrayBuffer.empty[LabelMatcher]
-      skipWs()
-      if (peek == '}') { i += 1; return out.toSeq }
+    private def trailingOperator(k: Int): Int =
+      if (k < hi && (toks(k) match {
+          case Tok(Op, op, _, _) => op != "@"
+          case Tok(Unknown, t, _, _) => t == "!"
+          case Tok(Ident, t, _, _) => t == "and" || t == "or" || t == "unless"
+          case _ => false
+        })) throw rejection("binary")
+      else k
+
+    /** `label op "value"` pairs separated by commas, from the token after
+      * `{` through its `}`.
+      */
+    private def matcherBlock(first: Int): (Seq[LabelMatcher], Int) = {
+      if (is(first, Punct, "}")) return (Nil, first + 1)
+      val out = Seq.newBuilder[LabelMatcher]
+      var k = first
       var more = true
       while (more) {
-        val key = parseIdentifier()
-        if (key.isEmpty) throw PromQLError(s"Failed to parse PromQL query at: '$rest'")
-        skipWs()
-        val op =
-          if (s.startsWith("=~", i)) { i += 2; "=~" }
-          else if (s.startsWith("!=", i)) { i += 2; "!=" }
-          else if (s.startsWith("!~", i)) { i += 2; "!~" }
-          else if (peek == '=') { i += 1; "=" }
-          else throw PromQLError(s"Failed to parse PromQL query at: '$rest'")
-        skipWs()
-        if (peek != '"') throw PromQLError(s"Failed to parse PromQL query at: '$rest'")
-        i += 1
-        val sb = new StringBuilder
-        while (i < s.length && s.charAt(i) != '"') {
-          if (s.charAt(i) == '\\' && i + 1 < s.length) {
-            sb.append(s.charAt(i + 1) match {
-              case 'n' => '\n'; case 't' => '\t'; case c => c
-            })
-            i += 2
-          } else { sb.append(s.charAt(i)); i += 1 }
-        }
-        if (atEnd) throw PromQLError("Failed to parse PromQL query: unterminated string")
-        i += 1
-        out += (op match {
-          case "=" => LabelMatcher.Eq(key, sb.toString)
-          case "!=" => LabelMatcher.NotEq(key, sb.toString)
-          case "=~" => LabelMatcher.Re(key, sb.toString)
-          case "!~" => LabelMatcher.NotRe(key, sb.toString)
-        })
-        skipWs()
-        if (peek == ',') { i += 1; skipWs() }
-        else more = false
+        val (key, op, cut) = word(k)
+        if (key.isEmpty) throw failAt(from(k))
+        if (cut >= 0) throw failAt(cut)
+        val matcher: (String, String) => LabelMatcher =
+          (if (op < hi && toks(op).kind == Op) toks(op).text else "") match {
+            case "=" => LabelMatcher.Eq
+            case "!=" => LabelMatcher.NotEq
+            case "=~" => LabelMatcher.Re
+            case "!~" => LabelMatcher.NotRe
+            // `=` with a second `=` where the value goes
+            case "==" => throw failAt(toks(op).start + 1)
+            case _ => throw failAt(from(op))
+          }
+        if (!(op + 1 < hi && toks(op + 1).kind == Str)) throw failAt(from(op + 1))
+        out += matcher(key, unquote(toks(op + 1)))
+        more = is(op + 2, Punct, ",")
+        k = op + (if (more) 3 else 2)
       }
-      if (peek != '}') throw PromQLError(s"Failed to parse PromQL query at: '$rest'")
-      i += 1
-      out.toSeq
+      if (!is(k, Punct, "}")) throw failAt(from(k))
+      (out.result(), k + 1)
     }
 
-    private def parseOptionalRange(): Option[Long] = {
-      skipWs()
-      if (peek != '[') return None
-      i += 1
-      val start = i
-      while (i < s.length && s.charAt(i) != ']' && s.charAt(i) != ':') i += 1
-      if (i < s.length && s.charAt(i) == ':') reject("subquery")
-      if (atEnd) throw PromQLError("Failed to parse PromQL query: unterminated range")
-      val dur = s.substring(start, i)
-      i += 1 // ']'
-      Some(parseDurationMs(dur))
-    }
+    /** `[dur]`: the source from `[` to the first `]` or `:` after it,
+      * wherever that falls (a `:` is a subquery).
+      */
+    private def optionalRange(k: Int): (Option[Long], Int) =
+      if (!is(k, Punct, "[")) (None, k)
+      else {
+        def bound(c: Char): Boolean = c == ']' || c == ':'
+        val j = (k + 1 until hi).find(toks(_).text.exists(bound)).getOrElse(
+          throw PromQLError("Failed to parse PromQL query: unterminated range"))
+        val at = toks(j).start + toks(j).text.indexWhere(bound)
+        if (src.charAt(at) == ':') throw rejection("subquery")
+        (Some(parseDurationMs(src.substring(toks(k).end, at))), j + 1)
+      }
   }
 
   /** Prometheus duration: concatenated `<n><unit>` terms
@@ -231,31 +251,21 @@ object SimplePromQL {
     * error, never a silent wraparound into a negative window.
     */
   def parseDurationMs(d: String): Long = {
-    val re = """(\d+)(ms|s|m|h|d|w|y)""".r
-    val parts = re.findAllMatchIn(d).toSeq
-    val consumed = parts.map(_.matched.length).sum
-    if (parts.isEmpty || consumed != d.length)
+    val parts = DurationTerm.findAllMatchIn(d).toSeq
+    if (parts.isEmpty || parts.map(_.matched.length).sum != d.length)
       throw PromQLError(s"Failed to parse PromQL query: bad duration '$d'")
-    try {
-      parts.map { m =>
-        val n = m.group(1).toLong
-        val unitMs = m.group(2) match {
-          case "ms" => 1L
-          case "s" => 1000L
-          case "m" => 60000L
-          case "h" => 3600000L
-          case "d" => 86400000L
-          case "w" => 604800000L
-          case "y" => 31536000000L
-        }
-        Math.multiplyExact(n, unitMs)
-      }.reduce(Math.addExact(_, _))
-    } catch {
+    try parts.map(m => Math.multiplyExact(m.group(1).toLong, UnitMs(m.group(2))))
+      .reduce(Math.addExact(_, _))
+    catch {
       case _: NumberFormatException | _: ArithmeticException =>
         throw PromQLError(
           s"Failed to parse PromQL query: duration '$d' out of range")
     }
   }
+
+  private val DurationTerm = """(\d+)(ms|s|m|h|d|w|y)""".r
+  private val UnitMs = Map("ms" -> 1L, "s" -> 1000L, "m" -> 60000L,
+    "h" -> 3600000L, "d" -> 86400000L, "w" -> 604800000L, "y" -> 31536000000L)
 
   /** Milliseconds → microseconds with the same out-of-range contract as
     * [[parseDurationMs]] (callers convert parsed durations to the µs

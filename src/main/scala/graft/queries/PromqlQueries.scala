@@ -98,6 +98,14 @@ private[graft] object PromqlQueries {
     rateCtes("event_type, user_id", "event_type IN ('view', 'click')",
       "1, 2")
 
+  /** [[latestPerUser]] over the `event` series' 1h lookback ending at
+    * `atUs`: each series' sample in an instant vector evaluated then.
+    */
+  private def latestSql(projection: String, atUs: Long = 1706659200000000L,
+      event: String = "view"): String =
+    latestPerUser(projection, s"event_type = '$event' AND epoch_us(ts) " +
+      s"BETWEEN ${atUs - 3600000000L} AND $atUs")
+
   /** `rate(view[31d]) / rate(click[31d])` per user, one-to-one: the
     * oracle of q52 and of q60, whose on(user) matching gives the same
     * pairs.
@@ -162,14 +170,8 @@ private[graft] object PromqlQueries {
     // series here so the double sum is exact.
     q(
       "q42_promql_instant_agg",
-      """SELECT user_tag, value FROM (
-        |  SELECT CAST(user_id AS VARCHAR) AS user_tag, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000
-        |) WHERE rn = 1 ORDER BY user_tag"""
+      s"""${latestSql("CAST(user_id AS VARCHAR) AS user_tag, value")}
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "sum by (user) (view)", 1706659200000000L))
@@ -256,18 +258,11 @@ private[graft] object PromqlQueries {
     // (never a full sort). Another operation the reference 400s.
     q(
       "q51_promql_topk",
-      """SELECT rank, sensor_id, value FROM (
-        |  SELECT sensor_id, value,
-        |    ROW_NUMBER() OVER (ORDER BY value DESC, sensor_id ASC) AS rank
-        |  FROM (
-        |    SELECT 'view ' || user_id AS sensor_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |  WHERE rn = 1)
-        |WHERE rank <= 5 ORDER BY rank"""
+      s"""SELECT rank, sensor_id, value FROM (
+         |  SELECT sensor_id, value,
+         |    ROW_NUMBER() OVER (ORDER BY value DESC, sensor_id ASC) AS rank
+         |  FROM (${latestSql("'view ' || user_id AS sensor_id, value")}))
+         |WHERE rank <= 5 ORDER BY rank"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "topk(5, view)", 1706659200000000L))
@@ -308,15 +303,9 @@ private[graft] object PromqlQueries {
     // between engines outside [1e-3, 1e7) (scientific vs plain form).
     q(
       "q61_promql_count_values",
-      """SELECT CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) AS val_tag,
-        |  COUNT(*) AS n FROM (
-        |  SELECT user_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |WHERE rn = 1 GROUP BY 1 ORDER BY val_tag"""
+      s"""${latestSql("CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) " +
+           "AS val_tag, COUNT(*) AS n")}
+         |GROUP BY 1 ORDER BY val_tag"""
     ) { (s, d) =>
       ExtendedPromQL.evalWith(ExtendedPromQL.parse(
         """count_values("val", view)""", 1706659200000000L),
@@ -401,20 +390,13 @@ private[graft] object PromqlQueries {
     // the same latest-per-user sum grouped by the id's leading digits.
     q(
       "q63_promql_label_replace",
-      """SELECT decade,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value FROM (
-        |  SELECT user_id, value,
-        |    CASE WHEN length(CAST(user_id AS VARCHAR)) > 1
-        |      THEN substr(CAST(user_id AS VARCHAR), 1,
-        |        length(CAST(user_id AS VARCHAR)) - 1)
-        |      ELSE '' END AS decade,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |WHERE rn = 1 AND decade <> ''
-        |GROUP BY decade ORDER BY decade"""
+      s"""SELECT decade,
+         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value FROM (
+         |  ${latestSql("value, CASE WHEN length(CAST(user_id AS VARCHAR)) > 1 " +
+           "THEN substr(CAST(user_id AS VARCHAR), 1, " +
+           "length(CAST(user_id AS VARCHAR)) - 1) ELSE '' END AS decade")})
+         |WHERE decade <> ''
+         |GROUP BY decade ORDER BY decade"""
     ) { (s, d) =>
       // decade = user id minus its last digit ("42" -> "4"); ids with one
       // digit expand to "" which DROPS the label (Prometheus rule), so
@@ -681,18 +663,11 @@ private[graft] object PromqlQueries {
     // SERIES (catalog-bounded), never over samples.
     q(
       "q83_promql_sort",
-      """SELECT rank, sensor_id, value FROM (
-        |  SELECT sensor_id, value,
-        |    ROW_NUMBER() OVER (ORDER BY value ASC, sensor_id ASC) AS rank
-        |  FROM (
-        |    SELECT 'view ' || user_id AS sensor_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |  WHERE rn = 1)
-        |ORDER BY rank"""
+      s"""SELECT rank, sensor_id, value FROM (
+         |  SELECT sensor_id, value,
+         |    ROW_NUMBER() OVER (ORDER BY value ASC, sensor_id ASC) AS rank
+         |  FROM (${latestSql("'view ' || user_id AS sensor_id, value")}))
+         |ORDER BY rank"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "sort(view)", 1706659200000000L))
@@ -761,22 +736,14 @@ private[graft] object PromqlQueries {
     // count) and the double multiply are bit-exact on both engines.
     q(
       "q93_promql_scalar",
-      """WITH latest AS (
-        |  SELECT user_id, value FROM (
-        |    SELECT user_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |  WHERE rn = 1)
-        |SELECT * FROM (
-        |  SELECT 'scaled' AS part, CAST(user_id AS VARCHAR) AS user_tag,
-        |    value * (SELECT COUNT(*)::DOUBLE FROM latest) AS value
-        |  FROM latest
-        |  UNION ALL
-        |  SELECT 'fallback', '', 42.0::DOUBLE)
-        |ORDER BY part, user_tag"""
+      s"""WITH latest AS (${latestSql("user_id, value")})
+         |SELECT * FROM (
+         |  SELECT 'scaled' AS part, CAST(user_id AS VARCHAR) AS user_tag,
+         |    value * (SELECT COUNT(*)::DOUBLE FROM latest) AS value
+         |  FROM latest
+         |  UNION ALL
+         |  SELECT 'fallback', '', 42.0::DOUBLE)
+         |ORDER BY part, user_tag"""
     ) { (s, d) =>
       val now = 1706659200000000L
       def ev(qs: String, tag: String) =
@@ -834,17 +801,10 @@ private[graft] object PromqlQueries {
     // occasional 1-ulp libm-vs-JVM disagreement inside sin/atan.
     q(
       "q96_promql_trig",
-      """SELECT user_tag,
-        |  floor(degrees(atan(sin(radians(value)))) / 0.000000001 + 0.5)
-        |    * 0.000000001 AS value
-        |FROM (
-        |  SELECT CAST(user_id AS VARCHAR) AS user_tag, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |WHERE rn = 1 ORDER BY user_tag"""
+      s"""${latestSql("CAST(user_id AS VARCHAR) AS user_tag, " +
+           "floor(degrees(atan(sin(radians(value)))) / 0.000000001 + 0.5) " +
+           "* 0.000000001 AS value")}
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "round(deg(atan(sin(rad(view)))), 0.000000001)",
@@ -860,27 +820,11 @@ private[graft] object PromqlQueries {
     // call the platform atan2, so the hash surface rounds to 6.
     q(
       "q101_promql_atan2",
-      """WITH l AS (
-        |  SELECT user_id, value FROM (
-        |    SELECT user_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |  WHERE rn = 1),
-        |r AS (
-        |  SELECT user_id, value FROM (
-        |    SELECT user_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'click'
-        |      AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |  WHERE rn = 1)
-        |SELECT CAST(l.user_id AS VARCHAR) AS user_tag,
-        |  ROUND(atan2(l.value, r.value), 6) AS value
-        |FROM l JOIN r USING (user_id) ORDER BY user_tag"""
+      s"""WITH l AS (${latestSql("user_id, value")}),
+         |r AS (${latestSql("user_id, value", event = "click")})
+         |SELECT CAST(l.user_id AS VARCHAR) AS user_tag,
+         |  ROUND(atan2(l.value, r.value), 6) AS value
+         |FROM l JOIN r USING (user_id) ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "view atan2 on(user) click", 1706659200000000L))
@@ -896,16 +840,9 @@ private[graft] object PromqlQueries {
     // drift a ulp between libms, so the hash surface rounds to 6.
     q(
       "q102_promql_mod_pow",
-      """SELECT CAST(user_id AS VARCHAR) AS user_tag,
-        |  ROUND(pow(fmod(value, 7.0::DOUBLE), 2.0::DOUBLE), 6) AS value
-        |FROM (
-        |  SELECT user_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |WHERE rn = 1 ORDER BY user_tag"""
+      s"""${latestSql("CAST(user_id AS VARCHAR) AS user_tag, " +
+           "ROUND(pow(fmod(value, 7.0::DOUBLE), 2.0::DOUBLE), 6) AS value")}
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "(view % 7) ^ 2", 1706659200000000L))
@@ -944,15 +881,8 @@ private[graft] object PromqlQueries {
     // the quantile_cont definition) over the latest sample per series.
     q(
       "q123_promql_quantile_agg",
-      """SELECT ROUND(quantile_cont(value, 0.75), 6) AS value FROM (
-        |  SELECT user_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1706655600000000 AND 1706659200000000)
-        |WHERE rn = 1
-        |HAVING COUNT(*) > 0"""
+      s"""${latestSql("ROUND(quantile_cont(value, 0.75), 6) AS value")}
+         |HAVING COUNT(*) > 0"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "quantile(0.75, view)", 1706659200000000L))
@@ -964,23 +894,15 @@ private[graft] object PromqlQueries {
     // sort). Parity labels derive from the user id as in q63.
     q(
       "q124_promql_topk_by",
-      """SELECT user_id % 2 AS parity, rank, CAST(user_id AS VARCHAR)
-        |    AS user_tag, value
-        |FROM (
-        |  SELECT user_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id % 2
-        |      ORDER BY value DESC,
-        |        'view ' || CAST(user_id AS VARCHAR)) AS rank
-        |  FROM (
-        |    SELECT user_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1705496400000000
-        |        AND 1705500000000000)
-        |  WHERE rn = 1)
-        |WHERE rank <= 3 ORDER BY parity, rank"""
+      s"""SELECT user_id % 2 AS parity, rank, CAST(user_id AS VARCHAR)
+         |    AS user_tag, value
+         |FROM (
+         |  SELECT user_id, value,
+         |    ROW_NUMBER() OVER (PARTITION BY user_id % 2
+         |      ORDER BY value DESC,
+         |        'view ' || CAST(user_id AS VARCHAR)) AS rank
+         |  FROM (${latestSql("user_id, value", atUs = 1705500000000000L)}))
+         |WHERE rank <= 3 ORDER BY parity, rank"""
     ) { (s, d) =>
       ExtendedPromQL.evalWith(ExtendedPromQL.parse(
         "topk by (parity) (3, view)", 1705500000000000L),
@@ -1004,17 +926,11 @@ private[graft] object PromqlQueries {
     // 31-day-latest values ride along as the payload.
     q(
       "q125_promql_limit_ratio",
-      """SELECT CAST(user_id AS VARCHAR) AS user_tag, value FROM (
-        |  SELECT user_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |  FROM events
-        |  WHERE event_type = 'view'
-        |    AND epoch_us(ts) BETWEEN 1705496400000000 AND 1705500000000000)
-        |WHERE rn = 1
-        |  AND ('0x' || substr(md5('user=' || user_id), 1, 15))
-        |    ::BIGINT::DOUBLE / 1152921504606846976.0::DOUBLE < 0.4::DOUBLE
-        |ORDER BY user_tag"""
+      s"""${latestSql("CAST(user_id AS VARCHAR) AS user_tag, value",
+           atUs = 1705500000000000L)}
+         |  AND ('0x' || substr(md5('user=' || user_id), 1, 15))
+         |    ::BIGINT::DOUBLE / 1152921504606846976.0::DOUBLE < 0.4::DOUBLE
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "limit_ratio(0.4, view)", 1705500000000000L))
@@ -1027,20 +943,11 @@ private[graft] object PromqlQueries {
     // replay, k-bounded with the (draw, series) tie-break.
     q(
       "q126_promql_limitk",
-      """SELECT CAST(user_id AS VARCHAR) AS user_tag, value FROM (
-        |  SELECT user_id, value,
-        |    ('0x' || substr(md5('user=' || user_id), 1, 15))::BIGINT AS d
-        |  FROM (
-        |    SELECT user_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1705496400000000
-        |        AND 1705500000000000)
-        |  WHERE rn = 1
-        |  ORDER BY d, 'view ' || CAST(user_id AS VARCHAR) LIMIT 5)
-        |ORDER BY user_tag"""
+      s"""SELECT CAST(user_id AS VARCHAR) AS user_tag, value FROM (
+         |  ${latestSql("user_id, value, ('0x' || substr(md5('user=' || " +
+           "user_id), 1, 15))::BIGINT AS d", atUs = 1705500000000000L)}
+         |  ORDER BY d, 'view ' || CAST(user_id AS VARCHAR) LIMIT 5)
+         |ORDER BY user_tag"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         "limitk(5, view)", 1705500000000000L))
@@ -1055,21 +962,13 @@ private[graft] object PromqlQueries {
     // the string sort and the series-id tie.
     q(
       "q127_promql_sort_by_label",
-      """SELECT rank, user_tag, value FROM (
-        |  SELECT CAST(user_id AS VARCHAR) AS user_tag, value,
-        |    ROW_NUMBER() OVER (
-        |      ORDER BY CAST(user_id AS VARCHAR) DESC,
-        |        'view ' || CAST(user_id AS VARCHAR) DESC) AS rank
-        |  FROM (
-        |    SELECT user_id, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events
-        |    WHERE event_type = 'view'
-        |      AND epoch_us(ts) BETWEEN 1705496400000000
-        |        AND 1705500000000000)
-        |  WHERE rn = 1)
-        |ORDER BY rank"""
+      s"""SELECT rank, user_tag, value FROM (
+         |  SELECT CAST(user_id AS VARCHAR) AS user_tag, value,
+         |    ROW_NUMBER() OVER (
+         |      ORDER BY CAST(user_id AS VARCHAR) DESC,
+         |        'view ' || CAST(user_id AS VARCHAR) DESC) AS rank
+         |  FROM (${latestSql("user_id, value", atUs = 1705500000000000L)}))
+         |ORDER BY rank"""
     ) { (s, d) =>
       promql(s, d, ExtendedPromQL.parse(
         """sort_by_label_desc(view, "user")""", 1705500000000000L))

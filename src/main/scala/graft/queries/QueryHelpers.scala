@@ -42,6 +42,21 @@ private[graft] object QueryHelpers {
   def dsum(c: Column): Column =
     sum(c.cast("decimal(18,2)")).cast("double")
 
+  /** The latest event per user among those `where` selects: each
+    * user_id's row with the greatest (ts, value), the sample an instant
+    * vector holds and the q157 latest-wins order, as `projection` over
+    * its `user_id` and `value`. The fragment ends in its `WHERE rn = 1`
+    * clause, which a caller may extend with `AND`, `GROUP BY`, `HAVING`
+    * or `ORDER BY`. Margined, for interpolation into a [[q]] oracle.
+    */
+  def latestPerUser(projection: String, where: String): String =
+    s"""SELECT $projection FROM (
+       |  SELECT user_id, value,
+       |    ROW_NUMBER() OVER (PARTITION BY user_id
+       |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
+       |  FROM events WHERE $where)
+       |WHERE rn = 1"""
+
   /** Each order with its customer and the customer's nation. */
   def ordersWithNation(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)

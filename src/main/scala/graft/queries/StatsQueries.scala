@@ -717,26 +717,18 @@ private[graft] object StatsQueries {
     // lexicographic max of (ts, value).
     q(
       "q162_table_diff",
-      """WITH b AS (SELECT user_id, value FROM (
-        |    SELECT user_id, value, ROW_NUMBER() OVER (
-        |      PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events WHERE epoch_us(ts) < 1705363200000000)
-        |  WHERE rn = 1),
-        |a AS (SELECT user_id, value FROM (
-        |    SELECT user_id, value, ROW_NUMBER() OVER (
-        |      PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, value DESC) AS rn
-        |    FROM events WHERE epoch_us(ts) >= 1705363200000000)
-        |  WHERE rn = 1)
-        |SELECT user_id, status, old_value, new_value FROM (
-        |  SELECT COALESCE(b.user_id, a.user_id) AS user_id,
-        |    CASE WHEN b.user_id IS NULL THEN 'added'
-        |         WHEN a.user_id IS NULL THEN 'removed'
-        |         WHEN b.value <> a.value THEN 'changed' END AS status,
-        |    b.value AS old_value, a.value AS new_value
-        |  FROM b FULL JOIN a ON b.user_id = a.user_id)
-        |WHERE status IS NOT NULL ORDER BY user_id"""
+      s"""WITH b AS (${latestPerUser("user_id, value",
+           "epoch_us(ts) < 1705363200000000")}),
+         |a AS (${latestPerUser("user_id, value",
+           "epoch_us(ts) >= 1705363200000000")})
+         |SELECT user_id, status, old_value, new_value FROM (
+         |  SELECT COALESCE(b.user_id, a.user_id) AS user_id,
+         |    CASE WHEN b.user_id IS NULL THEN 'added'
+         |         WHEN a.user_id IS NULL THEN 'removed'
+         |         WHEN b.value <> a.value THEN 'changed' END AS status,
+         |    b.value AS old_value, a.value AS new_value
+         |  FROM b FULL JOIN a ON b.user_id = a.user_id)
+         |WHERE status IS NOT NULL ORDER BY user_id"""
     ) { (s, d) =>
       val e = Tables.events(s, d)
       def lastState(f: DataFrame): DataFrame = f

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.pipeline.{ArtifactWarehouse, DedupArtifacts, SimilarityArtifacts}
+import graft.pipeline.{ArtifactWarehouse, DedupArtifacts, Sampling,
+  SimilarityArtifacts, TextAnalysis, TextArtifacts}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The persisted artifact warehouse (r13 verdict item #5): artifacts
@@ -311,5 +313,75 @@ class ArtifactWarehouseSpec extends SparkSpec {
         assert(fired >= 1, "injection never fired")
       } finally ArtifactWarehouse.gcRaceProbe = () => ()
     }
+  }
+
+  // Every TextArtifacts adoption is bit-identical to the inline shape it
+  // replaced (the artifact eligibility rule: integer-count consumers
+  // only, so re-laying out the input cannot move any float reduction).
+  // Each test recomputes the pre-adoption inline frame and compares
+  // collected rows exactly.
+
+  private def docs = Tables.documents(spark, sf)
+
+  private def rows(df: DataFrame): Seq[Seq[String]] =
+    df.collect().toSeq
+      .map(r => (0 until r.length).map(i => String.valueOf(r.get(i))))
+      .sortBy(_.mkString("\u0000"))
+
+  test("hapaxDensityShared ≡ inline hapaxDensity") {
+    val inline = TextAnalysis.hapaxDensity(docs, "text", "doc_id")
+    val shared = TextAnalysis.hapaxDensityShared(
+      docs, "text", "doc_id", corpusKey = s"$sf#hapaxeq")
+    assert(rows(shared) == rows(inline))
+  }
+
+  test("vocabCoverageShared ≡ inline vocabCoverage") {
+    val inline = TextAnalysis.vocabCoverage(docs, "text")
+    val shared = TextAnalysis.vocabCoverageShared(
+      docs, "doc_id", "text", corpusKey = s"$sf#coveq")
+    assert(rows(shared) == rows(inline))
+  }
+
+  test("chao1RichnessShared ≡ inline chao1Richness") {
+    val inline = TextAnalysis.chao1Richness(docs, "source", "text")
+    val shared = TextAnalysis.chao1RichnessShared(
+      docs, "doc_id", "source", "text", corpusKey = s"$sf#chaoeq")
+    assert(rows(shared) == rows(inline))
+  }
+
+  test("vocabOovShared ≡ the inline explode/vocab-join shape") {
+    val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
+    // the exact pre-adoption inline computation (q122's former body)
+    val split = Sampling.splitAssign(docs, "doc_id", splits)
+    val toks = split.select(col("split"),
+      explode(TextAnalysis.whitespaceTokens(
+        lower(col("text")))).as("token"))
+    val vocab = toks.filter(col("split") === "train")
+      .select(col("token")).distinct()
+      .withColumn("__in", lit(true))
+    val inline = toks.filter(col("split") =!= "train")
+      .join(vocab, Seq("token"), "left")
+      .groupBy(col("split"))
+      .agg(count(lit(1)).as("n_tokens"),
+        sum(when(col("__in").isNull, 1L).otherwise(0L)).cast("long")
+          .as("n_oov"),
+        round(sum(when(col("__in").isNull, 1L).otherwise(0L)) /
+          count(lit(1)).cast("double"), 6).as("oov_rate"))
+    val shared = TextAnalysis.vocabOovShared(
+      docs, "doc_id", "text", corpusKey = s"$sf#ooveq", splits, "train")
+    assert(rows(shared) == rows(inline))
+    // sanity: both eval splits present with nonzero token mass
+    assert(shared.count() == 2)
+  }
+
+  test("zipf count head over the artifact ≡ inline explode counts") {
+    val inline = docs
+      .select(explode(TextAnalysis.whitespaceTokens(
+        lower(col("text")))).as("token"))
+      .groupBy(col("token")).agg(count(lit(1)).as("freq"))
+    val shared = TextArtifacts
+      .termFreq(docs, "doc_id", "text", corpusKey = s"$sf#zipfeq")
+      .groupBy(col("token")).agg(sum(col("tf")).as("freq"))
+    assert(rows(shared) == rows(inline))
   }
 }

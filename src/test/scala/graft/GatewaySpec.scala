@@ -843,6 +843,17 @@ class GatewaySpec extends SparkSpec {
     assert(deep.body() == flat.body())
   }
 
+  test("a grouping label list that is not comma-separated names answers 400") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    val bad = get("/api/v1/query_extended?query=" + enc("sum by (a b) (x)"))
+    assert(bad.statusCode() == 400, bad.body())
+    assert(bad.body().contains("Bad label list 'a b'"), bad.body())
+    for (q <- Seq("sum by (\"a\") (x)", "sum by (a,,b) (x)"))
+      assert(get("/api/v1/query_extended?query=" + enc(q)).statusCode() == 400, q)
+    assert(get("/api/v1/query_extended?query=" +
+      enc("sum by (job,) (http_requests)")).statusCode() == 200)
+  }
+
   test("deeply nested label regexes answer 400, not a stack overflow") {
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // both inside the 4,000-char pattern cap; 1,999 groups overflowed

@@ -5,26 +5,34 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.promql.ExtendedPromQL
+import graft.catalog.Catalog
+import graft.promql.{ExtendedPromQL, SimplePromQL}
 import graft.promql.SimplePromQL.PromQLError
 
-/** The golden parse corpus of the extended PromQL front end
+/** The golden parse corpus of the PromQL front ends
   * (`src/test/resources/promql_parse_corpus.tsv`) and its generator.
   *
   * Each line is `<mode>\t<input>\t<result>`, both text fields escaped
-  * with [[escape]]. Mode `parse` is `ExtendedPromQL.parse(input,
-  * FixedNowUs)`; mode `anchored` is the 4-argument overload with the
-  * range [[AnchorStartUs]]..[[FixedNowUs]], written for every input that
-  * holds `start()` or `end()`. The result is the [[render]]ed `Query`,
-  * or `PromQLError: <message>`, or `<exception class>: <message>` for
-  * anything else the parser throws.
+  * with [[escape]]. Every input is written in these modes:
+  *  - `parse`: `ExtendedPromQL.parse(input, FixedNowUs)`;
+  *  - `anchored`: the 4-argument overload with the range
+  *    [[AnchorStartUs]]..[[FixedNowUs]], only for inputs that hold
+  *    `start()` or `end()`;
+  *  - `simple`: the restricted endpoint's `SimplePromQL.parse(input,
+  *    FixedNowUs)`;
+  *  - `selector`: `Catalog.parseSelector(input)`, the `/series?selector=`
+  *    filter.
+  * The result is the [[render]]ed value, or `PromQLError: <message>`, or
+  * `<exception class>: <message>` for anything else the parser throws.
   *
   * Regenerate (it rewrites results only; the inputs are the file's own):
   * {{{
   * sbt "Test/runMain graft.PromQLCorpus src/test/resources/promql_parse_corpus.tsv"
   * }}}
   * Extra arguments name files of further inputs, one escaped query per
-  * line, appended after the existing ones.
+  * line, appended after the existing ones. Before a parser change,
+  * regenerate at its parent commit with the new inputs, so the file
+  * records the parent's answers and the change replays against them.
   */
 object PromQLCorpus {
 
@@ -105,6 +113,8 @@ object PromQLCorpus {
       case "parse" => ExtendedPromQL.parse(q, FixedNowUs)
       case "anchored" =>
         ExtendedPromQL.parse(q, FixedNowUs, Some(AnchorStartUs), Some(FixedNowUs))
+      case "simple" => SimplePromQL.parse(q, FixedNowUs)
+      case "selector" => Catalog.parseSelector(q)
     })
     catch {
       case e: PromQLError => "PromQLError: " + e.getMessage
@@ -114,8 +124,9 @@ object PromQLCorpus {
   /** The (mode, input) pairs for a list of inputs, in order. */
   def modes(inputs: Seq[String]): Seq[(String, String)] =
     inputs.distinct.flatMap { q =>
-      ("parse", q) +: (if (q.contains("start()") || q.contains("end()"))
-        Seq(("anchored", q)) else Nil)
+      val anchored =
+        if (q.contains("start()") || q.contains("end()")) Seq("anchored") else Nil
+      (("parse" +: anchored) ++ Seq("simple", "selector")).map((_, q))
     }
 
   /** The corpus lines as (mode, input, result). */

@@ -98,17 +98,22 @@ class PromQLSpec extends AnyFunSuite {
     intercept[PromQLError](SimplePromQL.parseDurationMs("5x"))
   }
 
-  /** Replays `promql_parse_corpus.tsv`, written by [[PromQLCorpus]] from
-    * the string-slicing parser of commit f265c4a: every query the PromQL
-    * specs, GatewaySpec and the registry's 42 PromQL queries parse,
-    * perfbench's templates and the parser fuzz's 3,000 strings, each with
-    * its `Query` or message.
+  /** Replays `promql_parse_corpus.tsv`, written by [[PromQLCorpus]] in
+    * its four modes (extended `parse` and `anchored`, restricted `simple`,
+    * catalog `selector`): every query the PromQL specs, GatewaySpec and
+    * the registry's 42 PromQL queries parse, the `/series?selector=`
+    * values of ArrowCatalogSpec and GatewaySpec, perfbench's templates and
+    * the parser fuzz's 3,000 strings, each with its result or message.
+    * The `parse` answers were recorded from the string-slicing parser of
+    * commit f265c4a, the `simple` and `selector` ones from the
+    * character-level selector parser of 018a99d.
     */
   test("golden parse corpus: every input keeps its query or its message") {
     val src = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/promql_parse_corpus.tsv"), "UTF-8")
     val cases = try PromQLCorpus.cases(src.getLines()) finally src.close()
     assert(cases.length > 3000)
+    assert(cases.map(_._1).toSet == Set("parse", "anchored", "simple", "selector"))
     val diffs = cases.flatMap { case (mode, q, want) =>
       val got = PromQLCorpus.result(mode, q)
       if (got == want) None
